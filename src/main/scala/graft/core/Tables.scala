@@ -1,8 +1,11 @@
 package graft.core
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{call_function, lit, timestamp_micros, unix_micros}
-import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DataType, LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Source layer. The reference has no file formats — tables are environment
   * bindings (fiat2/src/fiat2/Ex_Employee.v:68-71); ours are parquet scans,
@@ -34,6 +37,19 @@ object Tables {
         "TESTDATA.md 'events schema contract'")
   }
 
+  /** Read one table. Parquet schema inference is a Spark job (one footer
+    * read per call), so inferred schemas are memoized process-wide and a
+    * repeated load of unchanged files reads with `schema(s).parquet(path)`,
+    * which runs no job. The memo holds one entry per table path, valid
+    * while its stamp matches:
+    *   - the sorted listing of every file under the path (path, length,
+    *     modification time), taken through the Hadoop FileSystem so that
+    *     part-file directories (ScaleUp corpora) are covered — a rewritten
+    *     table changes it;
+    *   - the session's `*parquet*` confs, because they change what
+    *     inference returns (`spark.sql.legacy.parquet.nanosAsLong` turns
+    *     `events.ts` into epoch-nanos longs).
+    * A stale stamp re-infers, exactly as an unmemoized read would. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     if (name == "events") {
       // Legacy-layout support: TIMESTAMP(NANOS) footers are rejected by the
@@ -54,10 +70,46 @@ object Tables {
           "event-time derivations must agree with the UTC DuckDB oracle. " +
           "Pin .config(\"spark.sql.session.timeZone\", \"UTC\") in the " +
           "SparkSession builder (all graft mains already do)")
-      val df = spark.read.parquet(s"$dir/$name.parquet")
+      val df = read(spark, s"$dir/$name.parquet")
       assertEventsTs(df.schema("ts").dataType)
       df
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    } else read(spark, s"$dir/$name.parquet")
+  }
+
+  private final case class Stamp(files: Seq[(String, Long, Long)],
+      confs: Seq[(String, String)])
+
+  private val schemas = new ConcurrentHashMap[String, (Stamp, StructType)]()
+
+  private def read(spark: SparkSession, path: String): DataFrame = {
+    // the stamp is taken BEFORE inference: a rewrite racing the read can
+    // then only leave an entry whose stamp no longer matches
+    val stamp = Stamp(listing(spark, path), spark.conf.getAll.toSeq
+      .filter(_._1.toLowerCase.contains("parquet")).sorted)
+    Option(schemas.get(path)) match {
+      case Some((`stamp`, schema)) => spark.read.schema(schema).parquet(path)
+      case _ =>
+        val df = spark.read.parquet(path)
+        schemas.put(path, (stamp, df.schema))
+        df
+    }
+  }
+
+  /** Every file under `path`, sorted; empty when the path does not exist
+    * (the read then fails exactly as an unmemoized one would). */
+  private def listing(spark: SparkSession,
+      path: String): Seq[(String, Long, Long)] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = Seq.newBuilder[(String, Long, Long)]
+    try {
+      val it = fs.listFiles(p, true)
+      while (it.hasNext) {
+        val f = it.next()
+        out += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+    } catch { case _: java.io.FileNotFoundException => () }
+    out.result().sorted
   }
 
   /** µs-precision TimestampType event time from `df("ts")`, whichever

@@ -1886,7 +1886,7 @@ object Compiler {
 
   private def asCV(v: Val): Column = v match {
     case CV(c) => c
-    case TV(_) => throw new IllegalArgumentException(
+    case TV(_) => throw TypeCheck.TypeError(
       "table value where a scalar/nested value was expected")
   }
 
@@ -1920,13 +1920,13 @@ object Compiler {
 
   def compile(e: Expr, env: Env): Val = e match {
     case EVar(x) => env.vars.getOrElse(x,
-      throw new NoSuchElementException(s"unbound variable $x"))
+      throw TypeCheck.TypeError(s"unbound variable $x"))
     case ELoc(x) => env.scalars.get(x) match {
       // mutable SCALAR store cell (the reference's `all_feedback`-style
       // TString/TInt globals, fiat2/src/fiat2/Ex_Survey.v:44-49)
       case Some(c) => CV(c)
       case None => TV(env.store.getOrElse(x,
-        throw new NoSuchElementException(s"unbound table or scalar cell $x")))
+        throw TypeCheck.TypeError(s"unbound table or scalar cell $x")))
     }
 
     case EAtom(a) => CV(a match {

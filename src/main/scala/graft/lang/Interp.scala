@@ -119,7 +119,7 @@ object Interp {
       if (env.scalars.contains(x)) // existing scalar cell → scalar update
         compileProgram(e, env) match {
           case CV(c) => env.copy(scalars = env.scalars + (x -> folded(env, c)))
-          case TV(_) => throw new IllegalArgumentException(
+          case TV(_) => throw TypeCheck.TypeError(
             s"table assigned to scalar cell $x")
         }
       else (env.indexes.get(x), env.compoIndexes.get(x),
@@ -211,7 +211,7 @@ object Interp {
 
   private def asBoolCol(v: Val) = v match {
     case CV(c) => c
-    case TV(_) => throw new IllegalArgumentException("table used as condition")
+    case TV(_) => throw TypeCheck.TypeError("table used as condition")
   }
 
   private def isArrayTyped(env: Env, c: Column): Boolean =

@@ -58,7 +58,14 @@ final class QueryServer(spark: SparkSession, dataDir: String,
       }
     } catch {
       case e: Exception =>
-        respond(ex, 500, s"""{"error":${quote(String.valueOf(e.getMessage))}}""")
+        // the program is at fault (400) only for the language's parse and
+        // type errors, told apart by type; anything else is an engine
+        // fault (500)
+        val code = e match {
+          case _: graft.lang.Parser.ParseError | _: graft.lang.TypeCheck.TypeError => 400
+          case _ => 500
+        }
+        respond(ex, code, s"""{"error":${quote(String.valueOf(e.getMessage))}}""")
     } finally ex.close()
 
   private def route(method: String, path: String,
@@ -77,16 +84,20 @@ final class QueryServer(spark: SparkSession, dataDir: String,
       case _ => None
     }
 
+  /** Every table, loaded per request. This stays a `def`: `Tables.load`
+    * memoizes inferred schemas, so a rebuild runs no Spark job, and a
+    * store held here would be a second cache with its own staleness
+    * rules. */
+  private def fullStore: Map[String, DataFrame] =
+    graft.core.Tables.all
+      .map(n => n -> Tables.load(spark, dataDir, n)).toMap
+
   /** `POST /run` — the request body is a surface-syntax EXPRESSION (the
     * notation `Parser` accepts; every store table is bound, so `mut nation`
     * etc. work). The program is parsed, join-recognized, and compiled to a
     * distributed plan — the haskellServer's elaborate-then-run request path
     * (haskellServer/src/Extracted.hs:2217) with the whole engine behind it.
     */
-  private def fullStore: Map[String, DataFrame] =
-    graft.core.Tables.all
-      .map(n => n -> Tables.load(spark, dataDir, n)).toMap
-
   private def runProgram(src: String): DataFrame = {
     import graft.lang.{Compiler, Parser, Rewrites}
     val prog = Rewrites.normalize(Parser.parseExpr(src))

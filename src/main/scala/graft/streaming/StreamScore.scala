@@ -40,7 +40,8 @@ object StreamScore {
       import s.implicits._
       // the model is a BATCH artifact: one token-keyed conditional-sum
       // aggregate over the corpus, broadcast into the stream join
-      val batchTok = Tables.load(s, dir, "documents")
+      val docs = Tables.load(s, dir, "documents")
+      val batchTok = docs
         .select(($"source" === "src0").as("is_t"),
           explode(toks($"text")).as("w"))
       val model = broadcast(batchTok.groupBy("w").agg(
@@ -48,7 +49,7 @@ object StreamScore {
         sum(when($"is_t", 0L).otherwise(1L)).as("bgd")))
       // the same corpus file arrives as a stream (the feed-directory
       // pattern the rest of the streaming family uses)
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
+      val schema = docs.schema
       val watchDir = java.nio.file.Files.createTempDirectory("graft_score_")
       StreamStage.linkTable(watchDir, dir, "documents")
       val stream = s.readStream.schema(schema).parquet(watchDir.toString)

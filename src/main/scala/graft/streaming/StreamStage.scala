@@ -68,9 +68,11 @@ object StreamStage {
     * queries returning 0 rows this way), so link each part file
     * individually. With no maxFilesPerTrigger option set the source takes
     * every available file in ONE micro-batch, so watermark/state
-    * semantics match the single-file case exactly. */
+    * semantics match the single-file case exactly. Link targets are
+    * absolute: a relative target resolves against the LINK's directory,
+    * so a relative `dir` would leave every link dangling. */
   def linkTable(watchDir: Path, dir: String, table: String): Unit = {
-    val src = java.nio.file.Paths.get(s"$dir/$table.parquet")
+    val src = java.nio.file.Paths.get(s"$dir/$table.parquet").toAbsolutePath
     if (Files.isDirectory(src)) {
       val parts = Option(src.toFile.listFiles()).getOrElse(Array.empty)
         .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)

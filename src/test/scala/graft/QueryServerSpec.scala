@@ -86,9 +86,13 @@ class QueryServerSpec extends AnyFunSuite {
       // a scalar program returns a single value row
       val (c2, b2) = post(s"http://localhost:$port/run", "2 + 3 * 4")
       assert(c2 === 200 && b2 === """[{"value":14}]""")
-      // a broken program reports the parse error, not a hung socket
+      // a broken program is the client's fault: 400 with the parse error
       val (c3, b3) = post(s"http://localhost:$port/run", "ret {")
-      assert(c3 === 500 && b3.contains("error"))
+      assert(c3 === 400 && b3.contains("parse error"), b3)
+      // an engine fault (here a TInt overflow at execution) stays a 500
+      val (c4, b4) = post(s"http://localhost:$port/run",
+        "9223372036854775807 + 1")
+      assert(c4 === 500 && b4.contains("overflow"), b4)
       // GET on /run is not a route
       assert(get(s"http://localhost:$port/run")._1 === 404)
     }
@@ -116,6 +120,10 @@ class QueryServerSpec extends AnyFunSuite {
       // a program without a `result` assignment reports the contract
       val (c2, b2) = post(s"http://localhost:$port/runc", "skip")
       assert(c2 === 500 && b2.contains("result"))
+      // a mistyped program (a table as a condition) is a 400
+      val (c3, b3) = post(s"http://localhost:$port/runc",
+        "if mut nation then set result := mut nation else skip end")
+      assert(c3 === 400 && b3.contains("table used as condition"), b3)
     }
   }
 

@@ -93,4 +93,34 @@ class StreamingSpec extends AnyFunSuite {
     assert(spark.read.parquet(watch2.toString).count() == 5)
   }
 
+  test("linkTable from a relative directory links to files that exist") {
+    // a relative link target resolves against the watch directory, not the
+    // working directory: every link would dangle and the stream would
+    // silently read zero rows. The table lives under the working directory,
+    // so no `..` steps can happen to reach it from the watch directory too.
+    val rel = Files.createTempDirectory(
+      Files.createDirectories(java.nio.file.Paths.get("target")),
+      "graft_link_rel_")
+    assert(!rel.isAbsolute)
+    val abs = rel.toAbsolutePath
+    try {
+      spark.range(10).select(col("id").as("doc_id")).repartition(2)
+        .write.parquet(s"$abs/parts/documents.parquet")
+      spark.range(5).select(col("id").as("doc_id")).coalesce(1)
+        .write.parquet(s"$abs/stage")
+      Files.createDirectory(abs.resolve("one"))
+      Files.move(new java.io.File(s"$abs/stage").listFiles()
+        .filter(_.getName.endsWith(".parquet")).head.toPath,
+        abs.resolve("one/documents.parquet"))
+      for (layout <- Seq("parts", "one")) {
+        val watch = Files.createTempDirectory("graft_link_rel_watch_")
+        try {
+          graft.streaming.StreamStage.linkTable(watch, s"$rel/$layout", "documents")
+          val links = new java.io.File(watch.toString).listFiles().map(_.toPath)
+          assert(links.nonEmpty, layout)
+          links.foreach(l => assert(Files.exists(l), s"$layout: $l dangles"))
+        } finally graft.core.Tables.deleteTree(watch.toFile)
+      }
+    } finally graft.core.Tables.deleteTree(abs.toFile)
+  }
 }
