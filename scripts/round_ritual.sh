@@ -21,12 +21,12 @@
 #      was dirty when step 1 ran, the full test suite re-runs against HEAD
 #      (r13 shipped red because a post-ritual source commit skipped this).
 # Scale corpora (regenerate once per data regeneration):
-#   sbt "runMain graft.tools.ScaleUp /root/testdata/sf0.1 /root/repo/testdata_sf1 9"
-#   sbt "runMain graft.tools.ScaleUp /root/testdata/sf0.1 /root/repo/testdata_27x 27"
-#   sbt "runMain graft.tools.ScaleUp /root/testdata/sf0.1 /root/repo/testdata_81x 81"
-#   sbt "runMain graft.tools.ScaleUp /root/testdata/sf0.1 /root/repo/testdata_skew9x 9 --zipf"
-#   sbt "runMain graft.tools.ScaleUp /root/testdata/sf0.01 /root/repo/testdata_docskew9x 9 --docskew"
-#   sbt "runMain graft.tools.ScaleUp /root/testdata/sf0.01 /root/repo/testdata_docskew27x 27 --docskew"
+#   SPARK_GRAFT_CPUS=16 sbt "runMain graft.tools.ScaleUp /root/testdata/sf0.1 /root/repo/testdata_sf1 9"
+#   SPARK_GRAFT_CPUS=16 sbt "runMain graft.tools.ScaleUp /root/testdata/sf0.1 /root/repo/testdata_27x 27"
+#   SPARK_GRAFT_CPUS=16 sbt "runMain graft.tools.ScaleUp /root/testdata/sf0.1 /root/repo/testdata_81x 81"
+#   SPARK_GRAFT_CPUS=16 sbt "runMain graft.tools.ScaleUp /root/testdata/sf0.1 /root/repo/testdata_skew9x 9 --zipf"
+#   SPARK_GRAFT_CPUS=16 sbt "runMain graft.tools.ScaleUp /root/testdata/sf0.01 /root/repo/testdata_docskew9x 9 --docskew"
+#   SPARK_GRAFT_CPUS=16 sbt "runMain graft.tools.ScaleUp /root/testdata/sf0.01 /root/repo/testdata_docskew27x 27 --docskew"
 # Usage: scripts/round_ritual.sh [fast] [roundN]
 #   "fast" skips steps 4-7; roundN (e.g. 13) names the committed artifacts.
 set -uo pipefail
@@ -194,7 +194,7 @@ q_groupby_bags,q_salted_join"
   DOCSKEW_SET="q_dedup_exact,q_dedup_ngram_jaccard,q_dedup_clusters,\
 q_dedup_minhash,q_substring_dup"
   if [ -d /root/repo/testdata_docskew9x ]; then
-    probe=$(sbt -batch "runMain graft.tools.DocSkewProbe /root/repo/testdata_docskew9x" 2>/dev/null |
+    probe=$(SPARK_GRAFT_CPUS=16 sbt -batch "runMain graft.tools.DocSkewProbe /root/repo/testdata_docskew9x" 2>/dev/null |
       grep "docskew-probe" || true)
     echo "${probe:-docskew probe produced no output}"
     if ! echo "$probe" | grep -q "capped_postings=[1-9]"; then
@@ -228,7 +228,7 @@ q_dedup_minhash,q_substring_dup"
   # DuckDB oracle replays the shingle join UNCAPPED, and per-copy token
   # salting keeps each copy's hot posting (250 docs) enumerable.
   if [ -d /root/repo/testdata_docskew27x ]; then
-    probe=$(sbt -batch "runMain graft.tools.DocSkewProbe /root/repo/testdata_docskew27x" 2>/dev/null |
+    probe=$(SPARK_GRAFT_CPUS=16 sbt -batch "runMain graft.tools.DocSkewProbe /root/repo/testdata_docskew27x" 2>/dev/null |
       grep "docskew-probe" || true)
     echo "${probe:-docskew27x probe produced no output}"
     if ! echo "$probe" | grep -q "capped_postings=[1-9]"; then

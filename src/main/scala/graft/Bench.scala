@@ -1,19 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.ScaleConf.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // ~96 queries × several codegen stages far exceeds the default
-      // 100-entry generated-class cache; evictions force Janino
-      // recompiles of the hot dedup/fingerprint expressions mid-run
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     val wall0 = System.nanoTime()
     def wallMark(label: String, since: Long): Long = {
@@ -54,93 +44,7 @@ object Bench {
         SparkEntry.queries.filter(q => names(q._1))
       case None => SparkEntry.queries
     }
-    // UNTIMED per-query warm execution (round-11 directive): rep 1 of
-    // nearly every query ran 1.5-2.5x its median — query-specific Janino
-    // codegen + JIT warm-in charged to the measurement, burning a third of
-    // the timed pass wall. One warm execution per query moves that cost
-    // out of the timed window; warm needs no timing fidelity, so it runs
-    // CONCURRENTLY (bounded lanes — local[32] has idle cores during any
-    // single small-SF query) to keep the added wall far below one serial
-    // pass. Safe concurrently: StreamConf serializes session-conf scoping,
-    // per-query temp dirs are unique, and a query that races another into
-    // an exception just forfeits its warmup (the timed pass reports real
-    // failures). Caches/indexes are dropped once afterwards, so the first
-    // timed rep still pays its full plan cost — only JVM-level warmth
-    // (codegen cache, JIT) carries over, which is exactly the point.
-    val warmLanes = sys.env.getOrElse("SPARK_GRAFT_WARM_LANES", "6").toInt
-    if (warmLanes > 0) {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val beforeWarm = spark.sparkContext.getPersistentRDDs.keySet
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(warmLanes)
-      implicit val ec: ExecutionContext =
-        ExecutionContext.fromExecutor(pool)
-      val warmFailed = new java.util.concurrent.atomic.AtomicInteger(0)
-      val futs = selected.toVector.map { case (name, fn) =>
-        Future {
-          try { fn(spark, sfDir).count(); () }
-          catch { case e: Throwable =>
-            warmFailed.incrementAndGet()
-            System.err.println(s"[bench-warm] $name: ${e.getMessage}")
-          }
-        }
-      }
-      // Warm pass is best-effort: a timeout degrades to a partially-warm
-      // timed pass rather than aborting the whole benchmark run. On
-      // timeout the straggler warm executions must STOP before the timed
-      // pass starts — a leftover warm query would pollute timings and
-      // can race the timed copy on shared sink paths — so cancel queued
-      // work, interrupt in-flight tasks, and bound-wait for the pool to
-      // drain.
-      // Tracks whether the try body completed: if it threw, the finally
-      // block's drain-failure must not REPLACE that root cause — attach
-      // the drain failure as a log line and let the original propagate.
-      var warmBodyOk = false
-      try {
-        scala.util.Try(Await.result(Future.sequence(futs), Duration(900, "s")))
-          .failed.foreach { e =>
-            System.err.println(s"[bench-warm] warm pass incomplete: " +
-              s"${e.getClass.getSimpleName} — cancelling stragglers, " +
-              "continuing with timed pass")
-            spark.sparkContext.cancelAllJobs()
-          }
-        warmBodyOk = true
-      } finally {
-        pool.shutdownNow()
-        // The timed pass MUST NOT start with warm stragglers alive —
-        // leftover executions pollute timings and can race the timed
-        // copy on shared sink paths. Keep cancelling + re-waiting; if
-        // the pool still won't drain, fail the bench run rather than
-        // produce silently-polluted numbers.
-        var drained =
-          pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-        var rounds = 0
-        while (!drained && rounds < 4) {
-          rounds += 1
-          System.err.println(s"[bench-warm] warm pool not drained after " +
-            s"${60 * (rounds)}s — cancelling jobs and re-waiting")
-          spark.sparkContext.cancelAllJobs()
-          drained =
-            pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-        }
-        if (!drained) {
-          val msg = "[bench-warm] warm pool failed to drain after " +
-            "repeated cancellation — aborting the bench run (a timed " +
-            "pass with live stragglers would report polluted timings)"
-          // only raise when the try body completed; if it threw, raising
-          // here would silently swallow the root cause
-          if (warmBodyOk) sys.error(msg) else System.err.println(msg)
-        }
-      }
-      if (warmFailed.get() > 0)
-        System.err.println(s"[bench-warm] ${warmFailed.get()} warm " +
-          "executions failed (timed pass will report real failures)")
-      spark.sqlContext.clearCache()
-      spark.sparkContext.getPersistentRDDs
-        .filter { case (id, _) => !beforeWarm(id) }
-        .values.foreach(_.unpersist(blocking = false))
-      graft.plans.KeyedIndexRule.clear()
-    }
+    warmPass(spark, sfDir, selected)
     val wallWarm = wallMark("warmup", wall0)
     // Median of 3 runs per query: single cold timings on this box swing
     // ±40% on identical code (JIT/GC scheduling), which made round-over-
@@ -148,27 +52,13 @@ object Bench {
     // are cleared between reps) — the median only filters runtime noise,
     // it does not hide recomputation.
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    // SPARK_GRAFT_PROF=1: per-query JVM-accumulation telemetry on stderr
-    // (GC time, JIT code cache, metaspace, loaded classes, storage blocks)
-    // — the signal for diagnosing cross-query interference in the full run.
-    val prof = sys.env.get("SPARK_GRAFT_PROF").exists(_ == "1")
-    def gcMillis: Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
-    def poolUsed(frag: String): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-        .filter(_.getName.contains(frag)).map(_.getUsage.getUsed).sum
-    }
     // PASS-MAJOR interleaving: run every query once per pass, not all reps
     // back-to-back. Query-major reps let a transient contention window on
     // the box (another JVM compiling, the harness doing driver-side work)
     // inflate ALL reps of whichever few queries run inside it — the r7
     // artifact recorded 3-6x inflation on mid-run queries that measure
     // fast in isolation, with zero JVM-internal accumulation (code cache,
-    // metaspace, GC all flat under SPARK_GRAFT_PROF). Interleaved passes
+    // metaspace and GC stayed flat across passes). Interleaved passes
     // bound any such window's damage to ONE rep per query, which the
     // per-query median then rejects.
     def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[(Double, Int)] = {
@@ -201,18 +91,8 @@ object Bench {
     }
     val order = selected.toVector
     val passes: Vector[Vector[(String, Option[(Double, Int)])]] =
-      (1 to reps).toVector.map { p =>
-        val gc0 = gcMillis
-        val pass = order.map { case (name, fn) => name -> runOnce(name, fn) }
-        if (prof) {
-          val cl = java.lang.management.ManagementFactory.getClassLoadingMXBean
-          System.err.println(f"[prof] pass $p done: gc=${gcMillis - gc0}%5dms " +
-            f"code=${poolUsed("CodeHeap") / 1048576}%4dM " +
-            f"meta=${poolUsed("Metaspace") / 1048576}%5dM " +
-            f"classes=${cl.getLoadedClassCount}%6d " +
-            f"rdds=${spark.sparkContext.getPersistentRDDs.size}%3d")
-        }
-        pass
+      (1 to reps).toVector.map { _ =>
+        order.map { case (name, fn) => name -> runOnce(name, fn) }
       }
     val wallPasses = wallMark("passes", wallWarm)
     // per-query: (median_sec, reps_sec, jobs_per_rep)
@@ -221,8 +101,6 @@ object Bench {
         val cells = passes.flatMap(_.collectFirst { case (`name`, t) => t }.get)
         val times = cells.map(_._1)
         val jobs = cells.map(_._2)
-        if (prof)
-          System.err.println(f"[prof] $name%-28s reps=${times.map(t => f"$t%.2f").mkString(",")} jobs=${jobs.mkString(",")}")
         // a failed rep is reported as -1, never as a plausible fast time
         val med = if (times.size < reps) -1.0 else times.sorted.apply(reps / 2)
         (name, med, times, jobs)
@@ -319,6 +197,94 @@ object Bench {
         (jsonLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
     spark.stop()
+  }
+
+  /** UNTIMED per-query warm execution: rep 1 of nearly every query ran
+    * 1.5-2.5x its median — query-specific Janino codegen + JIT warm-in
+    * charged to the measurement, burning a third of the timed pass wall. One warm execution per query moves that cost
+    * out of the timed window; warm needs no timing fidelity, so it runs
+    * CONCURRENTLY (bounded lanes — local[32] has idle cores during any
+    * single small-SF query) to keep the added wall far below one serial
+    * pass. Safe concurrently: StreamConf serializes session-conf scoping,
+    * per-query temp dirs are unique, and a query that races another into
+    * an exception just forfeits its warmup (the timed pass reports real
+    * failures). Caches/indexes are dropped once afterwards, so the first
+    * timed rep still pays its full plan cost — only JVM-level warmth
+    * (codegen cache, JIT) carries over, which is exactly the point. */
+  private def warmPass(spark: SparkSession, sfDir: String,
+      selected: Iterable[(String, (SparkSession, String) => DataFrame)]): Unit = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    val warmLanes = 6
+    val beforeWarm = spark.sparkContext.getPersistentRDDs.keySet
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(warmLanes)
+    implicit val ec: ExecutionContext =
+      ExecutionContext.fromExecutor(pool)
+    val warmFailed = new java.util.concurrent.atomic.AtomicInteger(0)
+    val futs = selected.toVector.map { case (name, fn) =>
+      Future {
+        try { fn(spark, sfDir).count(); () }
+        catch { case e: Throwable =>
+          warmFailed.incrementAndGet()
+          System.err.println(s"[bench-warm] $name: ${e.getMessage}")
+        }
+      }
+    }
+    // Warm pass is best-effort: a timeout degrades to a partially-warm
+    // timed pass rather than aborting the whole benchmark run. On
+    // timeout the straggler warm executions must STOP before the timed
+    // pass starts — a leftover warm query would pollute timings and
+    // can race the timed copy on shared sink paths — so cancel queued
+    // work, interrupt in-flight tasks, and bound-wait for the pool to
+    // drain.
+    // Tracks whether the try body completed: if it threw, the finally
+    // block's drain-failure must not REPLACE that root cause — attach
+    // the drain failure as a log line and let the original propagate.
+    var warmBodyOk = false
+    try {
+      scala.util.Try(Await.result(Future.sequence(futs), Duration(900, "s")))
+        .failed.foreach { e =>
+          System.err.println(s"[bench-warm] warm pass incomplete: " +
+            s"${e.getClass.getSimpleName} — cancelling stragglers, " +
+            "continuing with timed pass")
+          spark.sparkContext.cancelAllJobs()
+        }
+      warmBodyOk = true
+    } finally {
+      pool.shutdownNow()
+      // The timed pass MUST NOT start with warm stragglers alive —
+      // leftover executions pollute timings and can race the timed
+      // copy on shared sink paths. Keep cancelling + re-waiting; if
+      // the pool still won't drain, fail the bench run rather than
+      // produce silently-polluted numbers.
+      var drained =
+        pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
+      var rounds = 0
+      while (!drained && rounds < 4) {
+        rounds += 1
+        System.err.println(s"[bench-warm] warm pool not drained after " +
+          s"${60 * (rounds)}s — cancelling jobs and re-waiting")
+        spark.sparkContext.cancelAllJobs()
+        drained =
+          pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
+      }
+      if (!drained) {
+        val msg = "[bench-warm] warm pool failed to drain after " +
+          "repeated cancellation — aborting the bench run (a timed " +
+          "pass with live stragglers would report polluted timings)"
+        // only raise when the try body completed; if it threw, raising
+        // here would silently swallow the root cause
+        if (warmBodyOk) sys.error(msg) else System.err.println(msg)
+      }
+    }
+    if (warmFailed.get() > 0)
+      System.err.println(s"[bench-warm] ${warmFailed.get()} warm " +
+        "executions failed (timed pass will report real failures)")
+    spark.sqlContext.clearCache()
+    spark.sparkContext.getPersistentRDDs
+      .filter { case (id, _) => !beforeWarm(id) }
+      .values.foreach(_.unpersist(blocking = false))
+    graft.plans.KeyedIndexRule.clear()
   }
 
   /** Exercise the Structured Streaming stack on a tiny feed: file-stream

@@ -21,8 +21,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * This is NOT the refuted blanket scaling: r15 measured data-proportional
   * `spark.sql.shuffle.partitions` at 81x as a regression (91.2 s vs 82.6 s
-  * stock) and r16 measured AQE advisory re-sizing (`core/ScaleConf`,
-  * still opt-in) at 2-3x bench cost — both resize EVERY exchange, paying
+  * stock) and r16 measured AQE advisory re-sizing at 2-3x bench
+  * cost — both resize EVERY exchange, paying
   * many-small-partition overhead across the whole query surface. This
   * helper resizes only the named exchanges whose per-partition state is
   * corpus-linear, where the spill removed dominates the task overhead

@@ -54,10 +54,15 @@ object Tables {
     if (name == "events") {
       // Legacy-layout support: TIMESTAMP(NANOS) footers are rejected by the
       // reader unless surfaced as epoch-nanos longs (no-op for µs files).
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // GraftSession pins it at build time; a session built elsewhere gets
+      // it on its first events load. Writing only when it differs keeps
+      // loads from issuing a session-global conf write per request.
+      val nanos = "spark.sql.legacy.parquet.nanosAsLong"
+      if (!spark.conf.getOption(nanos).contains("true"))
+        spark.conf.set(nanos, "true")
       // Event-time derivations (the NTZ→LTZ cast in tsCol, date_trunc /
-      // window bucketing) must agree with the UTC DuckDB oracle. Every
-      // graft-owned builder pins spark.sql.session.timeZone=UTC; a session
+      // window bucketing) must agree with the UTC DuckDB oracle.
+      // GraftSession pins spark.sql.session.timeZone=UTC; a session
       // that arrives here non-UTC is misconfigured, and silently flipping
       // its zone mid-session would corrupt any intentional setting — fail
       // loudly instead.
@@ -68,8 +73,9 @@ object Tables {
       require(isUtc,
         s"events requires spark.sql.session.timeZone=UTC (found '$tz'): " +
           "event-time derivations must agree with the UTC DuckDB oracle. " +
-          "Pin .config(\"spark.sql.session.timeZone\", \"UTC\") in the " +
-          "SparkSession builder (all graft mains already do)")
+          "Build it with graft.core.GraftSession.local, or pin " +
+          ".config(\"spark.sql.session.timeZone\", \"UTC\") in your own " +
+          "SparkSession builder")
       val df = read(spark, s"$dir/$name.parquet")
       assertEventsTs(df.schema("ts").dataType)
       df

@@ -1,19 +1,16 @@
 package graft.functions
 
-import org.apache.spark.sql.{GraftBridge, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.{GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.types.IntegerType
 
 /** SQL faces for the engine's native codegen expressions, so `spark.sql`
   * users get the same functions the Column API exposes — the library is a
   * drop-in for SQL-first workloads, not just DataFrame code.
   *
-  * Two wiring paths, matching the index rule's pattern:
-  *   - builder-time: `SparkSession.builder().withExtensions(new
-  *     GraftFunctionExtensions)` — functions exist from session start;
-  *   - live session: `GraftFunctions.register(spark)` — temp-function
-  *     registration through the `private[sql]` bridge.
+  * Wiring: `GraftFunctions.register(spark)` registers them as temp
+  * functions on a live session through the `private[sql]` bridge, so a
+  * session built anywhere gets them on first use.
   *
   * `BloomMightContainLong` is deliberately absent: it closes over a
   * driver-built BloomFilter object, which has no SQL literal form.
@@ -106,14 +103,3 @@ object GraftFunctions {
     })
 }
 
-/** Builder-time wiring: every graft function available from session start
-  * (`SparkSession.builder().withExtensions(new GraftFunctionExtensions)`). */
-class GraftFunctionExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
-    GraftFunctions.builders.foreach { case (name, b) =>
-      ext.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions.GraftFunctions", name),
-        b))
-    }
-}

@@ -171,8 +171,8 @@ object Compiler {
     * narrow-tier overflow surfaces INSIDE the tier (the autoWide
     * contract — an overflow after return is too late to re-tier) while
     * the caller's consumers read the cached rows without recompute. The
-    * cache is dropped by the harnesses between queries/reps (Bench,
-    * Verify, JobTrace all clearCache), so every bench rep still pays the
+    * cache is dropped by the harnesses between queries/reps (Bench and
+    * Verify both clearCache), so every bench rep still pays the
     * full plan cost; a failed attempt unpersists its own half-built
     * cache before re-tiering. */
   def autoWideTable(env: Env)(build: Env => DataFrame): DataFrame =

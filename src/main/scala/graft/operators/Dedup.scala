@@ -558,19 +558,14 @@ object Dedup {
       val t = col("tk")
       val idx = when(size(t) >= 8, sequence(lit(0), size(t) - 8))
         .otherwise(array().cast("array<int>"))
-      // ONE g-keyed exchange feeds BOTH consumers (r18; guide §2.4
-      // "two operations keyed the same way can share one exchange").
-      // The r17 shape computed the window stream twice — the dup
-      // aggregate scanned+exploded the corpus on its own subtree, then
-      // BROADCAST the full duplicated-window string set so the join-back
-      // side could avoid a second g-shuffle (27x StageMetrics: 25s + 14s
-      // task CPU for the two builds of the same windows; the broadcast
-      // is also corpus-growing — a memory hazard no real cluster should
-      // carry). Repartitioning the exploded stream by g ONCE lets the
-      // ndocs aggregate consume it partition-local AND lets the
-      // join-back reuse the very same shuffle (ReuseExchange collapses
-      // the two identical exchanges), so the corpus is scanned, split,
-      // and windowed exactly once and nothing is broadcast.
+      // Both consumers of the window stream — the ndocs aggregate and the
+      // join-back — are keyed by g, and nothing corpus-growing is
+      // broadcast (a broadcast duplicated-window set is a memory hazard
+      // at scale). The two g-exchanges are NOT shared: the aggregate
+      // needs only g, so the column pruner narrows its subtree to
+      // (text) → (g), and the executed plan scans, splits and windows the
+      // corpus twice (two `Exchange hashpartitioning(g…)`, no
+      // ReusedExchange).
       val win = Tables.load(s, dir, "documents")
         .repartition(s.sparkContext.defaultParallelism)
         .select($"doc_id", toks($"text").as("tk"))
@@ -582,14 +577,9 @@ object Dedup {
       // of docs carrying the window — computed WITHOUT re-shuffling (the
       // stream is already g-partitioned; count state per key is O(1), so
       // a hot boilerplate window costs nothing — the WindowExec failure
-      // mode this family originally replaced stays replaced). The
-      // discarded min(doc_id) exists ONLY to keep doc_id in this
-      // branch's input: without it the column pruner specializes this
-      // subtree to (g) alone, the two exchanges stop being canonically
-      // identical, and ReuseExchange cannot collapse them — putting the
-      // second corpus scan + window build right back (plan-guarded).
+      // mode this family originally replaced stays replaced).
       val dup = win.groupBy($"g")
-        .agg(count(lit(1)).as("ndocs"), min($"doc_id").as("_prune_guard"))
+        .agg(count(lit(1)).as("ndocs"))
         .filter($"ndocs" >= 2)
         .select($"g", lit(1).as("isdup"))
       // shuffle_hash: build the (small) duplicated-window side per

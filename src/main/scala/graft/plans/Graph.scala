@@ -184,8 +184,6 @@ object Graph {
       // compresses (mutates values) and must not race a live iterator
       val nodes = parent.keys.toArray
       val out = nodes.map(v => (v, find(v))).toSeq
-      if (sys.env.get("GRAFT_CC_STATS").contains("1")) System.err.println(
-        s"[graft-cc] edges=$nEdges path=local-union-find")
       return spark.createDataset(out).toDF("node", "component")
     }
     // distributed label propagation: ~1M edges per partition keeps tasks
@@ -212,11 +210,6 @@ object Graph {
     var prevSum = -1L
     var iter = 0
     var done = false
-    // GRAFT_CC_STATS=1: per-round wall breakdown (propagate+jump vs
-    // checksum vs confirm join) to stderr — the r15 verdict's audit ask.
-    // The row count per round rides the checksum job's input, so stats
-    // mode adds NO extra Spark jobs.
-    val ccStats = sys.env.get("GRAFT_CC_STATS").contains("1")
     var wallProp = 0L; var wallSum = 0L; var wallConfirm = 0L
     while (!done && iter < maxIter) {
       iter += 1
@@ -247,10 +240,6 @@ object Graph {
       }
       val t3 = System.nanoTime()
       wallProp += t1 - t0; wallSum += t2 - t1; wallConfirm += t3 - t2
-      if (ccStats) System.err.println(
-        f"[graft-cc] round=$iter prop=${(t1 - t0) / 1e9}%.2fs " +
-          f"checksum=${(t2 - t1) / 1e9}%.2fs " +
-          f"confirm=${(t3 - t2) / 1e9}%.2fs done=$done")
       prevSum = s
       labels = next
     }

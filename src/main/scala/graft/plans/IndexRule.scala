@@ -1,7 +1,7 @@
 package graft.plans
 
 import java.util.concurrent.ConcurrentHashMap
-import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, EqualTo, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -31,11 +31,9 @@ import org.apache.spark.sql.functions.col
   * reflects the relation at registration time.
   *
   * Wiring: `register` installs the rule via
-  * `spark.experimental.extraOptimizations` (idempotent by class).
-  * `GraftIndexExtensions` is the builder-time `SparkSessionExtensions`
-  * path for applications that want the rule from session start — pick
-  * ONE of the two: `register`'s install cannot see builder-injected
-  * rules, so combining them runs the (idempotent) rule twice per query.
+  * `spark.experimental.extraOptimizations` (idempotent by class), so a
+  * session built anywhere — a graft main, a harness, an embedder — gets
+  * it on first use.
   */
 object KeyedIndexRule {
 
@@ -138,12 +136,4 @@ class EqFilterToIndexLookup extends Rule[LogicalPlan] {
         case _ => f
       }
   }
-}
-
-/** Builder-time wiring: `SparkSession.builder().withExtensions(new
-  * GraftIndexExtensions) …` — the injected rule serves every query of the
-  * session. */
-class GraftIndexExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
-    ext.injectOptimizerRule(_ => new EqFilterToIndexLookup)
 }

@@ -117,16 +117,20 @@ final class QueryServer(spark: SparkSession, dataDir: String,
     import graft.lang.{Compiler, Optimize, Parser}
     val prog = Parser.parseCommand(src)
     val end = Optimize.run(prog, Compiler.Env(Map.empty, fullStore, spark))
-    val res = end.store.getOrElse("result", throw new IllegalArgumentException(
-      "program must assign a table to `result`"))
     // materialize the response rows BEFORE releasing the caches the
-    // Optimize pipeline pinned (keyed indexes) — otherwise a long-lived
-    // server accumulates dead cached RDDs request after request
-    val rows = res.limit(maxRows).collect()
-    end.indexes.values.foreach(_.unpersist())
-    end.compoIndexes.values.foreach(_.unpersist())
-    spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*), res.schema)
+    // Optimize pipeline pinned (keyed indexes), and release them on every
+    // path — a program with no `result` or a failing collect would
+    // otherwise leave dead cached RDDs in a long-lived server
+    try {
+      val res = end.store.getOrElse("result", throw new IllegalArgumentException(
+        "program must assign a table to `result`"))
+      val rows = res.limit(maxRows).collect()
+      spark.createDataFrame(
+        java.util.Arrays.asList(rows: _*), res.schema)
+    } finally {
+      end.indexes.values.foreach(_.unpersist())
+      end.compoIndexes.values.foreach(_.unpersist())
+    }
   }
 
   /** `POST /extract` — same surface-syntax body as /run, but instead of
@@ -213,12 +217,7 @@ object QueryServerMain {
   def main(args: Array[String]): Unit = {
     val dataDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val port = args.lift(1).map(_.toInt).getOrElse(8080)
-    val spark = graft.core.ScaleConf.tuned(SparkSession.builder()
-      .appName("graft-server").master("local[*]")
-      .config("spark.sql.shuffle.partitions", 32))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = graft.core.GraftSession.local()
     val server = new QueryServer(spark, dataDir, port)
     val bound = server.start()
     println(s"Starting server on port $bound")

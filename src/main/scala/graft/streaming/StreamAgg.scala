@@ -205,16 +205,6 @@ object StreamAgg {
         "left_outer")
         .select($"c_user".as("user_id"), $"click_id", $"purchase_id")
       val sink = s"graft_soj_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-      // SPARK_GRAFT_STREAM_PROF=1: per-phase wall split on stderr — the
-      // evidence separating micro-batch/trigger latency (await) from data
-      // work (stage/deliver) when this query's wall drifts
-      def phase[A](label: String)(f: => A): A = {
-        val t0 = System.nanoTime(); val r = f
-        if (sys.env.get("SPARK_GRAFT_STREAM_PROF").contains("1"))
-          System.err.println(
-            f"[soj] $label%-8s ${(System.nanoTime() - t0) / 1e9}%.2fs")
-        r
-      }
       // No-data micro-batches add one trigger round (~0.3-0.5s fixed) per
       // processAllAvailable and prove nothing HERE: every eviction this
       // query tests is flushed by a DATA batch — file 2's batch evicts
@@ -224,15 +214,15 @@ object StreamAgg {
       // agg, late-data) keep the default.
       StreamConf.withConf(s, "spark.sql.shuffle.partitions" -> "2",
         "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
-        val q = phase("start")(joined.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start())
+        val q = joined.writeStream.outputMode("append")
+          .format("memory").queryName(sink).start()
         try {
-          phase("deliver1")(addBatch(1)) // the joinable window
-          phase("await1")(q.processAllAvailable())
-          phase("deliver2")(addBatch(2)) // advancer
-          phase("await2")(q.processAllAvailable())
-          phase("deliver3")(addBatch(3)) // advancer: flush stragglers
-          phase("await3")(q.processAllAvailable())
+          addBatch(1) // the joinable window
+          q.processAllAvailable()
+          addBatch(2) // advancer
+          q.processAllAvailable()
+          addBatch(3) // advancer: flush stragglers
+          q.processAllAvailable()
         } finally q.stop()
       }
       graft.core.Tables.deleteTree(watchDir.toFile)

@@ -92,16 +92,6 @@ object StreamCurate {
       import s.implicits._
       val docs = Tables.load(s, dir, "documents")
         .select($"doc_id", $"source", $"n_chars", $"text")
-      // SPARK_GRAFT_STREAM_PROF=1: per-phase wall split on stderr (the
-      // StreamAgg attribution convention)
-      def mark(label: String, t0: Long): Unit =
-        if (sys.env.get("SPARK_GRAFT_STREAM_PROF").contains("1"))
-          System.err.println(
-            f"[curate] $label%-9s ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      def phase[A](label: String)(f: => A): A = {
-        val t0 = System.nanoTime(); val r = f; mark(label, t0); r
-      }
-
       def capGuard(n: Long, what: String): Unit =
         if (n > vocabCap) throw new UnsupportedOperationException(
           s"$what model has $n entries — past the $vocabCap " +
@@ -113,7 +103,6 @@ object StreamCurate {
       // it: `get(toks(text), i)` inside a higher-order function re-runs
       // the regex split per element access (no CSE inside HOFs — the
       // shingleSets lesson; here it was 6-8s of pure re-splitting)
-      val modelT0 = System.nanoTime()
       // one job covers BOTH per-source char totals (mixture rates) and the
       // global max doc_id (delivery cut points) — was two separate actions
       val srcRows = docs.groupBy($"source")
@@ -199,7 +188,6 @@ object StreamCurate {
       // entries, and closure shipping would re-serialize it into every
       // task of every micro-batch
       val models = s.sparkContext.broadcast((tgtM, bgdM, cbM, cpM))
-      mark("models", modelT0)
 
       // the arriving stream: three doc_id-range files delivered as
       // separate micro-batches ------------------------------------------
@@ -287,47 +275,44 @@ object StreamCurate {
               try {
                 val epoch = java.nio.file.Files.getLastModifiedTime(
                   watchDir).toMillis
-                phase("deliver") {
-                  // ONE write job produced all three delivery files
-                  // (partitionBy(cut), staged CONCURRENTLY with the model
-                  // build above); the per-cut moves below just rename the
-                  // part files into the watch dir
-                  scala.concurrent.Await.result(partsWrite,
-                    scala.concurrent.duration.Duration(300, "s"))
-                  val parts = partsDir
-                  cuts.indices.foreach { k =>
-                    val d = parts.resolve(s"cut=$k")
-                    if (java.nio.file.Files.isDirectory(d)) {
-                      val listing = java.nio.file.Files.list(d)
-                      try {
-                        val file = listing.iterator()
-                        var moved = false
-                        while (file.hasNext && !moved) {
-                          val f = file.next()
-                          if (f.getFileName.toString.endsWith(".parquet")) {
-                            // stamp WHILE STILL IN STAGING, then move:
-                            // the FileStreamSource is already running, and
-                            // a listing between move and stamp could see
-                            // an unstamped later file sort before a
-                            // stamped earlier one (stamped times can be in
-                            // the future of a raw mtime), breaking the
-                            // batch-order = doc_id-order determinism the
-                            // keep-first dedup relies on. Ascending mod
-                            // times spaced well past FS granularity:
-                            // batch order = k order.
-                            java.nio.file.Files.setLastModifiedTime(f,
-                              java.nio.file.attribute.FileTime.fromMillis(
-                                epoch + k * 10000L))
-                            java.nio.file.Files.move(f,
-                              watchDir.resolve(s"p$k.parquet"))
-                            moved = true
-                          }
+                // ONE write job produced all three delivery files
+                // (partitionBy(cut), staged CONCURRENTLY with the model
+                // build above); the per-cut moves below just rename the
+                // part files into the watch dir
+                scala.concurrent.Await.result(partsWrite,
+                  scala.concurrent.duration.Duration(300, "s"))
+                cuts.indices.foreach { k =>
+                  val d = partsDir.resolve(s"cut=$k")
+                  if (java.nio.file.Files.isDirectory(d)) {
+                    val listing = java.nio.file.Files.list(d)
+                    try {
+                      val file = listing.iterator()
+                      var moved = false
+                      while (file.hasNext && !moved) {
+                        val f = file.next()
+                        if (f.getFileName.toString.endsWith(".parquet")) {
+                          // stamp WHILE STILL IN STAGING, then move:
+                          // the FileStreamSource is already running, and
+                          // a listing between move and stamp could see
+                          // an unstamped later file sort before a
+                          // stamped earlier one (stamped times can be in
+                          // the future of a raw mtime), breaking the
+                          // batch-order = doc_id-order determinism the
+                          // keep-first dedup relies on. Ascending mod
+                          // times spaced well past FS granularity:
+                          // batch order = k order.
+                          java.nio.file.Files.setLastModifiedTime(f,
+                            java.nio.file.attribute.FileTime.fromMillis(
+                              epoch + k * 10000L))
+                          java.nio.file.Files.move(f,
+                            watchDir.resolve(s"p$k.parquet"))
+                          moved = true
                         }
-                      } finally listing.close()
-                    }
+                      }
+                    } finally listing.close()
                   }
                 }
-                phase("await")(q.processAllAvailable())
+                q.processAllAvailable()
               } finally q.stop()
             }
             s.table(sink).localCheckpoint(true)

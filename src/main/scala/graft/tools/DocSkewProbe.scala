@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Doc-skew gate probe (r16, r15 directive 4): measure — don't assume —
@@ -13,12 +12,7 @@ import org.apache.spark.sql.functions._
 object DocSkewProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/repo/testdata_docskew9x")
-    val spark = graft.core.ScaleConf.tuned(SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     val cap = graft.operators.Dedup.maxShingleDocFreq
     val freqs = graft.operators.Dedup.shingleFreqs(spark, dir)

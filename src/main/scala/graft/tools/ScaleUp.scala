@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev harness: materialize a larger scale factor from `/root/testdata`'s
@@ -67,12 +66,7 @@ object ScaleUp {
     // to stress (r14 overflow audit: the harness's third growth point and
     // the empirical net under the oracle-sum bound sweep).
     require(copies >= 1 && copies <= 81, "copies in 1..81 (id stride headroom)")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     val stride = 1000000000000L // > every sf0.1 id range; 9x fits int64
 

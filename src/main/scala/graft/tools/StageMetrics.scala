@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable.ArrayBuffer
 
 /** Per-stage task-metrics diagnostic: run registered queries and print,
@@ -18,8 +17,8 @@ import scala.collection.mutable.ArrayBuffer
   * This instrument attributed the r15 27x->81x tail (e_tail 1.27-1.35 on
   * the five doc-heavy queries): the pipelines' gate-join seal stages
   * carried GB-scale sort spill at 81x. It then also REFUTED the first
-  * fix attempt — AQE re-partitioning (`core/ScaleConf`) cleared the
-  * spill but cost ~1.7x task CPU in many-small-partition plans; the
+  * fix attempt — AQE re-partitioning cleared the spill but cost ~1.7x
+  * task CPU in many-small-partition plans; the
   * shipped fix is hash-build gate joins (`operators/PipelineFull`),
   * which never sort the fat rows. Promoted into the ritual (step 7) as
   * the standing METRICS_r{N}.txt emitter.
@@ -36,28 +35,7 @@ object StageMetrics {
     val unknown = names.filterNot(graft.SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unregistered queries: ${unknown.mkString(",")}")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Optional knob overrides for hypothesis isolation (applied only when
-    // set, so the default measurement matches the session every main
-    // builds): GRAFT_ADVISORY_MB re-sizes AQE's advisory partition size;
-    // GRAFT_INIT_PARTS re-sizes coalescePartitions.initialPartitionNum
-    // (AQE can only MERGE map-output buckets, so a low initial count pins
-    // post-shuffle partitioning at every scale).
-    val knobs: Seq[(String, String)] =
-      sys.env.get("GRAFT_INIT_PARTS").map(
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> _)
-        .toSeq ++
-      sys.env.get("GRAFT_ADVISORY_MB").map(mb =>
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> s"${mb}m")
-    val spark = knobs.foldLeft(
-      graft.core.ScaleConf.tuned(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus))) {
-        case (bb, (k, v)) => bb.config(k, v)
-      }
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     // (stageId, name, tasks, runMs, cpuMs, gcMs, shufReadB, shufWriteB,
     //  memSpillB, diskSpillB, peakMemB)

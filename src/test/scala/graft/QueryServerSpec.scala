@@ -127,6 +127,24 @@ class QueryServerSpec extends AnyFunSuite {
     }
   }
 
+  test("POST /runc releases the indexes it pinned when the program fails") {
+    withServer { port =>
+      // the loop point-filters nation, so Optimize pins a keyed index;
+      // the program never assigns `result`
+      val program =
+        """let mut out := nil[{k : int, n : int}] in
+          |for kv in [1, 2] :
+          |  set out := { k : kv,
+          |    n : len(n <- mut nation; check(n[n_regionkey] == kv); ret n)
+          |  } :: mut out
+          |end""".stripMargin
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val (code, body) = post(s"http://localhost:$port/runc", program)
+      assert(code !== 200, body)
+      assert(spark.sparkContext.getPersistentRDDs.keySet.toSet === before)
+    }
+  }
+
   test("POST /extract returns portable SQL for a surface-syntax program") {
     withServer { port =>
       val program =
