@@ -20,13 +20,13 @@
 #      must be committed (git status clean), and if HEAD moved or the tree
 #      was dirty when step 1 ran, the full test suite re-runs against HEAD
 #      (r13 shipped red because a post-ritual source commit skipped this).
-# Scale corpora (regenerate once per data regeneration):
-#   SPARK_GRAFT_CPUS=16 sbt "runMain graft.tools.ScaleUp /root/testdata/sf0.1 /root/repo/testdata_sf1 9"
-#   SPARK_GRAFT_CPUS=16 sbt "runMain graft.tools.ScaleUp /root/testdata/sf0.1 /root/repo/testdata_27x 27"
-#   SPARK_GRAFT_CPUS=16 sbt "runMain graft.tools.ScaleUp /root/testdata/sf0.1 /root/repo/testdata_81x 81"
-#   SPARK_GRAFT_CPUS=16 sbt "runMain graft.tools.ScaleUp /root/testdata/sf0.1 /root/repo/testdata_skew9x 9 --zipf"
-#   SPARK_GRAFT_CPUS=16 sbt "runMain graft.tools.ScaleUp /root/testdata/sf0.01 /root/repo/testdata_docskew9x 9 --docskew"
-#   SPARK_GRAFT_CPUS=16 sbt "runMain graft.tools.ScaleUp /root/testdata/sf0.01 /root/repo/testdata_docskew27x 27 --docskew"
+# Scale corpora, written under the repo root (regenerate once per data regeneration):
+#   SPARK_GRAFT_CPUS=16 sbt "runMain graft.tools.ScaleUp /root/testdata/sf0.1 testdata_sf1 9"
+#   SPARK_GRAFT_CPUS=16 sbt "runMain graft.tools.ScaleUp /root/testdata/sf0.1 testdata_27x 27"
+#   SPARK_GRAFT_CPUS=16 sbt "runMain graft.tools.ScaleUp /root/testdata/sf0.1 testdata_81x 81"
+#   SPARK_GRAFT_CPUS=16 sbt "runMain graft.tools.ScaleUp /root/testdata/sf0.1 testdata_skew9x 9 --zipf"
+#   SPARK_GRAFT_CPUS=16 sbt "runMain graft.tools.ScaleUp /root/testdata/sf0.01 testdata_docskew9x 9 --docskew"
+#   SPARK_GRAFT_CPUS=16 sbt "runMain graft.tools.ScaleUp /root/testdata/sf0.01 testdata_docskew27x 27 --docskew"
 # Usage: scripts/round_ritual.sh [fast] [roundN]
 #   "fast" skips steps 4-7; roundN (e.g. 13) names the committed artifacts.
 set -uo pipefail
@@ -95,8 +95,8 @@ if [ "$FAST" != "fast" ]; then
   step "4/8 oracle correctness sf0.1 + 9x + 27x"
   SPARK_GRAFT_CPUS=16 run_verify /root/testdata/sf0.1 /tmp/ritual_v01 \
     "oracle sf0.1"
-  if [ -d /root/repo/testdata_sf1 ]; then
-    SPARK_GRAFT_CPUS=16 run_verify /root/repo/testdata_sf1 /tmp/ritual_v9x \
+  if [ -d testdata_sf1 ]; then
+    SPARK_GRAFT_CPUS=16 run_verify testdata_sf1 /tmp/ritual_v9x \
       "oracle 9x"
   else
     echo "testdata_sf1 missing — run graft.tools.ScaleUp first"
@@ -104,8 +104,8 @@ if [ "$FAST" != "fast" ]; then
   fi
   # the 27x oracle run is what caught the r13 int64-sum scale bugs —
   # it is a gate, not a spot check. Full 199 queries against DuckDB.
-  if [ -d /root/repo/testdata_27x ]; then
-    SPARK_GRAFT_CPUS=16 run_verify /root/repo/testdata_27x /tmp/ritual_v27x \
+  if [ -d testdata_27x ]; then
+    SPARK_GRAFT_CPUS=16 run_verify testdata_27x /tmp/ritual_v27x \
       "oracle 27x" /tmp/ritual_v27x.log
     # the uniform 27x corpus must take the ZERO-recovery streaming path —
     # paying recovery anyway measured 2-3x on the jaccard family (r16)
@@ -135,12 +135,12 @@ q_argmax_group,q_sort_word_unsigned"
   TAIL_SET="q_pipeline_sink,q_pipeline_clean,q_pipeline_full,\
 q_dedup_clusters,q_dedup_ngram_jaccard"
   SPOT81="$OVERFLOW_SET,$TAIL_SET"
-  if [ -d /root/repo/testdata_81x ]; then
+  if [ -d testdata_81x ]; then
     if SPARK_GRAFT_CPUS=16 SPARK_GRAFT_ONLY="$SPOT81" \
-         sbt -batch "runMain graft.Verify /root/repo/testdata_81x /tmp/ritual_v81x" \
+         sbt -batch "runMain graft.Verify testdata_81x /tmp/ritual_v81x" \
          >/dev/null 2>&1; then
       line=$(GRAFT_ORACLE_ONLY="$SPOT81" python3 \
-        scripts/oracle_check.py /root/repo/testdata_81x /tmp/ritual_v81x |
+        scripts/oracle_check.py testdata_81x /tmp/ritual_v81x |
         tail -1)
       echo "81x spot: $line"
       if echo "$line" | grep -q "^PASS"; then
@@ -162,12 +162,12 @@ q_dedup_clusters,q_dedup_ngram_jaccard"
   # double-counted hot-key rows), not just timings.
   SKEW_SET="q1_agg,q_agg_sum_count,q_bloom_join,q_family_2hop,\
 q_groupby_bags,q_salted_join"
-  if [ -d /root/repo/testdata_skew9x ]; then
+  if [ -d testdata_skew9x ]; then
     if SPARK_GRAFT_CPUS=16 SPARK_GRAFT_ONLY="$SKEW_SET" \
-         sbt -batch "runMain graft.Verify /root/repo/testdata_skew9x /tmp/ritual_vskew" \
+         sbt -batch "runMain graft.Verify testdata_skew9x /tmp/ritual_vskew" \
          >/dev/null 2>&1; then
       line=$(GRAFT_ORACLE_ONLY="$SKEW_SET" python3 \
-        scripts/oracle_check.py /root/repo/testdata_skew9x /tmp/ritual_vskew |
+        scripts/oracle_check.py testdata_skew9x /tmp/ritual_vskew |
         tail -1)
       echo "skew spot: $line"
       if echo "$line" | grep -q "^PASS"; then
@@ -193,19 +193,19 @@ q_groupby_bags,q_salted_join"
   # stay small enough to enumerate.
   DOCSKEW_SET="q_dedup_exact,q_dedup_ngram_jaccard,q_dedup_clusters,\
 q_dedup_minhash,q_substring_dup"
-  if [ -d /root/repo/testdata_docskew9x ]; then
-    probe=$(SPARK_GRAFT_CPUS=16 sbt -batch "runMain graft.tools.DocSkewProbe /root/repo/testdata_docskew9x" 2>/dev/null |
+  if [ -d testdata_docskew9x ]; then
+    probe=$(SPARK_GRAFT_CPUS=16 sbt -batch "runMain graft.tools.DocSkewProbe testdata_docskew9x" 2>/dev/null |
       grep "docskew-probe" || true)
     echo "${probe:-docskew probe produced no output}"
     if ! echo "$probe" | grep -q "capped_postings=[1-9]"; then
       gate "docskew probe (cap never fired)"
     elif SPARK_GRAFT_CPUS=16 SPARK_GRAFT_ONLY="$DOCSKEW_SET" \
-         sbt -batch "runMain graft.Verify /root/repo/testdata_docskew9x /tmp/ritual_vdocskew" \
+         sbt -batch "runMain graft.Verify testdata_docskew9x /tmp/ritual_vdocskew" \
          >/tmp/ritual_vdocskew.log 2>&1; then
       # the hot corpus must take the exactness-preserving RECOVERY path
       assert_cap_branch /tmp/ritual_vdocskew.log recovery "docskew9x"
       line=$(GRAFT_ORACLE_ONLY="$DOCSKEW_SET" python3 \
-        scripts/oracle_check.py /root/repo/testdata_docskew9x /tmp/ritual_vdocskew |
+        scripts/oracle_check.py testdata_docskew9x /tmp/ritual_vdocskew |
         tail -1)
       echo "docskew spot: $line"
       if echo "$line" | grep -q "^PASS"; then
@@ -227,18 +227,18 @@ q_dedup_minhash,q_substring_dup"
   # corpus at 27 copies AND record its bench time. Base stays sf0.01: the
   # DuckDB oracle replays the shingle join UNCAPPED, and per-copy token
   # salting keeps each copy's hot posting (250 docs) enumerable.
-  if [ -d /root/repo/testdata_docskew27x ]; then
-    probe=$(SPARK_GRAFT_CPUS=16 sbt -batch "runMain graft.tools.DocSkewProbe /root/repo/testdata_docskew27x" 2>/dev/null |
+  if [ -d testdata_docskew27x ]; then
+    probe=$(SPARK_GRAFT_CPUS=16 sbt -batch "runMain graft.tools.DocSkewProbe testdata_docskew27x" 2>/dev/null |
       grep "docskew-probe" || true)
     echo "${probe:-docskew27x probe produced no output}"
     if ! echo "$probe" | grep -q "capped_postings=[1-9]"; then
       gate "docskew27x probe (cap never fired)"
     elif SPARK_GRAFT_CPUS=16 SPARK_GRAFT_ONLY="$DOCSKEW_SET" \
-         sbt -batch "runMain graft.Verify /root/repo/testdata_docskew27x /tmp/ritual_vdocskew27" \
+         sbt -batch "runMain graft.Verify testdata_docskew27x /tmp/ritual_vdocskew27" \
          >/tmp/ritual_vdocskew27.log 2>&1; then
       assert_cap_branch /tmp/ritual_vdocskew27.log recovery "docskew27x"
       line=$(GRAFT_ORACLE_ONLY="$DOCSKEW_SET" python3 \
-        scripts/oracle_check.py /root/repo/testdata_docskew27x /tmp/ritual_vdocskew27 |
+        scripts/oracle_check.py testdata_docskew27x /tmp/ritual_vdocskew27 |
         tail -1)
       echo "docskew27x spot: $line"
       if echo "$line" | grep -q "^PASS"; then
@@ -249,7 +249,7 @@ q_dedup_minhash,q_substring_dup"
         gate "oracle docskew27x spot"
       fi
       rm -f /tmp/ritual_bench_docskew27x.json
-      SPARK_GRAFT_SF_DIR=/root/repo/testdata_docskew27x \
+      SPARK_GRAFT_SF_DIR=testdata_docskew27x \
         SPARK_GRAFT_ONLY="$DOCSKEW_SET" \
         SPARK_GRAFT_BENCH_OUT=/tmp/ritual_bench_docskew27x.json \
         sbt -batch "runMain graft.Bench" >/dev/null 2>&1 || true
@@ -290,8 +290,8 @@ PY
     "BENCH_r${ROUND}_sf01.json"
 
   step "6/8 9x bench + linearity"
-  if [ -d /root/repo/testdata_sf1 ]; then
-    SPARK_GRAFT_SF_DIR=/root/repo/testdata_sf1 \
+  if [ -d testdata_sf1 ]; then
+    SPARK_GRAFT_SF_DIR=testdata_sf1 \
       SPARK_GRAFT_BENCH_OUT=/tmp/ritual_bench_sf1.json \
       sbt -batch "runMain graft.Bench" >/dev/null 2>&1 || true
     # a query failing ONLY at 9x is exactly what this step exists to
@@ -321,7 +321,7 @@ PY
   fi
 
   step "7/8 27x + 81x bench (top slow queries) + growth-exponent fit"
-  if [ -d /root/repo/testdata_27x ] && [ -f /tmp/ritual_bench_sf1.json ]; then
+  if [ -d testdata_27x ] && [ -f /tmp/ritual_bench_sf1.json ]; then
     TOP=$(python3 - <<'PY'
 import json
 d = json.load(open('/tmp/ritual_bench_sf1.json'))
@@ -329,7 +329,7 @@ qs = sorted(d['queries'].items(), key=lambda kv: -kv[1])[:20]
 print(','.join(q for q, _ in qs))
 PY
 )
-    SPARK_GRAFT_SF_DIR=/root/repo/testdata_27x SPARK_GRAFT_ONLY="$TOP" \
+    SPARK_GRAFT_SF_DIR=testdata_27x SPARK_GRAFT_ONLY="$TOP" \
       SPARK_GRAFT_BENCH_OUT=/tmp/ritual_bench_27x.json \
       sbt -batch "runMain graft.Bench" >/dev/null 2>&1 || true
     python3 - <<'PY' || gate "27x bench (failed queries)"
@@ -348,7 +348,7 @@ PY
     # [255.2, 96.1] in one session) — a fit fed by maxima flags noise,
     # not growth. Median-of-3 rejects one outlier per query.
     GROWTH_POINTS="1:/tmp/ritual_bench_sf01.json 9:/tmp/ritual_bench_sf1.json 27:/tmp/ritual_bench_27x.json"
-    if [ -d /root/repo/testdata_81x ]; then
+    if [ -d testdata_81x ]; then
       TOP10=$(python3 - <<'PY'
 import json
 d = json.load(open('/tmp/ritual_bench_sf1.json'))
@@ -356,7 +356,7 @@ qs = sorted(d['queries'].items(), key=lambda kv: -kv[1])[:10]
 print(','.join(q for q, _ in qs))
 PY
 )
-      SPARK_GRAFT_SF_DIR=/root/repo/testdata_81x SPARK_GRAFT_ONLY="$TOP10" \
+      SPARK_GRAFT_SF_DIR=testdata_81x SPARK_GRAFT_ONLY="$TOP10" \
         SPARK_GRAFT_REPS=3 \
         SPARK_GRAFT_BENCH_OUT=/tmp/ritual_bench_81x.json \
         sbt -batch "runMain graft.Bench" >/dev/null 2>&1 || true
@@ -398,7 +398,7 @@ PY
 q_dedup_clusters,q_dedup_ngram_jaccard,q_salted_join,q_substring_dup,\
 q_bpe_encode"
     : > /tmp/ritual_metrics.txt
-    for SCALE_DIR in /root/repo/testdata_27x /root/repo/testdata_81x; do
+    for SCALE_DIR in testdata_27x testdata_81x; do
       [ -d "$SCALE_DIR" ] || continue
       sbt -batch "runMain graft.tools.StageMetrics $METRICS_SET $SCALE_DIR" \
         2>/dev/null | grep -Ev "^\[info\]|^\[warn\]|^\[success" \
