@@ -516,16 +516,6 @@ object Compiler {
     * `projCorrelatedAggs` unnests. */
   private def collectCorrelatedAggs(r: Expr, x: String): List[Expr] = {
     val buf = scala.collection.mutable.ListBuffer.empty[Expr]
-    def kids(e: Expr): Seq[Expr] = e.asInstanceOf[Product]
-      .productIterator.flatMap {
-      case c: Expr => Seq(c)
-      case l: List[_] => l.flatMap {
-        case (_, ex: Expr) => Seq(ex)
-        case ex: Expr => Seq(ex)
-        case _ => Nil
-      }
-      case _ => Nil
-    }.toSeq
     def walk(e: Expr): Unit = e match {
       case EACFold(_, s0) if Rewrites.freeVars(s0).contains(x) => buf += e
       case EACIFold(_, s0) if Rewrites.freeVars(s0).contains(x) => buf += e
@@ -539,7 +529,7 @@ object Compiler {
         buf += e2; walk(z); walk(st)
       case e2 @ ESort(_, s0) if Rewrites.freeVars(s0).contains(x) =>
         buf += e2
-      case _ => kids(e).foreach(walk)
+      case _ => Rewrites.children(e).foreach(walk)
     }
     walk(r)
     buf.toList.distinct
@@ -560,24 +550,14 @@ object Compiler {
       case EFold(_, _, b, a, _) => Seq(b, a)
       case _ => Nil
     }
-    def kids(e: Expr): Seq[Expr] = e.asInstanceOf[Product]
-      .productIterator.flatMap {
-        case c: Expr => Seq(c)
-        case l: List[_] => l.flatMap {
-          case (_, ex: Expr) => Seq(ex)
-          case ex: Expr => Seq(ex)
-          case _ => Nil
-        }
-        case _ => Nil
-      }.toSeq
-    binders(e0).contains(x) || kids(e0).exists(bindsVar(_, x))
+    binders(e0).contains(x) || Rewrites.children(e0).exists(bindsVar(_, x))
   }
 
   /** Peel a correlated aggregate source into [optional value projection]
     * over [an optional correlated EFlatmap] over [a chain of filters] over
     * an uncorrelated core. A projection value that itself references `x`
-    * is allowed — it forces the join-then-reaggregate path (both rows are
-    * in scope there), never the groupBy-then-join plan. `subst`, when set,
+    * is allowed — it forces the distinct-outer path (both rows are in
+    * scope there), never the keyed groupBy. `subst`, when set,
     * marks the LAYERED shape (canonicalization wrappers between the
     * aggregate and the chain): the filter-chain subtree to substitute with
     * the per-outer-row collected array, leaving the wrapper layers to
@@ -700,8 +680,8 @@ object Compiler {
     * the aggregate node. Sum/count default to 0 on no-match; min/max stay
     * null (the ACI None-on-empty). Outer-only conjuncts gate the result
     * per row with CASE WHEN. Join-key equality is the null-safe `<=>`
-    * (value_eqb). Non-equi correlation takes the join-then-reaggregate
-    * path over zip positions instead (see unnestCorrelatedAggs).
+    * (value_eqb). Correlation the keyed plan cannot express takes the
+    * distinct-outer join-then-reaggregate path (see unnestAggsOnce).
     */
   private def projCorrelatedAggs(tag: CollectionTag, df: DataFrame,
       x: String, r: Expr, env: Env, xT: Option[FType]): Val = {
@@ -716,10 +696,15 @@ object Compiler {
     * expression goes, Interpret.v:273-299): LEFT-join the per-key
     * aggregates on, evaluate the rewritten predicate, and project the
     * outer row back out. The left join is key-grouped so it never
-    * duplicates outer rows — filter cardinality semantics survive. */
+    * duplicates outer rows — filter cardinality semantics survive. Each
+    * aggregate keeps its own keyed group here: one shared join would let
+    * Catalyst turn it into an inner join as soon as one conjunct rejects
+    * no-match rows (`count > 0`), and PlanQualitySpec pins the per-node
+    * left-join form of q_lang_corr_filter and q_lang_corr_filter_big. */
   private def filterCorrelatedAggs(df: DataFrame, x: String, p: Expr,
       env: Env, xT: Option[FType]): Val = {
-    val ((joined, benv, p2), la) = unnestCorrelatedAggs(df, x, p, env, xT)
+    val ((joined, benv, p2), la) =
+      unnestCorrelatedAggs(df, x, p, env, xT, shareGroups = false)
     val kept = joined.filter(asCV(compile(p2, benv)))
     TV(kept.select(df.columns.map(c => col(s"$la.$c").as(c)): _*))
   }
@@ -765,7 +750,8 @@ object Compiler {
     * outer-row field accesses, and go again. The final round returns the
     * usual (joined, benv, rewritten) triple. */
   private def unnestCorrelatedAggs(df: DataFrame, x: String, r: Expr,
-      env: Env, xT: Option[FType] = None): ((DataFrame, Env, Expr), String) = {
+      env: Env, xT: Option[FType] = None, shareGroups: Boolean = true)
+      : ((DataFrame, Env, Expr), String) = {
     var curDf = df; var curR = r; var curXT = xT
     var rounds = 0
     while (rounds < 6) {
@@ -774,7 +760,7 @@ object Compiler {
       val nested = inner.toSet != nodes.toSet
       val ((joined, benv, r2), la) =
         unnestAggsOnce(curDf, x, curR, env, if (nested) inner else nodes,
-          curXT)
+          curXT, shareGroups)
       if (!nested) return ((joined, benv, r2), la)
       rounds += 1
       val newVars = (benv.vars.keySet -- env.vars.keySet) - x
@@ -928,8 +914,8 @@ object Compiler {
   }
 
   private def unnestAggsOnce(df: DataFrame, x: String, r: Expr,
-      env0: Env, only: List[Expr],
-      xT: Option[FType]): ((DataFrame, Env, Expr), String) = {
+      env0: Env, only: List[Expr], xT: Option[FType],
+      shareGroups: Boolean): ((DataFrame, Env, Expr), String) = {
     // join-source / scalar-land lifts extend the env with canonical-array
     // binds; every compile below must see them
     var env = env0
@@ -1019,12 +1005,12 @@ object Compiler {
         "correlated aggregate whose source is not a filter chain over an " +
           "uncorrelated table — rewrite with an explicit EJoin")
     // Split each aggregate's filter conjuncts up front: clean outer=inner
-    // equalities (keyPairs — the groupBy-then-join path), inner-only
+    // equalities (keyPairs — the keyed groupBy), inner-only
     // (pre-aggregation filters), outer-only (CASE gates), and everything
     // else mixing the two rows (`mixed` — one-sided equalities, non-equi
-    // comparisons). Any mixed conjunct forces the JOIN-THEN-REAGGREGATE
-    // path, which joins the distinct outer rows, so the split
-    // must precede the chain's base frame.
+    // comparisons). A mixed conjunct that is not a keyed `<` range residue
+    // forces the distinct-outer path, so the split must precede the
+    // chain's base frame.
     final case class ConjSplit(keyPairs: List[(Expr, (String, Expr))],
         residual: List[(String, Expr)], outerOnly: List[Expr],
         mixed: List[(String, Expr)])
@@ -1059,14 +1045,12 @@ object Compiler {
       }
       ConjSplit(keyPairs, residual, outerOnly, mixed)
     }
-    val splits = peeled.map { case (node, pe) => (node, pe, splitConjuncts(pe)) }
     // parse every mixed conjunct as outer-vs-inner under OLess:
     // (outerExpr, innerBinder, innerExpr, outerIsLeft) — None if any
-    // conjunct has another shape. Shared by the merged keyed-range
-    // scalar path and the keyed-range ARRAY path below: OLess is
-    // TInt-total and every tier's encoding is order-preserving (Long;
-    // Decimal(38,0); BigIntMath canonical bytes), so a raw `<` on the
-    // collected expression values IS value_compare.
+    // conjunct has another shape. OLess is TInt-total and every tier's
+    // encoding is order-preserving (Long; Decimal(38,0); BigIntMath
+    // canonical bytes), so a raw `<` on the collected expression values
+    // IS value_compare.
     def rangeConjsOf(sp: ConjSplit)
         : Option[List[(Expr, String, Expr, Boolean)]] = {
       val parsed = sp.mixed.map {
@@ -1087,288 +1071,273 @@ object Compiler {
     val id = latIds.incrementAndGet()
     val la = s"__caggl$id"
     val outerRow = qualifiedRow(df.columns, la)
-    // join-then-reaggregate computes each per-outer-row value against the
-    // DISTINCT outer rows (duplicate outer rows have identical correlated
-    // results by definition) and joins it back by null-safe equality on
-    // every outer column — no global sort, no row-id generation, the plan
-    // stays inside Catalyst (pushdown/codegen survive)
-    def collectsArray(node: Expr): Boolean = node match {
-      case EFold(_, _, _, _, _) | ESort(_, _) => true
-      case _ => false
+    def synthW(e: Expr, extra: (String, Option[FType])*): Option[FType] =
+      try Some(TypeCheck.synthesize(e,
+        env.varTypes ++ xT.map(x -> _) ++
+          extra.collect { case (n, Some(t)) => n -> t },
+        env.storeTypes))
+      catch { case scala.util.control.NonFatal(_) => None }
+    // One record per peeled node: its conjunct split, the residual-filtered
+    // inner frame, and the binder types every compile below threads
+    // through — the chain's element type (coreT), the flatmap body's
+    // element type (flatT, synthesized with BOTH binders in scope), and
+    // the value type after the optional projection (valT: the per-row
+    // array's element type and the ACI fold's result type). Threading them
+    // keeps order/boxing decisions (CanonOrder keys, nested-option boxing)
+    // type-directed inside decorrelated bodies.
+    final case class Agg(node: Expr, pe: PeeledSrc, sp: ConjSplit, i: Int,
+        inner: DataFrame, coreT: Option[FType], flatT: Option[FType]) {
+      val projInT: Option[FType] = if (pe.flat.isDefined) flatT else coreT
+      val valT: Option[FType] = pe.proj match {
+        case Some((pb, pv)) => projInT.flatMap(bt => synthW(pv, pb -> Some(bt)))
+        case None => projInT
+      }
+      // sequential/ordered consumers (EFold, ESort) and layered wrappers
+      // read a per-row canonically sorted array; ACI aggregates a scalar
+      val collected: Boolean = pe.subst.nonEmpty || (node match {
+        case EFold(_, _, _, _, _) | ESort(_, _) => true
+        case _ => false
+      })
+      // count/length never look at the element value
+      val countOnly: Boolean = node match {
+        case EACFold(AGCount, _) | EUnop(OLength, _) => true
+        case _ => false
+      }
+      val exploded: Boolean = !collected && pe.flat.nonEmpty
+      val name = s"__cagg_${id}_$i"
+      val aName = s"__agg${id}_$i"
     }
-    def takesArrayPath(node: Expr, pe: PeeledSrc): Boolean =
-      collectsArray(node) || pe.subst.nonEmpty
+    val aggs = peeled.zipWithIndex.map { case ((node, pe), i) =>
+      val coreT = synthElem(pe.core, env)
+      var inner = compile(pe.core, env) match {
+        case TV(d) => d
+        case cv @ CV(_) => toDF(cv, env)
+      }
+      val sp = splitConjuncts(pe)
+      sp.residual.reverse.foreach { case (b, p) =>
+        inner = inner.filter(asCV(compile(p,
+          env.bindRowTyped(b, CV(rowStruct(inner)), coreT))))
+      }
+      val flatT = pe.flat.flatMap { case (fb, fbody) =>
+        synthW(fbody, fb -> coreT).flatMap(elemTypeOf)
+      }
+      Agg(node, pe, sp, i, inner, coreT, flatT)
+    }
     var joined: DataFrame = df.alias(la)
     var extraBinds = List.empty[(String, Val, Option[FType])]
     var r2 = rPre // scalar-land-lifted nodes already substituted
 
-    // FLAT-EQUI MERGED PATH: a scalar aggregate over a correlated FLATMAP
-    // source (a lifted join leg) whose body never reads the outer row and
-    // whose correlation is pure equi-keys does NOT need the distinct-outer
-    // join-then-reaggregate plan — the inner side can explode its per-row
-    // element arrays, aggregate per KEY (map-side partials, key-sized
-    // shuffle), and left-join the per-key values onto the outer. Better
-    // still, MULTIPLE such aggregates over the same source (`len(J)` and
-    // `sum(J)` over one join — q_lang_corr_jsrc's shape) share ONE
-    // exploded frame and ONE groupBy: one shuffle instead of N, and no
-    // duplicated join subtrees whose racing broadcast materializations
-    // made bench job counts nondeterministic across reps (r13 directive
-    // 8: [12,14,14]). Alpha-renamed binders compile to the same plan, so
-    // grouping keys on the CANONICALIZED (inner ⋈-keys) plan, not on
-    // expression identity.
-    val mergedIdx: scala.collection.mutable.Set[Int] =
-      scala.collection.mutable.Set.empty[Int]
-    locally {
-      def scalarAggNode(node: Expr): Boolean = node match {
-        case EACFold(_, _) | EACIFold(_, _) | EUnop(OLength, _) => true
-        case _ => false
-      }
-      def synthW(e: Expr, extra: (String, Option[FType])*): Option[FType] =
-        try Some(TypeCheck.synthesize(e,
-          env.varTypes ++ xT.map(x -> _) ++
-            extra.collect { case (n, Some(t)) => n -> t },
-          env.storeTypes))
-        catch { case scala.util.control.NonFatal(_) => None }
-      val eligible = splits.zipWithIndex.filter { case ((node, pe, sp), _) =>
-        scalarAggNode(node) && !takesArrayPath(node, pe) &&
-          sp.keyPairs.nonEmpty && sp.mixed.isEmpty &&
-          pe.flat.exists { case (_, fbody) =>
-            !Rewrites.freeVars(fbody).contains(x) } &&
-          !pe.proj.exists(p => Rewrites.freeVars(p._2).contains(x))
-      }
-      // per eligible node: residual-filtered inner + canonical signature
-      // of (inner, join keys) for alpha-insensitive grouping
-      val prepared = eligible.flatMap { case ((node, pe, sp), i) =>
-        try {
-          val coreT = synthElem(pe.core, env)
-          var inner = compile(pe.core, env) match {
-            case TV(d) => d
-            case cv @ CV(_) => toDF(cv, env)
-          }
-          sp.residual.reverse.foreach { case (b, p) =>
-            inner = inner.filter(asCV(compile(p,
-              env.bindRowTyped(b, CV(rowStruct(inner)), coreT))))
-          }
-          val keyCols = sp.keyPairs.zipWithIndex.map { case ((_, (b, ie)), j) =>
-            asCV(compile(ie, env.bindRowTyped(b, CV(rowStruct(inner)),
-              coreT))).as(s"__sig$j")
-          }
-          val sig = inner.select(keyCols.toIndexedSeq: _*)
-            .queryExecution.analyzed.canonicalized
-          // the OUTER key expressions are part of the merge identity too:
-          // the group shares ONE join predicate (built from the head
-          // node's outer sides), so same-inner-keys-different-outer-keys
-          // nodes must land in different groups (all nodes see the same
-          // binder x, so structural equality is alpha-exact here)
-          Some(((sig, sp.keyPairs.map(_._1)), (node, pe, sp, i, inner, coreT)))
-        } catch { case dec: CanonOrder.StrictOrderViolation => throw dec
-          case scala.util.control.NonFatal(_) => None }
-      }
-      prepared.groupBy(_._1).values.toList.sortBy(_.head._2._4)
-        .foreach { g =>
-        val group = g.map(_._2)
-        val (_, _, sp0, i0, inner, coreT0) = group.head
-        val kN = (j: Int) => s"__k${id}_${i0}_$j"
-        val vN = s"__v${id}_$i0"
-        // per-node element-value arrays over ONE inner row, plus each
-        // value's resolved Spark type (for the null slots of the shared
-        // tagged element struct)
-        val nodeArrs = group.map { case (node, pe, _, _, _, coreT) =>
-          val (fb, fbody) = pe.flat.get
-          val flatT = synthW(fbody, fb -> coreT).flatMap(elemTypeOf)
-          val arr0 = asCV(compile(fbody,
-            env.bindRowTyped(fb, CV(rowStruct(inner)), coreT)))
-          pe.proj match {
-            case Some((pb, pv)) => transform(arr0, e =>
-              asCV(compile(pv, env.bindTyped(pb, CV(e), flatT))))
-            case None => arr0
-          }
-        }
-        val countOnlyK = group.map { case (node, _, _, _, _, _) => node match {
-          case EACFold(AGCount, _) | EUnop(OLength, _) => true
-          case _ => false
-        }}
-        val vdt = nodeArrs.zip(countOnlyK).map { case (arr, co) =>
-          if (co) org.apache.spark.sql.types.LongType
-          else inner.select(explode(arr).as("__pv")).schema("__pv").dataType
-        }
-        // element of node k carries its value in field v<k>, null elsewhere
-        // — sum/min/max skip the nulls, count counts the constant 1s, so
-        // one explode feeds every aggregate
-        val tagged = nodeArrs.zipWithIndex.map { case (arr, k) =>
-          transform(arr, e => struct(vdt.indices.map { j =>
-            (if (j == k) { if (countOnlyK(k)) lit(1L) else e }
-             else lit(null).cast(vdt(j))).as(s"v$j")
-          }.toIndexedSeq: _*))
-        }
-        val keyCols = sp0.keyPairs.zipWithIndex.map { case ((_, (b, ie)), j) =>
-          asCV(compile(ie, env.bindRowTyped(b, CV(rowStruct(inner)),
-            coreT0))).as(kN(j))
-        }
-        val sel = inner.select((keyCols :+
-          explode(concat(tagged.toIndexedSeq: _*)).as(vN)).toIndexedSeq: _*)
-        val aNameK = group.map { case (_, _, _, i, _, _) => s"__agg${id}_$i" }
-        val aggCols = group.zipWithIndex.map { case ((node, _, _, _, _, _), k) =>
-          val v = col(vN)(s"v$k")
-          (node match {
-            case EACFold(AGSum, _) => tierSum(v, env)
-            case EACFold(AGCount, _) | EUnop(OLength, _) => count(v)
-            case EACIFold(AGMin, _) => min(v)
-            case EACIFold(AGMax, _) => max(v)
-            case _ => throw new IllegalStateException("non-agg in merge")
-          }).as(aNameK(k))
-        }
-        val aggDF = sel.groupBy(sp0.keyPairs.indices.map(j => col(kN(j))): _*)
-          .agg(aggCols.head, aggCols.tail.toIndexedSeq: _*)
-        val joinPred = sp0.keyPairs.zipWithIndex.map { case ((oe, _), j) =>
-          asCV(compile(oe, env.bindTyped(x, CV(outerRow), xT))) <=> col(kN(j))
-        }.reduce(_ && _)
-        joined = joined.join(aggDF, joinPred, "left")
-        group.zipWithIndex.foreach { case ((node, pe, sp, i, _, _), k) =>
-          mergedIdx += i
-          val valT: Option[FType] = {
-            val (fb, fbody) = pe.flat.get
-            val coreT = synthElem(pe.core, env)
-            val flatT = synthW(fbody, fb -> coreT).flatMap(elemTypeOf)
-            pe.proj match {
-              case Some((pb, pv)) => flatT.flatMap(bt =>
-                synthW(pv, pb -> Some(bt)))
-              case None => flatT
-            }
-          }
-          val gate: Option[Column] = sp.outerOnly match {
-            case Nil => None
-            case os => Some(os.map(o =>
-              asCV(compile(o, env.bindTyped(x, CV(outerRow), xT))))
-              .reduce(_ && _))
-          }
-          val gated = tierAggRead(node, col(aNameK(k)), gate, env)
-          val scalarT: Option[FType] = node match {
-            case EACFold(AGSum, _) | EACFold(AGCount, _) |
-                 EUnop(OLength, _) => Some(TInt)
-            case EACIFold(_, _) => valT match {
-              case Some(TOption(_)) => None
-              case other => other.map(TOption(_))
-            }
-            case _ => None
-          }
-          val name = s"__cagg_${id}_$i"
-          extraBinds ::= ((name, CV(gated), scalarT))
-          r2 = Rewrites.foldExpr(r2)(e0 => if (e0 == node) EVar(name) else e0)
-        }
+    def outerCol(e: Expr): Column =
+      asCV(compile(e, env.bindTyped(x, CV(outerRow), xT)))
+    // the node's inner key and range expressions over one inner row
+    def innerCol(a: Agg, b: String, e: Expr): Column =
+      asCV(compile(e, env.bindRowTyped(b, CV(rowStruct(a.inner)), a.coreT)))
+    def innerKeys(a: Agg): List[Column] =
+      a.sp.keyPairs.map { case (_, (b, ie)) => innerCol(a, b, ie) }
+    def innerRanges(a: Agg): List[Column] = rangeConjsOf(a.sp).getOrElse(Nil)
+      .map { case (_, b, ie, _) => innerCol(a, b, ie) }
+    def aggOf(a: Agg, v: Column): Column = a.node match {
+      case EACFold(AGSum, _) => tierSum(v, env)
+      case EACFold(AGCount, _) | EUnop(OLength, _) => count(v)
+      case EACIFold(AGMin, _) => min(v)
+      case EACIFold(AGMax, _) => max(v)
+      case _ => throw new IllegalStateException("non-aggregate node")
+    }
+    // Elements ride in a one-field wrapper struct so a genuine null value
+    // (None) survives collect_list's null-dropping. The sort runs in
+    // REFERENCE order when valT synthesizes (word/bag elements take the
+    // CanonOrder key); an unsynthesizable type (e.g. a projection reading
+    // the outer row) falls back to the raw struct order — exact for
+    // word-free, bag-free elements.
+    def canonArr(a: Agg, c: Column): Column = CanonOrder.sortArray(c,
+      a.valT.map(t => TRecord(List("v" -> t))), env.wordWidth)
+    // the node's element value over one inner row bound as `iRow` (the
+    // projection layer's value, or the row itself)
+    def valueOf(a: Agg, envB: Env, iRow: Column): Column = a.pe.proj match {
+      case Some((pb, pv)) =>
+        asCV(compile(pv, envB.bindRowTyped(pb, CV(iRow), a.projInT)))
+      case None => iRow
+    }
+    // a flat peel's per-inner-row body array, each element run through the
+    // optional projection layer above the flatmap
+    def flatArrOf(a: Agg, envB: Env, iRow: Column): Column = {
+      val (fb, fbody) = a.pe.flat.get
+      val arr0 = asCV(compile(fbody, envB.bindRowTyped(fb, CV(iRow), a.coreT)))
+      a.pe.proj match {
+        case Some((pb, pv)) => transform(arr0, e =>
+          asCV(compile(pv, envB.bindTyped(pb, CV(e), a.flatT))))
+        case None => arr0
       }
     }
+    def gateOf(a: Agg): Option[Column] =
+      a.sp.outerOnly.map(outerCol).reduceOption(_ && _)
+    // Read-back of a scalar node: tier defaults and the outer-only gate
+    // (tierAggRead). The hoisted scalar's type: count/sum/length are
+    // TInt; ACI folds carry the source value type, nullable (None on
+    // empty). When the source value type is ITSELF an option, the
+    // aggregated column is the raw unboxed nullable value — recording
+    // TOption(TOption(t)) would declare the boxed struct("s") encoding and
+    // mislead downstream type-directed boxing, so record unknown instead
+    // (order decisions then safely degrade to the raw encoding).
+    def bindScalar(a: Agg, aCol: Column): Unit = {
+      val scalarT: Option[FType] = a.node match {
+        case EACFold(AGSum, _) | EACFold(AGCount, _) |
+             EUnop(OLength, _) => Some(TInt)
+        case EACIFold(_, _) => a.valT match {
+          case Some(TOption(_)) => None
+          case other => other.map(TOption(_))
+        }
+        case _ => None
+      }
+      extraBinds ::= ((a.name, CV(tierAggRead(a.node, aCol, gateOf(a), env)),
+        scalarT))
+      r2 = Rewrites.foldExpr(r2)(e0 => if (e0 == a.node) EVar(a.name) else e0)
+    }
+    // Read-back of a collected node from the sorted wrapper array in
+    // column aName: ESort becomes the array itself, EFold folds it through
+    // the nested-array path, and a LAYERED node swaps only its chain
+    // subtree (the ESetOf/EBagOf/EProj/ESort layers above it compile as
+    // nested-collection ops over the per-row array). A failing outer-only
+    // gate means the correlated source is EMPTY for that row (fold yields
+    // its init; sort yields []). The bound array's ELEMENT type rides
+    // along so a layered ESort re-sorting EVar(name) keys the same way.
+    def bindArray(a: Agg): Unit = {
+      val ext = transform(col(a.aName), s => s("v"))
+      val arrCol = gateOf(a) match {
+        case None => ext
+        case Some(oc) => when(oc, ext).otherwise(slice(ext, lit(1), lit(0)))
+      }
+      extraBinds ::= ((a.name, CV(arrCol), a.valT.map(TList(_))))
+      r2 = Rewrites.foldExpr(r2)(e0 => if (e0 == a.node) (a.pe.subst match {
+        case Some(chain) =>
+          Rewrites.foldExpr(a.node)(n => if (n == chain) EVar(a.name) else n)
+        case None => a.node match {
+          case EFold(_, z, xv, accv, st) => EFold(EVar(a.name), z, xv, accv, st)
+          case _ => EVar(a.name) // ESort: already canonically sorted
+        }
+      }) else e0)
+    }
 
-    // MERGED KEYED RANGE COLLECTION (r14 directive 7): scalar aggregates
-    // whose correlation is equi keys PLUS outer-vs-inner OLess residues —
-    // the mixed-conjunct near-miss that used to force the distinct-outer
-    // join-then-reaggregate plan. The inner collects ONCE per
-    // (inner plan, key exprs, range exprs, outer keys) signature — each
-    // key's (values, range-exprs) elements in one ObjectHashAggregate
-    // (map-side partials, key-sized shuffle) — the per-key arrays
-    // left-join onto the outer, and every node's range predicate +
-    // aggregate evaluates MAP-SIDE per row. Sound because OLess is
-    // TInt-total and every tier's encoding is order-preserving (Long;
-    // Decimal(38,0); BigIntMath canonical bytes), so the raw `<` IS
-    // value_compare; the reference nested-loops the same product
-    // (Interpret.v:273-299). q_lang_corr_nonequi's three aggregates now
-    // cost one key shuffle + one join instead of three join-then-
-    // reaggregate products over the distinct outer.
-    locally {
-      def scalarAggNode(node: Expr): Boolean = node match {
-        case EACFold(_, _) | EACIFold(_, _) | EUnop(OLength, _) => true
-        case _ => false
-      }
-      def rangeConjs(sp: ConjSplit) = rangeConjsOf(sp)
-      def synthW(e: Expr, extra: (String, Option[FType])*): Option[FType] =
-        try Some(TypeCheck.synthesize(e,
-          env.varTypes ++ xT.map(x -> _) ++
-            extra.collect { case (n, Some(t)) => n -> t },
-          env.storeTypes))
-        catch { case scala.util.control.NonFatal(_) => None }
-      val eligible = splits.zipWithIndex.filter { case ((node, pe, sp), i) =>
-        !mergedIdx(i) && scalarAggNode(node) && !takesArrayPath(node, pe) &&
-          sp.keyPairs.nonEmpty && sp.mixed.nonEmpty && pe.flat.isEmpty &&
-          rangeConjs(sp).isDefined &&
-          !pe.proj.exists(p => Rewrites.freeVars(p._2).contains(x))
-      }
-      val prepared = eligible.flatMap { case ((node, pe, sp), i) =>
-        try {
-          val coreT = synthElem(pe.core, env)
-          var inner = compile(pe.core, env) match {
-            case TV(d) => d
-            case cv @ CV(_) => toDF(cv, env)
+    // KEYED: every correlated conjunct is an equi-key, an outer-only gate,
+    // or — under at least one key and no flatmap — an outer-vs-inner `<`
+    // range residue, and neither the projection nor a flatmap body reads
+    // the outer row. The inner side then groups on its equi-keys and
+    // left-joins onto the outer (zero keys: the gate-only shape, whose
+    // per-row value is ONE global aggregate broadcast onto every row).
+    // Nodes sharing (canonicalized inner plan with its key and range
+    // expressions, outer key expressions, element shape) share ONE
+    // select, ONE groupBy and ONE join: one shuffle instead of N, and no
+    // duplicated subtrees whose racing materializations made job counts
+    // nondeterministic across reps. Alpha-renamed binders compile to the
+    // same plan, hence the canonicalized signature. The outer key
+    // expressions are part of the identity (the group shares one join
+    // predicate); outer RANGE sides and directions are not — each node
+    // applies its own residue map-side over the shared collection. With
+    // shareGroups off (filter predicates) every node is its own group.
+    def keyedOk(a: Agg): Boolean = {
+      val oneSided = !a.pe.proj.exists(p => Rewrites.freeVars(p._2).contains(x)) &&
+        a.pe.flat.forall { case (_, fbody) => !Rewrites.freeVars(fbody).contains(x) }
+      oneSided && (
+        if (a.sp.mixed.isEmpty) a.sp.keyPairs.nonEmpty || a.pe.flat.isEmpty
+        else a.sp.keyPairs.nonEmpty && a.pe.flat.isEmpty &&
+          rangeConjsOf(a.sp).isDefined)
+    }
+    val keyed = aggs.filter(keyedOk).flatMap { a =>
+      try {
+        val sigCols =
+          innerKeys(a).zipWithIndex.map { case (c, j) => c.as(s"__sigk$j") } ++
+            innerRanges(a).zipWithIndex.map { case (c, m) => c.as(s"__sigm$m") }
+        val sig = a.inner.select(sigCols: _*).queryExecution.analyzed.canonicalized
+        Some(((sig, a.sp.keyPairs.map(_._1), a.collected, a.exploded,
+          if (shareGroups) -1 else a.i), a))
+      } catch { case dec: CanonOrder.StrictOrderViolation => throw dec
+        case scala.util.control.NonFatal(_) => None }
+    }
+    keyed.groupBy(_._1).values.map(_.map(_._2)).toList.sortBy(_.head.i)
+      .foreach { g =>
+      val h = g.head
+      val row = rowStruct(h.inner)
+      val ranges = innerRanges(h)
+      val kN = (j: Int) => s"__k${id}_${h.i}_$j"
+      val vN = (k: Int) => s"__v${id}_${h.i}_$k"
+      val rN = s"__ragg${id}_${h.i}"
+      val keyCols = innerKeys(h).zipWithIndex.map { case (c, j) => c.as(kN(j)) }
+      // node k's element value over ONE inner row (count nodes carry a
+      // constant: only the element's presence matters)
+      def value(a: Agg): Column =
+        if (a.countOnly && !a.collected) lit(1L) else valueOf(a, env, row)
+      val (elems, aggCols) =
+        if (ranges.nonEmpty) {
+          // each key's (values, range-exprs) elements in ONE collect_list;
+          // every node filters them by its own residue after the join
+          val elem = struct((g.zipWithIndex.map { case (a, k) =>
+            value(a).as(s"v$k") } ++
+            ranges.zipWithIndex.map { case (c, m) => c.as(s"m$m") }): _*)
+          (Seq(elem.as(vN(0))), Seq(collect_list(col(vN(0))).as(rN)))
+        } else if (h.exploded) {
+          // element of node k carries its value in field v<k>, null
+          // elsewhere — sum/min/max skip the nulls, count counts the
+          // constant 1s, so one explode feeds every aggregate
+          val arrs = g.map(flatArrOf(_, env, row))
+          val vdt = g.zip(arrs).map { case (a, arr) =>
+            if (a.countOnly) org.apache.spark.sql.types.LongType
+            else h.inner.select(explode(arr).as("__pv")).schema("__pv").dataType
           }
-          sp.residual.reverse.foreach { case (b, p) =>
-            inner = inner.filter(asCV(compile(p,
-              env.bindRowTyped(b, CV(rowStruct(inner)), coreT))))
+          val tagged = g.zip(arrs).zipWithIndex.map { case ((a, arr), k) =>
+            transform(arr, e => struct(vdt.indices.map { j =>
+              (if (j != k) lit(null).cast(vdt(j))
+               else if (a.countOnly) lit(1L) else e).as(s"v$j")
+            }: _*))
           }
-          val rngs = rangeConjs(sp).get
-          val sigCols = (sp.keyPairs.zipWithIndex.map { case ((_, (b, ie)), j) =>
-            asCV(compile(ie, env.bindRowTyped(b, CV(rowStruct(inner)),
-              coreT))).as(s"__sigk$j")
-          } ++ rngs.zipWithIndex.map { case ((_, b, ie, _), m) =>
-            asCV(compile(ie, env.bindRowTyped(b, CV(rowStruct(inner)),
-              coreT))).as(s"__sigm$m")
-          }).toIndexedSeq
-          val sig = inner.select(sigCols: _*)
-            .queryExecution.analyzed.canonicalized
-          // the OUTER KEY exprs join the identity (the group shares one
-          // join predicate); outer RANGE sides and directions stay OUT —
-          // each node applies its own residue map-side, so nodes
-          // differing only there still share the collection
-          Some(((sig, sp.keyPairs.map(_._1)),
-            (node, pe, sp, i, inner, coreT, rngs)))
-        } catch { case dec: CanonOrder.StrictOrderViolation => throw dec
-          case scala.util.control.NonFatal(_) => None }
-      }
-      prepared.groupBy(_._1).values.toList.sortBy(_.head._2._4).foreach { g =>
-        val group = g.map(_._2)
-        val (_, _, sp0, i0, inner, coreT0, rngs0) = group.head
-        val kN = (j: Int) => s"__rk${id}_${i0}_$j"
-        val vN = s"__rv${id}_$i0"
-        val aN = s"__ragg${id}_$i0"
-        // per-node element value over ONE inner row (count nodes carry a
-        // constant — only the element's presence feeds size())
-        val nodeVals = group.map { case (node, pe, _, _, _, coreT, _) =>
-          node match {
-            case EACFold(AGCount, _) | EUnop(OLength, _) => lit(1L)
-            case _ => pe.proj match {
-              case Some((pb, pv)) => asCV(compile(pv,
-                env.bindRowTyped(pb, CV(rowStruct(inner)), coreT)))
-              case None => inner.col("value") // scalar-element table
-            }
+          (Seq(explode(concat(tagged: _*)).as(vN(0))),
+            g.zipWithIndex.map { case (a, k) =>
+              aggOf(a, col(vN(0))(s"v$k")).as(a.aName) })
+        } else if (h.collected) {
+          // per-inner-row wrapped arrays (one element for a chain row, the
+          // body's whole array for a flat source), flattened per key
+          (g.zipWithIndex.map { case (a, k) => (a.pe.flat match {
+            case Some(_) =>
+              transform(flatArrOf(a, env, row), e => struct(e.as("v")))
+            case None => array(struct(value(a).as("v")))
+          }).as(vN(k)) },
+            g.zipWithIndex.map { case (a, k) =>
+              canonArr(a, flatten(collect_list(col(vN(k))))).as(a.aName) })
+        } else
+          (g.zipWithIndex.map { case (a, k) => value(a).as(vN(k)) },
+            g.zipWithIndex.map { case (a, k) =>
+              aggOf(a, col(vN(k))).as(a.aName) })
+      val aggDF = h.inner.select(keyCols ++ elems: _*)
+        .groupBy(keyCols.indices.map(j => col(kN(j))): _*)
+        .agg(aggCols.head, aggCols.tail: _*)
+      joined =
+        if (keyCols.isEmpty) joined.crossJoin(broadcast(aggDF))
+        else joined.join(aggDF, h.sp.keyPairs.zipWithIndex.map {
+          case ((oe, _), j) => outerCol(oe) <=> col(kN(j)) }.reduce(_ && _),
+          "left")
+      // unmatched outer rows read an EMPTY collection, not a null
+      def orEmpty(c: String): Column =
+        coalesce(col(c), array().cast(aggDF.schema(c).dataType))
+      g.zipWithIndex.foreach { case (a, k) =>
+        if (ranges.isEmpty) {
+          if (!a.collected) bindScalar(a, col(a.aName))
+          else {
+            joined = joined.withColumn(a.aName, orEmpty(a.aName))
+            bindArray(a)
           }
-        }
-        val elem = struct((nodeVals.zipWithIndex.map { case (vc, k) =>
-          vc.as(s"v$k") } ++
-          rngs0.zipWithIndex.map { case ((_, b, ie, _), m) =>
-            asCV(compile(ie, env.bindRowTyped(b, CV(rowStruct(inner)),
-              coreT0))).as(s"m$m")
-          }).toIndexedSeq: _*)
-        val keyCols = sp0.keyPairs.zipWithIndex.map { case ((_, (b, ie)), j) =>
-          asCV(compile(ie, env.bindRowTyped(b, CV(rowStruct(inner)),
-            coreT0))).as(kN(j))
-        }
-        val sel = inner.select((keyCols :+ elem.as(vN)).toIndexedSeq: _*)
-        val aggDF = sel.groupBy(sp0.keyPairs.indices.map(j => col(kN(j))): _*)
-          .agg(collect_list(col(vN)).as(aN))
-        val joinPred = sp0.keyPairs.zipWithIndex.map { case ((oe, _), j) =>
-          asCV(compile(oe, env.bindTyped(x, CV(outerRow), xT))) <=> col(kN(j))
-        }.reduce(_ && _)
-        joined = joined.join(aggDF, joinPred, "left")
-        val emptyArr = array().cast(aggDF.schema(aN).dataType)
-        group.zipWithIndex.foreach { case ((node, pe, sp, i, _, _, rngs), k) =>
-          mergedIdx += i
-          val outerSides = rngs.map { case (oe, _, _, _) =>
-            asCV(compile(oe, env.bindTyped(x, CV(outerRow), xT))) }
-          val matched = filter(coalesce(col(aN), emptyArr), e =>
-            rngs.zipWithIndex.map { case ((_, _, _, outerLeft), m) =>
-              if (outerLeft) outerSides(m) < e(s"m$m")
-              else e(s"m$m") < outerSides(m)
+        } else {
+          val matched = filter(orEmpty(rN), e =>
+            rangeConjsOf(a.sp).get.zipWithIndex.map {
+              case ((oe, _, _, outerLeft), m) =>
+                if (outerLeft) outerCol(oe) < e(s"m$m")
+                else e(s"m$m") < outerCol(oe)
             }.reduce(_ && _))
           val vals = transform(matched, e => e(s"v$k"))
-          val direct = node match {
+          if (a.collected) {
+            // filter-then-sort yields exactly the matched sorted multiset
+            joined = joined.withColumn(a.aName, canonArr(a,
+              transform(matched, e => struct(e(s"v$k").as("v")))))
+            bindArray(a)
+          } else bindScalar(a, a.node match {
             case EACFold(AGCount, _) | EUnop(OLength, _) =>
               size(matched).cast("long")
             case EACFold(AGSum, _) =>
@@ -1377,438 +1346,84 @@ object Compiler {
               // path re-tiers under autoWide exactly like the others
               if (env.bigInt) aggregate(vals,
                 lit(graft.functions.BigIntMath.ZERO_BYTES),
-                (a, v) => BigIntOps.add(a, v))
+                (acc, v) => BigIntOps.add(acc, v))
               else if (env.wideInt) aggregate(vals,
-                lit(0).cast(DecimalType(38, 0)), (a, v) => a + v)
+                lit(0).cast(DecimalType(38, 0)), (acc, v) => acc + v)
               else aggregate(vals, lit(0L),
-                (a, v) => Fiat2.checkedAdd(a, v))
+                (acc, v) => Fiat2.checkedAdd(acc, v))
             case EACIFold(AGMin, _) => array_min(vals)
             case EACIFold(AGMax, _) => array_max(vals)
-            case _ => throw new IllegalStateException("non-agg in range merge")
-          }
-          val gate: Option[Column] = sp.outerOnly match {
-            case Nil => None
-            case os => Some(os.map(o =>
-              asCV(compile(o, env.bindTyped(x, CV(outerRow), xT))))
-              .reduce(_ && _))
-          }
-          val gated = tierAggRead(node, direct, gate, env)
-          val valT: Option[FType] = {
-            val coreT = synthElem(pe.core, env)
-            pe.proj match {
-              case Some((pb, pv)) => coreT.flatMap(bt =>
-                synthW(pv, pb -> Some(bt)))
-              case None => coreT
-            }
-          }
-          val scalarT: Option[FType] = node match {
-            case EACFold(AGSum, _) | EACFold(AGCount, _) |
-                 EUnop(OLength, _) => Some(TInt)
-            case EACIFold(_, _) => valT match {
-              case Some(TOption(_)) => None
-              case other => other.map(TOption(_))
-            }
-            case _ => None
-          }
-          val name = s"__cagg_${id}_$i"
-          extraBinds ::= ((name, CV(gated), scalarT))
-          r2 = Rewrites.foldExpr(r2)(e0 => if (e0 == node) EVar(name) else e0)
+            case _ => throw new IllegalStateException("non-aggregate node")
+          })
         }
       }
     }
 
-    splits.zipWithIndex.filterNot(t => mergedIdx(t._2))
-      .foreach { case ((node, pe, sp), i) =>
-      // an outer-referencing projection value can only be computed where
-      // BOTH rows are in scope — the distinct-outer join paths below
-      val projRefsX =
-        pe.proj.exists(p => Rewrites.freeVars(p._2).contains(x))
-      val innerDF = compile(pe.core, env) match {
-        case TV(d) => d
-        case cv @ CV(_) => toDF(cv, env)
+    // DISTINCT-OUTER (the fallback: non-equi or one-sided correlation, an
+    // outer-reading projection or flatmap body, a group that could not be
+    // built): left-join the inner onto the DISTINCT outer rows on the FULL
+    // correlated predicate (equi conjuncts included, compiled through the
+    // normal null-safe OEq), aggregate per outer row, and join the
+    // per-row values back onto the chain by null-safe equality on every
+    // outer column — duplicate outer rows have identical correlated
+    // results by definition, and the plan stays inside Catalyst. The
+    // non-equi join is the honest distributed cost of this shape —
+    // Catalyst picks a broadcast nested-loop or range join; the reference
+    // nested-loop-interprets the very same product (Interpret.v:273-299).
+    val keyedIdx = keyed.map(_._2.i).toSet
+    aggs.filterNot(a => keyedIdx(a.i)).foreach { a =>
+      val lo = s"__cao${id}_${a.i}"
+      val ib = s"__cai${id}_${a.i}"
+      val mark = s"__cm${id}_${a.i}"
+      val oRow = qualifiedRow(df.columns, lo)
+      val iRow = qualifiedRow(a.inner.columns, ib)
+      val envX = env.bindRowTyped(x, CV(oRow), xT)
+      val pred = (a.sp.mixed.map { case (b, c) =>
+        asCV(compile(c, envX.bindRowTyped(b, CV(iRow), a.coreT)))
+      } ++ a.sp.keyPairs.map { case (oe, (b, ie)) =>
+        asCV(compile(oe, envX)) <=>
+          asCV(compile(ie, env.bindRowTyped(b, CV(iRow), a.coreT)))
+      }).reduceOption(_ && _).getOrElse(lit(true))
+      val pairs = df.dropDuplicates().alias(lo)
+        .join(a.inner.withColumn(mark, lit(1L)).alias(ib), pred, "left")
+      val hit = col(s"$ib.$mark").isNotNull
+      val outerCols = df.columns.toIndexedSeq
+      val okName = (c: String) => s"__oc${id}_${a.i}_$c"
+      def perOuter(aggCol: Column): DataFrame = pairs
+        .groupBy(outerCols.map(c => col(s"$lo.$c")): _*)
+        .agg(aggCol.as(a.aName))
+        .toDF(outerCols.map(okName) :+ a.aName: _*)
+      // a flat peel's per-(outer, inner)-pair body array, wrapped so
+      // genuine null elements survive counting; null for an unmatched row
+      def wrappedArr: Column =
+        when(hit, transform(flatArrOf(a, envX, iRow), e => struct(e.as("v"))))
+      val aggDF = (a.collected, a.pe.flat.isDefined) match {
+        // flatten the collected pair-arrays and re-sort canonically — only
+        // order-safe consumers reach here (ESort itself, or EFold over an
+        // explicit ESort layer)
+        case (true, true) => perOuter(canonArr(a,
+          flatten(collect_list(wrappedArr))))
+        case (true, false) => perOuter(canonArr(a,
+          collect_list(when(hit, struct(valueOf(a, envX, iRow).as("v"))))))
+        case (false, true) =>
+          // the per-pair arrays explode between the product join and the
+          // per-outer aggregation (ACI aggregates never observe the
+          // emission order); explode_outer keeps outer rows whose every
+          // pair-array is empty (count 0 / sum 0 / min null)
+          val vName = s"__v${id}_${a.i}"
+          pairs.select(outerCols.map(c => col(s"$lo.$c").as(okName(c))) :+
+              explode_outer(wrappedArr).as(vName): _*)
+            .groupBy(outerCols.map(c => col(okName(c))): _*)
+            .agg((if (a.countOnly) count(col(vName))
+              else aggOf(a, col(vName)("v"))).as(a.aName))
+        // count counts the inner-side marker so unmatched rows stay at 0
+        case (false, false) => perOuter(aggOf(a,
+          if (a.countOnly) col(s"$ib.$mark") else valueOf(a, envX, iRow)))
       }
-      // Binder types for every compile below — the chain's element type
-      // (coreT), the flatmap body's element type (flatT, synthesized with
-      // BOTH binders in scope), and the type feeding the projection layer
-      // (projInT). Threading these through keeps order/boxing decisions
-      // (CanonOrder keys, nested-option boxing) type-directed inside
-      // decorrelated bodies instead of silently falling back to the
-      // legacy encodings when a body reads the outer row.
-      val coreT = synthElem(pe.core, env)
-      def synthWith(e: Expr, extra: (String, Option[FType])*): Option[FType] =
-        try Some(TypeCheck.synthesize(e,
-          env.varTypes ++ xT.map(x -> _) ++
-            extra.collect { case (n, Some(t)) => n -> t },
-          env.storeTypes))
-        catch { case scala.util.control.NonFatal(_) => None }
-      val flatT: Option[FType] = pe.flat.flatMap { case (fb, fbody) =>
-        synthWith(fbody, fb -> coreT).flatMap(elemTypeOf)
-      }
-      val projInT = if (pe.flat.isDefined) flatT else coreT
-      // element/value type of the node's source chain after the optional
-      // projection layer — the array path's element type, and the scalar
-      // ACI fold's result type
-      val valT: Option[FType] = pe.proj match {
-        case Some((pb, pv)) =>
-          projInT.flatMap(bt => synthWith(pv, pb -> Some(bt)))
-        case None => projInT
-      }
-      val keyPairs = sp.keyPairs
-      val outerOnly = sp.outerOnly
-      var inner = innerDF
-      sp.residual.reverse.foreach { case (b, p) =>
-        inner = inner.filter(asCV(compile(p,
-          env.bindRowTyped(b, CV(rowStruct(inner)), coreT))))
-      }
-      val kName = (j: Int) => s"__k${id}_${i}_$j"
-      val vName = s"__v${id}_$i"
-      val aName = s"__agg${id}_$i"
-      // GATE-ONLY correlation: every correlated conjunct is outer-only
-      // (a CASE gate) and neither the projection nor a flatmap body
-      // references the outer row — the per-outer-row value is ONE global
-      // aggregate over the residual-filtered inner, gated per row. One
-      // aggregation job, a one-row broadcast join, no outer-side shuffle
-      // (the reference nested-loops the identical per-row computation,
-      // Interpret.v:273-299 — its result is row-independent by the same
-      // argument).
-      val untied = sp.keyPairs.isEmpty && sp.mixed.isEmpty &&
-        !pe.proj.exists(p => Rewrites.freeVars(p._2).contains(x)) &&
-        pe.flat.isEmpty
-      // count/length never look at the element value; sum/min/max take the
-      // peeled projection's value, or the single `value` column of a
-      // scalar-element table
-      val countOnly = node match {
-        case EACFold(AGCount, _) | EUnop(OLength, _) => true
-        case _ => false
-      }
-      def aggOf(v: Column): Column = node match {
-        case EACFold(AGSum, _) => tierSum(v, env)
-        case EACFold(AGCount, _) | EUnop(OLength, _) => count(v)
-        case EACIFold(AGMin, _) => min(v)
-        case EACIFold(AGMax, _) => max(v)
-        case _ => throw new IllegalStateException("non-aggregate node")
-      }
-      // shared machinery of the distinct-outer paths (join-then-
-      // reaggregate and per-row array collection): the inner joins the
-      // DISTINCT outer rows on the full predicate, aggregates per outer
-      // row, and the result joins back onto the chain by null-safe
-      // equality on every (renamed) outer column
-      val lo = s"__cao${id}_$i"
-      val ib = s"__cai${id}_$i"
-      val mark = s"__cm${id}_$i"
-      lazy val oa = df.dropDuplicates().alias(lo)
-      lazy val oRow = qualifiedRow(df.columns, lo)
-      lazy val ia = inner.withColumn(mark, lit(1L)).alias(ib)
-      lazy val iRow = qualifiedRow(inner.columns, ib)
-      def posPredConjs: List[Column] =
-        sp.mixed.map { case (b, c) =>
-          asCV(compile(c, env.bindRowTyped(x, CV(oRow), xT)
-            .bindRowTyped(b, CV(iRow), coreT)))
-        } ++ keyPairs.map { case (oe, (b, ie)) =>
-          asCV(compile(oe, env.bindRowTyped(x, CV(oRow), xT))) <=>
-            asCV(compile(ie, env.bindRowTyped(b, CV(iRow), coreT)))
-        }
-      val okName = (c: String) => s"__oc${id}_${i}_$c"
-      def perOuter(aggCol: Column): DataFrame =
-        oa.join(ia, posPredConjs.reduceOption(_ && _).getOrElse(lit(true)),
-          "left")
-          .groupBy(df.columns.map(c => col(s"$lo.$c")).toIndexedSeq: _*)
-          .agg(aggCol.as(aName))
-          .toDF((df.columns.map(okName) :+ aName).toIndexedSeq: _*)
-      // Correlated-FLATMAP source: each joined (outer, inner) pair carries
-      // the body's whole array (elements pre-wrapped in a one-field struct,
-      // null for an unmatched left-join row); explode the arrays between
-      // the join and the per-outer aggregation. explode_outer keeps outer
-      // rows whose every pair-array is empty (count 0 / sum 0 / min null).
-      def perOuterFlat(wrappedArr: Column, agg: Column => Column): DataFrame =
-        oa.join(ia, posPredConjs.reduceOption(_ && _).getOrElse(lit(true)),
-          "left")
-          .select(df.columns.map(c => col(s"$lo.$c").as(okName(c))) :+
-            explode_outer(wrappedArr).as(vName): _*)
-          .groupBy(df.columns.map(c => col(okName(c))).toIndexedSeq: _*)
-          .agg(agg(col(vName)).as(aName))
-      // the per-(outer,inner)-pair wrapped body array of a flat peel: the
-      // flatmap body with both rows in scope, each element run through the
-      // optional projection layer above the flatmap, wrapped so genuine
-      // null elements survive counting and unmatched rows drop out
-      def flatWrappedArr(fb: String, fbody: Expr, pe: PeeledSrc): Column = {
-        val arr0 = asCV(compile(fbody,
-          env.bindRowTyped(x, CV(oRow), xT).bindRowTyped(fb, CV(iRow),
-            coreT)))
-        val arr = pe.proj match {
-          case Some((pb, pv)) => transform(arr0, e =>
-            asCV(compile(pv, env.bindRowTyped(x, CV(oRow), xT)
-              .bindTyped(pb, CV(e), flatT))))
-          case None => arr0
-        }
-        when(col(s"$ib.$mark").isNotNull,
-          transform(arr, e => struct(e.as("v"))))
-      }
-      def joinBack(aggDF: DataFrame): Unit = {
-        val cond = df.columns.map(c => col(s"$la.$c") <=> col(okName(c)))
-          .reduce(_ && _)
-        joined = joined.join(aggDF, cond, "left")
-          .drop(df.columns.map(okName).toIndexedSeq: _*)
-      }
-      def gateCol: Option[Column] = outerOnly match {
-        case Nil => None
-        case os => Some(os.map(o =>
-          asCV(compile(o, env.bindTyped(x, CV(outerRow), xT))))
-          .reduce(_ && _))
-      }
-      val name = s"__cagg_${id}_$i"
-      if (takesArrayPath(node, pe)) {
-        // PER-ROW ARRAY (sequential/ordered consumers — EFold/ESort
-        // over a correlated table): collect the matched elements per
-        // outer row into a canonically-sorted array, then rewrite the
-        // node to consume the array — ESort becomes the array itself,
-        // EFold folds it through the existing nested-array path. The sort
-        // runs in REFERENCE order: the chain's value type synthesizes
-        // from PeeledSrc's exprs (core element type through the optional
-        // flatmap/projection layers), so word/bag elements take the
-        // CanonOrder key; an unsynthesizable type (e.g. a projection
-        // reading the outer row, whose type this level doesn't know)
-        // falls back to the raw struct order — exact for word-free,
-        // bag-free elements. Elements ride in a one-field wrapper struct
-        // so a genuine null value (None) survives collect_list's
-        // null-dropping while unmatched left-join rows (null marker) are
-        // dropped.
-        val wrapT = valT.map(t => TRecord(List("v" -> t)))
-        def canonArr(c: Column): Column =
-          CanonOrder.sortArray(c, wrapT, env.wordWidth)
-        if (untied) {
-          // gate-only: ONE global canonical array over the inner —
-          // every outer row shares it; the gate below empties it per row
-          val vCol = pe.proj match {
-            case Some((pb, pv)) => asCV(compile(pv,
-              env.bindRowTyped(pb, CV(rowStruct(inner)), projInT)))
-            case None => rowStruct(inner)
-          }
-          val aggDF = inner.agg(
-            canonArr(collect_list(struct(vCol.as("v")))).as(aName))
-          joined = joined.crossJoin(broadcast(aggDF))
-        } else if (keyPairs.nonEmpty && sp.mixed.isEmpty && !projRefsX &&
-            pe.flat.forall { case (_, fbody) =>
-              !Rewrites.freeVars(fbody).contains(x) }) {
-          // KEYED ARRAY COLLECTION (pure equi-correlation): collect each
-          // key's canonical array once — map-side partials, key-sized
-          // shuffle — and left-join the per-key arrays onto the outer.
-          // The distinct-outer theta-join path below re-shuffles on EVERY
-          // outer column and plants one distinct(outer) subtree per node,
-          // whose raced AQE stage reuse made bench job counts
-          // nondeterministic across reps (q_lang_corr_zip [11,12]); the
-          // keyed plan shuffles only the inner, keyed by the equi-keys —
-          // the plan a 1000-executor run wants.
-          val innerKeyCols = keyPairs.zipWithIndex.map { case ((_, (b, ie)), j) =>
-            asCV(compile(ie, env.bindRowTyped(b, CV(rowStruct(inner)),
-              coreT))).as(kName(j))
-          }
-          // per-inner-row wrapped element array: one element for a chain
-          // row, the flatmap body's whole array for a flat source (x-free
-          // by the guard above); flatten(collect_list) unifies the two
-          val rowArr = pe.flat match {
-            case Some((fb, fbody)) =>
-              val arr0 = asCV(compile(fbody,
-                env.bindRowTyped(fb, CV(rowStruct(inner)), coreT)))
-              val arr = pe.proj match {
-                case Some((pb, pv)) => transform(arr0, e =>
-                  asCV(compile(pv, env.bindTyped(pb, CV(e), flatT))))
-                case None => arr0
-              }
-              transform(arr, e => struct(e.as("v")))
-            case None =>
-              val vCol = pe.proj match {
-                case Some((pb, pv)) => asCV(compile(pv,
-                  env.bindRowTyped(pb, CV(rowStruct(inner)), projInT)))
-                case None => rowStruct(inner)
-              }
-              array(struct(vCol.as("v")))
-          }
-          val sel = inner.select(innerKeyCols :+ rowArr.as(vName): _*)
-          val aggDF = sel
-            .groupBy(keyPairs.indices.map(j => col(kName(j))): _*)
-            .agg(canonArr(flatten(collect_list(col(vName)))).as(aName))
-          val joinPred = keyPairs.zipWithIndex.map { case ((oe, _), j) =>
-            asCV(compile(oe, env.bindTyped(x, CV(outerRow), xT))) <=>
-              col(kName(j))
-          }.reduce(_ && _)
-          // unmatched outer rows read an EMPTY array (the distinct-outer
-          // path's collect_list-of-nothing), not a null
-          val emptyArr = array().cast(aggDF.schema(aName).dataType)
-          joined = joined.join(aggDF, joinPred, "left")
-            .withColumn(aName, coalesce(col(aName), emptyArr))
-        } else if (keyPairs.nonEmpty && sp.mixed.nonEmpty && !projRefsX &&
-            pe.flat.isEmpty && rangeConjsOf(sp).isDefined) {
-          // KEYED RANGE ARRAY COLLECTION (r15, the ordered-consumer
-          // sibling of the merged keyed range scalar path): equi keys +
-          // outer-vs-inner OLess residues. Collect each key's
-          // (value, range-exprs) elements ONCE (map-side partials,
-          // key-sized shuffle), left-join the per-key arrays, evaluate
-          // the range predicate per element MAP-SIDE, and canonically
-          // sort the survivors per row — filter-then-sort yields exactly
-          // the distinct-outer path's sorted multiset without its
-          // per-node join-the-product plan (q_lang_corr_fold's shape).
-          val rngs = rangeConjsOf(sp).get
-          val innerKeyCols = keyPairs.zipWithIndex.map { case ((_, (b, ie)), j) =>
-            asCV(compile(ie, env.bindRowTyped(b, CV(rowStruct(inner)),
-              coreT))).as(kName(j))
-          }
-          val vCol = pe.proj match {
-            case Some((pb, pv)) => asCV(compile(pv,
-              env.bindRowTyped(pb, CV(rowStruct(inner)), projInT)))
-            case None => rowStruct(inner)
-          }
-          val elem = struct((vCol.as("v") +:
-            rngs.zipWithIndex.map { case ((_, b, ie, _), m) =>
-              asCV(compile(ie, env.bindRowTyped(b, CV(rowStruct(inner)),
-                coreT))).as(s"m$m")
-            }): _*)
-          val sel = inner.select(innerKeyCols :+ elem.as(vName): _*)
-          val aggDF = sel
-            .groupBy(keyPairs.indices.map(j => col(kName(j))): _*)
-            .agg(collect_list(col(vName)).as(aName))
-          val joinPred = keyPairs.zipWithIndex.map { case ((oe, _), j) =>
-            asCV(compile(oe, env.bindTyped(x, CV(outerRow), xT))) <=>
-              col(kName(j))
-          }.reduce(_ && _)
-          joined = joined.join(aggDF, joinPred, "left")
-          val outerSides = rngs.map { case (oe, _, _, _) =>
-            asCV(compile(oe, env.bindTyped(x, CV(outerRow), xT))) }
-          val emptyArr = array().cast(aggDF.schema(aName).dataType)
-          val matched = filter(coalesce(col(aName), emptyArr), e =>
-            rngs.zipWithIndex.map { case ((_, _, _, outerLeft), m) =>
-              if (outerLeft) outerSides(m) < e(s"m$m")
-              else e(s"m$m") < outerSides(m)
-            }.reduce(_ && _))
-          // strip the range fields back to the one-field wrapper, THEN
-          // canonical-sort — the shared read-back below expects the
-          // sorted wrapper array in aName
-          joined = joined.withColumn(aName,
-            canonArr(transform(matched, e => struct(e("v").as("v")))))
-        } else {
-          val collected = pe.flat match {
-            case Some((fb, fbody)) =>
-              // flatmap source: collect the per-pair arrays, flatten, and
-              // sort canonically — only order-safe consumers reach here
-              // (ESort itself, or EFold over an explicit ESort layer)
-              canonArr(flatten(collect_list(flatWrappedArr(fb, fbody, pe))))
-            case None =>
-              val vCol = pe.proj match {
-                case Some((pb, pv)) => asCV(compile(pv,
-                  env.bindRowTyped(x, CV(oRow), xT)
-                    .bindRowTyped(pb, CV(iRow), projInT)))
-                case None => iRow
-              }
-              canonArr(collect_list(
-                when(col(s"$ib.$mark").isNotNull, struct(vCol.as("v")))))
-          }
-          joinBack(perOuter(collected))
-        }
-        val ext = transform(col(aName), s => s("v"))
-        // an outer-only gate that fails means the correlated source is
-        // EMPTY for that row (fold yields its init; sort yields [])
-        val arrCol = gateCol match {
-          case None => ext
-          case Some(oc) => when(oc, ext).otherwise(slice(ext, lit(1), lit(0)))
-        }
-        // the bound array's ELEMENT type rides along so a LAYERED
-        // ESort re-sorting EVar(name) keys the same way
-        extraBinds ::= ((name, CV(arrCol), valT.map(TList(_))))
-        r2 = Rewrites.foldExpr(r2)(e0 => if (e0 == node) (pe.subst match {
-          // LAYERED shape: swap only the chain subtree for the array —
-          // the ESetOf/EBagOf/EProj/ESort layers above it compile as
-          // nested-collection ops over the per-row array
-          case Some(chain) =>
-            Rewrites.foldExpr(node)(n => if (n == chain) EVar(name) else n)
-          case None => node match {
-            case EFold(_, z, xv, accv, st) => EFold(EVar(name), z, xv, accv, st)
-            case _ => EVar(name) // ESort: already canonically sorted
-          }
-        }) else e0)
-      } else {
-        // the value column shared by the scalar strategies below
-        def scalarValueCol: Column =
-          if (countOnly) lit(1L)
-          else pe.proj match {
-            case Some((pb, pv)) =>
-              asCV(compile(pv,
-                env.bindRowTyped(pb, CV(rowStruct(inner)), projInT)))
-            case None => inner.col("value") // scalar-element table
-          }
-        if (untied) {
-          // gate-only: aggregate the residual-filtered inner ONCE (a
-          // global aggregation always yields exactly one row, empty input
-          // included) and broadcast the one-row result onto every outer
-          // row; the gate below turns it off per row
-          val aggDF = inner.select(scalarValueCol.as(vName))
-            .agg(aggOf(col(vName)).as(aName))
-          joined = joined.crossJoin(broadcast(aggDF))
-        } else if (sp.mixed.isEmpty && !projRefsX && pe.flat.isEmpty) {
-          // GROUPBY-THEN-JOIN (pure equi-correlation): aggregate the inner
-          // side per key — map-side partials, key-sized shuffle — and
-          // left-join the per-key aggregates onto the outer.
-          val innerKeyCols = keyPairs.zipWithIndex.map { case ((_, (b, ie)), j) =>
-            asCV(compile(ie, env.bindRowTyped(b, CV(rowStruct(inner)),
-              coreT))).as(kName(j))
-          }
-          val sel = inner.select(innerKeyCols :+ scalarValueCol.as(vName): _*)
-          val aggDF = sel.groupBy(keyPairs.indices.map(j => col(kName(j))): _*)
-            .agg(aggOf(col(vName)).as(aName))
-          val joinPred = keyPairs.zipWithIndex.map { case ((oe, _), j) =>
-            asCV(compile(oe, env.bindTyped(x, CV(outerRow), xT))) <=>
-              col(kName(j))
-          }.reduce(_ && _)
-          joined = joined.join(aggDF, joinPred, "left")
-        } else {
-          // JOIN-THEN-REAGGREGATE (non-equi / one-sided-equality
-          // correlation): left-join the inner onto the distinct outer rows
-          // on the FULL correlated predicate (equi conjuncts included,
-          // compiled through the normal null-safe OEq), aggregate per
-          // outer row, and join the per-row aggregates back onto the
-          // chain. Count counts the inner-side marker so unmatched outer
-          // rows stay at 0. The non-equi join is the honest distributed
-          // cost of this shape — Catalyst picks a broadcast nested-loop
-          // or range join; the reference nested-loop-interprets the very
-          // same product (Interpret.v:273-299).
-          pe.flat match {
-            case Some((fb, fbody)) =>
-              // flatmap source: the per-pair arrays explode between the
-              // product join and the per-outer aggregation — ACI
-              // aggregates never observe the emission order
-              joinBack(perOuterFlat(flatWrappedArr(fb, fbody, pe),
-                v => if (countOnly) count(v) else aggOf(v("v"))))
-            case None =>
-              val vCol =
-                if (countOnly) col(s"$ib.$mark")
-                else pe.proj match {
-                  case Some((pb, pv)) => asCV(compile(pv,
-                    env.bindRowTyped(x, CV(oRow), xT)
-                      .bindRowTyped(pb, CV(iRow), projInT)))
-                  case None => col(s"$ib.value")
-                }
-              joinBack(perOuter(aggOf(vCol)))
-          }
-        }
-        val gated = tierAggRead(node, col(aName), gateCol, env)
-        // the hoisted scalar's type: count/sum/length are TInt; ACI folds
-        // carry the source value type, nullable (None on empty). When the
-        // source value type is ITSELF an option, the aggregated column is
-        // the raw unboxed nullable value — recording TOption(TOption(t))
-        // would declare the boxed struct("s") encoding and mislead
-        // downstream type-directed boxing, so record unknown instead
-        // (order decisions then safely degrade to the raw encoding).
-        val scalarT: Option[FType] = node match {
-          case EACFold(AGSum, _) | EACFold(AGCount, _) |
-               EUnop(OLength, _) => Some(TInt)
-          case EACIFold(_, _) => valT match {
-            case Some(TOption(_)) => None
-            case other => other.map(TOption(_))
-          }
-          case _ => None
-        }
-        extraBinds ::= ((name, CV(gated), scalarT))
-        r2 = Rewrites.foldExpr(r2)(e0 => if (e0 == node) EVar(name) else e0)
-      }
+      joined = joined.join(aggDF,
+        outerCols.map(c => col(s"$la.$c") <=> col(okName(c))).reduce(_ && _),
+        "left").drop(outerCols.map(okName): _*)
+      if (a.collected) bindArray(a) else bindScalar(a, col(a.aName))
     }
     // x stays a ROW variable: any remaining table-level correlation on it
     // must trip assertUncorrelated, not silently mis-resolve

@@ -19,6 +19,7 @@ import graft.operators.{CompoIndex, DictIndex}
   */
 object IndexTransf {
   import Lang._
+  import Rewrites.children
 
   /** Run a command with automatic index introduction. Expressions are
     * normalized first so comprehension-written filters (`x <- t; check(p);
@@ -342,16 +343,4 @@ object IndexTransf {
 
   private def mentions(e: Expr, x: String): Boolean =
     e == EVar(x) || children(e).exists(mentions(_, x))
-
-  /** Generic child traversal over the case-class AST (covers ERecord's
-    * (name, expr) field list). */
-  private def children(e: Expr): Seq[Expr] =
-    e.asInstanceOf[Product].productIterator.flatMap {
-      case c: Expr => Seq(c)
-      case l: List[_] => l.collect {
-        case c: Expr => c
-        case (_, c: Expr) => c
-      }
-      case _ => Nil
-    }.toSeq
 }

@@ -492,7 +492,7 @@ object LangQueries {
     // join-then-reaggregate. The engine now collects each key's
     // (value, range-expr) elements once (key-sized shuffle), left-joins
     // the per-key arrays onto nation, and evaluates the range predicate +
-    // sum/count/min MAP-SIDE per row (Compiler "KEYED RANGE COLLECTION";
+    // sum/count/min MAP-SIDE per row (a keyed group with a range residue;
     // plan-guarded in PlanQualitySpec: no cartesian, no distinct-outer
     // exchange).
     GraftQuery.sql("q_lang_corr_rangekey",
@@ -547,8 +547,8 @@ object LangQueries {
       }.orderBy("n_nationkey")
     },
 
-    // AGGREGATES OVER CORRELATED FLATMAP SOURCES (round 10,
-    // Compiler.perOuterFlat): the aggregate's source is an EFlatmap whose
+    // AGGREGATES OVER CORRELATED FLATMAP SOURCES (round 10, the
+    // distinct-outer path of Compiler.unnestAggsOnce): the aggregate's source is an EFlatmap whose
     // per-(outer,inner)-pair BODY is an arbitrary array — a gated
     // two-element emission mixing both rows, and a data-dependent-length
     // ORange. The reference nested-loops the product and concatenates the
@@ -707,8 +707,8 @@ object LangQueries {
       compileProgram(prog, env).asInstanceOf[TV].df.orderBy("nat", "sup")
     },
 
-    // GATE-ONLY CORRELATED AGGREGATES (round 10 — Compiler.unnestAggsOnce
-    // `untied`): every correlated conjunct is an OUTER-ONLY gate — no
+    // GATE-ONLY CORRELATED AGGREGATES (round 10 — Compiler.unnestAggsOnce,
+    // a zero-key keyed group): every correlated conjunct is an OUTER-ONLY gate — no
     // predicate ties the outer and inner rows, so the per-row value the
     // reference nested-loops (Interpret.v:273-299) is row-INDEPENDENT
     // whenever the gate passes. The engine aggregates the residual-

@@ -47,6 +47,32 @@ object Rewrites {
     go(e)
   }
 
+  /** The direct sub-expressions of `e`, in field order (ERecord's field
+    * values included) — the one child traversal every generic walk uses. */
+  def children(e: Expr): Seq[Expr] = e match {
+    case EVar(_) | ELoc(_) | EAtom(_) => Nil
+    case EUnop(_, a) => Seq(a)
+    case EBinop(_, a, b) => Seq(a, b)
+    case ETernop(_, a, b, c) => Seq(a, b, c)
+    case EIf(c, t, f) => Seq(c, t, f)
+    case ELet(a, _, b) => Seq(a, b)
+    case ERecord(fs) => fs.map(_._2)
+    case EAccess(r, _) => Seq(r)
+    case EOptMatch(a, n, _, s) => Seq(a, n, s)
+    case EDictFold(d, z, _, _, _, s) => Seq(d, z, s)
+    case ESort(_, l) => Seq(l)
+    case EFilter(_, l, _, p) => Seq(l, p)
+    case EJoin(_, l1, l2, _, _, p, r) => Seq(l1, l2, p, r)
+    case EProj(_, l, _, r) => Seq(l, r)
+    case EFlatmap(_, a, _, b) => Seq(a, b)
+    case EFlatmap2(a, b, _, _, c) => Seq(a, b, c)
+    case EFold(l, z, _, _, s) => Seq(l, z, s)
+    case EACFold(_, a) => Seq(a)
+    case EACIFold(_, a) => Seq(a)
+    case EBagOf(l) => Seq(l)
+    case ESetOf(l) => Seq(l)
+  }
+
   private object Singleton {
     /** `[r]` = cons(r, nil) (how `ret r` desugars, Notations.v:144-149). */
     def unapply(e: Expr): Option[Expr] = e match {

@@ -68,15 +68,7 @@ object ToSql {
   /** Every table location an expression reads. */
   private def locs(e: Expr): Set[String] = {
     val here = e match { case ELoc(t) => Set(t); case _ => Set.empty[String] }
-    here ++ e.asInstanceOf[Product].productIterator.flatMap {
-      case c: Expr => locs(c)
-      case l: List[_] => l.flatMap {
-        case c: Expr => locs(c)
-        case (_, c: Expr) => locs(c)
-        case _ => Nil
-      }
-      case _ => Nil
-    }
+    here ++ Rewrites.children(e).flatMap(locs)
   }
 
   /** Extract a table-valued expression to a standalone SQL query. */

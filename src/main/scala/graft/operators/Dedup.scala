@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.core.{GraftQuery, Tables}
 
 /** Deduplication for training-data pipelines: exact (hash group-by), n-gram
@@ -136,6 +137,9 @@ object Dedup {
     */
   private[graft] def jaccardPairs(dsets: DataFrame,
       maxDocFreq: Int = maxShingleDocFreq): DataFrame = {
+    require(dsets.storageLevel != StorageLevel.NONE,
+      "jaccardPairs needs a cached dsets: its eager hot-shingle probe and " +
+        "the lazy pair plan must read the same data")
     val sh = dsets.select(col("doc_id"), explode(col("ss")).as("s"))
     val sizes = dsets.select(col("doc_id"), size(col("ss")).as("n"))
     val ds = col("ds")
@@ -145,11 +149,11 @@ object Dedup {
     // the adaptive probe: does ANY shingle exceed the cap? One skinny
     // (s)-keyed count — no arrays, no pairs (see class doc). NB the probe
     // runs EAGERLY here while the returned frame is lazy: callers must
-    // pass a materialized/cached (or otherwise deterministic) dsets so
-    // the probe and the executed plan see the same data — an uncached
-    // non-deterministic input could cross the cap between probe and
-    // execution and silently deflate Jaccard values. All in-repo callers
-    // cache/seal dsets first (cachedShingleSets / PipelineFull).
+    // pass a cached dsets (checked on entry) so the probe and the executed
+    // plan see the same data — an uncached non-deterministic input could
+    // cross the cap between probe and execution and silently deflate
+    // Jaccard values. Every caller caches dsets first (cachedShingleSets,
+    // or an explicit cache() + count()).
     val anyHot = !sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
       .filter(col("df") > maxDocFreq).isEmpty
     // Scale-adaptive partitioning for the two pair-space exchanges (r17,

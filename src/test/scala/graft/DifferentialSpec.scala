@@ -1066,7 +1066,7 @@ class DifferentialSpec extends AnyFunSuite
 
   test("mixed correlated aggregates and folds in one body unnest together") {
     // One projection body holding all three unnesting paths at once — an
-    // equi-keyed aggregate (groupBy-then-join), a non-equi aggregate
+    // equi-keyed aggregate (keyed groupBy), a non-equi aggregate
     // (join-then-reaggregate on distinct outer rows), and an ordered fold
     // (per-row canonical array) — so the chain of left joins over one
     // outer is exercised with heterogeneous per-node plans.
@@ -1117,6 +1117,92 @@ class DifferentialSpec extends AnyFunSuite
           assert(cmpValues(got, want) == 0,
             s"[mixed case $i]\ncompiled=$got\nreference=$want\n${show(prog)}")
         case CV(_) => fail(s"[mixed case $i] compiled to a scalar")
+      }
+    }
+  }
+
+  test("keyed groups: several aggregates over one keyed inner side == reference, narrow and bignum tiers") {
+    // 2-4 aggregates of mixed kinds (count, sum, min, max, a fold or a
+    // sort) in ONE projection, all correlated on the same key with — per
+    // case — the same inner-only residual and range residue, each under
+    // its own binders. Those nodes share keyed groups (one groupBy per
+    // element shape); per-node outer-only gates and range directions
+    // vary without splitting a group, so every node's read-back from the
+    // shared aggregate is checked against the reference nested loops
+    // (Interpret.v:273-299), on the narrow and the bignum TInt tiers.
+    import graft.functions.BigIntOps
+    import org.apache.spark.sql.functions.col
+    val outT = TRecord.sorted("k" -> TInt, "s" -> TString)
+    val inT = TRecord.sorted("k" -> TInt, "v" -> TInt)
+    val rnd0 = new Random(9100)
+    val t1Rows = {
+      val base = Vector.fill(9)(genValue(outT, rnd0))
+      base ++ base.take(2)
+    }
+    val t2Rows = Vector.fill(14)(genValue(inT, rnd0))
+    val d1 = tableDF(t1Rows, outT)
+    val d2 = tableDF(t2Rows, inT)
+    def big(df: org.apache.spark.sql.DataFrame) = df.select(df.columns.map(c =>
+      if (c == "s") col(c) else BigIntOps.fromLong(col(c)).as(c)).toIndexedSeq: _*)
+    val storeT = Map("t1" -> TList(outT), "t2" -> TBag(inT))
+    val tiers = Seq(
+      "narrow" -> Env(Map.empty, Map("t1" -> d1, "t2" -> d2), spark,
+        storeTypes = storeT),
+      "bigInt" -> Env(Map.empty, Map("t1" -> big(d1), "t2" -> big(d2)), spark,
+        bigInt = true, storeTypes = storeT))
+    val renv = REnv("t1" -> VList(t1Rows), "t2" -> VBag(sortedV(t2Rows)))
+    def xk = EAccess(EVar("x"), "k")
+    for (i <- 0 until 16) {
+      val rnd = new Random(9200 + i)
+      val parity = rnd.nextBoolean()
+      val residual = rnd.nextBoolean()
+      val range = rnd.nextBoolean()
+      def pred(b: String): Expr = {
+        def bf(f: String) = EAccess(EVar(b), f)
+        val key =
+          if (parity) EBinop(OEq, EBinop(OMod, bf("k"), EAtom(AInt(2))),
+            EBinop(OMod, xk, EAtom(AInt(2))))
+          else EBinop(OEq, bf("k"), xk)
+        val conjs = Vector(key) ++
+          (if (residual) Vector(EBinop(OLess, bf("v"), EAtom(AInt(4))))
+           else Vector.empty) ++
+          (if (!range) Vector.empty
+           else if (rnd.nextBoolean()) Vector(EBinop(OLess, bf("v"), xk))
+           else Vector(EBinop(OLess, xk, bf("v")))) ++
+          (if (rnd.nextInt(3) == 0) Vector(EBinop(OLess, EAtom(AInt(-2)), xk))
+           else Vector.empty)
+        conjs.reduce((a, c) => EBinop(OAnd, a, c))
+      }
+      val fields = (0 until 2 + rnd.nextInt(3)).map { j =>
+        val b = s"gb${i}_$j"; val pb = s"gp${i}_$j"
+        val filtered = EFilter(LikeBag, ELoc("t2"), b, pred(b))
+        val vals = EProj(LikeBag, filtered, pb, EAccess(EVar(pb), "v"))
+        val (node, t) = rnd.nextInt(6) match {
+          case 0 => (EUnop(OLength, filtered), TInt)
+          case 1 => (EACFold(AGSum, vals), TInt)
+          case 2 => (EACIFold(AGMin, vals), TOption(TInt))
+          case 3 => (EACIFold(AGMax, vals), TOption(TInt))
+          case 4 =>
+            val (e, a) = (s"ge${i}_$j", s"ga${i}_$j")
+            (EFold(ESort(LikeList, vals), xk, e, a,
+              EBinop(OMinus, EVar(e), EVar(a))), TInt)
+          case _ => (ESort(LikeList, vals), TList(TInt))
+        }
+        (s"g$j", node, t: FType)
+      }
+      val prog = EProj(LikeList, ELoc("t1"), "x", ERecord(
+        ("k" -> xk) :: fields.map(f => f._1 -> f._2).toList))
+      val elemT = TRecord.sorted(
+        (("k" -> (TInt: FType)) +: fields.map(f => f._1 -> f._3)): _*)
+      val want = sortedV(elems(interp(prog, renv)))
+      tiers.foreach { case (tier, env) =>
+        Compiler.compileProgram(prog, env) match {
+          case TV(df) =>
+            val got = collectTable(df, elemT)
+            assert(cmpValues(got, want) == 0,
+              s"[keyed group case $i, $tier]\ncompiled=$got\nreference=$want\n${show(prog)}")
+          case CV(_) => fail(s"[keyed group case $i, $tier] compiled to a scalar")
+        }
       }
     }
   }
@@ -1501,7 +1587,7 @@ class DifferentialSpec extends AnyFunSuite
     // (outer × inner) product and concatenates the body arrays
     // (Interpret.v:273-299); the engine joins the DISTINCT outer rows to
     // the inner side and EXPLODES the per-pair arrays before the per-outer
-    // aggregation (Compiler.perOuterFlat), or flattens+sorts them for the
+    // aggregation (the distinct-outer path), or flattens+sorts them for the
     // ESort / EFold-over-ESort consumers. Shapes: gated two-element
     // emissions, ORange bodies (data-dependent length), unconditional
     // mixed-row pairs, y-only bodies over correlated chains; with and
@@ -2012,8 +2098,8 @@ class DifferentialSpec extends AnyFunSuite
     // reference's per-row nested loop (Interpret.v:273-299) computes a
     // row-INDEPENDENT aggregate whenever the gate passes, so the engine
     // now aggregates the residual-filtered inner ONCE and broadcasts the
-    // one-row result, gating per outer row (Compiler.unnestAggsOnce
-    // `untied`). Shapes: 1-2 stacked gates × optional inner-only residual
+    // one-row result, gating per outer row (Compiler.unnestAggsOnce's
+    // zero-key keyed group). Shapes: 1-2 stacked gates × optional inner-only residual
     // filter × optional uncorrelated projection × consumers LENGTH / SUM /
     // COUNT / MIN / MAX / ESort / EFold(ESort) / LENGTH(ESetOf) /
     // SUM(EBagOf). All 54 seeds must be supported-and-correct.
@@ -2152,7 +2238,7 @@ class DifferentialSpec extends AnyFunSuite
           case 2 => EBinop(OLess, cu, yb("w")) // non-equi on the right
           case 3 => // computed BOTH-binder equi key
             EBinop(OEq, ck, EBinop(OPlus, xa("k"), yb("k")))
-          case _ => // gate-only on the left binder (untied broadcast path)
+          case _ => // gate-only on the left binder (zero-key broadcast group)
             EBinop(OEq, EBinop(OMod, xa("k"), EAtom(AInt(2))),
               EAtom(AInt(0)))
         }
@@ -2270,7 +2356,7 @@ class DifferentialSpec extends AnyFunSuite
         case 2 => EBinop(OEq, ck, EBinop(OPlus, ja("k"), jb("k")))
         case 3 => // MIXED outer+leg tie
           EBinop(OEq, ck, EBinop(OPlus, ja("k"), xf("k")))
-        case _ => // gate-only on leg 1 (untied broadcast path)
+        case _ => // gate-only on leg 1 (zero-key broadcast group)
           EBinop(OEq, EBinop(OMod, ja("k"), EAtom(AInt(2))), EAtom(AInt(0)))
       }
       val chain = EFilter(LikeList, ELoc("t2"), cb, tie)

@@ -39,7 +39,7 @@ class OperatorsSpec extends AnyFunSuite {
       (100L, "p q r s t u v w x y z aaa bbb ccc"),
       (101L, "p q r s t u v w x y z aaa bbb cccX"))
     val docs = (hotDocs ++ nearDup).toDF("doc_id", "text")
-    val dsets = Dedup.shingleSets(docs)
+    val dsets = Dedup.shingleSets(docs).cache()
     // uncapped: the hot shingle alone connects all C(8,2)=28 hot-doc pairs
     val uncapped = Dedup.jaccardPairs(dsets, maxDocFreq = Int.MaxValue)
     assert(uncapped.count() >= 28 + 1)
@@ -51,6 +51,7 @@ class OperatorsSpec extends AnyFunSuite {
     val pairs = capped.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs === Set((100L, 101L)))
     assert(Dedup.jaccardPairs(dsets, maxDocFreq = 4).count() < 28)
+    dsets.unpersist()
   }
 
   test("IVF ANN produces well-formed per-query rankings from probed cells") {

@@ -386,9 +386,9 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("non-equi correlated aggregates join on the equi conjunct, never cartesian") {
-    // q_lang_corr_nonequi now takes the MERGED KEYED RANGE COLLECTION
-    // path (r15): the parity equi conjunct keys ONE per-key collect_list
-    // (map-side partials) shared by all THREE aggregates; the range
+    // q_lang_corr_nonequi is keyed with a range residue: the parity equi
+    // conjunct keys ONE per-key collect_list (map-side partials) shared
+    // by all THREE aggregates; the range
     // residue (s_nationkey < n_nationkey) and the count/sum/min evaluate
     // map-side after a single keyed left join. A CartesianProduct — or a
     // distinct-outer exchange per aggregate — would be the all-pairs
@@ -430,7 +430,8 @@ class PlanQualitySpec extends AnyFunSuite {
 
   test("same-source flat-equi correlated aggregates merge into one groupBy") {
     // q_lang_corr_jsrc: len(join) and sum(join) over the SAME lifted join
-    // source must share ONE exploded frame and ONE key-grouped aggregate
+    // source (a keyed group of exploded flatmap elements) must share ONE
+    // exploded frame and ONE key-grouped aggregate
     // (r14: the previous two distinct-outer join subtrees raced their
     // broadcast materializations — nondeterministic job counts — and
     // doubled the shuffle work). The merged plan shows both partials in
@@ -446,9 +447,24 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(explodes <= 1, s"expected one shared explode, got $explodes:\n$p")
   }
 
+  test("same-source keyed count and sum share one partial aggregate") {
+    // q_lang_corr_agg: `ns` (count) and `ksum` (sum) correlate on the same
+    // supplier key with the same (empty) residual, so they form ONE keyed
+    // group — one partial aggregate computing both, one shuffle, one join.
+    // `maxeven` filters its inner side further and keeps its own group.
+    val p = plan("q_lang_corr_agg")
+    val merged = p.linesIterator.exists(l =>
+      l.contains("partial_count") && l.contains("partial_sum"))
+    assert(merged,
+      s"count+sum over the same keyed source must share one aggregate:\n$p")
+    val joins = p.linesIterator.count(l =>
+      l.contains("HashJoin") || l.contains("SortMergeJoin"))
+    assert(joins == 2, s"expected two keyed joins (shared + maxeven), got $joins:\n$p")
+  }
+
   test("correlated fold collects per-position arrays map-side, never cartesian") {
-    // q_lang_corr_fold (r15: the keyed range ARRAY path): ONE collection
-    // keyed by the parity expression — map-side partials, key-sized
+    // q_lang_corr_fold (a keyed, range-residue per-row array): ONE
+    // collection keyed by the parity expression — map-side partials, key-sized
     // shuffle — with the range residue and the canonical sort evaluated
     // map-side after a single keyed join. No distinct-outer exchange, no
     // per-outer product.

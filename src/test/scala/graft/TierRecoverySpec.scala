@@ -43,7 +43,7 @@ class TierRecoverySpec extends AnyFunSuite {
   }
 
   test("tierSum raises the DIRECTED overflow, not ANSI's bare long overflow") {
-    // the groupBy-then-join path on the narrow tier: one key's sum
+    // the keyed groupBy on the narrow tier: one key's sum
     // crosses 2^63 -> the directed message autoWide re-tiers on
     val t = Seq((1L, 5000000000000000000L), (1L, 5000000000000000000L),
       (2L, 7L)).toDF("k", "v")

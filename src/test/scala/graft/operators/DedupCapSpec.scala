@@ -30,8 +30,26 @@ class DedupCapSpec extends AnyFunSuite {
     8L -> "aaa bbb ccc k8a k8b k8c k8d k8e",
     9L -> "aaa bbb ccc k9a k9b k9c k9d k9e")
 
-  private def dsets = Dedup.shingleSets(
+  private def uncached = Dedup.shingleSets(
     docs.toDF("doc_id", "text").repartition(4))
+
+  // jaccardPairs requires a cached input; materialized here so no test's
+  // persisted-RDD bookkeeping sees the fixture's own cache appear
+  private lazy val dsets = {
+    val d = uncached.cache()
+    d.count()
+    d
+  }
+
+  private def cachedRelations(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.optimizedPlan.collect {
+      case m: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+        m.cacheBuilder
+    }.toSet
+
+  test("jaccardPairs refuses an uncached input") {
+    intercept[IllegalArgumentException](Dedup.jaccardPairs(uncached))
+  }
 
   test("the cap fires on this corpus (df of the boilerplate shingle > cap)") {
     val maxDf = dsets.select(explode($"ss").as("s"))
@@ -74,15 +92,15 @@ class DedupCapSpec extends AnyFunSuite {
     // cannot fire, jaccardPairs must take the original single-pipeline
     // plan — paying the recovery path's materializations anyway measured
     // 2-3x on the 27x jaccard family (uniform corpora have max df 25 vs
-    // cap 128). InMemoryRelation in the plan means the recovery branch
-    // leaked into the cold case.
+    // cap 128). A cached relation other than the input's own means the
+    // recovery branch leaked into the cold case.
     // (the hot path materializes via localCheckpoint, which never enters
     // the CacheManager — so no session-wide clearCache is needed here,
     // and other suites' cached fixtures survive parallel execution)
+    val input = cachedRelations(dsets) // the fixture's cache predates `before`
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val out = Dedup.jaccardPairs(dsets) // default cap 128 ≫ max df 9
-    assert(!out.queryExecution.optimizedPlan.toString
-        .contains("InMemoryRelation"),
+    assert(cachedRelations(out) == input,
       "cold-corpus jaccardPairs must not cache recovery intermediates")
     // values still exact vs brute force (the cold branch is the SAME
     // aggregation, minus the provably-empty recovery subtrees)
