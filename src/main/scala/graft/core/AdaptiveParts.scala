@@ -8,16 +8,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * The session-wide post-shuffle partition count (= local core count) is
   * right for the bench's small scale factors but lets per-task
-  * aggregation/sort state grow linearly with the corpus: measured at 81x in
-  * 4 partitions, the jaccard pair stages spilled 10 + 8.9 GB and
-  * q_salted_join's join stage 7.4 GB (METRICS_r17.txt) — the 27x->81x
-  * growth-exponent bend (e_tail 1.25-1.28, GROWTH_r17.txt). Deriving the
-  * count from the optimizer's sizeInBytes of the stage's input keeps
-  * per-partition bytes roughly constant at any scale. The lower clamp
-  * (defaultParallelism) keeps small-scale plans exactly as before — every
-  * in-repo derivation site measures under one target-size unit at sf0.1 —
-  * and the upper clamp bounds task overhead if an estimate is ever wildly
-  * wrong.
+  * aggregation/sort state grow linearly with the corpus. Deriving the
+  * count from the optimizer's sizeInBytes of the stage's input is meant
+  * to keep per-partition bytes roughly constant at any scale. The lower
+  * clamp (defaultParallelism) keeps small-scale plans exactly as before —
+  * every in-repo derivation site measures under one target-size unit at
+  * sf0.1 — and the upper clamp bounds task overhead if an estimate is
+  * ever wildly wrong.
+  *
+  * UNMEASURED: no committed artifact shows the spill this is meant to
+  * remove, nor a gain from it at 27x or 81x. The 32 MB target and the
+  * 96 MB onset below are design choices, not measurements; the mechanism
+  * stays only until a committed 27x/81x on/off run decides it.
   *
   * This is NOT the refuted blanket scaling: r15 measured data-proportional
   * `spark.sql.shuffle.partitions` at 81x as a regression (91.2 s vs 82.6 s
@@ -30,13 +32,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object AdaptiveParts {
 
-  /** Estimator bytes one post-shuffle partition should own. 32 MB: the
-    * measured spill onset on this harness sits between 67 MB/partition
-    * (27x salted join: no spill) and ~200 MB/partition (81x: GB-scale
-    * spill) of estimator bytes, and compressed/columnar input expands
-    * 3-5x in memory — 32 MB keeps the expanded working set well inside a
-    * task's execution-memory share without exploding the partition count
-    * at the top measurable scale (81x derives 27). */
+  /** Estimator bytes one post-shuffle partition should own (unmeasured;
+    * see the object doc). */
   val targetBytesPerPartition: Long = 32L << 20
 
   /** Partition count so each partition owns ~[[targetBytesPerPartition]]
@@ -48,19 +45,15 @@ object AdaptiveParts {
   }
 
   /** Onset for REPLACING a planner aggregate exchange with an explicit
-    * repartition: 96 MB/partition. The replacement costs the map-side
-    * partial aggregate (raw rows cross the exchange), so it must not
-    * engage until the partial-aggregate hash maps actually outgrow
-    * memory: measured on the jaccard pair space, 67 MB/partition (27x at
-    * 4 parts) carries only mild spill and the old partial-agg plan is
-    * FASTER (27x A/B: widening at 32 MB onset measured 1.14-1.22x), while
-    * ~200 MB/partition (81x at 4 parts) spills 10+9 GB and widening wins.
-    * 96 MB sits past the measured-fine point and before the cliff. */
+    * repartition: 96 MB/partition (unmeasured; see the object doc). The
+    * replacement costs the map-side partial aggregate (raw rows cross the
+    * exchange), so it must not engage until the partial-aggregate hash
+    * maps outgrow memory, which is why the onset sits above the target. */
   val widenOnsetBytesPerPartition: Long = 96L << 20
 
   /** Some(width) when `bytes` is past the widen onset for this session's
     * parallelism — i.e. only when per-partition state at the default
-    * width would sit in the measured spill regime; None keeps the
+    * width would pass the onset; None keeps the
     * planner's own exchange (with its map-side partial aggregate). The
     * returned width still targets [[targetBytesPerPartition]]. */
   def widthPastOnset(s: SparkSession, bytes: BigInt): Option[Int] = {

@@ -140,7 +140,8 @@ object Compiler {
     *
     * `run` receives the tier's Env (`wideInt`/`bigInt` per tier) and must
     * (a) rebuild any TInt store columns for the tier's type — Long vs
-    * Decimal(38,0) vs canonical bytes (BigIntOps.fromLong) — and (b)
+    * Decimal(38,0) vs canonical bytes (BigIntOps.fromLong); `Store.bind`
+    * does this from a store declaration — and (b)
     * MATERIALIZE its result (run the action): an overflow that only
     * surfaces after this call returns is too late to re-tier.
     * Program-level entry points are eager anyway, like the reference
@@ -182,6 +183,32 @@ object Compiler {
       try { df.count(); df }
       catch { case t: Throwable => df.unpersist(blocking = false); throw t }
     }
+
+  /** A program's store, declared once per table: the columns it loads, in
+    * load order, with their fiat2 types. The one declaration gives both
+    * the store types a program is checked against and, for whichever tier
+    * runs, the store frames — contract (a) of `autoWide`. */
+  final case class Store(tables: (String, Seq[(String, FType)])*) {
+    /** Each table as a bag of its declared records. */
+    def types: Map[String, FType] = tables.map { case (t, cols) =>
+      t -> (TBag(TRecord.sorted(cols: _*)): FType) }.toMap
+
+    /** `env` with each declared table loaded from `dir` and narrowed to its
+      * columns. A TInt column takes the tier's representation, as
+      * `sparkType` decides it: Long, Decimal(38,0), or BigIntOps bytes;
+      * every other column loads as stored. */
+    def bind(env: Env, dir: String): Env = env.copy(store = tables.map {
+      case (t, cols) => t -> graft.core.Tables.load(env.spark, dir, t)
+        .select(cols.map {
+          case (c, TInt) => (sparkType(TInt, env.wideInt, env.wordWidth,
+              env.bigInt) match {
+            case BinaryType => BigIntOps.fromLong(col(c).cast(LongType))
+            case dt => col(c).cast(dt)
+          }).as(c)
+          case (c, _) => col(c)
+        }: _*)
+    }.toMap)
+  }
 
   private lazy val tierLog = org.slf4j.LoggerFactory.getLogger("graft.tint")
 
@@ -696,15 +723,14 @@ object Compiler {
     * expression goes, Interpret.v:273-299): LEFT-join the per-key
     * aggregates on, evaluate the rewritten predicate, and project the
     * outer row back out. The left join is key-grouped so it never
-    * duplicates outer rows — filter cardinality semantics survive. Each
-    * aggregate keeps its own keyed group here: one shared join would let
-    * Catalyst turn it into an inner join as soon as one conjunct rejects
-    * no-match rows (`count > 0`), and PlanQualitySpec pins the per-node
-    * left-join form of q_lang_corr_filter and q_lang_corr_filter_big. */
+    * duplicates outer rows — filter cardinality semantics survive.
+    * Aggregates group as in a projection; when a conjunct rejects
+    * no-match rows (`count > 0`), Catalyst turns the shared left join
+    * into an inner one. */
   private def filterCorrelatedAggs(df: DataFrame, x: String, p: Expr,
       env: Env, xT: Option[FType]): Val = {
     val ((joined, benv, p2), la) =
-      unnestCorrelatedAggs(df, x, p, env, xT, shareGroups = false)
+      unnestCorrelatedAggs(df, x, p, env, xT)
     val kept = joined.filter(asCV(compile(p2, benv)))
     TV(kept.select(df.columns.map(c => col(s"$la.$c").as(c)): _*))
   }
@@ -750,7 +776,7 @@ object Compiler {
     * outer-row field accesses, and go again. The final round returns the
     * usual (joined, benv, rewritten) triple. */
   private def unnestCorrelatedAggs(df: DataFrame, x: String, r: Expr,
-      env: Env, xT: Option[FType] = None, shareGroups: Boolean = true)
+      env: Env, xT: Option[FType] = None)
       : ((DataFrame, Env, Expr), String) = {
     var curDf = df; var curR = r; var curXT = xT
     var rounds = 0
@@ -760,7 +786,7 @@ object Compiler {
       val nested = inner.toSet != nodes.toSet
       val ((joined, benv, r2), la) =
         unnestAggsOnce(curDf, x, curR, env, if (nested) inner else nodes,
-          curXT, shareGroups)
+          curXT)
       if (!nested) return ((joined, benv, r2), la)
       rounds += 1
       val newVars = (benv.vars.keySet -- env.vars.keySet) - x
@@ -914,8 +940,8 @@ object Compiler {
   }
 
   private def unnestAggsOnce(df: DataFrame, x: String, r: Expr,
-      env0: Env, only: List[Expr], xT: Option[FType],
-      shareGroups: Boolean): ((DataFrame, Env, Expr), String) = {
+      env0: Env, only: List[Expr], xT: Option[FType])
+      : ((DataFrame, Env, Expr), String) = {
     // join-source / scalar-land lifts extend the env with canonical-array
     // binds; every compile below must see them
     var env = env0
@@ -1232,8 +1258,7 @@ object Compiler {
     // same plan, hence the canonicalized signature. The outer key
     // expressions are part of the identity (the group shares one join
     // predicate); outer RANGE sides and directions are not — each node
-    // applies its own residue map-side over the shared collection. With
-    // shareGroups off (filter predicates) every node is its own group.
+    // applies its own residue map-side over the shared collection.
     def keyedOk(a: Agg): Boolean = {
       val oneSided = !a.pe.proj.exists(p => Rewrites.freeVars(p._2).contains(x)) &&
         a.pe.flat.forall { case (_, fbody) => !Rewrites.freeVars(fbody).contains(x) }
@@ -1248,8 +1273,7 @@ object Compiler {
           innerKeys(a).zipWithIndex.map { case (c, j) => c.as(s"__sigk$j") } ++
             innerRanges(a).zipWithIndex.map { case (c, m) => c.as(s"__sigm$m") }
         val sig = a.inner.select(sigCols: _*).queryExecution.analyzed.canonicalized
-        Some(((sig, a.sp.keyPairs.map(_._1), a.collected, a.exploded,
-          if (shareGroups) -1 else a.i), a))
+        Some(((sig, a.sp.keyPairs.map(_._1), a.collected, a.exploded), a))
       } catch { case dec: CanonOrder.StrictOrderViolation => throw dec
         case scala.util.control.NonFatal(_) => None }
     }

@@ -1,64 +1,107 @@
 package graft.lang
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{GraftQuery, Tables}
 
-/** End-to-end programs written in the `Lang` AST, compiled by `Compiler` /
-  * run by `Interp`, proving the language layer against the same DuckDB
+/** End-to-end programs written in fiat2's notation (Notations.v:52-148, as
+  * `Parser` reads it), parsed once when `queries` is built, compiled by
+  * `Compiler` / run by `Interp`, and checked against the same DuckDB
   * oracles as the direct DataFrame queries.
   */
 object LangQueries {
   import Lang._
   import Compiler._
 
-  /** A TInt STORE column at the tier's representation — autoWideTable's
-    * contract gives the tier ownership of the store: Long on the narrow
-    * tier, Decimal(38,0) on the wide one, canonical bytes on bignum. The
-    * corr-family queries build their stores through this so a narrow-tier
-    * sum overflow (the directed error from Compiler.tierSum /
-    * Fiat2.checkedAdd) re-runs the SAME program exactly on the wider
-    * mapping (OVERFLOW_r14: q_lang_corr_nonequi crossed int64 at ~191x
-    * and used to ANSI-throw there). */
-  private def tint(c: org.apache.spark.sql.Column, env: Env) =
-    if (env.bigInt) graft.functions.BigIntOps.fromLong(c.cast("long"))
-    else if (env.wideInt) c.cast("decimal(38,0)")
-    else c.cast("long")
+  private val parsed =
+    Vector.newBuilder[(String, String, Either[Expr, Command])]
+
+  /** Parse `text`, an expression program of `query`, and register it. */
+  private def expr(query: String, text: String): Expr = {
+    val e = Parser.parseExpr(text)
+    parsed += ((query, text, Left(e)))
+    e
+  }
+
+  /** Parse `text`, a command program of `query`, and register it. */
+  private def command(query: String, text: String): Command = {
+    val c = Parser.parseCommand(text)
+    parsed += ((query, text, Right(c)))
+    c
+  }
+
+  private def rows(prog: Expr, env: Env): DataFrame =
+    compileProgram(prog, env).asInstanceOf[TV].df
+
+  /** A table program on the tiered TInt mapping (`autoWideTable`), its
+    * store bound for whichever tier runs. */
+  private def tiered(s: SparkSession, dir: String, prog: Expr, store: Store,
+      storeTypes: Map[String, FType] = Map.empty): DataFrame =
+    autoWideTable(Env(Map.empty, Map.empty, s, storeTypes = storeTypes)) {
+      env => rows(prog, store.bind(env, dir))
+    }
+
+  /** Whole tables, as stored. */
+  private def tables(s: SparkSession, dir: String,
+      names: String*): Map[String, DataFrame] =
+    names.map(n => n -> Tables.load(s, dir, n)).toMap
+
+  private def stringRow(s: SparkSession, name: String, v: String) =
+    s.createDataFrame(java.util.List.of(org.apache.spark.sql.Row(v)),
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField(name,
+          org.apache.spark.sql.types.StringType))))
+
+  /** The word-op battery over `t(k, w)`, with the width's own multiply
+    * constant and (past width 64) wrap-add constant. */
+  private def wordBattery(query: String, wm: Long, wa: Option[Long]): Expr = {
+    val prog = expr(query, s"""
+      mapBag (mut t) o { k : o[k],
+        du : wdivu(o[w], word(7)), ds : wdivs(o[w], word(-7)),
+        mu : wmodu(o[w], word(7)), ms : wmods(o[w], word(-7)),
+        dz : wdivu(o[w], word(0)), mz : wmods(o[w], word(0)),
+        wm : wmul(o[w], word($wm)),${wa.fold("")(v => s" wa : wadd(o[w], word($v)),")}
+        ult : wltu(o[w], word(100)), slt : wlts(o[w], word(100)) }""")
+    val words = Seq("du", "ds", "mu", "ms", "dz", "mz", "wm") ++ wa.map(_ => "wa")
+    require(TypeCheck.synthesize(prog, Map.empty,
+      Store("t" -> Seq("k" -> TInt, "w" -> TWord)).types) ==
+      TBag(TRecord.sorted(Seq("k" -> TInt, "ult" -> TBool, "slt" -> TBool) ++
+        words.map(_ -> TWord): _*)))
+    prog
+  }
 
   val queries: Seq[GraftQuery] = Seq(
 
-    // Ex_Employee (fiat2/src/fiat2/Ex_Employee.v:23-27) as an AST program:
-    // join suppliers to nations, project {emp,dept}, sort.
+    // Ex_Employee (fiat2/src/fiat2/Ex_Employee.v:23-27): join suppliers to
+    // nations, project {emp,dept}, sort.
     GraftQuery.sql("q_lang_employee",
       """SELECT s_name AS emp_name, n_name AS dept_name
         |FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |ORDER BY dept_name, emp_name""".stripMargin) { (s, dir) =>
-      val prog = ESort(LikeList, EJoin(LikeBag,
-        ELoc("supplier"), ELoc("nation"), "e", "d",
-        EBinop(OEq, EAccess(EVar("e"), "s_nationkey"),
-          EAccess(EVar("d"), "n_nationkey")),
-        ERecord(List(
-          "emp_name" -> EAccess(EVar("e"), "s_name"),
-          "dept_name" -> EAccess(EVar("d"), "n_name")))))
-      val env = Env(Map.empty, Map(
-        "supplier" -> Tables.load(s, dir, "supplier"),
-        "nation" -> Tables.load(s, dir, "nation")), s)
-      compile(prog, env).asInstanceOf[TV].df
+        |ORDER BY dept_name, emp_name""".stripMargin) {
+      val prog = expr("q_lang_employee", """
+        sort(joinBag (mut supplier) (mut nation) e d
+          (e[s_nationkey] == d[n_nationkey])
+          { emp_name : e[s_name], dept_name : d[n_name] })""")
+      (s, dir) => compile(prog,
+        Env(Map.empty, tables(s, dir, "supplier", "nation"), s))
+        .asInstanceOf[TV].df
     },
 
-    // filter → project → AC-fold sum as an AST program; the filter predicate
-    // reaches the parquet scan through the compiled plan.
+    // filter → project → AC-fold sum; the filter predicate reaches the
+    // parquet scan through the compiled plan.
     GraftQuery.sql("q_lang_agg",
       """SELECT CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS total_qty
-        |FROM lineitem WHERE l_returnflag = 'R'""".stripMargin) { (s, dir) =>
-      val prog = EACFold(AGSum, EProj(LikeBag,
-        EFilter(LikeBag, ELoc("lineitem"), "l",
-          EBinop(OEq, EAccess(EVar("l"), "l_returnflag"), EAtom(AString("R")))),
-        "l", EAccess(EVar("l"), "l_qty")))
-      val li = Tables.load(s, dir, "lineitem")
-        .select(col("l_returnflag"), col("l_quantity").cast("long").as("l_qty"))
-      val env = Env(Map.empty, Map("lineitem" -> li), s)
-      s.range(1).select(
-        asScalar(compile(prog, env)).cast("long").as("total_qty"))
+        |FROM lineitem WHERE l_returnflag = 'R'""".stripMargin) {
+      val prog = expr("q_lang_agg", """
+        sum(mapBag (filterBag (mut lineitem) l l[l_returnflag] == "R")
+          l l[l_qty])""")
+      (s, dir) => {
+        val li = Tables.load(s, dir, "lineitem")
+          .select(col("l_returnflag"), col("l_quantity").cast("long").as("l_qty"))
+        val env = Env(Map.empty, Map("lineitem" -> li), s)
+        s.range(1).select(
+          asScalar(compile(prog, env)).cast("long").as("total_qty"))
+      }
     },
 
     // UNBOUNDED TInt (Coq Z) through the opt-in wideInt mapping: TInt
@@ -72,15 +115,15 @@ object LangQueries {
     GraftQuery.sql("q_lang_wide_sum",
       """SELECT CAST(SUM(CAST(o_custkey AS HUGEINT) * 1000000000000000)
         |            AS VARCHAR) AS total
-        |FROM orders""".stripMargin) { (s, dir) =>
-      val prog = EACFold(AGSum, EProj(LikeBag, ELoc("orders"), "o",
-        EBinop(OTimes, EAccess(EVar("o"), "o_custkey"),
-          EAtom(AInt(1000000000000000L)))))
-      val orders = Tables.load(s, dir, "orders")
-        .select(col("o_custkey").cast("decimal(38,0)").as("o_custkey"))
-      val env = Env(Map.empty, Map("orders" -> orders), s, wideInt = true)
-      s.range(1).select(
-        asScalar(compile(prog, env)).cast("string").as("total"))
+        |FROM orders""".stripMargin) {
+      val prog = expr("q_lang_wide_sum",
+        "sum(mapBag (mut orders) o o[o_custkey] * 1000000000000000)")
+      val store = Store("orders" -> Seq("o_custkey" -> TInt))
+      (s, dir) => {
+        val env = store.bind(Env(Map.empty, Map.empty, s, wideInt = true), dir)
+        s.range(1).select(
+          asScalar(compile(prog, env)).cast("string").as("total"))
+      }
     },
 
     // AUTO-PROMOTION (tiered TInt): the SAME past-2^63 sum as
@@ -93,26 +136,17 @@ object LangQueries {
     GraftQuery.sql("q_lang_auto_widen",
       """SELECT CAST(SUM(CAST(o_custkey AS HUGEINT) * 1000000000000000)
         |            AS VARCHAR) AS total
-        |FROM orders""".stripMargin) { (s, dir) =>
-      val prog = EACFold(AGSum, EProj(LikeBag, ELoc("orders"), "o",
-        EBinop(OTimes, EAccess(EVar("o"), "o_custkey"),
-          EAtom(AInt(1000000000000000L)))))
-      val total = Compiler.autoWide(Env(Map.empty, Map.empty, s)) { env0 =>
-        // the tier owns the store: TInt table columns are Long on the
-        // narrow tier, Decimal(38,0) on the wide one
-        val orders = Tables.load(s, dir, "orders").select(
-          col("o_custkey").cast(
-            if (env0.wideInt) "decimal(38,0)" else "long").as("o_custkey"))
-        val env = env0.copy(store = Map("orders" -> orders))
-        // table AGSum is EAGER (the overflow surfaces inside the tier);
-        // render the scalar to a string driver-side
-        s.range(1).select(asScalar(compile(prog, env)).cast("string")
-          .as("total")).head().getString(0)
-      }
-      s.createDataFrame(java.util.List.of(org.apache.spark.sql.Row(total)),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("total",
-            org.apache.spark.sql.types.StringType))))
+        |FROM orders""".stripMargin) {
+      val prog = expr("q_lang_auto_widen",
+        "sum(mapBag (mut orders) o o[o_custkey] * 1000000000000000)")
+      val store = Store("orders" -> Seq("o_custkey" -> TInt))
+      (s, dir) => stringRow(s, "total",
+        Compiler.autoWide(Env(Map.empty, Map.empty, s)) { env =>
+          // table AGSum is EAGER (the overflow surfaces inside the tier);
+          // render the scalar to a string driver-side
+          s.range(1).select(asScalar(compile(prog, store.bind(env, dir)))
+            .cast("string").as("total")).head().getString(0)
+        })
     },
 
     // THE THIRD TIER (r13): a sum whose VALUE passes 10^38 — past the
@@ -129,65 +163,46 @@ object LangQueries {
       """SELECT CAST(SUM(CAST(n_nationkey AS HUGEINT)
         |                * 1000000000000000000 * 400000000000000000)
         |            AS VARCHAR) AS total
-        |FROM nation""".stripMargin) { (s, dir) =>
-      val prog = EUnop(OIntToString, EACFold(AGSum,
-        EProj(LikeBag, ELoc("nation"), "n",
-          EBinop(OTimes, EBinop(OTimes,
-            EAccess(EVar("n"), "n_nationkey"),
-            EAtom(AInt(1000000000000000000L))),
-            EAtom(AInt(400000000000000000L))))))
-      val total = Compiler.autoWide(Env(Map.empty, Map.empty, s)) { env0 =>
-        // the tier owns the store: Long → Decimal(38,0) → canonical bytes
-        val key = col("n_nationkey").cast("long")
-        val nation = Tables.load(s, dir, "nation").select(
-          (if (env0.bigInt) graft.functions.BigIntOps.fromLong(key)
-           else if (env0.wideInt) key.cast("decimal(38,0)")
-           else key).as("n_nationkey"))
-        val env = env0.copy(store = Map("nation" -> nation))
-        // OIntToString renders tier-correctly (bignum decodes; the other
-        // tiers cast) — the driver just reads the string back
-        s.range(1).select(asScalar(compile(prog, env)).as("total"))
-          .head().getString(0)
-      }
-      s.createDataFrame(java.util.List.of(org.apache.spark.sql.Row(total)),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("total",
-            org.apache.spark.sql.types.StringType))))
+        |FROM nation""".stripMargin) {
+      val prog = expr("q_lang_bignum", """
+        toStr(sum(mapBag (mut nation) n
+          n[n_nationkey] * 1000000000000000000 * 400000000000000000))""")
+      val store = Store("nation" -> Seq("n_nationkey" -> TInt))
+      (s, dir) => stringRow(s, "total",
+        Compiler.autoWide(Env(Map.empty, Map.empty, s)) { env =>
+          // toStr renders tier-correctly (bignum decodes; the other tiers
+          // cast) — the driver just reads the string back
+          s.range(1).select(asScalar(compile(prog, store.bind(env, dir)))
+            .as("total")).head().getString(0)
+        })
     },
 
     // A monad-comprehension program — `c <- customer; n <- nation;
     // check(c.key == n.key); ret {cust, nat}` — exactly what the reference's
     // notation desugars to (nested flatmap/if/cons, Notations.v:144-149).
     // `Rewrites.normalize` RECOGNIZES the join (to_join_head) so the compiled
-    // plan is a real equi-join, not a filtered cross product.
+    // plan is a real equi-join, not a filtered cross product. The reference
+    // lifecycle (SURVEY.md §3.1): typecheck → optimize → execute, with the
+    // table types declared as in fiat2's Gstore.
     GraftQuery.sql("q_lang_comprehension",
       """SELECT c_name AS cust, n_name AS nat
         |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |ORDER BY cust, nat""".stripMargin) { (s, dir) =>
-      val rowT = TRecord.sorted("cust" -> TString, "nat" -> TString)
-      val comp = EFlatmap(LikeBag, ELoc("customer"), "c",
-        EFlatmap(LikeBag, ELoc("nation"), "n",
-          EIf(EBinop(OEq, EAccess(EVar("c"), "c_nationkey"),
-            EAccess(EVar("n"), "n_nationkey")),
-            EBinop(OCons, ERecord(List(
-              "cust" -> EAccess(EVar("c"), "c_name"),
-              "nat" -> EAccess(EVar("n"), "n_name"))),
-              EAtom(ANil(rowT))),
-            EAtom(ANil(rowT)))))
-      val prog = ESort(LikeList, comp)
-      // the reference lifecycle (SURVEY.md §3.1): typecheck → optimize →
-      // execute. Table types declared as in fiat2's Gstore.
-      val storeTypes = Map(
-        "customer" -> TBag(TRecord.sorted(
-          "c_custkey" -> TInt, "c_name" -> TString, "c_nationkey" -> TInt,
-          "c_acctbal" -> TInt, "c_mktsegment" -> TString)),
-        "nation" -> TBag(TRecord.sorted(
-          "n_nationkey" -> TInt, "n_name" -> TString, "n_regionkey" -> TInt)))
-      require(TypeCheck.synthesize(prog, Map.empty, storeTypes) == TList(rowT))
-      val env = Env(Map.empty, Map(
-        "customer" -> Tables.load(s, dir, "customer"),
-        "nation" -> Tables.load(s, dir, "nation")), s)
-      compileProgram(prog, env).asInstanceOf[TV].df
+        |ORDER BY cust, nat""".stripMargin) {
+      val prog = expr("q_lang_comprehension", """
+        sort(flatmapBag (mut customer) c flatmapBag (mut nation) n
+          if c[c_nationkey] == n[n_nationkey]
+          then { cust : c[c_name], nat : n[n_name] }
+            :: nil[{ cust : string, nat : string }]
+          else nil[{ cust : string, nat : string }])""")
+      val store = Store(
+        "customer" -> Seq("c_custkey" -> TInt, "c_name" -> TString,
+          "c_nationkey" -> TInt),
+        "nation" -> Seq("n_nationkey" -> TInt, "n_name" -> TString,
+          "n_regionkey" -> TInt))
+      require(TypeCheck.synthesize(prog, Map.empty, store.types) ==
+        TList(TRecord.sorted("cust" -> TString, "nat" -> TString)))
+      (s, dir) => rows(prog,
+        Env(Map.empty, tables(s, dir, "customer", "nation"), s))
     },
 
     // Self-join THROUGH the language (the Ex_Family/Ex_Triangle shape): both
@@ -198,21 +213,12 @@ object LangQueries {
         |FROM nation n1 JOIN nation n2
         |  ON n1.n_regionkey = n2.n_regionkey
         | AND n1.n_nationkey < n2.n_nationkey
-        |ORDER BY a, b, rk""".stripMargin) { (s, dir) =>
-      val prog = ESort(LikeList, EJoin(LikeBag, ELoc("nation"), ELoc("nation"),
-        "x", "y",
-        EBinop(OAnd,
-          EBinop(OEq, EAccess(EVar("x"), "n_regionkey"),
-            EAccess(EVar("y"), "n_regionkey")),
-          EBinop(OLess, EAccess(EVar("x"), "n_nationkey"),
-            EAccess(EVar("y"), "n_nationkey"))),
-        ERecord(List(
-          "a" -> EAccess(EVar("x"), "n_nationkey"),
-          "b" -> EAccess(EVar("y"), "n_nationkey"),
-          "rk" -> EAccess(EVar("x"), "n_regionkey")))))
-      val env = Env(Map.empty,
-        Map("nation" -> Tables.load(s, dir, "nation")), s)
-      compileProgram(prog, env).asInstanceOf[TV].df
+        |ORDER BY a, b, rk""".stripMargin) {
+      val prog = expr("q_lang_selfjoin", """
+        sort(joinBag (mut nation) (mut nation) x y
+          (x[n_regionkey] == y[n_regionkey] && x[n_nationkey] < y[n_nationkey])
+          { a : x[n_nationkey], b : y[n_nationkey], rk : x[n_regionkey] })""")
+      (s, dir) => rows(prog, Env(Map.empty, tables(s, dir, "nation"), s))
     },
 
     // GENERAL DECORRELATION: a correlated table-valued flatmap body the
@@ -229,40 +235,22 @@ object LangQueries {
         |FROM nation JOIN supplier
         |  ON s_suppkey * 4 < n_nationkey * 50 + 40
         | AND s_nationkey = n_nationkey
-        |ORDER BY nat, sk, sup""".stripMargin) { (s, dir) =>
-      val rowT = TRecord.sorted(
-        "nat" -> TString, "sk" -> TInt, "sup" -> TString)
-      val prog = ESort(LikeList, EFlatmap(LikeBag, ELoc("nation"), "n",
-        EProj(LikeBag,
-          EFilter(LikeBag,
-            EFilter(LikeBag, ELoc("supplier"), "s",
-              EBinop(OLess,
-                EBinop(OTimes, EAccess(EVar("s"), "s_suppkey"), EAtom(AInt(4))),
-                EBinop(OPlus,
-                  EBinop(OTimes, EAccess(EVar("n"), "n_nationkey"),
-                    EAtom(AInt(50))),
-                  EAtom(AInt(40))))),
-            "t", EBinop(OEq, EAccess(EVar("t"), "s_nationkey"),
-              EAccess(EVar("n"), "n_nationkey"))),
-          "u", ERecord(List(
-            "nat" -> EAccess(EVar("n"), "n_name"),
-            "sk" -> EAccess(EVar("u"), "s_suppkey"),
-            "sup" -> EAccess(EVar("u"), "s_name"))))))
-      val storeTypes = Map(
-        "nation" -> TBag(TRecord.sorted(
-          "n_nationkey" -> TInt, "n_name" -> TString, "n_regionkey" -> TInt)),
-        "supplier" -> TBag(TRecord.sorted(
-          "s_suppkey" -> TInt, "s_name" -> TString, "s_nationkey" -> TInt)))
-      require(TypeCheck.synthesize(prog, Map.empty, storeTypes) == TList(rowT))
-      val env = Env(Map.empty, Map(
-        "nation" -> Tables.load(s, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("n_nationkey"),
-            col("n_name"), col("n_regionkey").cast("long").as("n_regionkey")),
-        "supplier" -> Tables.load(s, dir, "supplier")
-          .select(col("s_suppkey").cast("long").as("s_suppkey"),
-            col("s_name"), col("s_nationkey").cast("long").as("s_nationkey"))),
-        s, storeTypes = storeTypes)
-      compileProgram(prog, env).asInstanceOf[TV].df
+        |ORDER BY nat, sk, sup""".stripMargin) {
+      val prog = expr("q_lang_decorrelate", """
+        sort(flatmapBag (mut nation) n
+          mapBag (filterBag
+              (filterBag (mut supplier) s s[s_suppkey] * 4 < n[n_nationkey] * 50 + 40)
+              t t[s_nationkey] == n[n_nationkey])
+            u { nat : n[n_name], sk : u[s_suppkey], sup : u[s_name] })""")
+      val store = Store(
+        "nation" -> Seq("n_nationkey" -> TInt, "n_name" -> TString,
+          "n_regionkey" -> TInt),
+        "supplier" -> Seq("s_suppkey" -> TInt, "s_name" -> TString,
+          "s_nationkey" -> TInt))
+      require(TypeCheck.synthesize(prog, Map.empty, store.types) ==
+        TList(TRecord.sorted("nat" -> TString, "sk" -> TInt, "sup" -> TString)))
+      (s, dir) => rows(prog, store.bind(
+        Env(Map.empty, Map.empty, s, storeTypes = store.types), dir))
     },
 
     // CORRELATED SCALAR AGGREGATES unnested (Compiler.projCorrelatedAggs):
@@ -270,7 +258,7 @@ object LangQueries {
     // a correlated SUM, and a correlated MAX whose source carries an extra
     // inner-only filter — the classic correlated-subquery triple. The
     // reference interprets each as a per-row nested loop
-    // (Interpret.v:273-299); the engine lowers each aggregate to ONE
+    // (Interpret.v:273-299); the engine lowers the aggregates to ONE
     // groupBy of the inner table on its equi-key plus a LEFT join back —
     // COUNT/SUM default to 0 on no-match, MAX stays null (ACI
     // None-on-empty), which the oracle's NULL for Antarctica-style empty
@@ -282,42 +270,37 @@ object LangQueries {
         |                 WHERE s_nationkey = n_nationkey), 0) AS BIGINT) AS ksum,
         |  (SELECT MAX(s_suppkey) FROM supplier
         |   WHERE s_nationkey = n_nationkey AND s_suppkey % 2 = 0) AS maxeven
-        |FROM nation ORDER BY nat""".stripMargin) { (s, dir) =>
-      def corrFilter(b: String) = EFilter(LikeBag, ELoc("supplier"), b,
-        EBinop(OEq, EAccess(EVar(b), "s_nationkey"),
-          EAccess(EVar("n"), "n_nationkey")))
-      val prog = EProj(LikeBag, ELoc("nation"), "n",
-        ERecord(List(
-          "nat" -> EAccess(EVar("n"), "n_name"),
-          "ns" -> EUnop(OLength, corrFilter("s0")),
-          "ksum" -> EACFold(AGSum, EProj(LikeBag, corrFilter("s1"), "p1",
-            EAccess(EVar("p1"), "s_suppkey"))),
-          "maxeven" -> EACIFold(AGMax, EProj(LikeBag,
-            EFilter(LikeBag, corrFilter("s2"), "r2",
-              EBinop(OEq,
-                EBinop(OMod, EAccess(EVar("r2"), "s_suppkey"), EAtom(AInt(2))),
-                EAtom(AInt(0)))),
-            "p2", EAccess(EVar("p2"), "s_suppkey"))))))
-      Compiler.autoWideTable(Env(Map.empty, Map.empty, s)) { env0 =>
-        val env = env0.copy(store = Map(
-          "nation" -> Tables.load(s, dir, "nation")
-            .select(tint(col("n_nationkey"), env0).as("n_nationkey"),
-              col("n_name")),
-          "supplier" -> Tables.load(s, dir, "supplier")
-            .select(tint(col("s_suppkey"), env0).as("s_suppkey"),
-              tint(col("s_nationkey"), env0).as("s_nationkey"))))
-        compileProgram(prog, env).asInstanceOf[TV].df
-      }.orderBy("nat")
+        |FROM nation ORDER BY nat""".stripMargin) {
+      val prog = expr("q_lang_corr_agg", """
+        mapBag (mut nation) n { nat : n[n_name],
+          ns : len(filterBag (mut supplier) s0 s0[s_nationkey] == n[n_nationkey]),
+          ksum : sum(mapBag
+            (filterBag (mut supplier) s1 s1[s_nationkey] == n[n_nationkey])
+            p1 p1[s_suppkey]),
+          maxeven : max(mapBag
+            (filterBag (filterBag (mut supplier) s2 s2[s_nationkey] == n[n_nationkey])
+              r2 r2[s_suppkey] % 2 == 0)
+            p2 p2[s_suppkey]) }""")
+      val store = Store(
+        "nation" -> Seq("n_nationkey" -> TInt, "n_name" -> TString),
+        "supplier" -> Seq("s_suppkey" -> TInt, "s_nationkey" -> TInt))
+      (s, dir) => tiered(s, dir, prog, store).orderBy("nat")
     },
 
     // CORRELATED AGGREGATE INSIDE A FILTER PREDICATE
     // (Compiler.filterCorrelatedAggs): the reference's arbitrary-body
     // semantics put aggregates anywhere an expression goes
     // (Interpret.v:273-299) — here the nested COUNT and SUM sit in the
-    // WHERE clause, not the projection. The engine LEFT-joins the
-    // key-grouped aggregates onto the outer table (no outer-row
-    // duplication: the join key is grouped), evaluates the rewritten
-    // predicate, and projects the nation row back out.
+    // WHERE clause, not the projection. The engine joins ONE key-grouped
+    // aggregate of supplier (count and sum together) onto the outer table
+    // (no outer-row duplication: the join key is grouped; Catalyst makes
+    // the join inner because `count > 0` rejects no-match rows), evaluates
+    // the rewritten predicate, and projects the nation row back out.
+    // COUNT > 0 (not
+    // > 1): sf0.001 has ~10 suppliers over 25 nations, so per-nation
+    // counts never exceed 1 and a >1 threshold is vacuous at the smoke
+    // scale. The two-aggregate filter shape (COUNT conjunct + SUM-parity
+    // conjunct) is what this query pins.
     GraftQuery.sql("q_lang_corr_filter",
       """SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name
         |FROM nation n
@@ -325,37 +308,23 @@ object LangQueries {
         |       WHERE s.s_nationkey = n.n_nationkey) > 0
         |  AND COALESCE((SELECT SUM(s_suppkey) FROM supplier s
         |                WHERE s.s_nationkey = n.n_nationkey), 0) % 2 = 0
-        |ORDER BY n_nationkey""".stripMargin) { (s, dir) =>
-      def corrFilter(b: String) = EFilter(LikeBag, ELoc("supplier"), b,
-        EBinop(OEq, EAccess(EVar(b), "s_nationkey"),
-          EAccess(EVar("n"), "n_nationkey")))
-      val cnt = EUnop(OLength, corrFilter("s0"))
-      val ksum = EACFold(AGSum, EProj(LikeBag, corrFilter("s1"), "p1",
-        EAccess(EVar("p1"), "s_suppkey")))
-      val prog = EFilter(LikeBag, ELoc("nation"), "n",
-        EBinop(OAnd,
-          // COUNT > 0 (not > 1): sf0.001 has ~10 suppliers over 25 nations,
-          // so per-nation counts never exceed 1 and a >1 threshold is
-          // vacuous at the smoke scale. The two-aggregate filter shape
-          // (COUNT conjunct + SUM-parity conjunct) is what this query pins.
-          EBinop(OLess, EAtom(AInt(0)), cnt),
-          EBinop(OEq, EBinop(OMod, ksum, EAtom(AInt(2))), EAtom(AInt(0)))))
-      Compiler.autoWideTable(Env(Map.empty, Map.empty, s)) { env0 =>
-        val env = env0.copy(store = Map(
-          "nation" -> Tables.load(s, dir, "nation")
-            .select(tint(col("n_nationkey"), env0).as("n_nationkey"),
-              col("n_name")),
-          "supplier" -> Tables.load(s, dir, "supplier")
-            .select(tint(col("s_suppkey"), env0).as("s_suppkey"),
-              tint(col("s_nationkey"), env0).as("s_nationkey"))))
-        compileProgram(prog, env).asInstanceOf[TV].df
-      }.orderBy("n_nationkey")
+        |ORDER BY n_nationkey""".stripMargin) {
+      val prog = expr("q_lang_corr_filter", """
+        filterBag (mut nation) n
+          0 < len(filterBag (mut supplier) s0 s0[s_nationkey] == n[n_nationkey])
+          && sum(mapBag
+               (filterBag (mut supplier) s1 s1[s_nationkey] == n[n_nationkey])
+               p1 p1[s_suppkey]) % 2 == 0""")
+      val store = Store(
+        "nation" -> Seq("n_nationkey" -> TInt, "n_name" -> TString),
+        "supplier" -> Seq("s_suppkey" -> TInt, "s_nationkey" -> TInt))
+      (s, dir) => tiered(s, dir, prog, store).orderBy("n_nationkey")
     },
 
     // CORRELATED AGGREGATES IN A FILTER PREDICATE, TABLE-SCALE OUTER
     // (supplier × lineitem): the same shape as q_lang_corr_filter but with
     // a real-cardinality outer and a fact-table aggregate side, so the
-    // unnesting's grouped LEFT join must partial-aggregate map-side before
+    // unnesting's grouped join must partial-aggregate map-side before
     // the shuffle (plan-asserted in PlanQualitySpec) — the 100 TB posture
     // for this rewrite.
     GraftQuery.sql("q_lang_corr_filter_big",
@@ -365,27 +334,17 @@ object LangQueries {
         |       WHERE l.l_suppkey = s.s_suppkey) > 0
         |  AND COALESCE((SELECT SUM(l_orderkey) FROM lineitem l
         |                WHERE l.l_suppkey = s.s_suppkey), 0) % 3 = 0
-        |ORDER BY s_suppkey""".stripMargin) { (s, dir) =>
-      def corrFilter(b: String) = EFilter(LikeBag, ELoc("lineitem"), b,
-        EBinop(OEq, EAccess(EVar(b), "l_suppkey"),
-          EAccess(EVar("s"), "s_suppkey")))
-      val cnt = EUnop(OLength, corrFilter("l0"))
-      val ksum = EACFold(AGSum, EProj(LikeBag, corrFilter("l1"), "p1",
-        EAccess(EVar("p1"), "l_orderkey")))
-      val prog = EFilter(LikeBag, ELoc("supplier"), "s",
-        EBinop(OAnd,
-          EBinop(OLess, EAtom(AInt(0)), cnt),
-          EBinop(OEq, EBinop(OMod, ksum, EAtom(AInt(3))), EAtom(AInt(0)))))
-      Compiler.autoWideTable(Env(Map.empty, Map.empty, s)) { env0 =>
-        val env = env0.copy(store = Map(
-          "supplier" -> Tables.load(s, dir, "supplier")
-            .select(tint(col("s_suppkey"), env0).as("s_suppkey"),
-              col("s_name")),
-          "lineitem" -> Tables.load(s, dir, "lineitem")
-            .select(tint(col("l_orderkey"), env0).as("l_orderkey"),
-              tint(col("l_suppkey"), env0).as("l_suppkey"))))
-        compileProgram(prog, env).asInstanceOf[TV].df
-      }.orderBy("s_suppkey")
+        |ORDER BY s_suppkey""".stripMargin) {
+      val prog = expr("q_lang_corr_filter_big", """
+        filterBag (mut supplier) s
+          0 < len(filterBag (mut lineitem) l0 l0[l_suppkey] == s[s_suppkey])
+          && sum(mapBag
+               (filterBag (mut lineitem) l1 l1[l_suppkey] == s[s_suppkey])
+               p1 p1[l_orderkey]) % 3 == 0""")
+      val store = Store(
+        "supplier" -> Seq("s_suppkey" -> TInt, "s_name" -> TString),
+        "lineitem" -> Seq("l_orderkey" -> TInt, "l_suppkey" -> TInt))
+      (s, dir) => tiered(s, dir, prog, store).orderBy("s_suppkey")
     },
 
     // NON-EQUI CORRELATED AGGREGATES (join-then-reaggregate): each nation
@@ -410,37 +369,21 @@ object LangQueries {
         |        WHERE s.s_nationkey < n.n_nationkey
         |          AND s.s_nationkey % 2 = n.n_nationkey % 2) AS BIGINT)
         |    AS min_below
-        |FROM nation n ORDER BY n_nationkey""".stripMargin) { (s, dir) =>
-      def corr(b: String) = EFilter(LikeBag, ELoc("supplier"), b,
-        EBinop(OAnd,
-          EBinop(OLess, EAccess(EVar(b), "s_nationkey"),
-            EAccess(EVar("n"), "n_nationkey")),
-          EBinop(OEq,
-            EBinop(OMod, EAccess(EVar(b), "s_nationkey"), EAtom(AInt(2))),
-            EBinop(OMod, EAccess(EVar("n"), "n_nationkey"), EAtom(AInt(2))))))
-      val prog = EProj(LikeBag, ELoc("nation"), "n", ERecord(List(
-        "n_nationkey" -> EAccess(EVar("n"), "n_nationkey"),
-        "cnt_below" -> EUnop(OLength, corr("s0")),
-        "sum_below" -> EACFold(AGSum, EProj(LikeBag, corr("s1"), "p1",
-          EAccess(EVar("p1"), "s_suppkey"))),
-        "min_below" -> EACIFold(AGMin, EProj(LikeBag, corr("s2"), "p2",
-          EAccess(EVar("p2"), "s_suppkey"))))))
-      val rowT = TRecord.sorted("n_nationkey" -> TInt, "cnt_below" -> TInt,
-        "sum_below" -> TInt, "min_below" -> TOption(TInt))
-      val storeT = Map(
-        "nation" -> TBag(TRecord.sorted("n_nationkey" -> TInt)),
-        "supplier" -> TBag(TRecord.sorted("s_suppkey" -> TInt,
-          "s_nationkey" -> TInt)))
-      require(TypeCheck.synthesize(prog, Map.empty, storeT) == TBag(rowT))
-      Compiler.autoWideTable(Env(Map.empty, Map.empty, s)) { env0 =>
-        val env = env0.copy(store = Map(
-          "nation" -> Tables.load(s, dir, "nation")
-            .select(tint(col("n_nationkey"), env0).as("n_nationkey")),
-          "supplier" -> Tables.load(s, dir, "supplier")
-            .select(tint(col("s_suppkey"), env0).as("s_suppkey"),
-              tint(col("s_nationkey"), env0).as("s_nationkey"))))
-        compileProgram(prog, env).asInstanceOf[TV].df
-      }.orderBy("n_nationkey")
+        |FROM nation n ORDER BY n_nationkey""".stripMargin) {
+      def below(b: String) = s"""filterBag (mut supplier) $b
+        $b[s_nationkey] < n[n_nationkey] && $b[s_nationkey] % 2 == n[n_nationkey] % 2"""
+      val prog = expr("q_lang_corr_nonequi", s"""
+        mapBag (mut nation) n { n_nationkey : n[n_nationkey],
+          cnt_below : len(${below("s0")}),
+          sum_below : sum(mapBag (${below("s1")}) p1 p1[s_suppkey]),
+          min_below : min(mapBag (${below("s2")}) p2 p2[s_suppkey]) }""")
+      val store = Store(
+        "nation" -> Seq("n_nationkey" -> TInt),
+        "supplier" -> Seq("s_suppkey" -> TInt, "s_nationkey" -> TInt))
+      require(TypeCheck.synthesize(prog, Map.empty, store.types) ==
+        TBag(TRecord.sorted("n_nationkey" -> TInt, "cnt_below" -> TInt,
+          "sum_below" -> TInt, "min_below" -> TOption(TInt))))
+      (s, dir) => tiered(s, dir, prog, store).orderBy("n_nationkey")
     },
 
     // TIER-RECOVERY FIXTURE (r14 directive 3): a correlated per-key SUM
@@ -461,25 +404,19 @@ object LangQueries {
         |        FROM supplier s
         |        WHERE s.s_nationkey = n.n_nationkey), 0) AS VARCHAR)
         |    AS wide_sum
-        |FROM nation n ORDER BY n_nationkey""".stripMargin) { (s, dir) =>
-      val prog = EProj(LikeBag, ELoc("nation"), "n", ERecord(List(
-        "n_nationkey" -> EAccess(EVar("n"), "n_nationkey"),
-        "wide_sum" -> EUnop(OIntToString, EACFold(AGSum, EProj(LikeBag,
-          EFilter(LikeBag, ELoc("supplier"), "s0",
-            EBinop(OEq, EAccess(EVar("s0"), "s_nationkey"),
-              EAccess(EVar("n"), "n_nationkey"))),
-          "p0", EBinop(OPlus, EAtom(AInt(5000000000000000000L)),
-            EAccess(EVar("p0"), "s_suppkey"))))))))
-      Compiler.autoWideTable(Env(Map.empty, Map.empty, s)) { env0 =>
-        val env = env0.copy(store = Map(
-          "nation" -> Tables.load(s, dir, "nation")
-            .select(tint(col("n_nationkey"), env0).as("n_nationkey")),
-          "supplier" -> Tables.load(s, dir, "supplier")
-            .select(tint(col("s_suppkey"), env0).as("s_suppkey"),
-              tint(col("s_nationkey"), env0).as("s_nationkey"))))
+        |FROM nation n ORDER BY n_nationkey""".stripMargin) {
+      val prog = expr("q_lang_corr_widen", """
+        mapBag (mut nation) n { n_nationkey : n[n_nationkey],
+          wide_sum : toStr(sum(mapBag
+            (filterBag (mut supplier) s0 s0[s_nationkey] == n[n_nationkey])
+            p0 5000000000000000000 + p0[s_suppkey])) }""")
+      val store = Store(
+        "nation" -> Seq("n_nationkey" -> TInt),
+        "supplier" -> Seq("s_suppkey" -> TInt, "s_nationkey" -> TInt))
+      (s, dir) => autoWideTable(Env(Map.empty, Map.empty, s)) { env =>
         // n_nationkey re-narrows to Long on every tier (its values are
         // tiny) so the dumped schema matches the oracle's BIGINT
-        compileProgram(prog, env).asInstanceOf[TV].df
+        rows(prog, store.bind(env, dir))
           .select(col("n_nationkey").cast("long").as("n_nationkey"),
             col("wide_sum"))
       }.orderBy("n_nationkey")
@@ -508,50 +445,31 @@ object LangQueries {
         |  CAST((SELECT MIN(s.s_suppkey) FROM supplier s
         |        WHERE s.s_nationkey % 2 = n.n_nationkey % 2
         |          AND s.s_suppkey < 2 * n.n_nationkey) AS BIGINT) AS min_rng
-        |FROM nation n ORDER BY n_nationkey""".stripMargin) { (s, dir) =>
-      def f(b: String, c: String) = EAccess(EVar(b), c)
-      def corr(b: String, extra: Option[Expr]) = EFilter(LikeBag,
-        ELoc("supplier"), b,
-        extra.foldLeft[Expr](EBinop(OAnd,
-          EBinop(OEq,
-            EBinop(OMod, f(b, "s_nationkey"), EAtom(AInt(2))),
-            EBinop(OMod, f("n", "n_nationkey"), EAtom(AInt(2)))),
-          EBinop(OLess, f(b, "s_suppkey"),
-            EBinop(OTimes, EAtom(AInt(2)), f("n", "n_nationkey")))))(
-          (p, e) => EBinop(OAnd, p, e)))
-      val gate = EBinop(OLess, f("n", "n_regionkey"), EAtom(AInt(3)))
-      val prog = EProj(LikeBag, ELoc("nation"), "n", ERecord(List(
-        "n_nationkey" -> f("n", "n_nationkey"),
-        "cnt_rng" -> EUnop(OLength, corr("s0", None)),
-        "sum_rng" -> EACFold(AGSum, EProj(LikeBag,
-          corr("s1", Some(gate)), "p1", f("p1", "s_suppkey"))),
-        "min_rng" -> EACIFold(AGMin, EProj(LikeBag,
-          corr("s2", None), "p2", f("p2", "s_suppkey"))))))
-      val rowT = TRecord.sorted("n_nationkey" -> TInt, "cnt_rng" -> TInt,
-        "sum_rng" -> TInt, "min_rng" -> TOption(TInt))
-      val storeT = Map(
-        "nation" -> TBag(TRecord.sorted("n_nationkey" -> TInt,
-          "n_regionkey" -> TInt)),
-        "supplier" -> TBag(TRecord.sorted("s_suppkey" -> TInt,
-          "s_nationkey" -> TInt)))
-      require(TypeCheck.synthesize(prog, Map.empty, storeT) == TBag(rowT))
-      Compiler.autoWideTable(Env(Map.empty, Map.empty, s)) { env0 =>
-        val env = env0.copy(store = Map(
-          "nation" -> Tables.load(s, dir, "nation")
-            .select(tint(col("n_nationkey"), env0).as("n_nationkey"),
-              tint(col("n_regionkey"), env0).as("n_regionkey")),
-          "supplier" -> Tables.load(s, dir, "supplier")
-            .select(tint(col("s_suppkey"), env0).as("s_suppkey"),
-              tint(col("s_nationkey"), env0).as("s_nationkey"))))
-        compileProgram(prog, env).asInstanceOf[TV].df
-      }.orderBy("n_nationkey")
+        |FROM nation n ORDER BY n_nationkey""".stripMargin) {
+      def ranged(b: String, gate: String) = s"""filterBag (mut supplier) $b
+        $b[s_nationkey] % 2 == n[n_nationkey] % 2
+          && $b[s_suppkey] < 2 * n[n_nationkey]$gate"""
+      val prog = expr("q_lang_corr_rangekey", s"""
+        mapBag (mut nation) n { n_nationkey : n[n_nationkey],
+          cnt_rng : len(${ranged("s0", "")}),
+          sum_rng : sum(mapBag (${ranged("s1", " && n[n_regionkey] < 3")})
+            p1 p1[s_suppkey]),
+          min_rng : min(mapBag (${ranged("s2", "")}) p2 p2[s_suppkey]) }""")
+      val store = Store(
+        "nation" -> Seq("n_nationkey" -> TInt, "n_regionkey" -> TInt),
+        "supplier" -> Seq("s_suppkey" -> TInt, "s_nationkey" -> TInt))
+      require(TypeCheck.synthesize(prog, Map.empty, store.types) ==
+        TBag(TRecord.sorted("n_nationkey" -> TInt, "cnt_rng" -> TInt,
+          "sum_rng" -> TInt, "min_rng" -> TOption(TInt))))
+      (s, dir) => tiered(s, dir, prog, store).orderBy("n_nationkey")
     },
 
     // AGGREGATES OVER CORRELATED FLATMAP SOURCES (round 10, the
-    // distinct-outer path of Compiler.unnestAggsOnce): the aggregate's source is an EFlatmap whose
-    // per-(outer,inner)-pair BODY is an arbitrary array — a gated
-    // two-element emission mixing both rows, and a data-dependent-length
-    // ORange. The reference nested-loops the product and concatenates the
+    // distinct-outer path of Compiler.unnestAggsOnce): the aggregate's
+    // source is a flatmap whose per-(outer,inner)-pair BODY is an
+    // arbitrary array — a gated two-element emission mixing both rows
+    // (normalize cannot single-cons it away), and a data-dependent-length
+    // range. The reference nested-loops the product and concatenates the
     // body arrays (Interpret.v:273-299); the engine joins the DISTINCT
     // outer rows to the inner side on the extracted equi tie (a hash
     // join, never a product here) and EXPLODES the per-pair arrays before
@@ -572,46 +490,24 @@ object LangQueries {
         |            FROM supplier s
         |            WHERE s.s_nationkey = n.n_nationkey), 0) AS BIGINT)
         |    AS rangesum
-        |FROM nation n ORDER BY n_nationkey""".stripMargin) { (s, dir) =>
-      def nk = EAccess(EVar("n"), "n_nationkey")
-      def corrFlat(fb: String, b: String, body: Expr) = EFlatmap(LikeBag,
-        EFilter(LikeBag, ELoc("supplier"), fb,
-          EBinop(OEq, EAccess(EVar(fb), "s_nationkey"), nk)),
-        b, body)
-      // gated TWO-element emission (normalize cannot single-cons it away):
-      // even suppliers contribute [s_suppkey, s_suppkey + n_nationkey]
-      def pairBody(b: String) = EIf(
-        EBinop(OEq, EBinop(OMod, EAccess(EVar(b), "s_suppkey"),
-          EAtom(AInt(2))), EAtom(AInt(0))),
-        EBinop(OCons, EAccess(EVar(b), "s_suppkey"),
-          EBinop(OCons, EBinop(OPlus, EAccess(EVar(b), "s_suppkey"), nk),
-            EAtom(ANil(TInt)))),
-        EAtom(ANil(TInt)))
-      // data-dependent length: range(0, s_suppkey mod 3)
-      def rangeBody(b: String) = EBinop(ORange, EAtom(AInt(0)),
-        EBinop(OMod, EAccess(EVar(b), "s_suppkey"), EAtom(AInt(3))))
-      val prog = EProj(LikeBag, ELoc("nation"), "n", ERecord(List(
-        "n_nationkey" -> nk,
-        "emitted" -> EUnop(OLength, corrFlat("f1", "b1", pairBody("b1"))),
-        "evensum" -> EACFold(AGSum, corrFlat("f2", "b2", pairBody("b2"))),
-        "rangesum" -> EACFold(AGSum,
-          corrFlat("f3", "b3", rangeBody("b3"))))))
-      val rowT = TRecord.sorted("n_nationkey" -> TInt, "emitted" -> TInt,
-        "evensum" -> TInt, "rangesum" -> TInt)
-      val storeT = Map(
-        "nation" -> TBag(TRecord.sorted("n_nationkey" -> TInt)),
-        "supplier" -> TBag(TRecord.sorted("s_suppkey" -> TInt,
-          "s_nationkey" -> TInt)))
-      require(TypeCheck.synthesize(prog, Map.empty, storeT) == TBag(rowT))
-      Compiler.autoWideTable(Env(Map.empty, Map.empty, s)) { env0 =>
-        val env = env0.copy(store = Map(
-          "nation" -> Tables.load(s, dir, "nation")
-            .select(tint(col("n_nationkey"), env0).as("n_nationkey")),
-          "supplier" -> Tables.load(s, dir, "supplier")
-            .select(tint(col("s_suppkey"), env0).as("s_suppkey"),
-              tint(col("s_nationkey"), env0).as("s_nationkey"))))
-        compileProgram(prog, env).asInstanceOf[TV].df
-      }.orderBy("n_nationkey")
+        |FROM nation n ORDER BY n_nationkey""".stripMargin) {
+      def corrFlat(f: String, b: String, body: String) = s"""flatmapBag
+        (filterBag (mut supplier) $f $f[s_nationkey] == n[n_nationkey]) $b $body"""
+      def pairs(b: String) = s"""if $b[s_suppkey] % 2 == 0
+        then $b[s_suppkey] :: $b[s_suppkey] + n[n_nationkey] :: nil[int]
+        else nil[int]"""
+      val prog = expr("q_lang_corr_flatmap", s"""
+        mapBag (mut nation) n { n_nationkey : n[n_nationkey],
+          emitted : len(${corrFlat("f1", "b1", pairs("b1"))}),
+          evensum : sum(${corrFlat("f2", "b2", pairs("b2"))}),
+          rangesum : sum(${corrFlat("f3", "b3", "range(0, b3[s_suppkey] % 3)")}) }""")
+      val store = Store(
+        "nation" -> Seq("n_nationkey" -> TInt),
+        "supplier" -> Seq("s_suppkey" -> TInt, "s_nationkey" -> TInt))
+      require(TypeCheck.synthesize(prog, Map.empty, store.types) ==
+        TBag(TRecord.sorted("n_nationkey" -> TInt, "emitted" -> TInt,
+          "evensum" -> TInt, "rangesum" -> TInt)))
+      (s, dir) => tiered(s, dir, prog, store).orderBy("n_nationkey")
     },
 
     // CORRELATED TABLE FEEDING A NESTED FOLD (the per-position canonical-
@@ -629,42 +525,26 @@ object LangQueries {
         |        WHERE s.s_nationkey < n.n_nationkey
         |          AND s.s_nationkey % 2 = n.n_nationkey % 2), '')
         |    AS names_below
-        |FROM nation n ORDER BY n_nationkey""".stripMargin) { (s, dir) =>
-      val corr = EFilter(LikeBag, ELoc("supplier"), "sf",
-        EBinop(OAnd,
-          EBinop(OLess, EAccess(EVar("sf"), "s_nationkey"),
-            EAccess(EVar("n"), "n_nationkey")),
-          EBinop(OEq,
-            EBinop(OMod, EAccess(EVar("sf"), "s_nationkey"), EAtom(AInt(2))),
-            EBinop(OMod, EAccess(EVar("n"), "n_nationkey"), EAtom(AInt(2))))))
-      val folded = EFold(
-        ESort(LikeList, EProj(LikeBag, corr, "pf",
-          EAccess(EVar("pf"), "s_name"))),
-        EAtom(AString("")), "e", "a",
-        EBinop(OConcatString, EVar("e"), EVar("a")))
-      val prog = EProj(LikeBag, ELoc("nation"), "n", ERecord(List(
-        "n_nationkey" -> EAccess(EVar("n"), "n_nationkey"),
-        "names_below" -> folded)))
-      val rowT = TRecord.sorted("n_nationkey" -> TInt,
-        "names_below" -> TString)
-      val storeT = Map(
-        "nation" -> TBag(TRecord.sorted("n_nationkey" -> TInt)),
-        "supplier" -> TBag(TRecord.sorted("s_name" -> TString,
-          "s_nationkey" -> TInt)))
-      require(TypeCheck.synthesize(prog, Map.empty, storeT) == TBag(rowT))
-      val env = Env(Map.empty, Map(
-        "nation" -> Tables.load(s, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("n_nationkey")),
-        "supplier" -> Tables.load(s, dir, "supplier")
-          .select(col("s_name"),
-            col("s_nationkey").cast("long").as("s_nationkey"))),
-        s, storeTypes = storeT)
-      compileProgram(prog, env).asInstanceOf[TV].df
+        |FROM nation n ORDER BY n_nationkey""".stripMargin) {
+      val prog = expr("q_lang_corr_fold", """
+        mapBag (mut nation) n { n_nationkey : n[n_nationkey],
+          names_below : fold (sort(mapBag
+              (filterBag (mut supplier) sf sf[s_nationkey] < n[n_nationkey]
+                && sf[s_nationkey] % 2 == n[n_nationkey] % 2)
+              pf pf[s_name]))
+            ("") e a e +++ a }""")
+      val store = Store(
+        "nation" -> Seq("n_nationkey" -> TInt),
+        "supplier" -> Seq("s_name" -> TString, "s_nationkey" -> TInt))
+      require(TypeCheck.synthesize(prog, Map.empty, store.types) == TBag(
+        TRecord.sorted("n_nationkey" -> TInt, "names_below" -> TString)))
+      (s, dir) => rows(prog, store.bind(
+        Env(Map.empty, Map.empty, s, storeTypes = store.types), dir))
         .orderBy("n_nationkey")
     },
 
     // CORRELATED-CONDITIONAL TABLE BODY (round 10 — Compiler.splitTableIf):
-    // for each nation, EIf on an OUTER-ROW condition selects between two
+    // for each nation, an if on an OUTER-ROW condition selects between two
     // correlated supplier legs (low regions keep only even supplier keys).
     // The reference evaluates the condition per outer row and takes ONE
     // leg (Interpret.v:299-303); the engine SPLITS the outer table on the
@@ -675,48 +555,35 @@ object LangQueries {
       """SELECT n_name AS nat, s_name AS sup
         |FROM nation JOIN supplier ON s_nationkey = n_nationkey
         |WHERE CASE WHEN n_regionkey < 2 THEN s_suppkey % 2 = 0 ELSE TRUE END
-        |ORDER BY nat, sup""".stripMargin) { (s, dir) =>
-      def f(b: String, c: String) = EAccess(EVar(b), c)
-      val corr = (b: String) =>
-        EBinop(OEq, f(b, "s_nationkey"), f("x", "n_nationkey"))
-      val legA = EFilter(LikeBag, ELoc("supplier"), "sa",
-        EBinop(OAnd, corr("sa"), EBinop(OEq,
-          EBinop(OMod, f("sa", "s_suppkey"), EAtom(AInt(2))), EAtom(AInt(0)))))
-      val legB = EFilter(LikeBag, ELoc("supplier"), "sb", corr("sb"))
-      val prog = EFlatmap(LikeBag, ELoc("nation"), "x",
-        EProj(LikeBag,
-          EIf(EBinop(OLess, f("x", "n_regionkey"), EAtom(AInt(2))),
-            legA, legB),
-          "u", ERecord(List(
-            "nat" -> f("x", "n_name"), "sup" -> f("u", "s_name")))))
-      val supT = TRecord.sorted("s_suppkey" -> TInt, "s_name" -> TString,
-        "s_nationkey" -> TInt)
-      val natT = TRecord.sorted("n_nationkey" -> TInt, "n_name" -> TString,
-        "n_regionkey" -> TInt)
-      val storeT = Map("nation" -> TBag(natT), "supplier" -> TBag(supT))
-      require(TypeCheck.synthesize(prog, Map.empty, storeT) ==
+        |ORDER BY nat, sup""".stripMargin) {
+      val prog = expr("q_lang_corr_cond", """
+        flatmapBag (mut nation) x
+          mapBag (if x[n_regionkey] < 2
+              then filterBag (mut supplier) sa
+                sa[s_nationkey] == x[n_nationkey] && sa[s_suppkey] % 2 == 0
+              else filterBag (mut supplier) sb sb[s_nationkey] == x[n_nationkey])
+            u { nat : x[n_name], sup : u[s_name] }""")
+      val store = Store(
+        "nation" -> Seq("n_nationkey" -> TInt, "n_name" -> TString,
+          "n_regionkey" -> TInt),
+        "supplier" -> Seq("s_suppkey" -> TInt, "s_name" -> TString,
+          "s_nationkey" -> TInt))
+      require(TypeCheck.synthesize(prog, Map.empty, store.types) ==
         TBag(TRecord.sorted("nat" -> TString, "sup" -> TString)))
-      val env = Env(Map.empty, Map(
-        "nation" -> Tables.load(s, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("n_nationkey"),
-            col("n_name"), col("n_regionkey").cast("long").as("n_regionkey")),
-        "supplier" -> Tables.load(s, dir, "supplier")
-          .select(col("s_suppkey").cast("long").as("s_suppkey"),
-            col("s_name"),
-            col("s_nationkey").cast("long").as("s_nationkey"))), s)
-      compileProgram(prog, env).asInstanceOf[TV].df.orderBy("nat", "sup")
+      (s, dir) => rows(prog, store.bind(Env(Map.empty, Map.empty, s), dir))
+        .orderBy("nat", "sup")
     },
 
     // GATE-ONLY CORRELATED AGGREGATES (round 10 — Compiler.unnestAggsOnce,
-    // a zero-key keyed group): every correlated conjunct is an OUTER-ONLY gate — no
-    // predicate ties the outer and inner rows, so the per-row value the
-    // reference nested-loops (Interpret.v:273-299) is row-INDEPENDENT
-    // whenever the gate passes. The engine aggregates the residual-
-    // filtered supplier table ONCE and broadcasts the one-row result onto
-    // every nation row behind a CASE gate — one aggregation job, no
-    // outer-side shuffle, no per-row subquery. Three consumers: gated
-    // global SUM, gated global COUNT, gated global MIN (NULL when the
-    // gate fails — ACI None-on-empty).
+    // a zero-key keyed group): every correlated conjunct is an OUTER-ONLY
+    // gate — no predicate ties the outer and inner rows, so the per-row
+    // value the reference nested-loops (Interpret.v:273-299) is
+    // row-INDEPENDENT whenever the gate passes. The engine aggregates the
+    // residual-filtered supplier table ONCE and broadcasts the one-row
+    // result onto every nation row behind a CASE gate — one aggregation
+    // job, no outer-side shuffle, no per-row subquery. Three consumers:
+    // gated global SUM, gated global COUNT, gated global MIN (NULL when
+    // the gate fails — ACI None-on-empty).
     GraftQuery.sql("q_lang_corr_gate",
       """SELECT n_name AS nat,
         |  CASE WHEN n_regionkey < 2
@@ -729,39 +596,24 @@ object LangQueries {
         |  CASE WHEN n_regionkey = 0
         |    THEN (SELECT MIN(s_suppkey) FROM supplier)
         |    ELSE NULL END AS gmin
-        |FROM nation ORDER BY nat""".stripMargin) { (s, dir) =>
-      def f(b: String, c: String) = EAccess(EVar(b), c)
-      val gsum = EACFold(AGSum, EProj(LikeBag,
-        EFilter(LikeBag, ELoc("supplier"), "s0", EBinop(OAnd,
-          EBinop(OEq, EBinop(OMod, f("s0", "s_suppkey"), EAtom(AInt(3))),
-            EAtom(AInt(0))),
-          EBinop(OLess, f("x", "n_regionkey"), EAtom(AInt(2))))),
-        "p0", f("p0", "s_suppkey")))
-      val gcnt = EUnop(OLength,
-        EFilter(LikeBag, ELoc("supplier"), "s1", EBinop(OAnd,
-          EBinop(OEq, EBinop(OMod, f("s1", "s_suppkey"), EAtom(AInt(2))),
-            EAtom(AInt(0))),
-          EBinop(OLess, f("x", "n_nationkey"), EAtom(AInt(10))))))
-      val gmin = EACIFold(AGMin, EProj(LikeBag,
-        EFilter(LikeBag, ELoc("supplier"), "s2",
-          EBinop(OEq, f("x", "n_regionkey"), EAtom(AInt(0)))),
-        "p2", f("p2", "s_suppkey")))
-      val prog = EProj(LikeBag, ELoc("nation"), "x", ERecord(List(
-        "nat" -> f("x", "n_name"),
-        "gsum" -> gsum, "gcnt" -> gcnt, "gmin" -> gmin)))
-      Compiler.autoWideTable(Env(Map.empty, Map.empty, s)) { env0 =>
-        val env = env0.copy(store = Map(
-          "nation" -> Tables.load(s, dir, "nation")
-            .select(tint(col("n_nationkey"), env0).as("n_nationkey"),
-              col("n_name"),
-              tint(col("n_regionkey"), env0).as("n_regionkey")),
-          "supplier" -> Tables.load(s, dir, "supplier")
-            .select(tint(col("s_suppkey"), env0).as("s_suppkey"))))
-        compileProgram(prog, env).asInstanceOf[TV].df
-      }.orderBy("nat")
+        |FROM nation ORDER BY nat""".stripMargin) {
+      val prog = expr("q_lang_corr_gate", """
+        mapBag (mut nation) x { nat : x[n_name],
+          gsum : sum(mapBag (filterBag (mut supplier) s0
+              s0[s_suppkey] % 3 == 0 && x[n_regionkey] < 2)
+            p0 p0[s_suppkey]),
+          gcnt : len(filterBag (mut supplier) s1
+            s1[s_suppkey] % 2 == 0 && x[n_nationkey] < 10),
+          gmin : min(mapBag (filterBag (mut supplier) s2 x[n_regionkey] == 0)
+            p2 p2[s_suppkey]) }""")
+      val store = Store(
+        "nation" -> Seq("n_nationkey" -> TInt, "n_name" -> TString,
+          "n_regionkey" -> TInt),
+        "supplier" -> Seq("s_suppkey" -> TInt))
+      (s, dir) => tiered(s, dir, prog, store).orderBy("nat")
     },
 
-    // AGGREGATES REFERENCING JOIN BINDERS (round 10 — the EJoin
+    // AGGREGATES REFERENCING JOIN BINDERS (round 10 — the join
     // pair-table rewrite): the join body holds per-pair correlated
     // aggregates, one tied to the LEFT binder (supplier count per
     // nation) and one tied to the RIGHT binder through a computed key
@@ -778,35 +630,20 @@ object LangQueries {
         |                 WHERE s_suppkey % 5 = r_regionkey), 0)
         |    AS BIGINT) AS rsum
         |FROM nation JOIN region ON n_regionkey = r_regionkey
-        |ORDER BY nat""".stripMargin) { (s, dir) =>
-      def f(b: String, c: String) = EAccess(EVar(b), c)
-      val ns = EUnop(OLength,
-        EFilter(LikeBag, ELoc("supplier"), "s0",
-          EBinop(OEq, f("s0", "s_nationkey"), f("n", "n_nationkey"))))
-      val rsum = EACFold(AGSum, EProj(LikeBag,
-        EFilter(LikeBag, ELoc("supplier"), "s1",
-          EBinop(OEq, EBinop(OMod, f("s1", "s_suppkey"), EAtom(AInt(5))),
-            f("r", "r_regionkey"))),
-        "p1", f("p1", "s_suppkey")))
-      val prog = EJoin(LikeBag, ELoc("nation"), ELoc("region"), "n", "r",
-        EBinop(OEq, f("n", "n_regionkey"), f("r", "r_regionkey")),
-        ERecord(List(
-          "nat" -> f("n", "n_name"), "reg" -> f("r", "r_name"),
-          "ns" -> ns, "rsum" -> rsum)))
-      Compiler.autoWideTable(Env(Map.empty, Map.empty, s)) { env0 =>
-        val env = env0.copy(store = Map(
-          "nation" -> Tables.load(s, dir, "nation")
-            .select(tint(col("n_nationkey"), env0).as("n_nationkey"),
-              col("n_name"),
-              tint(col("n_regionkey"), env0).as("n_regionkey")),
-          "region" -> Tables.load(s, dir, "region")
-            .select(tint(col("r_regionkey"), env0).as("r_regionkey"),
-              col("r_name")),
-          "supplier" -> Tables.load(s, dir, "supplier")
-            .select(tint(col("s_suppkey"), env0).as("s_suppkey"),
-              tint(col("s_nationkey"), env0).as("s_nationkey"))))
-        compileProgram(prog, env).asInstanceOf[TV].df
-      }.orderBy("nat")
+        |ORDER BY nat""".stripMargin) {
+      val prog = expr("q_lang_corr_jbind", """
+        joinBag (mut nation) (mut region) n r (n[n_regionkey] == r[r_regionkey])
+          { nat : n[n_name], reg : r[r_name],
+            ns : len(filterBag (mut supplier) s0 s0[s_nationkey] == n[n_nationkey]),
+            rsum : sum(mapBag
+              (filterBag (mut supplier) s1 s1[s_suppkey] % 5 == r[r_regionkey])
+              p1 p1[s_suppkey]) }""")
+      val store = Store(
+        "nation" -> Seq("n_nationkey" -> TInt, "n_name" -> TString,
+          "n_regionkey" -> TInt),
+        "region" -> Seq("r_regionkey" -> TInt, "r_name" -> TString),
+        "supplier" -> Seq("s_suppkey" -> TInt, "s_nationkey" -> TInt))
+      (s, dir) => tiered(s, dir, prog, store).orderBy("nat")
     },
 
     // LEG-BINDER AGGREGATES UNDER A CORRELATED FLATMAP JOIN (round 10 —
@@ -830,42 +667,26 @@ object LangQueries {
         |JOIN nation a ON a.n_regionkey = r.r_regionkey
         |JOIN nation b ON b.n_regionkey = r.r_regionkey
         |             AND a.n_nationkey < b.n_nationkey
-        |ORDER BY reg, n1, n2""".stripMargin) { (s, dir) =>
-      def f(b: String, c: String) = EAccess(EVar(b), c)
-      def legNations(bind: String) =
-        EFilter(LikeBag, ELoc("nation"), bind,
-          EBinop(OEq, f(bind, "n_regionkey"), f("x", "r_regionkey")))
-      val s1 = EUnop(OLength,
-        EFilter(LikeBag, ELoc("supplier"), "sa",
-          EBinop(OEq, f("sa", "s_nationkey"), f("ja", "n_nationkey"))))
-      val s2 = EACFold(AGSum, EProj(LikeBag,
-        EFilter(LikeBag, ELoc("supplier"), "sb",
-          EBinop(OEq, f("sb", "s_nationkey"), f("jb", "n_nationkey"))),
-        "pb", f("pb", "s_suppkey")))
-      val prog = EFlatmap(LikeBag, ELoc("region"), "x",
-        EJoin(LikeBag, legNations("na"), legNations("nb"), "ja", "jb",
-          EBinop(OLess, f("ja", "n_nationkey"), f("jb", "n_nationkey")),
-          ERecord(List(
-            "reg" -> f("x", "r_name"),
-            "n1" -> f("ja", "n_name"), "n2" -> f("jb", "n_name"),
-            "s1" -> s1, "s2" -> s2))))
-      Compiler.autoWideTable(Env(Map.empty, Map.empty, s)) { env0 =>
-        val env = env0.copy(store = Map(
-          "region" -> Tables.load(s, dir, "region")
-            .select(tint(col("r_regionkey"), env0).as("r_regionkey"),
-              col("r_name")),
-          "nation" -> Tables.load(s, dir, "nation")
-            .select(tint(col("n_nationkey"), env0).as("n_nationkey"),
-              col("n_name"),
-              tint(col("n_regionkey"), env0).as("n_regionkey")),
-          "supplier" -> Tables.load(s, dir, "supplier")
-            .select(tint(col("s_suppkey"), env0).as("s_suppkey"),
-              tint(col("s_nationkey"), env0).as("s_nationkey"))))
-        compileProgram(prog, env).asInstanceOf[TV].df
-      }.orderBy("reg", "n1", "n2")
+        |ORDER BY reg, n1, n2""".stripMargin) {
+      val prog = expr("q_lang_corr_legbind", """
+        flatmapBag (mut region) x
+          joinBag (filterBag (mut nation) na na[n_regionkey] == x[r_regionkey])
+            (filterBag (mut nation) nb nb[n_regionkey] == x[r_regionkey])
+            ja jb (ja[n_nationkey] < jb[n_nationkey])
+            { reg : x[r_name], n1 : ja[n_name], n2 : jb[n_name],
+              s1 : len(filterBag (mut supplier) sa sa[s_nationkey] == ja[n_nationkey]),
+              s2 : sum(mapBag
+                (filterBag (mut supplier) sb sb[s_nationkey] == jb[n_nationkey])
+                pb pb[s_suppkey]) }""")
+      val store = Store(
+        "region" -> Seq("r_regionkey" -> TInt, "r_name" -> TString),
+        "nation" -> Seq("n_nationkey" -> TInt, "n_name" -> TString,
+          "n_regionkey" -> TInt),
+        "supplier" -> Seq("s_suppkey" -> TInt, "s_nationkey" -> TInt))
+      (s, dir) => tiered(s, dir, prog, store).orderBy("reg", "n1", "n2")
     },
 
-    // AGGREGATES OVER CORRELATED EJOIN SOURCES (round 10 —
+    // AGGREGATES OVER CORRELATED JOIN SOURCES (round 10 —
     // Compiler.liftJoinAggSource): the aggregate's source is itself a
     // JOIN — per nation, count and sum over (supplier ⋈ region) pairs
     // where the supplier leg is correlated on the nation row. The engine
@@ -884,41 +705,21 @@ object LangQueries {
         |   FROM supplier s, region r
         |   WHERE s.s_nationkey = n.n_nationkey
         |     AND s.s_suppkey % 5 = r.r_regionkey), 0) AS BIGINT) AS gsum
-        |FROM nation n ORDER BY nat""".stripMargin) { (s, dir) =>
-      def f(b: String, c: String) = EAccess(EVar(b), c)
-      def corrSup(b: String) = EFilter(LikeBag, ELoc("supplier"), b,
-        EBinop(OEq, f(b, "s_nationkey"), f("x", "n_nationkey")))
-      def pairJoin(sb: String, ja: String, jb: String, body: Expr) =
-        EJoin(LikeBag, corrSup(sb), ELoc("region"), ja, jb,
-          EBinop(OEq, EBinop(OMod, f(ja, "s_suppkey"), EAtom(AInt(5))),
-            f(jb, "r_regionkey")),
-          body)
-      val g = EUnop(OLength, pairJoin("c0", "a0", "b0",
-        ERecord(List("sk" -> f("a0", "s_suppkey"),
-          "rk" -> f("b0", "r_regionkey")))))
-      val gsum = EACFold(AGSum, pairJoin("c1", "a1", "b1",
-        EBinop(OPlus, f("a1", "s_suppkey"), f("b1", "r_regionkey"))))
-      val prog = EProj(LikeBag, ELoc("nation"), "x", ERecord(List(
-        "nat" -> f("x", "n_name"), "g" -> g, "gsum" -> gsum)))
-      val storeT = Map(
-        "nation" -> TBag(TRecord.sorted(
-          "n_nationkey" -> TInt, "n_name" -> TString)),
-        "region" -> TBag(TRecord.sorted("r_regionkey" -> TInt)),
-        "supplier" -> TBag(TRecord.sorted(
-          "s_suppkey" -> TInt, "s_nationkey" -> TInt)))
-      Compiler.autoWideTable(
-        Env(Map.empty, Map.empty, s, storeTypes = storeT)) { env0 =>
-        val env = env0.copy(store = Map(
-          "nation" -> Tables.load(s, dir, "nation")
-            .select(tint(col("n_nationkey"), env0).as("n_nationkey"),
-              col("n_name")),
-          "region" -> Tables.load(s, dir, "region")
-            .select(tint(col("r_regionkey"), env0).as("r_regionkey")),
-          "supplier" -> Tables.load(s, dir, "supplier")
-            .select(tint(col("s_suppkey"), env0).as("s_suppkey"),
-              tint(col("s_nationkey"), env0).as("s_nationkey"))))
-        compileProgram(prog, env).asInstanceOf[TV].df
-      }.orderBy("nat")
+        |FROM nation n ORDER BY nat""".stripMargin) {
+      def pairJoin(c: String, a: String, b: String, body: String) = s"""joinBag
+        (filterBag (mut supplier) $c $c[s_nationkey] == x[n_nationkey])
+        (mut region) $a $b ($a[s_suppkey] % 5 == $b[r_regionkey]) $body"""
+      val prog = expr("q_lang_corr_jsrc", s"""
+        mapBag (mut nation) x { nat : x[n_name],
+          g : len(${pairJoin("c0", "a0", "b0",
+            "{ sk : a0[s_suppkey], rk : b0[r_regionkey] }")}),
+          gsum : sum(${pairJoin("c1", "a1", "b1",
+            "a1[s_suppkey] + b1[r_regionkey]")}) }""")
+      val store = Store(
+        "nation" -> Seq("n_nationkey" -> TInt, "n_name" -> TString),
+        "region" -> Seq("r_regionkey" -> TInt),
+        "supplier" -> Seq("s_suppkey" -> TInt, "s_nationkey" -> TInt))
+      (s, dir) => tiered(s, dir, prog, store, store.types).orderBy("nat")
     },
 
     // DOUBLY-NESTED CORRELATED AGGREGATES (round 10 — iterating
@@ -936,47 +737,30 @@ object LangQueries {
         |       AND s_suppkey < (SELECT COUNT(*) FROM customer
         |                        WHERE c_nationkey = n_nationkey)), 0)
         |    AS BIGINT) AS g
-        |FROM nation ORDER BY nat""".stripMargin) { (s, dir) =>
-      def f(b: String, c: String) = EAccess(EVar(b), c)
-      val innerLen = EUnop(OLength,
-        EFilter(LikeBag, ELoc("customer"), "c",
-          EBinop(OEq, f("c", "c_nationkey"), f("x", "n_nationkey"))))
-      val outerSum = EACFold(AGSum, EProj(LikeBag,
-        EFilter(LikeBag, ELoc("supplier"), "sp",
-          EBinop(OAnd,
-            EBinop(OEq, f("sp", "s_nationkey"), f("x", "n_nationkey")),
-            EBinop(OLess, f("sp", "s_suppkey"), innerLen))),
-        "p", f("p", "s_suppkey")))
-      val prog = EProj(LikeBag, ELoc("nation"), "x", ERecord(List(
-        "nat" -> f("x", "n_name"), "g" -> outerSum)))
-      val supT = TRecord.sorted("s_suppkey" -> TInt, "s_nationkey" -> TInt)
-      val natT = TRecord.sorted("n_nationkey" -> TInt, "n_name" -> TString)
-      val custT = TRecord.sorted("c_nationkey" -> TInt)
-      val storeT = Map("nation" -> TBag(natT), "supplier" -> TBag(supT),
-        "customer" -> TBag(custT))
-      require(TypeCheck.synthesize(prog, Map.empty, storeT) ==
+        |FROM nation ORDER BY nat""".stripMargin) {
+      val prog = expr("q_lang_corr_nested", """
+        mapBag (mut nation) x { nat : x[n_name],
+          g : sum(mapBag (filterBag (mut supplier) sp
+                sp[s_nationkey] == x[n_nationkey]
+                && sp[s_suppkey] < len(filterBag (mut customer) c
+                     c[c_nationkey] == x[n_nationkey]))
+              p p[s_suppkey]) }""")
+      val store = Store(
+        "nation" -> Seq("n_nationkey" -> TInt, "n_name" -> TString),
+        "supplier" -> Seq("s_suppkey" -> TInt, "s_nationkey" -> TInt),
+        "customer" -> Seq("c_nationkey" -> TInt))
+      require(TypeCheck.synthesize(prog, Map.empty, store.types) ==
         TBag(TRecord.sorted("nat" -> TString, "g" -> TInt)))
-      Compiler.autoWideTable(Env(Map.empty, Map.empty, s)) { env0 =>
-        val env = env0.copy(store = Map(
-          "nation" -> Tables.load(s, dir, "nation")
-            .select(tint(col("n_nationkey"), env0).as("n_nationkey"),
-              col("n_name")),
-          "supplier" -> Tables.load(s, dir, "supplier")
-            .select(tint(col("s_suppkey"), env0).as("s_suppkey"),
-              tint(col("s_nationkey"), env0).as("s_nationkey")),
-          "customer" -> Tables.load(s, dir, "customer")
-            .select(tint(col("c_nationkey"), env0).as("c_nationkey"))))
-        compileProgram(prog, env).asInstanceOf[TV].df
-      }.orderBy("nat")
+      (s, dir) => tiered(s, dir, prog, store).orderBy("nat")
     },
 
-    // CORRELATED ZIP-FLATMAP (Compiler.decorrelate's EFlatmap2-core path,
-    // new this round): for each nation, zip its canonically-sorted supplier
-    // names against its sorted customer names, cut at the shorter side,
-    // with the outer row in the result. The engine collects BOTH legs per
-    // distinct outer row into sorted arrays (two grouped shuffles — never
-    // a per-outer-row job) and zips them through the nested zip_with path;
-    // the oracle replays the same pairing with per-key row_number.
+    // CORRELATED ZIP-FLATMAP (Compiler.decorrelate's flatmap2-core path):
+    // for each nation, zip its canonically-sorted supplier names against
+    // its sorted customer names, cut at the shorter side, with the outer
+    // row in the result. The engine collects BOTH legs per distinct outer
+    // row into sorted arrays (two grouped shuffles — never a per-outer-row
+    // job) and zips them through the nested zip_with path; the oracle
+    // replays the same pairing with per-key row_number.
     GraftQuery.sql("q_lang_corr_zip",
       """WITH ss AS (SELECT s_nationkey AS k, s_name,
         |        row_number() OVER (PARTITION BY s_nationkey ORDER BY s_name) AS i
@@ -988,49 +772,35 @@ object LangQueries {
         |FROM nation n
         |JOIN ss ON ss.k = n.n_nationkey
         |JOIN cc ON cc.k = n.n_nationkey AND cc.i = ss.i
-        |ORDER BY n_name, s_name, c_name""".stripMargin) { (s, dir) =>
-      def leg(tbl: String, b: String, keyFld: String, nameFld: String,
-          pb: String) =
-        ESort(LikeList, EProj(LikeList,
-          EFilter(LikeList, ELoc(tbl), b,
-            EBinop(OEq, EAccess(EVar(b), keyFld),
-              EAccess(EVar("n"), "n_nationkey"))),
-          pb, EAccess(EVar(pb), nameFld)))
-      val rowT = TRecord.sorted("c_name" -> TString, "n_name" -> TString,
-        "s_name" -> TString)
-      val body = EFlatmap2(
-        leg("supplier", "sf", "s_nationkey", "s_name", "sp"),
-        leg("customer", "cf", "c_nationkey", "c_name", "cp"),
-        "zs", "zc",
-        EBinop(OCons, ERecord(List(
-          "n_name" -> EAccess(EVar("n"), "n_name"),
-          "s_name" -> EVar("zs"),
-          "c_name" -> EVar("zc"))), EAtom(ANil(rowT))))
-      val prog = EFlatmap(LikeList, ELoc("nation"), "n", body)
-      val storeT = Map(
-        "nation" -> TList(TRecord.sorted("n_name" -> TString,
-          "n_nationkey" -> TInt)),
-        "supplier" -> TList(TRecord.sorted("s_name" -> TString,
-          "s_nationkey" -> TInt)),
-        "customer" -> TList(TRecord.sorted("c_name" -> TString,
-          "c_nationkey" -> TInt)))
-      require(TypeCheck.synthesize(prog, Map.empty, storeT) == TList(rowT))
-      val env = Env(Map.empty, Map(
-        "nation" -> Tables.load(s, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("n_nationkey"),
-            col("n_name")),
-        "supplier" -> Tables.load(s, dir, "supplier")
-          .select(col("s_name"),
-            col("s_nationkey").cast("long").as("s_nationkey")),
-        "customer" -> Tables.load(s, dir, "customer")
-          .select(col("c_name"),
-            col("c_nationkey").cast("long").as("c_nationkey"))),
-        s, storeTypes = storeT)
-      compileProgram(prog, env).asInstanceOf[TV].df
+        |ORDER BY n_name, s_name, c_name""".stripMargin) {
+      val prog = expr("q_lang_corr_zip", """
+        flatmap (mut nation) n
+          flatmap2
+            (sort(map (filter (mut supplier) sf sf[s_nationkey] == n[n_nationkey])
+              sp sp[s_name]))
+            (sort(map (filter (mut customer) cf cf[c_nationkey] == n[n_nationkey])
+              cp cp[c_name]))
+            zs zc
+            { n_name : n[n_name], s_name : zs, c_name : zc }
+              :: nil[{ c_name : string, n_name : string, s_name : string }]""")
+      val store = Store(
+        "nation" -> Seq("n_nationkey" -> TInt, "n_name" -> TString),
+        "supplier" -> Seq("s_name" -> TString, "s_nationkey" -> TInt),
+        "customer" -> Seq("c_name" -> TString, "c_nationkey" -> TInt))
+      // the legs read the tables as lists
+      val storeT = store.types.map {
+        case (t, TBag(r)) => t -> TList(r)
+        case other => other
+      }
+      require(TypeCheck.synthesize(prog, Map.empty, storeT) == TList(
+        TRecord.sorted("c_name" -> TString, "n_name" -> TString,
+          "s_name" -> TString)))
+      (s, dir) => rows(prog, store.bind(
+        Env(Map.empty, Map.empty, s, storeTypes = storeT), dir))
         .orderBy("n_name", "s_name", "c_name")
     },
 
-    // CORRELATION INSIDE A JOIN LEG (Compiler.decorrelate's EJoin-core
+    // CORRELATION INSIDE A JOIN LEG (Compiler.decorrelate's join-core
     // path): for each nation, θ-join its suppliers against its customers —
     // the outer row variable appears in BOTH legs' filters and in the
     // result record. The reference interprets this nested-loop-style
@@ -1044,55 +814,39 @@ object LangQueries {
         |JOIN supplier s ON s.s_nationkey = n.n_nationkey
         |JOIN customer c ON c.c_nationkey = n.n_nationkey
         |WHERE s.s_suppkey % 7 = c.c_custkey % 7
-        |ORDER BY n_name, s_suppkey, c_custkey""".stripMargin) { (s, dir) =>
-      def legFilter(tbl: String, binder: String, keyFld: String) =
-        EFilter(LikeBag, ELoc(tbl), binder,
-          EBinop(OEq, EAccess(EVar(binder), keyFld),
-            EAccess(EVar("n"), "n_nationkey")))
-      val body = EJoin(LikeBag,
-        legFilter("supplier", "sf", "s_nationkey"),
-        legFilter("customer", "cf", "c_nationkey"),
-        "s2", "c2",
-        EBinop(OEq,
-          EBinop(OMod, EAccess(EVar("s2"), "s_suppkey"), EAtom(AInt(7))),
-          EBinop(OMod, EAccess(EVar("c2"), "c_custkey"), EAtom(AInt(7)))),
-        ERecord(List(
-          "n_name" -> EAccess(EVar("n"), "n_name"),
-          "s_suppkey" -> EAccess(EVar("s2"), "s_suppkey"),
-          "c_custkey" -> EAccess(EVar("c2"), "c_custkey"))))
-      val prog = EFlatmap(LikeBag, ELoc("nation"), "n", body)
-      val env = Env(Map.empty, Map(
-        "nation" -> Tables.load(s, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("n_nationkey"),
-            col("n_name")),
-        "supplier" -> Tables.load(s, dir, "supplier")
-          .select(col("s_suppkey").cast("long").as("s_suppkey"),
-            col("s_nationkey").cast("long").as("s_nationkey")),
-        "customer" -> Tables.load(s, dir, "customer")
-          .select(col("c_custkey").cast("long").as("c_custkey"),
-            col("c_nationkey").cast("long").as("c_nationkey"))),
-        s)
-      compileProgram(prog, env).asInstanceOf[TV].df
+        |ORDER BY n_name, s_suppkey, c_custkey""".stripMargin) {
+      val prog = expr("q_lang_corr_join", """
+        flatmapBag (mut nation) n
+          joinBag (filterBag (mut supplier) sf sf[s_nationkey] == n[n_nationkey])
+            (filterBag (mut customer) cf cf[c_nationkey] == n[n_nationkey])
+            s2 c2 (s2[s_suppkey] % 7 == c2[c_custkey] % 7)
+            { n_name : n[n_name], s_suppkey : s2[s_suppkey],
+              c_custkey : c2[c_custkey] }""")
+      val store = Store(
+        "nation" -> Seq("n_nationkey" -> TInt, "n_name" -> TString),
+        "supplier" -> Seq("s_suppkey" -> TInt, "s_nationkey" -> TInt),
+        "customer" -> Seq("c_custkey" -> TInt, "c_nationkey" -> TInt))
+      (s, dir) => rows(prog, store.bind(Env(Map.empty, Map.empty, s), dir))
         .orderBy("n_name", "s_suppkey", "c_custkey")
     },
 
-    // General EFold over a (small) table: a RIGHT fold (Interpret.v:
+    // General fold over a (small) table: a RIGHT fold (Interpret.v:
     // 313-319) defined on canonical value order; the non-associative step
-    // (rolling hash) is exactly what EACFold can't express. The oracle
+    // (rolling hash) is exactly what an AC fold can't express. The oracle
     // replays the right fold as list_reduce over the DESCENDING list.
     GraftQuery.sql("q_lang_fold",
       """SELECT CAST(list_reduce(list(CAST(r_regionkey AS BIGINT) ORDER BY r_regionkey DESC),
         |                        (a, b) -> a * 31 + b) AS BIGINT) AS h
-        |FROM region""".stripMargin) { (s, dir) =>
-      import org.apache.spark.sql.functions.col
-      val prog = EFold(ELoc("keys"), EAtom(AInt(0)), "x", "acc",
-        EBinop(OPlus, EBinop(OTimes, EVar("acc"), EAtom(AInt(31))), EVar("x")))
-      val keys = Tables.load(s, dir, "region")
-        .select(col("r_regionkey").cast("long").as("value"))
-      val env = Env(Map.empty, Map("keys" -> keys), s,
-        storeTypes = Map("keys" -> TBag(TInt)))
-      val h = compileProgram(prog, env).asInstanceOf[CV].c
-      s.range(1).select(h.cast("long").as("h"))
+        |FROM region""".stripMargin) {
+      val prog = expr("q_lang_fold", "fold (mut keys) (0) x acc acc * 31 + x")
+      (s, dir) => {
+        val keys = Tables.load(s, dir, "region")
+          .select(col("r_regionkey").cast("long").as("value"))
+        val env = Env(Map.empty, Map("keys" -> keys), s,
+          storeTypes = Map("keys" -> TBag(TInt)))
+        val h = compileProgram(prog, env).asInstanceOf[CV].c
+        s.range(1).select(h.cast("long").as("h"))
+      }
     },
 
     // The STREAMED table fold — same right fold as q_lang_fold but over
@@ -1100,65 +854,59 @@ object LangQueries {
     // batched driver stream (canonical-DESC toLocalIterator,
     // re-literalized accumulator) is exercised by the correctness gate
     // itself, not only by CompilerSpec. The step is the modular rolling
-    // hash (acc*31+x) mod 1e9+7 — non-associative (no EACFold escape)
+    // hash (acc*31+x) mod 1e9+7 — non-associative (no AC-fold escape)
     // and overflow-free at any length. The key filter keeps the row
     // count ~constant across SFs (orderkeys are dense 0..N).
     GraftQuery.sql("q_lang_fold_stream",
       """SELECT CAST(list_reduce(
         |         list(CAST(l_orderkey AS BIGINT) ORDER BY l_orderkey DESC),
         |         (a, b) -> (a * 31 + b) % 1000000007) AS BIGINT) AS h
-        |FROM lineitem WHERE l_orderkey < 15000""".stripMargin) { (s, dir) =>
-      import org.apache.spark.sql.functions.col
-      val step = EBinop(OMod,
-        EBinop(OPlus, EBinop(OTimes, EVar("acc"), EAtom(AInt(31))), EVar("x")),
-        EAtom(AInt(1000000007L)))
-      val prog = EFold(ELoc("keys"), EAtom(AInt(0)), "x", "acc", step)
-      val keys = Tables.load(s, dir, "lineitem")
-        .filter(col("l_orderkey") < 15000)
-        .select(col("l_orderkey").cast("long").as("value"))
-      val env = Env(Map.empty, Map("keys" -> keys), s,
-        storeTypes = Map("keys" -> TBag(TInt)))
-      val h = compileProgram(prog, env).asInstanceOf[CV].c
-      s.range(1).select(h.cast("long").as("h"))
+        |FROM lineitem WHERE l_orderkey < 15000""".stripMargin) {
+      val prog = expr("q_lang_fold_stream",
+        "fold (mut keys) (0) x acc (acc * 31 + x) % 1000000007")
+      (s, dir) => {
+        val keys = Tables.load(s, dir, "lineitem")
+          .filter(col("l_orderkey") < 15000)
+          .select(col("l_orderkey").cast("long").as("value"))
+        val env = Env(Map.empty, Map("keys" -> keys), s,
+          storeTypes = Map("keys" -> TBag(TInt)))
+        val h = compileProgram(prog, env).asInstanceOf[CV].c
+        s.range(1).select(h.cast("long").as("h"))
+      }
     },
 
-    // Command layer: CLetMut + CForeach + CAssign/OCons — the reference's
-    // event-loop idiom (fiat2/src/fiat2/Ex_Orders.v:54): for each key in a
-    // literal list, count matching events and cons the result onto an output
+    // Command layer: let mut + for + set/cons — the reference's event-loop
+    // idiom (fiat2/src/fiat2/Ex_Orders.v:54): for each key in a literal
+    // list, count matching events and cons the result onto an output
     // table.
     GraftQuery.sql("q_lang_command",
       // LEFT JOIN from the key list so a key with zero events still yields a
-      // (k, 0) row — matching the CForeach, which emits one record per key
+      // (k, 0) row — matching the loop, which emits one record per key
       // unconditionally
       """SELECT CAST(k AS BIGINT) AS k, COUNT(user_id) AS n
         |FROM (VALUES (1), (2), (3)) t(k)
         |LEFT JOIN events ON user_id = k
-        |GROUP BY k ORDER BY k""".stripMargin) { (s, dir) =>
-      val keys = List(1L, 2L, 3L).foldRight[Expr](EAtom(ANil(TInt))) {
-        (k, acc) => EBinop(OCons, EAtom(AInt(k)), acc)
+        |GROUP BY k ORDER BY k""".stripMargin) {
+      val prog = command("q_lang_command", """
+        let mut out := nil[{ k : int, n : int }] in
+        for kv in 1 :: 2 :: 3 :: nil[int] :
+          set out := { k : kv,
+            n : len(filterBag (mut events) ev ev[user_id] == kv) } :: mut out
+        end;
+        set result := mut out""")
+      (s, dir) => {
+        val events = Tables.load(s, dir, "events")
+          .select(col("user_id"), col("event_id"))
+        val env = Env(Map.empty, Map("events" -> events), s)
+        Interp.run(prog, env).store("result").orderBy("k")
       }
-      val countFor = (k: Expr) => EUnop(OLength,
-        EFilter(LikeBag, ELoc("events"), "ev",
-          EBinop(OEq, EAccess(EVar("ev"), "user_id"), k)))
-      val prog = CLetMut(
-        EAtom(ANil(TRecord.sorted("k" -> TInt, "n" -> TInt))), "out",
-        CSeq(
-          CForeach(keys, "kv",
-            CAssign("out", EBinop(OCons,
-              ERecord(List("k" -> EVar("kv"), "n" -> countFor(EVar("kv")))),
-              ELoc("out")))),
-          CAssign("result", ELoc("out"))))
-      val events = Tables.load(s, dir, "events")
-        .select(col("user_id"), col("event_id"))
-      val env = Env(Map.empty, Map("events" -> events), s)
-      Interp.run(prog, env).store("result").orderBy("k")
     },
 
-    // The unit-only operators, folded into one oracle-checked program:
-    // CLet binds the region count, CIf branches on it (the wrong branch
+    // The unit-only operators, folded into one oracle-checked program: a
+    // let binds the region count, an if branches on it (the wrong branch
     // would return an empty table and fail the row check), and the row
-    // expressions exercise OBagInsert (duplicates kept), OSetInsert
-    // (duplicates collapsed), and nested structural OEq on ranges and on
+    // expressions exercise bagInsert (duplicates kept), setInsert
+    // (duplicates collapsed), and nested structural == on ranges and on
     // canonically-ordered bags (insertion order must not matter).
     GraftQuery.sql("q_lang_collections",
       """SELECT n_nationkey AS k,
@@ -1166,48 +914,44 @@ object LangQueries {
         |  CAST(CASE WHEN n_regionkey = 2 THEN 1 ELSE 2 END AS BIGINT) AS set_size,
         |  n_regionkey = 2 AS eq_range,
         |  TRUE AS eq_bag
-        |FROM nation ORDER BY k""".stripMargin) { (s, dir) =>
-      val x = EVar("x")
-      val rk = EAccess(x, "n_regionkey")
-      def bagOf(a: Expr, b: Expr) =
-        EBinop(OBagInsert, EBinop(OBagInsert, EAtom(AEmptyBag(TInt)), a), b)
-      val setTwo =
-        EBinop(OSetInsert, EBinop(OSetInsert, EAtom(AEmptySet(TInt)), rk),
-          EAtom(AInt(2)))
-      val rowT = TRecord.sorted("k" -> TInt, "bag_size" -> TInt,
-        "set_size" -> TInt, "eq_range" -> TBool, "eq_bag" -> TBool)
-      val proj = EProj(LikeBag, ELoc("nation"), "x", ERecord(List(
-        "k" -> EAccess(x, "n_nationkey"),
-        "bag_size" -> EUnop(OLength, bagOf(rk, rk)),
-        "set_size" -> EUnop(OLength, setTwo),
-        "eq_range" -> EBinop(OEq,
-          EBinop(ORange, EAtom(AInt(0)), rk),
-          EBinop(ORange, EAtom(AInt(0)), EAtom(AInt(2)))),
-        "eq_bag" -> EBinop(OEq, bagOf(rk, EAtom(AInt(2))),
-          bagOf(EAtom(AInt(2)), rk)))))
-      val prog = CLet(EUnop(OLength, ELoc("region")), "n",
-        CIf(EBinop(OEq, EVar("n"), EAtom(AInt(5))),
-          CAssign("result", proj),
-          CAssign("result", EAtom(AEmptyBag(rowT)))))
-      val storeT = Map(
-        "region" -> TBag(TRecord.sorted(
-          "r_regionkey" -> TInt, "r_name" -> TString)),
-        "nation" -> TBag(TRecord.sorted(
-          "n_nationkey" -> TInt, "n_name" -> TString, "n_regionkey" -> TInt)))
-      require(TypeCheck.typecheck(prog, Map.empty, storeT)("result") == TBag(rowT))
-      val env = Env(Map.empty, Map(
-        "region" -> Tables.load(s, dir, "region")
-          .select(col("r_regionkey"), col("r_name")),
-        "nation" -> Tables.load(s, dir, "nation")), s,
-        storeTypes = storeT)
-      Interp.run(prog, env).store("result").orderBy("k")
+        |FROM nation ORDER BY k""".stripMargin) {
+      val prog = command("q_lang_collections", """
+        let n = len(mut region) in
+        if n == 5 then
+          set result := mapBag (mut nation) x { k : x[n_nationkey],
+            bag_size : len(bagInsert(bagInsert(emptyBag[int],
+              x[n_regionkey]), x[n_regionkey])),
+            set_size : len(setInsert(setInsert(emptySet[int],
+              x[n_regionkey]), 2)),
+            eq_range : range(0, x[n_regionkey]) == range(0, 2),
+            eq_bag : bagInsert(bagInsert(emptyBag[int], x[n_regionkey]), 2)
+              == bagInsert(bagInsert(emptyBag[int], 2), x[n_regionkey]) }
+        else
+          set result := emptyBag[{ bag_size : int, eq_bag : bool,
+            eq_range : bool, k : int, set_size : int }]
+        end""")
+      val store = Store(
+        "region" -> Seq("r_regionkey" -> TInt, "r_name" -> TString),
+        "nation" -> Seq("n_nationkey" -> TInt, "n_name" -> TString,
+          "n_regionkey" -> TInt))
+      require(TypeCheck.typecheck(prog, Map.empty, store.types)("result") ==
+        TBag(TRecord.sorted("k" -> TInt, "bag_size" -> TInt,
+          "set_size" -> TInt, "eq_range" -> TBool, "eq_bag" -> TBool)))
+      (s, dir) => {
+        val env = Env(Map.empty, Map(
+          "region" -> Tables.load(s, dir, "region")
+            .select(col("r_regionkey"), col("r_name")),
+          "nation" -> Tables.load(s, dir, "nation")), s,
+          storeTypes = store.types)
+        Interp.run(prog, env).store("result").orderBy("k")
+      }
     },
 
     // AUTOMATIC index use (fiat2/src/fiat2/IndexTransf.v:797-803 +
     // DictIndexImpl.v:374-389): the SOURCE is a plain filter loop — no index
     // is mentioned anywhere — but `IndexTransf.runIndexed` statically
     // recognizes the repeated `filter(orders, o.o_custkey == k)` point
-    // filters inside the CForeach body and transparently re-represents
+    // filters inside the loop body and transparently re-represents
     // `orders` as a key-hash-partitioned cached index, so iterations 2..n
     // are in-memory point lookups instead of source rescans
     // (IndexTransfSpec asserts the plan hits the InMemoryTableScan).
@@ -1215,25 +959,20 @@ object LangQueries {
       """SELECT CAST(k AS BIGINT) AS k, COUNT(o_orderkey) AS n
         |FROM (VALUES (5), (6), (7)) t(k)
         |LEFT JOIN orders ON o_custkey = k
-        |GROUP BY k ORDER BY k""".stripMargin) { (s, dir) =>
-      val keys = List(5L, 6L, 7L).foldRight[Expr](EAtom(ANil(TInt))) {
-        (k, acc) => EBinop(OCons, EAtom(AInt(k)), acc)
+        |GROUP BY k ORDER BY k""".stripMargin) {
+      val prog = command("q_lang_indexed_loop", """
+        let mut out := nil[{ k : int, n : int }] in
+        for kv in 5 :: 6 :: 7 :: nil[int] :
+          set out := { k : kv,
+            n : len(filterBag (mut orders) o o[o_custkey] == kv) } :: mut out
+        end;
+        set result := mut out""")
+      (s, dir) => {
+        val orders = Tables.load(s, dir, "orders")
+          .select(col("o_orderkey"), col("o_custkey"))
+        val env = Env(Map.empty, Map("orders" -> orders), s)
+        IndexTransf.runIndexed(prog, env).store("result").orderBy("k")
       }
-      val countFor = (k: Expr) => EUnop(OLength,
-        EFilter(LikeBag, ELoc("orders"), "o",
-          EBinop(OEq, EAccess(EVar("o"), "o_custkey"), k)))
-      val prog = CLetMut(
-        EAtom(ANil(TRecord.sorted("k" -> TInt, "n" -> TInt))), "out",
-        CSeq(
-          CForeach(keys, "kv",
-            CAssign("out", EBinop(OCons,
-              ERecord(List("k" -> EVar("kv"), "n" -> countFor(EVar("kv")))),
-              ELoc("out")))),
-          CAssign("result", ELoc("out"))))
-      val orders = Tables.load(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"))
-      val env = Env(Map.empty, Map("orders" -> orders), s)
-      IndexTransf.runIndexed(prog, env).store("result").orderBy("k")
     },
 
     // The reference's OWN survey example, in its exact sugar shape
@@ -1247,24 +986,25 @@ object LangQueries {
       """SELECT s_name AS name, n_name AS department,
         |       'ok from ' || s_name AS feedback
         |FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |ORDER BY department, feedback, name""".stripMargin) { (s, dir) =>
-      val src =
-        """r1 <- mut departments;
-          |r3 <- (r2 <- mut responses;
-          |       check(r2[department_id] == r1[department_id]);
-          |       ret r2);
-          |ret { name : r3[name], department : r1[department_name],
-          |      feedback : r3[feedback] }""".stripMargin
-      val prog = ESort(LikeList, Parser.parseExpr(src))
-      val env = Env(Map.empty, Map(
-        "departments" -> Tables.load(s, dir, "nation")
-          .select(col("n_nationkey").as("department_id"),
-            col("n_name").as("department_name")),
-        "responses" -> Tables.load(s, dir, "supplier")
-          .select(col("s_name").as("name"),
-            col("s_nationkey").as("department_id"),
-            concat(lit("ok from "), col("s_name")).as("feedback"))), s)
-      compileProgram(prog, env).asInstanceOf[TV].df
+        |ORDER BY department, feedback, name""".stripMargin) {
+      val prog = expr("q_survey_sugar", """
+        sort(r1 <- mut departments;
+             r3 <- (r2 <- mut responses;
+                    check(r2[department_id] == r1[department_id]);
+                    ret r2);
+             ret { name : r3[name], department : r1[department_name],
+                   feedback : r3[feedback] })""")
+      (s, dir) => {
+        val env = Env(Map.empty, Map(
+          "departments" -> Tables.load(s, dir, "nation")
+            .select(col("n_nationkey").as("department_id"),
+              col("n_name").as("department_name")),
+          "responses" -> Tables.load(s, dir, "supplier")
+            .select(col("s_name").as("name"),
+              col("s_nationkey").as("department_id"),
+              concat(lit("ok from "), col("s_name")).as("feedback"))), s)
+        rows(prog, env)
+      }
     },
 
     // AUTOMATIC incremental sum maintenance (fiat2/src/fiat2/SumAgg.v:
@@ -1279,33 +1019,26 @@ object LangQueries {
         |SELECT CAST(k AS BIGINT) AS k,
         |       CAST(s0 + 500 * k * (k + 1) AS BIGINT) AS s
         |FROM init, (VALUES (1), (2), (3), (4), (5)) t(k)
-        |ORDER BY k""".stripMargin) { (s, dir) =>
-      val kv = EVar("kv")
-      val sumRead = EACFold(AGSum,
-        EProj(LikeBag, ELoc("t"), "x", EAccess(EVar("x"), "v")))
-      val keys = (1L to 5L).foldRight[Expr](EAtom(ANil(TInt))) {
-        (k, acc) => EBinop(OCons, EAtom(AInt(k)), acc)
+        |ORDER BY k""".stripMargin) {
+      val prog = command("q_auto_ivm", """
+        let mut out := nil[{ k : int, s : int }] in
+        for kv in 1 :: 2 :: 3 :: 4 :: 5 :: nil[int] :
+          set t := { v : kv * 1000 } :: mut t;
+          set out := { k : kv, s : sum(mapBag (mut t) x x[v]) } :: mut out
+        end;
+        set result := mut out""")
+      (s, dir) => {
+        val t = Tables.load(s, dir, "orders")
+          .filter(col("o_custkey") < 2)
+          .select(col("o_orderkey").as("v"))
+        val env = Env(Map.empty, Map("t" -> t), s)
+        IvmTransf.runIncremental(prog, env).store("result").orderBy("k")
       }
-      val prog = CLetMut(
-        EAtom(ANil(TRecord.sorted("k" -> TInt, "s" -> TInt))), "out",
-        CSeq(
-          CForeach(keys, "kv", CSeq(
-            CAssign("t", EBinop(OCons,
-              ERecord(List("v" -> EBinop(OTimes, kv, EAtom(AInt(1000))))),
-              ELoc("t"))),
-            CAssign("out", EBinop(OCons,
-              ERecord(List("k" -> kv, "s" -> sumRead)), ELoc("out"))))),
-          CAssign("result", ELoc("out"))))
-      val t = Tables.load(s, dir, "orders")
-        .filter(col("o_custkey") < 2)
-        .select(col("o_orderkey").as("v"))
-      val env = Env(Map.empty, Map("t" -> t), s)
-      IvmTransf.runIncremental(prog, env).store("result").orderBy("k")
     },
 
     // The reference's FULL ex2 program (fiat2/src/fiat2/Ex_Survey.v:40-49,
     // minus its 10000× outer benchmark-repetition loop): a mutable SCALAR
-    // string cell (`all_feedback`) accumulated across a CForeach over the
+    // string cell (`all_feedback`) accumulated across a loop over the
     // SORTED join — string cells live in the interpreter's scalar store and
     // each `set` constant-folds to a single literal, so the loop builds no
     // plan tree and runs no jobs.
@@ -1314,35 +1047,35 @@ object LangQueries {
         |    s_name || ' from ' || n_name || ' wrote: ok from ' || s_name || chr(10),
         |    '' ORDER BY n_name, 'ok from ' || s_name, s_name), '') AS all_feedback
         |FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |WHERE n_nationkey < 3""".stripMargin) { (s, dir) =>
-      val comp = Parser.parseExpr(
-        """r1 <- mut departments;
-          |r3 <- (r2 <- mut responses;
-          |       check(r2[department_id] == r1[department_id]
-          |             && r1[department_id] < 3);
-          |       ret r2);
-          |ret { name : r3[name], department : r1[department_name],
-          |      feedback : r3[feedback] }""".stripMargin)
-      val body = Parser.parseCommand(
-        """let name = r[name] +++ " from " in
-          |let dep = r[department] +++ " wrote: " in
-          |let feedback = r[feedback] +++ "\n" in
-          |let line = name +++ dep +++ feedback in
-          |set all_feedback := mut all_feedback +++ line""".stripMargin)
-      val prog = CLetMut(EAtom(AString("")), "all_feedback",
-        CSeq(CForeach(ESort(LikeList, comp), "r", body),
-          CAssign("result", EBinop(OCons,
-            ERecord(List("all_feedback" -> ELoc("all_feedback"))),
-            EAtom(ANil(TRecord.sorted("all_feedback" -> TString)))))))
-      val env = Env(Map.empty, Map(
-        "departments" -> Tables.load(s, dir, "nation")
-          .select(col("n_nationkey").as("department_id"),
-            col("n_name").as("department_name")),
-        "responses" -> Tables.load(s, dir, "supplier")
-          .select(col("s_name").as("name"),
-            col("s_nationkey").as("department_id"),
-            concat(lit("ok from "), col("s_name")).as("feedback"))), s)
-      Interp.run(prog, env).store("result")
+        |WHERE n_nationkey < 3""".stripMargin) {
+      val prog = command("q_survey_ex2", """
+        let mut all_feedback := "" in
+        for r in sort(r1 <- mut departments;
+                      r3 <- (r2 <- mut responses;
+                             check(r2[department_id] == r1[department_id]
+                                   && r1[department_id] < 3);
+                             ret r2);
+                      ret { name : r3[name], department : r1[department_name],
+                            feedback : r3[feedback] }) :
+          let name = r[name] +++ " from " in
+          let dep = r[department] +++ " wrote: " in
+          let feedback = r[feedback] +++ "\n" in
+          let line = name +++ dep +++ feedback in
+          set all_feedback := mut all_feedback +++ line
+        end;
+        set result := { all_feedback : mut all_feedback }
+          :: nil[{ all_feedback : string }]""")
+      (s, dir) => {
+        val env = Env(Map.empty, Map(
+          "departments" -> Tables.load(s, dir, "nation")
+            .select(col("n_nationkey").as("department_id"),
+              col("n_name").as("department_name")),
+          "responses" -> Tables.load(s, dir, "supplier")
+            .select(col("s_name").as("name"),
+              col("s_nationkey").as("department_id"),
+              concat(lit("ok from "), col("s_name")).as("feedback"))), s)
+        Interp.run(prog, env).store("result")
+      }
     },
 
     // SQL EXTRACTION (fiat2/src/fiat2/ToPython.v:231-232 — the reference
@@ -1351,12 +1084,12 @@ object LangQueries {
     // extracted string then executes on Spark AND as its own DuckDB oracle
     // — extraction correctness is checked by construction.
     {
-      val src =
-        """s <- mut supplier;
-          |n <- mut nation;
-          |check(s[s_nationkey] == n[n_nationkey] && s[s_suppkey] < 30);
-          |ret { supp : s[s_name], nat : n[n_name], key2 : s[s_suppkey] * 2 }""".stripMargin
-      val text = ToSql(ESort(LikeList, Rewrites.normalize(Parser.parseExpr(src))))
+      val prog = expr("q_to_sql", """
+        s <- mut supplier;
+        n <- mut nation;
+        check(s[s_nationkey] == n[n_nationkey] && s[s_suppkey] < 30);
+        ret { supp : s[s_name], nat : n[n_name], key2 : s[s_suppkey] * 2 }""")
+      val text = ToSql(ESort(LikeList, Rewrites.normalize(prog)))
       GraftQuery.sql("q_to_sql", text) { (s, dir) =>
         Tables.registerAll(s, dir)
         s.sql(text)
@@ -1369,11 +1102,10 @@ object LangQueries {
     // aggregate) → extraction (ToPython analog) — with the one extracted
     // string executing on Spark and as its own DuckDB oracle.
     {
-      val src =
-        """fold (o <- mut orders; check(o[o_custkey] < 100); ret o[o_orderkey])
-          |  0 v acc v + acc""".stripMargin
-      val annotated = CollectionTransf.annotate(
-        Rewrites.normalize(Parser.parseExpr(src)))
+      val prog = expr("q_to_sql_agg", """
+        fold (o <- mut orders; check(o[o_custkey] < 100); ret o[o_orderkey])
+          0 v acc v + acc""")
+      val annotated = CollectionTransf.annotate(Rewrites.normalize(prog))
       require(!annotated.toString.contains("EFold("),
         "the sum fold must annotate to an aggregate before extraction")
       val text = ToSql(annotated)
@@ -1391,15 +1123,14 @@ object LangQueries {
     // so the script path and the single-query path are proved equal
     // across engines.
     {
-      val src =
-        """let mut big := (o <- mut orders;
-          |check(o[o_custkey] < 100);
-          |ret { ck : o[o_custkey], ok : o[o_orderkey] }) in
-          |set result := (b <- mut big;
-          |c <- mut customer;
-          |check(b[ck] == c[c_custkey]);
-          |ret { ok : b[ok], cust : c[c_name] })""".stripMargin
-      val prog = Rewrites.normalizeCommand(Parser.parseCommand(src))
+      val prog = Rewrites.normalizeCommand(command("q_to_sql_program", """
+        let mut big := (o <- mut orders;
+                        check(o[o_custkey] < 100);
+                        ret { ck : o[o_custkey], ok : o[o_orderkey] }) in
+        set result := (b <- mut big;
+                       c <- mut customer;
+                       check(b[ck] == c[c_custkey]);
+                       ret { ok : b[ok], cust : c[c_name] })"""))
       val script = ToSql.program(prog)
       require(script.length == 2 &&
         script.forall(_.startsWith("CREATE OR REPLACE TEMP VIEW")),
@@ -1419,15 +1150,12 @@ object LangQueries {
     },
 
     // Extraction of the set/bag algebra: distinct-count of the UNION ALL
-    // of two projections (ESetOf ∘ OConcat — CollectionTransf's target
-    // forms rendered as DISTINCT / UNION ALL, portable to both engines).
+    // of two projections (setof ∘ ++ — CollectionTransf's target forms
+    // rendered as DISTINCT / UNION ALL, portable to both engines).
     {
-      val prog = EACFold(AGCount, ESetOf(EBinop(OConcat,
-        EProj(LikeList, ELoc("customer"), "c",
-          ERecord(List("k" -> EAccess(EVar("c"), "c_nationkey")))),
-        EProj(LikeList, ELoc("supplier"), "s",
-          ERecord(List("k" -> EAccess(EVar("s"), "s_nationkey")))))))
-      val text = ToSql(prog)
+      val text = ToSql(expr("q_to_sql_setops", """
+        count(setof((map (mut customer) c { k : c[c_nationkey] })
+          ++ (map (mut supplier) s { k : s[s_nationkey] })))"""))
       GraftQuery.sql("q_to_sql_setops", text) { (s, dir) =>
         Tables.registerAll(s, dir)
         s.sql(text)
@@ -1459,116 +1187,99 @@ object LangQueries {
         |  (SELECT COALESCE(string_agg(name || ': ' || feedback || chr(10), ''
         |            ORDER BY department, feedback, name, salary), '')
         |   FROM resp WHERE department = 'CANADA') AS all_feedback,
-        |  (SELECT CAST(SUM(salary) AS BIGINT) FROM resp) AS total_salary""".stripMargin) { (s, dir) =>
-      val rowT = TRecord.sorted("department" -> TString,
-        "feedback" -> TString, "name" -> TString, "salary" -> TInt)
-      def rowLit(n: String, d: String, f: String, sal: Long) =
-        ERecord(List("name" -> EAtom(AString(n)),
-          "department" -> EAtom(AString(d)),
-          "feedback" -> EAtom(AString(f)),
-          "salary" -> EAtom(AInt(sal))))
-      val build = CAssign("responses",
-        EBinop(OCons, rowLit("zz_alice", "CANADA", "great", 120L),
-          EBinop(OCons, rowLit("zz_bob", "CANADA", "fine", 80L),
-            ELoc("responses"))))
-      val filterResponses = ESort(LikeList,
-        EFlatmap(LikeList, ELoc("responses"), "row",
-          EIf(EBinop(OEq, EAccess(EVar("row"), "department"),
-            EAtom(AString("CANADA"))),
-            EBinop(OCons, EVar("row"), EAtom(ANil(rowT))),
-            EAtom(ANil(rowT)))))
-      val query1 = CForeach(filterResponses, "r",
-        CLet(EBinop(OConcatString, EAccess(EVar("r"), "name"),
-          EAtom(AString(": "))), "nm",
-          CLet(EBinop(OConcatString, EAccess(EVar("r"), "feedback"),
-            EAtom(AString("\n"))), "fb",
-            CLet(EBinop(OConcatString, EVar("nm"), EVar("fb")), "line",
-              CAssign("all_feedback", EBinop(OConcatString,
-                ELoc("all_feedback"), EVar("line")))))))
-      val query2 = CAssign("sum_sal", EFold(
-        EFlatmap(LikeList, ELoc("responses"), "row",
-          EBinop(OCons, EAccess(EVar("row"), "salary"), EAtom(ANil(TInt)))),
-        EAtom(AInt(0)), "v", "acc",
-        EBinop(OPlus, EVar("v"), EVar("acc"))))
-      val prog = CLetMut(EAtom(AString("")), "all_feedback",
-        CLetMut(EAtom(AInt(0)), "sum_sal",
-          CSeq(build, CSeq(query1, CSeq(query2,
-            CAssign("result", EBinop(OCons, ERecord(List(
-              "all_feedback" -> ELoc("all_feedback"),
-              "total_salary" -> ELoc("sum_sal"))),
-              EAtom(ANil(TRecord.sorted("all_feedback" -> TString,
-                "total_salary" -> TInt))))))))))
-      val resp = Tables.load(s, dir, "supplier")
-        .join(Tables.load(s, dir, "nation"),
-          col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_name").as("name"), col("n_name").as("department"),
-          concat(lit("ok from "), col("s_name")).as("feedback"),
-          // residue-capped: the fixture tests composed-index structure,
-          // not width — a 27x id shift would push the TOTAL salary sum
-          // past int64 (identity at the driver SFs)
-          ((col("s_suppkey") % 100000) * 100).cast("long").as("salary"))
-      Optimize.run(prog, Env(Map.empty, Map("responses" -> resp), s,
-        storeTypes = Map("responses" -> TList(rowT))))
-        .store("result")
+        |  (SELECT CAST(SUM(salary) AS BIGINT) FROM resp) AS total_salary""".stripMargin) {
+      val row = "{ department : string, feedback : string, name : string, salary : int }"
+      val prog = command("q_combidx", s"""
+        let mut all_feedback := "" in
+        let mut sum_sal := 0 in
+        set responses :=
+          { name : "zz_alice", department : "CANADA", feedback : "great", salary : 120 }
+          :: { name : "zz_bob", department : "CANADA", feedback : "fine", salary : 80 }
+          :: mut responses;
+        for r in sort(flatmap (mut responses) row
+            if row[department] == "CANADA" then row :: nil[$row] else nil[$row]) :
+          let nm = r[name] +++ ": " in
+          let fb = r[feedback] +++ "\\n" in
+          let line = nm +++ fb in
+          set all_feedback := mut all_feedback +++ line
+        end;
+        set sum_sal := fold (flatmap (mut responses) row row[salary] :: nil[int])
+          (0) v acc v + acc;
+        set result := { all_feedback : mut all_feedback, total_salary : mut sum_sal }
+          :: nil[{ all_feedback : string, total_salary : int }]""")
+      (s, dir) => {
+        val resp = Tables.load(s, dir, "supplier")
+          .join(Tables.load(s, dir, "nation"),
+            col("s_nationkey") === col("n_nationkey"))
+          .select(col("s_name").as("name"), col("n_name").as("department"),
+            concat(lit("ok from "), col("s_name")).as("feedback"),
+            // residue-capped: the fixture tests composed-index structure,
+            // not width — a 27x id shift would push the TOTAL salary sum
+            // past int64 (identity at the driver SFs)
+            ((col("s_suppkey") % 100000) * 100).cast("long").as("salary"))
+        Optimize.run(prog, Env(Map.empty, Map("responses" -> resp), s,
+          storeTypes = Map("responses" -> TList(TRecord.sorted(
+            "department" -> TString, "feedback" -> TString,
+            "name" -> TString, "salary" -> TInt)))))
+          .store("result")
+      }
     },
 
-    // CLetMut-SCOPED incremental maintenance (the reference examples' own
-    // table-binding idiom, `CLetMut (ANil ty)`): a loop over the sorted
+    // SCOPED incremental maintenance (the reference examples' own
+    // table-binding idiom, `let mut t := nil[...]`): a loop over the sorted
     // nation keys inserts each key into a scoped table and reads the
     // running sum after each insert. Optimize introduces the sum cell as a
-    // nested scalar CLetMut — pure source rewrite, no store priming — so
+    // nested scalar binding — pure source rewrite, no store priming — so
     // the per-iteration read is O(1) instead of re-aggregating the growing
-    // table. Oracle: the cumulative sum as a window function.
+    // table; the pk index's O(1) count field is maintained as a cell too.
+    // Oracle: the cumulative sum as a window function.
     GraftQuery.sql("q_scoped_ivm",
       """SELECT CAST(n_nationkey AS BIGINT) AS k,
         |  CAST(SUM(n_nationkey) OVER (ORDER BY n_nationkey) AS BIGINT) AS s,
         |  CAST(row_number() OVER (ORDER BY n_nationkey) AS BIGINT) AS n
-        |FROM nation ORDER BY k""".stripMargin) { (s, dir) =>
-      val keysSrc = ESort(LikeList, EProj(LikeBag, ELoc("nation"), "n",
-        EAccess(EVar("n"), "n_nationkey")))
-      val sumRead = EACFold(AGSum,
-        EProj(LikeBag, ELoc("t"), "x", EAccess(EVar("x"), "v")))
-      val loop = CForeach(keysSrc, "kv", CSeq(
-        CAssign("t", EBinop(OCons, ERecord(List("v" -> EVar("kv"))),
-          ELoc("t"))),
-        CAssign("out", EBinop(OCons,
-          ERecord(List("k" -> EVar("kv"), "s" -> sumRead,
-            // the pk index's O(1) count field — maintained as a cell too
-            "n" -> EUnop(OLength, ELoc("t")))), ELoc("out")))))
-      val prog = CLetMut(EAtom(ANil(TRecord.sorted("v" -> TInt))), "t",
-        CLetMut(EAtom(ANil(TRecord.sorted("k" -> TInt, "s" -> TInt,
-          "n" -> TInt))), "out",
-          CSeq(loop, CAssign("result", ELoc("out")))))
-      val nation = Tables.load(s, dir, "nation").select(col("n_nationkey"))
-      Optimize.run(prog, Env(Map.empty, Map("nation" -> nation), s))
-        .store("result").orderBy("k")
+        |FROM nation ORDER BY k""".stripMargin) {
+      val prog = command("q_scoped_ivm", """
+        let mut t := nil[{ v : int }] in
+        let mut out := nil[{ k : int, n : int, s : int }] in
+        for kv in sort(mapBag (mut nation) n n[n_nationkey]) :
+          set t := { v : kv } :: mut t;
+          set out := { k : kv, s : sum(mapBag (mut t) x x[v]),
+            n : len(mut t) } :: mut out
+        end;
+        set result := mut out""")
+      (s, dir) => {
+        val nation = Tables.load(s, dir, "nation").select(col("n_nationkey"))
+        Optimize.run(prog, Env(Map.empty, Map("nation" -> nation), s))
+          .store("result").orderBy("k")
+      }
     },
 
     // COMPOSED indexes (fiat2/src/fiat2/IndexTransf.v:20-50 `compo_idx`):
-    // the source program — written in surface syntax — point-filters ONE
-    // table on TWO different attributes inside a loop. `IndexTransf`
-    // builds a composed index (both components from a single source scan)
-    // and routes each filter to the component keyed on its own attribute,
-    // the reference's record-of-indexes re-representation.
+    // the source program point-filters ONE table on TWO different
+    // attributes inside a loop. `IndexTransf` builds a composed index
+    // (both components from a single source scan) and routes each filter
+    // to the component keyed on its own attribute, the reference's
+    // record-of-indexes re-representation.
     GraftQuery.sql("q_compo_index",
       """SELECT CAST(k AS BIGINT) AS k,
         |  (SELECT COUNT(*) FROM orders WHERE o_custkey = k) AS nc,
         |  (SELECT COUNT(*) FROM orders WHERE o_orderkey = k * 100) AS nk
-        |FROM (VALUES (1), (2), (3)) t(k) ORDER BY k""".stripMargin) { (s, dir) =>
-      val src =
-        """let mut out := nil[{k : int, nc : int, nk : int}] in
-          |for kv in [1, 2, 3] :
-          |  set out := { k : kv,
-          |    nc : len(o <- mut orders; check(o[o_custkey] == kv); ret o),
-          |    nk : len(o <- mut orders; check(o[o_orderkey] == kv * 100); ret o)
-          |  } :: mut out
-          |end;
-          |set result := mut out""".stripMargin
-      val prog = Parser.parseCommand(src)
-      val orders = Tables.load(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"))
-      val env = Env(Map.empty, Map("orders" -> orders), s)
-      IndexTransf.runIndexed(prog, env).store("result").orderBy("k")
+        |FROM (VALUES (1), (2), (3)) t(k) ORDER BY k""".stripMargin) {
+      val prog = command("q_compo_index", """
+        let mut out := nil[{k : int, nc : int, nk : int}] in
+        for kv in [1, 2, 3] :
+          set out := { k : kv,
+            nc : len(o <- mut orders; check(o[o_custkey] == kv); ret o),
+            nk : len(o <- mut orders; check(o[o_orderkey] == kv * 100); ret o)
+          } :: mut out
+        end;
+        set result := mut out""")
+      (s, dir) => {
+        val orders = Tables.load(s, dir, "orders")
+          .select(col("o_orderkey"), col("o_custkey"))
+        val env = Env(Map.empty, Map("orders" -> orders), s)
+        IndexTransf.runIndexed(prog, env).store("result").orderBy("k")
+      }
     },
 
     // Composed index MAINTAINED through inserts (compo_idx_wf,
@@ -1581,25 +1292,26 @@ object LangQueries {
       """SELECT CAST(k AS BIGINT) AS k,
         |  (SELECT COUNT(*) FROM orders WHERE o_custkey = k) + 1 AS na,
         |  (SELECT COUNT(*) FROM orders WHERE o_orderkey = k + 1000000) + 1 AS nb
-        |FROM (VALUES (1), (2), (3)) t(k) ORDER BY k""".stripMargin) { (s, dir) =>
-      val src =
-        """let mut out := nil[{k : int, na : int, nb : int}] in
-          |for kv in [1, 2, 3] :
-          |  set orders := { o_orderkey : kv + 1000000, o_custkey : kv } :: mut orders;
-          |  set out := { k : kv,
-          |    na : len(o <- mut orders; check(o[o_custkey] == kv); ret o),
-          |    nb : len(o <- mut orders; check(o[o_orderkey] == kv + 1000000); ret o)
-          |  } :: mut out
-          |end;
-          |set result := mut out""".stripMargin
-      val prog = Parser.parseCommand(src)
-      val orders = Tables.load(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"))
-      val env = Env(Map.empty, Map("orders" -> orders), s)
-      IndexTransf.runIndexed(prog, env).store("result").orderBy("k")
+        |FROM (VALUES (1), (2), (3)) t(k) ORDER BY k""".stripMargin) {
+      val prog = command("q_compo_insert", """
+        let mut out := nil[{k : int, na : int, nb : int}] in
+        for kv in [1, 2, 3] :
+          set orders := { o_orderkey : kv + 1000000, o_custkey : kv } :: mut orders;
+          set out := { k : kv,
+            na : len(o <- mut orders; check(o[o_custkey] == kv); ret o),
+            nb : len(o <- mut orders; check(o[o_orderkey] == kv + 1000000); ret o)
+          } :: mut out
+        end;
+        set result := mut out""")
+      (s, dir) => {
+        val orders = Tables.load(s, dir, "orders")
+          .select(col("o_orderkey"), col("o_custkey"))
+        val env = Env(Map.empty, Map("orders" -> orders), s)
+        IndexTransf.runIndexed(prog, env).store("result").orderBy("k")
+      }
     },
 
-    // EFlatmap2 at TABLE level (fiat2/src/fiat2/Interpret.v:300-312): zip
+    // flatmap2 at TABLE level (fiat2/src/fiat2/Interpret.v:300-312): zip
     // the canonically-ordered customer and nation tables positionally —
     // the compiler's distributed zipWithIndex path (no single-partition
     // window) — cutting at the shorter side (25 nations), one record per
@@ -1613,32 +1325,28 @@ object LangQueries {
         |      FROM nation)
         |SELECT a.c_custkey AS ck, CAST(b.n_nationkey AS BIGINT) AS nk,
         |  b.n_name AS nname
-        |FROM a JOIN b USING (rn) ORDER BY ck, nk""".stripMargin) { (s, dir) =>
-      val rowT = TRecord.sorted(
-        "ck" -> TInt, "nk" -> TInt, "nname" -> TString)
-      val prog = EFlatmap2(ELoc("customer"), ELoc("nation"), "c", "n",
-        EBinop(OCons, ERecord(List(
-          "ck" -> EAccess(EVar("c"), "c_custkey"),
-          "nk" -> EAccess(EVar("n"), "n_nationkey"),
-          "nname" -> EAccess(EVar("n"), "n_name"))),
-          EAtom(ANil(rowT))))
-      val storeT = Map(
-        "customer" -> TBag(TRecord.sorted(
-          "c_custkey" -> TInt, "c_name" -> TString)),
-        "nation" -> TBag(TRecord.sorted(
-          "n_name" -> TString, "n_nationkey" -> TInt)))
-      val env = Env(Map.empty, Map(
-        "customer" -> Tables.load(s, dir, "customer")
-          .select(col("c_custkey"), col("c_name")),
-        "nation" -> Tables.load(s, dir, "nation")
-          .select(col("n_name"), col("n_nationkey"))), s,
-        storeTypes = storeT)
-      compile(prog, env).asInstanceOf[TV].df.orderBy("ck", "nk")
+        |FROM a JOIN b USING (rn) ORDER BY ck, nk""".stripMargin) {
+      val prog = expr("q_flatmap2_tables", """
+        flatmap2 (mut customer) (mut nation) c n
+          { ck : c[c_custkey], nk : n[n_nationkey], nname : n[n_name] }
+            :: nil[{ ck : int, nk : int, nname : string }]""")
+      val store = Store(
+        "customer" -> Seq("c_custkey" -> TInt, "c_name" -> TString),
+        "nation" -> Seq("n_name" -> TString, "n_nationkey" -> TInt))
+      (s, dir) => {
+        val env = Env(Map.empty, Map(
+          "customer" -> Tables.load(s, dir, "customer")
+            .select(col("c_custkey"), col("c_name")),
+          "nation" -> Tables.load(s, dir, "nation")
+            .select(col("n_name"), col("n_nationkey"))), s,
+          storeTypes = store.types)
+        compile(prog, env).asInstanceOf[TV].df.orderBy("ck", "nk")
+      }
     },
 
     // SCOPED composed index (the reference applies transf_to_idx UNDER
-    // each CLetMut — apply_below_n_letmuts, OptimizeAnno.v:282-288): the
-    // table is CLetMut-BOUND, not store-bound; the transform annotates the
+    // each let mut — apply_below_n_letmuts, OptimizeAnno.v:282-288): the
+    // table is let-mut-BOUND, not store-bound; the transform annotates the
     // binder (Env.indexHints), routes the two point filters to component
     // cells, and Interp builds the composed index when the cell binds.
     // Chain inserts in the loop maintain every component (compo_idx_wf),
@@ -1648,35 +1356,36 @@ object LangQueries {
       """SELECT CAST(k AS BIGINT) AS k,
         |  (SELECT COUNT(*) FROM orders WHERE o_custkey = k) + 1 AS na,
         |  (SELECT COUNT(*) FROM orders WHERE o_orderkey = k + 2000000) + 1 AS nb
-        |FROM (VALUES (1), (2), (3)) t(k) ORDER BY k""".stripMargin) { (s, dir) =>
-      val src =
-        """let mut tbl := mut orders in
-          |let mut out := nil[{k : int, na : int, nb : int}] in
-          |for kv in [1, 2, 3] :
-          |  set tbl := { o_orderkey : kv + 2000000, o_custkey : kv } :: mut tbl;
-          |  set out := { k : kv,
-          |    na : len(o <- mut tbl; check(o[o_custkey] == kv); ret o),
-          |    nb : len(o <- mut tbl; check(o[o_orderkey] == kv + 2000000); ret o)
-          |  } :: mut out
-          |end;
-          |set result := mut out""".stripMargin
-      val prog = Parser.parseCommand(src)
-      val orders = Tables.load(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"))
-      val env = Env(Map.empty, Map("orders" -> orders), s)
-      val (cmd, idxEnv) = IndexTransf.transform(
-        Rewrites.normalizeCommand(prog), env)
-      require(idxEnv.indexHints.get("tbl").exists(_.toSet ==
-        Set("o_custkey", "o_orderkey")), "scoped binder not annotated")
-      var routed = Set.empty[String]
-      Rewrites.mapExprs(cmd)(e => Rewrites.foldExpr(e) {
-        case f @ EFilter(_, ELoc(t), _, _) if t.contains("@") =>
-          routed += t; f
-        case other => other
-      })
-      require(routed == Set("tbl@o_custkey", "tbl@o_orderkey"),
-        s"filters not routed to components: $routed")
-      Interp.run(cmd, idxEnv).store("result").orderBy("k")
+        |FROM (VALUES (1), (2), (3)) t(k) ORDER BY k""".stripMargin) {
+      val prog = command("q_scoped_compo", """
+        let mut tbl := mut orders in
+        let mut out := nil[{k : int, na : int, nb : int}] in
+        for kv in [1, 2, 3] :
+          set tbl := { o_orderkey : kv + 2000000, o_custkey : kv } :: mut tbl;
+          set out := { k : kv,
+            na : len(o <- mut tbl; check(o[o_custkey] == kv); ret o),
+            nb : len(o <- mut tbl; check(o[o_orderkey] == kv + 2000000); ret o)
+          } :: mut out
+        end;
+        set result := mut out""")
+      (s, dir) => {
+        val orders = Tables.load(s, dir, "orders")
+          .select(col("o_orderkey"), col("o_custkey"))
+        val env = Env(Map.empty, Map("orders" -> orders), s)
+        val (cmd, idxEnv) = IndexTransf.transform(
+          Rewrites.normalizeCommand(prog), env)
+        require(idxEnv.indexHints.get("tbl").exists(_.toSet ==
+          Set("o_custkey", "o_orderkey")), "scoped binder not annotated")
+        var routed = Set.empty[String]
+        Rewrites.mapExprs(cmd)(e => Rewrites.foldExpr(e) {
+          case f @ EFilter(_, ELoc(t), _, _) if t.contains("@") =>
+            routed += t; f
+          case other => other
+        })
+        require(routed == Set("tbl@o_custkey", "tbl@o_orderkey"),
+          s"filters not routed to components: $routed")
+        Interp.run(cmd, idxEnv).store("result").orderBy("k")
+      }
     },
 
     // The ENTIRE lifecycle from surface text through the whole-pipeline
@@ -1690,27 +1399,28 @@ object LangQueries {
         |  (SELECT COUNT(*) FROM orders) + k AS n,
         |  (SELECT CAST(SUM(o_custkey % 1000000) AS BIGINT) FROM orders)
         |    + CAST((k*(k+1))/2 AS BIGINT) AS s
-        |FROM (VALUES (1), (2), (3)) t(k) ORDER BY k""".stripMargin) { (s, dir) =>
-      val src =
-        """let mut out := nil[{k : int, n : int, s : int}] in
-          |for kv in [1, 2, 3] :
-          |  set orders := { o_orderkey : kv + 1000000, o_custkey : kv } :: mut orders;
-          |  set out := { k : kv,
-          |    n : len(mut orders),
-          |    s : fold (o <- mut orders; ret o[o_custkey]) 0 v acc v + acc
-          |  } :: mut out
-          |end;
-          |set result := mut out""".stripMargin
-      val prog = Parser.parseCommand(src)
-      // this fixture tests the OPTIMIZER pipeline (recognition + IVM
-      // cells), not arithmetic width — cap the summed column to the
-      // sub-million residue (identity at the driver SFs; keeps the TInt
-      // fold inside Long at any replication factor, the r12 word-fixture
-      // mask stance)
-      val orders = Tables.load(s, dir, "orders")
-        .select(col("o_orderkey"), (col("o_custkey") % 1000000).as("o_custkey"))
-      Optimize.run(prog, Env(Map.empty, Map("orders" -> orders), s))
-        .store("result").orderBy("k")
+        |FROM (VALUES (1), (2), (3)) t(k) ORDER BY k""".stripMargin) {
+      val prog = command("q_optimize_surface", """
+        let mut out := nil[{k : int, n : int, s : int}] in
+        for kv in [1, 2, 3] :
+          set orders := { o_orderkey : kv + 1000000, o_custkey : kv } :: mut orders;
+          set out := { k : kv,
+            n : len(mut orders),
+            s : fold (o <- mut orders; ret o[o_custkey]) 0 v acc v + acc
+          } :: mut out
+        end;
+        set result := mut out""")
+      (s, dir) => {
+        // this fixture tests the OPTIMIZER pipeline (recognition + IVM
+        // cells), not arithmetic width — cap the summed column to the
+        // sub-million residue (identity at the driver SFs; keeps the TInt
+        // fold inside Long at any replication factor, the r12 word-fixture
+        // mask stance)
+        val orders = Tables.load(s, dir, "orders")
+          .select(col("o_orderkey"), (col("o_custkey") % 1000000).as("o_custkey"))
+        Optimize.run(prog, Env(Map.empty, Map("orders" -> orders), s))
+          .store("result").orderBy("k")
+      }
     },
 
     // The reference's BITMAP index end-to-end
@@ -1725,33 +1435,34 @@ object LangQueries {
       """SELECT CAST(k AS BIGINT) AS k,
         |  CAST(k AS BIGINT) * (SELECT COUNT(*) FROM orders WHERE o_custkey < 40
         |                       AND o_orderkey % 2 = 0) AS n
-        |FROM (VALUES (1), (2), (3)) t(k) ORDER BY k""".stripMargin) { (s, dir) =>
-      val src =
-        """let mut out := nil[{k : int, n : int}] in
-          |for kv in [1, 2, 3] :
-          |  set out := { k : kv,
-          |    n : kv * len(o <- mut orders;
-          |                 check(o[o_custkey] < 40 && o[o_orderkey] % 2 == 0);
-          |                 ret o) } :: mut out
-          |end;
-          |set result := mut out""".stripMargin
-      val prog = Parser.parseCommand(src)
-      val orders = Tables.load(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"))
-      val env = Env(Map.empty, Map("orders" -> orders), s)
-      val (cmd, idxEnv) = IndexTransf.transform(
-        Rewrites.normalizeCommand(prog), env)
-      require(idxEnv.store.contains("orders@bitmap0"),
-        "bitmap cell was not introduced")
-      var routed = false
-      Rewrites.mapExprs(cmd)(e => Rewrites.foldExpr(e) {
-        case pr @ EProj(_, EFilter(_, ELoc("orders@bitmap0"), x,
-            EAccess(EVar(x2), "@bit")), _, _) if x == x2 =>
-          routed = true; pr
-        case other => other
-      })
-      require(routed, s"filter not bitmap-routed:\n$cmd")
-      Interp.run(cmd, idxEnv).store("result").orderBy("k")
+        |FROM (VALUES (1), (2), (3)) t(k) ORDER BY k""".stripMargin) {
+      val prog = command("q_bitmap_routed", """
+        let mut out := nil[{k : int, n : int}] in
+        for kv in [1, 2, 3] :
+          set out := { k : kv,
+            n : kv * len(o <- mut orders;
+                         check(o[o_custkey] < 40 && o[o_orderkey] % 2 == 0);
+                         ret o) } :: mut out
+        end;
+        set result := mut out""")
+      (s, dir) => {
+        val orders = Tables.load(s, dir, "orders")
+          .select(col("o_orderkey"), col("o_custkey"))
+        val env = Env(Map.empty, Map("orders" -> orders), s)
+        val (cmd, idxEnv) = IndexTransf.transform(
+          Rewrites.normalizeCommand(prog), env)
+        require(idxEnv.store.contains("orders@bitmap0"),
+          "bitmap cell was not introduced")
+        var routed = false
+        Rewrites.mapExprs(cmd)(e => Rewrites.foldExpr(e) {
+          case pr @ EProj(_, EFilter(_, ELoc("orders@bitmap0"), x,
+              EAccess(EVar(x2), "@bit")), _, _) if x == x2 =>
+            routed = true; pr
+          case other => other
+        })
+        require(routed, s"filter not bitmap-routed:\n$cmd")
+        Interp.run(cmd, idxEnv).store("result").orderBy("k")
+      }
     },
 
     // The Optimize.v COLUMN family end-to-end: a surface join over
@@ -1759,38 +1470,37 @@ object LangQueries {
     // through the whole pipeline; the narrowing pass (proj_pushdown_left/
     // right/filter, Optimize.v:966-1135 via Pruning.narrow) wraps each join
     // input in a make_record projection of just the used columns — asserted
-    // on the transformed AST below — and the routed program still matches
-    // the oracle. Catalyst would prune the physical scan regardless; the
-    // assertion is that OUR optimizer performs the reference's rewrite.
+    // on the transformed program below — and the routed program still
+    // matches the oracle. Catalyst would prune the physical scan regardless;
+    // the assertion is that OUR optimizer performs the reference's rewrite.
     GraftQuery.sql("q_pruned_join",
       """SELECT o_orderkey AS okey, c_name AS cust
         |FROM orders JOIN customer ON o_custkey = c_custkey
         |WHERE o_custkey < 40
-        |ORDER BY okey, cust""".stripMargin) { (s, dir) =>
-      val src =
-        """set result := (o <- mut orders;
-          |c <- mut customer;
-          |check(o[o_custkey] == c[c_custkey] && o[o_custkey] < 40);
-          |ret { okey : o[o_orderkey], cust : c[c_name] })""".stripMargin
-      val prog = Parser.parseCommand(src)
-      val env = Env(Map.empty, Map(
-        "orders" -> Tables.load(s, dir, "orders"),
-        "customer" -> Tables.load(s, dir, "customer")), s)
-      val (cmd, primed) = Optimize.transform(prog, env)
+        |ORDER BY okey, cust""".stripMargin) {
+      val prog = command("q_pruned_join", """
+        set result := (o <- mut orders;
+                       c <- mut customer;
+                       check(o[o_custkey] == c[c_custkey] && o[o_custkey] < 40);
+                       ret { okey : o[o_orderkey], cust : c[c_name] })""")
       def narrowCols(e: Expr): Option[Seq[String]] = e match {
         case EProj(_, ELoc(_), _, ERecord(fs)) => Some(fs.map(_._1))
         case EFilter(_, inner, _, _) => narrowCols(inner)
         case _ => None
       }
-      cmd match {
-        case CAssign("result", EJoin(_, l1, l2, _, _, _, _)) =>
-          require(narrowCols(l1).contains(Seq("o_custkey", "o_orderkey")),
-            s"left join input not narrowed: $l1")
-          require(narrowCols(l2).contains(Seq("c_custkey", "c_name")),
-            s"right join input not narrowed: $l2")
-        case other => sys.error(s"unexpected optimized command: $other")
+      (s, dir) => {
+        val env = Env(Map.empty, tables(s, dir, "orders", "customer"), s)
+        val (cmd, primed) = Optimize.transform(prog, env)
+        cmd match {
+          case CAssign("result", EJoin(_, l1, l2, _, _, _, _)) =>
+            require(narrowCols(l1).contains(Seq("o_custkey", "o_orderkey")),
+              s"left join input not narrowed: $l1")
+            require(narrowCols(l2).contains(Seq("c_custkey", "c_name")),
+              s"right join input not narrowed: $l2")
+          case other => sys.error(s"unexpected optimized command: $other")
+        }
+        Interp.run(cmd, primed).store("result").orderBy("okey", "cust")
       }
-      Interp.run(cmd, primed).store("result").orderBy("okey", "cust")
     },
 
     // The full reference lifecycle from SOURCE TEXT (SURVEY.md §3.1): a
@@ -1806,69 +1516,58 @@ object LangQueries {
         |       o_orderkey % 7 AS bucket
         |FROM orders JOIN customer ON o_custkey = c_custkey
         |WHERE o_custkey < 50
-        |ORDER BY okey, cust, bucket""".stripMargin) { (s, dir) =>
-      val src =
-        """o <- mut orders;
-          |c <- mut customer;
-          |check(o[o_custkey] == c[c_custkey] && o[o_custkey] < 50);
-          |ret { okey : o[o_orderkey], cust : c[c_name],
-          |      bucket : o[o_orderkey] % 7 }""".stripMargin
+        |ORDER BY okey, cust, bucket""".stripMargin) {
       val rowT = TRecord.sorted(
         "okey" -> TInt, "cust" -> TString, "bucket" -> TInt)
-      val storeT = Map(
-        "orders" -> TBag(TRecord.sorted(
-          "o_orderkey" -> TInt, "o_custkey" -> TInt)),
-        "customer" -> TBag(TRecord.sorted(
-          "c_custkey" -> TInt, "c_name" -> TString)))
-      val parsed = Parser.parseExpr(src)
-      val prog = TypeCheck.analyze(parsed, TList(rowT), Map.empty, storeT)
+      val storeT = Store(
+        "orders" -> Seq("o_orderkey" -> TInt, "o_custkey" -> TInt),
+        "customer" -> Seq("c_custkey" -> TInt, "c_name" -> TString)).types
+      val prog = TypeCheck.analyze(expr("q_surface_syntax", """
+        o <- mut orders;
+        c <- mut customer;
+        check(o[o_custkey] == c[c_custkey] && o[o_custkey] < 50);
+        ret { okey : o[o_orderkey], cust : c[c_name],
+              bucket : o[o_orderkey] % 7 }"""), TList(rowT), Map.empty, storeT)
       require(TypeCheck.synthesize(prog, Map.empty, storeT) == TList(rowT))
-      val env = Env(Map.empty, Map(
-        "orders" -> Tables.load(s, dir, "orders")
-          .select(col("o_orderkey"), col("o_custkey")),
-        "customer" -> Tables.load(s, dir, "customer")
-          .select(col("c_custkey"), col("c_name"))), s)
-      compileProgram(prog, env).asInstanceOf[TV].df
-        .orderBy("okey", "cust", "bucket")
+      (s, dir) => {
+        val env = Env(Map.empty, Map(
+          "orders" -> Tables.load(s, dir, "orders")
+            .select(col("o_orderkey"), col("o_custkey")),
+          "customer" -> Tables.load(s, dir, "customer")
+            .select(col("c_custkey"), col("c_name"))), s)
+        rows(prog, env).orderBy("okey", "cust", "bucket")
+      }
     },
 
     // CORRELATED COMPREHENSION through the FULL user path: surface syntax
     // → parse → typecheck (hole elaboration) → normalize → DECORRELATE.
     // The inner comprehension's check references the outer binder with a
     // non-equi predicate, so after normalization the body is
-    // EProj(EFilter(EFilter(supplier, <correlated non-equi>), <equi>)) —
-    // not a dependentBodyToJoin shape — and the compiler's decorrelate()
-    // lowers the whole thing to one aliased θ-join (the reference would
-    // interpret it as a nested loop, Interpret.v:273-299).
+    // a projection of two stacked filters (the correlated non-equi one
+    // under the equi one) — not a dependentBodyToJoin shape — and the
+    // compiler's decorrelate() lowers the whole thing to one aliased
+    // θ-join (the reference would interpret it as a nested loop,
+    // Interpret.v:273-299).
     GraftQuery.sql("q_surface_decorrelate",
       """SELECT n_name AS nat, s_name AS sup
         |FROM nation JOIN supplier
         |  ON s_suppkey * 4 < n_nationkey * 50 + 40
         | AND s_nationkey = n_nationkey
-        |ORDER BY nat, sup""".stripMargin) { (s, dir) =>
-      val src =
-        """n <- mut nation;
-          |s <- (t <- mut supplier; check(t[s_suppkey] * 4 < n[n_nationkey] * 50 + 40); ret t);
-          |check(s[s_nationkey] == n[n_nationkey]);
-          |ret { nat : n[n_name], sup : s[s_name] }""".stripMargin
+        |ORDER BY nat, sup""".stripMargin) {
       val rowT = TRecord.sorted("nat" -> TString, "sup" -> TString)
-      val storeT = Map(
-        "nation" -> TBag(TRecord.sorted(
-          "n_nationkey" -> TInt, "n_name" -> TString)),
-        "supplier" -> TBag(TRecord.sorted(
-          "s_suppkey" -> TInt, "s_name" -> TString, "s_nationkey" -> TInt)))
-      val parsed = Parser.parseExpr(src)
-      val prog = TypeCheck.analyze(parsed, TList(rowT), Map.empty, storeT)
-      require(TypeCheck.synthesize(prog, Map.empty, storeT) == TList(rowT))
-      val env = Env(Map.empty, Map(
-        "nation" -> Tables.load(s, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("n_nationkey"),
-            col("n_name")),
-        "supplier" -> Tables.load(s, dir, "supplier")
-          .select(col("s_suppkey").cast("long").as("s_suppkey"),
-            col("s_name"), col("s_nationkey").cast("long").as("s_nationkey"))),
-        s)
-      compileProgram(prog, env).asInstanceOf[TV].df.orderBy("nat", "sup")
+      val store = Store(
+        "nation" -> Seq("n_nationkey" -> TInt, "n_name" -> TString),
+        "supplier" -> Seq("s_suppkey" -> TInt, "s_name" -> TString,
+          "s_nationkey" -> TInt))
+      val prog = TypeCheck.analyze(expr("q_surface_decorrelate", """
+        n <- mut nation;
+        s <- (t <- mut supplier; check(t[s_suppkey] * 4 < n[n_nationkey] * 50 + 40); ret t);
+        check(s[s_nationkey] == n[n_nationkey]);
+        ret { nat : n[n_name], sup : s[s_name] }"""),
+        TList(rowT), Map.empty, store.types)
+      require(TypeCheck.synthesize(prog, Map.empty, store.types) == TList(rowT))
+      (s, dir) => rows(prog, store.bind(Env(Map.empty, Map.empty, s), dir))
+        .orderBy("nat", "sup")
     },
 
     // TWord machine-word family (fiat2/src/fiat2/Language.v:80-107, semantics
@@ -1894,30 +1593,14 @@ object LangQueries {
         |  CAST(wmu - (CASE WHEN wmu >= 9223372036854775808 THEN 18446744073709551616 ELSE 0 END) AS BIGINT) AS wm,
         |  uw < 100 AS ult,
         |  w < 100 AS slt
-        |FROM u ORDER BY k""".stripMargin) { (s, dir) =>
-      val w = EAccess(EVar("o"), "w")
-      def W(v: Long) = EAtom(AWord(v))
-      val prog = EProj(LikeBag, ELoc("t"), "o", ERecord(List(
-        "k" -> EAccess(EVar("o"), "k"),
-        "du" -> EBinop(OWDivU, w, W(7)),
-        "ds" -> EBinop(OWDivS, w, W(-7)),
-        "mu" -> EBinop(OWModU, w, W(7)),
-        "ms" -> EBinop(OWModS, w, W(-7)),
-        "dz" -> EBinop(OWDivU, w, W(0)),
-        "mz" -> EBinop(OWModS, w, W(0)),
-        "wm" -> EBinop(OWTimes, w, W(-7046029254386353131L)),
-        "ult" -> EBinop(OWLessU, w, W(100)),
-        "slt" -> EBinop(OWLessS, w, W(100)))))
-      val rowT = TRecord.sorted("k" -> TInt, "du" -> TWord, "ds" -> TWord,
-        "mu" -> TWord, "ms" -> TWord, "dz" -> TWord, "mz" -> TWord,
-        "wm" -> TWord, "ult" -> TBool, "slt" -> TBool)
-      val storeT = Map("t" -> TBag(TRecord.sorted("k" -> TInt, "w" -> TWord)))
-      require(TypeCheck.synthesize(prog, Map.empty, storeT) == TBag(rowT))
-      val t = Tables.load(s, dir, "orders")
-        .select(col("o_orderkey").as("k"),
-          (col("o_orderkey") - 700).cast("long").as("w"))
-      compileProgram(prog, Env(Map.empty, Map("t" -> t), s))
-        .asInstanceOf[TV].df.orderBy("k")
+        |FROM u ORDER BY k""".stripMargin) {
+      val prog = wordBattery("q_word_ops", -7046029254386353131L, None)
+      (s, dir) => {
+        val t = Tables.load(s, dir, "orders")
+          .select(col("o_orderkey").as("k"),
+            (col("o_orderkey") - 700).cast("long").as("w"))
+        rows(prog, Env(Map.empty, Map("t" -> t), s)).orderBy("k")
+      }
     },
 
     // WIDTH-32 words (the reference is width-parametric — `Section
@@ -1926,7 +1609,7 @@ object LangQueries {
     // codegen family over the sign-extended-Int-in-Long representation).
     // Same op battery as q_word_ops, plus a wrap-around add at
     // Int.MaxValue; the multiply constant 2654435761 exceeds 2^31, so the
-    // AWord literal itself is canonicalized by truncation. The oracle
+    // word literal itself is canonicalized by truncation. The oracle
     // replays 32-bit two's complement with BIGINT math wrapped mod 2^32.
     GraftQuery.sql("q_word_ops32",
       """WITH t AS (SELECT o_orderkey AS k,
@@ -1951,37 +1634,21 @@ object LangQueries {
         |  CAST(wa32 AS BIGINT) AS wa,
         |  uw < 100 AS ult,
         |  w < 100 AS slt
-        |FROM u ORDER BY k""".stripMargin) { (s, dir) =>
-      val w = EAccess(EVar("o"), "w")
-      def W(v: Long) = EAtom(AWord(v))
-      val prog = EProj(LikeBag, ELoc("t"), "o", ERecord(List(
-        "k" -> EAccess(EVar("o"), "k"),
-        "du" -> EBinop(OWDivU, w, W(7)),
-        "ds" -> EBinop(OWDivS, w, W(-7)),
-        "mu" -> EBinop(OWModU, w, W(7)),
-        "ms" -> EBinop(OWModS, w, W(-7)),
-        "dz" -> EBinop(OWDivU, w, W(0)),
-        "mz" -> EBinop(OWModS, w, W(0)),
-        "wm" -> EBinop(OWTimes, w, W(2654435761L)),
-        "wa" -> EBinop(OWPlus, w, W(2147483647L)),
-        "ult" -> EBinop(OWLessU, w, W(100)),
-        "slt" -> EBinop(OWLessS, w, W(100)))))
-      val rowT = TRecord.sorted("k" -> TInt, "du" -> TWord, "ds" -> TWord,
-        "mu" -> TWord, "ms" -> TWord, "dz" -> TWord, "mz" -> TWord,
-        "wm" -> TWord, "wa" -> TWord, "ult" -> TBool, "slt" -> TBool)
-      val storeT = Map("t" -> TBag(TRecord.sorted("k" -> TInt, "w" -> TWord)))
-      require(TypeCheck.synthesize(prog, Map.empty, storeT) == TBag(rowT))
-      // the store column must hold the CANONICAL width-32 form
-      // (sign-extended Int in a Long) — at 9x+ corpora o_orderkey passes
-      // 2^31 and the raw difference is not a 32-bit word; mask both
-      // engines identically (identity at the driver SFs)
-      val raw = (col("o_orderkey") - 700).cast("long")
-      val canon32 = (((raw % 4294967296L) + 4294967296L + 2147483648L)
-        % 4294967296L) - 2147483648L
-      val t = Tables.load(s, dir, "orders")
-        .select(col("o_orderkey").as("k"), canon32.as("w"))
-      compileProgram(prog, Env(Map.empty, Map("t" -> t), s, wordWidth = 32))
-        .asInstanceOf[TV].df.orderBy("k")
+        |FROM u ORDER BY k""".stripMargin) {
+      val prog = wordBattery("q_word_ops32", 2654435761L, Some(2147483647L))
+      (s, dir) => {
+        // the store column must hold the CANONICAL width-32 form
+        // (sign-extended Int in a Long) — at 9x+ corpora o_orderkey passes
+        // 2^31 and the raw difference is not a 32-bit word; mask both
+        // engines identically (identity at the driver SFs)
+        val raw = (col("o_orderkey") - 700).cast("long")
+        val canon32 = (((raw % 4294967296L) + 4294967296L + 2147483648L)
+          % 4294967296L) - 2147483648L
+        val t = Tables.load(s, dir, "orders")
+          .select(col("o_orderkey").as("k"), canon32.as("w"))
+        rows(prog, Env(Map.empty, Map("t" -> t), s, wordWidth = 32))
+          .orderBy("k")
+      }
     },
 
     // WIDTH-100 words — the WIDE family (WordBinOpWide: unsigned residues
@@ -2016,43 +1683,25 @@ object LangQueries {
         |       % 1267650600228229401496703205376 AS VARCHAR) AS wa,
         |  uw < 100 AS ult,
         |  sw < 100 AS slt
-        |FROM u ORDER BY k""".stripMargin) { (s, dir) =>
-      val w = EAccess(EVar("o"), "w")
-      def W(v: Long) = EAtom(AWord(v))
-      val prog = EProj(LikeBag, ELoc("t"), "o", ERecord(List(
-        "k" -> EAccess(EVar("o"), "k"),
-        "du" -> EBinop(OWDivU, w, W(7)),
-        "ds" -> EBinop(OWDivS, w, W(-7)),
-        "mu" -> EBinop(OWModU, w, W(7)),
-        "ms" -> EBinop(OWModS, w, W(-7)),
-        "dz" -> EBinop(OWDivU, w, W(0)),
-        "mz" -> EBinop(OWModS, w, W(0)),
-        "wm" -> EBinop(OWTimes, w, W(12345L)),
-        "wa" -> EBinop(OWPlus, w, W(-1000L)),
-        "ult" -> EBinop(OWLessU, w, W(100)),
-        "slt" -> EBinop(OWLessS, w, W(100)))))
-      val rowT = TRecord.sorted("k" -> TInt, "du" -> TWord, "ds" -> TWord,
-        "mu" -> TWord, "ms" -> TWord, "dz" -> TWord, "mz" -> TWord,
-        "wm" -> TWord, "wa" -> TWord, "ult" -> TBool, "slt" -> TBool)
-      val storeT = Map("t" -> TBag(TRecord.sorted("k" -> TInt, "w" -> TWord)))
-      require(TypeCheck.synthesize(prog, Map.empty, storeT) == TBag(rowT))
-      val dt100 = org.apache.spark.sql.types.DecimalType(38, 0)
-      val m100 = lit(new java.math.BigDecimal(
-        "1267650600228229401496703205376")).cast(dt100)
-      val sw = (col("o_orderkey") - 700).cast(dt100)
-      val t = Tables.load(s, dir, "orders")
-        .select(col("o_orderkey").as("k"),
-          when(sw < 0, sw + m100).otherwise(sw).cast(dt100).as("w"))
-      val out = compileProgram(prog,
-        Env(Map.empty, Map("t" -> t), s, wordWidth = 100))
-        .asInstanceOf[TV].df
-      // 100-bit residues cross the engine boundary as STRINGS: the
-      // comparison layer renders wide decimals through float64 (and the
-      // driver hash is type-sensitive), so digits are the only exact
-      // cross-engine carrier at this magnitude
-      val wordCols = Seq("du", "ds", "mu", "ms", "dz", "mz", "wm", "wa")
-      out.select(col("k") +: (wordCols.map(c => col(c).cast("string").as(c))
-        ++ Seq(col("ult"), col("slt"))): _*).orderBy("k")
+        |FROM u ORDER BY k""".stripMargin) {
+      val prog = wordBattery("q_word_ops100", 12345L, Some(-1000L))
+      (s, dir) => {
+        val dt100 = org.apache.spark.sql.types.DecimalType(38, 0)
+        val m100 = lit(new java.math.BigDecimal(
+          "1267650600228229401496703205376")).cast(dt100)
+        val sw = (col("o_orderkey") - 700).cast(dt100)
+        val t = Tables.load(s, dir, "orders")
+          .select(col("o_orderkey").as("k"),
+            when(sw < 0, sw + m100).otherwise(sw).cast(dt100).as("w"))
+        val out = rows(prog, Env(Map.empty, Map("t" -> t), s, wordWidth = 100))
+        // 100-bit residues cross the engine boundary as STRINGS: the
+        // comparison layer renders wide decimals through float64 (and the
+        // driver hash is type-sensitive), so digits are the only exact
+        // cross-engine carrier at this magnitude
+        val wordCols = Seq("du", "ds", "mu", "ms", "dz", "mz", "wm", "wa")
+        out.select(col("k") +: (wordCols.map(c => col(c).cast("string").as(c))
+          ++ Seq(col("ult"), col("slt"))): _*).orderBy("k")
+      }
     },
 
     // WIDTH-256 words — the MULTI-LIMB family (WordBinOpBytes: unsigned
@@ -2131,43 +1780,25 @@ object LangQueries {
         |  CAST(wa2 AS VARCHAR) AS wa_2, CAST(wa3 AS VARCHAR) AS wa_3,
         |  sw >= 0 AND sw < 100 AS ult,
         |  sw < 100 AS slt
-        |FROM s1 ORDER BY k""".stripMargin) { (s, dir) =>
-      val w = EAccess(EVar("o"), "w")
-      def W(v: Long) = EAtom(AWord(v))
-      val prog = EProj(LikeBag, ELoc("t"), "o", ERecord(List(
-        "k" -> EAccess(EVar("o"), "k"),
-        "du" -> EBinop(OWDivU, w, W(7)),
-        "ds" -> EBinop(OWDivS, w, W(-7)),
-        "mu" -> EBinop(OWModU, w, W(7)),
-        "ms" -> EBinop(OWModS, w, W(-7)),
-        "dz" -> EBinop(OWDivU, w, W(0)),
-        "mz" -> EBinop(OWModS, w, W(0)),
-        "wm" -> EBinop(OWTimes, w, W(12345L)),
-        "wa" -> EBinop(OWPlus, w, W(-1000L)),
-        "ult" -> EBinop(OWLessU, w, W(100)),
-        "slt" -> EBinop(OWLessS, w, W(100)))))
-      val rowT = TRecord.sorted("k" -> TInt, "du" -> TWord, "ds" -> TWord,
-        "mu" -> TWord, "ms" -> TWord, "dz" -> TWord, "mz" -> TWord,
-        "wm" -> TWord, "wa" -> TWord, "ult" -> TBool, "slt" -> TBool)
-      val storeT = Map("t" -> TBag(TRecord.sorted("k" -> TInt, "w" -> TWord)))
-      require(TypeCheck.synthesize(prog, Map.empty, storeT) == TBag(rowT))
-      val fam = graft.functions.WordOps.forWidth(256)
-        .asInstanceOf[graft.functions.WordOps.Bytes]
-      val t = Tables.load(s, dir, "orders")
-        .select(col("o_orderkey").as("k"),
-          fam.fromLong((col("o_orderkey") - 700).cast("long")).as("w"))
-      val out = compileProgram(prog,
-        Env(Map.empty, Map("t" -> t), s, wordWidth = 256))
-        .asInstanceOf[TV].df
-      // 256-bit residues cross the engine boundary as FOUR decimal limb
-      // strings (base 2^64, limb 0 most significant): hex() renders the
-      // fixed 32-byte value as 64 nibbles, each 16-nibble slice converts
-      // with the codegen'd conv — no custom expression on the way out
-      def limbs(c: String) = (0 until 4).map(i =>
-        conv(substring(hex(col(c)), 1 + 16 * i, 16), 16, 10).as(s"${c}_$i"))
-      val wordCols256 = Seq("du", "ds", "mu", "ms", "dz", "mz", "wm", "wa")
-      out.select((col("k") +: wordCols256.flatMap(limbs)) ++
-        Seq(col("ult"), col("slt")): _*).orderBy("k")
+        |FROM s1 ORDER BY k""".stripMargin) {
+      val prog = wordBattery("q_word_ops256", 12345L, Some(-1000L))
+      (s, dir) => {
+        val fam = graft.functions.WordOps.forWidth(256)
+          .asInstanceOf[graft.functions.WordOps.Bytes]
+        val t = Tables.load(s, dir, "orders")
+          .select(col("o_orderkey").as("k"),
+            fam.fromLong((col("o_orderkey") - 700).cast("long")).as("w"))
+        val out = rows(prog, Env(Map.empty, Map("t" -> t), s, wordWidth = 256))
+        // 256-bit residues cross the engine boundary as FOUR decimal limb
+        // strings (base 2^64, limb 0 most significant): hex() renders the
+        // fixed 32-byte value as 64 nibbles, each 16-nibble slice converts
+        // with the codegen'd conv — no custom expression on the way out
+        def limbs(c: String) = (0 until 4).map(i =>
+          conv(substring(hex(col(c)), 1 + 16 * i, 16), 16, 10).as(s"${c}_$i"))
+        val wordCols256 = Seq("du", "ds", "mu", "ms", "dz", "mz", "wm", "wa")
+        out.select((col("k") +: wordCols256.flatMap(limbs)) ++
+          Seq(col("ult"), col("slt")): _*).orderBy("k")
+      }
     },
 
     // WIDTH-16 words — exercises the GENERIC width family (WordBinOpW:
@@ -2175,7 +1806,7 @@ object LangQueries {
     // canonical form), not the specialized 64/32 paths. o_orderkey exceeds
     // 2^15 at every SF, so the input column itself must be canonicalized
     // (shiftleft/shiftright 48 = sign-extend the low 16 bits); the wrap
-    // multiply constant 40503 exceeds 2^15, so the AWord literal is
+    // multiply constant 40503 exceeds 2^15, so the word literal is
     // canonicalized by truncation too. The oracle replays 16-bit two's
     // complement with BIGINT math wrapped mod 2^16.
     GraftQuery.sql("q_word_ops16",
@@ -2199,72 +1830,54 @@ object LangQueries {
         |  CAST(wa16 AS BIGINT) AS wa,
         |  uw < 100 AS ult,
         |  w < 100 AS slt
-        |FROM u ORDER BY k""".stripMargin) { (s, dir) =>
-      val w = EAccess(EVar("o"), "w")
-      def W(v: Long) = EAtom(AWord(v))
-      val prog = EProj(LikeBag, ELoc("t"), "o", ERecord(List(
-        "k" -> EAccess(EVar("o"), "k"),
-        "du" -> EBinop(OWDivU, w, W(7)),
-        "ds" -> EBinop(OWDivS, w, W(-7)),
-        "mu" -> EBinop(OWModU, w, W(7)),
-        "ms" -> EBinop(OWModS, w, W(-7)),
-        "dz" -> EBinop(OWDivU, w, W(0)),
-        "mz" -> EBinop(OWModS, w, W(0)),
-        "wm" -> EBinop(OWTimes, w, W(40503L)),
-        "wa" -> EBinop(OWPlus, w, W(32767L)),
-        "ult" -> EBinop(OWLessU, w, W(100)),
-        "slt" -> EBinop(OWLessS, w, W(100)))))
-      val rowT = TRecord.sorted("k" -> TInt, "du" -> TWord, "ds" -> TWord,
-        "mu" -> TWord, "ms" -> TWord, "dz" -> TWord, "mz" -> TWord,
-        "wm" -> TWord, "wa" -> TWord, "ult" -> TBool, "slt" -> TBool)
-      val storeT = Map("t" -> TBag(TRecord.sorted("k" -> TInt, "w" -> TWord)))
-      require(TypeCheck.synthesize(prog, Map.empty, storeT) == TBag(rowT))
-      val t = Tables.load(s, dir, "orders")
-        .select(col("o_orderkey").as("k"),
-          shiftright(shiftleft((col("o_orderkey") - 700).cast("long"), 48), 48)
-            .as("w"))
-      compileProgram(prog, Env(Map.empty, Map("t" -> t), s, wordWidth = 16))
-        .asInstanceOf[TV].df.orderBy("k")
+        |FROM u ORDER BY k""".stripMargin) {
+      val prog = wordBattery("q_word_ops16", 40503L, Some(32767L))
+      (s, dir) => {
+        val t = Tables.load(s, dir, "orders")
+          .select(col("o_orderkey").as("k"),
+            shiftright(shiftleft((col("o_orderkey") - 700).cast("long"), 48), 48)
+              .as("w"))
+        rows(prog, Env(Map.empty, Map("t" -> t), s, wordWidth = 16))
+          .orderBy("k")
+      }
     },
 
     // Collection-kind annotation (fiat2/src/fiat2/CollectionTransf.v:6-51):
     // the SOURCE program is written with sequential list folds — the sum
-    // idiom, OLength, and the option-match running-minimum — over a
-    // LikeList filter→proj pipeline. CollectionTransf.annotate recognizes
-    // them as declarative bag/set aggregates and re-kinds the pipeline
-    // beneath (push_down_collection), so the compiled form is a distributed
-    // agg over the pushed-down filter, never a driver-side fold.
+    // idiom, len, and the option-match running-minimum — over a list
+    // filter→map pipeline. CollectionTransf.annotate recognizes them as
+    // declarative bag/set aggregates and re-kinds the pipeline beneath
+    // (push_down_collection), so the compiled form is a distributed agg
+    // over the pushed-down filter, never a driver-side fold.
     GraftQuery.sql("q_collection_annotate",
       """SELECT CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
         |       COUNT(*) AS n_rows,
         |       CAST(MIN(CAST(l_quantity AS BIGINT)) AS BIGINT) AS min_qty
-        |FROM lineitem WHERE l_returnflag = 'R'""".stripMargin) { (s, dir) =>
-      val src = EProj(LikeList,
-        EFilter(LikeList, ELoc("lineitem"), "l",
-          EBinop(OEq, EAccess(EVar("l"), "l_returnflag"),
-            EAtom(AString("R")))),
-        "l", EAccess(EVar("l"), "l_qty"))
-      val sumIdiom = EFold(src, EAtom(AInt(0)), "v", "acc",
-        EBinop(OPlus, EVar("v"), EVar("acc")))
-      val minIdiom = EFold(src, EAtom(ANone(TInt)), "v", "acc",
-        EOptMatch(EVar("acc"), EUnop(OSome, EVar("v")), "x",
-          EIf(EBinop(OLess, EVar("v"), EVar("x")),
-            EUnop(OSome, EVar("v")), EVar("acc"))))
-      val prog = ERecord(List(
-        "sum_qty" -> sumIdiom,
-        "n_rows" -> EUnop(OLength, src),
-        "min_qty" -> EOptMatch(minIdiom, EAtom(AInt(-1)), "m", EVar("m"))))
-      val annotated = CollectionTransf.annotate(prog)
+        |FROM lineitem WHERE l_returnflag = 'R'""".stripMargin) {
+      val src = """map (filter (mut lineitem) l l[l_returnflag] == "R") l l[l_qty]"""
+      val annotated = CollectionTransf.annotate(expr("q_collection_annotate", s"""
+        { sum_qty : fold ($src) (0) v acc v + acc,
+          n_rows : len($src),
+          min_qty : optmatch
+            (fold ($src) (none[int]) v acc
+              optmatch (acc) (some(v)) x if v < x then some(v) else acc)
+            (-1) m m }"""))
       require(!annotated.toString.contains("EFold("),
         "annotation must eliminate every sequential fold")
-      val li = Tables.load(s, dir, "lineitem")
-        .select(col("l_returnflag"), col("l_quantity").cast("long").as("l_qty"))
-      val c = asScalar(compile(annotated, Env(Map.empty,
-        Map("lineitem" -> li), s)))
-      s.range(1).select(
-        c("sum_qty").cast("long").as("sum_qty"),
-        c("n_rows").cast("long").as("n_rows"),
-        c("min_qty").cast("long").as("min_qty"))
+      (s, dir) => {
+        val li = Tables.load(s, dir, "lineitem")
+          .select(col("l_returnflag"), col("l_quantity").cast("long").as("l_qty"))
+        val c = asScalar(compile(annotated, Env(Map.empty,
+          Map("lineitem" -> li), s)))
+        s.range(1).select(
+          c("sum_qty").cast("long").as("sum_qty"),
+          c("n_rows").cast("long").as("n_rows"),
+          c("min_qty").cast("long").as("min_qty"))
+      }
     },
   )
+
+  /** Every program above as (query, notation text, parsed tree), in the
+    * order the queries register them. */
+  val programs: Seq[(String, String, Either[Expr, Command])] = parsed.result()
 }

@@ -156,24 +156,21 @@ object Dedup {
     // or an explicit cache() + count()).
     val anyHot = !sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
       .filter(col("df") > maxDocFreq).isEmpty
-    // Scale-adaptive partitioning for the two pair-space exchanges (r17,
-    // guide §2.2/§2.5): the posting groupBy and the (a,b) pair aggregate
-    // each hold per-partition state LINEAR in the corpus, so the fixed
-    // core-count partitioning spills once the corpus outgrows it —
-    // measured 10 GB (pair emission) + 8.9 GB (pair aggregate) at 81x in
-    // 4 partitions, the e_tail 1.25-1.28 bend in GROWTH_r17. Deriving the
-    // count from the materialized shingle-set size (exact: all callers
-    // cache-and-count dsets) keeps per-partition state flat at any scale;
-    // the defaultParallelism clamp leaves sf0.1/sf0.01 plans unchanged.
-    // The explicit repartition before each groupBy replaces (not adds to)
-    // the exchange the aggregate would have planned: same shuffle count,
-    // chosen width — but it also costs the map-side PARTIAL pair
-    // aggregate (raw pairs cross the exchange), so it engages only past
-    // the measured spill onset (AdaptiveParts.widthPastOnset: the 27x A/B
-    // showed the partial-agg plan faster while per-partition state is
-    // ~67 MB; at ~200 MB/partition it spills 10+9 GB and widening wins).
-    // Below the onset every plan — including sf0.1/sf0.01 — is
-    // byte-identical to the pre-r17 shape.
+    // Scale-adaptive partitioning for the two pair-space exchanges (guide
+    // §2.2/§2.5): the posting groupBy and the (a,b) pair aggregate each
+    // hold per-partition state LINEAR in the corpus, so the fixed
+    // core-count partitioning can spill once the corpus outgrows it.
+    // Deriving the count from the materialized shingle-set size (exact:
+    // all callers cache-and-count dsets) is meant to keep per-partition
+    // state flat at any scale; the defaultParallelism clamp leaves
+    // sf0.1/sf0.01 plans unchanged. The explicit repartition before each
+    // groupBy replaces (not adds to) the exchange the aggregate would have
+    // planned: same shuffle count, chosen width — but it also costs the
+    // map-side PARTIAL pair aggregate (raw pairs cross the exchange), so
+    // it engages only past AdaptiveParts.widthPastOnset. Neither the spill
+    // nor a gain from widening is measured in a committed artifact (see
+    // AdaptiveParts). Below the onset every plan — including sf0.1/sf0.01
+    // — keeps the planner's own exchanges.
     val s = dsets.sparkSession
     val dsetsBytes = graft.core.AdaptiveParts.planBytes(dsets)
     val widenTo = graft.core.AdaptiveParts.widthPastOnset(s, dsetsBytes)

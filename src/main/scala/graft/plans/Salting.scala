@@ -17,22 +17,20 @@ object Salting {
     */
   def saltedJoin(skewed: DataFrame, other: DataFrame, key: String,
       salts: Int): DataFrame = {
-    // Scale-adaptive join width (r17, guide §2.2/§3): both sides sort (or
+    // Scale-adaptive join width (guide §2.2/§3): both sides sort (or
     // hash) per partition, and the replicated side carries salts x its
     // input — at a fixed core-count partitioning the per-partition sort
-    // outgrows execution memory once the corpus does (measured 7.4 GB
-    // memory + 1.6 GB disk spill and e_tail 1.28 at 81x in 4 partitions;
-    // zero spill at 27x — METRICS_r17/GROWTH_r17). Derive the width from
-    // both legs' estimator bytes (parquet scan stats are file sizes, which
-    // scale with the corpus); the defaultParallelism clamp keeps
+    // can outgrow execution memory once the corpus does. Derive the width
+    // from both legs' estimator bytes (parquet scan stats are file sizes,
+    // which scale with the corpus); the defaultParallelism clamp keeps
     // small-scale plans unchanged. Repartitioning BOTH sides by
     // (key, __salt) to the same width means the join reuses these
     // exchanges — same shuffle count as the planner's own, chosen width.
     val s = skewed.sparkSession
-    // Widen only past the measured spill onset (AdaptiveParts): below it
-    // the planner's own width carried no spill (27x: 67 MB/partition,
-    // flat A/B) and the un-repartitioned plan keeps its small-scale
-    // choices (e.g. broadcasting a tiny dimension side).
+    // Widen only past AdaptiveParts' onset: below it the un-repartitioned
+    // plan keeps its small-scale choices (e.g. broadcasting a tiny
+    // dimension side). Neither the spill nor a gain from widening is
+    // measured in a committed artifact (see AdaptiveParts).
     val widenTo = graft.core.AdaptiveParts.widthPastOnset(s,
       graft.core.AdaptiveParts.planBytes(skewed) +
         graft.core.AdaptiveParts.planBytes(other) * salts)

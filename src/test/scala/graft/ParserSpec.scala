@@ -251,4 +251,19 @@ class ParserSpec extends AnyFunSuite {
       assert(parsed === c, s"\nAST: $c\nprinted: $printed")
     }
   }
+
+  test("every LangQueries program parses and round-trips through Pretty") {
+    val programs = LangQueries.programs
+    val registered = LangQueries.queries.map(_.name).toSet
+    // every query registers its program as notation text
+    assert(programs.map(_._1).toSet === registered)
+    programs.foreach {
+      case (q, text, Left(e)) =>
+        assert(parseExpr(text) === e, q)
+        assert(parseExpr(Pretty(e)) === e, q)
+      case (q, text, Right(c)) =>
+        assert(parseCommand(text) === c, q)
+        assert(parseCommand(Pretty(c)) === c, q)
+    }
+  }
 }

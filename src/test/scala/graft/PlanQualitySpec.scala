@@ -326,15 +326,30 @@ class PlanQualitySpec extends AnyFunSuite {
       s"historical digests not broadcast:\n$p")
   }
 
-  test("correlated aggregate in a filter predicate lowers to key-grouped left joins") {
-    // filter(T, t => count(σ[s.k == t.k] S) > 1 && sum(...) % 2 == 0):
-    // the unnesting must produce grouped aggregates LEFT-joined onto the
-    // outer table — never a per-outer-row nested loop or a cross product
-    val p = plan("q_lang_corr_filter")
-    assert(p.contains("LeftOuter"), s"expected left-join unnesting:\n$p")
-    assert(p.contains("HashAggregate") || p.contains("SortAggregate"),
-      s"expected key-grouped aggregates:\n$p")
+  /** Both correlated aggregates of a filter predicate (a count and a sum
+    * over the same inner key) unnest to ONE key-grouped aggregate: a
+    * partial aggregate computing both below the one hash shuffle, and one
+    * join back onto the outer table — never a per-outer-row nested loop
+    * or a cross product. `count > 0` rejects no-match rows, so Catalyst
+    * plans that join as inner. */
+  private def assertOneGroupedJoin(p: String): Unit = {
+    val lines = p.linesIterator.toVector
+    val joins = lines.filter(l =>
+      l.contains("HashJoin") || l.contains("SortMergeJoin"))
+    assert(joins.size == 1 && joins.head.contains("Inner"),
+      s"expected one inner join:\n$p")
+    val shuffles = lines.indices.filter(lines(_).contains("Exchange hashpartitioning"))
+    assert(shuffles.size == 1, s"expected one shuffle:\n$p")
+    val partial = lines.indexWhere(l =>
+      l.contains("partial_count") && l.contains("partial_sum"))
+    assert(partial > shuffles.head,
+      s"expected count and sum partial-aggregated below the shuffle:\n$p")
     assert(!p.contains("CartesianProduct"), p)
+  }
+
+  test("correlated aggregates in a filter predicate share one key-grouped join") {
+    // filter(nation, n => count(σ[s.k == n.k] supplier) > 0 && sum(...) % 2 == 0)
+    assertOneGroupedJoin(plan("q_lang_corr_filter"))
   }
 
   test("table-scale correlated filter partial-aggregates the fact side before its join") {
@@ -343,12 +358,7 @@ class PlanQualitySpec extends AnyFunSuite {
     // (HashAggregate partial → exchange on l_suppkey → final) so the
     // shuffle carries one partial per (task, key), not raw fact rows —
     // what makes the rewrite survive a 100 TB fact table.
-    val p = plan("q_lang_corr_filter_big")
-    assert(p.contains("LeftOuter"), s"expected left-join unnesting:\n$p")
-    assert(!p.contains("CartesianProduct"), p)
-    val aggIdx = p.indexOf("partial_count")
-    assert(aggIdx >= 0 || p.contains("partial_sum"),
-      s"expected partial (map-side) aggregation of the lineitem side:\n$p")
+    assertOneGroupedJoin(plan("q_lang_corr_filter_big"))
   }
 
   test("driver-loop delta unions stay single-partition per row") {
