@@ -1,6 +1,11 @@
 package graft.lang
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression,
+  GenericRowWithSchema, Literal, RuntimeReplaceable, SubqueryExpression}
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.Fiat2
@@ -1507,11 +1512,77 @@ object Compiler {
   def compileProgram(e: Expr, env: Env): Val =
     compile(Rewrites.normalize(e), env)
 
-  /** Evaluate a row-free scalar expression eagerly (for CIf conditions and
-    * table-length reads — the reference interpreter is equally eager,
-    * fiat2/src/fiat2/Interpret.v:515-518). */
-  def evalScalar(env: Env, c: Column): Any =
-    oneRow(env.spark).select(c.as("v")).head().get(0)
+  /** The one row of a row-free plan `oneRow(spark).select(cs)`, computed
+    * on the driver with no Spark job: one literal per column. Some only
+    * when every analyzed column is deterministic and reads no attribute
+    * and no subquery, and evaluates without throwing once each
+    * `RuntimeReplaceable` takes its replacement (the optimizer's
+    * ReplaceExpressions step, which interpreted `eval` needs). Otherwise
+    * None, and the caller runs the same plan as a job, so every error
+    * (a directed TInt overflow, ANSI, a UDF's) still surfaces from it. */
+  def driverRow(plan: DataFrame): Option[Seq[Literal]] = {
+    def constant(e: Expression) = e.deterministic && e.references.isEmpty &&
+      !SubqueryExpression.hasSubquery(e)
+    plan.queryExecution.analyzed match {
+      case Project(cols, _) if cols.forall {
+          case a: Alias => constant(a.child); case _ => false } =>
+        try Some(cols.map { a =>
+          val e = a.asInstanceOf[Alias].child
+            .transform { case r: RuntimeReplaceable => r.replacement }
+          Literal(e.eval(null), a.dataType)
+        }) catch { case scala.util.control.NonFatal(_) => None }
+      case _ => None
+    }
+  }
+
+  /** Evaluate a row-free scalar expression eagerly (CIf/EIf conditions,
+    * streamed fold batches — the reference interpreter is equally eager,
+    * fiat2/src/fiat2/Interpret.v:515-518): on the driver when `driverRow`
+    * can, else as a one-row job. */
+  def evalScalar(env: Env, c: Column): Any = {
+    val plan = oneRow(env.spark).select(c.as("v"))
+    driverRow(plan) match {
+      case Some(Seq(l)) => CatalystTypeConverters.convertToScala(l.value, l.dataType)
+      case _ => plan.head().get(0)
+    }
+  }
+
+  /** The elements of a row-free array value with `toDF`'s column layout,
+    * computed on the driver (`driverRow`); None when it does not fold. */
+  def driverTable(env: Env, c: Column): Option[(StructType, Seq[Row])] =
+    driverRow(oneRow(env.spark).select(c.as("v"))).collect {
+      case Seq(Literal(arr: ArrayData, ArrayType(et, _))) =>
+        val schema = et match {
+          case st: StructType => st
+          case _ => StructType(Seq(StructField("value", et)))
+        }
+        val rows = (0 until arr.numElements()).map { i =>
+          val elem = arr.get(i, et)
+          et match {
+            case st: StructType =>
+              CatalystTypeConverters.convertToScala(elem, st).asInstanceOf[Row]
+            case _ => new GenericRowWithSchema(
+              Array(CatalystTypeConverters.convertToScala(elem, et)), schema)
+          }
+        }
+        (schema, rows)
+    }
+
+  /** Row-free one-row plans of one schema as ONE local relation (no job to
+    * build or read), or None when any of them does not fold on the driver
+    * or their schemas differ. */
+  def localUnion(plans: Seq[DataFrame]): Option[DataFrame] = {
+    val schema = plans.head.schema
+    if (plans.exists(_.schema != schema)) None
+    else {
+      val rows = plans.map(driverRow)
+      if (rows.exists(_.isEmpty)) None
+      else Some(plans.head.sparkSession.createDataFrame(
+        java.util.Arrays.asList(rows.map(r => Row.fromSeq(r.get.map(l =>
+          CatalystTypeConverters.convertToScala(l.value, l.dataType)))): _*),
+        schema))
+    }
+  }
 
   /** Flatten a per-row result expression into table columns. */
   private def flattenResult(df: DataFrame, res: Column): DataFrame = {

@@ -1,14 +1,15 @@
 package graft.lang
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 
 /** Driver-side interpreter for the command layer
   * (fiat2/src/fiat2/Interpret.v:501-524): commands sequence table mutations;
   * every table-valued expression inside them compiles to a distributed plan
-  * via `Compiler`. `CForeach` collects the (small) iteration list to the
+  * via `Compiler`. `CForeach` brings the (small) iteration list to the
   * driver and loops — the reference's event-loop idiom (SURVEY.md §2.11) —
-  * while per-iteration work stays distributed.
+  * while per-iteration work stays distributed. Row-free values (a literal
+  * list, a scalar cell's update, an insert chain's rows) are evaluated on
+  * the driver (`Compiler.driverRow`): only reads of table data run jobs.
   */
 object Interp {
   import Lang._
@@ -83,8 +84,8 @@ object Interp {
           // would otherwise accumulate one cached build per iteration.
           // (Only hinted binders — a plain cell can alias an OUTER
           // DataFrame, e.g. `CLetMut(ELoc(outer), x, …)`, whose cache
-          // must survive. Chain-insert delta caches inside evolved
-          // handles are row-sized and tolerated.)
+          // must survive. An evolved handle releases the base cache it
+          // shares with `bound` and any delta it cached itself.)
           if (hintAttrs.nonEmpty) {
             for (e <- Seq(bound, after)) {
               e.indexes.get(x).foreach(_.unpersist())
@@ -127,8 +128,9 @@ object Interp {
         // cons-chain INSERT into an INDEXED table: maintain the keyed index
         // incrementally (the reference's cons_to_insert_head + use_idx_head
         // composition, fiat2/src/fiat2/DictIndexImpl.v:571-590,:767-776) —
-        // the delta rows are keyed and lazily unioned; the base cache is
-        // never recomputed, and later point filters still prune by key.
+        // the delta rows are lazily unioned (a driver-built local relation
+        // when they fold); the base cache is never recomputed, and later
+        // point filters still prune it by key.
         case (Some(idx), _, Some(rows)) =>
           val idx2 = idx.insert(deltaDF(rows, idx.keyed.columns, env))
           env.copy(store = env.store + (x -> idx2.keyed),
@@ -171,8 +173,17 @@ object Interp {
       run(if (cond) c1 else c2, env)
 
     case CForeach(e, x, body) => // driver event loop (Interpret.v:519-523)
-      val df = toDF(compileProgram(e, env), env)
-      val cols = df.columns.sorted
+      // a row-free list (a literal, or built from loop-bound values) is
+      // iterated on the driver; a table is collected
+      val src = compileProgram(e, env)
+      val (schema, rows) = (src match {
+        case CV(c) => Compiler.driverTable(env, c)
+        case TV(_) => None
+      }).getOrElse {
+        val df = toDF(src, env)
+        (df.schema, df.collect().toSeq)
+      }
+      val cols = schema.fieldNames.sorted
       // Iteration order is PLAN order: the reference iterates the stored
       // LIST in list order (Interpret.v:519-523), and the event-loop
       // tables this construct serves are driver-maintained cons-chain
@@ -183,8 +194,8 @@ object Interp {
       // construction order (a shuffled scan) makes the loop body's
       // observation order unspecified, exactly like the reference's
       // unspecified list order for such a table.
-      df.collect().foldLeft(env) { (acc, row) =>
-        val bound = CV(Compiler.rowLiteral(row, df.schema, cols))
+      rows.foldLeft(env) { (acc, row) =>
+        val bound = CV(Compiler.rowLiteral(row, schema, cols))
         // x is scoped to the body; restore afterwards
         val after = run(body, acc.bind(x, bound))
         acc.vars.get(x) match {
@@ -199,15 +210,19 @@ object Interp {
   private def consChainRows(e: Expr, t: String): Option[List[Expr]] =
     Rewrites.ConsChain.rowsOnto(e, t)
 
-  /** Compile insert-chain rows into a delta DataFrame with `cols`. */
+  /** Compile insert-chain rows into a delta DataFrame with `cols`: one
+    * local relation when every row folds on the driver (the common case,
+    * literal or loop-bound records), else a union of one-row plans. */
   private def deltaDF(rows: List[Expr], cols: Array[String],
-      env: Env): DataFrame =
-    rows.map { r =>
+      env: Env): DataFrame = {
+    val plans = rows.map { r =>
       val elem = Compiler.asScalar(compileProgram(r, env))
       if (cols.sameElements(Array("value")))
         Compiler.oneRow(env.spark).select(elem.as("value"))
       else Compiler.oneRow(env.spark).select(cols.map(c => elem(c).as(c)): _*)
-    }.reduce(_ union _)
+    }
+    Compiler.localUnion(plans).getOrElse(plans.reduce(_ union _))
+  }
 
   private def asBoolCol(v: Val) = v match {
     case CV(c) => c
@@ -218,37 +233,20 @@ object Interp {
     env.spark.range(1).select(c.as("__v")).schema.head.dataType
       .isInstanceOf[org.apache.spark.sql.types.ArrayType]
 
-  /** Constant-fold a scalar-cell value through the optimizer (no job): a
-    * loop like `set acc := mut acc +++ line` over literal row values would
-    * otherwise grow an expression tree one node per iteration — folding
-    * keeps each cell a single Literal, the driver-state analog of the
-    * reference's eager store update (Interpret.v:514). Non-foldable values
-    * (they reference live table data) stay symbolic. */
-  private def folded(env: Env, c: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
-    import org.apache.spark.sql.catalyst.plans.logical.Project
-    // Fast path: the steady state of a driver-loop scalar cell is
-    // `Literal op Literal` — resolved and foldable — which evaluates
-    // directly (the ConstantFolding idiom), skipping Dataset construction
-    // and a full analyze+optimize round (~10-20ms of driver time PER TICK
-    // in event loops; q_scoped_ivm folds 25 of these per run). Failures
-    // (ANSI overflow, unresolved coercions) fall through to the plan
-    // path, preserving the existing stay-symbolic semantics.
-    try {
-      val e = GraftBridge.expression(c)
-      if (e.resolved && e.foldable)
-        return GraftBridge.column(Literal(e.eval(null), e.dataType))
-    } catch { case scala.util.control.NonFatal(_) => }
-    try env.spark.range(1).select(c.as("__v")).queryExecution
-      .optimizedPlan match {
-      case Project(Seq(a: Alias), _) => a.child match {
-        case l: Literal => GraftBridge.column(l)
-        case _ => c
-      }
-      case _ => c
-    } catch { case scala.util.control.NonFatal(_) => c }
-  }
+  /** Constant-fold a scalar-cell value on the driver (no job, no optimizer
+    * round): a loop like `set acc := mut acc +++ line` over literal row
+    * values would otherwise grow an expression tree one node per
+    * iteration — folding keeps each cell a single Literal, the
+    * driver-state analog of the reference's eager store update
+    * (Interpret.v:514). This covers the maintained IVM cells' bumps
+    * (`cell + row.attr` is `Fiat2.checkedAdd`, a `try_add` call that only
+    * analysis resolves). Values that do not fold (they reference live
+    * table data, or their evaluation raises) stay symbolic, so an error
+    * surfaces where the cell is read. */
+  private def folded(env: Env, c: Column): Column =
+    try Compiler.driverRow(Compiler.oneRow(env.spark).select(c.as("__v")))
+      .map(l => GraftBridge.column(l.head)).getOrElse(c)
+    catch { case scala.util.control.NonFatal(_) => c }
 
   /** Materialize an expression result as a table DataFrame. */
   def toDF(v: Val, env: Env): DataFrame = Compiler.toDF(v, env)

@@ -1,5 +1,6 @@
 package graft.lang
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** AUTOMATIC incremental aggregate maintenance — the reference's SumAgg /
@@ -13,8 +14,9 @@ import org.apache.spark.sql.functions._
   * value updated in O(1) on every insert.
   *
   * Spark analog: the running aggregate lives in the interpreter's SCALAR
-  * store (a constant-folded literal — zero jobs per read); the initial
-  * value is one distributed aggregation of the pre-command table. The
+  * store (a literal, bumped on the driver — zero jobs per read and per
+  * insert); the initial values of all of one table's cells come from ONE
+  * distributed aggregation row over the pre-command table. The
   * program text is rewritten exactly like the reference: each
   * `sum(proj(tbl, a))` / `min(proj(tbl, a))` read becomes a cell read,
   * each `tbl := r1 :: … :: rn :: tbl` write additionally bumps the cell
@@ -128,33 +130,33 @@ object IvmTransf {
     val unsafe = unsafeTables(c)
     val maintained = reads.filter { case (t, _, _) =>
       written.contains(t) && !unsafe.contains(t) && env.store.contains(t) }
-    maintained.foldLeft((c, env)) { case ((cmd, acc), (t, a, agg)) =>
-      agg match {
-        case MSum =>
-          // one distributed aggregation primes the cell (sum of empty = 0);
-          // the column's own numeric type is preserved — casting to long
-          // would truncate a double-typed sum and diverge from the
-          // interpreter's un-cast aggregate
-          val init = acc.store(t)
-            .agg(coalesce(sum(col(a)), lit(0L)).as("s")).head().get(0)
-          val cell = cellName(t, a)
-          (rewrite(cmd, t, a, cell, MSum),
-            acc.copy(scalars = acc.scalars + (cell -> lit(init))))
-        case MMin =>
-          // min of empty = NULL (the None-on-empty ACI semantics)
-          val out = acc.store(t).agg(min(col(a)).as("m"))
-          val row = out.head()
-          val cell = minCellName(t, a)
-          val init =
-            if (row.isNullAt(0)) lit(null).cast(out.schema.head.dataType)
-            else lit(row.get(0))
-          (rewrite(cmd, t, a, cell, MMin),
-            acc.copy(scalars = acc.scalars + (cell -> init)))
-        case MCount =>
-          val cell = countCellName(t)
-          (rewrite(cmd, t, a, cell, MCount),
-            acc.copy(scalars = acc.scalars + (cell -> lit(acc.store(t).count()))))
+    // one aggregation row per table primes ALL of its cells (one scan,
+    // not one per cell): sum of empty = 0 (the column's own numeric type
+    // is preserved — casting to long would truncate a double-typed sum
+    // and diverge from the interpreter's un-cast aggregate); min of empty
+    // = NULL (the None-on-empty ACI semantics)
+    val inits: Map[(String, String, MAgg), Column] =
+      maintained.groupBy(_._1).toSeq.flatMap { case (t, cells) =>
+        val aggs = cells.map {
+          case (_, a, MSum) => coalesce(sum(col(a)), lit(0L))
+          case (_, a, MMin) => min(col(a))
+          case (_, _, MCount) => count(lit(1))
+        }
+        val out = env.store(t).agg(aggs.head, aggs.tail: _*)
+        val row = out.head()
+        cells.zipWithIndex.map { case (cell, i) =>
+          cell -> (if (row.isNullAt(i)) lit(null).cast(out.schema(i).dataType)
+            else lit(row.get(i)))
+        }
+      }.toMap
+    maintained.foldLeft((c, env)) { case ((cmd, acc), m @ (t, a, agg)) =>
+      val cell = agg match {
+        case MSum => cellName(t, a)
+        case MMin => minCellName(t, a)
+        case MCount => countCellName(t)
       }
+      (rewrite(cmd, t, a, cell, agg),
+        acc.copy(scalars = acc.scalars + (cell -> inits(m))))
     }
   }
 

@@ -28,8 +28,8 @@ object Optimize {
     val recognized = Rewrites.normalizeCommand(c)
     val annotated = Rewrites.mapExprs(recognized)(CollectionTransf.annotate)
     // CLetMut-scoped tables first (pure source rewrite, cells as nested
-    // scalar bindings), then store-bound tables (cells primed by one
-    // aggregation each), then index introduction
+    // scalar bindings), then store-bound tables (all of a table's cells
+    // primed by one aggregation row), then index introduction
     val scoped = IvmTransf.transformScoped(annotated, requireLoop = false)
     val (ivmed, primed) =
       IvmTransf.transform(scoped, env, requireLoop = false)

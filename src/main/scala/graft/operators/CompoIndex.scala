@@ -26,8 +26,8 @@ final class CompoIndex private (val components: Map[String, DictIndex]) {
   def lookup(attr: String, key: Any): DataFrame = component(attr).lookup(key)
 
   /** Insert rows into the composed index: EVERY component is updated
-    * (compo_idx_wf — one delta, all components stay consistent). Each
-    * component keys+caches the delta itself; no base cache is recomputed. */
+    * (compo_idx_wf — one delta, all components stay consistent) by
+    * `DictIndex.insert`; no base cache is recomputed. */
   def insert(delta: DataFrame): CompoIndex =
     new CompoIndex(components.map { case (a, d) => a -> d.insert(delta) })
 

@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   * scale the same shape is `bucketBy(attr)` on a persisted table.
   */
 final class DictIndex private[operators] (
-    val keyed: DataFrame, val keyCol: String, partitions: Int = 32) {
+    val keyed: DataFrame, val keyCol: String, partitions: Int,
+    base: DataFrame, cachedDeltas: List[DataFrame]) {
 
   /** Point lookup — fiat2 `OLookup` on the index dict. */
   def lookup(key: Any): DataFrame = keyed.filter(col(keyCol) === lit(key))
@@ -24,17 +25,25 @@ final class DictIndex private[operators] (
 
   /** Incremental maintenance — the reference's `cons_to_insert` shape
     * (fiat2/src/fiat2/DictIndexImpl.v:30-33 `idx_insert`): the delta is
-    * keyed and cached on its own and unioned LAZILY, so the existing cache
-    * is never recomputed and a lookup prunes both sides by the key hash.
-    * (Compaction — folding the delta into the base — is a background
-    * concern at scale, same as any LSM-ish index.) */
+    * unioned LAZILY, so the base cache is never recomputed. A local delta
+    * (the driver-built rows of an insert chain) is unioned as it is: a
+    * lookup filters it on the driver, with no shuffle and no cache. Any
+    * other delta is keyed and cached on its own, so a lookup prunes both
+    * sides by the key hash. (Compaction — folding the deltas into the
+    * base — is a background concern at scale, same as any LSM-ish index.) */
   def insert(delta: DataFrame): DictIndex = {
-    val keyedDelta = delta.select(keyed.columns.map(col): _*)
-      .repartition(partitions, col(keyCol)).cache()
-    new DictIndex(keyed.union(keyedDelta), keyCol, partitions)
+    val aligned = delta.select(keyed.columns.map(col): _*)
+    if (delta.isLocal)
+      new DictIndex(keyed.union(aligned), keyCol, partitions, base, cachedDeltas)
+    else {
+      val keyedDelta = aligned.repartition(partitions, col(keyCol)).cache()
+      new DictIndex(keyed.union(keyedDelta), keyCol, partitions, base,
+        keyedDelta :: cachedDeltas)
+    }
   }
 
-  def unpersist(): Unit = keyed.unpersist()
+  /** Release the base cache and every cached delta. */
+  def unpersist(): Unit = (base :: cachedDeltas).foreach(_.unpersist())
 }
 
 object DictIndex {
@@ -73,6 +82,6 @@ object DictIndex {
   def build(df: DataFrame, keyCol: String, partitions: Int = -1): DictIndex = {
     val p = if (partitions > 0) partitions else partitionsFor(df)
     val keyed = df.repartition(p, col(keyCol)).cache()
-    new DictIndex(keyed, keyCol, p)
+    new DictIndex(keyed, keyCol, p, keyed, Nil)
   }
 }

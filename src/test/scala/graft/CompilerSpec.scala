@@ -22,6 +22,28 @@ class CompilerSpec extends AnyFunSuite {
     xs.foldRight[Expr](EAtom(ANil(TInt)))((x, acc) =>
       EBinop(OCons, EAtom(AInt(x)), acc))
 
+  test("EIf: a row-free condition is decided on the driver, a row-dependent one lowers to when") {
+    import org.apache.spark.sql.catalyst.expressions.CaseWhen
+    val t = Seq(1L, 7L, 3L).toDF("v")
+    val envT = Env(Map.empty, Map("t" -> t), spark)
+    def caseWhens(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.flatMap(_.expressions).flatMap(_.collect {
+        case cw: CaseWhen => cw })
+    val perRow = compile(EProj(LikeBag, ELoc("t"), "x",
+      EIf(EBinop(OLess, EAccess(EVar("x"), "v"), EAtom(AInt(5))),
+        EAtom(AInt(10)), EAtom(AInt(20)))), envT).asInstanceOf[TV].df
+    assert(caseWhens(perRow).nonEmpty,
+      s"row-dependent EIf must lower to when:\n${perRow.queryExecution.analyzed}")
+    assert(perRow.as[Long].collect().sorted.toSeq == Seq(10L, 10L, 20L))
+    // a row-free condition picks its branch: no per-row `when` survives
+    val decided = compile(EProj(LikeBag, ELoc("t"), "x",
+      EIf(EBinop(OLess, EAtom(AInt(2)), EAtom(AInt(5))),
+        EAccess(EVar("x"), "v"), EAtom(AInt(20)))), envT).asInstanceOf[TV].df
+    assert(caseWhens(decided).isEmpty,
+      s"row-free EIf must be decided, not lowered:\n${decided.queryExecution.analyzed}")
+    assert(decided.as[Long].collect().sorted.toSeq == Seq(1L, 3L, 7L))
+  }
+
   test("mutable SCALAR cells: loop accumulation, folding, scope restore") {
     // the reference's all_feedback idiom (Ex_Survey.v:44-49): a string cell
     // updated per iteration; each update folds to a literal (no plan growth)

@@ -1950,6 +1950,58 @@ class DifferentialSpec extends AnyFunSuite
     }
   }
 
+  test("optimized insert/read programs over an indexed table == reference interpreter") {
+    // The catalog benchmark's program shape through the whole Optimize
+    // pipeline: `t` gets an index on `k` (the point count), maintained
+    // sum/min/count cells (bumped on the driver), and driver-built local
+    // deltas per insert. The loop runs over a LITERAL list of records, so
+    // its order is observable: each read records how many rows preceded
+    // it. Every fourth table starts empty (sum 0, min None, count 0).
+    val outT = TRecord.sorted("c" -> TInt, "k" -> TInt, "m" -> TInt,
+      "n" -> TInt, "s" -> TInt)
+    def tv(f: String) = EProj(LikeBag, ELoc("t"), "o", EAccess(EVar("o"), f))
+    def read(k: Expr) = CAssign("out", EBinop(OCons, ERecord(List(
+      "c" -> EUnop(OLength, EFilter(LikeList, ELoc("t"), "o",
+        EBinop(OEq, EAccess(EVar("o"), "k"), k))),
+      "k" -> k,
+      "m" -> EOptMatch(EACIFold(AGMin, tv("v")), EAtom(AInt(-100)), "x", EVar("x")),
+      "n" -> EUnop(OLength, ELoc("t")),
+      "s" -> EACFold(AGSum, tv("v")))), ELoc("out")))
+    val insert = CAssign("t", EBinop(OCons, EVar("r"), ELoc("t")))
+    val rk = EAccess(EVar("r"), "k")
+    var emptyStarts = 0
+    for (i <- 0 until 16) {
+      val rnd = new Random(7300 + i)
+      val tRows =
+        if (i % 4 == 0) Vector.empty[V] else Vector.fill(1 + rnd.nextInt(6))(genValue(rowU, rnd))
+      val list = VList(Vector.fill(1 + rnd.nextInt(4))(genValue(rowU, rnd)))
+      val body = rnd.nextInt(3) match {
+        case 0 => CSeq(insert, read(rk))
+        case 1 => CSeq(read(rk), insert)
+        case _ => insert
+      }
+      val prog = CLetMut(literal(VList(Vector.empty), TList(outT)), "out",
+        CSeq(CSeq(read(EAtom(AInt(0))),
+          CForeach(literal(list, TList(rowU)), "r", body)),
+          CSeq(read(EAtom(AInt(1))), CAssign("result", ELoc("out")))))
+      val expected = RefInterp.run(prog, REnv("t" -> VList(tRows)))
+      val fin = Optimize.run(prog,
+        Env(Map.empty, Map("t" -> tableDF(tRows, rowU)), spark))
+      try {
+        assert(fin.indexes.contains("t"), s"[indexed $i] t was not indexed")
+        for ((cell, ty) <- Seq("t" -> rowU, "result" -> outT)) {
+          val got = collectTable(fin.store(cell), ty)
+          val want = sortedV(elems(expected.store(cell)))
+          assert(cmpValues(got, want) == 0,
+            s"[indexed $i] cell $cell\ncompiled=$got\nreference=$want\n" +
+              show(prog))
+        }
+      } finally fin.indexes.values.foreach(_.unpersist())
+      if (tRows.isEmpty) emptyStarts += 1
+    }
+    assert(emptyStarts == 4)
+  }
+
   test("default-TInt boundary seeds: in-range agrees, out-of-range raises the DIRECTED wideInt error and the fix works") {
     // Random arithmetic over literals AT the 64-bit boundary
     // (±2^62, MaxValue, MinValue, small offsets). The default mapping is

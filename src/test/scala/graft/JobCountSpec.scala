@@ -16,14 +16,46 @@ class JobCountSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private val jobCounter = new java.util.concurrent.atomic.AtomicInteger(0)
+  // each job's call site, in start order (see siteOf), and the engine
+  // frame of each SQL execution's action, by execution id
+  private val jobSites =
+    java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
+  private val execSites =
+    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private lazy val listenerInstalled: Unit = {
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(
             js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          jobSites.add(siteOf(js))
           jobCounter.incrementAndGet(); ()
         }
+        override def onOtherEvent(
+            e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            engineFrame(s.details).foreach(execSites.put(s.executionId.toString, _))
+          case _ =>
+        }
       })
+  }
+
+  private def engineFrame(details: String): Option[String] =
+    details.linesIterator.map(_.trim)
+      .find(l => l.startsWith("graft.") && !l.startsWith("graft.JobCountSpec"))
+
+  /** The engine frame that started a job: the first `graft.` line of its
+    * final stage's long call site. Job properties carry no long call site,
+    * and an AQE stage job runs on a query-stage thread whose call site
+    * holds no engine frame (its short form is only
+    * `withThreadLocalCaptured at CompletableFuture.java`); such a job is
+    * named by the action of the SQL execution it belongs to. */
+  private def siteOf(js: org.apache.spark.scheduler.SparkListenerJobStart) = {
+    val details = js.stageInfos.lastOption.map(_.details).getOrElse("")
+    engineFrame(details).orElse {
+      Option(js.properties).flatMap(p =>
+        Option(p.getProperty("spark.sql.execution.id")))
+        .flatMap(id => Option(execSites.get(id))).map(_ + " [AQE stage]")
+    }.getOrElse(details.linesIterator.take(1).mkString)
   }
 
   /** One measured execution with Bench.runOnce's cache hygiene, so rep 2
@@ -129,6 +161,77 @@ class JobCountSpec extends AnyFunSuite {
     assert(j4 == j12,
       s"pageRank scheduled $j4 jobs at 4 iterations but $j12 at 12 — " +
         "per-iteration jobs are back (eager checkpoint regression?)")
+  }
+
+  /** The catalog benchmark's command-program shape over
+    * `orders(o_custkey, o_orderkey)`: an insert loop, then count, sum, min
+    * and point-count reads, in one of three write:read mixes (writes and
+    * reads share one loop when they are as many). */
+  private def orderProgram(w: Int, r: Int): String = {
+    def list(ks: Seq[Int]) = ks.map(k => s"$k :: ").mkString + "nil[int]"
+    val insert = "set orders := { o_orderkey : kv * 1000 + 7, o_custkey : kv } :: mut orders"
+    val read =
+      """set out := { k : kv,
+        |    n : len(mut orders),
+        |    s : fold (map (mut orders) o o[o_custkey]) 0 v acc v + acc,
+        |    m : optmatch min(map (mut orders) o o[o_custkey]) 0 x x,
+        |    c : len(filter (mut orders) o (o[o_custkey] == kv))
+        |  } :: mut out""".stripMargin
+    val ws = Seq(3, 17, 42).take(w)
+    val rs = Seq(17, 5, 99).take(r)
+    val body =
+      if (w == r) s"for kv in ${list(ws)} :\n  $insert;\n  $read\nend"
+      else s"for kv in ${list(ws)} :\n  $insert\nend;\n" +
+        s"for kv in ${list(rs)} :\n  $read\nend"
+    "let mut out := nil[{c : int, k : int, m : int, n : int, s : int}] in\n" +
+      s"$body;\nset result := mut out"
+  }
+
+  /** Jobs `f` starts, by call site. */
+  private def jobsIn[T](f: => T): (T, Seq[String]) = {
+    settle()
+    val n0 = jobSites.size
+    val out = f
+    settle()
+    val sites = jobSites.synchronized {
+      (n0 until jobSites.size).map(jobSites.get)
+    }
+    (out, sites)
+  }
+
+  // Jobs per phase of one command program. The maintained IVM cells of a
+  // table are primed by one aggregation (2 jobs under AQE), and bumped,
+  // compared and iterated on the driver; an insert into the indexed table
+  // unions a local delta. What remains in Interp.run are the point counts,
+  // which read table data (the first fills the keyed cache). Materializing
+  // `result` afterwards is not counted.
+  private val phasePins = Seq(
+    ("w3r1", 3, 1, 2, 4), ("w2r2", 2, 2, 2, 6), ("w1r3", 1, 3, 2, 5))
+
+  phasePins.foreach { case (mix, w, r, optJobs, interpJobs) =>
+    test(s"command program $mix: jobs per phase stay pinned") {
+      listenerInstalled
+      import org.apache.spark.sql.functions.col
+      import graft.lang.{Compiler, Interp, Optimize, Parser, Rewrites}
+      val orders = graft.core.Tables.load(spark, TestSpark.sfDir, "orders")
+        .select(col("o_custkey"), col("o_orderkey"))
+      val env = Compiler.Env(Map.empty, Map("orders" -> orders), spark)
+      val cmd = Rewrites.normalizeCommand(
+        Parser.parseCommand(orderProgram(w, r)))
+      val ((opt, primed), optSites) = jobsIn(Optimize.transform(cmd, env))
+      val (end, interpSites) = jobsIn(Interp.run(opt, primed))
+      try {
+        assert(end.store("result").count() == r.toLong)
+        def show(sites: Seq[String]) = sites.map("\n    " + _).mkString
+        assert((optSites.size, interpSites.size) == ((optJobs, interpJobs)),
+          s"$mix: Optimize.transform started ${optSites.size} jobs " +
+            s"(pinned $optJobs):${show(optSites)}\n  Interp.run started " +
+            s"${interpSites.size} (pinned $interpJobs):${show(interpSites)}")
+      } finally {
+        end.indexes.values.foreach(_.unpersist())
+        end.compoIndexes.values.foreach(_.unpersist())
+      }
+    }
   }
 
   family.foreach { name =>

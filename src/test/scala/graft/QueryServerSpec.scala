@@ -145,6 +145,28 @@ class QueryServerSpec extends AnyFunSuite {
     }
   }
 
+  test("POST /runc releases an index it inserted into") {
+    withServer { port =>
+      // the point filters index orders on o_orderkey, and the loop inserts
+      // the matching row again: the index's base cache must be released
+      // along with any cached delta
+      val program =
+        """for o in filter (mut orders) x (x[o_orderkey] == 1) :
+          |  set orders := o :: mut orders
+          |end;
+          |set result := filter (mut orders) x (x[o_orderkey] == 1)""".stripMargin
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val (code, body) = post(s"http://localhost:$port/runc", program)
+      assert(code === 200, body)
+      assert(body.split("\"o_orderkey\":1,").length - 1 === 2, body)
+      // only what the request added: the cache manager shares one entry
+      // per plan, so an identical index another suite left cached is
+      // released along with this one
+      assert((spark.sparkContext.getPersistentRDDs.keySet.toSet -- before)
+        .isEmpty)
+    }
+  }
+
   test("POST /extract returns portable SQL for a surface-syntax program") {
     withServer { port =>
       val program =

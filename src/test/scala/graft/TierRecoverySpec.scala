@@ -76,6 +76,35 @@ class TierRecoverySpec extends AnyFunSuite {
     assert(got == Map(1L -> BigInt("10000000000000000000"), 2L -> BigInt(7)))
   }
 
+  test("a maintained sum cell bumped past int64 raises the DIRECTED overflow and re-tiers") {
+    // Optimize maintains `sum(t.v)` as a cell bumped on the driver per
+    // insert; a bump past 2^63 cannot fold, so the cell stays symbolic
+    // and the directed error surfaces when `result` is materialized,
+    // where autoWide re-runs the program on the wide tier.
+    val big = 1L << 62
+    val prog = Parser.parseCommand(
+      s"""let mut out := nil[{k : int, s : int}] in
+         |for kv in [1, 2, 3] :
+         |  set t := { v : $big } :: mut t;
+         |  set out := { k : kv, s : fold (map (mut t) o o[v]) 0 x acc x + acc } :: mut out
+         |end;
+         |set result := mut out""".stripMargin)
+    val t = Seq(big).toDF("v")
+    def run(env0: Env): Array[(Long, BigInt)] = {
+      val tint = if (env0.wideInt) col("v").cast("decimal(38,0)") else col("v")
+      val end = Optimize.run(prog, env0.copy(store = Map("t" -> t.select(tint.as("v")))))
+      assert(end.scalars.contains(IvmTransf.cellName("t", "v")),
+        "the sum read must be a maintained cell")
+      end.store("result").select(col("k").cast("long"), col("s").cast("string"))
+        .collect().map(r => r.getLong(0) -> BigInt(r.getString(1)))
+    }
+    val e = intercept[Exception](run(Env(Map.empty, Map.empty, spark)))
+    assert(Compiler.isTIntOverflow(e),
+      s"expected the directed TInt-overflow marker, got: $e")
+    val got = Compiler.autoWide(Env(Map.empty, Map.empty, spark))(run).toMap
+    assert(got == (1 to 3).map(k => k.toLong -> BigInt(big) * (k + 1)).toMap)
+  }
+
   test("flat-equi merge keeps aggregates with different OUTER keys apart") {
     // Two aggregates over the SAME lifted join source whose inner key
     // expressions are identical (s.nk) but whose OUTER sides differ
