@@ -27,24 +27,36 @@ object Fiat2 {
   // Integer arithmetic with fiat2 (Coq Z) semantics.
   // ---------------------------------------------------------------------------
 
+  /** The prefix of every directed TInt-overflow message: the narrow tier's
+    * checked ops, correlated sums and table sums all start with it, and
+    * `Compiler.isTIntOverflow` recognizes a `raise_error` by it. */
+  val TIntOverflowMarker = "TInt overflow"
+
+  /** The eager table-sum range check's overflow, typed so the tiering can
+    * recognize it without reading its message. */
+  final class TIntOverflow(msg: String) extends ArithmeticException(msg)
+
+  private val fix = " exceeds the 64-bit default mapping — fiat2 TInt is " +
+    "unbounded Z; compile with Env(bigInt = true) for the bignum mapping"
+
+  /** The directed overflow message for `what`. */
+  def overflowMessage(what: String): String = s"$TIntOverflowMarker: $what$fix"
+
   /** Overflow-CHECKED Long arithmetic for the DEFAULT `TInt` mapping. The
     * reference's `TInt` is Coq `Z` — unbounded — so a 64-bit wrap would be
     * silent data corruption and an ANSI `ARITHMETIC_OVERFLOW` an undirected
     * one. `try_add`/`try_subtract`/`try_multiply` compute the wrap-free
     * result-or-null, and a null under non-null operands raises a DIRECTED
-    * error naming the fix: `Env(wideInt = true)`, the Decimal(38,0) mapping
-    * with ~10^38 headroom. Null operands (None-encoded options) still
-    * propagate null, exactly like the unchecked `+`. All codegen'd builtins.
+    * error naming the fix: `Env(bigInt = true)`, the unbounded bignum
+    * mapping. Null operands (None-encoded options) still propagate null,
+    * exactly like the unchecked `+`. All codegen'd builtins.
     */
   def checkedArith(op: String, sym: String, a: Column, b: Column): Column = {
     val t = call_function(s"try_$op", a, b)
     when(a.isNotNull && b.isNotNull && t.isNull,
       raise_error(concat(
-        lit(s"TInt overflow: ("), a.cast("string"), lit(s") $sym ("),
-        b.cast("string"),
-        lit(") exceeds the 64-bit default mapping — fiat2 TInt is " +
-          "unbounded Z; compile with Env(wideInt = true) for the " +
-          "Decimal(38,0) mapping"))).cast("long"))
+        lit(s"$TIntOverflowMarker: ("), a.cast("string"), lit(s") $sym ("),
+        b.cast("string"), lit(")" + fix))).cast("long"))
       .otherwise(t)
   }
   def checkedAdd(a: Column, b: Column): Column =
@@ -57,9 +69,7 @@ object Fiat2 {
     * ANSI's own negate from ever seeing it (branches evaluate lazily). */
   def checkedNeg(a: Column): Column =
     when(a === lit(Long.MinValue),
-      raise_error(lit("TInt overflow: -(-9223372036854775808) exceeds the " +
-        "64-bit default mapping — fiat2 TInt is unbounded Z; compile with " +
-        "Env(wideInt = true) for the Decimal(38,0) mapping")).cast("long"))
+      raise_error(lit(overflowMessage("-(-9223372036854775808)"))).cast("long"))
       .otherwise(-a)
 
   /** Euclidean-style modulo with the sign of the DIVISOR — Coq `Z.modulo`
@@ -80,19 +90,6 @@ object Fiat2 {
     */
   def ediv(a: Column, b: Column): Column =
     when(b === 0, lit(0L)).otherwise(call_function("div", a - emod(a, b), b))
-
-  /** Floor division on the wideInt (DecimalType(38,0)) mapping. Spark's
-    * `div` always returns BIGINT, which would cap the wide path back at
-    * 2^63 — so divide exactly with decimal `/` (the numerator is made
-    * exactly divisible first, the fractional part is .000000) and cast the
-    * integral result back to scale 0. Quotients keep ~32 integral digits
-    * (decimal(38,6)); beyond that ANSI raises, same stance as the rest of
-    * the wide mapping. */
-  def edivWide(a: Column, b: Column): Column = {
-    val wide = org.apache.spark.sql.types.DecimalType(38, 0)
-    when(b === 0, lit(0L).cast(wide))
-      .otherwise(((a - emod(a, b)) / b).cast(wide))
-  }
 
   // ---------------------------------------------------------------------------
   // Records (name-sorted structs).

@@ -9,10 +9,11 @@ import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.{lit, udaf}
 import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, LongType, StringType}
 
-/** UNBOUNDED `TInt` — the third tier of the engine's mapping for the
+/** UNBOUNDED `TInt` — the second tier of the engine's mapping for the
   * reference's Coq `Z` (fiat2/src/fiat2/Value.v:12). Tier 1 is the
-  * overflow-checked Long default; tier 2 the Decimal(38,0) wide mapping;
-  * this tier carries arbitrary-precision integers in a `BinaryType`
+  * overflow-checked Long default (`Compiler.autoWide` replays a program
+  * here when it overflows); this tier carries arbitrary-precision
+  * integers in a `BinaryType`
   * column using an ORDER-PRESERVING canonical encoding, so Spark's
   * native binary comparison (unsigned lexicographic) coincides with
   * numeric order — `<`, `=`, `sort`, `min`/`max`, group-by keys, and

@@ -1,5 +1,6 @@
 package graft.lang
 
+import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.{Alias, Expression,
@@ -42,19 +43,16 @@ object Compiler {
       // composed-index handles (compo_idx): base table name → the record of
       // components; a cons-insert updates EVERY component (compo_idx_wf)
       compoIndexes: Map[String, graft.operators.CompoIndex] = Map.empty,
-      // opt-in unbounded-TInt mapping (DecimalType(38,0) instead of
-      // LongType) — see sparkType; set once when building the Env
-      wideInt: Boolean = false,
-      // the THIRD TInt tier: arbitrary-precision integers in BinaryType
+      // the bignum TInt tier: arbitrary-precision integers in BinaryType
       // columns under BigIntMath's order-preserving canonical encoding
       // (functions/BigIntOps.scala) — the reference's actual unbounded Z
       // (fiat2/src/fiat2/Value.v:12), memory-bounded only. autoWide
-      // escalates narrow → wide → big; set once when building the Env.
+      // escalates narrow → big; set once when building the Env.
       bigInt: Boolean = false,
       // TWord width (the reference is width-parametric, `Section WithWord`
       // fiat2/src/fiat2/Language.v:4): 64 (default) or 32 — selects the
       // WordOps bundle and canonicalizes AWord literals. Set once when
-      // building the Env, like wideInt.
+      // building the Env, like bigInt.
       wordWidth: Int = 64,
       // SCOPED index annotations (IndexTransf.transformScoped): CLetMut
       // binder → attributes its body loop-point-filters on. The analog of
@@ -101,75 +99,54 @@ object Compiler {
     }
   }
 
-  /** Is this (possibly wrapped) failure the engine's DIRECTED TInt-overflow
-    * error — from a checked scalar op (Fiat2.checkedArith via raise_error,
-    * surfacing inside a SparkException at action time) or the eager
-    * table-sum range check? Walks the cause chain: Spark wraps executor
-    * errors several layers deep. */
+  /** Is this (possibly wrapped) failure a TInt value leaving the narrow
+    * tier's range? Decided by error condition and type, never by message
+    * text, walking the cause chain (a failure can arrive wrapped):
+    *  - the DIRECTED error of a checked scalar op or `tierSum`
+    *    (`raise_error`: condition USER_RAISED_EXCEPTION) whose message
+    *    parameter starts with `Fiat2.TIntOverflowMarker`;
+    *  - NUMERIC_VALUE_OUT_OF_RANGE: a narrow-tier Decimal(38,0) partial
+    *    sum (`tierSum`, the table sum) past 10^38;
+    *  - `Fiat2.TIntOverflow`: the eager table-sum range check.
+    * ANSI's long overflow (ARITHMETIC_OVERFLOW) is not one: every narrow
+    * TInt op is checked before ANSI sees it, so it is some other fault. */
   def isTIntOverflow(e: Throwable): Boolean =
-    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16)
-      .exists(t => Option(t.getMessage).exists(_.contains("TInt overflow")))
-
-  /** Is this failure the WIDE tier's Decimal(38,0) ceiling? In a wide-tier
-    * run the ONLY Decimal(38,0) expressions are the TInt mapping itself —
-    * the wide TWord family (WordMathWide) masks residues in BigInteger and
-    * never lets ANSI see an overflow — so an ANSI decimal-out-of-range
-    * there is, by construction, a TInt value past 10^38 and it is sound
-    * for `autoWide` to re-tier on it. (Long-overflow ANSI errors say
-    * "long overflow" and directed narrow errors say "TInt overflow" —
-    * neither matches these Decimal-specific markers.) */
-  def isWideDecimalOverflow(e: Throwable): Boolean =
-    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16)
-      .exists(t => Option(t.getMessage).exists(m =>
-        m.contains("NUMERIC_VALUE_OUT_OF_RANGE") ||
-          m.contains("cannot be represented as Decimal(38") ||
-          m.contains("Overflow in sum of decimals") ||
-          m.contains("Decimal(38, 0)") && m.contains("overflow")))
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16).exists {
+      case _: Fiat2.TIntOverflow => true
+      case t: SparkThrowable => Option(t.getCondition).exists { c =>
+        c.startsWith("NUMERIC_VALUE_OUT_OF_RANGE") ||
+          c == "USER_RAISED_EXCEPTION" &&
+            Option(t.getMessageParameters.get("errorMessage"))
+              .exists(_.startsWith(Fiat2.TIntOverflowMarker))
+      }
+      case _ => false
+    }
 
   /** TIERED TInt execution — the engine's AUTO stance on the reference's
     * unbounded `Z` (fiat2/src/fiat2/Value.v:12): run the program on the
-    * fast 64-bit mapping first; if the DIRECTED TInt-overflow error fires
-    * anywhere (eager table folds at compile time, checked scalar ops at
-    * action time), re-run the SAME program on the Decimal(38,0) wide
-    * mapping, which reproduces the reference's exact value. The common
-    * case pays zero widening cost; the overflowing case pays one extra
-    * (narrow, aborted) run — the classic speculative-narrowing tier.
+    * fast, overflow-checked 64-bit mapping first; if a TInt value leaves
+    * its range anywhere (`isTIntOverflow`: eager table folds at compile
+    * time, checked scalar ops and sums at action time), re-run the SAME
+    * program ONCE on the BIGNUM mapping (`Env.bigInt`): arbitrary-precision
+    * BinaryType columns under BigIntMath's order-preserving encoding —
+    * the reference's exact value, bounded only by memory. The common case
+    * pays zero widening cost; the overflowing case pays one extra
+    * (narrow, aborted) run — one speculation, one exact fallback.
     *
-    * Past 10^38 the wide tier itself overflows (ANSI Decimal — see
-    * isWideDecimalOverflow for why that error is unambiguous there) and
-    * the program re-tiers ONCE more onto the BIGNUM mapping
-    * (`Env.bigInt`): arbitrary-precision BinaryType columns under
-    * BigIntMath's order-preserving encoding — the reference's actual
-    * unbounded Z, bounded only by memory. Three tiers, three runs worst
-    * case; zero cost for the (overwhelming) non-overflowing majority.
-    *
-    * `run` receives the tier's Env (`wideInt`/`bigInt` per tier) and must
+    * `run` receives the tier's Env (`bigInt` per tier) and must
     * (a) rebuild any TInt store columns for the tier's type — Long vs
-    * Decimal(38,0) vs canonical bytes (BigIntOps.fromLong); `Store.bind`
-    * does this from a store declaration — and (b)
-    * MATERIALIZE its result (run the action): an overflow that only
-    * surfaces after this call returns is too late to re-tier.
-    * Program-level entry points are eager anyway, like the reference
-    * interpreter. Sound to replay because programs are pure — the
-    * narrow run's partial effects live only in its discarded Env. */
+    * canonical bytes (BigIntOps.fromLong); `Store.bind` does this from a
+    * store declaration — and (b) MATERIALIZE its result (run the
+    * action): an overflow that only surfaces after this call returns is
+    * too late to re-tier. Program-level entry points are eager anyway,
+    * like the reference interpreter. Sound to replay because programs are
+    * pure — the narrow run's partial effects live only in its discarded
+    * Env. */
   def autoWide[A](env: Env)(run: Env => A): A =
-    try quietTierProbe(env.spark, "tint-tier-probe (narrow)") {
-      run(env.copy(wideInt = false, bigInt = false))
-    } catch {
-      // the narrow tier's eager table-sum check sums in Decimal(38,0)
-      // partials: a sum past 10^38 surfaces the DECIMAL marker directly
-      // from tier 1 — skip the doomed wide tier and go straight to bignum
-      case e: Throwable if isWideDecimalOverflow(e) =>
-        logTierEscalation("narrow -> bignum", e)
-        run(env.copy(wideInt = false, bigInt = true))
-      case e: Throwable if isTIntOverflow(e) =>
-        logTierEscalation("narrow -> wide", e)
-        try quietTierProbe(env.spark, "tint-tier-probe (wide)") {
-          run(env.copy(wideInt = true, bigInt = false))
-        } catch { case e2: Throwable if isWideDecimalOverflow(e2) =>
-          logTierEscalation("wide -> bignum", e2)
-          run(env.copy(wideInt = false, bigInt = true))
-        }
+    try run(env.copy(bigInt = false))
+    catch { case e: Throwable if isTIntOverflow(e) =>
+      logTierEscalation("narrow -> bignum", e)
+      run(env.copy(bigInt = true))
     }
 
   /** `autoWide` for TABLE-valued programs: `build` returns the program's
@@ -199,17 +176,13 @@ object Compiler {
       t -> (TBag(TRecord.sorted(cols: _*)): FType) }.toMap
 
     /** `env` with each declared table loaded from `dir` and narrowed to its
-      * columns. A TInt column takes the tier's representation, as
-      * `sparkType` decides it: Long, Decimal(38,0), or BigIntOps bytes;
-      * every other column loads as stored. */
+      * columns. A TInt column takes the tier's representation: Long, or
+      * BigIntOps bytes on the bignum tier; every other column loads as
+      * stored. */
     def bind(env: Env, dir: String): Env = env.copy(store = tables.map {
       case (t, cols) => t -> graft.core.Tables.load(env.spark, dir, t)
         .select(cols.map {
-          case (c, TInt) => (sparkType(TInt, env.wideInt, env.wordWidth,
-              env.bigInt) match {
-            case BinaryType => BigIntOps.fromLong(col(c).cast(LongType))
-            case dt => col(c).cast(dt)
-          }).as(c)
+          case (c, TInt) => intCol(col(c).cast(LongType), env).as(c)
           case (c, _) => col(c)
         }: _*)
     }.toMap)
@@ -217,56 +190,26 @@ object Compiler {
 
   private lazy val tierLog = org.slf4j.LoggerFactory.getLogger("graft.tint")
 
-  /** ONE visible line per tier escalation — the expected, by-design
-    * overflow retry used to spew `ERROR TaskSetManager` + full stack
-    * traces into every at-scale Verify log for a CAUGHT failure. */
+  /** ONE line per tier escalation, naming the overflow that caused it.
+    * The aborted narrow run's task failures still reach Spark's own logs
+    * (`ERROR TaskSetManager`); this line marks them as the expected
+    * retry. Log levels are left alone: they are process-global, and
+    * other requests run concurrently. */
   private def logTierEscalation(hop: String, e: Throwable): Unit = {
     val msg = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16)
       .flatMap(t => Option(t.getMessage)).toSeq.lastOption.getOrElse("")
     tierLog.info(s"TInt tier escalation $hop (expected, re-running the " +
-      s"program on the wider mapping): ${msg.linesIterator.take(1).mkString}")
-  }
-
-  /** Run a SPECULATIVE tier attempt with the expected-failure log noise
-    * off: a directed overflow inside aborts ~2 jobs' worth of tasks, and
-    * TaskSetManager/Executor each print ERROR + a full stack trace for
-    * what is a caught, by-design retry. Probe jobs are tagged via the
-    * job description; a NON-overflow failure is logged once (loudly)
-    * before rethrowing, so a real task failure stays visible even though
-    * its per-task spew was suppressed. Levels restore on exit. */
-  private def quietTierProbe[A](spark: SparkSession, desc: String)(
-      body: => A): A = {
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.config.Configurator
-    val noisy = Seq("org.apache.spark.scheduler.TaskSetManager",
-      "org.apache.spark.executor.Executor")
-    val prev = noisy.map(n => n -> LogManager.getLogger(n).getLevel)
-    val sc = spark.sparkContext
-    val prevDesc = sc.getLocalProperty("spark.job.description")
-    noisy.foreach(n => Configurator.setLevel(n, Level.OFF))
-    sc.setJobDescription(desc)
-    try body
-    catch { case t: Throwable =>
-      if (!isTIntOverflow(t) && !isWideDecimalOverflow(t))
-        tierLog.warn(s"non-overflow failure inside $desc (task-level " +
-          s"logs were suppressed for the probe): $t")
-      throw t
-    } finally {
-      sc.setJobDescription(prevDesc)
-      prev.foreach { case (n, l) => Configurator.setLevel(n, l) }
-    }
+      s"program on the bignum mapping): ${msg.linesIterator.take(1).mkString}")
   }
 
   /** A TInt-producing Long column, re-encoded for the bignum tier (the
-    * narrow and wide tiers both consume raw Longs — Spark coerces Long
-    * into Decimal arithmetic implicitly; BinaryType has no implicit
-    * coercion, so every TInt PRODUCER must encode on the big tier). */
+    * narrow tier consumes raw Longs; BinaryType has no implicit coercion,
+    * so every TInt PRODUCER must encode on the big tier). */
   private def intCol(c: Column, env: Env): Column =
     if (env.bigInt) BigIntOps.fromLong(c) else c
 
-  /** TInt ZERO at the env's tier — the sum default on no-match rows
-    * (Long coerces into Decimal implicitly, so narrow and wide share the
-    * Long literal; the big tier needs the canonical byte encoding). */
+  /** TInt ZERO at the env's tier — the sum default on no-match rows (the
+    * big tier needs the canonical byte encoding). */
   private def tintZero(env: Env): Column =
     if (env.bigInt) lit(graft.functions.BigIntMath.ZERO_BYTES) else lit(0L)
 
@@ -278,13 +221,11 @@ object Compiler {
     * per-key/per-outer aggregates so the corr family rides the tiers too
     * (OVERFLOW_r14 measured q_lang_corr_nonequi.sum_below crossing int64
     * at ~191x and ANSI-throwing; with this check the program re-tiers
-    * onto the exact Decimal(38,0) mapping instead). The wide tier sums
-    * its Decimal inputs plainly (ANSI raises the decimal marker past
-    * 10^38, which autoWide re-tiers onto bignum); the big tier sums
-    * canonical bytes map-side (BigIntSumAgg). */
+    * onto the exact bignum mapping instead — as it does when the Decimal
+    * partials themselves pass 10^38). The big tier sums canonical bytes
+    * map-side (BigIntSumAgg). */
   private def tierSum(v: Column, env: Env): Column =
     if (env.bigInt) BigIntOps.sumCol(v)
-    else if (env.wideInt) sum(v)
     else {
       val w = sum(v.cast(DecimalType(38, 0)))
       val hi = lit(new java.math.BigDecimal(Long.MaxValue))
@@ -293,8 +234,9 @@ object Compiler {
       // an out-of-range group; a null sum (unmatched left-join row) falls
       // through both comparisons to the cast, which preserves the null
       when(w > hi || w < lo, raise_error(concat(
-        lit("TInt overflow: correlated aggregate sum "), w.cast(StringType),
-        lit(" exceeds the 64-bit default mapping"))).cast(LongType))
+        lit(s"${Fiat2.TIntOverflowMarker}: correlated aggregate sum "),
+        w.cast(StringType), lit(" exceeds the 64-bit default mapping")))
+        .cast(LongType))
         .otherwise(w.cast(LongType))
     }
 
@@ -416,20 +358,19 @@ object Compiler {
     }
   }
 
-  /** `wideInt` widens `TInt` from LongType to DecimalType(38,0) — the
-    * opt-in path for programs whose Coq-`Z` arithmetic overflows a 64-bit
-    * long (README "Known divergences": TInt is unbounded in the reference;
-    * the widened mapping gives 10^38 headroom with ANSI overflow checking
-    * beyond that, while `TWord` keeps its machine-word wrap semantics). */
-  def sparkType(t: FType, wideInt: Boolean = false,
-      wordWidth: Int = 64, bigInt: Boolean = false): DataType = t match {
+  /** The Spark type of a fiat2 type. `bigInt` maps `TInt` to the bignum
+    * tier's canonical bytes instead of the checked Long — the path for
+    * programs whose Coq-`Z` arithmetic overflows a 64-bit long (README
+    * "Known divergences": TInt is unbounded in the reference), while
+    * `TWord` keeps its machine-word wrap semantics at `wordWidth`. */
+  def sparkType(t: FType, wordWidth: Int = 64,
+      bigInt: Boolean = false): DataType = t match {
     case THole => throw new UnsupportedOperationException(
       "unelaborated type hole — run TypeCheck.analyze against the expected " +
         "type before compiling")
     // bignum tier: order-preserving canonical bytes (BigIntMath) — binary
     // lexicographic IS numeric order, so native compare/sort/group work
     case TInt if bigInt => BinaryType
-    case TInt if wideInt => DecimalType(38, 0)
     // TWord's physical type follows the width family (WordOps.forWidth):
     // sign-extended Long through 64, Decimal(38,0) residues through 125,
     // fixed-length byte residues beyond
@@ -446,17 +387,17 @@ object Compiler {
     // boxes. Closed in r11 — formerly the nested-option-flattening
     // divergence (the reference's values nest freely, Value.v:5-22).
     case TOption(u @ TOption(_)) => StructType(Seq(
-      StructField("s", sparkType(u, wideInt, wordWidth, bigInt))))
-    case TOption(u) => sparkType(u, wideInt, wordWidth, bigInt)
-    case TList(u) => ArrayType(sparkType(u, wideInt, wordWidth, bigInt))
-    case TBag(u) => ArrayType(sparkType(u, wideInt, wordWidth, bigInt))
-    case TSet(u) => ArrayType(sparkType(u, wideInt, wordWidth, bigInt))
+      StructField("s", sparkType(u, wordWidth, bigInt))))
+    case TOption(u) => sparkType(u, wordWidth, bigInt)
+    case TList(u) => ArrayType(sparkType(u, wordWidth, bigInt))
+    case TBag(u) => ArrayType(sparkType(u, wordWidth, bigInt))
+    case TSet(u) => ArrayType(sparkType(u, wordWidth, bigInt))
     case TDict(k, v) => ArrayType(StructType(Seq(
-      StructField("key", sparkType(k, wideInt, wordWidth, bigInt)),
-      StructField("value", sparkType(v, wideInt, wordWidth, bigInt)))))
+      StructField("key", sparkType(k, wordWidth, bigInt)),
+      StructField("value", sparkType(v, wordWidth, bigInt)))))
     case TRecord(fs) => StructType(
       fs.sortBy(_._1).map { case (n, u) =>
-        StructField(n, sparkType(u, wideInt, wordWidth, bigInt)) })
+        StructField(n, sparkType(u, wordWidth, bigInt)) })
   }
 
   /** Fresh alias ids for flatmap decorrelation — nested correlated
@@ -1079,8 +1020,8 @@ object Compiler {
     // parse every mixed conjunct as outer-vs-inner under OLess:
     // (outerExpr, innerBinder, innerExpr, outerIsLeft) — None if any
     // conjunct has another shape. OLess is TInt-total and every tier's
-    // encoding is order-preserving (Long; Decimal(38,0); BigIntMath
-    // canonical bytes), so a raw `<` on the collected expression values
+    // encoding is order-preserving (Long; BigIntMath canonical bytes),
+    // so a raw `<` on the collected expression values
     // IS value_compare.
     def rangeConjsOf(sp: ConjSplit)
         : Option[List[(Expr, String, Expr, Boolean)]] = {
@@ -1376,8 +1317,6 @@ object Compiler {
               if (env.bigInt) aggregate(vals,
                 lit(graft.functions.BigIntMath.ZERO_BYTES),
                 (acc, v) => BigIntOps.add(acc, v))
-              else if (env.wideInt) aggregate(vals,
-                lit(0).cast(DecimalType(38, 0)), (acc, v) => acc + v)
               else aggregate(vals, lit(0L),
                 (acc, v) => Fiat2.checkedAdd(acc, v))
             case EACIFold(AGMin, _) => array_min(vals)
@@ -1642,22 +1581,21 @@ object Compiler {
     case EAtom(a) => CV(a match {
       case AWord(v) => WordOps.forWidth(env.wordWidth).literal(v)
       case AInt(v) if env.bigInt => BigIntOps.literal(v)
-      case AInt(v) if env.wideInt => lit(v).cast(DecimalType(38, 0))
       case AInt(v) => lit(v)
       case ABool(v) => lit(v)
       case AString(v) => lit(v)
       case ANil(t) => array().cast(ArrayType(
-        sparkType(t, env.wideInt, env.wordWidth, env.bigInt)))
+        sparkType(t, env.wordWidth, env.bigInt)))
       // None : TOption(t) — cast to the OPTION's encoding (boxed struct
       // when t is itself an option; the inner type's encoding otherwise)
       case ANone(t) =>
-        lit(null).cast(sparkType(TOption(t), env.wideInt, env.wordWidth, env.bigInt))
+        lit(null).cast(sparkType(TOption(t), env.wordWidth, env.bigInt))
       case AEmptyDict(k, v) =>
-        array().cast(sparkType(TDict(k, v), env.wideInt, env.wordWidth, env.bigInt))
+        array().cast(sparkType(TDict(k, v), env.wordWidth, env.bigInt))
       case AEmptyBag(t) => array().cast(ArrayType(
-        sparkType(t, env.wideInt, env.wordWidth, env.bigInt)))
+        sparkType(t, env.wordWidth, env.bigInt)))
       case AEmptySet(t) => array().cast(ArrayType(
-        sparkType(t, env.wideInt, env.wordWidth, env.bigInt)))
+        sparkType(t, env.wordWidth, env.bigInt)))
       case AUnit => lit(null)
     })
 
@@ -1673,7 +1611,6 @@ object Compiler {
       case (OWNeg, v) => // wraps at the width's MinValue
         CV(WordOps.forWidth(env.wordWidth).wneg(asCV(v)))
       case (ONeg, v) => CV(if (env.bigInt) BigIntOps.neg(asCV(v))
-        else if (env.wideInt) -asCV(v)
         else Fiat2.checkedNeg(asCV(v)))
       case (ONot, v) => CV(!asCV(v))
       case (OLengthString, v) =>
@@ -2416,30 +2353,22 @@ object Compiler {
         // aggregator's zero, not null — same stance as the other tiers
         CV(lit(df.agg(BigIntOps.sumCol(col("value"))).head()
           .getAs[Array[Byte]](0)))
-      case (AGSum, TV(df)) if !env.wideInt =>
+      case (AGSum, TV(df)) =>
         // sum WIDE (Decimal(38,0) partials — still one distributed agg),
         // then range-check on the driver: a table sum past 2^63 raises the
-        // DIRECTED wideInt error instead of ANSI's bare ARITHMETIC_OVERFLOW
+        // DIRECTED, typed overflow instead of ANSI's bare ARITHMETIC_OVERFLOW
         val wide = df.agg(coalesce(sum(col("value").cast(DecimalType(38, 0))),
           lit(0).cast(DecimalType(38, 0)))).head().getDecimal(0)
         // bitLength excludes the sign bit: -2^63 (in range) is 63, 2^63 and
         // -2^63-1 (out of range) are 64
         val bi = wide.toBigInteger
         if (bi.bitLength > 63)
-          throw new ArithmeticException(
-            s"TInt overflow: table sum $bi exceeds the 64-bit default " +
-              "mapping — fiat2 TInt is unbounded Z; compile with " +
-              "Env(wideInt = true) for the Decimal(38,0) mapping")
+          throw new Fiat2.TIntOverflow(Fiat2.overflowMessage(s"table sum $bi"))
         CV(lit(bi.longValueExact()))
-      case (AGSum, TV(df)) => CV(lit(
-        df.agg(coalesce(sum(col("value")), lit(0L)).as("value"))
-          .head().get(0)))
       case (AGCount, TV(df)) => CV(intCol(lit(df.count()), env))
       case (AGSum, CV(c)) => CV(if (env.bigInt)
           aggregate(c, lit(graft.functions.BigIntMath.ZERO_BYTES),
             (a, v) => BigIntOps.add(a, v))
-        else if (env.wideInt)
-          aggregate(c, lit(0).cast(DecimalType(38, 0)), (a, v) => a + v)
         else aggregate(c, lit(0L), (a, v) => Fiat2.checkedAdd(a, v)))
       case (AGCount, CV(c)) => CV(intCol(size(c).cast("long"), env))
     }
@@ -2566,21 +2495,15 @@ object Compiler {
     lazy val v2 = compile(e2, env)
     op match {
       // default TInt (Long) path: overflow-checked with a DIRECTED error
-      // naming wideInt (the reference's TInt is unbounded Z, Value.v:12 —
-      // a silent wrap or a bare ANSI error would both mis-serve it). The
-      // wideInt (Decimal(38,0)) path keeps plain ops: ANSI checks them at
-      // 10^38, the documented headroom of the wide mapping.
+      // naming bigInt (the reference's TInt is unbounded Z, Value.v:12 —
+      // a silent wrap or a bare ANSI error would both mis-serve it)
       case OPlus => CV(if (env.bigInt) BigIntOps.add(asCV(v1), asCV(v2))
-        else if (env.wideInt) asCV(v1) + asCV(v2)
         else Fiat2.checkedAdd(asCV(v1), asCV(v2)))
       case OMinus => CV(if (env.bigInt) BigIntOps.sub(asCV(v1), asCV(v2))
-        else if (env.wideInt) asCV(v1) - asCV(v2)
         else Fiat2.checkedSub(asCV(v1), asCV(v2)))
       case OTimes => CV(if (env.bigInt) BigIntOps.mul(asCV(v1), asCV(v2))
-        else if (env.wideInt) asCV(v1) * asCV(v2)
         else Fiat2.checkedMul(asCV(v1), asCV(v2)))
       case ODiv => CV(if (env.bigInt) BigIntOps.ediv(asCV(v1), asCV(v2))
-        else if (env.wideInt) Fiat2.edivWide(asCV(v1), asCV(v2))
         else Fiat2.ediv(asCV(v1), asCV(v2)))
       case OMod => CV(if (env.bigInt) BigIntOps.emod(asCV(v1), asCV(v2))
         else Fiat2.emod(asCV(v1), asCV(v2)))
@@ -2621,8 +2544,8 @@ object Compiler {
           val entry = get(filter(asCV(v1), e => e("key") <=> asCV(v2)),
             lit(0))
           CV(when(entry.isNull,
-            lit(null).cast(sparkType(TOption(vt), env.wideInt,
-              env.wordWidth, env.bigInt)))
+            lit(null).cast(sparkType(TOption(vt), env.wordWidth,
+              env.bigInt)))
             .otherwise(struct(entry("value").as("s"))))
         case _ => CV(Fiat2.dictLookup(asCV(v1), asCV(v2)))
       }
@@ -2671,13 +2594,18 @@ object Compiler {
   }
 
   /** fiat2's INSERT: `cons` a record onto a table (SURVEY.md §4.3). */
-  private def consRow(elem: Column, df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val cols = df.columns.sorted
-    val one =
-      if (cols.sameElements(Array("value")))
-        oneRow(spark).select(elem.as("value"))
-      else oneRow(spark).select(cols.map(c => elem(c).as(c)): _*)
-    one.select(df.columns.map(col): _*).union(df)
-  }
+  private def consRow(elem: Column, df: DataFrame): DataFrame =
+    rowPlan(df.sparkSession, elem, df.columns).union(df)
+
+  /** One inserted element (a record, or the scalar of a `value` table) as
+    * a one-row plan with the columns `cols`. A single-split Range plan is
+    * one partition, so a cons chain of them unions without a shuffle; a
+    * `LocalRelation` per row would not, and a global sort over the chain
+    * would plan an Exchange. An insert chain's delta folds its rows into
+    * one relation with `localUnion`. */
+  def rowPlan(spark: SparkSession, elem: Column,
+      cols: Array[String]): DataFrame =
+    if (cols.sameElements(Array("value")))
+      oneRow(spark).select(elem.as("value"))
+    else oneRow(spark).select(cols.map(c => elem(c).as(c)): _*)
 }

@@ -215,12 +215,8 @@ object Interp {
     * literal or loop-bound records), else a union of one-row plans. */
   private def deltaDF(rows: List[Expr], cols: Array[String],
       env: Env): DataFrame = {
-    val plans = rows.map { r =>
-      val elem = Compiler.asScalar(compileProgram(r, env))
-      if (cols.sameElements(Array("value")))
-        Compiler.oneRow(env.spark).select(elem.as("value"))
-      else Compiler.oneRow(env.spark).select(cols.map(c => elem(c).as(c)): _*)
-    }
+    val plans = rows.map(r => Compiler.rowPlan(env.spark,
+      Compiler.asScalar(compileProgram(r, env)), cols))
     Compiler.localUnion(plans).getOrElse(plans.reduce(_ union _))
   }
 

@@ -2,6 +2,7 @@ package graft.lang
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.functions.BigIntOps
 
 /** AUTOMATIC incremental aggregate maintenance — the reference's SumAgg /
   * MinAgg materialized-view transforms (`sum_to_agg_lookup_head` +
@@ -134,13 +135,18 @@ object IvmTransf {
     // not one per cell): sum of empty = 0 (the column's own numeric type
     // is preserved — casting to long would truncate a double-typed sum
     // and diverge from the interpreter's un-cast aggregate); min of empty
-    // = NULL (the None-on-empty ACI semantics)
+    // = NULL (the None-on-empty ACI semantics). On the bignum tier a TInt
+    // sum or count cell holds canonical bytes, like the bumps it takes.
     val inits: Map[(String, String, MAgg), Column] =
       maintained.groupBy(_._1).toSeq.flatMap { case (t, cells) =>
         val aggs = cells.map {
-          case (_, a, MSum) => coalesce(sum(col(a)), lit(0L))
+          case (_, a, MSum) =>
+            if (env.bigInt) BigIntOps.sumCol(col(a))
+            else coalesce(sum(col(a)), lit(0L))
           case (_, a, MMin) => min(col(a))
-          case (_, _, MCount) => count(lit(1))
+          case (_, _, MCount) =>
+            if (env.bigInt) BigIntOps.fromLong(count(lit(1)))
+            else count(lit(1))
         }
         val out = env.store(t).agg(aggs.head, aggs.tail: _*)
         val row = out.head()

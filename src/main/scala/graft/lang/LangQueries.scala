@@ -3,6 +3,7 @@ package graft.lang
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{GraftQuery, Tables}
+import graft.functions.BigIntOps
 
 /** End-to-end programs written in fiat2's notation (Notations.v:52-148, as
   * `Parser` reads it), parsed once when `queries` is built, compiled by
@@ -104,58 +105,56 @@ object LangQueries {
       }
     },
 
-    // UNBOUNDED TInt (Coq Z) through the opt-in wideInt mapping: TInt
-    // compiles to DecimalType(38,0) instead of LongType, so arithmetic
-    // whose result exceeds 2^63 — here a sum of 10^15-scaled custkeys,
-    // ~10^22 at sf0.01 — computes exactly where the default mapping would
-    // raise an ANSI overflow (README "Known divergences" #1; the
-    // reference's TInt is Z, fiat2/src/fiat2/Value.v:12). The oracle
-    // replays the sum in DuckDB HUGEINT; both render as strings so the
-    // compare is representation-independent.
+    // UNBOUNDED TInt (Coq Z) through the opt-in bignum mapping
+    // (Env.bigInt): TInt compiles to BigIntOps' canonical bytes instead of
+    // LongType, so arithmetic whose result exceeds 2^63 — here a sum of
+    // 10^15-scaled custkeys, ~10^22 at sf0.01 — computes exactly where the
+    // default mapping would raise its directed overflow (README "Known
+    // divergences" #1; the reference's TInt is Z,
+    // fiat2/src/fiat2/Value.v:12). `toStr` renders the bytes in decimal;
+    // the oracle replays the sum in DuckDB HUGEINT and renders it too.
     GraftQuery.sql("q_lang_wide_sum",
       """SELECT CAST(SUM(CAST(o_custkey AS HUGEINT) * 1000000000000000)
         |            AS VARCHAR) AS total
         |FROM orders""".stripMargin) {
       val prog = expr("q_lang_wide_sum",
-        "sum(mapBag (mut orders) o o[o_custkey] * 1000000000000000)")
+        "toStr(sum(mapBag (mut orders) o o[o_custkey] * 1000000000000000))")
       val store = Store("orders" -> Seq("o_custkey" -> TInt))
       (s, dir) => {
-        val env = store.bind(Env(Map.empty, Map.empty, s, wideInt = true), dir)
-        s.range(1).select(
-          asScalar(compile(prog, env)).cast("string").as("total"))
+        val env = store.bind(Env(Map.empty, Map.empty, s, bigInt = true), dir)
+        s.range(1).select(asScalar(compile(prog, env)).as("total"))
       }
     },
 
     // AUTO-PROMOTION (tiered TInt): the SAME past-2^63 sum as
     // q_lang_wide_sum, but with NO flag — `Compiler.autoWide` runs the
     // program on the default 64-bit mapping, catches the directed
-    // TInt-overflow error, and replays it on the Decimal(38,0) mapping,
-    // matching the reference's unbounded-Z value with zero widening cost
-    // for programs that never overflow (README "Known divergences" #1 is
+    // TInt-overflow error, and replays it on the bignum mapping, matching
+    // the reference's unbounded-Z value with zero widening cost for
+    // programs that never overflow (README "Known divergences" #1 is
     // closed at the program boundary by this tier).
     GraftQuery.sql("q_lang_auto_widen",
       """SELECT CAST(SUM(CAST(o_custkey AS HUGEINT) * 1000000000000000)
         |            AS VARCHAR) AS total
         |FROM orders""".stripMargin) {
       val prog = expr("q_lang_auto_widen",
-        "sum(mapBag (mut orders) o o[o_custkey] * 1000000000000000)")
+        "toStr(sum(mapBag (mut orders) o o[o_custkey] * 1000000000000000))")
       val store = Store("orders" -> Seq("o_custkey" -> TInt))
       (s, dir) => stringRow(s, "total",
         Compiler.autoWide(Env(Map.empty, Map.empty, s)) { env =>
           // table AGSum is EAGER (the overflow surfaces inside the tier);
-          // render the scalar to a string driver-side
+          // toStr renders tier-correctly (bignum decodes, narrow casts)
           s.range(1).select(asScalar(compile(prog, store.bind(env, dir)))
-            .cast("string").as("total")).head().getString(0)
+            .as("total")).head().getString(0)
         })
     },
 
-    // THE THIRD TIER (r13): a sum whose VALUE passes 10^38 — past the
-    // narrow Long mapping AND the Decimal(38,0) wide mapping. autoWide
-    // re-tiers twice (the per-row ×10^18 overflows Long; the 1.2×10^38
-    // total overflows the wide sum's ANSI Decimal ceiling) and lands on
-    // the BIGNUM mapping (Env.bigInt — BinaryType columns under
-    // BigIntMath's order-preserving encoding), reproducing the
-    // reference's unbounded Z exactly (fiat2/src/fiat2/Value.v:12).
+    // A sum whose VALUE passes 10^38 — past the narrow Long mapping and
+    // past the Decimal(38,0) partials the narrow tier sums in. autoWide
+    // re-tiers once (the per-row ×10^18 overflows Long) and lands on the
+    // BIGNUM mapping (Env.bigInt — BinaryType columns under BigIntMath's
+    // order-preserving encoding), reproducing the reference's unbounded Z
+    // exactly (fiat2/src/fiat2/Value.v:12).
     // nation is the fixture because it is SF-stable (sum(n_nationkey) =
     // 300 at every SF), keeping the oracle's HUGEINT arithmetic in range:
     // 300 × 4×10^35 = 1.2×10^38 < 2^127.
@@ -392,8 +391,8 @@ object LangQueries {
     // passes), so any nation with ≥2 suppliers sums past 2^63. The narrow
     // tier's Decimal-partial range check (Compiler.tierSum) raises the
     // DIRECTED overflow and autoWideTable re-runs the program on the
-    // Decimal(38,0) mapping, which reproduces the reference's unbounded-Z
-    // value exactly (fiat2/src/fiat2/Value.v:12). The oracle replays the
+    // bignum mapping, which reproduces the reference's unbounded-Z value
+    // exactly (fiat2/src/fiat2/Value.v:12). The oracle replays the
     // sum in DuckDB HUGEINT; both sides render as strings so the compare
     // is representation-independent — this is the "recovery, not
     // loudness" proof the overflow audit extrapolated to 191x.
@@ -416,9 +415,10 @@ object LangQueries {
       (s, dir) => autoWideTable(Env(Map.empty, Map.empty, s)) { env =>
         // n_nationkey re-narrows to Long on every tier (its values are
         // tiny) so the dumped schema matches the oracle's BIGINT
+        val nk = col("n_nationkey")
         rows(prog, store.bind(env, dir))
-          .select(col("n_nationkey").cast("long").as("n_nationkey"),
-            col("wide_sum"))
+          .select((if (env.bigInt) BigIntOps.toLong(nk) else nk)
+            .as("n_nationkey"), col("wide_sum"))
       }.orderBy("n_nationkey")
     },
 

@@ -16,8 +16,9 @@ package graft.lang
   *    (value, count) run-length pairs (same information; `Interpret.v`'s
   *    `bag_to_list` of its encoding IS this vector);
   *  - `TInt` is genuinely unbounded (`BigInt`, Coq `Z`) — the engine's
-  *    LongType mapping ANSI-errors past 2^63 where this interpreter (and
-  *    the reference) keep growing; `Env(wideInt = true)` narrows that gap.
+  *    default LongType mapping raises a directed overflow past 2^63 where
+  *    this interpreter (and the reference) keep growing; the bignum
+  *    mapping (`Env(bigInt = true)`, or `Compiler.autoWide`) closes it.
   * Everything else is reference-exact: `None < Some` (nulls-first
   * canonical sorts), unsigned word order in `value_compare`, total
   * `Z.div`/`Z.modulo` (x/0 = 0, x mod 0 = x), fold_right semantics for
@@ -487,7 +488,6 @@ object RefInterp {
     case (TOption(u), x) => VOpt(Some(fromSpark(x, u)))
     case (_, null) => err(s"null at non-option type $t")
     case (TInt, x: Long) => VI(BigInt(x))
-    case (TInt, x: java.math.BigDecimal) => VI(BigInt(x.toBigInteger))
     case (TInt, x: Array[Byte]) => // bignum tier: canonical ordered bytes
       VI(BigInt(graft.functions.BigIntMath.decode(x)))
     case (TWord, x: Long) => VW(x)

@@ -41,7 +41,8 @@ object CompoIndex {
       partitions: Int = -1): CompoIndex = {
     require(attrs.nonEmpty && attrs.distinct == attrs,
       s"component attrs must be non-empty and distinct: $attrs")
-    val src = df.cache()
+    val srcRef = CacheRef.acquire(df)
+    val src = srcRef.df
     src.count() // the single source scan
     val p = if (partitions > 0) partitions else DictIndex.partitionsFor(src)
     val components = attrs.map { a =>
@@ -49,7 +50,7 @@ object CompoIndex {
       d.keyed.count() // materialize the component from the source cache
       a -> d
     }.toMap
-    src.unpersist()
+    srcRef.release()
     new CompoIndex(components)
   }
 }

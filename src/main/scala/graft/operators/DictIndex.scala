@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, classic}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 
 /** The reference's signature capability: a hash index on an attribute that
@@ -14,7 +15,7 @@ import org.apache.spark.sql.functions._
   */
 final class DictIndex private[operators] (
     val keyed: DataFrame, val keyCol: String, partitions: Int,
-    base: DataFrame, cachedDeltas: List[DataFrame]) {
+    caches: List[CacheRef]) {
 
   /** Point lookup — fiat2 `OLookup` on the index dict. */
   def lookup(key: Any): DataFrame = keyed.filter(col(keyCol) === lit(key))
@@ -34,16 +35,71 @@ final class DictIndex private[operators] (
   def insert(delta: DataFrame): DictIndex = {
     val aligned = delta.select(keyed.columns.map(col): _*)
     if (delta.isLocal)
-      new DictIndex(keyed.union(aligned), keyCol, partitions, base, cachedDeltas)
+      new DictIndex(keyed.union(aligned), keyCol, partitions, caches)
     else {
-      val keyedDelta = aligned.repartition(partitions, col(keyCol)).cache()
-      new DictIndex(keyed.union(keyedDelta), keyCol, partitions, base,
-        keyedDelta :: cachedDeltas)
+      val keyedDelta = CacheRef.acquire(
+        aligned.repartition(partitions, col(keyCol)))
+      new DictIndex(keyed.union(keyedDelta.df), keyCol, partitions,
+        keyedDelta :: caches)
     }
   }
 
   /** Release the base cache and every cached delta. */
-  def unpersist(): Unit = (base :: cachedDeltas).foreach(_.unpersist())
+  def unpersist(): Unit = caches.foreach(_.release())
+}
+
+/** One holder's claim on a cached plan. Spark's cache manager keeps ONE
+  * entry per plan, so an `unpersist` through any holder drops the entry
+  * for every other holder of an identical plan (two indexes over the same
+  * table and key: a concurrent `/runc` request, a lookup route). Claims
+  * are counted per entry, and only the last `release` unpersists. */
+private[operators] final class CacheRef private (val df: DataFrame,
+    private val key: LogicalPlan, private val entry: AnyRef) {
+  private val released = new java.util.concurrent.atomic.AtomicBoolean
+  /** Idempotent: an index and the indexes its inserts derived share
+    * their base claim. */
+  def release(): Unit =
+    if (released.compareAndSet(false, true)) CacheRef.release(this)
+}
+
+private[operators] object CacheRef {
+  // canonicalized analyzed plan -> (a frame of it, the cache entry that
+  // was counted, live claims)
+  private val claims =
+    scala.collection.mutable.HashMap[LogicalPlan, (DataFrame, AnyRef, Int)]()
+
+  /** The cache entry `df` reads now, by identity; None once it is gone. */
+  private def entryOf(df: DataFrame): Option[AnyRef] =
+    df.sparkSession.asInstanceOf[classic.SparkSession].sharedState
+      .cacheManager.lookupCachedData(df.asInstanceOf[classic.Dataset[_]])
+      .map(_.cachedRepresentation.cacheBuilder)
+
+  /** Cache `df` and claim its entry. */
+  def acquire(df: DataFrame): CacheRef = synchronized {
+    df.cache()
+    // an entry dropped outside the registry (clearCache, a plain
+    // unpersist) takes its count with it: a build after that starts a
+    // fresh count, which its own release can bring to zero
+    claims.filterInPlace { case (_, (d, e, _)) => entryOf(d).exists(_ eq e) }
+    val key = df.queryExecution.analyzed.canonicalized
+    val entry = entryOf(df).get
+    val n = claims.get(key).map(_._3).getOrElse(0)
+    claims(key) = (df, entry, n + 1)
+    new CacheRef(df, key, entry)
+  }
+
+  private def release(r: CacheRef): Unit = synchronized {
+    claims.get(r.key) match {
+      case Some((d, e, n)) if e eq r.entry =>
+        if (n > 1) claims(r.key) = (d, e, n - 1)
+        else {
+          claims -= r.key
+          if (entryOf(r.df).exists(_ eq e)) r.df.unpersist()
+        }
+      // the claimed entry is already gone; a rebuilt one is not ours
+      case _ => ()
+    }
+  }
 }
 
 object DictIndex {
@@ -81,7 +137,7 @@ object DictIndex {
     * default) sizes the key hash from the data. */
   def build(df: DataFrame, keyCol: String, partitions: Int = -1): DictIndex = {
     val p = if (partitions > 0) partitions else partitionsFor(df)
-    val keyed = df.repartition(p, col(keyCol)).cache()
-    new DictIndex(keyed, keyCol, p, keyed, Nil)
+    val keyed = CacheRef.acquire(df.repartition(p, col(keyCol)))
+    new DictIndex(keyed.df, keyCol, p, List(keyed))
   }
 }

@@ -375,26 +375,27 @@ class CompilerSpec extends AnyFunSuite {
       s"unnesting fell back to a cross product:\n$physical")
   }
 
-  test("wideInt maps TInt to decimal(38,0): sums past 2^63 compute exactly") {
+  test("bigInt maps TInt to canonical bytes: sums past 2^63 compute exactly") {
     // 4 × 3 × (10^18 + 1) = 1.2e19 + 12: exceeds Long.MaxValue ≈ 9.2e18 —
-    // the default mapping must raise ANSI overflow, the wideInt mapping
-    // must give the exact 20-digit result
+    // the default mapping must raise its directed overflow, the bigInt
+    // mapping must give the exact 20-digit result
     val big = 1000000000000000001L
     val prog = EACFold(AGSum, EProj(LikeBag, ELoc("t"), "x",
       EBinop(OTimes, EAccess(EVar("x"), "v"), EAtom(AInt(big)))))
     val t = Seq(3L, 3L, 3L, 3L).toDF("v")
-    val wide = Env(Map.empty,
-      Map("t" -> t.select($"v".cast("decimal(38,0)").as("v"))),
-      spark, wideInt = true)
+    val bignum = Env(Map.empty,
+      Map("t" -> t.select(graft.functions.BigIntOps.fromLong($"v").as("v"))),
+      spark, bigInt = true)
     val out = spark.range(1)
-      .select(asColumn(compile(prog, wide)).cast("string").as("s"))
+      .select(graft.functions.BigIntOps.toStr(asColumn(compile(prog, bignum)))
+        .as("s"))
       .head().getString(0)
     assert(out === "12000000000000000012")
     val narrow = Env(Map.empty, Map("t" -> t), spark)
     val ex = intercept[Exception] {
       spark.range(1).select(asColumn(compile(prog, narrow))).head()
     }
-    assert(ex.getMessage.toLowerCase.contains("overflow"))
+    assert(Compiler.isTIntOverflow(ex), s"expected the directed overflow: $ex")
   }
 
   test("table EFold streams past 10k rows in batches, same right-fold result") {

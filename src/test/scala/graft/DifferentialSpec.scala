@@ -487,14 +487,14 @@ class DifferentialSpec extends AnyFunSuite
       Option(ex.getCause).exists(isOverflow)
   }
 
-  test("wideInt differential: arithmetic past 2^63 matches Coq Z semantics") {
-    // the unbounded-TInt path (Env(wideInt = true), DecimalType(38,0)):
-    // sums/differences straddling 2^63, products to ~10^36, exact floor
+  test("bigInt differential: arithmetic straddling 2^63 matches Coq Z semantics") {
+    // the unbounded-TInt path (Env(bigInt = true)) just past the narrow
+    // tier: sums/differences straddling 2^63, products to ~10^36, floor
     // division — RefInterp computes in BigInt, which IS the reference
     for (i <- 0 until 25) {
       val rnd = new Random(6600 + i)
       def genSum(d: Int): Expr = // no products: keeps div numerators in
-        // the ~2^63 band, whose quotients decimal(38,6) represents exactly
+        // the ~2^63 band
         if (d <= 0) EAtom(AInt(rnd.between(1L << 58, 1L << 62)))
         else EBinop(if (rnd.nextBoolean()) OPlus else OMinus,
           genSum(d - 1), genSum(d - 1))
@@ -511,12 +511,12 @@ class DifferentialSpec extends AnyFunSuite
         }
       val e = gen(3)
       val expected = interp(e, REnv())
-      val env = Env(Map.empty, Map.empty, spark, wideInt = true)
+      val env = Env(Map.empty, Map.empty, spark, bigInt = true)
       Compiler.compileProgram(e, env) match {
         case CV(c) =>
           val got = fromSpark(spark.range(1).select(c.as("v")).head.get(0), TInt)
           assert(cmp(got, expected) == 0,
-            s"[wide case $i] compiled=$got reference=$expected\n${show(e)}")
+            s"[bigInt case $i] compiled=$got reference=$expected\n${show(e)}")
         case TV(_) => fail("scalar expression compiled to a table")
       }
     }
@@ -2002,13 +2002,13 @@ class DifferentialSpec extends AnyFunSuite
     assert(emptyStarts == 4)
   }
 
-  test("default-TInt boundary seeds: in-range agrees, out-of-range raises the DIRECTED wideInt error and the fix works") {
+  test("default-TInt boundary seeds: in-range agrees, out-of-range raises the DIRECTED bigInt error and the fix works") {
     // Random arithmetic over literals AT the 64-bit boundary
     // (±2^62, MaxValue, MinValue, small offsets). The default mapping is
     // overflow-CHECKED (r11): when every intermediate stays in range the
     // engine must equal the reference; when one leaves it, the engine
-    // must raise the DIRECTED error naming wideInt — and compiling the
-    // SAME expression under Env(wideInt = true) must then produce the
+    // must raise the DIRECTED error naming bigInt — and compiling the
+    // SAME expression under Env(bigInt = true) must then produce the
     // reference's exact unbounded-Z value (the directed fix actually
     // fixes). Both outcomes must occur across the seeds (anti-vacuity).
     def msgChain(ex: Throwable): String =
@@ -2036,16 +2036,16 @@ class DifferentialSpec extends AnyFunSuite
         inRange += 1
       } catch {
         case ex: Throwable if isOverflow(ex) =>
-          assert(msgChain(ex).contains("wideInt"),
+          assert(msgChain(ex).contains("bigInt"),
             s"[bound $i] overflow not DIRECTED: ${msgChain(ex)}\n$e")
-          val wide = Compiler.compileProgram(e,
-            Env(Map.empty, Map.empty, spark, wideInt = true)) match {
+          val fixed = Compiler.compileProgram(e,
+            Env(Map.empty, Map.empty, spark, bigInt = true)) match {
             case CV(c) =>
               fromSpark(spark.range(1).select(c.as("v")).head.get(0), TInt)
             case other => fail(s"[bound $i] scalar compiled to $other")
           }
-          assert(cmp(wide, ref) == 0,
-            s"[bound $i] wideInt fix diverges: $wide vs $ref\n$e")
+          assert(cmp(fixed, ref) == 0,
+            s"[bound $i] bigInt fix diverges: $fixed vs $ref\n$e")
           directed += 1
       }
     }

@@ -112,15 +112,15 @@ class DivergenceSpec extends AnyFunSuite {
       .toSeq == Seq(1L, -1L))
   }
 
-  test("default-TInt overflow raises a DIRECTED error naming wideInt; wideInt and the reference grow") {
+  test("default-TInt overflow raises a DIRECTED error naming bigInt; bigInt and the reference grow") {
     // reference TInt is unbounded Z (fiat2/src/fiat2/Value.v:12). The
     // default Long mapping cannot grow, so past 2^63 the engine raises a
-    // DIRECTED error pointing at the fix (Env(wideInt = true)) — r11,
+    // DIRECTED error pointing at the fix (Env(bigInt = true)) — r11,
     // formerly a silent/ANSI-bare boundary.
     def directed(e: Expr): Unit = {
       val err = intercept[Exception] { evalCompiled(e) }
-      assert(err.getMessage.contains("wideInt"),
-        s"expected the directed wideInt error, got: ${err.getMessage}")
+      assert(err.getMessage.contains("bigInt"),
+        s"expected the directed bigInt error, got: ${err.getMessage}")
     }
     val big = EBinop(OTimes, EAtom(AInt(1L << 62)), EAtom(AInt(4)))
     assert(interp(big, REnv()) == VI(BigInt(1L << 62) * 4)) // reference: Z
@@ -135,20 +135,21 @@ class DivergenceSpec extends AnyFunSuite {
       EAtom(AInt(1)))) == Long.MinValue)
     assert(evalCompiled(EUnop(ONeg, EAtom(AInt(Long.MaxValue)))) ==
       -Long.MaxValue)
-    val wide = Compiler.compile(big,
-      Env(Map.empty, Map.empty, spark, wideInt = true)) match {
+    val bignum = Compiler.compile(big,
+      Env(Map.empty, Map.empty, spark, bigInt = true)) match {
       case CV(c) => spark.range(1).select(c.as("v")).head.get(0)
       case _ => fail("expected a scalar")
     }
-    assert(fromSpark(wide, TInt) == VI(BigInt(1L << 62) * 4))
+    assert(fromSpark(bignum, TInt) == VI(BigInt(1L << 62) * 4))
   }
 
   test("autoWide tier: past-2^63 arithmetic matches the reference with NO flag (closed r12)") {
     // Tiered TInt execution closes divergence #1 at the program boundary:
     // Compiler.autoWide runs narrow, catches the directed overflow (from
     // the eager table fold at compile time OR the checked scalar op at
-    // action time), and replays the program wide — the reference's exact
-    // Z value, with zero widening cost for programs that never overflow.
+    // action time), and replays the program on the bignum tier — the
+    // reference's exact Z value, with zero widening cost for programs that
+    // never overflow.
     val big = EBinop(OTimes, EAtom(AInt(1L << 62)), EAtom(AInt(4)))
     val ref = interp(big, REnv())
     assert(ref == VI(BigInt(1L << 62) * 4))
@@ -160,7 +161,7 @@ class DivergenceSpec extends AnyFunSuite {
         case _ => fail("expected a scalar")
       }
     }
-    assert(tiers == 2, "expected the narrow tier to abort and the wide tier to run")
+    assert(tiers == 2, "expected the narrow tier to abort and the bignum tier to run")
     assert(fromSpark(got, TInt) == ref)
     // and a program that NEVER overflows stays on the fast narrow tier
     var tiers2 = 0
@@ -176,11 +177,10 @@ class DivergenceSpec extends AnyFunSuite {
   }
 
   test("bignum tier: past-10^38 arithmetic matches the reference with NO flag (r13)") {
-    // The THIRD tier (VERDICT r12 directive 3): a value past the wide
-    // mapping's Decimal(38,0) ceiling re-tiers onto the BinaryType bignum
-    // encoding and matches the reference interpreter's unbounded Z — here
-    // (10^18)^6 = 10^108, far past both lower tiers. Floor div/mod and
-    // negation ride along to pin Coq Z semantics at arbitrary precision.
+    // A value far past 2^63 — here (10^18)^6 = 10^108 — re-tiers onto the
+    // BinaryType bignum encoding and matches the reference interpreter's
+    // unbounded Z. Floor div/mod and negation ride along to pin Coq Z
+    // semantics at arbitrary precision.
     val e18 = EAtom(AInt(1000000000000000000L)) // 10^18
     def mul(a: Expr, b: Expr) = EBinop(OTimes, a, b)
     val big = mul(mul(mul(e18, e18), mul(e18, e18)), mul(e18, e18)) // 10^108
@@ -198,10 +198,9 @@ class DivergenceSpec extends AnyFunSuite {
         case _ => fail("expected a scalar")
       }
     }
-    // 10^36 per-literal products stay under 10^38, so the WIDE tier only
-    // dies once the chain passes the ceiling: narrow → wide → big = 3 runs
-    assert(tiers == 3,
-      s"expected narrow and wide tiers to abort and the bignum tier to run, got $tiers")
+    // one speculation, one exact fallback: narrow → big = 2 runs
+    assert(tiers == 2,
+      s"expected the narrow tier to abort and the bignum tier to run, got $tiers")
     assert(fromSpark(got, TInt) == ref)
     // and OIntToString renders the bignum tier's exact decimal digits
     val s = Compiler.compile(EUnop(OIntToString, prog),

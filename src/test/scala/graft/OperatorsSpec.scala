@@ -121,6 +121,32 @@ class OperatorsSpec extends AnyFunSuite {
     idx.unpersist()
   }
 
+  test("releasing one of two identical indexes keeps the other's cache") {
+    // Spark caches one entry per plan: two indexes over the same table and
+    // key share it, so only the last release may drop it
+    val orders = Tables.load(spark, TestSpark.sfDir, "orders")
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    def cached(idx: DictIndex) = cm.lookupCachedData(
+      idx.keyed.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isDefined
+    val first = DictIndex.build(orders, "o_orderkey", partitions = 3)
+    val second = DictIndex.build(orders, "o_orderkey", partitions = 3)
+    first.unpersist()
+    assert(cached(second), "releasing the first index dropped the second's cache")
+    second.unpersist()
+    assert(!cached(second), "the last release left the cache behind")
+    // a count does not outlive an entry dropped outside the indexes (as
+    // clearCache does, here without touching other suites' caches): the
+    // next build is released by its own release
+    val stale = DictIndex.build(orders, "o_orderkey", partitions = 3)
+    stale.keyed.unpersist()
+    val fresh = DictIndex.build(orders, "o_orderkey", partitions = 3)
+    stale.unpersist()
+    assert(cached(fresh), "a release of a dropped entry dropped its rebuild")
+    fresh.unpersist()
+    assert(!cached(fresh), "the rebuilt entry outlived its only index")
+  }
+
   test("flagship entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -2,24 +2,35 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import graft.core.Fiat2
+import graft.functions.BigIntOps
 import graft.lang._
 import graft.lang.Lang._
 import graft.lang.Compiler._
 
 /** The corr-family TInt tier (r14 directive 3): a correlated per-key sum
-  * past int64 must RECOVER through autoWide's Decimal(38,0) re-tier —
-  * exact values, not an ANSI throw — and the merged decorrelation paths
-  * must never merge aggregates whose OUTER key expressions differ.
+  * past int64 must RECOVER through autoWide's bignum re-tier — exact
+  * values, not an ANSI throw — overflow is recognized by error condition
+  * and type alone, and the merged decorrelation paths must never merge
+  * aggregates whose OUTER key expressions differ.
   */
 class TierRecoverySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  // a TInt column at the tier's representation, and back
+  private def tint(env: Env, c: org.apache.spark.sql.Column) =
+    if (env.bigInt) BigIntOps.fromLong(c) else c
+  private def tintLong(env: Env, c: org.apache.spark.sql.Column) =
+    if (env.bigInt) BigIntOps.toLong(c) else c
+  private def tintStr(env: Env, c: org.apache.spark.sql.Column) =
+    if (env.bigInt) BigIntOps.toStr(c) else c.cast("string")
+
   test("correlated per-key sum past int64 re-tiers and matches exact BigInt") {
     // q_lang_corr_widen's elements are 5e18 + s_suppkey: inside int64
     // per element, past 2^63 for any nation with >= 2 suppliers. The
     // narrow tier's Decimal-partial range check raises the DIRECTED
-    // error; autoWideTable re-runs on the wide mapping. Expected values
+    // error; autoWideTable re-runs on the bignum mapping. Expected values
     // computed driver-side in BigInt from the same parquet.
     // sf0.01, not the suite's sf0.001: the smoke corpus has <= 1 supplier
     // per nation, so no per-key sum crosses int64 there
@@ -63,15 +74,13 @@ class TierRecoverySpec extends AnyFunSuite {
     // and the same program through autoWideTable recovers exactly
     val got = Compiler.autoWideTable(Env(Map.empty, Map.empty, spark)) {
       env0 =>
-        def tint(c: org.apache.spark.sql.Column) =
-          if (env0.bigInt) graft.functions.BigIntOps.fromLong(c)
-          else if (env0.wideInt) c.cast("decimal(38,0)") else c
         val env2 = env0.copy(store = Map(
-          "outer" -> outer.select(tint(col("k")).as("k")),
-          "inner" -> t.select(tint(col("k")).as("k"), tint(col("v")).as("v"))))
+          "outer" -> outer.select(tint(env0, col("k")).as("k")),
+          "inner" -> t.select(tint(env0, col("k")).as("k"),
+            tint(env0, col("v")).as("v"))))
         compileProgram(prog, env2).asInstanceOf[TV].df
-          .select(col("k").cast("long").as("k"),
-            col("s").cast("string").as("s"))
+          .select(tintLong(env0, col("k")).as("k"),
+            tintStr(env0, col("s")).as("s"))
     }.collect().map(r => r.getLong(0) -> BigInt(r.getString(1))).toMap
     assert(got == Map(1L -> BigInt("10000000000000000000"), 2L -> BigInt(7)))
   }
@@ -80,7 +89,7 @@ class TierRecoverySpec extends AnyFunSuite {
     // Optimize maintains `sum(t.v)` as a cell bumped on the driver per
     // insert; a bump past 2^63 cannot fold, so the cell stays symbolic
     // and the directed error surfaces when `result` is materialized,
-    // where autoWide re-runs the program on the wide tier.
+    // where autoWide re-runs the program on the bignum tier.
     val big = 1L << 62
     val prog = Parser.parseCommand(
       s"""let mut out := nil[{k : int, s : int}] in
@@ -91,11 +100,12 @@ class TierRecoverySpec extends AnyFunSuite {
          |set result := mut out""".stripMargin)
     val t = Seq(big).toDF("v")
     def run(env0: Env): Array[(Long, BigInt)] = {
-      val tint = if (env0.wideInt) col("v").cast("decimal(38,0)") else col("v")
-      val end = Optimize.run(prog, env0.copy(store = Map("t" -> t.select(tint.as("v")))))
+      val end = Optimize.run(prog,
+        env0.copy(store = Map("t" -> t.select(tint(env0, col("v")).as("v")))))
       assert(end.scalars.contains(IvmTransf.cellName("t", "v")),
         "the sum read must be a maintained cell")
-      end.store("result").select(col("k").cast("long"), col("s").cast("string"))
+      end.store("result")
+        .select(tintLong(env0, col("k")), tintStr(env0, col("s")))
         .collect().map(r => r.getLong(0) -> BigInt(r.getString(1)))
     }
     val e = intercept[Exception](run(Env(Map.empty, Map.empty, spark)))
@@ -103,6 +113,65 @@ class TierRecoverySpec extends AnyFunSuite {
       s"expected the directed TInt-overflow marker, got: $e")
     val got = Compiler.autoWide(Env(Map.empty, Map.empty, spark))(run).toMap
     assert(got == (1 to 3).map(k => k.toLong -> BigInt(big) * (k + 1)).toMap)
+  }
+
+  test("isTIntOverflow: the engine's three overflow signals, by condition and type only") {
+    // a checked op's raise_error (USER_RAISED_EXCEPTION, marker parameter)
+    val directed = intercept[Exception] {
+      Seq(Long.MaxValue).toDF("v")
+        .select(Fiat2.checkedAdd(col("v"), lit(1L))).collect()
+    }
+    assert(Compiler.isTIntOverflow(directed), s"raise_error: $directed")
+    // a Decimal(38,0) partial sum past 10^38
+    val e37 = "60000000000000000000000000000000000000"
+    val decimal = intercept[Exception] {
+      Seq(e37, e37).toDF("v").agg(sum(col("v").cast("decimal(38,0)")))
+        .collect()
+    }
+    assert(Compiler.isTIntOverflow(decimal), s"decimal sum: $decimal")
+    // the eager table-sum range check's typed exception
+    val table = intercept[Exception] {
+      compile(EACFold(AGSum, ELoc("t")), Env(Map.empty,
+        Map("t" -> Seq(Long.MaxValue, 1L).toDF("value")), spark))
+    }
+    assert(table.isInstanceOf[Fiat2.TIntOverflow], s"table sum: $table")
+    assert(Compiler.isTIntOverflow(table))
+    // ANSI's own long overflow is some other fault, and the marker text
+    // alone, without an engine condition or type, is no signal
+    val ansi = intercept[Exception] {
+      Seq(Long.MaxValue).toDF("v").select(col("v") + 1L).collect()
+    }
+    assert(!Compiler.isTIntOverflow(ansi), s"ANSI overflow escalated: $ansi")
+    assert(!Compiler.isTIntOverflow(new RuntimeException(
+      s"${Fiat2.TIntOverflowMarker}: (1) + (2) exceeds the 64-bit default mapping")))
+  }
+
+  test("an escalating autoWide leaves log levels and the job description alone") {
+    import org.apache.logging.log4j.LogManager
+    val sc = spark.sparkContext
+    val loggers = Seq("org.apache.spark.scheduler.TaskSetManager",
+      "org.apache.spark.executor.Executor")
+    def levels = loggers.map(n => LogManager.getLogger(n).getLevel)
+    val before = levels
+    val prevDesc = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription("tier-escalation-spec")
+    try {
+      val big = EBinop(OTimes, EAtom(AInt(1L << 62)), EAtom(AInt(4)))
+      var tiers = 0
+      val got = Compiler.autoWide(Env(Map.empty, Map.empty, spark)) { env =>
+        tiers += 1
+        // each tier runs under the caller's settings, unchanged
+        assert(levels == before)
+        assert(sc.getLocalProperty("spark.job.description") ==
+          "tier-escalation-spec")
+        spark.range(1).select(tintStr(env, asScalar(compile(big, env))))
+          .head().getString(0)
+      }
+      assert(tiers == 2 && got == (BigInt(1L << 62) * 4).toString)
+      assert(levels == before)
+      assert(sc.getLocalProperty("spark.job.description") ==
+        "tier-escalation-spec")
+    } finally sc.setJobDescription(prevDesc)
   }
 
   test("flat-equi merge keeps aggregates with different OUTER keys apart") {
