@@ -390,7 +390,7 @@ PY
     # spill, and per-stage execution attribution already committed —
     # symptom AND evidence in one artifact.
     # r18 (r17 verdict directives 1/6/7): q_salted_join joins the set (the
-    # third still-superlinear query AdaptiveParts targets), q_substring_dup
+    # third still-superlinear query at the scale legs), q_substring_dup
     # (heaviest untouched linear query — needs attributed stages before any
     # change), q_bpe_encode (the per-round training caches must be shown to
     # spill or not at 81x, not extrapolated from sf0.1).

@@ -245,7 +245,7 @@ object Bench {
       scala.util.Try(Await.result(Future.sequence(futs), Duration(900, "s")))
         .failed.foreach { e =>
           System.err.println(s"[bench-warm] warm pass incomplete: " +
-            s"${e.getClass.getSimpleName} — cancelling stragglers, " +
+            s"${e.getClass.getSimpleName} - cancelling stragglers, " +
             "continuing with timed pass")
           spark.sparkContext.cancelAllJobs()
         }
@@ -263,14 +263,14 @@ object Bench {
       while (!drained && rounds < 4) {
         rounds += 1
         System.err.println(s"[bench-warm] warm pool not drained after " +
-          s"${60 * (rounds)}s — cancelling jobs and re-waiting")
+          s"${60 * (rounds)}s - cancelling jobs and re-waiting")
         spark.sparkContext.cancelAllJobs()
         drained =
           pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
       }
       if (!drained) {
         val msg = "[bench-warm] warm pool failed to drain after " +
-          "repeated cancellation — aborting the bench run (a timed " +
+          "repeated cancellation - aborting the bench run (a timed " +
           "pass with live stragglers would report polluted timings)"
         // only raise when the try body completed; if it threw, raising
         // here would silently swallow the root cause

@@ -36,7 +36,7 @@ object Fiat2 {
     * recognize it without reading its message. */
   final class TIntOverflow(msg: String) extends ArithmeticException(msg)
 
-  private val fix = " exceeds the 64-bit default mapping — fiat2 TInt is " +
+  private val fix = " exceeds the 64-bit default mapping - fiat2 TInt is " +
     "unbounded Z; compile with Env(bigInt = true) for the bignum mapping"
 
   /** The directed overflow message for `what`. */

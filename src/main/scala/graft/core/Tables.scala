@@ -33,7 +33,7 @@ object Tables {
     case LongType | TimestampType | TimestampNTZType => ()
     case other => sys.error(
       s"events.ts has unsupported type $other; accepted layouts are " +
-        "epoch-nanos int64 (legacy) or timestamp[us]/TimestampNTZ — see " +
+        "epoch-nanos int64 (legacy) or timestamp[us]/TimestampNTZ - see " +
         "TESTDATA.md 'events schema contract'")
   }
 

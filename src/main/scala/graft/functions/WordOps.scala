@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.lit
-import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, Decimal, DecimalType, LongType}
+import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, LongType}
 
 /** 64-bit machine-word arithmetic with the reference's semantics
   * (fiat2/src/fiat2/Interpret.v:139-151 via coqutil `word`):
@@ -143,63 +143,16 @@ case class WordBinOpW(left: Expression, right: Expression, op: String,
     copy(left = newLeft, right = newRight)
 }
 
-/** WIDE-width family (65 ≤ w ≤ 125): no machine integer holds these, so the
-  * canonical form is the UNSIGNED residue in [0, 2^w) carried in a
-  * DecimalType(38,0) column (2^125 < 10^38, so every residue — and every
-  * add/sub intermediate — is exact; products run in BigInteger inside the
-  * expression). Unsigned order is then PLAIN decimal order, mirroring how
-  * the sign-extended-Long form makes sub-64 unsigned order a masked Long
-  * compare. Division semantics transliterate the Long families: total
-  * (x/0 = 0, x mod 0 = x), signed ops on the two's-complement view with
-  * truncation toward zero (BigInteger divide/remainder), wrap on
-  * divs(MinValue, -1). */
-object WordMathWide {
-  import java.math.BigInteger
-  // the three per-width constants are precomputed: evalOp sits inside
-  // whole-stage codegen and runs per row — rebuilding shifted BigIntegers
-  // there is pure allocation pressure
-  private val MaxW = 125
-  private val masks = Array.tabulate(MaxW + 1)(w =>
-    BigInteger.ONE.shiftLeft(w).subtract(BigInteger.ONE))
-  private val fulls = Array.tabulate(MaxW + 1)(w =>
-    BigInteger.ONE.shiftLeft(w))
-  def mask(w: Int): BigInteger = masks(w)
-  def half(w: Int): BigInteger = fulls(w - 1)
-  def full(w: Int): BigInteger = fulls(w)
-  private def res(x: BigInteger, w: Int): BigInteger = x.and(mask(w))
-  private def signed(x: BigInteger, w: Int): BigInteger =
-    if (x.testBit(w - 1)) x.subtract(full(w)) else x
-
-  def op(name: String, a: BigInteger, b: BigInteger, w: Int): BigInteger =
-    name match {
-      case "wadd" => res(a.add(b), w)
-      case "wsub" => res(a.subtract(b), w)
-      case "wmul" => res(a.multiply(b), w)
-      case "divu" => if (b.signum == 0) BigInteger.ZERO else a.divide(b)
-      case "divs" => if (b.signum == 0) BigInteger.ZERO
-        else res(signed(a, w).divide(signed(b, w)), w)
-      case "modu" => if (b.signum == 0) a else a.mod(b)
-      case "mods" => if (b.signum == 0) a
-        else res(signed(a, w).remainder(signed(b, w)), w)
-    }
-
-  /** Decimal bridge — the static call the codegen'd expression emits. */
-  def evalOp(name: String, a: Decimal, b: Decimal, w: Int): Decimal = {
-    val r = op(name, a.toJavaBigDecimal.toBigInteger,
-      b.toJavaBigDecimal.toBigInteger, w)
-    Decimal(new java.math.BigDecimal(r), 38, 0)
-  }
-}
-
-/** MULTI-LIMB family (width ≥ 126): the unsigned residue in [0, 2^w) as a
+/** MULTI-LIMB family (every width ≥ 65, where no machine integer holds a
+  * word): the unsigned residue in [0, 2^w) as a
   * FIXED-LENGTH big-endian byte array of ceil(w/8) bytes in a BinaryType
   * column. Fixed length makes Spark's native binary comparison (unsigned
-  * lexicographic) coincide with unsigned word order, the same trick the
-  * Wide family plays with plain decimal order — so `ltu`, `OEq`, group-by
-  * and the universal sort order all ride the built-in binary operators.
+  * lexicographic) coincide with unsigned word order — so `ltu`, `OEq`,
+  * group-by and the universal sort order all ride the built-in binary
+  * operators.
   * Arithmetic runs in BigInteger inside codegen'd static calls; the mask /
   * modulus per width is cached (an op sits inside whole-stage codegen and
-  * runs per row). Width is UNBOUNDED above 126, matching the reference's
+  * runs per row). Width is UNBOUNDED, matching the reference's
   * `Section WithWord {width: Z}` (fiat2/src/fiat2/Language.v:4). */
 object WordMathBytes {
   import java.math.BigInteger
@@ -224,8 +177,8 @@ object WordMathBytes {
 
   def op(name: String, ab: Array[Byte], bb: Array[Byte], w: Int): Array[Byte] = {
     val a = fromBytes(ab); val b = fromBytes(bb)
-    // same op table as WordMathWide: wrap add/sub/mul, total unsigned and
-    // signed (truncating) div/mod with x/0 = 0, x mod 0 = x
+    // same op table as the Long families: wrap add/sub/mul, total unsigned
+    // and signed (truncating) div/mod with x/0 = 0, x mod 0 = x
     val r = name match {
       case "wadd" => res(a.add(b), w)
       case "wsub" => res(a.subtract(b), w)
@@ -345,28 +298,6 @@ case class WordRangeLenBytes(left: Expression, right: Expression, width: Int)
     copy(left = newLeft, right = newRight)
 }
 
-/** Codegen'd wide-word binary op over Decimal(38,0) residues — one static
-  * primitive call, same discipline as WordBinOp/WordBinOpW. */
-case class WordBinOpWide(left: Expression, right: Expression, op: String,
-    width: Int) extends BinaryExpression {
-
-  override def dataType: DataType = DecimalType(38, 0)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = s"graft_word_${op}_w$width"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    WordMathWide.evalOp(op, a.asInstanceOf[Decimal], b.asInstanceOf[Decimal],
-      width)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"""graft.functions.WordMathWide.evalOp("$op", $a, $b, $width)""")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): WordBinOpWide =
-    copy(left = newLeft, right = newRight)
-}
-
 object WordOps {
   private def bin(op: String)(a: Column, b: Column): Column =
     GraftBridge.column(WordBinOp(
@@ -391,8 +322,8 @@ object WordOps {
 
   /** Width-parametric op bundle (the reference's `Context {width: Z}`,
     * fiat2/src/fiat2/Language.v:4). Widths 1..64 carry sign-extended
-    * Longs (`Narrow`); widths 65..125 carry unsigned Decimal(38,0)
-    * residues (`Wide`). The compiler selects the bundle from
+    * Longs (`Narrow`); every wider width carries fixed-length unsigned
+    * byte residues (`Bytes`). The compiler selects the bundle from
     * `Env.wordWidth` and never sees the representation. */
   sealed trait Width {
     def width: Int
@@ -448,57 +379,9 @@ object WordOps {
       import org.apache.spark.sql.functions.{array, sequence, transform, when}
       val diff = wsub(hi, lo)
       val len = if (width == 64) diff else diff.bitwiseAND(lit((1L << width) - 1))
-      // len < 0 only at width 64, where it means unsigned length ≥ 2^63
-      val checked = WordOps.capRangeLen(len, len < lit(0L))
+      val checked = WordOps.capRangeLen(len)
       when(!ltu(lo, hi), array().cast("array<long>"))
         .otherwise(transform(sequence(lit(0L), checked - lit(1L)), i => wadd(lo, i)))
-    }
-  }
-
-  /** 65..125: unsigned residues in Decimal(38,0); ops are `WordBinOpWide`
-    * static calls; unsigned order is plain decimal order and the signed
-    * view subtracts 2^w above the sign bit. */
-  final class Wide private[WordOps] (val width: Int) extends Width {
-    require(width >= 65 && width <= 125,
-      s"Wide is the 65..125 family (Decimal(38,0) residues: 2^125 is the " +
-        "largest power of two whose residues and add/sub intermediates " +
-        "stay exact in 38 decimal digits); width $width routes elsewhere " +
-        "— forWidth dispatches ≤64 to Narrow and ≥126 to Bytes")
-    import org.apache.spark.sql.functions.{array, sequence, transform, when}
-    private val dt = DecimalType(38, 0)
-    private def bd(x: java.math.BigInteger) =
-      lit(new java.math.BigDecimal(x)).cast(dt)
-    private def wbin(op: String): (Column, Column) => Column =
-      (a: Column, b: Column) => GraftBridge.column(WordBinOpWide(
-        GraftBridge.expression(a), GraftBridge.expression(b), op, width))
-    val wadd: (Column, Column) => Column = wbin("wadd")
-    val wsub: (Column, Column) => Column = wbin("wsub")
-    val wmul: (Column, Column) => Column = wbin("wmul")
-    val divu: (Column, Column) => Column = wbin("divu")
-    val divs: (Column, Column) => Column = wbin("divs")
-    val modu: (Column, Column) => Column = wbin("modu")
-    val mods: (Column, Column) => Column = wbin("mods")
-    def wneg(v: Column): Column = wsub(literal(0L), v)
-    def ltu(a: Column, b: Column): Column = a < b // residues ARE unsigned
-    private def signedView(x: Column): Column =
-      x - when(x >= bd(WordMathWide.half(width)), bd(WordMathWide.full(width)))
-        .otherwise(bd(java.math.BigInteger.ZERO))
-    def lts(a: Column, b: Column): Column = signedView(a) < signedView(b)
-    def literal(v: Long): Column = bd(
-      java.math.BigInteger.valueOf(v).and(WordMathWide.mask(width)))
-    /** Same eval_range_word shape as Narrow.range: empty unless
-      * unsigned(lo) < unsigned(hi), elements step by wrapping add. The
-      * length cast to Long ANSI-errors on absurd ranges — the same
-      * "too large to materialize" outcome as the other widths. */
-    def range(lo: Column, hi: Column): Column = {
-      // decimal diffs ≥ 2^63 ANSI-error at this cast — still a loud
-      // failure on ranges the cap below would refuse anyway
-      val len = (hi - lo).cast("long")
-      val checked = WordOps.capRangeLen(len, lit(false))
-      when(!ltu(lo, hi), array().cast(
-        org.apache.spark.sql.types.ArrayType(dt)))
-        .otherwise(transform(sequence(lit(0L), checked - lit(1L)),
-          i => wadd(lo, i.cast(dt))))
     }
   }
 
@@ -506,23 +389,25 @@ object WordOps {
     * RefInterp's OWRange guard (2^24 elements): both sides of the
     * differential fuzz must refuse the same ranges, or an engine-buildable
     * plan the reference declines to materialize masks or misattributes
-    * divergences (round-10 ADVICE). Message prefix matches RefInterp's. */
-  private[graft] def capRangeLen(len: Column, alsoIf: Column): Column = {
+    * divergences (round-10 ADVICE). Message prefix matches RefInterp's. A
+    * negative `len` occurs only at width 64, where it means an unsigned
+    * length ≥ 2^63. */
+  private[graft] def capRangeLen(len: Column): Column = {
     import org.apache.spark.sql.functions.{concat, lit, raise_error, when}
-    when(alsoIf || len >= lit(1L << 24),
+    when(len < lit(0L) || len >= lit(1L << 24),
       raise_error(concat(lit("word range too large to materialize: "),
         len.cast("string"))).cast("long"))
       .otherwise(len)
   }
 
-  /** 126 and beyond, unbounded (the reference's `width: Z` has no ceiling):
+  /** 65 and beyond, unbounded (the reference's `width: Z` has no ceiling):
     * fixed-length big-endian byte residues in BinaryType; ops are
     * `WordBinOpBytes` static calls; unsigned order is the NATIVE binary
     * comparison (fixed length ⇒ lexicographic = numeric), signed order
     * compares the two's-complement views in a static call. */
   final class Bytes private[WordOps] (val width: Int) extends Width {
-    require(width >= 126, s"Bytes is the ≥126 family; width $width routes " +
-      "elsewhere — forWidth dispatches ≤64 to Narrow and 65..125 to Wide")
+    require(width >= 65, s"Bytes is the >=65 family; width $width routes " +
+      "elsewhere: forWidth dispatches <=64 to Narrow")
     import org.apache.spark.sql.functions.{array, sequence, transform, when}
     private def bbin(op: String): (Column, Column) => Column =
       (a: Column, b: Column) => GraftBridge.column(WordBinOpBytes(
@@ -558,6 +443,5 @@ object WordOps {
   def forWidth(width: Int): Width =
     cache.computeIfAbsent(width, w =>
       if (w <= 64) new Narrow(w)
-      else if (w <= 125) new Wide(w)
       else new Bytes(w))
 }

@@ -14,9 +14,9 @@ import org.apache.spark.sql.functions._
   *    maps a word into the Long whose SIGNED order equals the width's
   *    unsigned order: at width 64 flip the sign bit (XOR 2^63 — adding 2^63
   *    mod 2^64), below 64 mask to the non-negative unsigned residue. The
-  *    Decimal (65..125) and byte-array (126+) families already store
-  *    non-negative residues whose natural (decimal / unsigned-lexicographic
-  *    binary) order IS unsigned order, so they need no key.
+  *    byte-array family (65+) already stores fixed-length non-negative
+  *    residues whose natural (unsigned-lexicographic binary) order IS
+  *    unsigned order, so it needs no key.
   *
   *  - NESTED BAGS compare as sorted (value, multiplicity) run-length pairs
   *    in the reference (`bag_compare` over `list_to_bag`,
@@ -83,11 +83,11 @@ object CanonOrder {
     if (strict)
       throw new StrictOrderViolation(
         s"$site: element type unsynthesizable and the encoding could hide " +
-          "word/bag values, whose raw order diverges from the reference — " +
+          "word/bag values, whose raw order diverges from the reference - " +
           "declare storeTypes/varTypes so the sort is type-directed " +
           "(strict order mode, GRAFT_STRICT_ORDER=1)")
     else if (warned.add(site))
-      System.err.println(s"[graft] $site: element type unknown — using " +
+      System.err.println(s"[graft] $site: element type unknown - using " +
         "the raw encoding order (exact unless elements contain words or " +
         "nested bags); declare storeTypes/varTypes to make the order " +
         "type-directed, or set GRAFT_STRICT_ORDER=1 to make this an error")

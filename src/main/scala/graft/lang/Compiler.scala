@@ -270,7 +270,7 @@ object Compiler {
     if (leaked.nonEmpty)
       throw new UnsupportedOperationException(
         s"table operator's lambda references outer table-row variable(s) " +
-          s"$leaked — a correlated table subquery; rewrite as EJoin (or a " +
+          s"$leaked - a correlated table subquery; rewrite as EJoin (or a " +
           "flatmap/if/cons comprehension, which Rewrites.normalize " +
           "recognizes as a join)")
   }
@@ -366,16 +366,14 @@ object Compiler {
   def sparkType(t: FType, wordWidth: Int = 64,
       bigInt: Boolean = false): DataType = t match {
     case THole => throw new UnsupportedOperationException(
-      "unelaborated type hole — run TypeCheck.analyze against the expected " +
+      "unelaborated type hole - run TypeCheck.analyze against the expected " +
         "type before compiling")
     // bignum tier: order-preserving canonical bytes (BigIntMath) — binary
     // lexicographic IS numeric order, so native compare/sort/group work
     case TInt if bigInt => BinaryType
     // TWord's physical type follows the width family (WordOps.forWidth):
-    // sign-extended Long through 64, Decimal(38,0) residues through 125,
-    // fixed-length byte residues beyond
-    case TWord if wordWidth > 125 => BinaryType
-    case TWord if wordWidth > 64 => DecimalType(38, 0)
+    // sign-extended Long through 64, fixed-length byte residues beyond
+    case TWord if wordWidth > 64 => BinaryType
     case TWord | TInt => LongType
     case TBool => BooleanType
     case TString => StringType
@@ -965,7 +963,7 @@ object Compiler {
               throw new UnsupportedOperationException(
                 "EFold over a correlated EFlatmap folds in the flatmap's " +
                   "emission order, which a distributed plan cannot observe " +
-                  "— sort it first: EFold(ESort(flatmap...), ...)")
+                  "- sort it first: EFold(ESort(flatmap...), ...)")
             case _ => ()
           }
         }
@@ -975,7 +973,7 @@ object Compiler {
     if (peeled.isEmpty && !scalarLifted)
       throw new UnsupportedOperationException(
         "correlated aggregate whose source is not a filter chain over an " +
-          "uncorrelated table — rewrite with an explicit EJoin")
+          "uncorrelated table - rewrite with an explicit EJoin")
     // Split each aggregate's filter conjuncts up front: clean outer=inner
     // equalities (keyPairs — the keyed groupBy), inner-only
     // (pre-aggregation filters), outer-only (CASE gates), and everything
@@ -1662,7 +1660,7 @@ object Compiler {
           case (CV(a), CV(b)) => CV(when(cc, a).otherwise(b))
           case _ => throw new UnsupportedOperationException(
             "correlated conditional (EIf) selecting between TABLE legs on " +
-              "a row-dependent condition — the flatmap outer-split rewrite " +
+              "a row-dependent condition - the flatmap outer-split rewrite " +
               "(splitTableIf) handles collection positions; reaching here " +
               "means the conditional sits somewhere that rewrite does not " +
               "walk")
@@ -1868,7 +1866,7 @@ object Compiler {
         def correlatedError(cause: Throwable) =
           new UnsupportedOperationException(
             "correlated table-valued flatmap body that neither " +
-              "Rewrites.normalize nor lateral decorrelation could lower — " +
+              "Rewrites.normalize nor lateral decorrelation could lower - " +
               "write the product as EJoin (or a flatmap/if/cons " +
               "comprehension, which Rewrites.normalize recognizes as a join)",
             cause)
@@ -2300,7 +2298,7 @@ object Compiler {
             case _ => false
           }
           if (nested) throw new UnsupportedOperationException(
-            s"EFold over a table with nested column ${f.name} — use " +
+            s"EFold over a table with nested column ${f.name} - use " +
               "EACFold/EACIFold or fold a nested collection value instead")
         }
         val batchSize = 10000
@@ -2333,7 +2331,7 @@ object Compiler {
               catch { case _: RuntimeException =>
                 throw new UnsupportedOperationException(
                   "EFold over a large table with a non-scalar " +
-                    "accumulator — use EACFold/EACIFold or restructure") }
+                    "accumulator - use EACFold/EACIFold or restructure") }
             buf.clear()
           }
           it.foreach { r => buf += r; if (buf.size >= batchSize) flush() }

@@ -1651,14 +1651,14 @@ object LangQueries {
       }
     },
 
-    // WIDTH-100 words — the WIDE family (WordBinOpWide: unsigned residues
-    // in Decimal(38,0), BigInteger math inside the codegen'd static call;
-    // no machine integer holds 100 bits). The store column is the residue
-    // of (o_orderkey - 700) mod 2^100; the wrap-add constant -1000
+    // WIDTH-100 words — the MULTI-LIMB family every width above 64 runs
+    // (WordBinOpBytes: unsigned residues as 13-byte big-endian arrays,
+    // BigInteger math inside the codegen'd static call; no machine integer
+    // holds 100 bits). The store column is the residue of
+    // (o_orderkey - 700) mod 2^100; the wrap-add constant -1000
     // canonicalizes to 2^100 - 1000, so the add genuinely wraps. The
     // oracle replays 100-bit two's complement with HUGEINT (128-bit)
-    // arithmetic mod 2^100, emitting DECIMAL(38,0) to match the engine's
-    // canonical form.
+    // arithmetic mod 2^100 and emits each word as its decimal digits.
     GraftQuery.sql("q_word_ops100",
       """WITH t AS (SELECT o_orderkey AS k,
         |             CAST(o_orderkey - 700 AS HUGEINT) AS sw FROM orders),
@@ -1686,30 +1686,38 @@ object LangQueries {
         |FROM u ORDER BY k""".stripMargin) {
       val prog = wordBattery("q_word_ops100", 12345L, Some(-1000L))
       (s, dir) => {
-        val dt100 = org.apache.spark.sql.types.DecimalType(38, 0)
-        val m100 = lit(new java.math.BigDecimal(
-          "1267650600228229401496703205376")).cast(dt100)
-        val sw = (col("o_orderkey") - 700).cast(dt100)
+        val fam = graft.functions.WordOps.forWidth(100)
+          .asInstanceOf[graft.functions.WordOps.Bytes]
         val t = Tables.load(s, dir, "orders")
           .select(col("o_orderkey").as("k"),
-            when(sw < 0, sw + m100).otherwise(sw).cast(dt100).as("w"))
+            fam.fromLong((col("o_orderkey") - 700).cast("long")).as("w"))
         val out = rows(prog, Env(Map.empty, Map("t" -> t), s, wordWidth = 100))
-        // 100-bit residues cross the engine boundary as STRINGS: the
-        // comparison layer renders wide decimals through float64 (and the
-        // driver hash is type-sensitive), so digits are the only exact
-        // cross-engine carrier at this magnitude
+        // 100-bit residues cross the engine boundary as decimal STRINGS:
+        // the comparison layer renders wide numbers through float64 (and
+        // the result hash is type-sensitive), so digits are the only exact
+        // cross-engine carrier at this magnitude. hex() renders the 13-byte
+        // residue as 26 nibbles; the high 10 and the low 16 each convert
+        // with the codegen'd conv, and the halves recombine exactly in
+        // Decimal(38,0) (2^100 < 10^38) — no custom expression on the way out
+        val dt = org.apache.spark.sql.types.DecimalType(38, 0)
+        val two64 = lit(new java.math.BigDecimal(
+          java.math.BigInteger.ONE.shiftLeft(64))).cast(dt)
+        def digits(c: String) = {
+          val h = hex(col(c))
+          (conv(substring(h, 1, 10), 16, 10).cast(dt) * two64 +
+            conv(substring(h, 11, 16), 16, 10).cast(dt)).cast("string").as(c)
+        }
         val wordCols = Seq("du", "ds", "mu", "ms", "dz", "mz", "wm", "wa")
-        out.select(col("k") +: (wordCols.map(c => col(c).cast("string").as(c))
+        out.select(col("k") +: (wordCols.map(digits)
           ++ Seq(col("ult"), col("slt"))): _*).orderBy("k")
       }
     },
 
     // WIDTH-256 words — the MULTI-LIMB family (WordBinOpBytes: unsigned
     // residues as fixed-length big-endian byte arrays in BinaryType,
-    // BigInteger math inside the codegen'd static call; round 10 closed
-    // the former 125-bit Decimal ceiling, so the reference's `width: Z`
-    // (fiat2/src/fiat2/Language.v:4) is now unbounded here too). DuckDB
-    // holds no 256-bit integer, so the oracle replays the arithmetic in
+    // BigInteger math inside the codegen'd static call; no width ceiling,
+    // like the reference's `width: Z`, fiat2/src/fiat2/Language.v:4).
+    // DuckDB holds no 256-bit integer, so the oracle replays the arithmetic in
     // BASE-2^64 LIMBS of HUGEINT — carry-chain multiply, borrow-chain
     // wrap-add, long division — and both sides emit each word as four
     // decimal limb strings (engine: hex → 16-char slices → conv base 16).
@@ -1801,9 +1809,10 @@ object LangQueries {
       }
     },
 
-    // WIDTH-16 words — exercises the GENERIC width family (WordBinOpW:
+    // WIDTH-16 words — exercises the GENERIC Long width family (WordBinOpW:
     // width baked into the codegen'd static call over the sign-extended
-    // canonical form), not the specialized 64/32 paths. o_orderkey exceeds
+    // canonical form), not the specialized 64/32 paths; widths above 64
+    // run the byte family (q_word_ops100/256). o_orderkey exceeds
     // 2^15 at every SF, so the input column itself must be canonicalized
     // (shiftleft/shiftright 48 = sign-extend the low 16 bits); the wrap
     // multiply constant 40503 exceeds 2^15, so the word literal is

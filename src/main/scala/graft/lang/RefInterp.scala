@@ -31,7 +31,7 @@ object RefInterp {
   sealed trait V
   case object VUnit extends V
   final case class VW(v: Long) extends V // TWord: 64-bit two's complement
-  /** TWord at widths 65..125: the UNSIGNED residue in [0, 2^w) — plain
+  /** TWord at widths ≥ 65: the UNSIGNED residue in [0, 2^w) — plain
     * BigInt order IS unsigned word order, mirroring how sign-extension
     * makes the Long of `VW` order-isomorphic at sub-64 widths. */
   final case class VWide(v: BigInt) extends V
@@ -159,8 +159,8 @@ object RefInterp {
   private def asI(v: V): BigInt = v match { case VI(x) => x; case o => err(s"int expected, got $o") }
   private def asW(v: V): Long = v match { case VW(x) => x; case o => err(s"word expected, got $o") }
   private def asWd(v: V): BigInt = v match { case VWide(x) => x; case o => err(s"wide word expected, got $o") }
-  // Wide-width (65..125) word helpers — an INDEPENDENT formulation from
-  // the engine's WordMathWide (BigInteger there, Scala BigInt mask
+  // Wide-width (≥ 65) word helpers — an INDEPENDENT formulation from
+  // the engine's WordMathBytes (BigInteger there, Scala BigInt mask
   // arithmetic here) so the differential fuzz cross-checks the two.
   private def wdMask(w: Int): BigInt = (BigInt(1) << w) - 1
   private def wdResL(v: Long, w: Int): BigInt = BigInt(v) & wdMask(w)
@@ -491,9 +491,7 @@ object RefInterp {
     case (TInt, x: Array[Byte]) => // bignum tier: canonical ordered bytes
       VI(BigInt(graft.functions.BigIntMath.decode(x)))
     case (TWord, x: Long) => VW(x)
-    case (TWord, x: java.math.BigDecimal) => // wide widths: Decimal residue
-      VWide(BigInt(x.toBigInteger))
-    case (TWord, x: Array[Byte]) => // widths ≥ 126: fixed-length BE bytes
+    case (TWord, x: Array[Byte]) => // widths ≥ 65: fixed-length BE bytes
       VWide(BigInt(new java.math.BigInteger(1, x)))
     case (TBool, x: Boolean) => VB(x)
     case (TString, x: String) => VS(x)

@@ -40,7 +40,7 @@ object TypeCheck {
     case _ => false
   }
   private def noHole(t: FType): FType =
-    if (hasHole(t)) err(s"unelaborated type hole in $t — check the " +
+    if (hasHole(t)) err(s"unelaborated type hole in $t - check the " +
       "expression against an expected type with TypeCheck.analyze first")
     else t
   /** Result collection kind follows the operator's tag (Language.v:114). */

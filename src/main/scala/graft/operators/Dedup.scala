@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.core.{GraftQuery, Tables}
@@ -21,7 +21,9 @@ import graft.core.{GraftQuery, Tables}
   * projection over the per-doc token/shingle array — no explode, no groupBy);
   * the only shuffles are the bucket joins on band keys and the candidate
   * verification joins, all of which move candidate-sized data, not
-  * corpus×perms. Hot shingles are frequency-capped: a shingle appearing in
+  * corpus×perms. Every exchange runs at the planner's width (the session's
+  * shuffle partitioning, as AQE leaves it).
+  * Hot shingles are frequency-capped: a shingle appearing in
   * more than `maxShingleDocFreq` docs is dropped from candidate generation
   * (it would emit O(F²) pairs while only connecting documents whose overlap
   * is a vanishing fraction of their shingle sets — any true near-dup pair at
@@ -156,45 +158,24 @@ object Dedup {
     // or an explicit cache() + count()).
     val anyHot = !sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
       .filter(col("df") > maxDocFreq).isEmpty
-    // Scale-adaptive partitioning for the two pair-space exchanges (guide
-    // §2.2/§2.5): the posting groupBy and the (a,b) pair aggregate each
-    // hold per-partition state LINEAR in the corpus, so the fixed
-    // core-count partitioning can spill once the corpus outgrows it.
-    // Deriving the count from the materialized shingle-set size (exact:
-    // all callers cache-and-count dsets) is meant to keep per-partition
-    // state flat at any scale; the defaultParallelism clamp leaves
-    // sf0.1/sf0.01 plans unchanged. The explicit repartition before each
-    // groupBy replaces (not adds to) the exchange the aggregate would have
-    // planned: same shuffle count, chosen width — but it also costs the
-    // map-side PARTIAL pair aggregate (raw pairs cross the exchange), so
-    // it engages only past AdaptiveParts.widthPastOnset. Neither the spill
-    // nor a gain from widening is measured in a committed artifact (see
-    // AdaptiveParts). Below the onset every plan — including sf0.1/sf0.01
-    // — keeps the planner's own exchanges.
-    val s = dsets.sparkSession
-    val dsetsBytes = graft.core.AdaptiveParts.planBytes(dsets)
-    val widenTo = graft.core.AdaptiveParts.widthPastOnset(s, dsetsBytes)
-    def widened(df: DataFrame, keys: Column*): DataFrame =
-      widenTo.fold(df)(n => df.repartition(n, keys: _*))
     // The sizes joins hash-build the skinny (doc_id, n) side and STREAM
     // the pair list (the r16 gate-join convention). Strategy choice (r17
     // verdict directive 5; guide §3.1 "pick the strategy deliberately"):
     // while the build side FITS a broadcast, broadcasting it shuffles
     // nothing at all — any shuffled join moves the whole candidate-pair
-    // list — so the shuffle_hash hint must not engage there (the old
-    // `forBytes > defaultParallelism` gate overrode the broadcast from
-    // 27x up). The planner cannot make this call itself past sf0.1: its
-    // projection estimate for `sizes` scales the CACHED ARRAY bytes of
-    // dsets into the skinny (doc_id, n) rows (~460 MB claimed at 81x
-    // where the truth is ~12 bytes/row), so it stops auto-broadcasting
-    // exactly where the broadcast matters most. Every caller seals/caches
+    // list — so the shuffle_hash hint must not engage there. The planner
+    // cannot make this call itself past sf0.1: its projection estimate
+    // for `sizes` scales the CACHED ARRAY bytes of dsets into the skinny
+    // (doc_id, n) rows (~460 MB claimed at 81x where the truth is ~12
+    // bytes/row), so it stops auto-broadcasting exactly where the
+    // broadcast matters most. Every caller seals/caches
     // dsets first, so the EXACT row count is a cheap cached scan; 48
     // bytes/row conservatively covers the broadcast hash-relation
     // overhead. Past the threshold (a genuinely large doc population)
     // the build side hash-builds per partition instead — never a
-    // sort-merge, which would sort the corpus-linear pair list in a
-    // fixed-width exchange (the spill shape the aggregates just escaped).
-    val bcRaw = s.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
+    // sort-merge, which would sort the corpus-linear pair list.
+    val bcRaw = dsets.sparkSession.conf
+      .get("spark.sql.autoBroadcastJoinThreshold", "10MB")
     val bcThreshold =
       if (bcRaw.trim.startsWith("-")) -1L
       else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(bcRaw)
@@ -208,15 +189,13 @@ object Dedup {
     // the ritual's scale legs can assert the branch, not infer it
     System.err.println(s"[graft-dedup-cap] maxDf=$maxDocFreq " +
       s"path=${if (anyHot) "recovery" else "streaming"} " +
-      s"widen=${widenTo.getOrElse(0)} " +
       s"hint=${if (sizesFitBroadcast) "broadcast" else "shuffle_hash"}")
     val inter = if (!anyHot) {
       // no hot shingles: the single streaming pipeline — nothing is
       // capped, so no recovery subtrees and nothing to materialize
-      widened(widened(sh, col("s"))
-        .groupBy(col("s"))
+      sh.groupBy(col("s"))
         .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-        .select(explode(combos).as("p")), col("p.a"), col("p.b"))
+        .select(explode(combos).as("p"))
         .groupBy(col("p.a").as("a"), col("p.b").as("b"))
         .agg(count(lit(1)).as("inter"))
     } else {
@@ -227,15 +206,14 @@ object Dedup {
       // ContextCleaner instead of entering the CacheManager — a cached
       // fragment here was being substituted into UNRELATED later queries'
       // plans (and forced test suites to clearCache() session-wide).
-      val posting = widened(sh, col("s"))
-        .groupBy(col("s"))
+      val posting = sh.groupBy(col("s"))
         .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
         .localCheckpoint(true)
       // per-pair count of shared NON-capped shingles; consumed by both the
       // hot-recovery join and the final assembly, so materialized once
-      val interCold = widened(posting
+      val interCold = posting
         .filter(size(ds) <= maxDocFreq)
-        .select(explode(combos).as("p")), col("p.a"), col("p.b"))
+        .select(explode(combos).as("p"))
         .groupBy(col("p.a").as("a"), col("p.b").as("b"))
         .agg(count(lit(1)).as("ic"))
         .localCheckpoint(true)

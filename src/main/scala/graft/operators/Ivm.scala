@@ -57,7 +57,7 @@ object Ivm {
   def incrementalJoin(batchesA: Seq[DataFrame], batchesB: Seq[DataFrame],
       join: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     require(batchesA.nonEmpty && batchesA.length == batchesB.length,
-      "one ΔA and one ΔB per tick (either may be empty)")
+      "one delta of A and one delta of B per tick (either may be empty)")
     var accA, accB, view = Option.empty[DataFrame]
     batchesA.zip(batchesB).foreach { case (dA, dB) =>
       val bNew = accB.map(_.union(dB)).getOrElse(dB)
@@ -115,7 +115,7 @@ object Ivm {
   def incrementalJoinZ(batchesA: Seq[DataFrame], batchesB: Seq[DataFrame],
       joinOn: (DataFrame, DataFrame) => Column): DataFrame = {
     require(batchesA.nonEmpty && batchesA.length == batchesB.length,
-      "one ΔA and one ΔB per tick (either may be empty)")
+      "one delta of A and one delta of B per tick (either may be empty)")
     def side(df: DataFrame, tag: String) =
       df.withColumnRenamed("w", s"__w$tag")
     def j(l: DataFrame, r: DataFrame) =

@@ -325,7 +325,7 @@ object Multimodal {
         |  FROM (SELECT doc_id, text,
         |          -- GREATEST(n,1) mirrors framesOf's [0] fallback for an
         |          -- empty document: index (q%1)+1=1 over '' gives
-        |          -- ascii('')=0, exactly the one-zero-byte source —
+        |          -- ascii('')=0, exactly the one-zero-byte source -
         |          -- without it `% 0` would NULL every pixel
         |          GREATEST(octet_length(encode(text)), 1) AS n
         |        FROM documents) d,

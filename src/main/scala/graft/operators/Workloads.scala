@@ -217,8 +217,9 @@ object Workloads {
     // spread over 8 reducers (deterministic row-hash salt) and the other
     // side replicated per salt — the remedy when a handful of hot keys
     // would otherwise serialize one reducer and AQE's skew splitting can't
-    // apply (the joined rows feed an aggregation). Row-identical to the
-    // plain join, which is exactly what the oracle checks.
+    // apply (the joined rows feed an aggregation). The join strategy and
+    // exchange widths are the planner's, at every scale. Row-identical to
+    // the plain join, which is exactly what the oracle checks.
     GraftQuery.sql("q_salted_join",
       """SELECT o_orderpriority AS priority, COUNT(*) AS n,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue

@@ -2,7 +2,8 @@ package graft.server
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.Executors
+import java.util.concurrent.{ExecutorService, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -31,6 +32,7 @@ final class QueryServer(spark: SparkSession, dataDir: String,
     port: Int = 8080, maxRows: Int = 10000, host: String = "127.0.0.1") {
 
   private var server: HttpServer = _
+  private var pool: ExecutorService = _
 
   /** Bind and start; returns the actual port (pass port=0 for ephemeral).
     * Binds loopback by default — POST /run executes arbitrary programs, so
@@ -39,14 +41,28 @@ final class QueryServer(spark: SparkSession, dataDir: String,
   def start(): Int = {
     server = HttpServer.create(new InetSocketAddress(host, port), 0)
     server.createContext("/", (ex: HttpExchange) => handle(ex))
-    server.setExecutor(Executors.newFixedThreadPool(4))
+    // HttpServer.stop never shuts down an executor it was handed, so the
+    // server keeps the pool and stop() ends its (non-daemon) threads
+    val name = s"graft-query-server-$boundPort-"
+    val ids = new AtomicInteger
+    pool = Executors.newFixedThreadPool(4,
+      (r: Runnable) => new Thread(r, name + ids.incrementAndGet()))
+    server.setExecutor(pool)
     server.start()
     boundPort
   }
 
   def boundPort: Int = server.getAddress.getPort
 
-  def stop(): Unit = if (server != null) server.stop(0)
+  /** Stop serving and end the handler threads; a handler still running a
+    * query gets up to 5 s to finish. */
+  def stop(): Unit = {
+    if (server != null) server.stop(0)
+    if (pool != null) {
+      pool.shutdown()
+      pool.awaitTermination(5, TimeUnit.SECONDS)
+    }
+  }
 
   private def handle(ex: HttpExchange): Unit =
     try {

@@ -94,7 +94,7 @@ object StreamCurate {
         .select($"doc_id", $"source", $"n_chars", $"text")
       def capGuard(n: Long, what: String): Unit =
         if (n > vocabCap) throw new UnsupportedOperationException(
-          s"$what model has $n entries — past the $vocabCap " +
+          s"$what model has $n entries - past the $vocabCap " +
             "broadcast-model cap (no longer vocabulary-shaped); ship it " +
             "as a store table and use the batch scorer " +
             "(q_pipeline_curate) instead")

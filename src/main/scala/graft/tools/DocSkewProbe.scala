@@ -27,7 +27,7 @@ object DocSkewProbe {
     spark.stop()
     if (capped == 0) {
       System.err.println("[docskew-probe] FAIL: the frequency cap never " +
-        "fired — this corpus does not exercise the hot-shingle path")
+        "fired - this corpus does not exercise the hot-shingle path")
       sys.exit(1)
     }
   }

@@ -378,11 +378,11 @@ class DifferentialSpec extends AnyFunSuite
       s"widths 64/32/16/8 disagreed on only $diverged/$n programs — width plumbing suspiciously inert")
   }
 
-  test("wide word widths 80/100/125: compiler == reference (Decimal-backed residues)") {
+  test("wide word widths 80/100/125: compiler == reference") {
     // Widths past 64 (the reference is parametric over any width: Z,
-    // Language.v:4): the engine carries the unsigned residue in a
-    // Decimal(38,0) column through codegen'd WordBinOpWide static calls;
-    // the reference interpreter runs an independent BigInt mask/shift
+    // Language.v:4): the engine carries the unsigned residue as a
+    // fixed-length byte array through codegen'd WordBinOpBytes static
+    // calls; the reference interpreter runs an independent BigInt mask/shift
     // formulation. Same random programs at all three wide widths plus 64,
     // and the widths must actually disagree on a healthy fraction —
     // a wide family that silently behaved like 64 would pass vacuously.
@@ -417,8 +417,8 @@ class DifferentialSpec extends AnyFunSuite
   }
 
   test("multi-limb word widths 130/192/256: compiler == reference (byte-residue family)") {
-    // Widths past 125 (round 10 — the former Decimal(38,0) ceiling, now
-    // closed): the engine carries the unsigned residue as a FIXED-LENGTH
+    // Widths past 125, the deep end of the byte family (no ceiling): the
+    // engine carries the unsigned residue as a FIXED-LENGTH
     // big-endian byte array through codegen'd WordBinOpBytes static calls
     // (BigInteger inside); the reference interpreter runs its independent
     // BigInt mask/shift formulation, width-generic by construction. Same
@@ -445,8 +445,8 @@ class DifferentialSpec extends AnyFunSuite
           case TV(_) => fail(s"[bytes width $w case $i] scalar compiled to a table")
         }
       }
-      // anti-vacuity across the three BYTE widths (125 rides along to
-      // cross-check the Decimal family against the same programs)
+      // anti-vacuity across the three deep widths (125 rides along to
+      // cross-check a shallow byte width against the same programs)
       if (results.take(3).distinct.size > 1) diverged += 1
     }
     assert(diverged >= n / 10,

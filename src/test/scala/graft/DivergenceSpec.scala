@@ -464,28 +464,25 @@ class DivergenceSpec extends AnyFunSuite {
         "order diverged again")
   }
 
-  test("word family boundaries: 125 wraps in Decimal, 126+ wraps in bytes (no ceiling)") {
+  test("word family boundaries: 64 wraps in Long, 65+ wraps in bytes (no ceiling)") {
     // The reference's section parameter ranges over any width: Z
-    // (fiat2/src/fiat2/Language.v:4). Through round 9 the engine capped
-    // widths at 125 (Decimal(38,0) residues — a pinned divergence); round
-    // 10 closed it with the multi-limb Bytes family, so the former
-    // directed error must be GONE and the representation handoff at the
-    // 125/126 boundary must be seamless.
+    // (fiat2/src/fiat2/Language.v:4). The engine has two representations:
+    // sign-extended Longs through width 64 and fixed-length byte residues
+    // from 65 up, with no ceiling; the handoff at the 64/65 boundary must
+    // be seamless.
     import graft.functions.{WordMathBytes, WordOps}
-    // boundary width of the Decimal family still wraps correctly:
-    // (2^125 - 1) + 1 ≡ 0 (mod 2^125)
-    val w125 = WordOps.forWidth(125)
-    val maxW = org.apache.spark.sql.functions
-      .lit(new java.math.BigDecimal(new java.math.BigInteger("2").pow(125)
-        .subtract(java.math.BigInteger.ONE)))
-      .cast(org.apache.spark.sql.types.DecimalType(38, 0))
+    // last Long width: (2^64 - 1) + 1 ≡ 0 (mod 2^64)
+    val w64 = WordOps.forWidth(64)
+    assert(w64.isInstanceOf[WordOps.Narrow], s"width 64 runs $w64")
     val wrapped = spark.range(1)
-      .select(w125.wadd(maxW, w125.literal(1L)).as("v"))
-      .head.getDecimal(0)
-    assert(wrapped.toBigInteger == java.math.BigInteger.ZERO)
-    // first Bytes width and a deep one: (2^w - 1) + 1 ≡ 0 (mod 2^w), and
-    // the residue round-trips the fixed-length encoding
-    for (w <- Seq(126, 256, 1000)) {
+      .select(w64.wadd(w64.literal(-1L), w64.literal(1L)).as("v"))
+      .head.getLong(0)
+    assert(wrapped == 0L)
+    assert((65 to 300).forall(WordOps.forWidth(_).isInstanceOf[WordOps.Bytes]),
+      "a width above 64 left the byte family")
+    // first Bytes width and deeper ones: (2^w - 1) + 1 ≡ 0 (mod 2^w), and
+    // the residue round-trips the fixed-length encoding (9 bytes at 65)
+    for (w <- Seq(65, 126, 256, 1000)) {
       val fam = WordOps.forWidth(w).asInstanceOf[WordOps.Bytes]
       val max = org.apache.spark.sql.functions.lit(WordMathBytes.toBytes(
         java.math.BigInteger.ONE.shiftLeft(w).subtract(java.math.BigInteger.ONE), w))

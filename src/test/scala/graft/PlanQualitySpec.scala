@@ -505,16 +505,16 @@ class PlanQualitySpec extends AnyFunSuite {
   test("wide (100-bit) word ops run inside whole-stage codegen") {
     import org.apache.spark.sql.functions._
     import graft.functions.WordOps
-    val w100 = WordOps.forWidth(100)
+    val w100 = WordOps.forWidth(100).asInstanceOf[WordOps.Bytes]
     val df = spark.range(100)
       .select(w100.wmul(w100.wadd(
-        col("id").cast("decimal(38,0)"), w100.literal(-1000L)),
+        w100.fromLong(col("id")), w100.literal(-1000L)),
         w100.literal(12345L)).as("w"))
     df.collect()
     val p = df.queryExecution.executedPlan.toString
-    val line = p.linesIterator.find(_.contains("graft_word_wmul_w100"))
+    val line = p.linesIterator.find(_.contains("graft_word_wmul_b100"))
     assert(line.exists(_.trim.startsWith("*(")),
-      s"WordBinOpWide not codegen'd:\n$p")
+      s"WordBinOpBytes not codegen'd:\n$p")
   }
 
   test("correlated zip collects per-outer arrays with grouped shuffles, never a product") {

@@ -228,4 +228,23 @@ class QueryServerSpec extends AnyFunSuite {
       assert(get(s"http://localhost:$port/get_artist_less_than/xyz")._1 === 404)
     }
   }
+
+  test("stop() ends the handler threads of the server") {
+    // HttpServer.stop does not shut down the executor it was given, so
+    // QueryServer.stop must, or each started server leaves its
+    // non-daemon handler threads behind
+    val srv = new QueryServer(spark, TestSpark.sfDir, port = 0)
+    val port = srv.start()
+    val handlers = try {
+      assert(get(s"http://localhost:$port/query/nope")._1 === 404)
+      val prefix = s"graft-query-server-$port-"
+      val live = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+        .filter(_.getName.startsWith(prefix))
+      assert(live.nonEmpty, s"no handler thread named $prefix* served the request")
+      live
+    } finally srv.stop()
+    handlers.foreach(_.join(5000))
+    val alive = handlers.filter(_.isAlive).map(_.getName)
+    assert(alive.isEmpty, s"handler threads alive after stop(): ${alive.mkString(", ")}")
+  }
 }

@@ -165,10 +165,10 @@ class ToPythonSpec extends AnyFunSuite {
     val bools: Seq[Expr] = Seq(
       EBinop(OWLessU, W(-1L), W(1L)),
       EBinop(OWLessS, W(-1L), W(1L)))
-    // width 100 runs the WIDE residue family (Decimal(38,0) engine-side,
-    // BigInt in RefInterp) under real CPython: the prelude's __w returns
-    // the SIGNED view, RefInterp carries the unsigned residue — convert.
-    // Width 256 does the same for the multi-limb BYTES family (round 10).
+    // widths 100 and 256 run the multi-limb BYTES family (byte residues
+    // engine-side, BigInt in RefInterp) under real CPython: the prelude's
+    // __w returns the SIGNED view, RefInterp carries the unsigned
+    // residue — convert.
     for (w <- Seq(64, 16, 100, 256)) {
       val prints = (battery ++ bools)
         .map(e => s"print(${ToPython(e)})").mkString("", "\n", "\n")

@@ -119,4 +119,53 @@ class DedupCapSpec extends AnyFunSuite {
     assert((after -- before).isEmpty,
       "cold-path jaccardPairs persisted an RDD")
   }
+
+  test("sizes-join hint engages only past the broadcast threshold") {
+    // r17 verdict directive 5: the hint must never replace an automatic
+    // broadcast of the skinny sizes side (broadcasting it shuffles
+    // NOTHING; any shuffled join moves the whole pair list). The gate is
+    // the build side's own estimate vs autoBroadcastJoinThreshold — so
+    // with the threshold forced below the estimate, the hint engages and
+    // the sizes joins become ShuffledHashJoin; at the default threshold
+    // they stay broadcast (pinned by the small-scale test below).
+    val docs = Seq(
+      1L -> "aaa bbb ccc ddd eee",
+      2L -> "aaa bbb ccc ddd eee",
+      3L -> "fff ggg hhh iii jjj").toDF("doc_id", "text")
+    val dsets = graft.operators.Dedup.shingleSets(docs).cache()
+    dsets.count()
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "1")
+      val plan = graft.operators.Dedup.jaccardPairs(dsets)
+        .queryExecution.executedPlan.toString
+      assert(plan.contains("ShuffledHashJoin"),
+        s"with broadcast disabled the sizes joins must be hinted " +
+          s"shuffle_hash (sort-merge would sort the pair list):\n$plan")
+    } finally {
+      spark.conf.set(key, prev)
+      dsets.unpersist(blocking = false)
+    }
+  }
+
+  test("below the widen threshold jaccardPairs keeps the un-repartitioned plan") {
+    val docs = Seq(
+      1L -> "aaa bbb ccc ddd eee",
+      2L -> "aaa bbb ccc ddd eee",
+      3L -> "fff ggg hhh iii jjj").toDF("doc_id", "text")
+    val dsets = graft.operators.Dedup.shingleSets(docs).cache()
+    dsets.count()
+    try {
+      val plan = graft.operators.Dedup.jaccardPairs(dsets)
+        .queryExecution.executedPlan.toString
+      // tiny input derives below defaultParallelism: no explicit
+      // repartition exchange (REPARTITION_BY_NUM origin) and no forced
+      // hash-join hint may appear — the pre-r17 plan, byte-identical
+      assert(!plan.contains("REPARTITION_BY_NUM"),
+        s"small-scale jaccard plan gained a repartition:\n$plan")
+      assert(!plan.contains("ShuffledHashJoin"),
+        s"small-scale jaccard plan gained a forced hash join:\n$plan")
+    } finally dsets.unpersist(blocking = false)
+  }
 }
