@@ -33,17 +33,7 @@ object Bench {
     spark.range(1000).selectExpr("sum(id)").collect()
     warmTextPipeline(spark)
     warmStreaming(spark)
-    // local-iteration filter: SPARK_GRAFT_ONLY=q_a,q_b benches a subset
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) =>
-        val unknown = names -- SparkEntry.queries.keySet
-        require(unknown.isEmpty, s"SPARK_GRAFT_ONLY names not registered: " +
-          unknown.mkString(", "))
-        SparkEntry.queries.filter(q => names(q._1))
-      case None => SparkEntry.queries
-    }
+    val selected = SparkEntry.selected
     warmPass(spark, sfDir, selected)
     val wallWarm = wallMark("warmup", wall0)
     // Median of 3 runs per query: single cold timings on this box swing
@@ -72,21 +62,8 @@ object Bench {
       val dt = (System.nanoTime() - t0) / 1e9
       val jobs = jobCounter.get() - j0
       // drop per-query caches so later timings aren't skewed by memory
-      // pressure from earlier queries' cached indexes. clearCache only
-      // covers the SQL cache manager — localCheckpoint blocks (graph
-      // loops, IVM ticks) are plain persisted RDDs and must be dropped
-      // explicitly or they accumulate across 100+ queries. Scope the
-      // drop to RDDs persisted DURING this run: a blanket unpersist
-      // would destroy any checkpointed block a module may hold across
-      // queries (lineage-truncated blocks cannot be recomputed).
-      spark.sqlContext.clearCache()
-      spark.sparkContext.getPersistentRDDs
-        .filter { case (id, _) => !before(id) }
-        .values.foreach(_.unpersist(blocking = false))
-      // index registrations are per-query setup: dropping them with the
-      // cache keeps the rewrite rule from steering OTHER queries onto a
-      // no-longer-cached index
-      graft.plans.KeyedIndexRule.clear()
+      // pressure from earlier queries' cached indexes
+      SparkEntry.release(spark, before)
       if (ok) Some((dt, jobs)) else None
     }
     val order = selected.toVector
@@ -205,7 +182,7 @@ object Bench {
     * out of the timed window; warm needs no timing fidelity, so it runs
     * CONCURRENTLY (bounded lanes — local[32] has idle cores during any
     * single small-SF query) to keep the added wall far below one serial
-    * pass. Safe concurrently: StreamConf serializes session-conf scoping,
+    * pass. Safe concurrently: StreamRun serializes session-conf scoping,
     * per-query temp dirs are unique, and a query that races another into
     * an exception just forfeits its warmup (the timed pass reports real
     * failures). Caches/indexes are dropped once afterwards, so the first
@@ -280,11 +257,7 @@ object Bench {
     if (warmFailed.get() > 0)
       System.err.println(s"[bench-warm] ${warmFailed.get()} warm " +
         "executions failed (timed pass will report real failures)")
-    spark.sqlContext.clearCache()
-    spark.sparkContext.getPersistentRDDs
-      .filter { case (id, _) => !beforeWarm(id) }
-      .values.foreach(_.unpersist(blocking = false))
-    graft.plans.KeyedIndexRule.clear()
+    SparkEntry.release(spark, beforeWarm)
   }
 
   /** Exercise the Structured Streaming stack on a tiny feed: file-stream
@@ -294,24 +267,13 @@ object Bench {
     * rationale, applied to streaming). */
   private def warmStreaming(spark: SparkSession): Unit = {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_warm_stream_")
-    val feed = dir.resolve("feed")
-    spark.range(100).select(col("id"), (col("id") % 5).as("k"))
-      .coalesce(1).write.mode("overwrite").parquet(feed.toString)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(feed.toString).schema)
-      .parquet(feed.toString)
-      .groupBy("k").agg(count(lit(1)).as("n"))
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = stream.writeStream.outputMode("complete")
-        .format("memory").queryName("graft_warm_stream").start()
-      try q.processAllAvailable() finally q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      graft.core.Tables.deleteTree(dir.toFile)
+    val feed = spark.range(100).select(col("id"), (col("id") % 5).as("k"))
+    graft.streaming.StreamRun(spark, "complete") { watch =>
+      graft.streaming.StreamStage.writeBatchFile(feed, watch, "feed.parquet")
+      spark.readStream.schema(feed.schema).parquet(watch.toString)
+        .groupBy("k").agg(count(lit(1)).as("n"))
     }
+    ()
   }
 
   /** Exercise the text-pipeline expression machinery on tiny data: regex

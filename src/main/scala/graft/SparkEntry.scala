@@ -46,6 +46,34 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     allQueries.map(q => q.name -> q.run).toMap
 
+  /** The queries `SPARK_GRAFT_ONLY=q_a,q_b` names (every query when it is
+    * unset), for iterating on a subset locally. */
+  def selected: Map[String, (SparkSession, String) => DataFrame] =
+    sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet) match {
+      case Some(names) =>
+        val unknown = names -- queries.keySet
+        require(unknown.isEmpty, s"SPARK_GRAFT_ONLY names not registered: " +
+          unknown.mkString(", "))
+        queries.filter(q => names(q._1))
+      case None => queries
+    }
+
+  /** Release what queries persisted since `before` (a snapshot of
+    * `getPersistentRDDs.keySet`), so later queries neither feel their
+    * memory pressure nor reuse their caches. `clearCache` covers only the
+    * SQL cache manager; localCheckpoint blocks (graph loops, IVM ticks) are
+    * plain persisted RDDs. Only RDDs persisted since `before` go: a blanket
+    * unpersist would destroy a lineage-truncated block a module holds
+    * across queries, which cannot be recomputed. Index registrations go
+    * too, so the rewrite rule steers no later query onto a dropped index. */
+  def release(spark: SparkSession, before: collection.Set[Int]): Unit = {
+    spark.sqlContext.clearCache()
+    spark.sparkContext.getPersistentRDDs
+      .filter { case (id, _) => !before(id) }
+      .values.foreach(_.unpersist(blocking = false))
+    plans.KeyedIndexRule.clear()
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted entries → rows-only check. */
   def oracleSql: Map[String, String] =

@@ -8,20 +8,8 @@ object Verify {
     val spark = graft.core.GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // local-iteration filter (same contract as Bench): SPARK_GRAFT_ONLY=q_a,q_b
-    // dumps a subset; the driver never sets it, so driver runs dump everything
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) =>
-        val unknown = names -- SparkEntry.queries.keySet
-        require(unknown.isEmpty, s"SPARK_GRAFT_ONLY names not registered: " +
-          unknown.mkString(", "))
-        SparkEntry.queries.filter(q => names(q._1))
-      case None => SparkEntry.queries
-    }
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    selected.foreach { case (name, fn) =>
+    SparkEntry.selected.foreach { case (name, fn) =>
       // drop any dump from a previous run FIRST: if this query fails now,
       // a stale success must not masquerade as a pass in a reused outDir
       graft.core.Tables.deleteTree(new java.io.File(s"$outDir/$name"))
@@ -51,16 +39,8 @@ object Verify {
         }
       }
       // queries build private caches (indexes, shingle sets); drop them so
-      // 100+ queries don't accumulate executor memory. localCheckpoint
-      // blocks live outside the SQL cache manager — drop them too, but
-      // only those persisted DURING this query: a blanket unpersist would
-      // destroy any lineage-truncated checkpoint a module holds across
-      // queries, making it permanently unrecomputable
-      spark.sqlContext.clearCache()
-      spark.sparkContext.getPersistentRDDs
-        .filter { case (id, _) => !before(id) }
-        .values.foreach(_.unpersist(blocking = false))
-      graft.plans.KeyedIndexRule.clear()
+      // 100+ queries don't accumulate executor memory
+      SparkEntry.release(spark, before)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -64,12 +64,11 @@ object CanonOrder {
     new scala.util.DynamicVariable[Option[Boolean]](None)
   def withStrict[A](on: Boolean)(body: => A): A =
     strictScope.withValue(Some(on))(body)
-  /** Env var for deployments; the system property remains as a JVM-wide
-    * opt-in (spark-submit -D); specs use `withStrict`. */
+  /** `GRAFT_STRICT_ORDER=1` turns strict mode on for a deployment; specs
+    * use `withStrict`. */
   private def strict: Boolean =
     strictScope.value.getOrElse(
-      sys.props.get("graft.strictOrder").orElse(
-        sys.env.get("GRAFT_STRICT_ORDER")).contains("1"))
+      sys.env.get("GRAFT_STRICT_ORDER").contains("1"))
   /** The strict-mode error gets its OWN type: the compiler's
     * correlated-body machinery catches UnsupportedOperationException to
     * drive its try-direct-then-decorrelate fallbacks, and a strict trip

@@ -69,7 +69,7 @@ final class QueryServer(spark: SparkSession, dataDir: String,
       val body = new String(ex.getRequestBody.readAllBytes(),
         StandardCharsets.UTF_8)
       route(ex.getRequestMethod, ex.getRequestURI.getPath, body) match {
-        case Some(df) => respond(ex, 200, toJsonArray(df))
+        case Some(json) => respond(ex, 200, json)
         case None => respond(ex, 404, """{"error":"unknown route"}""")
       }
     } catch {
@@ -84,16 +84,24 @@ final class QueryServer(spark: SparkSession, dataDir: String,
         respond(ex, code, s"""{"error":${quote(String.valueOf(e.getMessage))}}""")
     } finally ex.close()
 
+  /** The JSON reply of a known route. */
   private def route(method: String, path: String,
-      body: String): Option[DataFrame] =
+      body: String): Option[String] =
     path.split("/").filter(_.nonEmpty) match {
+      case Array("runc") if method == "POST" => Some(runCommand(body))
+      case parts => frame(method, parts, body).map(toJsonArray)
+    }
+
+  /** The rows a known route other than `/runc` answers with. */
+  private def frame(method: String, parts: Array[String],
+      body: String): Option[DataFrame] =
+    parts match {
       case Array() => Some(routeListing)
       case Array("get_artist_less_than", IntArg(n)) => Some(artistLessThan(n))
       case Array("get_album_and_artist", IntArg(n)) => Some(albumAndArtist(n))
       case Array("query", name) =>
         graft.SparkEntry.queries.get(name).map(f => f(spark, dataDir))
       case Array("run") if method == "POST" => Some(runProgram(body))
-      case Array("runc") if method == "POST" => Some(runCommand(body))
       case Array("extract") if method == "POST" => Some(extractProgram(body))
       case Array("extract_py") if method == "POST" =>
         Some(extractProgramPy(body))
@@ -127,22 +135,20 @@ final class QueryServer(spark: SparkSession, dataDir: String,
     * through the whole optimization pipeline (`Optimize`: recognition,
     * collection annotation, incremental aggregate maintenance, index
     * introduction) against the full store, and the store cell named
-    * `result` is returned — the reference's optimize-then-interpret
+    * `result` is returned as JSON — the reference's optimize-then-interpret
     * lifecycle behind one route. */
-  private def runCommand(src: String): DataFrame = {
+  private def runCommand(src: String): String = {
     import graft.lang.{Compiler, Optimize, Parser}
     val prog = Parser.parseCommand(src)
     val end = Optimize.run(prog, Compiler.Env(Map.empty, fullStore, spark))
-    // materialize the response rows BEFORE releasing the caches the
-    // Optimize pipeline pinned (keyed indexes), and release them on every
-    // path — a program with no `result` or a failing collect would
-    // otherwise leave dead cached RDDs in a long-lived server
+    // render the reply BEFORE releasing the caches the Optimize pipeline
+    // pinned (keyed indexes), and release them on every path — a program
+    // with no `result` or a failing render would otherwise leave dead
+    // cached RDDs in a long-lived server
     try {
-      val res = end.store.getOrElse("result", throw new IllegalArgumentException(
-        "program must assign a table to `result`"))
-      val rows = res.limit(maxRows).collect()
-      spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), res.schema)
+      toJsonArray(end.store.getOrElse("result",
+        throw new IllegalArgumentException(
+          "program must assign a table to `result`")))
     } finally {
       end.indexes.values.foreach(_.unpersist())
       end.compoIndexes.values.foreach(_.unpersist())

@@ -59,39 +59,31 @@ object LateData {
         StreamStage.writeBatchFile(
           ev.filter(Tables.epochUs(ev) < cutUs), p, "batch02.parquet")
       }
-      val watchDir = java.nio.file.Files.createTempDirectory("graft_late_")
-      def addBatch(seq: Int): Unit =
-        StreamStage.deliver(staged, watchDir, f"batch$seq%02d.parquet")
-      val stream = s.readStream.schema(schema).parquet(watchDir.toString)
-      val agg = stream
-        .withColumn("tstamp", Tables.tsCol(stream))
-        .withWatermark("tstamp", "12 hours")
-        .groupBy(window($"tstamp", "1 hour"), $"event_type")
-        .agg(count(lit(1)).as("n"),
-          sum($"value".cast(DecimalType(18, 2))).cast("double").as("total"))
-        .select($"window.start".cast("timestamp_ntz").as("window_start"),
-          $"event_type", $"n", $"total")
-      val sink = s"graft_late_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-      StreamConf.withStatePartitions(s, 2) {
-        val q = agg.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try {
-          // The straggler file must ARRIVE after the on-time batch commits:
-          // a backlog present at stream start gets its batches planned
-          // against the pre-stream watermark (observed: batch 2 of a
-          // 2-file backlog late-filters with watermark 0 and the "late"
-          // rows sail through), whereas a file that arrives after the
-          // previous batch's commit is filtered with that batch's
-          // watermark — the semantics an actually-arriving feed gets.
-          addBatch(1) // advances the watermark
-          q.processAllAvailable()
-          addBatch(2) // stragglers: all dropped
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      // the memory sink holds the rows; the watched files are done with
-      Tables.deleteTree(watchDir.toFile)
-      s.table(sink).orderBy("window_start", "event_type")
+      def addBatch(watch: java.nio.file.Path, seq: Int): Unit =
+        StreamStage.deliver(staged, watch, f"batch$seq%02d.parquet")
+      // The straggler file must ARRIVE after the on-time batch commits:
+      // a backlog present at stream start gets its batches planned
+      // against the pre-stream watermark (observed: batch 2 of a
+      // 2-file backlog late-filters with watermark 0 and the "late"
+      // rows sail through), whereas a file that arrives after the
+      // previous batch's commit is filtered with that batch's
+      // watermark — the semantics an actually-arriving feed gets.
+      StreamRun(s, "append", feed = { (q, watch) =>
+        addBatch(watch, 1) // advances the watermark
+        q.processAllAvailable()
+        addBatch(watch, 2) // stragglers: all dropped
+        q.processAllAvailable()
+      }) { watch =>
+        val stream = s.readStream.schema(schema).parquet(watch.toString)
+        stream
+          .withColumn("tstamp", Tables.tsCol(stream))
+          .withWatermark("tstamp", "12 hours")
+          .groupBy(window($"tstamp", "1 hour"), $"event_type")
+          .agg(count(lit(1)).as("n"),
+            sum($"value".cast(DecimalType(18, 2))).cast("double").as("total"))
+          .select($"window.start".cast("timestamp_ntz").as("window_start"),
+            $"event_type", $"n", $"total")
+      }.orderBy("window_start", "event_type")
     },
   )
 }

@@ -60,22 +60,15 @@ object Sessionize {
          |ORDER BY user_id, session_start_us""".stripMargin) { (s, dir) =>
       import s.implicits._
       val schema = Tables.load(s, dir, "events").schema
-      val watchDir = java.nio.file.Files.createTempDirectory("graft_sess_")
-      StreamStage.linkTable(watchDir, dir, "events")
-      val src = s.readStream.schema(schema).parquet(watchDir.toString)
-      val stream = src
-        .select($"user_id", Tables.epochUs(src).as("t"))
-        .as[Ev]
-      val sessions = stream.groupByKey(_.user_id)
-        .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.NoTimeout)(step)
-      val sink = s"graft_sess_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-      StreamConf.withStatePartitions(s, 2) {
-        val q = sessions.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink).orderBy("user_id", "session_start_us")
+      StreamRun.linked(s, dir, "events", "append") { watch =>
+        val src = s.readStream.schema(schema).parquet(watch.toString)
+        src.select($"user_id", Tables.epochUs(src).as("t"))
+          .as[Ev]
+          .groupByKey(_.user_id)
+          .flatMapGroupsWithState(OutputMode.Append,
+            GroupStateTimeout.NoTimeout)(step)
+          .toDF()
+      }.orderBy("user_id", "session_start_us")
     },
   )
 }

@@ -24,30 +24,22 @@ object StreamAgg {
       // Batch read once for the events schema (whichever accepted ts
       // layout), then stream the same file through a windowed aggregation
       // into an in-memory sink.
-      val ev = Tables.load(s, dir, "events")
-      val schema = ev.schema
-      // The file-stream source needs a directory to watch; expose the single
-      // events file through a temp dir (the arrival directory of a real feed).
-      val watchDir = java.nio.file.Files.createTempDirectory("graft_stream_")
-      StreamStage.linkTable(watchDir, dir, "events")
-      val stream = s.readStream.schema(schema).parquet(watchDir.toString)
-      val agg = stream
-        .withColumn("tstamp", Tables.tsCol(stream))
-        .groupBy(window($"tstamp", "1 hour"), $"event_type")
-        .agg(count(lit(1)).as("n"),
-          sum($"value".cast(DecimalType(18, 2))).cast("double").as("total"))
-        // ntz: the dump's parquet timestamp must be naive MICROS (what the
-        // DuckDB oracle yields); LTZ would write INT96/adjusted-to-UTC and
-        // read back as a different pandas dtype than the oracle's.
-        .select($"window.start".cast("timestamp_ntz").as("window_start"),
-          $"event_type", $"n", $"total")
-      val sink = s"graft_stream_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-      StreamConf.withStatePartitions(s, 2) {
-        val q = agg.writeStream.outputMode("complete")
-          .format("memory").queryName(sink).start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink).orderBy("window_start", "event_type")
+      val schema = Tables.load(s, dir, "events").schema
+      // The file-stream source needs a directory to watch; the events file
+      // is linked into one (the arrival directory of a real feed).
+      StreamRun.linked(s, dir, "events", "complete") { watch =>
+        val stream = s.readStream.schema(schema).parquet(watch.toString)
+        stream
+          .withColumn("tstamp", Tables.tsCol(stream))
+          .groupBy(window($"tstamp", "1 hour"), $"event_type")
+          .agg(count(lit(1)).as("n"),
+            sum($"value".cast(DecimalType(18, 2))).cast("double").as("total"))
+          // ntz: the dump's parquet timestamp must be naive MICROS (what the
+          // DuckDB oracle yields); LTZ would write INT96/adjusted-to-UTC and
+          // read back as a different pandas dtype than the oracle's.
+          .select($"window.start".cast("timestamp_ntz").as("window_start"),
+            $"event_type", $"n", $"total")
+      }.orderBy("window_start", "event_type")
     },
 
     // Stream-STATIC join: the arriving event feed enriched against a static
@@ -63,22 +55,15 @@ object StreamAgg {
         |GROUP BY seg ORDER BY seg""".stripMargin) { (s, dir) =>
       import s.implicits._
       val schema = Tables.load(s, dir, "events").schema
-      val watchDir = java.nio.file.Files.createTempDirectory("graft_sjoin_")
-      StreamStage.linkTable(watchDir, dir, "events")
-      val stream = s.readStream.schema(schema).parquet(watchDir.toString)
       val dim = broadcast(Tables.load(s, dir, "customer")
         .select($"c_custkey", $"c_mktsegment"))
-      val joined = stream.join(dim, $"user_id" === $"c_custkey")
-        .groupBy($"c_mktsegment".as("seg"))
-        .agg(count(lit(1)).as("n"),
-          sum($"value".cast(DecimalType(18, 2))).cast("double").as("total"))
-      val sink = s"graft_sjoin_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-      StreamConf.withStatePartitions(s, 2) {
-        val q = joined.writeStream.outputMode("complete")
-          .format("memory").queryName(sink).start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink).orderBy("seg")
+      StreamRun.linked(s, dir, "events", "complete") { watch =>
+        s.readStream.schema(schema).parquet(watch.toString)
+          .join(dim, $"user_id" === $"c_custkey")
+          .groupBy($"c_mktsegment".as("seg"))
+          .agg(count(lit(1)).as("n"),
+            sum($"value".cast(DecimalType(18, 2))).cast("double").as("total"))
+      }.orderBy("seg")
     },
 
     // Stream-STREAM interval join: click events joined to the same user's
@@ -101,35 +86,28 @@ object StreamAgg {
         |ORDER BY user_id, click_id, purchase_id""".stripMargin) { (s, dir) =>
       import s.implicits._
       val schema = Tables.load(s, dir, "events").schema
-      val watchDir = java.nio.file.Files.createTempDirectory("graft_ssjoin_")
-      StreamStage.linkTable(watchDir, dir, "events")
-      val src = s.readStream.schema(schema).parquet(watchDir.toString)
-      val clicks = src.filter($"event_type" === "click")
-        .select($"event_id".as("click_id"), $"user_id".as("c_user"),
-          Tables.tsCol(src).as("c_ts"))
-        .withWatermark("c_ts", "2 hours")
-      val purchases = src.filter($"event_type" === "purchase")
-        .select($"event_id".as("purchase_id"), $"user_id".as("p_user"),
-          Tables.tsCol(src).as("p_ts"))
-        .withWatermark("p_ts", "2 hours")
-      val joined = clicks.join(purchases,
-        $"c_user" === $"p_user" && $"p_ts" >= $"c_ts" &&
-          $"p_ts" <= $"c_ts" + expr("INTERVAL 1 HOUR"))
-        .select($"c_user".as("user_id"), $"click_id", $"purchase_id")
-      val sink = s"graft_ssj_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
       // A stream-stream join keeps FOUR state stores per shuffle partition
       // (left/right × keyToNumValues/keyWithIndexToValue), each with its
       // own checkpoint commit per batch — per-partition overhead dominates
-      // a modest feed (see StreamConf). INNER join matches emit during
+      // a modest feed (see StreamRun). INNER join matches emit during
       // data batches; the trailing no-data micro-batch only evicts state
       // and emits nothing, so skip its fixed trigger round.
-      StreamConf.withConf(s, "spark.sql.shuffle.partitions" -> "2",
-        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
-        val q = joined.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink).orderBy("user_id", "click_id", "purchase_id")
+      StreamRun.linked(s, dir, "events", "append", noDataBatches = false) {
+        watch =>
+          val src = s.readStream.schema(schema).parquet(watch.toString)
+          val clicks = src.filter($"event_type" === "click")
+            .select($"event_id".as("click_id"), $"user_id".as("c_user"),
+              Tables.tsCol(src).as("c_ts"))
+            .withWatermark("c_ts", "2 hours")
+          val purchases = src.filter($"event_type" === "purchase")
+            .select($"event_id".as("purchase_id"), $"user_id".as("p_user"),
+              Tables.tsCol(src).as("p_ts"))
+            .withWatermark("p_ts", "2 hours")
+          clicks.join(purchases,
+            $"c_user" === $"p_user" && $"p_ts" >= $"c_ts" &&
+              $"p_ts" <= $"c_ts" + expr("INTERVAL 1 HOUR"))
+            .select($"c_user".as("user_id"), $"click_id", $"purchase_id")
+      }.orderBy("user_id", "click_id", "purchase_id")
     },
 
     // Stream-stream LEFT OUTER interval join: clicks that found NO
@@ -177,10 +155,8 @@ object StreamAgg {
         StreamStage.writeBatchFile(
           ev.filter(Tables.epochUs(ev) >= cut2), p, "batch03.parquet")
       }
-      val watchDir = java.nio.file.Files.createTempDirectory("graft_soj_")
-      def addBatch(seq: Int): Unit =
-        StreamStage.deliver(staged, watchDir, f"batch$seq%02d.parquet")
-      val src = s.readStream.schema(schema).parquet(watchDir.toString)
+      def addBatch(watch: java.nio.file.Path, seq: Int): Unit =
+        StreamStage.deliver(staged, watch, f"batch$seq%02d.parquet")
       // The joinable-window cut must be a predicate ON THE WATERMARK
       // COLUMN: Catalyst pushes any other filter below the
       // EventTimeWatermark node (PushPredicateThroughNonJoin exempts only
@@ -189,22 +165,6 @@ object StreamAgg {
       // what flushes the unmatched outer rows.
       val cutTs = lit(java.time.Instant.ofEpochSecond(
         cut / 1000000L, cut % 1000000L * 1000L))
-      val clicks = src.select($"event_id", $"user_id", $"event_type",
-          Tables.tsCol(src).as("c_ts"))
-        .withWatermark("c_ts", "2 hours")
-        .filter($"event_type" === "click" && $"c_ts" < cutTs)
-        .select($"event_id".as("click_id"), $"user_id".as("c_user"), $"c_ts")
-      val purchases = src.select($"event_id", $"user_id", $"event_type",
-          Tables.tsCol(src).as("p_ts"))
-        .withWatermark("p_ts", "2 hours")
-        .filter($"event_type" === "purchase" && $"p_ts" < cutTs)
-        .select($"event_id".as("purchase_id"), $"user_id".as("p_user"), $"p_ts")
-      val joined = clicks.join(purchases,
-        $"c_user" === $"p_user" && $"p_ts" >= $"c_ts" &&
-          $"p_ts" <= $"c_ts" + expr("INTERVAL 1 HOUR"),
-        "left_outer")
-        .select($"c_user".as("user_id"), $"click_id", $"purchase_id")
-      val sink = s"graft_soj_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
       // No-data micro-batches add one trigger round (~0.3-0.5s fixed) per
       // processAllAvailable and prove nothing HERE: every eviction this
       // query tests is flushed by a DATA batch — file 2's batch evicts
@@ -212,21 +172,31 @@ object StreamAgg {
       // and the click cut (< day 2) means no straggler outlives file 3's
       // batch. Queries whose FINAL emissions ride the watermark (window
       // agg, late-data) keep the default.
-      StreamConf.withConf(s, "spark.sql.shuffle.partitions" -> "2",
-        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
-        val q = joined.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try {
-          addBatch(1) // the joinable window
-          q.processAllAvailable()
-          addBatch(2) // advancer
-          q.processAllAvailable()
-          addBatch(3) // advancer: flush stragglers
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      graft.core.Tables.deleteTree(watchDir.toFile)
-      s.table(sink).orderBy("user_id", "click_id", "purchase_id")
+      StreamRun(s, "append", noDataBatches = false, feed = { (q, watch) =>
+        addBatch(watch, 1) // the joinable window
+        q.processAllAvailable()
+        addBatch(watch, 2) // advancer
+        q.processAllAvailable()
+        addBatch(watch, 3) // advancer: flush stragglers
+        q.processAllAvailable()
+      }) { watch =>
+        val src = s.readStream.schema(schema).parquet(watch.toString)
+        val clicks = src.select($"event_id", $"user_id", $"event_type",
+            Tables.tsCol(src).as("c_ts"))
+          .withWatermark("c_ts", "2 hours")
+          .filter($"event_type" === "click" && $"c_ts" < cutTs)
+          .select($"event_id".as("click_id"), $"user_id".as("c_user"), $"c_ts")
+        val purchases = src.select($"event_id", $"user_id", $"event_type",
+            Tables.tsCol(src).as("p_ts"))
+          .withWatermark("p_ts", "2 hours")
+          .filter($"event_type" === "purchase" && $"p_ts" < cutTs)
+          .select($"event_id".as("purchase_id"), $"user_id".as("p_user"), $"p_ts")
+        clicks.join(purchases,
+          $"c_user" === $"p_user" && $"p_ts" >= $"c_ts" &&
+            $"p_ts" <= $"c_ts" + expr("INTERVAL 1 HOUR"),
+          "left_outer")
+          .select($"c_user".as("user_id"), $"click_id", $"purchase_id")
+      }.orderBy("user_id", "click_id", "purchase_id")
     },
   )
 }

@@ -117,7 +117,6 @@ object StreamCurate {
       val maxId = srcRows.map(r => if (r.isNullAt(2)) 0L else r.getLong(2))
         .foldLeft(0L)(math.max)
       val schema = docs.schema
-      val watchDir = java.nio.file.Files.createTempDirectory("graft_curate_")
       val stageDir = java.nio.file.Files.createTempDirectory("graft_curate_s_")
       val cuts = Seq((0L, maxId / 3), (maxId / 3 + 1, 2 * maxId / 3),
         (2 * maxId / 3 + 1, maxId))
@@ -192,133 +191,121 @@ object StreamCurate {
       // the arriving stream: three doc_id-range files delivered as
       // separate micro-batches ------------------------------------------
       try {
-        // maxFilesPerTrigger=1 keeps the three delivery files arriving as
-        // THREE micro-batches (the cross-batch dedup state must actually
-        // be exercised) while letting the driver pay ONE
-        // processAllAvailable await instead of one per delivery — the
-        // per-await ~1s trigger floor was the whole residual cost of this
-        // query (r12 watch item). FileStreamSource orders candidate files
-        // by modification time (latestFirst=false), so the deliveries
-        // below stamp ascending mod times to pin batch order = doc_id
-        // order, which the keep-first dedup's determinism needs.
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(watchDir.toString)
-        // token array as a materialized column (same HOF-CSE reason)
-        val withTok = stream.select($"doc_id", $"source", $"text",
-          toks($"text").as("t"))
-        val t = col("t")
-        // digest + mixture gate stay COLUMN expressions (O(1) per row,
-        // and the md5-derived sampling must stay bit-identical to the
-        // batch/oracle form); the three MODEL sums move to a typed
-        // projection over the materialized token array with O(1)
-        // hash-map lookups. The previous literal-map HOF
-        // (`element_at(typedlit(m), k)`) is a LINEAR key scan per gram
-        // in codegen — quadratic once vocabulary grows with the corpus,
-        // measured 30x wall at a 9x corpus with 9x vocabulary. The
-        // cap-guarded model maps ride the `models` broadcast as Scala
-        // HashMaps (one executor-side copy, O(1) lookups).
-        val mixOk = Fingerprints
-          .md5Low64(concat(lit("tmp:"), $"doc_id".cast("string")))
-          .bitwiseAND(0x7fffffffL) % 1000 <
-          coalesce(element_at(typedlit(rateM), $"source"), lit(0L))
-        val verdicts = withTok.select(md5($"text").as("digest"), $"doc_id",
-            $"t", mixOk.as("mix_keep"))
-          .as[(String, Long, Seq[String], Boolean)]
-          .map { case (digest, docId, toksArr, mix) =>
-            val (tgtB, bgdB, cbB, cpB) = models.value
-            val n = toksArr.length
-            var sumBg = 0L; var sumPre = 0L; var st = 0L; var sb = 0L
-            var i = 0
-            while (i < n) {
-              val w = toksArr(i)
-              st += tgtB.getOrElse(w, 0L)
-              sb += bgdB.getOrElse(w, 0L)
-              if (i < n - 1) {
-                sumBg += cbB.getOrElse(w + " " + toksArr(i + 1), 0L)
-                sumPre += cpB.getOrElse(w, 0L)
-              }
-              i += 1
-            }
-            val lmOk = n >= 2 && sumBg.toDouble / sumPre >= 0.0333
-            val dsOk = (st + 1).toDouble / (sb + 1) >= 0.0558
-            (digest, docId, n >= 10, lmOk, dsOk, mix)
-          }
-        // keep-first exact dedup across micro-batches: digest-keyed state,
-        // per-batch group processed in doc_id order → deterministic keeper
-        val deduped = verdicts.groupByKey(_._1)
-          .flatMapGroupsWithState(OutputMode.Append(),
-            GroupStateTimeout.NoTimeout)(
-            (_: String,
-             it: Iterator[(String, Long, Boolean, Boolean, Boolean, Boolean)],
-             st: GroupState[Boolean]) => {
-              val sorted = it.toVector.sortBy(_._2)
-              val seen = st.getOption.getOrElse(false)
-              st.update(true)
-              sorted.iterator.zipWithIndex.map { case (r, i) =>
-                (r._2, seen || i > 0, r._3, r._4, r._5, r._6)
-              }
-            })
-          .toDF("doc_id", "dup", "quality_ok", "lm_ok", "dsir_ok",
-            "mix_keep")
-        val sink = s"graft_curate_${
-          java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-        val fromSink =
-          try {
-            // no-data micro-batches add one trigger round (~0.3-0.5s
-            // fixed) per processAllAvailable and flush nothing here: the
-            // dedup state has NoTimeout and every emission rides a DATA
-            // batch (the StreamAgg stance)
-            StreamConf.withConf(s, "spark.sql.shuffle.partitions" -> "2",
-              "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
-              val q = deduped.writeStream.outputMode("append")
-                .format("memory").queryName(sink).start()
+        // ONE write job produced all three delivery files
+        // (partitionBy(cut), staged CONCURRENTLY with the model build
+        // above); the per-cut moves below just rename the part files into
+        // the watch dir
+        def deliver(watch: java.nio.file.Path): Unit = {
+          val epoch = java.nio.file.Files.getLastModifiedTime(watch).toMillis
+          scala.concurrent.Await.result(partsWrite,
+            scala.concurrent.duration.Duration(300, "s"))
+          cuts.indices.foreach { k =>
+            val d = partsDir.resolve(s"cut=$k")
+            if (java.nio.file.Files.isDirectory(d)) {
+              val listing = java.nio.file.Files.list(d)
               try {
-                val epoch = java.nio.file.Files.getLastModifiedTime(
-                  watchDir).toMillis
-                // ONE write job produced all three delivery files
-                // (partitionBy(cut), staged CONCURRENTLY with the model
-                // build above); the per-cut moves below just rename the
-                // part files into the watch dir
-                scala.concurrent.Await.result(partsWrite,
-                  scala.concurrent.duration.Duration(300, "s"))
-                cuts.indices.foreach { k =>
-                  val d = partsDir.resolve(s"cut=$k")
-                  if (java.nio.file.Files.isDirectory(d)) {
-                    val listing = java.nio.file.Files.list(d)
-                    try {
-                      val file = listing.iterator()
-                      var moved = false
-                      while (file.hasNext && !moved) {
-                        val f = file.next()
-                        if (f.getFileName.toString.endsWith(".parquet")) {
-                          // stamp WHILE STILL IN STAGING, then move:
-                          // the FileStreamSource is already running, and
-                          // a listing between move and stamp could see
-                          // an unstamped later file sort before a
-                          // stamped earlier one (stamped times can be in
-                          // the future of a raw mtime), breaking the
-                          // batch-order = doc_id-order determinism the
-                          // keep-first dedup relies on. Ascending mod
-                          // times spaced well past FS granularity:
-                          // batch order = k order.
-                          java.nio.file.Files.setLastModifiedTime(f,
-                            java.nio.file.attribute.FileTime.fromMillis(
-                              epoch + k * 10000L))
-                          java.nio.file.Files.move(f,
-                            watchDir.resolve(s"p$k.parquet"))
-                          moved = true
-                        }
-                      }
-                    } finally listing.close()
+                val file = listing.iterator()
+                var moved = false
+                while (file.hasNext && !moved) {
+                  val f = file.next()
+                  if (f.getFileName.toString.endsWith(".parquet")) {
+                    // stamp WHILE STILL IN STAGING, then move: the
+                    // FileStreamSource is already running, and a listing
+                    // between move and stamp could see an unstamped later
+                    // file sort before a stamped earlier one (stamped
+                    // times can be in the future of a raw mtime), breaking
+                    // the batch-order = doc_id-order determinism the
+                    // keep-first dedup relies on. Ascending mod times
+                    // spaced well past FS granularity: batch order = k
+                    // order.
+                    java.nio.file.Files.setLastModifiedTime(f,
+                      java.nio.file.attribute.FileTime.fromMillis(
+                        epoch + k * 10000L))
+                    java.nio.file.Files.move(f,
+                      watch.resolve(s"p$k.parquet"))
+                    moved = true
                   }
                 }
-                q.processAllAvailable()
-              } finally q.stop()
+              } finally listing.close()
             }
-            s.table(sink).localCheckpoint(true)
-          } finally {
-            s.catalog.dropTempView(sink)
           }
+        }
+        // no-data micro-batches add one trigger round (~0.3-0.5s fixed)
+        // per processAllAvailable and flush nothing here: the dedup state
+        // has NoTimeout and every emission rides a DATA batch (the
+        // StreamAgg stance)
+        val fromSink = StreamRun(s, "append", noDataBatches = false,
+          feed = { (q, watch) => deliver(watch); q.processAllAvailable() }) {
+          watch =>
+            // maxFilesPerTrigger=1 keeps the three delivery files arriving
+            // as THREE micro-batches (the cross-batch dedup state must
+            // actually be exercised) while letting the driver pay ONE
+            // processAllAvailable await instead of one per delivery — the
+            // per-await ~1s trigger floor was the whole residual cost of
+            // this query (r12 watch item). FileStreamSource orders
+            // candidate files by modification time (latestFirst=false), so
+            // the deliveries stamp ascending mod times to pin batch order
+            // = doc_id order, which the keep-first dedup's determinism
+            // needs.
+            val stream = s.readStream.schema(schema)
+              .option("maxFilesPerTrigger", "1").parquet(watch.toString)
+            // token array as a materialized column (same HOF-CSE reason)
+            val withTok = stream.select($"doc_id", $"source", $"text",
+              toks($"text").as("t"))
+            // digest + mixture gate stay COLUMN expressions (O(1) per row,
+            // and the md5-derived sampling must stay bit-identical to the
+            // batch/oracle form); the three MODEL sums move to a typed
+            // projection over the materialized token array with O(1)
+            // hash-map lookups. The previous literal-map HOF
+            // (`element_at(typedlit(m), k)`) is a LINEAR key scan per gram
+            // in codegen — quadratic once vocabulary grows with the corpus,
+            // measured 30x wall at a 9x corpus with 9x vocabulary. The
+            // cap-guarded model maps ride the `models` broadcast as Scala
+            // HashMaps (one executor-side copy, O(1) lookups).
+            val mixOk = Fingerprints
+              .md5Low64(concat(lit("tmp:"), $"doc_id".cast("string")))
+              .bitwiseAND(0x7fffffffL) % 1000 <
+              coalesce(element_at(typedlit(rateM), $"source"), lit(0L))
+            val verdicts = withTok.select(md5($"text").as("digest"), $"doc_id",
+                $"t", mixOk.as("mix_keep"))
+              .as[(String, Long, Seq[String], Boolean)]
+              .map { case (digest, docId, toksArr, mix) =>
+                val (tgtB, bgdB, cbB, cpB) = models.value
+                val n = toksArr.length
+                var sumBg = 0L; var sumPre = 0L; var st = 0L; var sb = 0L
+                var i = 0
+                while (i < n) {
+                  val w = toksArr(i)
+                  st += tgtB.getOrElse(w, 0L)
+                  sb += bgdB.getOrElse(w, 0L)
+                  if (i < n - 1) {
+                    sumBg += cbB.getOrElse(w + " " + toksArr(i + 1), 0L)
+                    sumPre += cpB.getOrElse(w, 0L)
+                  }
+                  i += 1
+                }
+                val lmOk = n >= 2 && sumBg.toDouble / sumPre >= 0.0333
+                val dsOk = (st + 1).toDouble / (sb + 1) >= 0.0558
+                (digest, docId, n >= 10, lmOk, dsOk, mix)
+              }
+            // keep-first exact dedup across micro-batches: digest-keyed state,
+            // per-batch group processed in doc_id order → deterministic keeper
+            verdicts.groupByKey(_._1)
+              .flatMapGroupsWithState(OutputMode.Append(),
+                GroupStateTimeout.NoTimeout)(
+                (_: String,
+                 it: Iterator[(String, Long, Boolean, Boolean, Boolean, Boolean)],
+                 st: GroupState[Boolean]) => {
+                  val sorted = it.toVector.sortBy(_._2)
+                  val seen = st.getOption.getOrElse(false)
+                  st.update(true)
+                  sorted.iterator.zipWithIndex.map { case (r, i) =>
+                    (r._2, seen || i > 0, r._3, r._4, r._5, r._6)
+                  }
+                })
+              .toDF("doc_id", "dup", "quality_ok", "lm_ok", "dsir_ok",
+                "mix_keep")
+        }.localCheckpoint(true)
         fromSink
           .select($"doc_id", $"dup", $"quality_ok", $"lm_ok", $"dsir_ok",
             $"mix_keep",
@@ -334,7 +321,6 @@ object StreamCurate {
         // success-path-only unpersist left failure paths pinning the four
         // LM model maps until the Broadcast handle was GC'd.)
         models.unpersist(false)
-        Tables.deleteTree(watchDir.toFile)
         Tables.deleteTree(stageDir.toFile)
       }
     },

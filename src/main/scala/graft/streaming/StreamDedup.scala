@@ -26,19 +26,11 @@ object StreamDedup {
         |ORDER BY digest""".stripMargin) { (s, dir) =>
       import s.implicits._
       val schema = Tables.load(s, dir, "documents").schema
-      val watchDir = java.nio.file.Files.createTempDirectory("graft_sdedup_")
-      StreamStage.linkTable(watchDir, dir, "documents")
-      val stream = s.readStream.schema(schema).parquet(watchDir.toString)
-      val deduped = stream
-        .select(md5($"text").as("digest"))
-        .dropDuplicates("digest")
-      val sink = s"graft_sdedup_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-      StreamConf.withStatePartitions(s, 2) {
-        val q = deduped.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(sink).orderBy("digest")
+      StreamRun.linked(s, dir, "documents", "append") { watch =>
+        s.readStream.schema(schema).parquet(watch.toString)
+          .select(md5($"text").as("digest"))
+          .dropDuplicates("digest")
+      }.orderBy("digest")
     },
   )
 }

@@ -50,34 +50,18 @@ object StreamScore {
       // the same corpus file arrives as a stream (the feed-directory
       // pattern the rest of the streaming family uses)
       val schema = docs.schema
-      val watchDir = java.nio.file.Files.createTempDirectory("graft_score_")
-      StreamStage.linkTable(watchDir, dir, "documents")
-      val stream = s.readStream.schema(schema).parquet(watchDir.toString)
-      val scored = stream
-        .select($"doc_id", explode(toks($"text")).as("w"))
-        .join(model, "w") // stream-static, stateless on the stream side
-        .groupBy($"doc_id")
-        .agg(count(lit(1)).as("n_tok"), sum($"tgt").as("sum_tgt"),
-          sum($"bgd").as("sum_bgd"))
-      val sink = s"graft_score_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-      // run the stream, then DETACH the (small, per-document) result from
-      // the memory sink with an eager localCheckpoint so the sink table and
-      // the watch directory can be cleaned up immediately — repeated
-      // Verify/Bench reps must not accumulate temp dirs or session tables
-      val fromSink =
-        try {
-          StreamConf.withStatePartitions(s, 2) {
-            val q = scored.writeStream.outputMode("complete")
-              .format("memory").queryName(sink).start()
-            try q.processAllAvailable() finally q.stop()
-          }
-          s.table(sink).localCheckpoint(true)
-        } finally {
-          s.catalog.dropTempView(sink)
-          // linkTable stages one link per part file (several on the
-          // ScaleUp corpora) — remove whatever it created, then the dir
-          graft.core.Tables.deleteTree(watchDir.toFile)
-        }
+      // DETACH the (small, per-document) result from the memory sink with
+      // an eager localCheckpoint: the scoring below reads checkpointed
+      // blocks, not the sink
+      val fromSink = StreamRun.linked(s, dir, "documents", "complete") {
+        watch =>
+          s.readStream.schema(schema).parquet(watch.toString)
+            .select($"doc_id", explode(toks($"text")).as("w"))
+            .join(model, "w") // stream-static, stateless on the stream side
+            .groupBy($"doc_id")
+            .agg(count(lit(1)).as("n_tok"), sum($"tgt").as("sum_tgt"),
+              sum($"bgd").as("sum_bgd"))
+      }.localCheckpoint(true)
       val affinity = ($"sum_tgt" + 1).cast("double") / ($"sum_bgd" + 1)
       fromSink
         .select($"doc_id", $"n_tok", $"sum_tgt", $"sum_bgd",

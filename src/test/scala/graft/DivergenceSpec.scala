@@ -250,8 +250,8 @@ class DivergenceSpec extends AnyFunSuite {
 
   test("strict order mode: an ambiguous type-unknown table sort raises the directed error (r12)") {
     // The type-unknown fallback is LOUD: by default a once-per-JVM
-    // warning; under strict mode (GRAFT_STRICT_ORDER=1 / the
-    // graft.strictOrder prop) a DIRECTED error whenever a sort's element
+    // warning; under strict mode (GRAFT_STRICT_ORDER=1, or
+    // CanonOrder.withStrict) a DIRECTED error whenever a sort's element
     // type is unsynthesizable AND the schema could hide words/bags. An
     // untyped ESort over a Long-columned store table is exactly that
     // case; the same sort with storeTypes declared stays allowed.

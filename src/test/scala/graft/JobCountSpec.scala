@@ -90,11 +90,7 @@ class JobCountSpec extends AnyFunSuite {
     SparkEntry.queries(name)(spark, TestSpark.sfDir).count()
     settle()
     val jobs = jobCounter.get() - j0
-    spark.sqlContext.clearCache()
-    spark.sparkContext.getPersistentRDDs
-      .filter { case (id, _) => !before(id) }
-      .values.foreach(_.unpersist(blocking = false))
-    graft.plans.KeyedIndexRule.clear()
+    SparkEntry.release(spark, before)
     jobs
   }
 
@@ -135,10 +131,7 @@ class JobCountSpec extends AnyFunSuite {
       graft.plans.Graph.pageRank(edges, iters).count()
       settle()
       val jobs = jobCounter.get() - j0
-      spark.sqlContext.clearCache()
-      spark.sparkContext.getPersistentRDDs
-        .filter { case (id, _) => !before(id) }
-        .values.foreach(_.unpersist(blocking = false))
+      SparkEntry.release(spark, before)
       jobs
     }
     // auto-broadcast also OFF: each iteration's rebuild join otherwise

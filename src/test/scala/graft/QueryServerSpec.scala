@@ -167,6 +167,53 @@ class QueryServerSpec extends AnyFunSuite {
     }
   }
 
+  test("POST /runc renders its reply with one action") {
+    // the reply is rendered straight from `result`: one render job after
+    // the two query-stage jobs of its plan. Collecting the rows first,
+    // rebuilding a DataFrame from them and rendering that cost one job more
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    // the engine frame of each job's final stage, for the failure message
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val details = js.stageInfos.lastOption.map(_.details).getOrElse("")
+        sites.add(details.linesIterator.map(_.trim)
+          .find(_.startsWith("graft.")).getOrElse(details.takeWhile(_ != '\n')))
+        jobs.incrementAndGet(); ()
+      }
+    }
+    // JobStart reaches listeners asynchronously: wait until the count has
+    // been still for 300 ms
+    def settle(): Int = {
+      var last = jobs.get()
+      var still = 0
+      while (still < 3) {
+        Thread.sleep(100)
+        val now = jobs.get()
+        if (now == last) still += 1 else { still = 0; last = now }
+      }
+      last
+    }
+    val program = "set result := filter (mut nation) n (n[n_regionkey] == 1)"
+    spark.sparkContext.addSparkListener(listener)
+    try withServer { port =>
+      // the first request fills the table-schema memo
+      assert(post(s"http://localhost:$port/runc", program)._1 === 200)
+      val expected = graft.core.Tables.load(spark, TestSpark.sfDir, "nation")
+        .filter(org.apache.spark.sql.functions.col("n_regionkey") === 1)
+        .count()
+      val j0 = settle()
+      sites.clear()
+      val (code, body) = post(s"http://localhost:$port/runc", program)
+      val started = settle() - j0
+      assert(code === 200, body)
+      assert(body.split("\"n_regionkey\":1").length - 1 === expected, body)
+      assert(started === 3, s"one /runc request started $started jobs: " +
+        sites.toArray.mkString("; "))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("POST /extract returns portable SQL for a surface-syntax program") {
     withServer { port =>
       val program =

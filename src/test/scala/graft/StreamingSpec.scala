@@ -1,9 +1,14 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.streaming.{StreamRun, StreamStage}
 
 /** Watermark semantics: windowed aggregation in append mode over a two-batch
   * file arrival — the watermark from batch 1 closes old windows (emitted) and
@@ -122,5 +127,67 @@ class StreamingSpec extends AnyFunSuite {
         } finally graft.core.Tables.deleteTree(watch.toFile)
       }
     } finally graft.core.Tables.deleteTree(abs.toFile)
+  }
+
+  /** A one-file feed of `(id, k)` rows grouped by `k` into a runner
+    * stream, with `feed` run while the query is live. */
+  private def countByK(feed: StreamingQuery => Unit): DataFrame = {
+    val rows = spark.range(100).select(col("id"), (col("id") % 5).as("k"))
+    StreamRun(spark, "complete", feed = (q, _) => feed(q)) { watch =>
+      StreamStage.writeBatchFile(rows, watch, "feed.parquet")
+      spark.readStream.schema(rows.schema).parquet(watch.toString)
+        .groupBy("k").agg(count(lit(1)).as("n"))
+    }
+  }
+
+  test("a runner stream keeps its state partitions off the shared session") {
+    var sessionWidth = ""
+    var stateWidth = -1L
+    val out = countByK { q =>
+      q.processAllAvailable()
+      sessionWidth = spark.conf.get("spark.sql.shuffle.partitions")
+      stateWidth = q.lastProgress.stateOperators.head.numShufflePartitions
+    }
+    assert(out.count() === 5)
+    assert(sessionWidth === "4", "the session's batch width changed under a stream")
+    assert(stateWidth === StreamRun.statePartitions)
+  }
+
+  test("the registered streams leave no view, active query or temp directory") {
+    val streams = Seq("q_stream_window", "q_stream_join",
+      "q_stream_stream_join", "q_stream_outer_join", "q_stream_late",
+      "q_sessionize", "q_stream_dedup", "q_stream_score", "q_stream_curate")
+    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
+    // StreamStage's staged feeds live for the JVM by design
+    def dirs = tmp.list().filter(n =>
+      n.startsWith("graft_") && !n.startsWith("graft_stage_")).toSet
+    def views = spark.catalog.listTables().collect()
+      .filter(_.isTemporary).map(_.name).toSet
+    val (dirs0, views0) = (dirs, views)
+    streams.foreach(n => SparkEntry.queries(n)(spark, TestSpark.sfDir).count())
+    assert(views -- views0 === Set.empty)
+    assert(spark.streams.active.isEmpty)
+    assert(dirs -- dirs0 === Set.empty)
+  }
+
+  test("two runner streams feed at the same time") {
+    // each feed waits for the other's to start: streams that ran one at a
+    // time would leave the first waiting out its timeout
+    val started = new CountDownLatch(2)
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      val met = Seq.fill(2)(pool.submit(new Callable[Boolean] {
+        def call(): Boolean = {
+          var both = false
+          countByK { q =>
+            q.processAllAvailable()
+            started.countDown()
+            both = started.await(30, TimeUnit.SECONDS)
+          }.count()
+          both
+        }
+      }))
+      assert(met.map(_.get(120, TimeUnit.SECONDS)) === Seq(true, true))
+    } finally pool.shutdown()
   }
 }
