@@ -24,6 +24,10 @@ the share of pairs the change wins (ties count for neither side), and:
     every change run beats every parent run.
 
 --trace 1 compares the per-layer metrics of traced runs instead.
+
+When the runs dealt different numbers of ops (a `serve` run deals whole
+44-request decks, so it attempts 44 or 88), the summary also gives each
+side's median of every metric per deck size.
 """
 import argparse
 import json
@@ -81,6 +85,21 @@ def summarize(better, bound, parent, change):
             out["regression"] = "unresolved"
         else:
             out["regression"] = "ok"
+    return out
+
+
+def by_deck(runs, names):
+    """Per deck size (`attempted`), each side's run count and median of
+    every metric in `names`."""
+    decks = sorted({r["attempted"] for side in runs.values() for r in side})
+    out = {}
+    for d in decks:
+        out[str(d)] = {}
+        for side, rs in runs.items():
+            rs = [r for r in rs if r["attempted"] == d]
+            out[str(d)][side] = {"runs": len(rs), "median": {
+                n: statistics.median(r["metrics"][n]["value"] for r in rs)
+                for n in names if rs and all(n in r["metrics"] for r in rs)}}
     return out
 
 
@@ -153,10 +172,20 @@ def main():
               f"{'n/a' if v['delta'] is None else format(v['delta'], '+.1%'):>7s} "
               f"{v['wins']:>3d}/{v['pairs']:<2d} "
               f"{'yes' if v['claim'] else 'no ':5s} {v.get('regression', '')}")
+    decks = by_deck(runs, list(summary))
+    if len(decks) > 1:
+        print("\nper deck: median, parent (runs) -> change (runs)")
+        for d, sides in decks.items():
+            p, c = sides["parent"], sides["change"]
+            print(f"  {d} ops: parent {p['runs']} runs, change {c['runs']} runs")
+            for name in summary:
+                fmt = lambda s: f"{s['median'][name]:.4g}" if name in s["median"] else "-"
+                print(f"    {name:26s} {fmt(p):>10s} -> {fmt(c):<10s}")
     if a.out:
         with open(a.out, "w") as fh:
             json.dump({"parent": rev, "workload": a.workload, "trace": a.trace,
-                       "runs": runs, "summary": summary}, fh, indent=1)
+                       "runs": runs, "summary": summary, "by_deck": decks},
+                      fh, indent=1)
 
 
 if __name__ == "__main__":

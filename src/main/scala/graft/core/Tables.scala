@@ -3,9 +3,10 @@ package graft.core
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions.{call_function, lit, timestamp_micros, unix_micros}
-import org.apache.spark.sql.types.{DataType, LongType, StructType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
 
 /** Source layer. The reference has no file formats — tables are environment
   * bindings (fiat2/src/fiat2/Ex_Employee.v:68-71); ours are parquet scans,
@@ -37,19 +38,22 @@ object Tables {
         "TESTDATA.md 'events schema contract'")
   }
 
-  /** Read one table. Parquet schema inference is a Spark job (one footer
-    * read per call), so inferred schemas are memoized process-wide and a
-    * repeated load of unchanged files reads with `schema(s).parquet(path)`,
-    * which runs no job. The memo holds one entry per table path, valid
-    * while its stamp matches:
+  /** Read one table. Resolving a parquet source infers its schema (a Spark
+    * job, one footer read per call) and lists its files again, so each
+    * table's resolved relation is memoized process-wide, as a catalog
+    * table's relation is bound once in the environment. The memo holds one
+    * entry per table path, valid while its stamp matches:
     *   - the sorted listing of every file under the path (path, length,
     *     modification time), taken through the Hadoop FileSystem so that
-    *     part-file directories (ScaleUp corpora) are covered — a rewritten
+    *     part-file directories (ScaleUp corpora) are covered; a rewritten
     *     table changes it;
     *   - the session's `*parquet*` confs, because they change what
     *     inference returns (`spark.sql.legacy.parquet.nanosAsLong` turns
     *     `events.ts` into epoch-nanos longs).
-    * A stale stamp re-infers, exactly as an unmemoized read would. */
+    * An entry serves only the session that resolved it. A hit starts no
+    * job and no process: it wraps a fresh instance of the analyzed
+    * relation, whose new expression ids let two loads of one table join
+    * each other. A miss resolves once, exactly as an unmemoized read. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     if (name == "events") {
       // Legacy-layout support: TIMESTAMP(NANOS) footers are rejected by the
@@ -85,36 +89,46 @@ object Tables {
   private final case class Stamp(files: Seq[(String, Long, Long)],
       confs: Seq[(String, String)])
 
-  private val schemas = new ConcurrentHashMap[String, (Stamp, StructType)]()
+  private final case class Entry(stamp: Stamp, session: SparkSession,
+      relation: LogicalRelation)
+
+  private val relations = new ConcurrentHashMap[String, Entry]()
 
   private def read(spark: SparkSession, path: String): DataFrame = {
-    // the stamp is taken BEFORE inference: a rewrite racing the read can
+    // the stamp is taken BEFORE resolution: a rewrite racing the read can
     // then only leave an entry whose stamp no longer matches
     val stamp = Stamp(listing(spark, path), spark.conf.getAll.toSeq
       .filter(_._1.toLowerCase.contains("parquet")).sorted)
-    Option(schemas.get(path)) match {
-      case Some((`stamp`, schema)) => spark.read.schema(schema).parquet(path)
+    Option(relations.get(path)) match {
+      case Some(Entry(`stamp`, session, relation)) if session eq spark =>
+        GraftBridge.ofRows(spark, relation.newInstance())
       case _ =>
         val df = spark.read.parquet(path)
-        schemas.put(path, (stamp, df.schema))
+        df.queryExecution.analyzed match {
+          case relation: LogicalRelation =>
+            relations.put(path, Entry(stamp, spark, relation))
+          case _ => () // a DSv2 parquet scan (useV1SourceList) is not kept
+        }
         df
     }
   }
 
   /** Every file under `path`, sorted; empty when the path does not exist
-    * (the read then fails exactly as an unmemoized one would). */
+    * (the read then fails exactly as an unmemoized one would). The walk
+    * uses `listStatus`, whose local-file statuses load permissions only
+    * when asked; `listFiles` builds `LocatedFileStatus`es, which ask at
+    * once and, without the native Hadoop library, fork an `ls -ld` per
+    * file. */
   private def listing(spark: SparkSession,
       path: String): Seq[(String, Long, Long)] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = Seq.newBuilder[(String, Long, Long)]
-    try {
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val f = it.next()
-        out += ((f.getPath.toString, f.getLen, f.getModificationTime))
-      }
-    } catch { case _: java.io.FileNotFoundException => () }
+    def walk(dir: Path): Unit = fs.listStatus(dir).foreach { f =>
+      if (f.isDirectory) walk(f.getPath)
+      else out += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    try walk(p) catch { case _: java.io.FileNotFoundException => () }
     out.result().sorted
   }
 

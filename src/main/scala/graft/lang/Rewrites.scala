@@ -313,6 +313,23 @@ object Rewrites {
     }
   }
 
+  /** The store names `e` reads (`mut t`). */
+  def locs(e: Expr): Set[String] = e match {
+    case ELoc(x) => Set(x)
+    case _ => children(e).flatMap(locs).toSet
+  }
+
+  /** The store names `c` reads or assigns. */
+  def locs(c: Command): Set[String] = c match {
+    case CSkip => Set.empty
+    case CSeq(a, b) => locs(a) ++ locs(b)
+    case CLet(e, _, b) => locs(e) ++ locs(b)
+    case CLetMut(e, _, b) => locs(e) ++ locs(b)
+    case CAssign(x, e) => locs(e) + x
+    case CIf(e, a, b) => locs(e) ++ locs(a) ++ locs(b)
+    case CForeach(e, _, b) => locs(e) ++ locs(b)
+  }
+
   /** Rebuild a command with `f` applied to every embedded expression. */
   def mapExprs(c: Command)(f: Expr => Expr): Command = c match {
     case CSkip => CSkip

@@ -27,6 +27,11 @@ import graft.core.Tables
   * computed distributed; only the response rows are collected, capped at
   * `maxRows`). Queries on a warm SparkSession are concurrent-safe, so the
   * handler pool serves parallel requests.
+  *
+  * A request loads only the tables it reads: `/run` and `/runc` bind the
+  * store tables their program names, and `Tables.load` answers a table
+  * whose files and parquet confs are unchanged from its relation memo,
+  * with no Spark job and no file-source resolution.
   */
 final class QueryServer(spark: SparkSession, dataDir: String,
     port: Int = 8080, maxRows: Int = 10000, host: String = "127.0.0.1") {
@@ -108,24 +113,24 @@ final class QueryServer(spark: SparkSession, dataDir: String,
       case _ => None
     }
 
-  /** Every table, loaded per request. This stays a `def`: `Tables.load`
-    * memoizes inferred schemas, so a rebuild runs no Spark job, and a
-    * store held here would be a second cache with its own staleness
-    * rules. */
-  private def fullStore: Map[String, DataFrame] =
-    graft.core.Tables.all
-      .map(n => n -> Tables.load(spark, dataDir, n)).toMap
+  /** The store tables among `names`, loaded for this request only. A name
+    * outside `Tables.all` stays unbound, so the compiler reports it as a
+    * type error (400). */
+  private def store(names: Set[String]): Map[String, DataFrame] =
+    Tables.all.filter(names).map(n => n -> Tables.load(spark, dataDir, n)).toMap
 
   /** `POST /run` — the request body is a surface-syntax EXPRESSION (the
-    * notation `Parser` accepts; every store table is bound, so `mut nation`
-    * etc. work). The program is parsed, join-recognized, and compiled to a
-    * distributed plan — the haskellServer's elaborate-then-run request path
-    * (haskellServer/src/Extracted.hs:2217) with the whole engine behind it.
+    * notation `Parser` accepts; each store table it names is bound, so
+    * `mut nation` etc. work). The program is parsed, join-recognized, and
+    * compiled to a distributed plan — the haskellServer's elaborate-then-run
+    * request path (haskellServer/src/Extracted.hs:2217) with the whole
+    * engine behind it.
     */
   private def runProgram(src: String): DataFrame = {
     import graft.lang.{Compiler, Parser, Rewrites}
     val prog = Rewrites.normalize(Parser.parseExpr(src))
-    Compiler.compile(prog, Compiler.Env(Map.empty, fullStore, spark)) match {
+    val env = Compiler.Env(Map.empty, store(Rewrites.locs(prog)), spark)
+    Compiler.compile(prog, env) match {
       case Compiler.TV(df) => df
       case Compiler.CV(c) => Compiler.oneRow(spark).select(c.as("value"))
     }
@@ -134,13 +139,14 @@ final class QueryServer(spark: SparkSession, dataDir: String,
   /** `POST /runc` — the body is a surface-syntax COMMAND program. It runs
     * through the whole optimization pipeline (`Optimize`: recognition,
     * collection annotation, incremental aggregate maintenance, index
-    * introduction) against the full store, and the store cell named
-    * `result` is returned as JSON — the reference's optimize-then-interpret
-    * lifecycle behind one route. */
+    * introduction) against the store tables it reads or assigns, and the
+    * store cell named `result` is returned as JSON — the reference's
+    * optimize-then-interpret lifecycle behind one route. */
   private def runCommand(src: String): String = {
-    import graft.lang.{Compiler, Optimize, Parser}
+    import graft.lang.{Compiler, Optimize, Parser, Rewrites}
     val prog = Parser.parseCommand(src)
-    val end = Optimize.run(prog, Compiler.Env(Map.empty, fullStore, spark))
+    val end = Optimize.run(prog,
+      Compiler.Env(Map.empty, store(Rewrites.locs(prog)), spark))
     // render the reply BEFORE releasing the caches the Optimize pipeline
     // pinned (keyed indexes), and release them on every path — a program
     // with no `result` or a failing render would otherwise leave dead

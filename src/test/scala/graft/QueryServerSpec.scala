@@ -98,6 +98,40 @@ class QueryServerSpec extends AnyFunSuite {
     }
   }
 
+  test("POST /run binds only the tables its program names") {
+    // a data dir without embeddings: a server that bound every table per
+    // request would fail each /run on the missing file
+    val dir = java.nio.file.Files.createTempDirectory("graft_srv_partial_")
+    try {
+      for (t <- graft.core.Tables.all if t != "embeddings")
+        java.nio.file.Files.copy(
+          java.nio.file.Paths.get(s"${TestSpark.sfDir}/$t.parquet"),
+          dir.resolve(s"$t.parquet"))
+      val srv = new QueryServer(spark, dir.toString, port = 0)
+      val port = srv.start()
+      try {
+        val program =
+          """n <- mut nation;
+            |check(n[n_regionkey] == 0);
+            |ret { key : n[n_nationkey] }""".stripMargin
+        val (code, body) = post(s"http://localhost:$port/run", program)
+        assert(code === 200, body)
+        val expected = graft.core.Tables.load(spark, TestSpark.sfDir, "nation")
+          .filter(org.apache.spark.sql.functions.col("n_regionkey") === 0)
+          .collect().map(_.getAs[Number]("n_nationkey").longValue).toSet
+        assert("\"key\":(\\d+)".r.findAllMatchIn(body).map(_.group(1).toLong)
+          .toSet === expected, body)
+        // a table outside the store is still the program's fault
+        val (c2, b2) = post(s"http://localhost:$port/run",
+          "x <- mut no_such_table; ret x")
+        assert(c2 === 400, b2)
+        val (c3, b3) = post(s"http://localhost:$port/runc",
+          "set result := mut no_such_table")
+        assert(c3 === 400, b3)
+      } finally srv.stop()
+    } finally graft.core.Tables.deleteTree(dir.toFile)
+  }
+
   test("POST /runc runs a command program through the Optimize pipeline") {
     withServer { port =>
       val program =

@@ -18,47 +18,60 @@ class StreamingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  /** Runs `f` with a maker of temp directories; every directory it made
+    * is deleted afterwards, whether `f` passes or fails. */
+  private def withTempDirs[T](f: (String => java.nio.file.Path) => T): T = {
+    val made = scala.collection.mutable.Buffer.empty[java.nio.file.Path]
+    try f { prefix => val d = Files.createTempDirectory(prefix); made += d; d }
+    finally made.foreach(d => graft.core.Tables.deleteTree(d.toFile))
+  }
+
   test("watermarked windowed agg emits closed windows and drops late data") {
-    val dir = Files.createTempDirectory("graft_wm_").toString
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:30")
-    def ts(min: Long) = new java.sql.Timestamp(t0.getTime + min * 60000)
-    // batch 1: events in windows 00:00 and 01:00, max event time 02:00
-    Seq((ts(0), "a"), (ts(1), "a"), (ts(60), "b"), (ts(120), "c"))
-      .toDF("ts", "k").coalesce(1).write.parquet(s"$dir/b1")
-    // batch 2: an event 2h LATE (window 00:00, watermark now 01:50) plus a
-    // fresh one
-    Seq((ts(2), "late"), (ts(125), "c"))
-      .toDF("ts", "k").coalesce(1).write.parquet(s"$dir/b2")
+    withTempDirs { temp =>
+      val dir = temp("graft_wm_").toString
+      val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:30")
+      def ts(min: Long) = new java.sql.Timestamp(t0.getTime + min * 60000)
+      // batch 1: events in windows 00:00 and 01:00, max event time 02:00
+      Seq((ts(0), "a"), (ts(1), "a"), (ts(60), "b"), (ts(120), "c"))
+        .toDF("ts", "k").coalesce(1).write.parquet(s"$dir/b1")
+      // batch 2: an event 2h LATE (window 00:00, watermark now 01:50) plus a
+      // fresh one
+      Seq((ts(2), "late"), (ts(125), "c"))
+        .toDF("ts", "k").coalesce(1).write.parquet(s"$dir/b2")
 
-    // stage batch 1 before starting so arrival order is deterministic
-    val arrivals = Files.createTempDirectory("graft_wm_arrivals_").toString
-    Files.copy(java.nio.file.Paths.get(
-      spark.read.parquet(s"$dir/b1").inputFiles.head.stripPrefix("file:")),
-      java.nio.file.Paths.get(s"$arrivals/b1.parquet"))
-    val schema = spark.read.parquet(s"$dir/b1").schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(arrivals)
-    val agg = stream
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window($"ts", "1 hour").as("w"))
-      .agg(count(lit(1)).as("n"))
-      .select($"w.start".as("start"), $"n")
-    val q = agg.writeStream.outputMode("append")
-      .format("memory").queryName("wm_out").start()
-    q.processAllAvailable()
-    Files.copy(java.nio.file.Paths.get(
-      spark.read.parquet(s"$dir/b2").inputFiles.head.stripPrefix("file:")),
-      java.nio.file.Paths.get(s"$arrivals/b2.parquet"))
-    q.processAllAvailable()
-    q.stop()
-
-    val out = spark.table("wm_out")
-      .collect().map(r => (r.getTimestamp(0).toString, r.getLong(1))).toMap
-    // 00:00 window emitted with n=2 — the late event did NOT inflate it
-    assert(out.get("2024-01-01 00:00:00.0").contains(2L),
-      s"closed 00:00 window wrong: $out")
-    // the late event's window was already closed; count stays 2 (dropped)
-    assert(!out.contains("2024-01-01 00:00:00.0") || out("2024-01-01 00:00:00.0") == 2L)
+      // stage batch 1 before starting so arrival order is deterministic
+      val arrivals = temp("graft_wm_arrivals_").toString
+      Files.copy(java.nio.file.Paths.get(
+        spark.read.parquet(s"$dir/b1").inputFiles.head.stripPrefix("file:")),
+        java.nio.file.Paths.get(s"$arrivals/b1.parquet"))
+      val schema = spark.read.parquet(s"$dir/b1").schema
+      val stream = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(arrivals)
+      val agg = stream
+        .withWatermark("ts", "10 minutes")
+        .groupBy(window($"ts", "1 hour").as("w"))
+        .agg(count(lit(1)).as("n"))
+        .select($"w.start".as("start"), $"n")
+      val q = agg.writeStream.outputMode("append")
+        .format("memory").queryName("wm_out").start()
+      try {
+        try {
+          q.processAllAvailable()
+          Files.copy(java.nio.file.Paths.get(
+            spark.read.parquet(s"$dir/b2").inputFiles.head.stripPrefix("file:")),
+            java.nio.file.Paths.get(s"$arrivals/b2.parquet"))
+          q.processAllAvailable()
+        } finally q.stop()
+        val out = spark.table("wm_out")
+          .collect().map(r => (r.getTimestamp(0).toString, r.getLong(1))).toMap
+        // 00:00 window emitted with n=2 — the late event did NOT inflate it
+        assert(out.get("2024-01-01 00:00:00.0").contains(2L),
+          s"closed 00:00 window wrong: $out")
+        // the late event's window was already closed; count stays 2 (dropped)
+        assert(!out.contains("2024-01-01 00:00:00.0") ||
+          out("2024-01-01 00:00:00.0") == 2L)
+      } finally spark.catalog.dropTempView("wm_out")
+    }
   }
 
   test("linkTable stages directory-shaped tables so the file stream sees every row (r13)") {
@@ -68,34 +81,37 @@ class StreamingSpec extends AnyFunSuite {
     // ZERO rows at 9x (caught by the first 9x oracle run). linkTable
     // links each part file individually; with no maxFilesPerTrigger the
     // source takes them all in ONE micro-batch.
-    val dir = Files.createTempDirectory("graft_link_src_").toString
-    spark.range(100).select(col("id").as("doc_id"))
-      .repartition(4) // several part files, like a ScaleUp table
-      .write.parquet(s"$dir/documents.parquet")
-    val watch = Files.createTempDirectory("graft_link_watch_")
-    graft.streaming.StreamStage.linkTable(watch, dir, "documents")
-    assert(java.nio.file.Files.list(watch).count() >= 4)
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val stream = spark.readStream.schema(schema).parquet(watch.toString)
-      .groupBy().agg(count(lit(1)).as("n"), sum($"doc_id").as("s"))
-    val sink = "graft_link_sink"
-    val q = stream.writeStream.outputMode("complete")
-      .format("memory").queryName(sink).start()
-    try q.processAllAvailable() finally q.stop()
-    val row = spark.table(sink).head()
-    assert(row.getLong(0) == 100L && row.getLong(1) == 4950L)
-    spark.catalog.dropTempView(sink)
-    // and the single-file layout (driver-generated SFs) still stages
-    val one = Files.createTempDirectory("graft_link_one_").toString
-    spark.range(5).select(col("id").as("doc_id")).coalesce(1)
-      .write.parquet(s"$one/stage")
-    val f = new java.io.File(s"$one/stage").listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    java.nio.file.Files.move(f.toPath,
-      java.nio.file.Paths.get(s"$one/documents.parquet"))
-    val watch2 = Files.createTempDirectory("graft_link_watch2_")
-    graft.streaming.StreamStage.linkTable(watch2, one, "documents")
-    assert(spark.read.parquet(watch2.toString).count() == 5)
+    withTempDirs { temp =>
+      val dir = temp("graft_link_src_").toString
+      spark.range(100).select(col("id").as("doc_id"))
+        .repartition(4) // several part files, like a ScaleUp table
+        .write.parquet(s"$dir/documents.parquet")
+      val watch = temp("graft_link_watch_")
+      graft.streaming.StreamStage.linkTable(watch, dir, "documents")
+      assert(java.nio.file.Files.list(watch).count() >= 4)
+      val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+      val stream = spark.readStream.schema(schema).parquet(watch.toString)
+        .groupBy().agg(count(lit(1)).as("n"), sum($"doc_id").as("s"))
+      val sink = "graft_link_sink"
+      val q = stream.writeStream.outputMode("complete")
+        .format("memory").queryName(sink).start()
+      try {
+        try q.processAllAvailable() finally q.stop()
+        val row = spark.table(sink).head()
+        assert(row.getLong(0) == 100L && row.getLong(1) == 4950L)
+      } finally spark.catalog.dropTempView(sink)
+      // and the single-file layout (driver-generated SFs) still stages
+      val one = temp("graft_link_one_").toString
+      spark.range(5).select(col("id").as("doc_id")).coalesce(1)
+        .write.parquet(s"$one/stage")
+      val f = new java.io.File(s"$one/stage").listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      java.nio.file.Files.move(f.toPath,
+        java.nio.file.Paths.get(s"$one/documents.parquet"))
+      val watch2 = temp("graft_link_watch2_")
+      graft.streaming.StreamStage.linkTable(watch2, one, "documents")
+      assert(spark.read.parquet(watch2.toString).count() == 5)
+    }
   }
 
   test("linkTable from a relative directory links to files that exist") {

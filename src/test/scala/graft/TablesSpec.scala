@@ -3,6 +3,8 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,8 +14,10 @@ import graft.core.Tables
   * `events.ts` in two layouts across rounds; Tables must adapt to both and
   * fail LOUDLY — one assertion naming the accepted layouts — on anything
   * else, instead of ten scattered analysis exceptions downstream. Also the
-  * inferred-schema memo: a repeated load of unchanged files runs no job,
-  * and a rewrite or a parquet conf flip infers afresh. */
+  * relation memo: a repeated load of unchanged files runs no job and
+  * shares the first load's relation under fresh expression ids; a rewrite
+  * or a parquet conf flip resolves afresh, and another session never gets
+  * this one's relation. */
 class TablesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -43,6 +47,11 @@ class TablesSpec extends AnyFunSuite {
     }
     jobs.get() - j0
   }
+
+  private def relationOf(df: DataFrame): HadoopFsRelation =
+    df.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(h: HadoopFsRelation, _, _, _, _) => h
+    }.getOrElse(fail(s"no file relation in ${df.queryExecution.analyzed}"))
 
   private def tempDir(): String =
     Files.createTempDirectory("graft_tables_memo_").toString
@@ -178,6 +187,65 @@ class TablesSpec extends AnyFunSuite {
       stores.foreach(s => assert(s === expected))
       assert(expected === Tables.all.map(t =>
         spark.read.parquet(s"$dir/$t.parquet").schema))
+    } finally Tables.deleteTree(new java.io.File(dir))
+  }
+
+  test("two loads of an unchanged table share one relation under fresh expression ids") {
+    val dir = tempDir()
+    try {
+      spark.range(10).write.parquet(s"$dir/t.parquet")
+      val loads = Seq.fill(3)(Tables.load(spark, dir, "t"))
+      val relations = loads.map(relationOf)
+      assert(relations.forall(_ eq relations.head))
+      val ids = loads.map(_.queryExecution.analyzed.output.map(_.exprId).toSet)
+      for (i <- ids.indices; j <- ids.indices if i < j)
+        assert(ids(i).intersect(ids(j)).isEmpty, s"loads $i and $j")
+      val Seq(a, b, c) = loads
+      assert(a.join(b, a("id") === b("id")).count() === 10)
+      assert(b.join(c, b("id") === c("id") + 1).count() === 9)
+    } finally Tables.deleteTree(new java.io.File(dir))
+  }
+
+  test("a rewrite or a parquet conf flip gives the next load a new relation") {
+    val dir = tempDir()
+    // a conf whose name matches the stamp's `parquet` filter and which
+    // changes nothing these reads return
+    val key = "spark.sql.parquet.recordLevelFilter.enabled"
+    val prev = spark.conf.getOption(key)
+    try {
+      spark.range(3).write.parquet(s"$dir/t.parquet")
+      val r0 = relationOf(Tables.load(spark, dir, "t"))
+      assert(relationOf(Tables.load(spark, dir, "t")) eq r0)
+      spark.range(5).write.mode("overwrite").parquet(s"$dir/t.parquet")
+      val rewritten = Tables.load(spark, dir, "t")
+      val r1 = relationOf(rewritten)
+      assert(r1 ne r0)
+      assert(rewritten.count() === 5)
+      assert(relationOf(Tables.load(spark, dir, "t")) eq r1)
+      spark.conf.set(key, (!prev.contains("true")).toString)
+      val r2 = relationOf(Tables.load(spark, dir, "t"))
+      assert(r2 ne r1)
+      assert(relationOf(Tables.load(spark, dir, "t")) eq r2)
+    } finally {
+      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      Tables.deleteTree(new java.io.File(dir))
+    }
+  }
+
+  test("a memo entry serves only the session that resolved it") {
+    val dir = tempDir()
+    try {
+      spark.range(4).write.parquet(s"$dir/t.parquet")
+      assert(relationOf(Tables.load(spark, dir, "t")).sparkSession eq spark)
+      val other = spark.newSession()
+      val a = Tables.load(other, dir, "t")
+      assert(relationOf(a).sparkSession eq other)
+      assert(relationOf(Tables.load(other, dir, "t")) eq relationOf(a))
+      // and back: the first session resolves its own again
+      val b = Tables.load(spark, dir, "t")
+      assert(relationOf(b).sparkSession eq spark)
+      assert(relationOf(Tables.load(spark, dir, "t")) eq relationOf(b))
+      assert(a.count() === 4 && b.count() === 4)
     } finally Tables.deleteTree(new java.io.File(dir))
   }
 }
