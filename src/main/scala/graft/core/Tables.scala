@@ -55,15 +55,20 @@ object Tables {
     * relation, whose new expression ids let two loads of one table join
     * each other. A miss resolves once, exactly as an unmemoized read. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    // Legacy-layout support: TIMESTAMP(NANOS) footers are rejected by the
+    // reader unless surfaced as epoch-nanos longs (no-op for µs files).
+    // GraftSession pins it at build time; a session built elsewhere gets it
+    // on its first load of any table, before the stamp is taken. The conf
+    // is part of every table's stamp, so setting it only at the first
+    // `events` load would make each table loaded before that resolve
+    // again. Only an `events` load overrides an explicit "false". Writing
+    // only when needed keeps loads from issuing a session-global conf write
+    // per request.
+    val nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    val setTo = spark.conf.getAll.get(nanos)
+    if (!setTo.contains("true") && (name == "events" || setTo.isEmpty))
+      spark.conf.set(nanos, "true")
     if (name == "events") {
-      // Legacy-layout support: TIMESTAMP(NANOS) footers are rejected by the
-      // reader unless surfaced as epoch-nanos longs (no-op for µs files).
-      // GraftSession pins it at build time; a session built elsewhere gets
-      // it on its first events load. Writing only when it differs keeps
-      // loads from issuing a session-global conf write per request.
-      val nanos = "spark.sql.legacy.parquet.nanosAsLong"
-      if (!spark.conf.getOption(nanos).contains("true"))
-        spark.conf.set(nanos, "true")
       // Event-time derivations (the NTZ→LTZ cast in tsCol, date_trunc /
       // window bucketing) must agree with the UTC DuckDB oracle.
       // GraftSession pins spark.sql.session.timeZone=UTC; a session

@@ -6,7 +6,7 @@ import java.util.concurrent.{ExecutorService, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
@@ -23,10 +23,21 @@ import graft.core.Tables
   *     (`SparkEntry.queries`) served at this server's data dir
   *   - `GET /`                           — route listing
   *
-  * Results stream back as a JSON array of row objects (`Dataset.toJSON`,
-  * computed distributed; only the response rows are collected, capped at
-  * `maxRows`). Queries on a warm SparkSession are concurrent-safe, so the
-  * handler pool serves parallel requests.
+  * Results come back as a JSON array of row objects, rendered by
+  * `QueryServer.render`: each row becomes one `to_json` string inside the
+  * query's own plan, and only the first `maxRows` are collected. Queries
+  * on a warm SparkSession are concurrent-safe, so the handler pool serves
+  * parallel requests.
+  *
+  * Replies leave without a delayed-ACK stall: `start()` turns on the JDK
+  * server's `sun.net.httpserver.nodelay` (TCP_NODELAY on accepted
+  * sockets) unless the process already set it. The JDK reads that
+  * property once per JVM, when its server configuration class is first
+  * loaded, so this is a one-time, process-wide setting that holds for
+  * every `com.sun.net.httpserver` server in the process. Without it,
+  * Nagle's algorithm holds each reply's body, sent after the flushed
+  * headers, until the client's delayed ACK, about 40 ms later, on every
+  * keep-alive connection.
   *
   * A request loads only the tables it reads: `/run` and `/runc` bind the
   * store tables their program names, and `Tables.load` answers a table
@@ -44,6 +55,8 @@ final class QueryServer(spark: SparkSession, dataDir: String,
     * exposing it beyond localhost is an explicit opt-in (host = "0.0.0.0").
     */
   def start(): Int = {
+    // only before the first HttpServer.create in the JVM has any effect
+    System.getProperties.putIfAbsent("sun.net.httpserver.nodelay", "true")
     server = HttpServer.create(new InetSocketAddress(host, port), 0)
     server.createContext("/", (ex: HttpExchange) => handle(ex))
     // HttpServer.stop never shuts down an executor it was handed, so the
@@ -94,7 +107,8 @@ final class QueryServer(spark: SparkSession, dataDir: String,
       body: String): Option[String] =
     path.split("/").filter(_.nonEmpty) match {
       case Array("runc") if method == "POST" => Some(runCommand(body))
-      case parts => frame(method, parts, body).map(toJsonArray)
+      case parts =>
+        frame(method, parts, body).map(QueryServer.render(_, maxRows))
     }
 
   /** The rows a known route other than `/runc` answers with. */
@@ -152,9 +166,9 @@ final class QueryServer(spark: SparkSession, dataDir: String,
     // with no `result` or a failing render would otherwise leave dead
     // cached RDDs in a long-lived server
     try {
-      toJsonArray(end.store.getOrElse("result",
+      QueryServer.render(end.store.getOrElse("result",
         throw new IllegalArgumentException(
-          "program must assign a table to `result`")))
+          "program must assign a table to `result`")), maxRows)
     } finally {
       end.indexes.values.foreach(_.unpersist())
       end.compoIndexes.values.foreach(_.unpersist())
@@ -215,9 +229,6 @@ final class QueryServer(spark: SparkSession, dataDir: String,
       .toDF("route")
   }
 
-  private def toJsonArray(df: DataFrame): String =
-    df.limit(maxRows).toJSON.collect().mkString("[", ",", "]")
-
   private def quote(s: String): String =
     "\"" + s.flatMap {
       case '"' => "\\\""
@@ -238,6 +249,20 @@ final class QueryServer(spark: SparkSession, dataDir: String,
     def unapply(s: String): Option[Long] =
       try Some(s.toLong) catch { case _: NumberFormatException => None }
   }
+}
+
+object QueryServer {
+  /** The JSON array of `df`'s first `maxRows` rows, one object per row,
+    * byte for byte what `df.limit(maxRows).toJSON` collects (the one known
+    * difference: a map whose keys are structs, which no registered query
+    * returns). The limit is the root of the plan, so Spark collects it
+    * with `CollectLimitExec` (a sorted frame: `TakeOrderedAndProjectExec`)
+    * and no shuffle. Under `toJSON` the limit sits below its object
+    * operators, and for an unsorted frame Spark plans a local limit, a
+    * single-partition exchange and a global limit: one more job. */
+  def render(df: DataFrame, maxRows: Int): String =
+    df.select(to_json(struct(col("*")))).limit(maxRows)
+      .as(Encoders.STRING).collect().mkString("[", ",", "]")
 }
 
 /** `startApp` (Lib.hs:30-32): serve until killed. Args: dataDir [port]. */

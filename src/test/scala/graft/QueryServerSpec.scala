@@ -20,7 +20,9 @@ class QueryServerSpec extends AnyFunSuite {
     val code = conn.getResponseCode
     val stream = if (code >= 400) conn.getErrorStream else conn.getInputStream
     val body = Source.fromInputStream(stream, "UTF-8").mkString
-    conn.disconnect()
+    // closing the fully read reply, not disconnect(), returns the socket
+    // to the keep-alive cache for the next request, as a client would
+    stream.close()
     (code, body)
   }
 
@@ -68,7 +70,7 @@ class QueryServerSpec extends AnyFunSuite {
     val code = conn.getResponseCode
     val stream = if (code >= 400) conn.getErrorStream else conn.getInputStream
     val out = Source.fromInputStream(stream, "UTF-8").mkString
-    conn.disconnect()
+    stream.close()
     (code, out)
   }
 
@@ -201,12 +203,13 @@ class QueryServerSpec extends AnyFunSuite {
     }
   }
 
-  test("POST /runc renders its reply with one action") {
-    // the reply is rendered straight from `result`: one render job after
-    // the two query-stage jobs of its plan. Collecting the rows first,
-    // rebuilding a DataFrame from them and rendering that cost one job more
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    // the engine frame of each job's final stage, for the failure message
+  /** The call site of every job one `request` starts on the warm server,
+    * and its reply. A first send fills the relation memo and the codegen
+    * cache. JobStart reaches listeners asynchronously, so the count is
+    * read once it has been still for 300 ms, before and after the
+    * counted send (JobCountSpec's settle). */
+  private def jobsOf(request: => (Int, String)): (Seq[String], (Int, String)) = {
+    // the engine frame of each job's final stage, for failure messages
     val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -214,38 +217,93 @@ class QueryServerSpec extends AnyFunSuite {
         val details = js.stageInfos.lastOption.map(_.details).getOrElse("")
         sites.add(details.linesIterator.map(_.trim)
           .find(_.startsWith("graft.")).getOrElse(details.takeWhile(_ != '\n')))
-        jobs.incrementAndGet(); ()
+        ()
       }
     }
-    // JobStart reaches listeners asynchronously: wait until the count has
-    // been still for 300 ms
-    def settle(): Int = {
-      var last = jobs.get()
+    def settle(): Unit = {
+      var last = sites.size
       var still = 0
       while (still < 3) {
         Thread.sleep(100)
-        val now = jobs.get()
+        val now = sites.size
         if (now == last) still += 1 else { still = 0; last = now }
       }
-      last
     }
-    val program = "set result := filter (mut nation) n (n[n_regionkey] == 1)"
     spark.sparkContext.addSparkListener(listener)
-    try withServer { port =>
-      // the first request fills the table-schema memo
-      assert(post(s"http://localhost:$port/runc", program)._1 === 200)
+    try {
+      assert(request._1 === 200)
+      settle()
+      sites.clear()
+      val reply = request
+      settle()
+      (sites.toArray(Array.empty[String]).toSeq, reply)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("POST /runc renders its reply with one action") {
+    // the reply is rendered straight from `result`: the two query-stage
+    // jobs that fill the keyed index Optimize put on nation (its
+    // single-partition shuffle, then the cache) and the render itself.
+    // Collecting the rows first, rebuilding a DataFrame from them and
+    // rendering that cost one job more
+    val program = "set result := filter (mut nation) n (n[n_regionkey] == 1)"
+    withServer { port =>
+      val (sites, (code, body)) =
+        jobsOf(post(s"http://localhost:$port/runc", program))
       val expected = graft.core.Tables.load(spark, TestSpark.sfDir, "nation")
         .filter(org.apache.spark.sql.functions.col("n_regionkey") === 1)
         .count()
-      val j0 = settle()
-      sites.clear()
-      val (code, body) = post(s"http://localhost:$port/runc", program)
-      val started = settle() - j0
       assert(code === 200, body)
       assert(body.split("\"n_regionkey\":1").length - 1 === expected, body)
-      assert(started === 3, s"one /runc request started $started jobs: " +
-        sites.toArray.mkString("; "))
-    } finally spark.sparkContext.removeSparkListener(listener)
+      assert(sites.size === 3, s"one /runc request started " +
+        s"${sites.size} jobs: ${sites.mkString("; ")}")
+    }
+  }
+
+  test("a reply starts only its plan's jobs: no shuffle to render it") {
+    // a `toJSON` render put the limit under its object operators, so Spark
+    // planned a local limit, a single-partition exchange and a global
+    // limit: one more job on every unsorted reply
+    val program =
+      """n <- mut nation;
+        |check(n[n_regionkey] == 0);
+        |ret { key : n[n_nationkey], name : n[n_name] }""".stripMargin
+    withServer { port =>
+      val url = s"http://localhost:$port"
+      for ((route, send, want) <- Seq(
+          ("/get_artist_less_than", () => get(s"$url/get_artist_less_than/40"), 1),
+          // the broadcast of the customer side, then the sorted collect
+          ("/get_album_and_artist", () => get(s"$url/get_album_and_artist/40"), 2),
+          ("POST /run", () => post(s"$url/run", program), 1))) {
+        val (sites, (code, body)) = jobsOf(send())
+        assert(code === 200, body)
+        assert(sites.size === want, s"one $route request started " +
+          s"${sites.size} jobs: ${sites.mkString("; ")}")
+      }
+    }
+  }
+
+  test("replies on a keep-alive connection arrive without a delayed-ACK stall") {
+    // an unknown route starts no Spark job, so its round trip is the
+    // server's alone; with Nagle's algorithm on the accepted socket, the
+    // body waits behind the flushed headers for the client's delayed ACK
+    // (about 40 ms) on every request of a reused connection (`get` and
+    // `post` leave theirs open for the next)
+    withServer { port =>
+      val url = s"http://localhost:$port/no_such_route"
+      for (method <- Seq("GET", "POST")) {
+        val ms = (1 to 20).map { _ =>
+          val t0 = System.nanoTime()
+          val code = if (method == "GET") get(url)._1 else post(url, "skip")._1
+          val took = (System.nanoTime() - t0) / 1e6
+          assert(code === 404)
+          took
+        }.sorted
+        val median = (ms(9) + ms(10)) / 2
+        assert(median < 20.0, s"$method median round trip $median ms: " +
+          ms.map(m => f"$m%.1f").mkString(", "))
+      }
+    }
   }
 
   test("POST /extract returns portable SQL for a surface-syntax program") {

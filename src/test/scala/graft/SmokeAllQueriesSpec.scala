@@ -13,7 +13,11 @@ class SmokeAllQueriesSpec extends AnyFunSuite {
 
   SparkEntry.allQueries.foreach { q =>
     test(s"${q.name} runs at sf0.001") {
-      val n = q.run(spark, TestSpark.sfDir).count()
+      val df = q.run(spark, TestSpark.sfDir)
+      // `/query/{name}` renders this frame; its one difference from
+      // `toJSON` is a struct-keyed map (RenderSpec)
+      assert(!RenderSpec.structKeyedMap(df.schema), df.schema.treeString)
+      val n = df.count()
       // near-dup pair counts are data-dependent and may be 0 at the
       // smallest SF; everything else must produce rows
       val mayBeEmpty = Set("q_dedup_ngram_jaccard", "q_ann_lsh_pairs")

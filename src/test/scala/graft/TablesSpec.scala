@@ -232,6 +232,20 @@ class TablesSpec extends AnyFunSuite {
     }
   }
 
+  test("a session without nanosAsLong gets it on its first load of any table") {
+    // the conf is part of every table's stamp: set only at the first
+    // events load, it would make customer, loaded before, resolve again
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val prev = spark.conf.getAll.get(key)
+    try {
+      spark.conf.unset(key)
+      val c0 = relationOf(Tables.load(spark, TestSpark.sfDir, "customer"))
+      Tables.load(spark, TestSpark.sfDir, "events")
+      assert(relationOf(Tables.load(spark, TestSpark.sfDir, "customer")) eq c0)
+      assert(spark.conf.get(key) === "true")
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("a memo entry serves only the session that resolved it") {
     val dir = tempDir()
     try {
