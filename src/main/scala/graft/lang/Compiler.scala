@@ -60,13 +60,6 @@ object Compiler {
       // Interp.CLetMut performs the physical re-representation at bind
       // time (transf_to_idx under the letmut, OptimizeAnno.v:282-288)
       indexHints: Map[String, Seq[String]] = Map.empty,
-      // Pre-computed table lengths for this compilation subtree: a record
-      // carrying several eager `len(table)` reads (the indexed event-loop's
-      // per-tick shape) costs ONE Spark action instead of one per length —
-      // see batchLengths. Entries carry the identity of every free-var
-      // binding at scan time, so a shadowed rebinding inside the subtree
-      // falls back to the normal eager count instead of serving stale data.
-      lenMemo: List[(Expr, Map[String, AnyRef], Long)] = Nil,
       // BEST-EFFORT variable/store types for reference-order sorting
       // (CanonOrder): populated where a binder's type is synthesizable,
       // consulted at the sort/iteration sites whose natural encoding order
@@ -273,89 +266,6 @@ object Compiler {
           s"$leaked - a correlated table subquery; rewrite as EJoin (or a " +
           "flatmap/if/cons comprehension, which Rewrites.normalize " +
           "recognizes as a join)")
-  }
-
-  /** The identity of every env binding a pre-counted `len` operand reads —
-    * a memo entry is only served when these exact instances are still what
-    * the env resolves (reference identity: rebinding, even to an equal
-    * value, is a miss and the normal eager count runs). */
-  private def lenBindingIds(e: Expr, env: Env): Map[String, AnyRef] =
-    Rewrites.freeVars(e).iterator.map { v =>
-      v -> env.vars.get(v).orNull.asInstanceOf[AnyRef]
-    }.toMap
-
-  private def lenMemoHit(env: Env, e1: Expr): Option[Long] =
-    env.lenMemo.collectFirst {
-      case (k, ids, n) if k == e1 && lenBindingIds(e1, env).forall {
-        case (v, i) => ids.get(v).exists(_ eq i)
-      } => n
-    }
-
-  /** Pre-count every table-valued `len(...)` operand appearing (outside any
-    * local binder that captures its variables) in `exprs`, in ONE Spark
-    * action — a union of tagged single-row counts — and memoize the results
-    * for the subtree. A record like `{ na : len(σ₁ t), nb : len(σ₂ t) }`,
-    * the per-tick shape of the reference's indexed event loops
-    * (fiat2/src/fiat2/Ex_Orders.v:56-67), then costs one driver round-trip
-    * instead of one per length, and the independent counts run their stages
-    * concurrently inside that job. */
-  private def batchLengths(exprs: Seq[Expr], env: Env): Env = {
-    val targets = scala.collection.mutable.LinkedHashSet[Expr]()
-    def scan(e: Expr, bound: Set[String]): Unit = e match {
-      case EUnop(OLength, e0) if (Rewrites.freeVars(e0) & bound).isEmpty =>
-        targets += e0 // closed w.r.t. local binders; countable up front
-      case EUnop(_, a) => scan(a, bound)
-      case EBinop(_, a, b) => scan(a, bound); scan(b, bound)
-      case ETernop(_, a, b, c) =>
-        scan(a, bound); scan(b, bound); scan(c, bound)
-      case EIf(c, t, f) => scan(c, bound); scan(t, bound); scan(f, bound)
-      case ELet(a, x, b) => scan(a, bound); scan(b, bound + x)
-      case ERecord(fs) => fs.foreach(f => scan(f._2, bound))
-      case EAccess(r, _) => scan(r, bound)
-      case EOptMatch(a, n, x, s) =>
-        scan(a, bound); scan(n, bound); scan(s, bound + x)
-      case EDictFold(d, z, k, v, acc, s) =>
-        scan(d, bound); scan(z, bound); scan(s, bound + k + v + acc)
-      case ESort(_, l) => scan(l, bound)
-      case EFilter(_, l, x, p) => scan(l, bound); scan(p, bound + x)
-      case EJoin(_, l1, l2, x, y, p, r) =>
-        scan(l1, bound); scan(l2, bound)
-        scan(p, bound + x + y); scan(r, bound + x + y)
-      case EProj(_, l, x, r) => scan(l, bound); scan(r, bound + x)
-      case EFlatmap(_, a, x, b) => scan(a, bound); scan(b, bound + x)
-      case EFlatmap2(a, b, x1, x2, c) =>
-        scan(a, bound); scan(b, bound); scan(c, bound + x1 + x2)
-      case EFold(l, z, x, acc, s) =>
-        scan(l, bound); scan(z, bound); scan(s, bound + x + acc)
-      case EACFold(_, a) => scan(a, bound)
-      case EACIFold(_, a) => scan(a, bound)
-      case EBagOf(l) => scan(l, bound)
-      case ESetOf(l) => scan(l, bound)
-      case EVar(_) | ELoc(_) | EAtom(_) => ()
-    }
-    exprs.foreach(scan(_, Set.empty))
-    if (targets.size < 2) return env // one length gains nothing from a batch
-    // compile each candidate once; only table-valued operands participate,
-    // and only when there are two or more
-    val tabled = targets.iterator.flatMap { e0 =>
-      try compile(e0, env) match {
-        case TV(df) => Some(e0 -> df)
-        case _ => None
-      } catch { case scala.util.control.NonFatal(_) => None }
-      // a failing operand is skipped; the field's own compile surfaces it
-    }.toList
-    if (tabled.length < 2) env
-    else {
-      val counts = tabled.zipWithIndex
-        .map { case ((_, df), i) =>
-          df.agg(count(lit(1)).as("c")).select(lit(i).as("i"), col("c"))
-        }
-        .reduce(_ union _).collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
-      env.copy(lenMemo = tabled.zipWithIndex.map { case ((e0, _), i) =>
-        (e0, lenBindingIds(e0, env), counts(i))
-      } ::: env.lenMemo)
-    }
   }
 
   /** The Spark type of a fiat2 type. `bigInt` maps `TInt` to the bignum
@@ -1597,15 +1507,10 @@ object Compiler {
       case AUnit => lit(null)
     })
 
-    case EUnop(OLength, e1) => lenMemoHit(env, e1) match {
-      case Some(n) => CV(intCol(lit(n), env)) // pre-counted by batchLengths
-      case None => compile(e1, env) match {
-        case TV(df) => CV(intCol(lit(df.count()), env)) // eager, like the interp
-        case v => CV(intCol(size(asCV(v)).cast("long"), env))
-      }
-    }
-
     case EUnop(op, e1) => (op, compile(e1, env)) match {
+      case (OLength, TV(df)) => // eager, like the interp
+        CV(intCol(lit(df.count()), env))
+      case (OLength, v) => CV(intCol(size(asCV(v)).cast("long"), env))
       case (OWNeg, v) => // wraps at the width's MinValue
         CV(WordOps.forWidth(env.wordWidth).wneg(asCV(v)))
       case (ONeg, v) => CV(if (env.bigInt) BigIntOps.neg(asCV(v))
@@ -1671,9 +1576,8 @@ object Compiler {
       compile(e2, env.bindTyped(x, compile(e1, env), synthLite(e1, env)))
 
     case ERecord(fields) =>
-      val env2 = batchLengths(fields.map(_._2), env)
       CV(Fiat2.record(fields.map { case (n, fe) =>
-        n -> asCV(compile(fe, env2)) }: _*))
+        n -> asCV(compile(fe, env)) }: _*))
 
     case EAccess(r, f) => CV(asCV(compile(r, env))(f))
 

@@ -2,44 +2,35 @@ package graft.lang
 
 import graft.operators.{CompoIndex, DictIndex}
 
-/** AUTOMATIC index introduction — the reference's signature behavior: after
+/** Index introduction — the reference's signature behavior: after
   * `transf_to_idx` (fiat2/src/fiat2/IndexTransf.v:797-803) a table is stored
   * as an index structure and `eq_filter_to_lookup_head`
   * (fiat2/src/fiat2/DictIndexImpl.v:374-389) rewrites a PLAIN
   * `filter(tbl, row.attr == k)` into a dict lookup with no user action.
   *
   * Spark analog: a static pass over the command AST finds tables that are
-  * point-filtered on an attribute inside a `CForeach` body (the shape whose
-  * repeated scans an index amortizes), and re-represents each such table in
-  * the store as a key-hash-partitioned cached DataFrame (`DictIndex.build`).
-  * The program text is untouched — the filters now execute against the
-  * in-memory keyed index (first iteration fills the cache; every later
-  * iteration is a cache-partition point lookup, not a source rescan), which
-  * is exactly the amortization trade the reference proves sound.
+  * point-filtered on an attribute anywhere in the command, and
+  * re-represents each such table in the store as a key-hash-partitioned
+  * cached DataFrame (`DictIndex.build`). The program text is untouched —
+  * the filters now execute against the in-memory keyed index (the first
+  * read fills the cache; every later one is a cache-partition point lookup,
+  * not a source rescan). Like the reference, whose transforms carry proofs
+  * rather than a cost model, this runs unconditionally as one stage of the
+  * `Optimize` pipeline; only the bitmap introduction keeps a loop condition
+  * (see `introduceBitmaps`).
   */
 object IndexTransf {
   import Lang._
   import Rewrites.children
 
-  /** Run a command with automatic index introduction. Expressions are
-    * normalized first so comprehension-written filters (`x <- t; check(p);
-    * ret x`) are recognized through their structured EFilter form. */
-  def runIndexed(c: Command, env: Compiler.Env): Compiler.Env = {
-    val (rewritten, indexed) = transform(Rewrites.normalizeCommand(c), env)
-    Interp.run(rewritten, indexed)
-  }
-
-  /** With `requireLoop` (the default) only filters under a `CForeach` are
-    * indexed — the cost model for AUTO mode; `requireLoop = false` matches
-    * the reference's unconditional `transf_to_idx` (used by `Optimize`). */
-  def transform(c: Command, env: Compiler.Env): (Command, Compiler.Env) =
-    transform(c, env, requireLoop = true)
-
   /** Store-name a composed-index component under. `@` can't appear in a
     * surface identifier, so components never collide with user tables. */
   def componentName(table: String, attr: String): String = s"$table@$attr"
 
-  /** Introduce indexes for every loop-point-filtered store table.
+  /** Introduce indexes for every point-filtered store table. The command's
+    * expressions should be normalized first (`Optimize` does), so
+    * comprehension-written filters (`x <- t; check(p); ret x`) are
+    * recognized through their structured EFilter form.
     *
     * One filtered attribute → the table itself is re-represented as its
     * keyed index (program text untouched). Several filtered attributes →
@@ -50,9 +41,8 @@ object IndexTransf {
     * substitution — the command is rewritten so each point filter reads
     * the component keyed on ITS attribute.
     */
-  def transform(c: Command, env: Compiler.Env,
-      requireLoop: Boolean): (Command, Compiler.Env) = {
-    val byTable = loopEqFilters(c, inLoop = !requireLoop).distinct
+  def transform(c: Command, env: Compiler.Env): (Command, Compiler.Env) = {
+    val byTable = eqFilters(c).distinct
       .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     // Composed components are routed to by NAME. A cons-chain insert is
     // maintained: the interpreter updates EVERY component from the one
@@ -88,13 +78,13 @@ object IndexTransf {
       }
     }
     val bitmapped = introduceBitmaps(dicted._1, dicted._2)
-    transformScoped(bitmapped._1, bitmapped._2, requireLoop)
+    transformScoped(bitmapped._1, bitmapped._2)
   }
 
   /** SCOPED index introduction — the reference applies `transf_to_idx`
     * UNDER each CLetMut (`apply_below_n_letmuts`,
     * fiat2/src/fiat2/OptimizeAnno.v:282-288), re-representing the scoped
-    * table itself. A CLetMut-bound table whose body loop-point-filters it
+    * table itself. A CLetMut-bound table whose body point-filters it
     * gets an index annotation (`Env.indexHints` — the analog of the
     * reference's per-program index_choices, Ex_Orders.v:56-67); Interp
     * builds the physical keyed representation when the cell binds, and
@@ -107,19 +97,19 @@ object IndexTransf {
     * annotated — a name bound by two different CLetMuts would make one
     * hint apply to both scopes.
     */
-  def transformScoped(c: Command, env: Compiler.Env,
-      requireLoop: Boolean): (Command, Compiler.Env) = {
+  def transformScoped(c: Command,
+      env: Compiler.Env): (Command, Compiler.Env) = {
     val counts = letMutBindCounts(c)
     def eligible(n: String) =
       counts.getOrElse(n, 0) == 1 && !env.store.contains(n)
     var hints = Map.empty[String, Seq[String]]
-    def go(c: Command, inLoop: Boolean): Command = c match {
+    def go(c: Command): Command = c match {
       case CSkip => CSkip
-      case CSeq(a, b) => CSeq(go(a, inLoop), go(b, inLoop))
-      case CLet(e, x, b) => CLet(e, x, go(b, inLoop))
+      case CSeq(a, b) => CSeq(go(a), go(b))
+      case CLet(e, x, b) => CLet(e, x, go(b))
       case CLetMut(e, x, body) =>
-        val body2 = go(body, inLoop)
-        lazy val attrs = loopEqFilters(body2, inLoop = inLoop || !requireLoop)
+        val body2 = go(body)
+        lazy val attrs = eqFilters(body2)
           .collect { case (`x`, a) => a }.distinct
         if (!eligible(x)) CLetMut(e, x, body2)
         else attrs match {
@@ -132,10 +122,10 @@ object IndexTransf {
           case _ => CLetMut(e, x, body2) // non-chain writes: can't compose
         }
       case CAssign(x, e) => CAssign(x, e)
-      case CIf(e, a, b) => CIf(e, go(a, inLoop), go(b, inLoop))
-      case CForeach(e, x, b) => CForeach(e, x, go(b, inLoop = true))
+      case CIf(e, a, b) => CIf(e, go(a), go(b))
+      case CForeach(e, x, b) => CForeach(e, x, go(b))
     }
-    val rewritten = go(c, inLoop = !requireLoop)
+    val rewritten = go(c)
     (rewritten, env.copy(indexHints = env.indexHints ++ hints))
   }
 
@@ -178,9 +168,9 @@ object IndexTransf {
     * reference maintains bitmaps through inserts, cons_to_bitmap_update_head
     * BitmapIndex.v:650-665 — here a write simply downgrades to no bitmap).
     *
-    * Bitmaps are LOOP-ONLY in every mode, including the unconditional
-    * optimizer pipeline: unlike the dict/compo/scoped transforms — which
-    * re-KEY existing data — a bitmap is a new materialized artifact whose
+    * Bitmaps are LOOP-ONLY, the one loop condition in the pipeline: unlike
+    * the dict/compo/scoped transforms — which re-KEY existing data and run
+    * unconditionally — a bitmap is a new materialized artifact whose
     * build costs exactly one full predicate evaluation, so introducing it
     * for a one-shot filter (e.g. a conjunct the pushdown just exposed on
     * a join input) is a strict loss.
@@ -279,11 +269,6 @@ object IndexTransf {
     case CForeach(_, _, b) => nonChainMutatedCells(b)
   }
 
-  /** Back-compat store-only view of `transform` (single-attribute tables;
-    * composed tables additionally need the command from `transform`). */
-  def indexStore(c: Command, env: Compiler.Env): Compiler.Env =
-    transform(c, env)._2
-
   /** A store read in filter-source position — transparent through the
     * `EBagOf` wrappers `CollectionTransf.annotate` introduces (a table IS
     * its bag; `ESetOf` is NOT transparent, dedup changes the rows). */
@@ -310,27 +295,19 @@ object IndexTransf {
     })
 
   /** (table, attr) pairs appearing as `filter(ELoc(table), x => x.attr == k)`
-    * with the filter nested inside at least one CForeach body. */
-  private def loopEqFilters(c: Command, inLoop: Boolean): Seq[(String, String)] =
-    c match {
-      case CSkip => Nil
-      case CSeq(a, b) => loopEqFilters(a, inLoop) ++ loopEqFilters(b, inLoop)
-      case CLet(e, _, b) => eqFilters(e, inLoop) ++ loopEqFilters(b, inLoop)
-      case CLetMut(e, _, b) => eqFilters(e, inLoop) ++ loopEqFilters(b, inLoop)
-      case CAssign(_, e) => eqFilters(e, inLoop)
-      case CIf(e, a, b) =>
-        eqFilters(e, inLoop) ++ loopEqFilters(a, inLoop) ++ loopEqFilters(b, inLoop)
-      case CForeach(e, _, b) =>
-        eqFilters(e, inLoop) ++ loopEqFilters(b, inLoop = true)
-    }
+    * anywhere in the command. */
+  private def eqFilters(c: Command): Seq[(String, String)] = {
+    val found = Seq.newBuilder[(String, String)]
+    Rewrites.mapExprs(c) { e => found ++= eqFilters(e); e }
+    found.result()
+  }
 
-  private def eqFilters(e: Expr, inLoop: Boolean): Seq[(String, String)] = {
+  private def eqFilters(e: Expr): Seq[(String, String)] = {
     val here = e match {
-      case EFilter(_, SrcLoc(t), x, p) if inLoop =>
-        eqAttr(x, p).map(t -> _).toSeq
+      case EFilter(_, SrcLoc(t), x, p) => eqAttr(x, p).map(t -> _).toSeq
       case _ => Nil
     }
-    here ++ children(e).flatMap(eqFilters(_, inLoop))
+    here ++ children(e).flatMap(eqFilters)
   }
 
   /** `x.attr == k` or `k == x.attr`, k not mentioning x (a correlated k

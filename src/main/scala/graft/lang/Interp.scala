@@ -15,6 +15,14 @@ object Interp {
   import Lang._
   import Compiler._
 
+  /** `keys` of `after` put back to what they were in `before` (removed
+    * where `before` had none) — a scoped binder's restore on leaving. */
+  private def restoreKeys[V](after: Map[String, V], before: Map[String, V],
+      keys: Seq[String]): Map[String, V] =
+    keys.foldLeft(after) { (acc, k) =>
+      before.get(k).fold(acc - k)(v => acc + (k -> v))
+    }
+
   /** Run a command, returning the final store. */
   def run(c: Command, env: Env): Env = c match {
     case CSkip => env
@@ -34,13 +42,9 @@ object Interp {
         // this engine); everything else CV is a SCALAR cell
         case CV(c) if !isArrayTyped(env, c) =>
           // SCALAR cell (reference Ex_Survey.v:44-49)
-          val saved = env.scalars.get(x)
           val after = run(body,
             env.copy(scalars = env.scalars + (x -> folded(env, c))))
-          saved match {
-            case Some(old) => after.copy(scalars = after.scalars + (x -> old))
-            case None => after.copy(scalars = after.scalars - x)
-          }
+          after.copy(scalars = restoreKeys(after.scalars, env.scalars, Seq(x)))
         case tv => // table cell
           // shadow a same-named outer SCALAR cell too: ELoc resolution and
           // CAssign both consult env.scalars first, so leaving it bound would
@@ -53,10 +57,6 @@ object Interp {
           val df = toDF(tv, env)
           val hintAttrs = env.indexHints.getOrElse(x, Seq.empty)
           val compNames = hintAttrs.map(IndexTransf.componentName(x, _))
-          val savedStore = (x +: compNames).map(n => n -> env.store.get(n))
-          val savedScalar = env.scalars.get(x)
-          val savedIdx = env.indexes.get(x)
-          val savedCompo = env.compoIndexes.get(x)
           val cleared = env.copy(scalars = env.scalars - x,
             indexes = env.indexes - x, compoIndexes = env.compoIndexes - x)
           val bound = hintAttrs match {
@@ -92,28 +92,15 @@ object Interp {
               e.compoIndexes.get(x).foreach(_.unpersist())
             }
           }
-          val restored = savedStore.foldLeft(after) { case (acc, (n, old)) =>
-            old match {
-              case Some(d) => acc.copy(store = acc.store + (n -> d))
-              case None => acc.copy(store = acc.store - n)
-            }
-          }
-          val restored2 = savedScalar match {
-            case Some(old) =>
-              restored.copy(scalars = restored.scalars + (x -> old))
-            case None => restored.copy(scalars = restored.scalars - x)
-          }
-          val restored3 = savedIdx match {
-            case Some(idx) =>
-              restored2.copy(indexes = restored2.indexes + (x -> idx))
-            case None => restored2.copy(indexes = restored2.indexes - x)
-          }
-          savedCompo match {
-            case Some(ci) => restored3.copy(
-              compoIndexes = restored3.compoIndexes + (x -> ci))
-            case None => restored3.copy(
-              compoIndexes = restored3.compoIndexes - x)
-          }
+          // every namespace the table cell bound: its store entry and
+          // composed components, and the scalar / index / composed-index
+          // entries it shadowed
+          after.copy(
+            store = restoreKeys(after.store, env.store, x +: compNames),
+            scalars = restoreKeys(after.scalars, env.scalars, Seq(x)),
+            indexes = restoreKeys(after.indexes, env.indexes, Seq(x)),
+            compoIndexes =
+              restoreKeys(after.compoIndexes, env.compoIndexes, Seq(x)))
       }
 
     case CAssign(x, e) =>

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.functions.BigIntOps
 
-/** AUTOMATIC incremental aggregate maintenance — the reference's SumAgg /
+/** Incremental aggregate maintenance — the reference's SumAgg /
   * MinAgg materialized-view transforms (`sum_to_agg_lookup_head` +
   * `cons_to_add_head`, fiat2/src/fiat2/SumAgg.v:150-155;
   * `min_to_agg_lookup_head` + `cons_to_min_head`, fiat2/src/fiat2/MinAgg.v;
@@ -27,23 +27,15 @@ import graft.functions.BigIntOps
   * recognized through the `EBagOf`/`ESetOf` wrappers
   * `CollectionTransf.annotate` introduces — bag conversion preserves sums
   * and mins, set conversion preserves mins.
+  *
+  * Like the reference, whose transforms carry proofs rather than a cost
+  * model, every qualifying read is maintained wherever it sits (in a loop
+  * or not); both entry points run as stages of the one `Optimize`
+  * pipeline.
   */
 object IvmTransf {
   import Lang._
   import Compiler._
-
-  /** Run a command with automatic aggregate maintenance. With
-    * `requireLoop` (the default) only aggregate reads under a `CForeach`
-    * are maintained — the cost model for AUTO mode, where a one-shot read
-    * is cheaper re-aggregated; `requireLoop = false` is the reference's
-    * own unconditional behavior (its transforms have proofs, not cost
-    * models), used by `Optimize`. */
-  def runIncremental(c: Command, env: Env,
-      requireLoop: Boolean = true): Env = {
-    val (rewritten, primed) =
-      transform(Rewrites.normalizeCommand(c), env, requireLoop)
-    Interp.run(rewritten, primed)
-  }
 
   def cellName(table: String, attr: String): String = s"$table@sum@$attr"
   def minCellName(table: String, attr: String): String = s"$table@min@$attr"
@@ -118,13 +110,10 @@ object IvmTransf {
   }
 
   /** Rewrite + prime the scalar store for every (table, attr, agg) that is
-    * both read and cons-written (inside a loop, unless `requireLoop` is
-    * off). */
-  def transform(c: Command, env: Env,
-      requireLoop: Boolean = true): (Command, Env) = {
-    val inLoop0 = !requireLoop
-    val reads = collectReads(c, inLoop0).distinct
-    val written = consWrittenTables(c, inLoop0).toSet
+    * both read and cons-written anywhere in the command. */
+  def transform(c: Command, env: Env): (Command, Env) = {
+    val reads = collectReads(c).distinct
+    val written = consWrittenTables(c).toSet
     // soundness: only maintain a cell when EVERY write to t is the
     // recognized cons-chain shape (with rows not reading t) and no CLetMut
     // re-binds t — any other write would leave the cell stale
@@ -175,15 +164,14 @@ object IvmTransf {
     * transform, no store priming or Spark job needed, because an empty
     * table primes to sum = 0 / min = None. Scoping, shadowing, and cell
     * lifetime all fall out of the interpreter's own CLetMut semantics. */
-  def transformScoped(c: Command, requireLoop: Boolean = true): Command = {
-    val inLoop0 = !requireLoop
+  def transformScoped(c: Command): Command = {
     def go(c: Command): Command = c match {
       case CLetMut(init @ EAtom(ANil(rt: TRecord)), t, body0) =>
         val body = go(body0)
         val attrTy = rt.fields.toMap
-        val written = consWrittenTables(body, inLoop0).toSet
+        val written = consWrittenTables(body).toSet
         val unsafe = unsafeTables(body)
-        val maintained = collectReads(body, inLoop0).distinct.filter {
+        val maintained = collectReads(body).distinct.filter {
           case (t2, a, agg) => t2 == t && written.contains(t) &&
             !unsafe.contains(t) && (agg == MCount || attrTy.contains(a))
         }
@@ -245,32 +233,16 @@ object IvmTransf {
     go(c)
   }
 
-  private def collectReads(c: Command,
-      inLoop: Boolean): Seq[(String, String, MAgg)] =
-    c match {
-      case CSkip => Nil
-      case CSeq(a, b) => collectReads(a, inLoop) ++ collectReads(b, inLoop)
-      case CLet(e, _, b) => readsIn(e, inLoop) ++ collectReads(b, inLoop)
-      case CLetMut(e, _, b) => readsIn(e, inLoop) ++ collectReads(b, inLoop)
-      case CAssign(_, e) => readsIn(e, inLoop)
-      case CIf(e, a, b) => readsIn(e, inLoop) ++
-        collectReads(a, inLoop) ++ collectReads(b, inLoop)
-      case CForeach(e, _, b) =>
-        readsIn(e, inLoop) ++ collectReads(b, inLoop = true)
-    }
-
-  private def readsIn(e: Expr, inLoop: Boolean): Seq[(String, String, MAgg)] =
-    if (!inLoop) Nil
-    else {
-      var found = List.empty[(String, String, MAgg)]
-      Rewrites.foldExpr(e) {
-        case s @ SumRead(t, a) => found ::= ((t, a, MSum)); s
-        case s @ MinRead(t, a) => found ::= ((t, a, MMin)); s
-        case s @ CountRead(t) => found ::= ((t, "*", MCount)); s
-        case other => other
-      }
-      found.reverse
-    }
+  private def collectReads(c: Command): Seq[(String, String, MAgg)] = {
+    var found = List.empty[(String, String, MAgg)]
+    Rewrites.mapExprs(c)(e => Rewrites.foldExpr(e) {
+      case s @ SumRead(t, a) => found ::= ((t, a, MSum)); s
+      case s @ MinRead(t, a) => found ::= ((t, a, MMin)); s
+      case s @ CountRead(t) => found ::= ((t, "*", MCount)); s
+      case other => other
+    })
+    found.reverse
+  }
 
   private def mentionsLoc(e: Expr, t: String): Boolean = {
     var found = false
@@ -301,17 +273,14 @@ object IvmTransf {
     case CForeach(_, _, b) => unsafeTables(b)
   }
 
-  private def consWrittenTables(c: Command, inLoop: Boolean): Seq[String] =
-    c match {
-      case CSkip => Nil
-      case CSeq(a, b) =>
-        consWrittenTables(a, inLoop) ++ consWrittenTables(b, inLoop)
-      case CLet(_, _, b) => consWrittenTables(b, inLoop)
-      case CLetMut(_, _, b) => consWrittenTables(b, inLoop)
-      case CAssign(t, ConsChain(_, t2)) if t == t2 && inLoop => Seq(t)
-      case CAssign(_, _) => Nil
-      case CIf(_, a, b) =>
-        consWrittenTables(a, inLoop) ++ consWrittenTables(b, inLoop)
-      case CForeach(_, _, b) => consWrittenTables(b, inLoop = true)
-    }
+  private def consWrittenTables(c: Command): Seq[String] = c match {
+    case CSkip => Nil
+    case CSeq(a, b) => consWrittenTables(a) ++ consWrittenTables(b)
+    case CLet(_, _, b) => consWrittenTables(b)
+    case CLetMut(_, _, b) => consWrittenTables(b)
+    case CAssign(t, ConsChain(_, t2)) if t == t2 => Seq(t)
+    case CAssign(_, _) => Nil
+    case CIf(_, a, b) => consWrittenTables(a) ++ consWrittenTables(b)
+    case CForeach(_, _, b) => consWrittenTables(b)
+  }
 }

@@ -949,7 +949,7 @@ object LangQueries {
 
     // AUTOMATIC index use (fiat2/src/fiat2/IndexTransf.v:797-803 +
     // DictIndexImpl.v:374-389): the SOURCE is a plain filter loop — no index
-    // is mentioned anywhere — but `IndexTransf.runIndexed` statically
+    // is mentioned anywhere — but `Optimize`'s IndexTransf stage statically
     // recognizes the repeated `filter(orders, o.o_custkey == k)` point
     // filters inside the loop body and transparently re-represents
     // `orders` as a key-hash-partitioned cached index, so iterations 2..n
@@ -971,7 +971,7 @@ object LangQueries {
         val orders = Tables.load(s, dir, "orders")
           .select(col("o_orderkey"), col("o_custkey"))
         val env = Env(Map.empty, Map("orders" -> orders), s)
-        IndexTransf.runIndexed(prog, env).store("result").orderBy("k")
+        Optimize.run(prog, env).store("result").orderBy("k")
       }
     },
 
@@ -1032,7 +1032,7 @@ object LangQueries {
           .filter(col("o_custkey") < 2)
           .select(col("o_orderkey").as("v"))
         val env = Env(Map.empty, Map("t" -> t), s)
-        IvmTransf.runIncremental(prog, env).store("result").orderBy("k")
+        Optimize.run(prog, env).store("result").orderBy("k")
       }
     },
 
@@ -1278,7 +1278,7 @@ object LangQueries {
         val orders = Tables.load(s, dir, "orders")
           .select(col("o_orderkey"), col("o_custkey"))
         val env = Env(Map.empty, Map("orders" -> orders), s)
-        IndexTransf.runIndexed(prog, env).store("result").orderBy("k")
+        Optimize.run(prog, env).store("result").orderBy("k")
       }
     },
 
@@ -1307,7 +1307,7 @@ object LangQueries {
         val orders = Tables.load(s, dir, "orders")
           .select(col("o_orderkey"), col("o_custkey"))
         val env = Env(Map.empty, Map("orders" -> orders), s)
-        IndexTransf.runIndexed(prog, env).store("result").orderBy("k")
+        Optimize.run(prog, env).store("result").orderBy("k")
       }
     },
 
@@ -1372,8 +1372,7 @@ object LangQueries {
         val orders = Tables.load(s, dir, "orders")
           .select(col("o_orderkey"), col("o_custkey"))
         val env = Env(Map.empty, Map("orders" -> orders), s)
-        val (cmd, idxEnv) = IndexTransf.transform(
-          Rewrites.normalizeCommand(prog), env)
+        val (cmd, idxEnv) = Optimize.transform(prog, env)
         require(idxEnv.indexHints.get("tbl").exists(_.toSet ==
           Set("o_custkey", "o_orderkey")), "scoped binder not annotated")
         var routed = Set.empty[String]
@@ -1449,8 +1448,7 @@ object LangQueries {
         val orders = Tables.load(s, dir, "orders")
           .select(col("o_orderkey"), col("o_custkey"))
         val env = Env(Map.empty, Map("orders" -> orders), s)
-        val (cmd, idxEnv) = IndexTransf.transform(
-          Rewrites.normalizeCommand(prog), env)
+        val (cmd, idxEnv) = Optimize.transform(prog, env)
         require(idxEnv.store.contains("orders@bitmap0"),
           "bitmap cell was not introduced")
         var routed = false

@@ -11,11 +11,12 @@ package graft.lang
   * the reference's order.
   *
   * Like the reference (whose transforms carry proofs, not cost models),
-  * this driver applies the aggregate/index transforms UNCONDITIONALLY —
-  * `requireLoop = false`; the auto-mode entry points (`IvmTransf
-  * .runIncremental`, `IndexTransf.runIndexed`) keep the loop-only cost
-  * guard. Filter pushdown — `filter_pushdown_transf` in the reference
-  * pipeline — is deliberately absent: the compiled plan is declarative and
+  * this driver applies the aggregate/index transforms UNCONDITIONALLY, and
+  * it is the only path that runs them. The bitmap introduction alone keeps
+  * a loop condition, because a bitmap is a new artifact rather than a
+  * re-keying of existing data (`IndexTransf.introduceBitmaps`). Filter
+  * pushdown — `filter_pushdown_transf` in the reference pipeline — is
+  * deliberately absent: the compiled plan is declarative and
   * Catalyst's PushDownPredicates does it (plan-asserted in
   * PlanQualitySpec; SURVEY.md §4.2).
   */
@@ -30,11 +31,9 @@ object Optimize {
     // CLetMut-scoped tables first (pure source rewrite, cells as nested
     // scalar bindings), then store-bound tables (all of a table's cells
     // primed by one aggregation row), then index introduction
-    val scoped = IvmTransf.transformScoped(annotated, requireLoop = false)
-    val (ivmed, primed) =
-      IvmTransf.transform(scoped, env, requireLoop = false)
-    val (indexed, idxEnv) =
-      IndexTransf.transform(ivmed, primed, requireLoop = false)
+    val scoped = IvmTransf.transformScoped(annotated)
+    val (ivmed, primed) = IvmTransf.transform(scoped, env)
+    val (indexed, idxEnv) = IndexTransf.transform(ivmed, primed)
     // The reference's Optimize.v column family LAST: proj/filter fusion
     // (proj_proj / efilter_efilter / filter_into_join / proj_into_join)
     // then schema-aware early narrowing (proj_pushdown_left/right/filter)

@@ -430,51 +430,14 @@ class CompilerSpec extends AnyFunSuite {
     assert(out.collect().map(_.getLong(0)).sorted.toSeq === Seq(0L, 1L, 4L, 9L))
   }
 
-  test("a record with several table lengths pre-counts them in ONE job") {
-    val t = spark.range(10).select(col("id").as("v"))
-    val lenBelow = (bound: Expr) => EUnop(OLength,
-      EFilter(LikeList, ELoc("t"), "x",
-        EBinop(OLess, EAccess(EVar("x"), "v"), bound)))
-    val rec = ERecord(List(
-      "a" -> lenBelow(EAtom(AInt(5L))),
-      "b" -> lenBelow(EAtom(AInt(8L)))))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    // AQE materializes each shuffle stage as its own job, which would make
-    // a job count meaningless — with it off, one ACTION is one job, which
-    // is the thing the batch collapses (driver round-trips)
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.sparkContext.addSparkListener(listener)
-    val compiled = try {
-      val c = compile(rec, Env(Map.empty, Map("t" -> t), spark))
-      // listener events are async: drain the bus deterministically so every
-      // job posted by compile() is counted — no wall-clock grace window
-      org.apache.spark.GraftTestBridge.drainListenerBus(spark.sparkContext, 30000L)
-      c
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    }
-    assert(jobs.get() === 1, "both lengths must share one batched count job")
-    val row = spark.range(1).select(asColumn(compiled).as("r"))
-      .select(col("r.a"), col("r.b")).head()
-    assert((row.getLong(0), row.getLong(1)) === (5L, 8L))
-  }
-
-  test("batched length memo is not served across a shadowing rebind") {
+  test("len fields sharing one operand count under their own bindings") {
     val t = spark.range(10).select(col("id").as("v"))
     // both fields read len(σ[v < k] t) with the SAME operand AST; field b
-    // rebinds k locally, so serving a's pre-count there would be wrong
+    // rebinds k locally, so it must count with its own k
     val lenK = EUnop(OLength,
       EFilter(LikeList, ELoc("t"), "x",
         EBinop(OLess, EAccess(EVar("x"), "v"), EVar("k"))))
-    // a second DISTINCT closed length so the batch fires (identical ASTs
-    // dedup to one target, which would skip batching and test nothing)
+    // a second, distinct closed length in the same record
     val lenConst = EUnop(OLength,
       EFilter(LikeList, ELoc("t"), "x",
         EBinop(OLess, EAccess(EVar("x"), "v"), EAtom(AInt(8L)))))

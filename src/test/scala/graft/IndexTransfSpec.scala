@@ -7,7 +7,7 @@ import graft.lang._
 import graft.lang.Lang._
 import graft.lang.Compiler._
 
-/** The automatic index rewrite (IndexTransf): a plain eq-filter loop must
+/** The index rewrite (IndexTransf): a plain eq-filter loop must
   * transparently execute against a keyed in-memory index — the reference's
   * transf_to_idx + eq_filter_to_lookup behavior, plan-asserted.
   */
@@ -25,7 +25,7 @@ class IndexTransfSpec extends AnyFunSuite {
     val orders = Tables.load(spark, TestSpark.sfDir, "orders")
       .select($"o_orderkey", $"o_custkey")
     val env = Env(Map.empty, Map("orders" -> orders), spark)
-    val indexed = IndexTransf.indexStore(loopOver("orders", "o_custkey"), env)
+    val indexed = IndexTransf.transform(loopOver("orders", "o_custkey"), env)._2
     val keyed = indexed.store("orders")
     assert(keyed ne orders, "store must be re-represented")
     // the filter the loop body compiles now scans the in-memory index, and
@@ -38,21 +38,25 @@ class IndexTransfSpec extends AnyFunSuite {
     keyed.unpersist()
   }
 
-  test("non-loop or correlated filters do NOT trigger the rewrite") {
+  test("a non-loop point filter is indexed; a correlated filter is not") {
     val orders = Tables.load(spark, TestSpark.sfDir, "orders")
     val env = Env(Map.empty, Map("orders" -> orders), spark)
-    // filter outside any loop: one scan, an index would cost more than it saves
+    // filter outside any loop: indexed all the same, as the reference's
+    // unconditional transf_to_idx (and Optimize) does
     val once = CAssign("out", EUnop(OLength,
       EFilter(LikeBag, ELoc("orders"), "o",
         EBinop(OEq, EAccess(EVar("o"), "o_custkey"), EAtom(AInt(1L))))))
-    assert(IndexTransf.indexStore(once, env).store("orders") eq orders)
+    val onceEnv = IndexTransf.transform(once, env)._2
+    assert(onceEnv.store("orders") ne orders, "store must be re-represented")
+    assert(onceEnv.indexes.contains("orders"))
+    onceEnv.store("orders").unpersist()
     // correlated "key" (mentions the row binder): not a point lookup
     val correlated = CForeach(EBinop(OCons, EAtom(AInt(1L)), EAtom(ANil(TInt))),
       "kv", CAssign("out", EUnop(OLength,
         EFilter(LikeBag, ELoc("orders"), "o",
           EBinop(OEq, EAccess(EVar("o"), "o_custkey"),
             EAccess(EVar("o"), "o_orderkey"))))))
-    assert(IndexTransf.indexStore(correlated, env).store("orders") eq orders)
+    assert(IndexTransf.transform(correlated, env)._2.store("orders") eq orders)
   }
 
   test("two filtered attributes → composed index, filters routed per attribute") {
@@ -120,7 +124,7 @@ class IndexTransfSpec extends AnyFunSuite {
     // and the end-to-end indexed run still matches the plain run
     val plain = Interp.run(CSeq(prog, CAssign("result", ELoc("orders"))), env)
       .store("result").count()
-    val fast = IndexTransf.runIndexed(
+    val fast = Optimize.run(
       CSeq(prog, CAssign("result", ELoc("orders"))), env)
       .store("result").count()
     assert(plain === fast)
@@ -160,7 +164,7 @@ class IndexTransfSpec extends AnyFunSuite {
       .toSeq.sorted
     val plain = rows(Interp.run(prog,
       Env(Map.empty, Map("orders" -> orders), spark)))
-    val fastEnd = IndexTransf.runIndexed(prog,
+    val fastEnd = Optimize.run(prog,
       Env(Map.empty, Map("orders" -> orders), spark))
     assert(fastEnd.compoIndexes.contains("orders"),
       "composed handle must survive chain inserts")
@@ -212,7 +216,7 @@ class IndexTransfSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
     val plainEnv = Env(Map.empty, Map("orders" -> orders), spark)
     val plain = rows(Interp.run(prog, plainEnv))
-    val fastEnd = IndexTransf.runIndexed(prog,
+    val fastEnd = Optimize.run(prog,
       Env(Map.empty, Map("orders" -> orders), spark))
     assert(fastEnd.indexes.contains("orders"),
       "index handle must survive cons inserts")
@@ -242,7 +246,7 @@ class IndexTransfSpec extends AnyFunSuite {
     val env = Env(Map.empty, Map("orders" -> orders), spark)
     val plain = Interp.run(prog, env).store("result")
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-    val fast = IndexTransf.runIndexed(prog, env).store("result")
+    val fast = Optimize.run(prog, env).store("result")
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
     assert(plain === fast)
   }

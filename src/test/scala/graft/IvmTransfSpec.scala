@@ -6,9 +6,10 @@ import graft.lang._
 import graft.lang.Lang._
 import graft.lang.Compiler._
 
-/** Automatic incremental sum maintenance (IvmTransf): the rewrite
-  * structure (reads become cell reads, writes bump the cell) and the
-  * semantic equivalence with the plain re-aggregating run.
+/** Incremental aggregate maintenance (IvmTransf): the rewrite structure
+  * (reads become cell reads, writes bump the cell) and the semantic
+  * equivalence of the `Optimize` pipeline's run with the plain
+  * re-aggregating run.
   */
 class IvmTransfSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -46,7 +47,7 @@ class IvmTransfSpec extends AnyFunSuite {
     def rows(env: Env) = env.store("result")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
     val plain = rows(Interp.run(prog, Env(Map.empty, Map("t" -> t), spark)))
-    val fast = rows(IvmTransf.runIncremental(prog,
+    val fast = rows(Optimize.run(prog,
       Env(Map.empty, Map("t" -> t), spark)))
     assert(plain === fast)
     assert(fast === Seq((1L, 31L), (2L, 33L), (3L, 36L)))
@@ -73,7 +74,7 @@ class IvmTransfSpec extends AnyFunSuite {
     def rows(e: Env) = e.store("result")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
     val plain = rows(Interp.run(prog2, Env(Map.empty, Map("t" -> t), spark)))
-    val fast = rows(IvmTransf.runIncremental(prog2,
+    val fast = rows(Optimize.run(prog2,
       Env(Map.empty, Map("t" -> t), spark)))
     assert(plain === fast)
     // inserts 7, 2, 9 against base {5}: running min after each = 5, 2, 2
@@ -98,7 +99,7 @@ class IvmTransfSpec extends AnyFunSuite {
     assert(!cmd.toString.contains("OLength"), "count read must be a cell read")
     def rows(e: Env) = e.store("result")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-    assert(rows(IvmTransf.runIncremental(prog2,
+    assert(rows(Optimize.run(prog2,
         Env(Map.empty, Map("t" -> t), spark))) ===
       Seq((1L, 3L), (2L, 4L)))
   }
@@ -119,7 +120,7 @@ class IvmTransfSpec extends AnyFunSuite {
     // and the untransformed incremental run still equals the plain run
     def rows(e: Env) = e.store("result")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-    assert(rows(IvmTransf.runIncremental(prog2,
+    assert(rows(Optimize.run(prog2,
         Env(Map.empty, Map("t" -> t), spark))) ===
       rows(Interp.run(prog2, Env(Map.empty, Map("t" -> t), spark))))
   }

@@ -99,7 +99,7 @@ class OptimizeSpec extends AnyFunSuite {
           ELoc("lt"))),
         CAssign("o", sumRead)))
     val prog = CLetMut(EAtom(ANil(TRecord.sorted("v" -> TInt))), "lt", loop)
-    val out = IvmTransf.transformScoped(prog, requireLoop = false)
+    val out = IvmTransf.transformScoped(prog)
     val printed = out.toString
     val cell = IvmTransf.cellName("lt", "v")
     assert(printed.contains(s"CLetMut(EAtom(AInt(0)),$cell"),
@@ -109,7 +109,7 @@ class OptimizeSpec extends AnyFunSuite {
     // (its reads are its own), the outer scope must not add a second cell
     val shadowed = CLetMut(EAtom(ANil(TRecord.sorted("v" -> TInt))), "lt",
       CLetMut(EAtom(ANil(TRecord.sorted("v" -> TInt))), "lt", loop))
-    val p2 = IvmTransf.transformScoped(shadowed, requireLoop = false).toString
+    val p2 = IvmTransf.transformScoped(shadowed).toString
     assert(s"CLetMut\\(EAtom\\(AInt\\(0\\)\\),\\Q$cell\\E".r
       .findAllIn(p2).size === 1, s"expected exactly one cell binding:\n$p2")
   }
