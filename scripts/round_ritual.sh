@@ -39,23 +39,17 @@ gate() { # gate <label>: mark the round failed
   echo "STEP FAILED: $1"; status=1
 }
 
-# CI runs strict-order mode: a universal-order comparison that would
-# silently drop type information is a hard failure here, while the
-# runtime default stays warn-only for users (r13 proved the whole
-# battery green under strict, so any strict trip is a regression).
-export GRAFT_STRICT_ORDER=1
-
 # Snapshot the tree identity step 1 tests, so step 8 can tell whether the
 # suite that passed is the suite at HEAD.
 START_HEAD=$(git rev-parse HEAD)
 START_DIRTY=$(git status --porcelain | wc -l)
 
-step "1/8 sbt test (strict order)"
+step "1/8 sbt test"
 out=$(sbt -batch test 2>&1 | grep -E "Tests:|All tests" | tail -2)
 echo "$out"
 echo "$out" | grep -q "failed 0" || gate "sbt test"
 
-step "2/8 extended sweep (1200 seeds, strict order)"
+step "2/8 extended sweep (1200 seeds)"
 out=$(GRAFT_SWEEP=1 sbt -batch "testOnly graft.ExtendedSweepSpec" 2>&1 |
   grep -E "seeds|Tests:" | tail -3)
 echo "$out"

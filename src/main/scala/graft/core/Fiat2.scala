@@ -119,14 +119,6 @@ object Fiat2 {
   // Sets and bags as nested canonical arrays.
   // ---------------------------------------------------------------------------
 
-  /** `TList → TSet` on a nested array: sorted + deduplicated, fiat2
-    * `list_to_set` (fiat2/src/fiat2/Interpret.v:126-135). */
-  def setOfArray(arr: Column): Column = sort_array(array_distinct(arr))
-
-  /** Sorted-insert preserving set canonical form (fiat2 `set_insert`). */
-  def setInsert(arr: Column, v: Column): Column =
-    sort_array(array_union(arr, array(v)))
-
   /** The reference's EXACT nested-bag encoding — sorted (value, count)
     * pairs, fiat2 `list_to_bag` (fiat2/src/fiat2/Interpret.v:112-124) — for
     * interop at the boundary. NOTE: the engine's own nested-bag convention
@@ -161,10 +153,6 @@ object Fiat2 {
   // ---------------------------------------------------------------------------
   // Dicts as sorted (key, value) entry arrays.
   // ---------------------------------------------------------------------------
-
-  /** Canonicalize an entries array: sort by key (fiat2 `dict_wf`,
-    * fiat2/src/fiat2/Value.v:492-497). Assumes keys already unique. */
-  def dictCanon(entries: Column): Column = sort_array(entries)
 
   /** Dict lookup → option (null when absent), fiat2 `dict_lookup`
     * (fiat2/src/fiat2/Interpret.v:92-110). `get` (0-based) returns null

@@ -37,59 +37,16 @@ import org.apache.spark.sql.functions._
   *
   * Everything composes built-in higher-order functions — no UDFs, the whole
   * key stays inside codegen.
+  *
+  * Every caller passes the element type: programs are typechecked at their
+  * entry and the compiler binds every variable and store cell with its
+  * type, so no sort runs on a guessed order. A store table nobody declared
+  * is typed from its schema, which reads a Long column as TInt; a word or
+  * nested-bag column has to be declared (`Env.storeTypes`), and a program
+  * that uses an undeclared one as such fails the typecheck.
   */
 object CanonOrder {
   import Lang._
-
-  /** LOUD type-unknown fallback (r12): when a sort/canonicalization site
-    * cannot synthesize its element type, the raw encoding order is used —
-    * exact for every word-free, bag-free element type, but DIVERGENT from
-    * the reference if the unknown type hides a TWord (signed vs unsigned)
-    * or a nested TBag (element-wise vs run-length order). Callers report
-    * the ambiguous case here: one stderr warning per JVM by default;
-    * `GRAFT_STRICT_ORDER=1` escalates it to a directed error for
-    * deployments that want the fallback provably unreachable. */
-  // warn once PER SITE, not per JVM: a benign unknown-type array sort
-  // (schema unobservable at the Column level, usually word/bag-free)
-  // must not consume the warning slot of a genuinely ambiguous table
-  // sort. Strict mode stays conservative on Column-level sites — the
-  // mode's contract is "declare your types".
-  private val warned = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  /** THREAD-SCOPED strict override: lets a spec exercise the strict path
-    * without mutating process-global state (a sys.props flip would leak
-    * into concurrently-running compiles under parallel test execution —
-    * compile-time plan construction runs on the caller's thread, so a
-    * DynamicVariable scopes exactly the compilation under test). */
-  private val strictScope =
-    new scala.util.DynamicVariable[Option[Boolean]](None)
-  def withStrict[A](on: Boolean)(body: => A): A =
-    strictScope.withValue(Some(on))(body)
-  /** `GRAFT_STRICT_ORDER=1` turns strict mode on for a deployment; specs
-    * use `withStrict`. */
-  private def strict: Boolean =
-    strictScope.value.getOrElse(
-      sys.env.get("GRAFT_STRICT_ORDER").contains("1"))
-  /** The strict-mode error gets its OWN type: the compiler's
-    * correlated-body machinery catches UnsupportedOperationException to
-    * drive its try-direct-then-decorrelate fallbacks, and a strict trip
-    * inside a fallback leg must surface AS a strict trip ("declare your
-    * types"), not be suppressed under a misleading rewrite-as-EJoin
-    * directive (observed in the r13 strict validation run). */
-  final class StrictOrderViolation(msg: String)
-    extends UnsupportedOperationException(msg)
-
-  def unknownOrder(site: String): Unit =
-    if (strict)
-      throw new StrictOrderViolation(
-        s"$site: element type unsynthesizable and the encoding could hide " +
-          "word/bag values, whose raw order diverges from the reference - " +
-          "declare storeTypes/varTypes so the sort is type-directed " +
-          "(strict order mode, GRAFT_STRICT_ORDER=1)")
-    else if (warned.add(site))
-      System.err.println(s"[graft] $site: element type unknown - using " +
-        "the raw encoding order (exact unless elements contain words or " +
-        "nested bags); declare storeTypes/varTypes to make the order " +
-        "type-directed, or set GRAFT_STRICT_ORDER=1 to make this an error")
 
   /** Does sorting values of type `t` need a computed key, or is the raw
     * encoding's natural order already the reference order? */
@@ -151,29 +108,23 @@ object CanonOrder {
   }
 
   /** `sort_array` in REFERENCE order: decorate-sort-undecorate when the
-    * element type needs a key, plain `sort_array` otherwise (or when the
-    * element type is unknown — the conservative legacy order). */
-  def sortArray(c: Column, elemT: Option[FType], width: Int): Column =
-    elemT match {
-      case Some(t) if needsKey(t, width) =>
-        transform(
-          sort_array(transform(c, e =>
-            struct(key(e, t, width).as("k"), e.as("v")))),
-          p => p("v"))
-      case Some(_) => sort_array(c) // known type, raw order provably exact
-      case None =>
-        unknownOrder("array canonical sort")
-        sort_array(c)
-    }
+    * element type needs a key, plain `sort_array` otherwise (the raw
+    * order is then provably the reference's). */
+  def sortArray(c: Column, elemT: FType, width: Int): Column =
+    if (needsKey(elemT, width))
+      transform(
+        sort_array(transform(c, e =>
+          struct(key(e, elemT, width).as("k"), e.as("v")))),
+        p => p("v"))
+    else sort_array(c)
 
   /** (Re)order dict (key, value) entries into reference key order — used
-    * both to canonicalize STORAGE on insert when the dict type is known
-    * (`dict_insert` keeps entries key-sorted, Interpret.v:92-110) and as
-    * the ITERATION view for `EDictFold` (folds entries in the reference's
-    * sorted order, Interpret.v:346-350), which covers dicts whose inserts
-    * compiled without type knowledge. Identity-shaped (already sorted
-    * input re-sorts stably to itself), so applying it at both points is
-    * safe. */
+    * both to canonicalize STORAGE on insert (`dict_insert` keeps entries
+    * key-sorted, Interpret.v:92-110) and as the ITERATION view for
+    * `EDictFold` (folds entries in the reference's sorted order,
+    * Interpret.v:346-350), which covers dicts built by other means than an
+    * insert (a table's dict column). Identity-shaped (already sorted input
+    * re-sorts stably to itself), so applying it at both points is safe. */
   def dictIterOrder(entries: Column, kt: FType, vt: FType,
       width: Int): Column =
     if (!needsKey(kt, width)) entries

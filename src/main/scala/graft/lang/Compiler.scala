@@ -60,36 +60,78 @@ object Compiler {
       // Interp.CLetMut performs the physical re-representation at bind
       // time (transf_to_idx under the letmut, OptimizeAnno.v:282-288)
       indexHints: Map[String, Seq[String]] = Map.empty,
-      // BEST-EFFORT variable/store types for reference-order sorting
-      // (CanonOrder): populated where a binder's type is synthesizable,
-      // consulted at the sort/iteration sites whose natural encoding order
-      // can diverge from value_compare (words, nested bags). A plain bind
-      // DROPS the binder's entry, so a shadowing rebinding can never serve
-      // a stale type; unknown types fall back to the raw encoding order.
+      // The fiat2 type of every variable and of every store cell (tables
+      // and scalar cells alike). An entry point (`compile`, `Interp.run`,
+      // `Optimize.transform`) completes them with `typed` and typechecks
+      // the program against them; from there on every binder is bound
+      // with its type, so the compiler reads a subtree's type off them
+      // (`synthLite`) instead of guessing it.
       varTypes: Map[String, FType] = Map.empty,
       storeTypes: Map[String, FType] = Map.empty) {
-    def bind(x: String, v: Val): Env =
+    def bind(x: String, v: Val, t: FType): Env =
       copy(vars = vars + (x -> v), rowVars = rowVars - x,
-        varTypes = varTypes - x)
+        varTypes = varTypes + (x -> t))
     /** Bind a PLAN-ATTRIBUTE row variable (a table operator's binder). Such
       * variables must not leak into a nested table operator's lambda — the
       * attribute references would mis-resolve (silently, for the same table).
       */
-    def bindRow(x: String, v: Val): Env =
+    def bindRow(x: String, v: Val, t: FType): Env =
       copy(vars = vars + (x -> v), rowVars = rowVars + x,
-        varTypes = varTypes - x)
-    /** `bind` plus the binder's synthesized type, when known. */
-    def bindTyped(x: String, v: Val, t: Option[FType]): Env = t match {
-      case Some(ft) => copy(vars = vars + (x -> v), rowVars = rowVars - x,
-        varTypes = varTypes + (x -> ft))
-      case None => bind(x, v)
+        varTypes = varTypes + (x -> t))
+    /** `x` bound as it is in `outer` (unbound if it is not) — a scoped
+      * binder's restore on leaving its scope. */
+    def restoreVar(x: String, outer: Env): Env = copy(
+      vars = outer.vars.get(x).fold(vars - x)(v => vars + (x -> v)),
+      rowVars = if (outer.rowVars(x)) rowVars + x else rowVars - x,
+      varTypes =
+        outer.varTypes.get(x).fold(varTypes - x)(t => varTypes + (x -> t)))
+    /** Store table `x` bound to `df`, of type `t`. */
+    def withTable(x: String, df: DataFrame, t: FType): Env =
+      copy(store = store + (x -> df), storeTypes = storeTypes + (x -> t))
+  }
+
+  /** The fiat2 type a Spark column type encodes, None for one with no
+    * fiat2 reading (double, timestamp, `array<float>`, …). Long and int
+    * columns read as TInt (on the bignum tier, its binary encoding too);
+    * a word reads as a Long or binary column just the same, so words are
+    * never inferred: they are declared. */
+  private def columnType(dt: DataType, bigInt: Boolean): Option[FType] =
+    dt match {
+      case LongType | IntegerType => Some(TInt)
+      case BinaryType if bigInt => Some(TInt)
+      case StringType => Some(TString)
+      case BooleanType => Some(TBool)
+      case ArrayType(et, _) => columnType(et, bigInt).map(TList(_))
+      case MapType(k, v, _) =>
+        for (kt <- columnType(k, bigInt); vt <- columnType(v, bigInt))
+          yield TDict(kt, vt)
+      case st: StructType =>
+        val fs = st.fields.toList.map(f =>
+          columnType(f.dataType, bigInt).map(f.name -> _))
+        if (fs.forall(_.isDefined)) Some(TRecord(fs.flatten.sortBy(_._1)))
+        else None
+      case _ => None
     }
-    /** `bindRow` plus the binder's synthesized type, when known. */
-    def bindRowTyped(x: String, v: Val, t: Option[FType]): Env = t match {
-      case Some(ft) => copy(vars = vars + (x -> v), rowVars = rowVars + x,
-        varTypes = varTypes + (x -> ft))
-      case None => bindRow(x, v)
-    }
+
+  /** The type of an undeclared store table, read from its schema: a list
+    * of the records it encodes (the scalar of a `value` table), with every
+    * column that has no fiat2 type left out of the record. */
+  private def schemaType(schema: StructType, bigInt: Boolean): Option[FType] =
+    if (schema.fieldNames.sameElements(Array("value")))
+      columnType(schema.head.dataType, bigInt).map(TList(_))
+    else Some(TList(TRecord(schema.fields.toList.flatMap(f =>
+      columnType(f.dataType, bigInt).map(f.name -> _)).sortBy(_._1))))
+
+  /** `env` with a type for every store table: a declared type wins, an
+    * undeclared table is typed from its schema. Variables and scalar cells
+    * are typed where they are bound (an env passed in declares them). */
+  def typed(env: Env): Env = {
+    val undeclared = env.store.collect {
+      case (t, df) if !env.storeTypes.contains(t) =>
+        schemaType(df.schema, env.bigInt).map(t -> _)
+    }.flatten
+    if (undeclared.isEmpty) env
+    else env.copy(storeTypes = env.storeTypes ++ undeclared)
   }
 
   /** Is this (possibly wrapped) failure a TInt value leaving the narrow
@@ -168,17 +210,17 @@ object Compiler {
     def types: Map[String, FType] = tables.map { case (t, cols) =>
       t -> (TBag(TRecord.sorted(cols: _*)): FType) }.toMap
 
-    /** `env` with each declared table loaded from `dir` and narrowed to its
-      * columns. A TInt column takes the tier's representation: Long, or
-      * BigIntOps bytes on the bignum tier; every other column loads as
-      * stored. */
+    /** `env` with each declared table loaded from `dir`, narrowed to its
+      * columns and typed by its declaration (unless `env` types it). A
+      * TInt column takes the tier's representation: Long, or BigIntOps
+      * bytes on the bignum tier; every other column loads as stored. */
     def bind(env: Env, dir: String): Env = env.copy(store = tables.map {
       case (t, cols) => t -> graft.core.Tables.load(env.spark, dir, t)
         .select(cols.map {
           case (c, TInt) => intCol(col(c).cast(LongType), env).as(c)
           case (c, _) => col(c)
         }: _*)
-    }.toMap)
+    }.toMap, storeTypes = types ++ env.storeTypes)
   }
 
   private lazy val tierLog = org.slf4j.LoggerFactory.getLogger("graft.tint")
@@ -233,24 +275,23 @@ object Compiler {
         .otherwise(w.cast(LongType))
     }
 
-  /** Best-effort type synthesis against the env's partial type knowledge —
-    * None whenever a free variable or store table lacks a recorded type.
-    * Only consulted for ORDER decisions (CanonOrder), where unknown safely
-    * degrades to the raw encoding order. */
-  private def synthLite(e: Expr, env: Env): Option[FType] =
-    try Some(TypeCheck.synthesize(e, env.varTypes, env.storeTypes))
-    catch { case scala.util.control.NonFatal(_) => None }
+  /** The type of `e` in `env`. Every binder and store cell is typed (see
+    * `Env`), so synthesis of a subtree of a typechecked program succeeds. */
+  private[lang] def synthLite(e: Expr, env: Env): FType =
+    TypeCheck.synthesize(e, env.varTypes, env.storeTypes)
 
-  private def elemTypeOf(t: FType): Option[FType] = t match {
-    case TList(u) => Some(u)
-    case TBag(u) => Some(u)
-    case TSet(u) => Some(u)
-    case _ => None
-  }
+  /** Element type of a collection-valued expression. */
+  private def synthElem(e: Expr, env: Env): FType =
+    TypeCheck.elemOf(synthLite(e, env))
 
-  /** Element type of a collection-valued expression, when synthesizable. */
-  private def synthElem(e: Expr, env: Env): Option[FType] =
-    synthLite(e, env).flatMap(elemTypeOf)
+  /** A row type extended with `fields`: a record's own fields, or a
+    * scalar row's `value` column, plus the new ones — the type of a frame
+    * the decorrelation widens with hoisted columns. */
+  private def withFields(t: FType, fields: Seq[(String, FType)]): FType =
+    TRecord.sorted(((t match {
+      case TRecord(fs) => fs.toMap
+      case _ => Map("value" -> t)
+    }) ++ fields).toSeq: _*)
 
   /** Reject correlation of an outer table-row variable into a nested
     * table-level operator (fiat2 interprets these nested-loop-style; a
@@ -276,8 +317,8 @@ object Compiler {
   def sparkType(t: FType, wordWidth: Int = 64,
       bigInt: Boolean = false): DataType = t match {
     case THole => throw new UnsupportedOperationException(
-      "unelaborated type hole - run TypeCheck.analyze against the expected " +
-        "type before compiling")
+      "unelaborated type hole - compile through an entry point, which " +
+        "elaborates the program first")
     // bignum tier: order-preserving canonical bytes (BigIntMath) — binary
     // lexicographic IS numeric order, so native compare/sort/group work
     case TInt if bigInt => BinaryType
@@ -565,9 +606,9 @@ object Compiler {
     * distinct-outer join-then-reaggregate path (see unnestAggsOnce).
     */
   private def projCorrelatedAggs(tag: CollectionTag, df: DataFrame,
-      x: String, r: Expr, env: Env, xT: Option[FType]): Val = {
+      x: String, r: Expr, env: Env, xT: FType): Val = {
     val (joined, benv, r2) = unnestCorrelatedAggs(df, x, r, env, xT)._1
-    val res = asCV(compile(r2, benv))
+    val res = asCV(lower(r2, benv))
     TV(canonTagDF(tag, flattenResult(joined, res)))
   }
 
@@ -582,10 +623,10 @@ object Compiler {
     * no-match rows (`count > 0`), Catalyst turns the shared left join
     * into an inner one. */
   private def filterCorrelatedAggs(df: DataFrame, x: String, p: Expr,
-      env: Env, xT: Option[FType]): Val = {
+      env: Env, xT: FType): Val = {
     val ((joined, benv, p2), la) =
       unnestCorrelatedAggs(df, x, p, env, xT)
-    val kept = joined.filter(asCV(compile(p2, benv)))
+    val kept = joined.filter(asCV(lower(p2, benv)))
     TV(kept.select(df.columns.map(c => col(s"$la.$c").as(c)): _*))
   }
 
@@ -630,8 +671,7 @@ object Compiler {
     * outer-row field accesses, and go again. The final round returns the
     * usual (joined, benv, rewritten) triple. */
   private def unnestCorrelatedAggs(df: DataFrame, x: String, r: Expr,
-      env: Env, xT: Option[FType] = None)
-      : ((DataFrame, Env, Expr), String) = {
+      env: Env, xT: FType): ((DataFrame, Env, Expr), String) = {
     var curDf = df; var curR = r; var curXT = xT
     var rounds = 0
     while (rounds < 6) {
@@ -652,18 +692,8 @@ object Compiler {
         curDf.columns.map(cn => col(s"$la.$cn").as(cn)) ++
           newVars.toSeq.sorted.map(n => asCV(benv.vars(n)).as(n)): _*)
       // the flattened outer's element type EXTENDS with the hoisted
-      // columns (typed via the binds' recorded types) so the next round's
-      // order/boxing decisions stay type-directed; any unknown hoisted
-      // type degrades the whole record to unknown rather than guessing
-      curXT =
-        if (!newVars.forall(benv.varTypes.contains)) None
-        else curXT.map {
-          case TRecord(fs) => TRecord.sorted(
-            (fs.toMap ++ newVars.map(n => n -> benv.varTypes(n))).toSeq: _*)
-          case t => TRecord.sorted(
-            (Map("value" -> t) ++ newVars.map(n => n -> benv.varTypes(n)))
-              .toSeq: _*)
-        }
+      // columns, typed by their binds
+      curXT = withFields(curXT, newVars.toSeq.map(n => n -> benv.varTypes(n)))
     }
     throw new UnsupportedOperationException(
       "correlated aggregate nesting deeper than 6 levels")
@@ -703,26 +733,16 @@ object Compiler {
         // only the compiler's own DIRECTED refusal (an unsupported shape /
         // over-cap localization) may degrade to the generic correlation
         // error — anything else is a genuine defect and must propagate
-        try compile(l2, env) match {
+        try lower(l2, env) match {
           case cv @ CV(_) => Some(asCV(cv))
           case TV(d) =>
             tableArrayLit(d, 10000, synthElem(l2, env), env.wordWidth)
-        } catch {
-          // StrictOrderViolation intentionally NOT rethrown here: this
-          // localization is SPECULATIVE — a strict trip in the leg's
-          // canonical sort just means this strategy is unavailable, and
-          // the scalar-land / directed-error fallbacks behind the None
-          // frequently succeed (r14: rethrowing broke four differential
-          // shapes that were CORRECT via the fallback). The all-fail path
-          // surfaces strict trips at the catch sites that end a strategy
-          // chain, not the ones that gate an optional one.
-          case _: UnsupportedOperationException => None
-        }
+        } catch { case _: UnsupportedOperationException => None }
       arrOpt.map { arr =>
         val n = s"__jaggleg${latIds.incrementAndGet()}"
         (EFlatmap(jt, l1, a,
           EProj(jt, EFilter(jt, EVar(n), b, p), b, r)),
-          env.bindTyped(n, CV(arr), synthLite(l2, env)))
+          env.bind(n, CV(arr), synthLite(l2, env)))
       }
     case _ => None
   }
@@ -745,12 +765,12 @@ object Compiler {
     var env2 = env
     var mapping = Map.empty[String, String]
     locs.foreach { nm =>
-      compile(ELoc(nm), env) match {
+      lower(ELoc(nm), env) match {
         case TV(d) => tableArrayLit(d, 10000, synthElem(ELoc(nm), env),
             env.wordWidth) match {
           case Some(arr) =>
             val n = s"__aggloc${latIds.incrementAndGet()}"
-            env2 = env2.bindTyped(n, CV(arr), synthLite(ELoc(nm), env))
+            env2 = env2.bind(n, CV(arr), synthLite(ELoc(nm), env))
             mapping += (nm -> n)
           case None => return None
         }
@@ -794,7 +814,7 @@ object Compiler {
   }
 
   private def unnestAggsOnce(df: DataFrame, x: String, r: Expr,
-      env0: Env, only: List[Expr], xT: Option[FType])
+      env0: Env, only: List[Expr], xT: FType)
       : ((DataFrame, Env, Expr), String) = {
     // join-source / scalar-land lifts extend the env with canonical-array
     // binds; every compile below must see them
@@ -951,25 +971,26 @@ object Compiler {
     val id = latIds.incrementAndGet()
     val la = s"__caggl$id"
     val outerRow = qualifiedRow(df.columns, la)
-    def synthW(e: Expr, extra: (String, Option[FType])*): Option[FType] =
-      try Some(TypeCheck.synthesize(e,
-        env.varTypes ++ xT.map(x -> _) ++
-          extra.collect { case (n, Some(t)) => n -> t },
-        env.storeTypes))
-      catch { case scala.util.control.NonFatal(_) => None }
+    def synthW(e: Expr, extra: (String, FType)*): FType =
+      TypeCheck.synthesize(e, env.varTypes + (x -> xT) ++ extra,
+        env.storeTypes)
     // One record per peeled node: its conjunct split, the residual-filtered
     // inner frame, and the binder types every compile below threads
-    // through — the chain's element type (coreT), the flatmap body's
-    // element type (flatT, synthesized with BOTH binders in scope), and
+    // through — the chain's element type (coreT), the projection's input
+    // (projInT: the flatmap body's element type, if there is one), and
     // the value type after the optional projection (valT: the per-row
     // array's element type and the ACI fold's result type). Threading them
     // keeps order/boxing decisions (CanonOrder keys, nested-option boxing)
     // type-directed inside decorrelated bodies.
     final case class Agg(node: Expr, pe: PeeledSrc, sp: ConjSplit, i: Int,
-        inner: DataFrame, coreT: Option[FType], flatT: Option[FType]) {
-      val projInT: Option[FType] = if (pe.flat.isDefined) flatT else coreT
-      val valT: Option[FType] = pe.proj match {
-        case Some((pb, pv)) => projInT.flatMap(bt => synthW(pv, pb -> Some(bt)))
+        inner: DataFrame, coreT: FType) {
+      // the flatmap body's element type (both binders in scope), or the
+      // chain's when there is no flatmap layer
+      val projInT: FType = pe.flat.fold(coreT) { case (fb, fbody) =>
+        TypeCheck.elemOf(synthW(fbody, fb -> coreT))
+      }
+      val valT: FType = pe.proj match {
+        case Some((pb, pv)) => synthW(pv, pb -> projInT)
         case None => projInT
       }
       // sequential/ordered consumers (EFold, ESort) and layered wrappers
@@ -989,29 +1010,26 @@ object Compiler {
     }
     val aggs = peeled.zipWithIndex.map { case ((node, pe), i) =>
       val coreT = synthElem(pe.core, env)
-      var inner = compile(pe.core, env) match {
+      var inner = lower(pe.core, env) match {
         case TV(d) => d
         case cv @ CV(_) => toDF(cv, env)
       }
       val sp = splitConjuncts(pe)
       sp.residual.reverse.foreach { case (b, p) =>
-        inner = inner.filter(asCV(compile(p,
-          env.bindRowTyped(b, CV(rowStruct(inner)), coreT))))
+        inner = inner.filter(asCV(lower(p,
+          env.bindRow(b, CV(rowStruct(inner)), coreT))))
       }
-      val flatT = pe.flat.flatMap { case (fb, fbody) =>
-        synthW(fbody, fb -> coreT).flatMap(elemTypeOf)
-      }
-      Agg(node, pe, sp, i, inner, coreT, flatT)
+      Agg(node, pe, sp, i, inner, coreT)
     }
     var joined: DataFrame = df.alias(la)
-    var extraBinds = List.empty[(String, Val, Option[FType])]
+    var extraBinds = List.empty[(String, Val, FType)]
     var r2 = rPre // scalar-land-lifted nodes already substituted
 
     def outerCol(e: Expr): Column =
-      asCV(compile(e, env.bindTyped(x, CV(outerRow), xT)))
+      asCV(lower(e, env.bind(x, CV(outerRow), xT)))
     // the node's inner key and range expressions over one inner row
     def innerCol(a: Agg, b: String, e: Expr): Column =
-      asCV(compile(e, env.bindRowTyped(b, CV(rowStruct(a.inner)), a.coreT)))
+      asCV(lower(e, env.bindRow(b, CV(rowStruct(a.inner)), a.coreT)))
     def innerKeys(a: Agg): List[Column] =
       a.sp.keyPairs.map { case (_, (b, ie)) => innerCol(a, b, ie) }
     def innerRanges(a: Agg): List[Column] = rangeConjsOf(a.sp).getOrElse(Nil)
@@ -1025,52 +1043,36 @@ object Compiler {
     }
     // Elements ride in a one-field wrapper struct so a genuine null value
     // (None) survives collect_list's null-dropping. The sort runs in
-    // REFERENCE order when valT synthesizes (word/bag elements take the
-    // CanonOrder key); an unsynthesizable type (e.g. a projection reading
-    // the outer row) falls back to the raw struct order — exact for
-    // word-free, bag-free elements.
+    // REFERENCE order (word/bag elements take the CanonOrder key).
     def canonArr(a: Agg, c: Column): Column = CanonOrder.sortArray(c,
-      a.valT.map(t => TRecord(List("v" -> t))), env.wordWidth)
+      TRecord(List("v" -> a.valT)), env.wordWidth)
     // the node's element value over one inner row bound as `iRow` (the
     // projection layer's value, or the row itself)
     def valueOf(a: Agg, envB: Env, iRow: Column): Column = a.pe.proj match {
       case Some((pb, pv)) =>
-        asCV(compile(pv, envB.bindRowTyped(pb, CV(iRow), a.projInT)))
+        asCV(lower(pv, envB.bindRow(pb, CV(iRow), a.projInT)))
       case None => iRow
     }
     // a flat peel's per-inner-row body array, each element run through the
     // optional projection layer above the flatmap
     def flatArrOf(a: Agg, envB: Env, iRow: Column): Column = {
       val (fb, fbody) = a.pe.flat.get
-      val arr0 = asCV(compile(fbody, envB.bindRowTyped(fb, CV(iRow), a.coreT)))
+      val arr0 = asCV(lower(fbody, envB.bindRow(fb, CV(iRow), a.coreT)))
       a.pe.proj match {
         case Some((pb, pv)) => transform(arr0, e =>
-          asCV(compile(pv, envB.bindTyped(pb, CV(e), a.flatT))))
+          asCV(lower(pv, envB.bind(pb, CV(e), a.projInT))))
         case None => arr0
       }
     }
     def gateOf(a: Agg): Option[Column] =
       a.sp.outerOnly.map(outerCol).reduceOption(_ && _)
     // Read-back of a scalar node: tier defaults and the outer-only gate
-    // (tierAggRead). The hoisted scalar's type: count/sum/length are
-    // TInt; ACI folds carry the source value type, nullable (None on
-    // empty). When the source value type is ITSELF an option, the
-    // aggregated column is the raw unboxed nullable value — recording
-    // TOption(TOption(t)) would declare the boxed struct("s") encoding and
-    // mislead downstream type-directed boxing, so record unknown instead
-    // (order decisions then safely degrade to the raw encoding).
+    // (tierAggRead). The hoisted scalar's type is the node's own:
+    // count/sum/length are TInt, a min/max of int or word values (its
+    // elements are numeric) is their option, None on empty.
     def bindScalar(a: Agg, aCol: Column): Unit = {
-      val scalarT: Option[FType] = a.node match {
-        case EACFold(AGSum, _) | EACFold(AGCount, _) |
-             EUnop(OLength, _) => Some(TInt)
-        case EACIFold(_, _) => a.valT match {
-          case Some(TOption(_)) => None
-          case other => other.map(TOption(_))
-        }
-        case _ => None
-      }
       extraBinds ::= ((a.name, CV(tierAggRead(a.node, aCol, gateOf(a), env)),
-        scalarT))
+        synthW(a.node)))
       r2 = Rewrites.foldExpr(r2)(e0 => if (e0 == a.node) EVar(a.name) else e0)
     }
     // Read-back of a collected node from the sorted wrapper array in
@@ -1087,7 +1089,7 @@ object Compiler {
         case None => ext
         case Some(oc) => when(oc, ext).otherwise(slice(ext, lit(1), lit(0)))
       }
-      extraBinds ::= ((a.name, CV(arrCol), a.valT.map(TList(_))))
+      extraBinds ::= ((a.name, CV(arrCol), TList(a.valT)))
       r2 = Rewrites.foldExpr(r2)(e0 => if (e0 == a.node) (a.pe.subst match {
         case Some(chain) =>
           Rewrites.foldExpr(a.node)(n => if (n == chain) EVar(a.name) else n)
@@ -1128,8 +1130,7 @@ object Compiler {
             innerRanges(a).zipWithIndex.map { case (c, m) => c.as(s"__sigm$m") }
         val sig = a.inner.select(sigCols: _*).queryExecution.analyzed.canonicalized
         Some(((sig, a.sp.keyPairs.map(_._1), a.collected, a.exploded), a))
-      } catch { case dec: CanonOrder.StrictOrderViolation => throw dec
-        case scala.util.control.NonFatal(_) => None }
+      } catch { case scala.util.control.NonFatal(_) => None }
     }
     keyed.groupBy(_._1).values.map(_.map(_._2)).toList.sortBy(_.head.i)
       .foreach { g =>
@@ -1157,10 +1158,8 @@ object Compiler {
           // elsewhere — sum/min/max skip the nulls, count counts the
           // constant 1s, so one explode feeds every aggregate
           val arrs = g.map(flatArrOf(_, env, row))
-          val vdt = g.zip(arrs).map { case (a, arr) =>
-            if (a.countOnly) org.apache.spark.sql.types.LongType
-            else h.inner.select(explode(arr).as("__pv")).schema("__pv").dataType
-          }
+          val vdt = g.map(a => if (a.countOnly) LongType
+            else sparkType(a.valT, env.wordWidth, env.bigInt))
           val tagged = g.zip(arrs).zipWithIndex.map { case ((a, arr), k) =>
             transform(arr, e => struct(vdt.indices.map { j =>
               (if (j != k) lit(null).cast(vdt(j))
@@ -1253,12 +1252,12 @@ object Compiler {
       val mark = s"__cm${id}_${a.i}"
       val oRow = qualifiedRow(df.columns, lo)
       val iRow = qualifiedRow(a.inner.columns, ib)
-      val envX = env.bindRowTyped(x, CV(oRow), xT)
+      val envX = env.bindRow(x, CV(oRow), xT)
       val pred = (a.sp.mixed.map { case (b, c) =>
-        asCV(compile(c, envX.bindRowTyped(b, CV(iRow), a.coreT)))
+        asCV(lower(c, envX.bindRow(b, CV(iRow), a.coreT)))
       } ++ a.sp.keyPairs.map { case (oe, (b, ie)) =>
-        asCV(compile(oe, envX)) <=>
-          asCV(compile(ie, env.bindRowTyped(b, CV(iRow), a.coreT)))
+        asCV(lower(oe, envX)) <=>
+          asCV(lower(ie, env.bindRow(b, CV(iRow), a.coreT)))
       }).reduceOption(_ && _).getOrElse(lit(true))
       val pairs = df.dropDuplicates().alias(lo)
         .join(a.inner.withColumn(mark, lit(1L)).alias(ib), pred, "left")
@@ -1303,8 +1302,8 @@ object Compiler {
     }
     // x stays a ROW variable: any remaining table-level correlation on it
     // must trip assertUncorrelated, not silently mis-resolve
-    val benv = extraBinds.foldLeft(env.bindRowTyped(x, CV(outerRow), xT)) {
-      case (acc, (n, v, t)) => acc.bindTyped(n, v, t)
+    val benv = extraBinds.foldLeft(env.bindRow(x, CV(outerRow), xT)) {
+      case (acc, (n, v, t)) => acc.bind(n, v, t)
     }
     ((joined, benv, r2), la)
   }
@@ -1355,9 +1354,16 @@ object Compiler {
     * (`apply_optimize_anno`, fiat2/src/fiat2/OptimizeAnno.v:307-312): run the
     * recognition rewrites so comprehension-style programs (nested
     * flatmap/if/cons) lower to real filters/projections/joins, then compile.
+    * Like `compile`, it typechecks `e` first.
     */
-  def compileProgram(e: Expr, env: Env): Val =
-    compile(Rewrites.normalize(e), env)
+  def compileProgram(e: Expr, env: Env): Val = {
+    val (typedE, tenv) = elaborated(e, env)
+    lowerProgram(typedE, tenv)
+  }
+
+  /** `compileProgram` on a typechecked expression in a typed env. */
+  private[lang] def lowerProgram(e: Expr, env: Env): Val =
+    lower(Rewrites.normalize(e), env)
 
   /** The one row of a row-free plan `oneRow(spark).select(cs)`, computed
     * on the driver with no Spark job: one literal per column. Some only
@@ -1455,12 +1461,10 @@ object Compiler {
     * proj/flatmap/join (fiat2/src/fiat2/Interpret.v:373-501): a projected
     * bag re-sorts, a projected set re-sorts AND dedups; filter needs
     * neither (it preserves canonical order). Lists pass through. The sort
-    * runs in REFERENCE order (CanonOrder key) when the element type is
-    * known — a bag/set of words stores unsigned-ascending like the
-    * reference's canonical form; unknown element types keep the raw
-    * encoding order (exact for word-free, bag-free elements). */
-  private def canonTag(tag: CollectionTag, c: Column,
-      elemT: Option[FType] = None, width: Int = 64): Column = tag match {
+    * runs in REFERENCE order (CanonOrder key): a bag/set of words stores
+    * unsigned-ascending like the reference's canonical form. */
+  private def canonTag(tag: CollectionTag, c: Column, elemT: FType,
+      width: Int): Column = tag match {
     case LikeList => c
     case LikeBag => CanonOrder.sortArray(c, elemT, width)
     case LikeSet => CanonOrder.sortArray(array_distinct(c), elemT, width)
@@ -1475,7 +1479,23 @@ object Compiler {
       case _ => df
     }
 
-  def compile(e: Expr, env: Env): Val = e match {
+  /** Compile a program: complete `env`'s typing (`typed`), elaborate and
+    * typecheck `e` against it — a mistyped program throws `TypeError`
+    * here, before any Spark job — and lower the hole-free tree. */
+  def compile(e: Expr, env: Env): Val = {
+    val (typedE, tenv) = elaborated(e, env)
+    lower(typedE, tenv)
+  }
+
+  /** `e` elaborated against `env` completed by `typed`, and that env. */
+  private def elaborated(e: Expr, env: Env): (Expr, Env) = {
+    val tenv = typed(env)
+    (TypeCheck.elaborate(e, tenv.varTypes, tenv.storeTypes)._1, tenv)
+  }
+
+  /** Lower a typechecked expression in a typed env (`compile`'s body, and
+    * the command interpreter's per-expression step). */
+  private[lang] def lower(e: Expr, env: Env): Val = e match {
     case EVar(x) => env.vars.getOrElse(x,
       throw TypeCheck.TypeError(s"unbound variable $x"))
     case ELoc(x) => env.scalars.get(x) match {
@@ -1507,7 +1527,7 @@ object Compiler {
       case AUnit => lit(null)
     })
 
-    case EUnop(op, e1) => (op, compile(e1, env)) match {
+    case EUnop(op, e1) => (op, lower(e1, env)) match {
       case (OLength, TV(df)) => // eager, like the interp
         CV(intCol(lit(df.count()), env))
       case (OLength, v) => CV(intCol(size(asCV(v)).cast("long"), env))
@@ -1524,7 +1544,7 @@ object Compiler {
         // Some over an OPTION boxes (Some(None) must stay distinct from
         // None — sparkType's nested-option struct); over any other type
         // the nullable wrap is a no-op
-        case Some(TOption(_)) => CV(struct(asCV(v).as("s")))
+        case TOption(_) => CV(struct(asCV(v).as("s")))
         case _ => CV(asCV(v))
       }
     }
@@ -1533,14 +1553,13 @@ object Compiler {
 
     case ETernop(OInsert, d, k, v) =>
       // insert-or-overwrite, storage sorted by key (`dict_insert`,
-      // Interpret.v:92-110) — in REFERENCE key order when the dict type is
-      // known and the key type needs a CanonOrder key (word/bag keys)
-      val base = asCV(compile(d, env))
-      val kc = asCV(compile(k, env))
-      val vc = asCV(compile(v, env))
+      // Interpret.v:92-110) — in REFERENCE key order when the key type
+      // needs a CanonOrder key (word/bag keys)
+      val base = asCV(lower(d, env))
+      val kc = asCV(lower(k, env))
+      val vc = asCV(lower(v, env))
       synthLite(d, env) match {
-        case Some(TDict(kt, vt))
-            if CanonOrder.needsKey(kt, env.wordWidth) =>
+        case TDict(kt, vt) if CanonOrder.needsKey(kt, env.wordWidth) =>
           val entries = concat(filter(base, e => !(e("key") <=> kc)),
             array(struct(kc.as("key"), vc.as("value"))))
           CV(CanonOrder.dictIterOrder(entries, kt, vt, env.wordWidth))
@@ -1555,13 +1574,13 @@ object Compiler {
       // constant-folding for scalar ones. A row-dependent condition (plan
       // attributes / lambda variables) fails the eager probe and falls back
       // to the per-row `when` form, where both branches are scalar columns.
-      val cc = asCV(compile(c, env))
+      val cc = asCV(lower(c, env))
       val eager =
         try Some(evalScalar(env, cc).asInstanceOf[Boolean])
         catch { case _: Exception => None }
       eager match {
-        case Some(b) => compile(if (b) t else f, env)
-        case None => (compile(t, env), compile(f, env)) match {
+        case Some(b) => lower(if (b) t else f, env)
+        case None => (lower(t, env), lower(f, env)) match {
           case (CV(a), CV(b)) => CV(when(cc, a).otherwise(b))
           case _ => throw new UnsupportedOperationException(
             "correlated conditional (EIf) selecting between TABLE legs on " +
@@ -1573,66 +1592,57 @@ object Compiler {
       }
 
     case ELet(e1, x, e2) =>
-      compile(e2, env.bindTyped(x, compile(e1, env), synthLite(e1, env)))
+      lower(e2, env.bind(x, lower(e1, env), synthLite(e1, env)))
 
     case ERecord(fields) =>
       CV(Fiat2.record(fields.map { case (n, fe) =>
-        n -> asCV(compile(fe, env)) }: _*))
+        n -> asCV(lower(fe, env)) }: _*))
 
-    case EAccess(r, f) => CV(asCV(compile(r, env))(f))
+    case EAccess(r, f) => CV(asCV(lower(r, env))(f))
 
     case EOptMatch(e1, none, x, some) =>
-      val c = asCV(compile(e1, env))
-      val innerT = synthLite(e1, env).collect { case TOption(u) => u }
+      val c = asCV(lower(e1, env))
+      val TOption(innerT) = synthLite(e1, env): @unchecked
       // a boxed scrutinee (option DIRECTLY over option) binds the box's
       // payload, not the box — Some(None) then reaches the Some branch
       // with x = None, exactly the reference (Interpret.v:340-345)
       val unwrap: Column => Column = innerT match {
-        case Some(TOption(_)) => v => v("s")
+        case TOption(_) => v => v("s")
         case _ => v => v
       }
-      CV(Fiat2.optMatch(c, asCV(compile(none, env)),
-        v => asCV(compile(some, env.bindTyped(x, CV(unwrap(v)), innerT)))))
+      CV(Fiat2.optMatch(c, asCV(lower(none, env)),
+        v => asCV(lower(some, env.bind(x, CV(unwrap(v)), innerT)))))
 
     case EDictFold(d, z, k, v, acc, step) =>
       // fold_right over the sorted entries (Interpret.v:346-350) — sorted
       // in REFERENCE key order: storage is raw-sorted, so when the key type
       // needs a CanonOrder key (words/bags) the folded VIEW re-sorts
-      val dictT = synthLite(d, env)
-      val entries0 = asCV(compile(d, env))
-      val entries = dictT match {
-        case Some(TDict(kt, vt)) =>
-          CanonOrder.dictIterOrder(entries0, kt, vt, env.wordWidth)
-        case _ => entries0
-      }
-      val (ktO, vtO) = dictT match {
-        case Some(TDict(kt, vt)) => (Some(kt), Some(vt))
-        case _ => (None, None)
-      }
+      val TDict(kt, vt) = synthLite(d, env): @unchecked
+      val entries = CanonOrder.dictIterOrder(asCV(lower(d, env)), kt, vt,
+        env.wordWidth)
       val accT = synthLite(z, env)
-      CV(aggregate(reverse(entries), asCV(compile(z, env)),
-        (a, entry) => asCV(compile(step,
-          env.bindTyped(k, CV(entry("key")), ktO)
-            .bindTyped(v, CV(entry("value")), vtO)
-            .bindTyped(acc, CV(a), accT)))))
+      CV(aggregate(reverse(entries), asCV(lower(z, env)),
+        (a, entry) => asCV(lower(step,
+          env.bind(k, CV(entry("key")), kt)
+            .bind(v, CV(entry("value")), vt)
+            .bind(acc, CV(a), accT)))))
 
     case ESort(_, l) =>
       // REFERENCE order (value_compare): raw encoding order except where
       // CanonOrder needs a key (words sort unsigned, nested bags compare
-      // as run-length pairs). Element type is best-effort — unknown keeps
-      // the raw order, which is exact for all word-free, bag-free types.
+      // as run-length pairs).
       val elemT = synthElem(l, env)
-      compile(l, env) match {
+      lower(l, env) match {
         case TV(df) =>
           TV(df.orderBy(canonSortCols(df, elemT, env.wordWidth): _*))
         case CV(c) => CV(CanonOrder.sortArray(c, elemT, env.wordWidth))
       }
 
-    case EFilter(_, l, x, p) => compile(l, env) match {
+    case EFilter(_, l, x, p) => lower(l, env) match {
       case TV(df) =>
         try {
           assertUncorrelated(env, Set(x), p)
-          TV(df.filter(asCV(compile(p, env.bindRowTyped(x,
+          TV(df.filter(asCV(lower(p, env.bindRow(x,
             CV(rowStruct(df)), synthElem(l, env))))))
         } catch {
           // predicate holds an aggregate over a CORRELATED-filtered table
@@ -1642,24 +1652,17 @@ object Compiler {
           case direct: UnsupportedOperationException
               if collectCorrelatedAggs(p, x).nonEmpty =>
             try filterCorrelatedAggs(df, x, p, env, synthElem(l, env))
-            catch {
-              // a strict-order trip in the fallback leg is the REAL
-              // diagnosis ("declare your types") — surface it, with the
-              // direct-path error attached, instead of burying it under
-              // a misleading rewrite-as-EJoin directive
-              case dec: CanonOrder.StrictOrderViolation =>
-                dec.addSuppressed(direct); throw dec
-              case scala.util.control.NonFatal(dec) =>
-                direct.addSuppressed(dec); throw direct
+            catch { case scala.util.control.NonFatal(dec) =>
+              direct.addSuppressed(dec); throw direct
             }
         }
       case CV(c) =>
         val et = synthElem(l, env)
-        CV(filter(c, v => asCV(compile(p, env.bindTyped(x, CV(v), et)))))
+        CV(filter(c, v => asCV(lower(p, env.bind(x, CV(v), et)))))
     }
 
     case EJoin(tag, l1, l2, x, y, p, r) =>
-      (compile(l1, env), compile(l2, env)) match {
+      (lower(l1, env), lower(l2, env)) match {
         case (TV(_), TV(_))
             if (collectCorrelatedAggs(r, x).nonEmpty ||
                 collectCorrelatedAggs(r, y).nonEmpty) &&
@@ -1682,7 +1685,7 @@ object Compiler {
             case EVar(`y`) => EAccess(EVar(z), "r")
             case o => o
           }
-          compile(EProj(tag, pairJoin, z, body2), env)
+          lower(EProj(tag, pairJoin, z, body2), env)
         case (TV(d1), TV(d2)) =>
           // Alias both sides and resolve row variables through the aliases:
           // ELoc of the same table on both sides yields the SAME DataFrame
@@ -1693,12 +1696,12 @@ object Compiler {
           val la = d1.alias("__join_l")
           val ra = d2.alias("__join_r")
           val bound = env
-            .bindRowTyped(x, CV(qualifiedRow(d1.columns, "__join_l")),
+            .bindRow(x, CV(qualifiedRow(d1.columns, "__join_l")),
               synthElem(l1, env))
-            .bindRowTyped(y, CV(qualifiedRow(d2.columns, "__join_r")),
+            .bindRow(y, CV(qualifiedRow(d2.columns, "__join_r")),
               synthElem(l2, env))
-          val pred = asCV(compile(p, bound))
-          val res = asCV(compile(r, bound))
+          val pred = asCV(lower(p, bound))
+          val res = asCV(lower(r, bound))
           TV(flattenResult(la.join(ra, pred, "inner"), res))
         case (v1, v2) => // nested-array nested-loop join, fused projection
           val a1 = asCV(v1); val a2 = asCV(v2)
@@ -1706,18 +1709,18 @@ object Compiler {
           val rt = synthElem(EJoin(tag, l1, l2, x, y, p, r), env)
           CV(canonTag(tag, flatten(transform(a1, xv =>
             transform(
-              filter(a2, yv => asCV(compile(p,
-                env.bindTyped(x, CV(xv), t1).bindTyped(y, CV(yv), t2)))),
-              yv => asCV(compile(r,
-                env.bindTyped(x, CV(xv), t1).bindTyped(y, CV(yv), t2)))))),
+              filter(a2, yv => asCV(lower(p,
+                env.bind(x, CV(xv), t1).bind(y, CV(yv), t2)))),
+              yv => asCV(lower(r,
+                env.bind(x, CV(xv), t1).bind(y, CV(yv), t2)))))),
             rt, env.wordWidth))
       }
 
-    case EProj(tag, l, x, r) => compile(l, env) match {
+    case EProj(tag, l, x, r) => lower(l, env) match {
       case TV(df) =>
         assertUncorrelated(env, Set(x), r)
         try {
-          val res = asCV(compile(r, env.bindRowTyped(x, CV(rowStruct(df)),
+          val res = asCV(lower(r, env.bindRow(x, CV(rowStruct(df)),
             synthElem(l, env))))
           TV(canonTagDF(tag, flattenResult(df, res)))
         } catch {
@@ -1727,27 +1730,20 @@ object Compiler {
           case direct: UnsupportedOperationException
               if collectCorrelatedAggs(r, x).nonEmpty =>
             try projCorrelatedAggs(tag, df, x, r, env, synthElem(l, env))
-            catch {
-              // a strict-order trip in the fallback leg is the REAL
-              // diagnosis ("declare your types") — surface it, with the
-              // direct-path error attached, instead of burying it under
-              // a misleading rewrite-as-EJoin directive
-              case dec: CanonOrder.StrictOrderViolation =>
-                dec.addSuppressed(direct); throw dec
-              case scala.util.control.NonFatal(dec) =>
-                direct.addSuppressed(dec); throw direct
+            catch { case scala.util.control.NonFatal(dec) =>
+              direct.addSuppressed(dec); throw direct
             }
         }
       case CV(c) =>
         val et = synthElem(l, env)
         val rt = synthElem(EProj(tag, l, x, r), env)
         CV(canonTag(tag, transform(c,
-          v => asCV(compile(r, env.bindTyped(x, CV(v), et)))),
+          v => asCV(lower(r, env.bind(x, CV(v), et)))),
           rt, env.wordWidth))
     }
 
     case EFlatmap(tag, e1, x, e2)
-        if compile(e1, env).isInstanceOf[TV] && splitTableIf(e2, x).nonEmpty =>
+        if lower(e1, env).isInstanceOf[TV] && splitTableIf(e2, x).nonEmpty =>
       // Correlated-CONDITIONAL table body: split the OUTER table on the
       // condition — rows where it holds flatmap the then-leg, the rest
       // the else-leg — and union the arms. Tables are bags and the arms
@@ -1756,7 +1752,7 @@ object Compiler {
       // flatmap the machinery below already lowers.
       val Some((c, bodyA, bodyB)) = splitTableIf(e2, x)
       val arms = Seq((c, bodyA), (EUnop(ONot, c), bodyB)).map { case (g, bd) =>
-        compile(EFlatmap(tag, EFilter(tag, e1, x, g), x, bd), env) match {
+        lower(EFlatmap(tag, EFilter(tag, e1, x, g), x, bd), env) match {
           case TV(d) => d
           case cv @ CV(_) => toDF(cv, env)
         }
@@ -1765,7 +1761,7 @@ object Compiler {
         arms(0).select(arms(0).columns.sorted.map(col): _*).unionByName(
           arms(1).select(arms(1).columns.sorted.map(col): _*))))
 
-    case EFlatmap(tag, e1, x, e2) => compile(e1, env) match {
+    case EFlatmap(tag, e1, x, e2) => lower(e1, env) match {
       case TV(df) =>
         def correlatedError(cause: Throwable) =
           new UnsupportedOperationException(
@@ -1836,8 +1832,10 @@ object Compiler {
                   case other => other
                 }
                 val tn = s"__caggflat${latIds.incrementAndGet()}"
-                return compile(EFlatmap(tag, ELoc(tn), x, e2x),
-                  env.copy(store = env.store + (tn -> flat)))
+                val flatT = TBag(withFields(synthElem(e1, env),
+                  newVars.toSeq.map(n => n -> benv.varTypes(n))))
+                return lower(EFlatmap(tag, ELoc(tn), x, e2x),
+                  env.withTable(tn, flat, flatT))
               }
             } catch { case scala.util.control.NonFatal(_) => () }
           }
@@ -1860,7 +1858,7 @@ object Compiler {
           val la = s"__decor_l$id"; val ra = s"__decor_r$id"
           val leftRow = qualifiedRow(df.columns, la)
           if (!Rewrites.freeVars(core).contains(x)) {
-            val inner = compile(core, env) match {
+            val inner = lower(core, env) match {
               case TV(d) => d
               case CV(c) => toDF(CV(c), env)
             }
@@ -1869,17 +1867,17 @@ object Compiler {
             // preserve schema), x sees the left row; plain bind for x so
             // nested references don't trip assertUncorrelated
             def bodyEnv(binder: String) =
-              env.bindTyped(x, CV(leftRow), synthElem(e1, env))
-                .bindRowTyped(binder, CV(innerRow), synthElem(core, env))
+              env.bind(x, CV(leftRow), synthElem(e1, env))
+                .bindRow(binder, CV(innerRow), synthElem(core, env))
             val pred = filters
-              .map { case (y, p) => asCV(compile(p, bodyEnv(y))) }
+              .map { case (y, p) => asCV(lower(p, bodyEnv(y))) }
               .reduceOption(_ && _).getOrElse(lit(true))
             val joined = df.alias(la).join(inner.alias(ra), pred, "inner")
             peeledProj match {
               case None => TV(joined.select(
                 inner.columns.map(c => col(s"$ra.$c").as(c)): _*))
               case Some((u, r)) =>
-                TV(flattenResult(joined, asCV(compile(r, bodyEnv(u)))))
+                TV(flattenResult(joined, asCV(lower(r, bodyEnv(u)))))
             }
           } else core match {
             // CORRELATION INSIDE A JOIN LEG (the last decorrelation shape
@@ -1901,7 +1899,7 @@ object Compiler {
               }
               val (fs1, c1) = peelLeg(jl1); val (fs2, c2) = peelLeg(jl2)
               val r1a = s"__decor_j1_$id"; val r2a = s"__decor_j2_$id"
-              def legDF(c: Expr) = compile(c, env) match {
+              def legDF(c: Expr) = lower(c, env) match {
                 case TV(d) => d
                 case cv @ CV(_) => toDF(cv, env)
               }
@@ -1909,16 +1907,16 @@ object Compiler {
               val row1 = qualifiedRow(in1.columns, r1a)
               val row2 = qualifiedRow(in2.columns, r2a)
               val (legT1, legT2) = (synthElem(c1, env), synthElem(c2, env))
-              val envL = env.bindTyped(x, CV(leftRow), synthElem(e1, env))
+              val envL = env.bind(x, CV(leftRow), synthElem(e1, env))
               val p1 = fs1.map { case (y, p) =>
-                  asCV(compile(p, envL.bindRowTyped(y, CV(row1), legT1))) }
+                  asCV(lower(p, envL.bindRow(y, CV(row1), legT1))) }
                 .reduceOption(_ && _).getOrElse(lit(true))
               val p2 = fs2.map { case (y, p) =>
-                  asCV(compile(p, envL.bindRowTyped(y, CV(row2), legT2))) }
+                  asCV(lower(p, envL.bindRow(y, CV(row2), legT2))) }
                 .reduceOption(_ && _).getOrElse(lit(true))
-              val envJ = envL.bindRowTyped(a, CV(row1), legT1)
-                .bindRowTyped(b, CV(row2), legT2)
-              val jpC = asCV(compile(jp, envJ))
+              val envJ = envL.bindRow(a, CV(row1), legT1)
+                .bindRow(b, CV(row2), legT2)
+              val jpC = asCV(lower(jp, envJ))
               val joined = df.alias(la)
                 .join(in1.alias(r1a), p1, "inner")
                 .join(in2.alias(r2a), p2 && jpC, "inner")
@@ -1954,6 +1952,8 @@ object Compiler {
                   partCol(la, df.columns, "xo"),
                   partCol(r1a, in1.columns, "lg"),
                   partCol(r2a, in2.columns, "rg"))
+                val tripEnv = env.withTable(tn, flat, TBag(TRecord.sorted(
+                  "xo" -> synthElem(e1, env), "lg" -> legT1, "rg" -> legT2)))
                 val elem2 = Rewrites.foldExpr(jr) {
                   case EVar(`x`) => EAccess(EVar(z), "xo")
                   case EVar(`a`) => EAccess(EVar(z), "lg")
@@ -1970,8 +1970,7 @@ object Compiler {
                     rex = EFilter(tag, rex, fy, fp) }
                   peeledProj.foreach { case (u, pr) =>
                     rex = EProj(tag, rex, u, pr) }
-                  return compile(rex,
-                    env.copy(store = env.store + (tn -> flat)))
+                  return lower(rex, tripEnv)
                 } else {
                   // filters/projection above the join reference the OUTER
                   // row: thread it through — project (element, outer-row)
@@ -1994,28 +1993,22 @@ object Compiler {
                       val w = s"__jtw${latIds.incrementAndGet()}"
                       rex = EProj(tag, rex, w, EAccess(EVar(w), "e"))
                   }
-                  return compile(rex,
-                    env.copy(store = env.store + (tn -> flat)))
+                  return lower(rex, tripEnv)
                 }
               }
-              val elem = asCV(compile(jr, envJ))
-              // the join element's type, via the typed leg binders —
-              // keeps order/boxing decisions in the layers above the join
-              // type-directed
-              val jrT: Option[FType] =
-                try Some(TypeCheck.synthesize(jr,
-                  envJ.varTypes, envJ.storeTypes))
-                catch { case scala.util.control.NonFatal(_) => None }
+              val elem = asCV(lower(jr, envJ))
+              // the join element's type, via the typed leg binders
+              val jrT = synthLite(jr, envJ)
               // filters peeled ABOVE the join bind to the join's computed
               // element (jr's value), not to plan attributes
               val kept = filters.map { case (y, p) =>
-                  asCV(compile(p, envL.bindTyped(y, CV(elem), jrT))) }
+                  asCV(lower(p, envL.bind(y, CV(elem), jrT))) }
                 .reduceOption(_ && _).map(joined.where).getOrElse(joined)
               peeledProj match {
                 case None => TV(flattenResult(kept, elem))
                 case Some((u, r)) =>
                   TV(flattenResult(kept,
-                    asCV(compile(r, envL.bindTyped(u, CV(elem), jrT)))))
+                    asCV(lower(r, envL.bind(u, CV(elem), jrT)))))
               }
             // CORRELATED ZIP-FLATMAP (EFlatmap2 under a correlated body):
             // each correlated leg is an ESort of a correlated filter chain
@@ -2031,10 +2024,10 @@ object Compiler {
             // without an ESort keep the directed error — their reference
             // order is storage order, which no distributed plan can see.
             case fm2 @ EFlatmap2(zl1, zl2, za, zb, zbody) =>
-              var legBinds = List.empty[(String, Val, Option[FType])]
+              var legBinds = List.empty[(String, Val, FType)]
               def liftLeg(leg: Expr): Expr =
                 if (Rewrites.freeVars(leg).contains(x)) leg
-                else compile(leg, env) match {
+                else lower(leg, env) match {
                   case CV(_) => leg
                   case TV(d) =>
                     val arr = tableArrayLit(d, 10000,
@@ -2049,12 +2042,12 @@ object Compiler {
                 if (legBinds.isEmpty) e2i
                 else Rewrites.foldExpr(e2i)(n0 => if (n0 == fm2) fm2b else n0)
               val envB = legBinds.foldLeft(env) {
-                case (acc, (n, v, t)) => acc.bindTyped(n, v, t)
+                case (acc, (n, v, t)) => acc.bind(n, v, t)
               }
               def zipUnnest(): Val = {
                 val ((joined, benv, body2), _) =
                   unnestCorrelatedAggs(df, x, e2b, envB, synthElem(e1, env))
-                compile(body2, benv) match {
+                lower(body2, benv) match {
                   case CV(arr) => TV(canonTagDF(tag,
                     flattenExploded(joined, arr)))
                   case TV(_) => throw correlatedError(null)
@@ -2065,28 +2058,12 @@ object Compiler {
                 // no collectible correlated leg (both lifted / list
                 // values): x stays a scalar row reference over the plain
                 // outer table; bindRow keeps any deeper table-level
-                // correlation on the directed-error path. zipUnnest's own
-                // error (StrictOrderViolation included) is SPECULATIVE —
-                // this fallback frequently succeeds — but if the fallback
-                // ALSO fails, a strict trip is the real diagnosis
-                // ("declare your types") and must surface instead of
-                // being re-buried under the rewrite-as-EJoin directive.
-                def surfacing[A](body: => A): A =
-                  try body catch {
-                    case scala.util.control.NonFatal(e) => u match {
-                      case dec: CanonOrder.StrictOrderViolation =>
-                        dec.addSuppressed(e); throw dec
-                      case _ => throw e
-                    }
-                  }
-                surfacing(compile(e2b, envB.bindRowTyped(x,
-                    CV(rowStruct(df)), synthElem(e1, env)))) match {
+                // correlation on the directed-error path
+                lower(e2b, envB.bindRow(x, CV(rowStruct(df)),
+                    synthElem(e1, env))) match {
                   case CV(arr) => TV(canonTagDF(tag,
                     flattenExploded(df, arr)))
-                  case TV(_) => u match {
-                    case dec: CanonOrder.StrictOrderViolation => throw dec
-                    case _ => throw correlatedError(u)
-                  }
+                  case TV(_) => throw correlatedError(u)
                 }
               }
             case _ => throw correlatedError(null)
@@ -2100,7 +2077,7 @@ object Compiler {
           // it trips assertUncorrelated (catching the silent same-table
           // case too).
           val body =
-            try compile(e2, env.bindRowTyped(x, CV(rowStruct(df)),
+            try lower(e2, env.bindRow(x, CV(rowStruct(df)),
               synthElem(e1, env)))
             catch {
               case e: org.apache.spark.sql.AnalysisException
@@ -2121,27 +2098,20 @@ object Compiler {
           case direct: UnsupportedOperationException
               if Rewrites.freeVars(e2).contains(x) =>
             try decorrelate()
-            catch {
-              // a strict-order trip in the fallback leg is the REAL
-              // diagnosis ("declare your types") — surface it, with the
-              // direct-path error attached, instead of burying it under
-              // a misleading rewrite-as-EJoin directive
-              case dec: CanonOrder.StrictOrderViolation =>
-                dec.addSuppressed(direct); throw dec
-              case scala.util.control.NonFatal(dec) =>
-                direct.addSuppressed(dec); throw direct
+            catch { case scala.util.control.NonFatal(dec) =>
+              direct.addSuppressed(dec); throw direct
             }
         }
       case CV(c) =>
         val et = synthElem(e1, env)
         val rt = synthElem(EFlatmap(tag, e1, x, e2), env)
         CV(canonTag(tag, flatten(transform(c,
-          v => asCV(compile(e2, env.bindTyped(x, CV(v), et))))),
+          v => asCV(lower(e2, env.bind(x, CV(v), et))))),
           rt, env.wordWidth))
     }
 
     case EFlatmap2(e1, e2, x1, x2, e3) =>
-      (compile(e1, env), compile(e2, env)) match {
+      (lower(e1, env), lower(e2, env)) match {
         // at least one TABLE side: lift the other (a typed list value) to
         // a table too and zip positionally
         case (v1, v2) if v1.isInstanceOf[TV] || v2.isInstanceOf[TV] =>
@@ -2155,16 +2125,15 @@ object Compiler {
           // window — and the inner position join cuts at the shorter
           // side (flat_map2, fiat2/src/fiat2/Interpret.v:7-11).
           assertUncorrelated(env, Set(x1, x2), e3)
-          val z1 = zipIndexed(d1, synthElem(e1, env), env.wordWidth)
-            .alias("__zip_l")
-          val z2 = zipIndexed(d2, synthElem(e2, env), env.wordWidth)
-            .alias("__zip_r")
+          val (t1, t2) = (synthElem(e1, env), synthElem(e2, env))
+          val z1 = zipIndexed(d1, t1, env.wordWidth).alias("__zip_l")
+          val z2 = zipIndexed(d2, t2, env.wordWidth).alias("__zip_r")
           val joined = z1.join(z2,
             col("__zip_l.__pos") === col("__zip_r.__pos"), "inner")
           val bound = env
-            .bindRow(x1, CV(qualifiedRow(d1.columns, "__zip_l")))
-            .bindRow(x2, CV(qualifiedRow(d2.columns, "__zip_r")))
-          TV(flattenExploded(joined, asCV(compile(e3, bound))))
+            .bindRow(x1, CV(qualifiedRow(d1.columns, "__zip_l")), t1)
+            .bindRow(x2, CV(qualifiedRow(d2.columns, "__zip_r")), t2)
+          TV(flattenExploded(joined, asCV(lower(e3, bound))))
         case (v1, v2) =>
           // nested lists: zip_with pads with null, so slice both sides
           // to the common length first
@@ -2172,19 +2141,19 @@ object Compiler {
           val n = least(size(a1), size(a2))
           val (t1, t2) = (synthElem(e1, env), synthElem(e2, env))
           CV(flatten(zip_with(slice(a1, lit(1), n), slice(a2, lit(1), n),
-            (w1, w2) => asCV(compile(e3,
-              env.bindTyped(x1, CV(w1), t1).bindTyped(x2, CV(w2), t2))))))
+            (w1, w2) => asCV(lower(e3,
+              env.bind(x1, CV(w1), t1).bind(x2, CV(w2), t2))))))
       }
 
-    case EFold(l, z, x, acc, step) => compile(l, env) match {
+    case EFold(l, z, x, acc, step) => lower(l, env) match {
       case CV(c) =>
         // the reference's EFold is a RIGHT fold (fold_right,
         // Interpret.v:313-319): left-aggregate over the reversed list
         val et = synthElem(l, env)
         val accT = synthLite(z, env)
-        CV(aggregate(reverse(c), asCV(compile(z, env)),
-          (a, v) => asCV(compile(step,
-            env.bindTyped(x, CV(v), et).bindTyped(acc, CV(a), accT)))))
+        CV(aggregate(reverse(c), asCV(lower(z, env)),
+          (a, v) => asCV(lower(step,
+            env.bind(x, CV(v), et).bind(acc, CV(a), accT)))))
       case TV(df) =>
         // General fold over a table is inherently sequential (SURVEY.md §7).
         // A DataFrame has no intrinsic order, so the fold is DEFINED over
@@ -2211,9 +2180,9 @@ object Compiler {
         val accTT = synthLite(z, env)
         def foldArr(arr: Column, accCol: Column): Column =
           aggregate(arr, accCol, (a, v) =>
-            asCV(compile(step, env.bindTyped(x, CV(v), elemT)
-              .bindTyped(acc, CV(a), accTT))))
-        val zCol = asCV(compile(z, env))
+            asCV(lower(step, env.bind(x, CV(v), elemT)
+              .bind(acc, CV(a), accTT))))
+        val zCol = asCV(lower(z, env))
         tableArrayLit(df, batchSize, elemT, env.wordWidth) match {
           // right fold (Interpret.v:313-319) over the canonical order
           case Some(arr) => CV(foldArr(reverse(arr), zCol))
@@ -2248,7 +2217,7 @@ object Compiler {
     // result value eagerly as a scalar (same stance as table OLength above,
     // and the reference interpreter's eagerness) — so an aggregate composes
     // into records/arithmetic anywhere a scalar goes.
-    case EACFold(agg, e1) => (agg, compile(e1, env)) match {
+    case EACFold(agg, e1) => (agg, lower(e1, env)) match {
       case (AGSum, TV(df)) if env.bigInt =>
         // ONE distributed agg, map-side-combinable partials in the
         // canonical encoding (BigIntSumAgg); empty input yields the
@@ -2275,19 +2244,19 @@ object Compiler {
       case (AGCount, CV(c)) => CV(intCol(size(c).cast("long"), env))
     }
 
-    case EACIFold(agg, e1) => (agg, compile(e1, env)) match {
+    case EACIFold(agg, e1) => (agg, lower(e1, env)) match {
       case (AGMin, TV(df)) => CV(typedAggLit(df, min(col("value"))))
       case (AGMax, TV(df)) => CV(typedAggLit(df, max(col("value"))))
       case (AGMin, CV(c)) => CV(array_min(c))
       case (AGMax, CV(c)) => CV(array_max(c))
     }
 
-    case EBagOf(l) => compile(l, env) match {
+    case EBagOf(l) => lower(l, env) match {
       case TV(df) => TV(df) // DataFrames are bags natively
       case CV(c) => // canonical nested bag: REFERENCE element order
         CV(CanonOrder.sortArray(c, synthElem(l, env), env.wordWidth))
     }
-    case ESetOf(l) => compile(l, env) match {
+    case ESetOf(l) => lower(l, env) match {
       case TV(df) => TV(df.distinct())
       case CV(c) => CV(CanonOrder.sortArray(array_distinct(c),
         synthElem(l, env), env.wordWidth))
@@ -2295,50 +2264,35 @@ object Compiler {
   }
 
   /** Canonical-order sort columns for a TABLE: the name-sorted columns,
-    * keyed through CanonOrder when the element type is known and needs it
-    * (word columns order unsigned, nested-bag columns by run-length
-    * pairs) — the TABLE analog of `CanonOrder.sortArray`, shared by
-    * `ESort`, the table `EFold` stream order, `tableArrayLit`, and
-    * `zipIndexed`. */
-  private def canonSortCols(df: DataFrame, elemT: Option[FType],
+    * keyed through CanonOrder where the element type needs it (word
+    * columns order unsigned, nested-bag columns by run-length pairs) — the
+    * TABLE analog of `CanonOrder.sortArray`, shared by `ESort`, the table
+    * `EFold` stream order, `tableArrayLit`, and `zipIndexed`. */
+  private def canonSortCols(df: DataFrame, elemT: FType,
       width: Int): Seq[Column] = {
     val cols = df.columns.sorted
-    // LOUD fallback: an UNKNOWN element type over a schema that could
-    // hide words (LongType) or nested bags (ArrayType) may sort in a
-    // non-reference order — report it (warn once / strict error). A
-    // schema with neither is provably order-exact raw, no noise.
-    if (elemT.isEmpty) {
-      def ambiguous(dt: org.apache.spark.sql.types.DataType): Boolean =
-        dt match {
-          case _: LongType => true
-          case _: ArrayType => true
-          case st: StructType => st.fields.exists(f => ambiguous(f.dataType))
-          case _ => false
-        }
-      if (df.schema.fields.exists(f => ambiguous(f.dataType)))
-        CanonOrder.unknownOrder("table canonical sort")
-    }
-    val keyed: Option[Seq[Column]] = elemT.collect {
+    val keys = elemT match {
       case TRecord(fs) if fs.exists(f => CanonOrder.needsKey(f._2, width)) =>
         fs.sortBy(_._1).map { case (n, ft) => CanonOrder.key(col(n), ft, width) }
       case t if CanonOrder.needsKey(t, width) &&
           cols.sameElements(Array("value")) =>
         Seq(CanonOrder.key(col("value"), t, width))
+      case _ => Nil
     }
     // CanonOrder keys are non-injective on null-encoded inputs (None vs
-    // boxed Some(None); null bag vs empty bag) — append the raw
-    // name-sorted columns as trailing tie-breaks so the row order on keyed
-    // ties is deterministic and matches sortArray's decorate-sort, which
+    // boxed Some(None); null bag vs empty bag) — the raw name-sorted
+    // columns follow as tie-breaks so the row order on keyed ties is
+    // deterministic and matches sortArray's decorate-sort, which
     // tie-breaks on the raw value.
-    keyed.map(_ ++ cols.map(col)).getOrElse(cols.map(col).toSeq)
+    keys ++ cols.map(col)
   }
 
   /** Canonical-order ARRAY LITERAL of a table — the ≤`cap`-row localization
     * the table EFold and the zip-leg lift share; None when the table is too
     * big to localize. Lazy in the Spark sense: composes into larger
     * expressions with no job beyond the one limit-collect here. */
-  private def tableArrayLit(df: DataFrame, cap: Int,
-      elemT: Option[FType] = None, width: Int = 64): Option[Column] = {
+  private def tableArrayLit(df: DataFrame, cap: Int, elemT: FType,
+      width: Int): Option[Column] = {
     val cols = df.columns.sorted
     val head = df.orderBy(canonSortCols(df, elemT, width): _*)
       .limit(cap + 1).collect()
@@ -2366,12 +2320,12 @@ object Compiler {
   }
 
   /** Contiguous 0-based positions over the canonical (all-columns,
-    * name-sorted, CanonOrder-keyed when the element type is known) order —
+    * name-sorted, CanonOrder-keyed where the element type needs it) order —
     * `zipWithIndex` computes per-partition offsets from one count pass and
     * never funnels the data through a single partition, unlike a global
     * `row_number` window. */
-  private def zipIndexed(df: DataFrame, elemT: Option[FType] = None,
-      width: Int = 64): DataFrame = {
+  private def zipIndexed(df: DataFrame, elemT: FType,
+      width: Int): DataFrame = {
     val ordered = df.orderBy(canonSortCols(df, elemT, width): _*)
     val schema2 = ordered.schema.add("__pos", LongType, nullable = false)
     val rdd = ordered.rdd.zipWithIndex.map { case (r, i) =>
@@ -2393,8 +2347,8 @@ object Compiler {
     WordOps.forWidth(env.wordWidth)
 
   private def compileBinop(op: Binop, e1: Expr, e2: Expr, env: Env): Val = {
-    lazy val v1 = compile(e1, env)
-    lazy val v2 = compile(e2, env)
+    lazy val v1 = lower(e1, env)
+    lazy val v2 = lower(e2, env)
     op match {
       // default TInt (Long) path: overflow-checked with a DIRECTED error
       // naming bigInt (the reference's TInt is unbounded Z, Value.v:12 —
@@ -2442,7 +2396,7 @@ object Compiler {
       case OLookup => synthLite(e1, env) match {
         // lookup : TOption(vt) — an OPTION-VALUED dict must box the found
         // value (a found None is Some(None), distinct from a missing key)
-        case Some(TDict(_, vt @ TOption(_))) =>
+        case TDict(_, vt @ TOption(_)) =>
           val entry = get(filter(asCV(v1), e => e("key") <=> asCV(v2)),
             lit(0))
           CV(when(entry.isNull,
@@ -2462,10 +2416,10 @@ object Compiler {
         case (a, b) => CV(concat(asCV(a), asCV(b)))
       }
       case OCons => e2 match {
-        // cons onto an UNTYPED empty: the head supplies the element type
-        // (what the notation's `[x, .., y]` / `ret e` sugar needs — the
-        // same inference analyze does, available without an expected type)
-        case EAtom(ANil(THole)) => CV(array(asCV(v1)))
+        // cons onto the empty list (the notation's `[x, .., y]` / `ret e`
+        // sugar): the singleton of the head, in the head's own encoding — a
+        // row of a schema-typed table keeps the columns its type leaves out
+        case EAtom(ANil(_)) => CV(array(asCV(v1)))
         case _ => (v1, v2) match {
           case (elem, TV(df)) => TV(consRow(asCV(elem), df))
           case (a, b) => CV(concat(array(asCV(a)), asCV(b)))

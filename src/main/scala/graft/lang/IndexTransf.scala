@@ -39,9 +39,13 @@ object IndexTransf {
     * single source scan, each component registered in the store under
     * `componentName`, and — like the reference's `transf_to_idx`
     * substitution — the command is rewritten so each point filter reads
-    * the component keyed on ITS attribute.
+    * the component keyed on ITS attribute. Components and bitmap cells are
+    * typed in the returned env; a SCOPED table's components are typed
+    * where `Interp` binds them, under their CLetMut.
     */
-  def transform(c: Command, env: Compiler.Env): (Command, Compiler.Env) = {
+  def transform(c: Command,
+      env0: Compiler.Env): (Command, Compiler.Env) = {
+    val env = Compiler.typed(env0)
     val byTable = eqFilters(c).distinct
       .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     // Composed components are routed to by NAME. A cons-chain insert is
@@ -56,6 +60,8 @@ object IndexTransf {
     val dicted = byTable.foldLeft((c, env)) { case ((cmd, acc), (t, attrs0)) =>
       acc.store.get(t) match {
         case Some(df) =>
+          // a filter of a CLetMut cell that shadows `t` names the cell's
+          // attributes, which `t` may not have
           val attrs = attrs0.filter(df.columns.contains)
           attrs match {
             case Seq() => (cmd, acc)
@@ -68,10 +74,12 @@ object IndexTransf {
             case _ if mutated.contains(t) => (cmd, acc)
             case several =>
               val compo = CompoIndex.build(df, several)
-              val entries = several.map(a =>
-                componentName(t, a) -> compo.component(a).keyed)
+              val names = several.map(componentName(t, _))
               (routeFilters(cmd, t, several.toSet),
-                acc.copy(store = acc.store ++ entries,
+                acc.copy(store = acc.store ++ names.zip(several.map(a =>
+                    compo.component(a).keyed)),
+                  storeTypes = acc.storeTypes ++
+                    names.map(_ -> acc.storeTypes(t)),
                   compoIndexes = acc.compoIndexes + (t -> compo)))
           }
         case None => (cmd, acc)
@@ -129,6 +137,13 @@ object IndexTransf {
     (rewritten, env.copy(indexHints = env.indexHints ++ hints))
   }
 
+  /** The cells each scoped binder's CLetMut binds besides itself: the
+    * components of its composed index, which `Interp` binds at the
+    * binder's type. */
+  def scopedCells(env: Compiler.Env): Map[String, Seq[String]] =
+    env.indexHints.collect { case (x, attrs) if attrs.length > 1 =>
+      x -> attrs.map(componentName(x, _)) }
+
   private def letMutBindCounts(c: Command): Map[String, Int] = c match {
     case CSkip => Map.empty
     case CSeq(a, b) => merge(letMutBindCounts(a), letMutBindCounts(b))
@@ -178,14 +193,21 @@ object IndexTransf {
   private def introduceBitmaps(c: Command,
       env: Compiler.Env): (Command, Compiler.Env) = {
     val written = writtenCells(c)
+    // the bitmap cell re-materializes whole rows, so each of the table's
+    // columns must have a type its record can carry
+    def wholeRecord(t: String): Option[List[(String, FType)]] =
+      (env.store.get(t), env.storeTypes.get(t).map(TypeCheck.elemOf)) match {
+        case (Some(df), Some(TRecord(fs)))
+            if fs.map(_._1).toSet == df.columns.toSet => Some(fs)
+        case _ => None
+      }
     val cands = loopConstFilters(c, inLoop = false).distinct
       .filterNot { case (t, _) => written.contains(t) }
-      .filter { case (t, _) => env.store.contains(t) }
+      .flatMap { case (t, p) => wholeRecord(t).map(fs => (t, p, fs)) }
     cands.zipWithIndex.foldLeft((c, env)) {
-      case ((cmd, acc), ((t, pCanon), i)) =>
+      case ((cmd, acc), ((t, pCanon, fs), i)) =>
         val cell = s"$t@bitmap$i"
-        val df = acc.store(t)
-        val fields = df.columns.toList.sorted
+        val fields = fs.map(_._1)
         val body = ERecord((fields.map(f =>
           f -> (EAccess(EVar(canonBinder), f): Expr)) :+
           (bitField -> pCanon)).sortBy(_._1))
@@ -193,7 +215,8 @@ object IndexTransf {
           EProj(LikeBag, ELoc(t), canonBinder, body), acc)
           .asInstanceOf[Compiler.TV].df.cache()
         (routeBitmap(cmd, t, pCanon, cell, fields),
-          acc.copy(store = acc.store + (cell -> extended)))
+          acc.withTable(cell, extended,
+            TBag(TRecord.sorted(fs :+ (bitField -> TBool): _*))))
     }
   }
 

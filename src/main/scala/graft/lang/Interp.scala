@@ -23,28 +23,40 @@ object Interp {
       before.get(k).fold(acc - k)(v => acc + (k -> v))
     }
 
-  /** Run a command, returning the final store. */
-  def run(c: Command, env: Env): Env = c match {
+  /** Run a command program, returning the final store: complete `env`'s
+    * typing (`Compiler.typed`), elaborate and typecheck the command
+    * against it — a mistyped program throws `TypeError` here, before any
+    * Spark job — and interpret the elaborated command. */
+  def run(c: Command, env: Env): Env = {
+    val tenv = Compiler.typed(env)
+    exec(TypeCheck.elaborateCommand(c, tenv.varTypes, tenv.storeTypes,
+      IndexTransf.scopedCells(tenv))._1, tenv)
+  }
+
+  /** Interpret a typechecked command in a typed env; every cell and
+    * binder it introduces is bound with its type. */
+  private[lang] def exec(c: Command, env: Env): Env = c match {
     case CSkip => env
-    case CSeq(c1, c2) => run(c2, run(c1, env))
+    case CSeq(c1, c2) => exec(c2, exec(c1, env))
 
     case CLet(e, x, body) => // immutable binding (Interpret.v:507-509)
-      val saved = env.vars.get(x)
-      val after = run(body, env.bind(x, compileProgram(e, env)))
-      saved match {
-        case Some(v) => after.bind(x, v)
-        case None => after.copy(vars = after.vars - x)
-      }
+      exec(body, env.bind(x, lowerProgram(e, env), synthLite(e, env)))
+        .restoreVar(x, env)
 
     case CLetMut(e, x, body) => // scoped mutable cell (Interpret.v:510-513)
-      compileProgram(e, env) match {
-        // an array-typed init is a TABLE cell (lists/bags are tables in
-        // this engine); everything else CV is a SCALAR cell
-        case CV(c) if !isArrayTyped(env, c) =>
+      val t = synthLite(e, env)
+      lowerProgram(e, env) match {
+        // a list/bag/set init is a TABLE cell (collections are tables in
+        // this engine); any other value is a SCALAR cell
+        case CV(c) if !(t.isInstanceOf[TList] || t.isInstanceOf[TBag] ||
+            t.isInstanceOf[TSet]) =>
           // SCALAR cell (reference Ex_Survey.v:44-49)
-          val after = run(body,
-            env.copy(scalars = env.scalars + (x -> folded(env, c))))
-          after.copy(scalars = restoreKeys(after.scalars, env.scalars, Seq(x)))
+          val after = exec(body, env.copy(
+            scalars = env.scalars + (x -> folded(env, c)),
+            storeTypes = env.storeTypes + (x -> t)))
+          after.copy(
+            scalars = restoreKeys(after.scalars, env.scalars, Seq(x)),
+            storeTypes = restoreKeys(after.storeTypes, env.storeTypes, Seq(x)))
         case tv => // table cell
           // shadow a same-named outer SCALAR cell too: ELoc resolution and
           // CAssign both consult env.scalars first, so leaving it bound would
@@ -58,27 +70,23 @@ object Interp {
           val hintAttrs = env.indexHints.getOrElse(x, Seq.empty)
           val compNames = hintAttrs.map(IndexTransf.componentName(x, _))
           val cleared = env.copy(scalars = env.scalars - x,
-            indexes = env.indexes - x, compoIndexes = env.compoIndexes - x)
+            indexes = env.indexes - x, compoIndexes = env.compoIndexes - x,
+            storeTypes = env.storeTypes + (x -> t) ++ compNames.map(_ -> t))
           val bound = hintAttrs match {
-            case Seq(a) if df.columns.contains(a) =>
+            case Seq(a) =>
               val idx = graft.operators.DictIndex.build(df, a)
               cleared.copy(store = cleared.store + (x -> idx.keyed),
                 indexes = cleared.indexes + (x -> idx))
             case attrs if attrs.length > 1 =>
-              // the body's filters were routed to component cells, so the
-              // cells must bind regardless; keyed when the attribute exists
-              // in the runtime schema, the plain table otherwise
-              if (attrs.forall(df.columns.contains)) {
-                val compo = graft.operators.CompoIndex.build(df, attrs)
-                cleared.copy(store = cleared.store + (x -> df) ++
-                  attrs.map(a => IndexTransf.componentName(x, a) ->
-                    compo.component(a).keyed),
-                  compoIndexes = cleared.compoIndexes + (x -> compo))
-              } else cleared.copy(store = cleared.store + (x -> df) ++
-                compNames.map(_ -> df))
+              // the body's filters were routed to component cells; a
+              // typechecked filter's attribute is one of the table's columns
+              val compo = graft.operators.CompoIndex.build(df, attrs)
+              cleared.copy(store = cleared.store + (x -> df) ++
+                compNames.zip(attrs.map(compo.component(_).keyed)),
+                compoIndexes = cleared.compoIndexes + (x -> compo))
             case _ => cleared.copy(store = cleared.store + (x -> df))
           }
-          val after = run(body, bound)
+          val after = exec(body, bound)
           // release the scope's index caches: the cells are unreachable
           // after restore, and a hint-annotated CLetMut inside a loop
           // would otherwise accumulate one cached build per iteration.
@@ -92,11 +100,13 @@ object Interp {
               e.compoIndexes.get(x).foreach(_.unpersist())
             }
           }
-          // every namespace the table cell bound: its store entry and
+          // every namespace the table cell bound: its store entry, type and
           // composed components, and the scalar / index / composed-index
           // entries it shadowed
           after.copy(
             store = restoreKeys(after.store, env.store, x +: compNames),
+            storeTypes = restoreKeys(after.storeTypes, env.storeTypes,
+              x +: compNames),
             scalars = restoreKeys(after.scalars, env.scalars, Seq(x)),
             indexes = restoreKeys(after.indexes, env.indexes, Seq(x)),
             compoIndexes =
@@ -105,11 +115,8 @@ object Interp {
 
     case CAssign(x, e) =>
       if (env.scalars.contains(x)) // existing scalar cell → scalar update
-        compileProgram(e, env) match {
-          case CV(c) => env.copy(scalars = env.scalars + (x -> folded(env, c)))
-          case TV(_) => throw TypeCheck.TypeError(
-            s"table assigned to scalar cell $x")
-        }
+        env.copy(scalars = env.scalars + (x -> folded(env,
+          asScalar(lowerProgram(e, env)))))
       else (env.indexes.get(x), env.compoIndexes.get(x),
           consChainRows(e, x)) match {
         // cons-chain INSERT into an INDEXED table: maintain the keyed index
@@ -137,32 +144,27 @@ object Interp {
             store = env.store ++ compEntries + (x -> delta.union(base)),
             compoIndexes = env.compoIndexes + (x -> compo2))
         // any other write shape: the entry is replaced and the index handles
-        // dropped (correct, no longer incremental)
+        // dropped (correct, no longer incremental). A composed table is
+        // never written this way (IndexTransf composes only tables whose
+        // every write is an insert chain), so no component goes stale. A
+        // table the program creates here gets its value's type.
         case _ =>
-          val newDf = toDF(compileProgram(e, env), env)
-          val base = env.copy(store = env.store + (x -> newDf),
-            indexes = env.indexes - x, compoIndexes = env.compoIndexes - x)
-          // DEGRADED scoped components — the binder was hint-annotated and
-          // its filters routed, but no CompoIndex handle exists (some
-          // hinted attribute was absent from the runtime schema, or an
-          // earlier non-chain write dropped it). Routed filters read the
-          // component cells, so EVERY write must re-point them at the new
-          // value or they'd serve a stale snapshot.
-          val comps = env.indexHints.getOrElse(x, Seq.empty)
-            .map(IndexTransf.componentName(x, _))
-            .filter(base.store.contains)
-          base.copy(store = base.store ++ comps.map(_ -> newDf))
+          env.copy(store = env.store + (x -> toDF(lowerProgram(e, env), env)),
+            indexes = env.indexes - x, compoIndexes = env.compoIndexes - x,
+            storeTypes = env.storeTypes + (x -> env.storeTypes.getOrElse(x,
+              synthLite(e, env))))
       }
 
     case CIf(e, c1, c2) =>
-      val cond = evalScalar(env, asBoolCol(compileProgram(e, env)))
+      val cond = evalScalar(env, asScalar(lowerProgram(e, env)))
         .asInstanceOf[Boolean]
-      run(if (cond) c1 else c2, env)
+      exec(if (cond) c1 else c2, env)
 
     case CForeach(e, x, body) => // driver event loop (Interpret.v:519-523)
       // a row-free list (a literal, or built from loop-bound values) is
       // iterated on the driver; a table is collected
-      val src = compileProgram(e, env)
+      val src = lowerProgram(e, env)
+      val elemT = TypeCheck.elemOf(synthLite(e, env))
       val (schema, rows) = (src match {
         case CV(c) => Compiler.driverTable(env, c)
         case TV(_) => None
@@ -184,11 +186,7 @@ object Interp {
       rows.foldLeft(env) { (acc, row) =>
         val bound = CV(Compiler.rowLiteral(row, schema, cols))
         // x is scoped to the body; restore afterwards
-        val after = run(body, acc.bind(x, bound))
-        acc.vars.get(x) match {
-          case Some(v) => after.bind(x, v)
-          case None => after.copy(vars = after.vars - x)
-        }
+        exec(body, acc.bind(x, bound, elemT)).restoreVar(x, acc)
       }
   }
 
@@ -203,18 +201,9 @@ object Interp {
   private def deltaDF(rows: List[Expr], cols: Array[String],
       env: Env): DataFrame = {
     val plans = rows.map(r => Compiler.rowPlan(env.spark,
-      Compiler.asScalar(compileProgram(r, env)), cols))
+      Compiler.asScalar(lowerProgram(r, env)), cols))
     Compiler.localUnion(plans).getOrElse(plans.reduce(_ union _))
   }
-
-  private def asBoolCol(v: Val) = v match {
-    case CV(c) => c
-    case TV(_) => throw TypeCheck.TypeError("table used as condition")
-  }
-
-  private def isArrayTyped(env: Env, c: Column): Boolean =
-    env.spark.range(1).select(c.as("__v")).schema.head.dataType
-      .isInstanceOf[org.apache.spark.sql.types.ArrayType]
 
   /** Constant-fold a scalar-cell value on the driver (no job, no optimizer
     * round): a loop like `set acc := mut acc +++ line` over literal row

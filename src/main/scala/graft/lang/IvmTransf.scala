@@ -110,8 +110,10 @@ object IvmTransf {
   }
 
   /** Rewrite + prime the scalar store for every (table, attr, agg) that is
-    * both read and cons-written anywhere in the command. */
-  def transform(c: Command, env: Env): (Command, Env) = {
+    * both read and cons-written anywhere in the command; each cell's type
+    * goes into the returned env's store typing. */
+  def transform(c: Command, env0: Env): (Command, Env) = {
+    val env = Compiler.typed(env0)
     val reads = collectReads(c).distinct
     val written = consWrittenTables(c).toSet
     // soundness: only maintain a cell when EVERY write to t is the
@@ -151,8 +153,20 @@ object IvmTransf {
         case MCount => countCellName(t)
       }
       (rewrite(cmd, t, a, cell, agg),
-        acc.copy(scalars = acc.scalars + (cell -> inits(m))))
+        acc.copy(scalars = acc.scalars + (cell -> inits(m)),
+          storeTypes = acc.storeTypes + (cell -> cellType(acc, t, a, agg))))
     }
+  }
+
+  /** A cell's type: the type of the read it replaces, a TInt sum or count
+    * or the option of the attribute for a minimum. */
+  private def cellType(env: Env, t: String, a: String, agg: MAgg): FType = {
+    def attr = EProj(LikeBag, ELoc(t), "r", EAccess(EVar("r"), a))
+    Compiler.synthLite(agg match {
+      case MSum => EACFold(AGSum, attr)
+      case MMin => EACIFold(AGMin, attr)
+      case MCount => EACFold(AGCount, ELoc(t))
+    }, env)
   }
 
   /** Maintenance for CLetMut-SCOPED tables — the reference examples' own
@@ -196,10 +210,11 @@ object IvmTransf {
   }
 
   /** `min(cell, v)` in AST form, NULL-aware: an empty-so-far cell (NULL)
-    * takes v (cons_to_min_head's option update, MinAgg.v). */
+    * takes v (cons_to_min_head's option update, MinAgg.v). Option-typed
+    * like the cell it updates. */
   private def minBump(cell: Expr, v: Expr): Expr =
-    EOptMatch(cell, v, "m$",
-      EIf(EBinop(OLess, v, EVar("m$")), v, EVar("m$")))
+    EOptMatch(cell, EUnop(OSome, v), "m$",
+      EUnop(OSome, EIf(EBinop(OLess, v, EVar("m$")), v, EVar("m$"))))
 
   private def rewrite(c: Command, t: String, a: String, cell: String,
       agg: MAgg): Command = {

@@ -16,8 +16,9 @@ object Lang {
   // --- Types (Language.v:4-15) ---
   sealed trait FType
   /** An elaboration hole — the analog of the reference's unannotated
-    * `ANil None` / `ANone None` atoms (Language.v:55-68): `TypeCheck.analyze`
-    * fills it from the expected type; `synthesize` rejects it. */
+    * `ANil None` / `ANone None` atoms (Language.v:55-68): `TypeCheck`'s
+    * elaboration fills it (from an expected type, a sibling operand or a
+    * comprehension's `ret` head); `synthesize` rejects it. */
   case object THole extends FType
   case object TWord extends FType
   case object TInt extends FType
@@ -49,7 +50,7 @@ object Lang {
   final case class ABool(v: Boolean) extends Atom
   final case class AString(v: String) extends Atom
   // Typed empties: write `ANil()` etc. for the unannotated form
-  // (reference `ANil None`) and let `TypeCheck.analyze` elaborate it.
+  // (reference `ANil None`); every entry point elaborates it.
   final case class ANil(t: FType = THole) extends Atom
   final case class ANone(t: FType = THole) extends Atom
   final case class AEmptyDict(kt: FType = THole, vt: FType = THole) extends Atom

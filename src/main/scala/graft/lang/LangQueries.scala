@@ -36,9 +36,9 @@ object LangQueries {
 
   /** A table program on the tiered TInt mapping (`autoWideTable`), its
     * store bound for whichever tier runs. */
-  private def tiered(s: SparkSession, dir: String, prog: Expr, store: Store,
-      storeTypes: Map[String, FType] = Map.empty): DataFrame =
-    autoWideTable(Env(Map.empty, Map.empty, s, storeTypes = storeTypes)) {
+  private def tiered(s: SparkSession, dir: String, prog: Expr,
+      store: Store): DataFrame =
+    autoWideTable(Env(Map.empty, Map.empty, s)) {
       env => rows(prog, store.bind(env, dir))
     }
 
@@ -53,6 +53,10 @@ object LangQueries {
         org.apache.spark.sql.types.StructField(name,
           org.apache.spark.sql.types.StringType))))
 
+  /** The word-op battery's store: `t(k, w)` with `w` a word, which the
+    * schema alone cannot say (a word is stored as a Long or binary). */
+  private val wordStore = Store("t" -> Seq("k" -> TInt, "w" -> TWord)).types
+
   /** The word-op battery over `t(k, w)`, with the width's own multiply
     * constant and (past width 64) wrap-add constant. */
   private def wordBattery(query: String, wm: Long, wa: Option[Long]): Expr = {
@@ -64,8 +68,7 @@ object LangQueries {
         wm : wmul(o[w], word($wm)),${wa.fold("")(v => s" wa : wadd(o[w], word($v)),")}
         ult : wltu(o[w], word(100)), slt : wlts(o[w], word(100)) }""")
     val words = Seq("du", "ds", "mu", "ms", "dz", "mz", "wm") ++ wa.map(_ => "wa")
-    require(TypeCheck.synthesize(prog, Map.empty,
-      Store("t" -> Seq("k" -> TInt, "w" -> TWord)).types) ==
+    require(TypeCheck.synthesize(prog, Map.empty, wordStore) ==
       TBag(TRecord.sorted(Seq("k" -> TInt, "ult" -> TBool, "slt" -> TBool) ++
         words.map(_ -> TWord): _*)))
     prog
@@ -248,8 +251,7 @@ object LangQueries {
           "s_nationkey" -> TInt))
       require(TypeCheck.synthesize(prog, Map.empty, store.types) ==
         TList(TRecord.sorted("nat" -> TString, "sk" -> TInt, "sup" -> TString)))
-      (s, dir) => rows(prog, store.bind(
-        Env(Map.empty, Map.empty, s, storeTypes = store.types), dir))
+      (s, dir) => rows(prog, store.bind(Env(Map.empty, Map.empty, s), dir))
     },
 
     // CORRELATED SCALAR AGGREGATES unnested (Compiler.projCorrelatedAggs):
@@ -538,8 +540,7 @@ object LangQueries {
         "supplier" -> Seq("s_name" -> TString, "s_nationkey" -> TInt))
       require(TypeCheck.synthesize(prog, Map.empty, store.types) == TBag(
         TRecord.sorted("n_nationkey" -> TInt, "names_below" -> TString)))
-      (s, dir) => rows(prog, store.bind(
-        Env(Map.empty, Map.empty, s, storeTypes = store.types), dir))
+      (s, dir) => rows(prog, store.bind(Env(Map.empty, Map.empty, s), dir))
         .orderBy("n_nationkey")
     },
 
@@ -719,7 +720,7 @@ object LangQueries {
         "nation" -> Seq("n_nationkey" -> TInt, "n_name" -> TString),
         "region" -> Seq("r_regionkey" -> TInt),
         "supplier" -> Seq("s_suppkey" -> TInt, "s_nationkey" -> TInt))
-      (s, dir) => tiered(s, dir, prog, store, store.types).orderBy("nat")
+      (s, dir) => tiered(s, dir, prog, store).orderBy("nat")
     },
 
     // DOUBLY-NESTED CORRELATED AGGREGATES (round 10 — iterating
@@ -1597,7 +1598,8 @@ object LangQueries {
         val t = Tables.load(s, dir, "orders")
           .select(col("o_orderkey").as("k"),
             (col("o_orderkey") - 700).cast("long").as("w"))
-        rows(prog, Env(Map.empty, Map("t" -> t), s)).orderBy("k")
+        rows(prog, Env(Map.empty, Map("t" -> t), s,
+          storeTypes = wordStore)).orderBy("k")
       }
     },
 
@@ -1644,7 +1646,8 @@ object LangQueries {
           % 4294967296L) - 2147483648L
         val t = Tables.load(s, dir, "orders")
           .select(col("o_orderkey").as("k"), canon32.as("w"))
-        rows(prog, Env(Map.empty, Map("t" -> t), s, wordWidth = 32))
+        rows(prog, Env(Map.empty, Map("t" -> t), s, wordWidth = 32,
+          storeTypes = wordStore))
           .orderBy("k")
       }
     },
@@ -1689,7 +1692,8 @@ object LangQueries {
         val t = Tables.load(s, dir, "orders")
           .select(col("o_orderkey").as("k"),
             fam.fromLong((col("o_orderkey") - 700).cast("long")).as("w"))
-        val out = rows(prog, Env(Map.empty, Map("t" -> t), s, wordWidth = 100))
+        val out = rows(prog, Env(Map.empty, Map("t" -> t), s, wordWidth = 100,
+          storeTypes = wordStore))
         // 100-bit residues cross the engine boundary as decimal STRINGS:
         // the comparison layer renders wide numbers through float64 (and
         // the result hash is type-sensitive), so digits are the only exact
@@ -1794,7 +1798,8 @@ object LangQueries {
         val t = Tables.load(s, dir, "orders")
           .select(col("o_orderkey").as("k"),
             fam.fromLong((col("o_orderkey") - 700).cast("long")).as("w"))
-        val out = rows(prog, Env(Map.empty, Map("t" -> t), s, wordWidth = 256))
+        val out = rows(prog, Env(Map.empty, Map("t" -> t), s, wordWidth = 256,
+          storeTypes = wordStore))
         // 256-bit residues cross the engine boundary as FOUR decimal limb
         // strings (base 2^64, limb 0 most significant): hex() renders the
         // fixed 32-byte value as 64 nibbles, each 16-nibble slice converts
@@ -1844,7 +1849,8 @@ object LangQueries {
           .select(col("o_orderkey").as("k"),
             shiftright(shiftleft((col("o_orderkey") - 700).cast("long"), 48), 48)
               .as("w"))
-        rows(prog, Env(Map.empty, Map("t" -> t), s, wordWidth = 16))
+        rows(prog, Env(Map.empty, Map("t" -> t), s, wordWidth = 16,
+          storeTypes = wordStore))
           .orderBy("k")
       }
     },

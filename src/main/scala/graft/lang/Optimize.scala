@@ -24,15 +24,22 @@ object Optimize {
   import Lang._
   import Compiler.Env
 
-  /** Transform a command + prime the environment, without running. */
+  /** Typecheck a command, transform it and prime the environment, without
+    * running. The command is elaborated against `env`'s typing
+    * (`Compiler.typed`) first, so a mistyped program throws `TypeError`
+    * before any Spark job. Every pass keeps the program's type (fiat2's
+    * `preserve_ty`), and the passes that introduce cells add their types
+    * to the env they return: the transformed command typechecks in it. */
   def transform(c: Command, env: Env): (Command, Env) = {
-    val recognized = Rewrites.normalizeCommand(c)
+    val tenv = Compiler.typed(env)
+    val typed = TypeCheck.elaborateCommand(c, tenv.varTypes, tenv.storeTypes)._1
+    val recognized = Rewrites.normalizeCommand(typed)
     val annotated = Rewrites.mapExprs(recognized)(CollectionTransf.annotate)
     // CLetMut-scoped tables first (pure source rewrite, cells as nested
     // scalar bindings), then store-bound tables (all of a table's cells
     // primed by one aggregation row), then index introduction
     val scoped = IvmTransf.transformScoped(annotated)
-    val (ivmed, primed) = IvmTransf.transform(scoped, env)
+    val (ivmed, primed) = IvmTransf.transform(scoped, tenv)
     val (indexed, idxEnv) = IndexTransf.transform(ivmed, primed)
     // The reference's Optimize.v column family LAST: proj/filter fusion
     // (proj_proj / efilter_efilter / filter_into_join / proj_into_join)
@@ -45,10 +52,11 @@ object Optimize {
     (narrowed, idxEnv)
   }
 
-  /** Optimize then interpret — the reference lifecycle's entry point A
-    * (typecheck → optimize → interp_command, SURVEY.md §3.1). */
+  /** Typecheck, optimize, then interpret — the reference lifecycle's
+    * entry point A (typecheck → optimize → interp_command, SURVEY.md
+    * §3.1). The program is typechecked once, by `transform`. */
   def run(c: Command, env: Env): Env = {
     val (cmd, primed) = transform(c, env)
-    Interp.run(cmd, primed)
+    Interp.exec(cmd, primed)
   }
 }

@@ -81,16 +81,19 @@ object Rewrites {
     }
   }
   private object Nil0 {
-    def unapply(e: Expr): Boolean = e match {
-      case EAtom(ANil(_) | AEmptyBag(_) | AEmptySet(_)) => true
-      case _ => false
+    /** An empty list, bag or set, with its element annotation. */
+    def unapply(e: Expr): Option[FType] = e match {
+      case EAtom(ANil(t)) => Some(t)
+      case EAtom(AEmptyBag(t)) => Some(t)
+      case EAtom(AEmptySet(t)) => Some(t)
+      case _ => None
     }
   }
 
   /** `flatmap t (λx. if p then [x] else [])` → `filter t p`
     * (to_filter_head, fiat2/src/fiat2/RelTransf.v:311-317). */
   val toFilterHead: Expr => Expr = {
-    case EFlatmap(tag, l, x, EIf(p, Singleton(EVar(x2)), Nil0())) if x2 == x =>
+    case EFlatmap(tag, l, x, EIf(p, Singleton(EVar(x2)), Nil0(_))) if x2 == x =>
       EFilter(tag, l, x, p)
     case e => e
   }
@@ -108,7 +111,7 @@ object Rewrites {
     * (fiat2/src/fiat2/RelTransf.v:203-208, :658-664). Ordered after
     * toJoinHead so two-table comprehensions become joins first. */
   val toFilterProjHead: Expr => Expr = {
-    case EFlatmap(tag, l, x, EIf(p, Singleton(r), Nil0())) if r != EVar(x) =>
+    case EFlatmap(tag, l, x, EIf(p, Singleton(r), Nil0(_))) if r != EVar(x) =>
       EProj(tag, EFilter(tag, l, x, p), x, r)
     case e => e
   }
@@ -119,7 +122,7 @@ object Rewrites {
     * the inner source doesn't reference x (it's a real product, not a
     * dependent lateral). */
   val toJoinHead: Expr => Expr = {
-    case EFlatmap(tag, l1, x, EFlatmap(_, l2, y, EIf(p, Singleton(r), Nil0())))
+    case EFlatmap(tag, l1, x, EFlatmap(_, l2, y, EIf(p, Singleton(r), Nil0(_))))
         if !freeVars(l2).contains(x) =>
       EJoin(tag, l1, l2, x, y, p, r)
     case e => e
@@ -234,7 +237,7 @@ object Rewrites {
   /** `if p1 (if p2 e []) []` → `if (p1 && p2) e []`
     * (merge_if, fiat2/src/fiat2/RelTransf.v:50-55). */
   val mergeIf: Expr => Expr = {
-    case EIf(p1, EIf(p2, e, n1 @ Nil0()), Nil0()) =>
+    case EIf(p1, EIf(p2, e, n1 @ Nil0(_)), Nil0(_)) =>
       EIf(EBinop(OAnd, p1, p2), e, n1)
     case e => e
   }
@@ -248,9 +251,15 @@ object Rewrites {
     * comprehension shapes become structured filters first; this head
     * catches the remaining non-singleton bodies. */
   val swapFlatmapIf: Expr => Expr = {
-    case EFlatmap(tag, l, x, EIf(p, body, n @ Nil0()))
+    case EFlatmap(tag, l, x, EIf(p, body, Nil0(t)))
         if !freeVars(p).contains(x) =>
-      EIf(p, EFlatmap(tag, l, x, body), n)
+      // the hoisted else-branch is the empty of the FLATMAP's kind, so the
+      // conditional keeps the flatmap's type
+      EIf(p, EFlatmap(tag, l, x, body), EAtom(tag match {
+        case LikeList => ANil(t)
+        case LikeBag => AEmptyBag(t)
+        case LikeSet => AEmptySet(t)
+      }))
     case e => e
   }
 

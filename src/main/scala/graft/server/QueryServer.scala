@@ -135,27 +135,31 @@ final class QueryServer(spark: SparkSession, dataDir: String,
 
   /** `POST /run` — the request body is a surface-syntax EXPRESSION (the
     * notation `Parser` accepts; each store table it names is bound, so
-    * `mut nation` etc. work). The program is parsed, join-recognized, and
-    * compiled to a distributed plan — the haskellServer's elaborate-then-run
-    * request path (haskellServer/src/Extracted.hs:2217) with the whole
-    * engine behind it.
+    * `mut nation` etc. work). The program is parsed, typechecked against
+    * those tables (each typed from its schema), join-recognized, and
+    * compiled to a distributed plan — the haskellServer's
+    * elaborate-then-run request path (haskellServer/src/Extracted.hs:2217)
+    * with the whole engine behind it. A mistyped program is a 400 before
+    * any Spark job starts.
     */
   private def runProgram(src: String): DataFrame = {
     import graft.lang.{Compiler, Parser, Rewrites}
-    val prog = Rewrites.normalize(Parser.parseExpr(src))
+    val prog = Parser.parseExpr(src)
     val env = Compiler.Env(Map.empty, store(Rewrites.locs(prog)), spark)
-    Compiler.compile(prog, env) match {
+    Compiler.compileProgram(prog, env) match {
       case Compiler.TV(df) => df
       case Compiler.CV(c) => Compiler.oneRow(spark).select(c.as("value"))
     }
   }
 
-  /** `POST /runc` — the body is a surface-syntax COMMAND program. It runs
-    * through the whole optimization pipeline (`Optimize`: recognition,
-    * collection annotation, incremental aggregate maintenance, index
-    * introduction) against the store tables it reads or assigns, and the
-    * store cell named `result` is returned as JSON — the reference's
-    * optimize-then-interpret lifecycle behind one route. */
+  /** `POST /runc` — the body is a surface-syntax COMMAND program. It is
+    * typechecked against the store tables it reads or assigns (a mistyped
+    * program is a 400 before any Spark job starts), runs through the whole
+    * optimization pipeline (`Optimize`: recognition, collection
+    * annotation, incremental aggregate maintenance, index introduction),
+    * and the store cell named `result` is returned as JSON — the
+    * reference's typecheck-optimize-interpret lifecycle behind one
+    * route. */
   private def runCommand(src: String): String = {
     import graft.lang.{Compiler, Optimize, Parser, Rewrites}
     val prog = Parser.parseCommand(src)

@@ -445,7 +445,7 @@ class CompilerSpec extends AnyFunSuite {
       "a" -> lenK,
       "a2" -> lenConst,
       "b" -> ELet(EAtom(AInt(2L)), "k", lenK)))
-    val e = Env(Map.empty, Map("t" -> t), spark).bind("k", CV(lit(5L)))
+    val e = Env(Map.empty, Map("t" -> t), spark).bind("k", CV(lit(5L)), TInt)
     val row = spark.range(1).select(asColumn(compile(rec, e)).as("r"))
       .select(col("r.a"), col("r.b")).head()
     assert((row.getLong(0), row.getLong(1)) === (5L, 2L))

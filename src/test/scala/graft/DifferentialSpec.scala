@@ -29,6 +29,7 @@ import graft.lang.Compiler.{CV, Env, TV}
   */
 class DifferentialSpec extends AnyFunSuite
     with org.scalatest.BeforeAndAfterAll {
+  import DifferentialSpec._
   lazy val spark = TestSpark.spark
 
   // The random programs exercise narrow-TInt envs directly, so BY-DESIGN
@@ -60,248 +61,7 @@ class DifferentialSpec extends AnyFunSuite
     try Pretty(c) catch { case _: Throwable => c.toString }
 
   // ---------------------------------------------------------------------
-  // Random well-typed generation
-  // ---------------------------------------------------------------------
-
-  private val fieldNames = Vector("a", "b", "c", "d")
-
-  /** Types allowed as collection elements / dict keys: TWord INCLUDED
-    * since r11 (collections of words sort/canonicalize unsigned through
-    * CanonOrder keys, closing the former signed-sort divergence — this
-    * generator is the regression tripwire for it), as are TOption
-    * DIRECTLY under TOption and option-valued dicts (the boxed
-    * nested-option encoding keeps Some(None) distinct from None and
-    * disambiguates lookup misses — the r11 closure of the last
-    * representation divergence). Only TUnit stays out (no data). */
-  private def genType(rnd: Random, d: Int, allowOpt: Boolean = true): FType =
-    if (d <= 0) rnd.nextInt(5) match {
-      case 0 | 1 => TInt
-      case 2 => TBool
-      case 3 => TString
-      case 4 => TWord
-    } else rnd.nextInt(11) match {
-      case 0 | 1 => TInt
-      case 2 => TBool
-      case 3 => TString
-      case 4 if allowOpt => TOption(
-        if (rnd.nextInt(4) == 0) TOption(genType(rnd, 0))
-        else genType(rnd, 0))
-      case 4 => TInt
-      case 5 | 6 => TList(genType(rnd, d - 1))
-      case 7 => TBag(genType(rnd, d - 1))
-      case 8 => TSet(genType(rnd, d - 1))
-      case 9 =>
-        if (rnd.nextBoolean())
-          TDict(rnd.nextInt(3) match {
-            case 0 => TInt; case 1 => TString; case 2 => TWord
-          }, genType(rnd, d - 1))
-        else
-          TRecord(fieldNames.take(2 + rnd.nextInt(2)).toList
-            .map(n => n -> genType(rnd, d - 1)))
-      case 10 => TWord
-    }
-
-  private def genValue(t: FType, rnd: Random): V = t match {
-    case TInt => VI(BigInt(rnd.between(-9, 10)))
-    case TWord => VW(Vector(0L, 1L, 2L, 5L, -1L, -2L, 1L << 62,
-      Int.MaxValue.toLong, Int.MinValue.toLong, 1L << 31)(rnd.nextInt(10)))
-    case TBool => VB(rnd.nextBoolean())
-    case TString => VS(Random.javaRandomToRandom(new java.util.Random(rnd.nextLong()))
-      .alphanumeric.take(rnd.nextInt(4)).mkString.toLowerCase)
-    case TUnit => VUnit
-    case TOption(u) =>
-      if (rnd.nextInt(10) < 3) VOpt(None) else VOpt(Some(genValue(u, rnd)))
-    case TList(u) => VList(Vector.fill(rnd.nextInt(4))(genValue(u, rnd)))
-    case TBag(u) => VBag(sortedV(Vector.fill(rnd.nextInt(4))(genValue(u, rnd))))
-    case TSet(u) => VSet(listToSet(Vector.fill(rnd.nextInt(4))(genValue(u, rnd))))
-    case TDict(kt, vt) =>
-      VDict(Vector.fill(rnd.nextInt(3))((genValue(kt, rnd), genValue(vt, rnd)))
-        .foldLeft(Vector.empty[(V, V)])((d, e) => dictInsert(d, e._1, e._2)))
-    case TRecord(fs) =>
-      VRec(fs.map { case (n, u) => n -> genValue(u, rnd) }.toVector)
-    case THole => throw new IllegalStateException("hole in generator")
-  }
-
-  private type Scope = Vector[(String, FType)]
-
-  // Globally fresh binder names: equal-depth binders in different subtrees
-  // must not shadow each other, or a variable lookup by type can resolve
-  // to the wrong (inner) binding.
-  private var uid = 0
-  private def fresh(p: String): String = { uid += 1; p + uid }
-
-  /** Random well-typed expression of type `t`. `d` is remaining depth;
-    * leaves are literals or in-scope variables. */
-  private def genExpr(t: FType, scope: Scope, rnd: Random, d: Int): Expr = {
-    def leaf(): Expr = {
-      val vars = scope.filter(_._2 == t)
-      if (vars.nonEmpty && rnd.nextBoolean()) EVar(vars(rnd.nextInt(vars.size))._1)
-      else literal(genValue(t, rnd), t)
-    }
-    if (d <= 0) return leaf()
-    def sub(u: FType, d2: Int = d - 1): Expr = genExpr(u, scope, rnd, d2)
-    def bound(x: String, u: FType, target: FType, d2: Int = d - 1): Expr =
-      genExpr(target, scope :+ (x -> u), rnd, d2)
-    // generic productions available at every type
-    def generic(): Expr = rnd.nextInt(6) match {
-      case 0 => // let
-        val u = genType(rnd, 1)
-        val x = fresh("l")
-        ELet(sub(u), x, bound(x, u, t))
-      case 1 => EIf(sub(TBool), sub(t), sub(t))
-      case 2 => // option match (inner type never itself an option: the
-        // nullable encoding flattens Some(None) — documented divergence)
-        val u = genType(rnd, 1, allowOpt = false)
-        val x = fresh("o")
-        EOptMatch(sub(TOption(u)), sub(t), x, bound(x, u, t))
-      case 3 => // record access
-        val rt = TRecord.sorted("a" -> t, "b" -> TInt)
-        EAccess(sub(rt), "a")
-      case 4 => // right fold of a list into t
-        val u = genType(rnd, 1)
-        val x = fresh("x"); val a = fresh("acc")
-        EFold(sub(TList(u), 1), sub(t, 1), x, a,
-          genExpr(t, scope ++ Vector(x -> u, a -> t), rnd, d - 1))
-      case 5 => // dict fold into t
-        val kt = if (rnd.nextBoolean()) TInt else TString
-        val vt = genType(rnd, 0)
-        val k = fresh("k"); val v = fresh("v"); val a = fresh("acc")
-        EDictFold(sub(TDict(kt, vt), 1), sub(t, 1), k, v, a,
-          genExpr(t, scope ++ Vector(k -> kt, v -> vt, a -> t), rnd, d - 1))
-    }
-    if (rnd.nextInt(100) < 18) return generic()
-    t match {
-      case TInt => rnd.nextInt(8) match {
-        case 0 => EBinop(OPlus, sub(TInt), sub(TInt))
-        case 1 => EBinop(OMinus, sub(TInt), sub(TInt))
-        case 2 => EBinop(if (rnd.nextBoolean()) ODiv else OMod,
-          sub(TInt), sub(TInt))
-        case 3 => EBinop(OTimes, sub(TInt, math.min(d - 1, 1)),
-          sub(TInt, math.min(d - 1, 1)))
-        case 4 => EUnop(ONeg, sub(TInt))
-        case 5 => EUnop(OLength, sub(TList(genType(rnd, d - 2)), d - 1))
-        case 6 => EUnop(OLengthString, sub(TString))
-        case 7 =>
-          val coll = rnd.nextInt(3) match {
-            case 0 => TList(TInt); case 1 => TBag(TInt); case 2 => TSet(TInt)
-          }
-          EACFold(if (rnd.nextBoolean()) AGSum else AGCount, sub(coll))
-      }
-      case TWord => rnd.nextInt(6) match {
-        case 0 => EBinop(OWPlus, sub(TWord), sub(TWord))
-        case 1 => EBinop(OWMinus, sub(TWord), sub(TWord))
-        case 2 => EBinop(OWTimes, sub(TWord), sub(TWord))
-        case 3 => EBinop(Vector(OWDivU, OWDivS, OWModU, OWModS)(rnd.nextInt(4)),
-          sub(TWord), sub(TWord))
-        case 4 => EUnop(OWNeg, sub(TWord))
-        case 5 =>
-          // wrap-fold an OWRange back to a word: hi = lo + small keeps the
-          // length ≤ 8 at every width (or empty when the add wraps past
-          // lo), so the unsigned-length wrap semantics get fuzzed without
-          // materializing a large range.
-          val lo = fresh("lo"); val x = fresh("x"); val a = fresh("a")
-          EFold(
-            ELet(sub(TWord, 1), lo, EBinop(OWRange, EVar(lo),
-              EBinop(OWPlus, EVar(lo), EAtom(AWord(rnd.nextInt(9)))))),
-            sub(TWord, 1), x, a, EBinop(OWPlus, EVar(x), EVar(a)))
-      }
-      case TBool => rnd.nextInt(6) match {
-        case 0 => EBinop(OLess, sub(TInt), sub(TInt))
-        case 1 =>
-          val u = genType(rnd, math.min(d - 1, 2))
-          EBinop(OEq, sub(u), sub(u))
-        case 2 => EBinop(OAnd, sub(TBool), sub(TBool))
-        case 3 => EBinop(OOr, sub(TBool), sub(TBool))
-        case 4 => EUnop(ONot, sub(TBool))
-        case 5 => EBinop(if (rnd.nextBoolean()) OWLessU else OWLessS,
-          sub(TWord), sub(TWord))
-      }
-      case TString =>
-        if (rnd.nextBoolean()) EBinop(OConcatString, sub(TString), sub(TString))
-        else EUnop(OIntToString, sub(TInt))
-      case TOption(TInt) if rnd.nextInt(4) == 0 =>
-        val coll = if (rnd.nextBoolean()) TSet(TInt) else TList(TInt)
-        EACIFold(if (rnd.nextBoolean()) AGMin else AGMax, sub(coll))
-      case TOption(u) => rnd.nextInt(3) match {
-        case 0 => EUnop(OSome, sub(u))
-        case 1 => leaf()
-        case 2 =>
-          val kt = if (rnd.nextBoolean()) TInt else TString
-          EBinop(OLookup, sub(TDict(kt, u)), sub(kt))
-      }
-      case TList(u) => rnd.nextInt(7) match {
-        case 0 => EBinop(OCons, sub(u), sub(TList(u)))
-        case 1 => EBinop(OConcat, sub(TList(u)), sub(TList(u)))
-        case 2 =>
-          val src = rnd.nextInt(3) match {
-            case 0 => (LikeList, TList(u))
-            case 1 => (LikeBag, TBag(u)); case 2 => (LikeSet, TSet(u))
-          }
-          ESort(src._1, sub(src._2))
-        case 3 =>
-          val x = fresh("x")
-          EFilter(LikeList, sub(TList(u)), x, bound(x, u, TBool))
-        case 4 =>
-          val u2 = genType(rnd, 1)
-          val x = fresh("x")
-          EProj(LikeList, sub(TList(u2)), x, bound(x, u2, u))
-        case 5 if rnd.nextBoolean() =>
-          val u2 = genType(rnd, 1)
-          val x = fresh("x")
-          EFlatmap(LikeList, sub(TList(u2), 1), x, bound(x, u2, TList(u)))
-        case 5 => // lockstep zip-flatmap, cut at the shorter side
-          val u1 = genType(rnd, 1); val u2 = genType(rnd, 1)
-          val zx = fresh("zx"); val zy = fresh("zy")
-          EFlatmap2(sub(TList(u1), 1), sub(TList(u2), 1), zx, zy,
-            genExpr(TList(u), scope ++ Vector(zx -> u1, zy -> u2),
-              rnd, d - 1))
-        case 6 if u == TInt =>
-          val lo = rnd.between(-5, 5)
-          EBinop(ORange, EAtom(AInt(lo)), EAtom(AInt(lo + rnd.nextInt(6))))
-        case 6 =>
-          val u1 = genType(rnd, 1); val u2 = genType(rnd, 1)
-          val jx = fresh("jx"); val jy = fresh("jy")
-          val sc = scope ++ Vector(jx -> u1, jy -> u2)
-          EJoin(LikeList, sub(TList(u1), 1), sub(TList(u2), 1),
-            jx, jy, genExpr(TBool, sc, rnd, 1),
-            genExpr(u, sc, rnd, d - 1))
-      }
-      case TBag(u) => rnd.nextInt(4) match {
-        case 0 => EBinop(OBagInsert, sub(TBag(u)), sub(u))
-        case 1 => EBagOf(sub(TList(u)))
-        case 2 =>
-          val x = fresh("x")
-          EFilter(LikeBag, sub(TBag(u)), x, bound(x, u, TBool))
-        case 3 =>
-          val u2 = genType(rnd, 1)
-          val x = fresh("x")
-          EProj(LikeBag, sub(TBag(u2)), x, bound(x, u2, u))
-      }
-      case TSet(u) => rnd.nextInt(4) match {
-        case 0 => EBinop(OSetInsert, sub(TSet(u)), sub(u))
-        case 1 => ESetOf(sub(TList(u)))
-        case 2 =>
-          val x = fresh("x")
-          EFilter(LikeSet, sub(TSet(u)), x, bound(x, u, TBool))
-        case 3 =>
-          val u2 = genType(rnd, 1)
-          val x = fresh("x")
-          EProj(LikeSet, sub(TSet(u2)), x, bound(x, u2, u))
-      }
-      case TDict(kt, vt) => rnd.nextInt(3) match {
-        case 0 => ETernop(OInsert, sub(TDict(kt, vt)), sub(kt), sub(vt))
-        case 1 => EBinop(ODelete, sub(TDict(kt, vt)), sub(kt))
-        case 2 => leaf()
-      }
-      case TRecord(fs) =>
-        if (rnd.nextBoolean()) ERecord(fs.map { case (n, u) => n -> sub(u) })
-        else leaf()
-      case _ => leaf()
-    }
-  }
-
-  // ---------------------------------------------------------------------
-  // Harness
+  // Harness (the generators are in the companion object)
   // ---------------------------------------------------------------------
 
   private def compiledScalar(e: Expr, t: FType): V =
@@ -666,10 +426,6 @@ class DifferentialSpec extends AnyFunSuite
   // Table-level pipelines
   // ---------------------------------------------------------------------
 
-  private val rowT = TRecord.sorted(
-    "k" -> TInt, "s" -> TString, "w" -> TOption(TInt))
-  private val rowU = TRecord.sorted("k" -> TInt, "v" -> TInt)
-
   private def toSparkAny(v: V): Any = v match {
     case VUnit => null
     case VW(x) => x
@@ -701,39 +457,6 @@ class DifferentialSpec extends AnyFunSuite
       case u => rows.map(r => fromSpark(r.get(r.fieldIndex("value")), u))
     }
     sortedV(vs)
-  }
-
-  private def genTablePipeline(rnd: Random, d: Int): (Expr, FType) = {
-    if (d <= 0)
-      return (ELoc(if (rnd.nextBoolean()) "t1" else "t2"),
-        if (rnd.nextBoolean()) rowT else rowU) match {
-        case (ELoc("t1"), _) => (ELoc("t1"), rowT)
-        case _ => (ELoc("t2"), rowU)
-      }
-    val (src, et) = genTablePipeline(rnd, d - 1)
-    rnd.nextInt(6) match {
-      case 0 => (EFilter(LikeList, src, "r",
-        genExpr(TBool, Vector("r" -> et), rnd, 2)), et)
-      case 1 =>
-        val outT = TRecord.sorted("a" -> TInt, "b" -> genType(rnd, 1))
-        (EProj(LikeList, src, "r",
-          genExpr(outT, Vector("r" -> et), rnd, 2)), outT)
-      case 2 => // join against the other base table, keyed on an int field
-        // of whatever row type the pipeline has reached
-        val keyFld = et match {
-          case TRecord(fs) => fs.collectFirst { case (n, TInt) => n }.get
-          case _ => fail(s"pipeline row type is not a record: $et")
-        }
-        val outT = TRecord.sorted("a" -> TInt, "b" -> TInt)
-        val sc = Vector("jx" -> et, "jy" -> (rowU: FType))
-        (EJoin(LikeList, src, ELoc("t2"), "jx", "jy",
-          EBinop(OEq, EAccess(EVar("jx"), keyFld), EAccess(EVar("jy"), "k")),
-          genExpr(outT, sc, rnd, 2)), outT)
-      case 3 => (EBinop(OCons, literal(genValue(et, rnd), et), src), et)
-      case 4 if et == rowT => (EBinop(OConcat, src, ELoc("t1")), et)
-      case 4 => (ESort(LikeList, src), et)
-      case 5 => (ESort(LikeList, src), et)
-    }
   }
 
   test("table pipelines: compiler == reference interpreter (multiset)") {
@@ -1865,66 +1588,6 @@ class DifferentialSpec extends AnyFunSuite
   // Command programs
   // ---------------------------------------------------------------------
 
-  private def genCommand(rnd: Random, d: Int): Command =
-    if (d <= 0) CSkip
-    else rnd.nextInt(10) match {
-      case 6 => // scoped mutable TABLE cell shadowing the global `t`:
-        // the body mutates the inner cell; the outer binding must be
-        // restored on exit (Interp.CLetMut save/restore discipline)
-        CLetMut(EFilter(LikeList, ELoc("t"), "r",
-          EBinop(OLess, EAccess(EVar("r"), "k"), EAtom(AInt(rnd.between(-2, 6))))),
-          "t",
-          CSeq(
-            CAssign("t", EBinop(OCons, literal(genValue(rowU, rnd), rowU),
-              ELoc("t"))),
-            genCommand(rnd, d - 1)))
-      case 7 => // scoped mutable SCALAR cell read by a later filter; inner
-        // updates fold eagerly (Interpret.v:514); scope restores on exit
-        CLetMut(EAtom(AInt(rnd.between(-3, 4))), "lim",
-          CSeq(
-            CAssign("lim", EBinop(OPlus, ELoc("lim"), EAtom(AInt(1)))),
-            CAssign("out", EFilter(LikeList, ELoc("t"), "r",
-              EBinop(OLess, EAccess(EVar("r"), "k"), ELoc("lim"))))))
-      case 0 => CSeq(genCommand(rnd, d - 1), genCommand(rnd, d - 1))
-      case 1 => // rebuild out from a pipeline over t
-        CAssign("out", EFilter(LikeList, ELoc("t"), "r",
-          genExpr(TBool, Vector("r" -> rowU), rnd, 2)))
-      case 2 => // insert a literal row
-        CAssign("t", EBinop(OCons, literal(genValue(rowU, rnd), rowU),
-          ELoc("t")))
-      case 3 => CIf(EBinop(OLess, EAtom(AInt(rnd.between(-2, 3))),
-        EAtom(AInt(0))), genCommand(rnd, d - 1), genCommand(rnd, d - 1))
-      case 4 => // loop over a small literal list, inserting per element
-        CForeach(literal(genValue(TList(TInt), rnd), TList(TInt)), "i",
-          CAssign("t", EBinop(OCons,
-            ERecord(List("k" -> EVar("i"), "v" -> EAtom(AInt(rnd.nextInt(5))))),
-            ELoc("t"))))
-      case 5 => // scoped immutable binding used in a filter
-        CLet(EAtom(AInt(rnd.between(-5, 6))), "lim",
-          CAssign("out", EFilter(LikeList, ELoc("t"), "r",
-            EBinop(OLess, EAccess(EVar("r"), "k"), EVar("lim")))))
-      case 8 => // CORRELATED aggregate reached through the COMMAND layer:
-        // per t-row, count the t2 rows tied to it — Interp must route the
-        // assignment through the same decorrelation the expression fuzz
-        // proves (round 10: the Interp × decorrelation composition axis)
-        CAssign("out", EProj(LikeList, ELoc("t"), "x",
-          ERecord(List("k" -> EAccess(EVar("x"), "k"),
-            "v" -> EUnop(OLength, EFilter(LikeList, ELoc("t2"), "y",
-              EBinop(OEq, EAccess(EVar("y"), "k"),
-                EAccess(EVar("x"), "k"))))))))
-      case _ => // loop-carried correlated aggregates: each iteration
-        // rebuilds out from a correlated-aggregate filter thresholded by
-        // the LOOP element (the decorrelated plan re-derives per tick
-        // against the current mutable t)
-        CForeach(literal(genValue(TList(TInt), rnd), TList(TInt)), "i",
-          CAssign("out", EFilter(LikeList, ELoc("t"), "r",
-            EBinop(OLess,
-              EUnop(OLength, EFilter(LikeList, ELoc("t2"), "y",
-                EBinop(OEq, EAccess(EVar("y"), "k"),
-                  EAccess(EVar("r"), "k")))),
-              EBinop(OPlus, EVar("i"), EAtom(AInt(2)))))))
-    }
-
   test("command programs: compiler+Interp == reference interpreter") {
     val rnd0 = new Random(31337)
     val tRows = Vector.fill(12)(genValue(rowU, rnd0))
@@ -2133,7 +1796,7 @@ class DifferentialSpec extends AnyFunSuite
       "t" -> VList(rows), "acc" -> VW(0L))).store("acc")
     val env0 = Env(Map.empty, Map("t" -> tableDF(rows, rowW)), spark,
       scalars = Map("acc" -> org.apache.spark.sql.functions.lit(0L)),
-      storeTypes = Map("t" -> TList(rowW)))
+      storeTypes = Map("t" -> TList(rowW), "acc" -> TWord))
     val fin = Interp.run(prog, env0)
     val got = spark.range(1).select(fin.scalars("acc").as("v"))
       .head.getLong(0)
@@ -2732,4 +2395,351 @@ class DifferentialSpec extends AnyFunSuite
       assert(ran(s) + directed(s) == perShape)
     }
   }
+}
+
+/** The seeded generators of well-typed programs, shared with
+  * `PreserveTySpec`. */
+object DifferentialSpec {
+  import Lang._
+  import RefInterp._
+
+  // ---------------------------------------------------------------------
+  // Random well-typed generation
+  // ---------------------------------------------------------------------
+
+  val fieldNames = Vector("a", "b", "c", "d")
+
+  /** Types allowed as collection elements / dict keys: TWord INCLUDED
+    * since r11 (collections of words sort/canonicalize unsigned through
+    * CanonOrder keys, closing the former signed-sort divergence — this
+    * generator is the regression tripwire for it), as are TOption
+    * DIRECTLY under TOption and option-valued dicts (the boxed
+    * nested-option encoding keeps Some(None) distinct from None and
+    * disambiguates lookup misses — the r11 closure of the last
+    * representation divergence). Only TUnit stays out (no data). */
+  def genType(rnd: Random, d: Int, allowOpt: Boolean = true): FType =
+    if (d <= 0) rnd.nextInt(5) match {
+      case 0 | 1 => TInt
+      case 2 => TBool
+      case 3 => TString
+      case 4 => TWord
+    } else rnd.nextInt(11) match {
+      case 0 | 1 => TInt
+      case 2 => TBool
+      case 3 => TString
+      case 4 if allowOpt => TOption(
+        if (rnd.nextInt(4) == 0) TOption(genType(rnd, 0))
+        else genType(rnd, 0))
+      case 4 => TInt
+      case 5 | 6 => TList(genType(rnd, d - 1))
+      case 7 => TBag(genType(rnd, d - 1))
+      case 8 => TSet(genType(rnd, d - 1))
+      case 9 =>
+        if (rnd.nextBoolean())
+          TDict(rnd.nextInt(3) match {
+            case 0 => TInt; case 1 => TString; case 2 => TWord
+          }, genType(rnd, d - 1))
+        else
+          TRecord(fieldNames.take(2 + rnd.nextInt(2)).toList
+            .map(n => n -> genType(rnd, d - 1)))
+      case 10 => TWord
+    }
+
+  def genValue(t: FType, rnd: Random): V = t match {
+    case TInt => VI(BigInt(rnd.between(-9, 10)))
+    case TWord => VW(Vector(0L, 1L, 2L, 5L, -1L, -2L, 1L << 62,
+      Int.MaxValue.toLong, Int.MinValue.toLong, 1L << 31)(rnd.nextInt(10)))
+    case TBool => VB(rnd.nextBoolean())
+    case TString => VS(Random.javaRandomToRandom(new java.util.Random(rnd.nextLong()))
+      .alphanumeric.take(rnd.nextInt(4)).mkString.toLowerCase)
+    case TUnit => VUnit
+    case TOption(u) =>
+      if (rnd.nextInt(10) < 3) VOpt(None) else VOpt(Some(genValue(u, rnd)))
+    case TList(u) => VList(Vector.fill(rnd.nextInt(4))(genValue(u, rnd)))
+    case TBag(u) => VBag(sortedV(Vector.fill(rnd.nextInt(4))(genValue(u, rnd))))
+    case TSet(u) => VSet(listToSet(Vector.fill(rnd.nextInt(4))(genValue(u, rnd))))
+    case TDict(kt, vt) =>
+      VDict(Vector.fill(rnd.nextInt(3))((genValue(kt, rnd), genValue(vt, rnd)))
+        .foldLeft(Vector.empty[(V, V)])((d, e) => dictInsert(d, e._1, e._2)))
+    case TRecord(fs) =>
+      VRec(fs.map { case (n, u) => n -> genValue(u, rnd) }.toVector)
+    case THole => throw new IllegalStateException("hole in generator")
+  }
+
+  type Scope = Vector[(String, FType)]
+
+  // Globally fresh binder names: equal-depth binders in different subtrees
+  // must not shadow each other, or a variable lookup by type can resolve
+  // to the wrong (inner) binding.
+  var uid = 0
+  def fresh(p: String): String = { uid += 1; p + uid }
+
+  /** Random well-typed expression of type `t`. `d` is remaining depth;
+    * leaves are literals or in-scope variables. */
+  def genExpr(t: FType, scope: Scope, rnd: Random, d: Int): Expr = {
+    def leaf(): Expr = {
+      val vars = scope.filter(_._2 == t)
+      if (vars.nonEmpty && rnd.nextBoolean()) EVar(vars(rnd.nextInt(vars.size))._1)
+      else literal(genValue(t, rnd), t)
+    }
+    if (d <= 0) return leaf()
+    def sub(u: FType, d2: Int = d - 1): Expr = genExpr(u, scope, rnd, d2)
+    def bound(x: String, u: FType, target: FType, d2: Int = d - 1): Expr =
+      genExpr(target, scope :+ (x -> u), rnd, d2)
+    // generic productions available at every type
+    def generic(): Expr = rnd.nextInt(6) match {
+      case 0 => // let
+        val u = genType(rnd, 1)
+        val x = fresh("l")
+        ELet(sub(u), x, bound(x, u, t))
+      case 1 => EIf(sub(TBool), sub(t), sub(t))
+      case 2 => // option match (inner type never itself an option: the
+        // nullable encoding flattens Some(None) — documented divergence)
+        val u = genType(rnd, 1, allowOpt = false)
+        val x = fresh("o")
+        EOptMatch(sub(TOption(u)), sub(t), x, bound(x, u, t))
+      case 3 => // record access
+        val rt = TRecord.sorted("a" -> t, "b" -> TInt)
+        EAccess(sub(rt), "a")
+      case 4 => // right fold of a list into t
+        val u = genType(rnd, 1)
+        val x = fresh("x"); val a = fresh("acc")
+        EFold(sub(TList(u), 1), sub(t, 1), x, a,
+          genExpr(t, scope ++ Vector(x -> u, a -> t), rnd, d - 1))
+      case 5 => // dict fold into t
+        val kt = if (rnd.nextBoolean()) TInt else TString
+        val vt = genType(rnd, 0)
+        val k = fresh("k"); val v = fresh("v"); val a = fresh("acc")
+        EDictFold(sub(TDict(kt, vt), 1), sub(t, 1), k, v, a,
+          genExpr(t, scope ++ Vector(k -> kt, v -> vt, a -> t), rnd, d - 1))
+    }
+    if (rnd.nextInt(100) < 18) return generic()
+    t match {
+      case TInt => rnd.nextInt(8) match {
+        case 0 => EBinop(OPlus, sub(TInt), sub(TInt))
+        case 1 => EBinop(OMinus, sub(TInt), sub(TInt))
+        case 2 => EBinop(if (rnd.nextBoolean()) ODiv else OMod,
+          sub(TInt), sub(TInt))
+        case 3 => EBinop(OTimes, sub(TInt, math.min(d - 1, 1)),
+          sub(TInt, math.min(d - 1, 1)))
+        case 4 => EUnop(ONeg, sub(TInt))
+        case 5 => EUnop(OLength, sub(TList(genType(rnd, d - 2)), d - 1))
+        case 6 => EUnop(OLengthString, sub(TString))
+        case 7 =>
+          val coll = rnd.nextInt(3) match {
+            case 0 => TList(TInt); case 1 => TBag(TInt); case 2 => TSet(TInt)
+          }
+          EACFold(if (rnd.nextBoolean()) AGSum else AGCount, sub(coll))
+      }
+      case TWord => rnd.nextInt(6) match {
+        case 0 => EBinop(OWPlus, sub(TWord), sub(TWord))
+        case 1 => EBinop(OWMinus, sub(TWord), sub(TWord))
+        case 2 => EBinop(OWTimes, sub(TWord), sub(TWord))
+        case 3 => EBinop(Vector(OWDivU, OWDivS, OWModU, OWModS)(rnd.nextInt(4)),
+          sub(TWord), sub(TWord))
+        case 4 => EUnop(OWNeg, sub(TWord))
+        case 5 =>
+          // wrap-fold an OWRange back to a word: hi = lo + small keeps the
+          // length ≤ 8 at every width (or empty when the add wraps past
+          // lo), so the unsigned-length wrap semantics get fuzzed without
+          // materializing a large range.
+          val lo = fresh("lo"); val x = fresh("x"); val a = fresh("a")
+          EFold(
+            ELet(sub(TWord, 1), lo, EBinop(OWRange, EVar(lo),
+              EBinop(OWPlus, EVar(lo), EAtom(AWord(rnd.nextInt(9)))))),
+            sub(TWord, 1), x, a, EBinop(OWPlus, EVar(x), EVar(a)))
+      }
+      case TBool => rnd.nextInt(6) match {
+        case 0 => EBinop(OLess, sub(TInt), sub(TInt))
+        case 1 =>
+          val u = genType(rnd, math.min(d - 1, 2))
+          EBinop(OEq, sub(u), sub(u))
+        case 2 => EBinop(OAnd, sub(TBool), sub(TBool))
+        case 3 => EBinop(OOr, sub(TBool), sub(TBool))
+        case 4 => EUnop(ONot, sub(TBool))
+        case 5 => EBinop(if (rnd.nextBoolean()) OWLessU else OWLessS,
+          sub(TWord), sub(TWord))
+      }
+      case TString =>
+        if (rnd.nextBoolean()) EBinop(OConcatString, sub(TString), sub(TString))
+        else EUnop(OIntToString, sub(TInt))
+      case TOption(TInt) if rnd.nextInt(4) == 0 =>
+        val coll = if (rnd.nextBoolean()) TSet(TInt) else TList(TInt)
+        EACIFold(if (rnd.nextBoolean()) AGMin else AGMax, sub(coll))
+      case TOption(u) => rnd.nextInt(3) match {
+        case 0 => EUnop(OSome, sub(u))
+        case 1 => leaf()
+        case 2 =>
+          val kt = if (rnd.nextBoolean()) TInt else TString
+          EBinop(OLookup, sub(TDict(kt, u)), sub(kt))
+      }
+      case TList(u) => rnd.nextInt(7) match {
+        case 0 => EBinop(OCons, sub(u), sub(TList(u)))
+        case 1 => EBinop(OConcat, sub(TList(u)), sub(TList(u)))
+        case 2 =>
+          val src = rnd.nextInt(3) match {
+            case 0 => (LikeList, TList(u))
+            case 1 => (LikeBag, TBag(u)); case 2 => (LikeSet, TSet(u))
+          }
+          ESort(src._1, sub(src._2))
+        case 3 =>
+          val x = fresh("x")
+          EFilter(LikeList, sub(TList(u)), x, bound(x, u, TBool))
+        case 4 =>
+          val u2 = genType(rnd, 1)
+          val x = fresh("x")
+          EProj(LikeList, sub(TList(u2)), x, bound(x, u2, u))
+        case 5 if rnd.nextBoolean() =>
+          val u2 = genType(rnd, 1)
+          val x = fresh("x")
+          EFlatmap(LikeList, sub(TList(u2), 1), x, bound(x, u2, TList(u)))
+        case 5 => // lockstep zip-flatmap, cut at the shorter side
+          val u1 = genType(rnd, 1); val u2 = genType(rnd, 1)
+          val zx = fresh("zx"); val zy = fresh("zy")
+          EFlatmap2(sub(TList(u1), 1), sub(TList(u2), 1), zx, zy,
+            genExpr(TList(u), scope ++ Vector(zx -> u1, zy -> u2),
+              rnd, d - 1))
+        case 6 if u == TInt =>
+          val lo = rnd.between(-5, 5)
+          EBinop(ORange, EAtom(AInt(lo)), EAtom(AInt(lo + rnd.nextInt(6))))
+        case 6 =>
+          val u1 = genType(rnd, 1); val u2 = genType(rnd, 1)
+          val jx = fresh("jx"); val jy = fresh("jy")
+          val sc = scope ++ Vector(jx -> u1, jy -> u2)
+          EJoin(LikeList, sub(TList(u1), 1), sub(TList(u2), 1),
+            jx, jy, genExpr(TBool, sc, rnd, 1),
+            genExpr(u, sc, rnd, d - 1))
+      }
+      case TBag(u) => rnd.nextInt(4) match {
+        case 0 => EBinop(OBagInsert, sub(TBag(u)), sub(u))
+        case 1 => EBagOf(sub(TList(u)))
+        case 2 =>
+          val x = fresh("x")
+          EFilter(LikeBag, sub(TBag(u)), x, bound(x, u, TBool))
+        case 3 =>
+          val u2 = genType(rnd, 1)
+          val x = fresh("x")
+          EProj(LikeBag, sub(TBag(u2)), x, bound(x, u2, u))
+      }
+      case TSet(u) => rnd.nextInt(4) match {
+        case 0 => EBinop(OSetInsert, sub(TSet(u)), sub(u))
+        case 1 => ESetOf(sub(TList(u)))
+        case 2 =>
+          val x = fresh("x")
+          EFilter(LikeSet, sub(TSet(u)), x, bound(x, u, TBool))
+        case 3 =>
+          val u2 = genType(rnd, 1)
+          val x = fresh("x")
+          EProj(LikeSet, sub(TSet(u2)), x, bound(x, u2, u))
+      }
+      case TDict(kt, vt) => rnd.nextInt(3) match {
+        case 0 => ETernop(OInsert, sub(TDict(kt, vt)), sub(kt), sub(vt))
+        case 1 => EBinop(ODelete, sub(TDict(kt, vt)), sub(kt))
+        case 2 => leaf()
+      }
+      case TRecord(fs) =>
+        if (rnd.nextBoolean()) ERecord(fs.map { case (n, u) => n -> sub(u) })
+        else leaf()
+      case _ => leaf()
+    }
+  }
+
+
+  val rowT = TRecord.sorted(
+    "k" -> TInt, "s" -> TString, "w" -> TOption(TInt))
+  val rowU = TRecord.sorted("k" -> TInt, "v" -> TInt)
+
+  def genTablePipeline(rnd: Random, d: Int): (Expr, FType) = {
+    if (d <= 0)
+      return (ELoc(if (rnd.nextBoolean()) "t1" else "t2"),
+        if (rnd.nextBoolean()) rowT else rowU) match {
+        case (ELoc("t1"), _) => (ELoc("t1"), rowT)
+        case _ => (ELoc("t2"), rowU)
+      }
+    val (src, et) = genTablePipeline(rnd, d - 1)
+    rnd.nextInt(6) match {
+      case 0 => (EFilter(LikeList, src, "r",
+        genExpr(TBool, Vector("r" -> et), rnd, 2)), et)
+      case 1 =>
+        val outT = TRecord.sorted("a" -> TInt, "b" -> genType(rnd, 1))
+        (EProj(LikeList, src, "r",
+          genExpr(outT, Vector("r" -> et), rnd, 2)), outT)
+      case 2 => // join against the other base table, keyed on an int field
+        // of whatever row type the pipeline has reached
+        val keyFld = et match {
+          case TRecord(fs) => fs.collectFirst { case (n, TInt) => n }.get
+          case _ => throw new IllegalStateException(
+            s"pipeline row type is not a record: $et")
+        }
+        val outT = TRecord.sorted("a" -> TInt, "b" -> TInt)
+        val sc = Vector("jx" -> et, "jy" -> (rowU: FType))
+        (EJoin(LikeList, src, ELoc("t2"), "jx", "jy",
+          EBinop(OEq, EAccess(EVar("jx"), keyFld), EAccess(EVar("jy"), "k")),
+          genExpr(outT, sc, rnd, 2)), outT)
+      case 3 => (EBinop(OCons, literal(genValue(et, rnd), et), src), et)
+      case 4 if et == rowT => (EBinop(OConcat, src, ELoc("t1")), et)
+      case 4 => (ESort(LikeList, src), et)
+      case 5 => (ESort(LikeList, src), et)
+    }
+  }
+
+  def genCommand(rnd: Random, d: Int): Command =
+    if (d <= 0) CSkip
+    else rnd.nextInt(10) match {
+      case 6 => // scoped mutable TABLE cell shadowing the global `t`:
+        // the body mutates the inner cell; the outer binding must be
+        // restored on exit (Interp.CLetMut save/restore discipline)
+        CLetMut(EFilter(LikeList, ELoc("t"), "r",
+          EBinop(OLess, EAccess(EVar("r"), "k"), EAtom(AInt(rnd.between(-2, 6))))),
+          "t",
+          CSeq(
+            CAssign("t", EBinop(OCons, literal(genValue(rowU, rnd), rowU),
+              ELoc("t"))),
+            genCommand(rnd, d - 1)))
+      case 7 => // scoped mutable SCALAR cell read by a later filter; inner
+        // updates fold eagerly (Interpret.v:514); scope restores on exit
+        CLetMut(EAtom(AInt(rnd.between(-3, 4))), "lim",
+          CSeq(
+            CAssign("lim", EBinop(OPlus, ELoc("lim"), EAtom(AInt(1)))),
+            CAssign("out", EFilter(LikeList, ELoc("t"), "r",
+              EBinop(OLess, EAccess(EVar("r"), "k"), ELoc("lim"))))))
+      case 0 => CSeq(genCommand(rnd, d - 1), genCommand(rnd, d - 1))
+      case 1 => // rebuild out from a pipeline over t
+        CAssign("out", EFilter(LikeList, ELoc("t"), "r",
+          genExpr(TBool, Vector("r" -> rowU), rnd, 2)))
+      case 2 => // insert a literal row
+        CAssign("t", EBinop(OCons, literal(genValue(rowU, rnd), rowU),
+          ELoc("t")))
+      case 3 => CIf(EBinop(OLess, EAtom(AInt(rnd.between(-2, 3))),
+        EAtom(AInt(0))), genCommand(rnd, d - 1), genCommand(rnd, d - 1))
+      case 4 => // loop over a small literal list, inserting per element
+        CForeach(literal(genValue(TList(TInt), rnd), TList(TInt)), "i",
+          CAssign("t", EBinop(OCons,
+            ERecord(List("k" -> EVar("i"), "v" -> EAtom(AInt(rnd.nextInt(5))))),
+            ELoc("t"))))
+      case 5 => // scoped immutable binding used in a filter
+        CLet(EAtom(AInt(rnd.between(-5, 6))), "lim",
+          CAssign("out", EFilter(LikeList, ELoc("t"), "r",
+            EBinop(OLess, EAccess(EVar("r"), "k"), EVar("lim")))))
+      case 8 => // CORRELATED aggregate reached through the COMMAND layer:
+        // per t-row, count the t2 rows tied to it — Interp must route the
+        // assignment through the same decorrelation the expression fuzz
+        // proves (round 10: the Interp × decorrelation composition axis)
+        CAssign("out", EProj(LikeList, ELoc("t"), "x",
+          ERecord(List("k" -> EAccess(EVar("x"), "k"),
+            "v" -> EUnop(OLength, EFilter(LikeList, ELoc("t2"), "y",
+              EBinop(OEq, EAccess(EVar("y"), "k"),
+                EAccess(EVar("x"), "k"))))))))
+      case _ => // loop-carried correlated aggregates: each iteration
+        // rebuilds out from a correlated-aggregate filter thresholded by
+        // the LOOP element (the decorrelated plan re-derives per tick
+        // against the current mutable t)
+        CForeach(literal(genValue(TList(TInt), rnd), TList(TInt)), "i",
+          CAssign("out", EFilter(LikeList, ELoc("t"), "r",
+            EBinop(OLess,
+              EUnop(OLength, EFilter(LikeList, ELoc("t2"), "y",
+                EBinop(OEq, EAccess(EVar("y"), "k"),
+                  EAccess(EVar("r"), "k")))),
+              EBinop(OPlus, EVar("i"), EAtom(AInt(2)))))))
+    }
 }

@@ -248,47 +248,17 @@ class DivergenceSpec extends AnyFunSuite {
     assert(sortedByBytes == vals.sorted, "byte order must equal numeric order")
   }
 
-  test("strict order mode: an ambiguous type-unknown table sort raises the directed error (r12)") {
-    // The type-unknown fallback is LOUD: by default a once-per-JVM
-    // warning; under strict mode (GRAFT_STRICT_ORDER=1, or
-    // CanonOrder.withStrict) a DIRECTED error whenever a sort's element
-    // type is unsynthesizable AND the schema could hide words/bags. An
-    // untyped ESort over a Long-columned store table is exactly that
-    // case; the same sort with storeTypes declared stays allowed.
-    import org.apache.spark.sql.functions.col
-    val df = spark.range(4).select(col("id").as("k"))
-    val prog = ESort(LikeList, ELoc("t"))
-    // thread-scoped strict (CanonOrder.withStrict) — not a sys.props
-    // flip, which would leak into concurrently-running compiles under
-    // parallel test execution
-    CanonOrder.withStrict(true) {
-      val err = intercept[UnsupportedOperationException] {
-        Compiler.compile(prog,
-          Env(Map.empty, Map("t" -> df), spark)) match {
-          case Compiler.TV(d) => d.collect()
-          case _ => fail("expected a table")
-        }
-      }
-      assert(err.getMessage.contains("storeTypes"),
-        s"expected the directed strict-order error, got: ${err.getMessage}")
-      // typed: same sort, type declared — no error
-      val ok = Compiler.compile(prog, Env(Map.empty, Map("t" -> df), spark,
-        storeTypes = Map("t" -> TBag(TRecord.sorted("k" -> TInt)))))
-      assert(ok.isInstanceOf[Compiler.TV])
+  test("undeclared Long columns read as TInt: a table sort and an untyped correlated fold compile with no declaration") {
+    // An undeclared store table is typed from its schema (a Long column is
+    // a TInt), so the sort and the decorrelated fold are type-directed
+    // without a storeTypes declaration; there is no type-unknown order.
+    val df = spark.range(4).select((col("id") * -1).as("k"))
+    Compiler.compile(ESort(LikeList, ELoc("t")),
+        Env(Map.empty, Map("t" -> df), spark)) match {
+      case Compiler.TV(d) =>
+        assert(d.collect().map(_.getLong(0)).toSeq === Seq(-3L, -2L, -1L, 0L))
+      case other => fail(s"expected a table, got $other")
     }
-  }
-
-  test("strict-order trips inside decorrelation fallbacks surface as strict errors (r13)") {
-    // The correlated-body machinery drives try-direct-then-decorrelate
-    // fallbacks on UnsupportedOperationException; before r13 a strict
-    // trip inside the fallback leg was SUPPRESSED under the direct
-    // path's rewrite-as-EJoin directive — the user was told to
-    // restructure a program whose actual problem was undeclared types
-    // (observed on q_lang_corr_{fold,zip,jsrc} in the strict validation
-    // run). Pinned: an UNTYPED correlated fold now raises
-    // StrictOrderViolation naming storeTypes, with the correlation error
-    // attached as suppressed context — and declaring the types fixes it.
-    import org.apache.spark.sql.functions.col
     val t1 = spark.range(3).select(col("id").as("k"))
     val t2 = spark.range(5).select(col("id").as("k"), col("id").as("v"))
     val corr = EFilter(LikeBag, ELoc("t2"), "s",
@@ -298,24 +268,32 @@ class DivergenceSpec extends AnyFunSuite {
       EAtom(AInt(0)), "e", "a", EBinop(OPlus, EVar("e"), EVar("a")))
     val prog = EProj(LikeBag, ELoc("t1"), "n", ERecord(List(
       "k" -> EAccess(EVar("n"), "k"), "g" -> folded)))
-    CanonOrder.withStrict(true) {
-      val err = intercept[CanonOrder.StrictOrderViolation] {
-        Compiler.compileProgram(prog,
-          Env(Map.empty, Map("t1" -> t1, "t2" -> t2), spark)) match {
-          case Compiler.TV(df) => df.collect()
-          case other => other
-        }
+    val out = Compiler.compileProgram(prog,
+      Env(Map.empty, Map("t1" -> t1, "t2" -> t2), spark))
+    assert(out.asInstanceOf[Compiler.TV].df.count() == 3)
+  }
+
+  test("an undeclared Long column used as a word is a TypeError before any Spark job") {
+    // Words are never read off a schema (a word and an int share the Long
+    // encoding): the same column used with a word operator is rejected by
+    // the typecheck at the program's entry, and declaring it fixes that.
+    val df = spark.range(4).select(col("id").as("k"))
+    val prog = EProj(LikeBag, ELoc("t"), "r",
+      EBinop(OWPlus, EAccess(EVar("r"), "k"), EAtom(AWord(1))))
+    val group = s"divergence-word-${System.nanoTime()}"
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, "undeclared word column")
+    try {
+      val err = intercept[TypeCheck.TypeError] {
+        Compiler.compile(prog, Env(Map.empty, Map("t" -> df), spark))
       }
-      assert(err.getMessage.contains("storeTypes"),
-        s"strict error must direct at type declaration: ${err.getMessage}")
-      // and WITH the types declared the same program compiles and runs
-      val typed = Compiler.compileProgram(prog,
-        Env(Map.empty, Map("t1" -> t1, "t2" -> t2), spark,
-          storeTypes = Map(
-            "t1" -> TBag(TRecord.sorted("k" -> TInt)),
-            "t2" -> TBag(TRecord.sorted("k" -> TInt, "v" -> TInt)))))
-      assert(typed.asInstanceOf[Compiler.TV].df.count() == 3)
-    }
+      assert(err.getMessage.contains("expected word"), err.getMessage)
+      assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty,
+        "the mistyped program started a Spark job")
+    } finally sc.clearJobGroup()
+    val declared = Compiler.compile(prog, Env(Map.empty, Map("t" -> df), spark,
+      storeTypes = Map("t" -> TBag(TRecord.sorted("k" -> TWord)))))
+    assert(declared.asInstanceOf[Compiler.TV].df.count() == 4)
   }
 
   test("correlated aggregates over tables above the localization cap raise the directed error") {

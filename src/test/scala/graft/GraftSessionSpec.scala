@@ -16,7 +16,6 @@ class GraftSessionSpec extends AnyFunSuite {
   private val allowedSettings = Set(
     "SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_ONLY",
     "SPARK_GRAFT_REPS", "SPARK_GRAFT_BENCH_OUT",
-    "GRAFT_STRICT_ORDER",
     "java.io.tmpdir")
 
   private def scalaFiles(root: String): Seq[Path] = {

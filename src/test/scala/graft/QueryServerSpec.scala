@@ -159,7 +159,7 @@ class QueryServerSpec extends AnyFunSuite {
       // a mistyped program (a table as a condition) is a 400
       val (c3, b3) = post(s"http://localhost:$port/runc",
         "if mut nation then set result := mut nation else skip end")
-      assert(c3 === 400 && b3.contains("table used as condition"), b3)
+      assert(c3 === 400 && b3.contains("if condition"), b3)
     }
   }
 
@@ -204,11 +204,12 @@ class QueryServerSpec extends AnyFunSuite {
   }
 
   /** The call site of every job one `request` starts on the warm server,
-    * and its reply. A first send fills the relation memo and the codegen
-    * cache. JobStart reaches listeners asynchronously, so the count is
-    * read once it has been still for 300 ms, before and after the
-    * counted send (JobCountSpec's settle). */
-  private def jobsOf(request: => (Int, String)): (Seq[String], (Int, String)) = {
+    * and its reply. A first send, answered with `warm`, fills the relation
+    * memo and the codegen cache. JobStart reaches listeners
+    * asynchronously, so the count is read once it has been still for
+    * 300 ms, before and after the counted send (JobCountSpec's settle). */
+  private def jobsOf(request: => (Int, String),
+      warm: Int = 200): (Seq[String], (Int, String)) = {
     // the engine frame of each job's final stage, for failure messages
     val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -231,13 +232,76 @@ class QueryServerSpec extends AnyFunSuite {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      assert(request._1 === 200)
+      assert(request._1 === warm)
       settle()
       sites.clear()
       val reply = request
       settle()
       (sites.toArray(Array.empty[String]).toSeq, reply)
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a mistyped /run or /runc is a 400 that starts no Spark job") {
+    // the program is typechecked against its tables' types before it
+    // compiles: a string compared with an int, and an assignment that
+    // changes a table's type
+    withServer { port =>
+      for ((route, program, error) <- Seq(
+          ("/run", """n <- mut nation; check(n[n_name] == 3); ret n""", "eq"),
+          ("/runc", "set nation := mut region;\nset result := mut nation",
+            "assign changes type of nation"))) {
+        val (sites, (code, body)) =
+          jobsOf(post(s"http://localhost:$port$route", program), warm = 400)
+        assert(code === 400 && body.contains(error), body)
+        assert(sites.isEmpty, s"a mistyped $route request started " +
+          s"${sites.size} jobs: ${sites.mkString("; ")}")
+      }
+    }
+  }
+
+  test("the serve benchmark's program shapes answer 200 with their rows") {
+    // the three `/run` kinds and the `/runc` program of the benchmark's
+    // request mix, at one bound and region, against the same answers
+    // computed with the DataFrame API
+    import org.apache.spark.sql.functions._
+    def load(t: String) = graft.core.Tables.load(spark, TestSpark.sfDir, t)
+    def rows(json: String): Seq[String] = "\\{[^{}]*\\}".r.findAllIn(json).toSeq.sorted
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      rows(QueryServer.render(df, 10000))
+    val b = 35L
+    val orders = load("orders")
+    val cases = Seq(
+      ("/run", s"""n <- mut nation; check(n[n_regionkey] == 1);
+         |ret { key : n[n_nationkey], name : n[n_name] }""".stripMargin,
+        load("nation").filter(col("n_regionkey") === 1)
+          .select(col("n_nationkey").as("key"), col("n_name").as("name"))),
+      ("/run", s"""o <- mut orders; c <- mut customer;
+         |check(o[o_custkey] == c[c_custkey] && o[o_custkey] < $b);
+         |ret { okey : o[o_orderkey], cust : c[c_name] }""".stripMargin,
+        orders.join(load("customer"), col("o_custkey") === col("c_custkey"))
+          .filter(col("o_custkey") < b)
+          .select(col("c_name").as("cust"), col("o_orderkey").as("okey"))),
+      ("/run", s"""fold (o <- mut orders; check(o[o_custkey] < $b); ret o[o_orderkey])
+         |  0 v acc v + acc""".stripMargin,
+        orders.filter(col("o_custkey") < b)
+          .agg(coalesce(sum("o_orderkey"), lit(0L)).as("value"))),
+      ("/runc", s"""let mut out := nil[{k : int, n : int}] in
+         |for kv in [$b, ${b + 1}] :
+         |  set out := { k : kv,
+         |    n : len(o <- mut orders; check(o[o_custkey] == kv); ret o)
+         |  } :: mut out
+         |end;
+         |set result := mut out""".stripMargin,
+        spark.range(b, b + 2).select(col("id").as("k"))
+          .join(orders, col("k") === col("o_custkey"), "left")
+          .groupBy("k").agg(count(col("o_custkey")).as("n"))))
+    withServer { port =>
+      for ((route, program, want) <- cases) {
+        val (code, body) = post(s"http://localhost:$port$route", program)
+        assert(code === 200, body)
+        assert(rows(body) === rowsOf(want), program)
+      }
+    }
   }
 
   test("POST /runc renders its reply with one action") {

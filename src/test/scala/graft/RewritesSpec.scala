@@ -136,9 +136,11 @@ class RewritesSpec extends AnyFunSuite {
     val q = EBinop(OEq, EAccess(EVar("x"), "k"), EAccess(EVar("y"), "k"))
     val r = ERecord(List("a" -> EAccess(EVar("x"), "v"),
       "b" -> EAccess(EVar("y"), "v")))
+    // the comprehension's nils hold the {a, b} results, not t1's rows
+    val resNil = EAtom(ANil(TRecord.sorted("a" -> TInt, "b" -> TInt)))
     val comp = EFlatmap(LikeBag, ELoc("t1"), "x",
       EFlatmap(LikeBag, ELoc("t2"), "y",
-        EIf(q, EBinop(OCons, r, nil), nil)))
+        EIf(q, EBinop(OCons, r, resNil), resNil)))
     val manual = EJoin(LikeBag, ELoc("t1"), ELoc("t2"), "x", "y", q, r)
     def rows(e: Expr) = Compiler.compileProgram(e,
       Compiler.Env(Map.empty, store, spark))
