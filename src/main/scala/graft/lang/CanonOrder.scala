@@ -111,12 +111,13 @@ object CanonOrder {
     * element type needs a key, plain `sort_array` otherwise (the raw
     * order is then provably the reference's). */
   def sortArray(c: Column, elemT: FType, width: Int): Column =
-    if (needsKey(elemT, width))
-      transform(
-        sort_array(transform(c, e =>
-          struct(key(e, elemT, width).as("k"), e.as("v")))),
-        p => p("v"))
+    if (needsKey(elemT, width)) sortBy(c, key(_, elemT, width))
     else sort_array(c)
+
+  /** Decorate-sort-undecorate: `c`'s elements in the order of `k`. */
+  private def sortBy(c: Column, k: Column => Column): Column =
+    transform(sort_array(transform(c, e => struct(k(e).as("k"), e.as("v")))),
+      p => p("v"))
 
   /** (Re)order dict (key, value) entries into reference key order — used
     * both to canonicalize STORAGE on insert (`dict_insert` keeps entries
@@ -128,8 +129,5 @@ object CanonOrder {
   def dictIterOrder(entries: Column, kt: FType, vt: FType,
       width: Int): Column =
     if (!needsKey(kt, width)) entries
-    else transform(
-      sort_array(transform(entries, e =>
-        struct(key(e("key"), kt, width).as("k"), e.as("v")))),
-      p => p("v"))
+    else sortBy(entries, e => key(e("key"), kt, width))
 }

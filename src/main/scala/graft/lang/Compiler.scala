@@ -1339,13 +1339,7 @@ object Compiler {
     case CV(c) =>
       val probe = oneRow(env.spark).select(c.as("v"))
       probe.schema.head.dataType match {
-        case _: ArrayType =>
-          val ex = probe.select(explode(col("v")).as("__elem"))
-          ex.schema.head.dataType match {
-            case st: StructType =>
-              ex.select(st.fieldNames.map(f => col("__elem")(f).as(f)): _*)
-            case _ => ex.select(col("__elem").as("value"))
-          }
+        case _: ArrayType => flattenExploded(probe, col("v"))
         case _ => probe.select(col("v").as("value"))
       }
   }
@@ -1356,10 +1350,7 @@ object Compiler {
     * flatmap/if/cons) lower to real filters/projections/joins, then compile.
     * Like `compile`, it typechecks `e` first.
     */
-  def compileProgram(e: Expr, env: Env): Val = {
-    val (typedE, tenv) = elaborated(e, env)
-    lowerProgram(typedE, tenv)
-  }
+  def compileProgram(e: Expr, env: Env): Val = elaborated(e, env)(lowerProgram)
 
   /** `compileProgram` on a typechecked expression in a typed env. */
   private[lang] def lowerProgram(e: Expr, env: Env): Val =
@@ -1438,12 +1429,17 @@ object Compiler {
   }
 
   /** Flatten a per-row result expression into table columns. */
-  private def flattenResult(df: DataFrame, res: Column): DataFrame = {
-    val probe = df.select(res.as("__res"))
+  private def flattenResult(df: DataFrame, res: Column): DataFrame =
+    spread(df.select(res.as("__res")))
+
+  /** A one-column frame as table columns: its struct's fields, or the
+    * scalar as `value`. */
+  private def spread(probe: DataFrame): DataFrame = {
+    val c = col(probe.columns.head)
     probe.schema.head.dataType match {
       case st: StructType =>
-        probe.select(st.fieldNames.map(f => col("__res")(f).as(f)): _*)
-      case _ => probe.select(col("__res").as("value"))
+        probe.select(st.fieldNames.map(f => c(f).as(f)): _*)
+      case _ => probe.select(c.as("value"))
     }
   }
 
@@ -1482,15 +1478,13 @@ object Compiler {
   /** Compile a program: complete `env`'s typing (`typed`), elaborate and
     * typecheck `e` against it — a mistyped program throws `TypeError`
     * here, before any Spark job — and lower the hole-free tree. */
-  def compile(e: Expr, env: Env): Val = {
-    val (typedE, tenv) = elaborated(e, env)
-    lower(typedE, tenv)
-  }
+  def compile(e: Expr, env: Env): Val = elaborated(e, env)(lower)
 
-  /** `e` elaborated against `env` completed by `typed`, and that env. */
-  private def elaborated(e: Expr, env: Env): (Expr, Env) = {
+  /** `lowering` of `e` elaborated against `env` completed by `typed`. */
+  private def elaborated(e: Expr, env: Env)(lowering: (Expr, Env) => Val)
+      : Val = {
     val tenv = typed(env)
-    (TypeCheck.elaborate(e, tenv.varTypes, tenv.storeTypes)._1, tenv)
+    lowering(TypeCheck.elaborate(e, tenv.varTypes, tenv.storeTypes)._1, tenv)
   }
 
   /** Lower a typechecked expression in a typed env (`compile`'s body, and
@@ -2334,14 +2328,8 @@ object Compiler {
     df.sparkSession.createDataFrame(rdd, schema2)
   }
 
-  private def flattenExploded(df: DataFrame, arr: Column): DataFrame = {
-    val probe = df.select(explode(arr).as("__elem"))
-    probe.schema.head.dataType match {
-      case st: StructType =>
-        probe.select(st.fieldNames.map(f => col("__elem")(f).as(f)): _*)
-      case _ => probe.select(col("__elem").as("value"))
-    }
-  }
+  private def flattenExploded(df: DataFrame, arr: Column): DataFrame =
+    spread(df.select(explode(arr).as("__elem")))
 
   private def wordOps(env: Env): WordOps.Width =
     WordOps.forWidth(env.wordWidth)

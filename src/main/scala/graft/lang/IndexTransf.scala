@@ -41,11 +41,10 @@ object IndexTransf {
     * substitution — the command is rewritten so each point filter reads
     * the component keyed on ITS attribute. Components and bitmap cells are
     * typed in the returned env; a SCOPED table's components are typed
-    * where `Interp` binds them, under their CLetMut.
+    * where `Interp` binds them, under their CLetMut. `env` is typed
+    * (`Compiler.typed`), as `Optimize.transform` passes it.
     */
-  def transform(c: Command,
-      env0: Compiler.Env): (Command, Compiler.Env) = {
-    val env = Compiler.typed(env0)
+  def transform(c: Command, env: Compiler.Env): (Command, Compiler.Env) = {
     val byTable = eqFilters(c).distinct
       .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     // Composed components are routed to by NAME. A cons-chain insert is
@@ -107,7 +106,8 @@ object IndexTransf {
     */
   def transformScoped(c: Command,
       env: Compiler.Env): (Command, Compiler.Env) = {
-    val counts = letMutBindCounts(c)
+    val counts = Rewrites.commands(c).collect { case CLetMut(_, x, _) => x }
+      .groupBy(identity).view.mapValues(_.size)
     def eligible(n: String) =
       counts.getOrElse(n, 0) == 1 && !env.store.contains(n)
     var hints = Map.empty[String, Seq[String]]
@@ -137,35 +137,15 @@ object IndexTransf {
     (rewritten, env.copy(indexHints = env.indexHints ++ hints))
   }
 
-  /** The cells each scoped binder's CLetMut binds besides itself: the
-    * components of its composed index, which `Interp` binds at the
-    * binder's type. */
-  def scopedCells(env: Compiler.Env): Map[String, Seq[String]] =
-    env.indexHints.collect { case (x, attrs) if attrs.length > 1 =>
-      x -> attrs.map(componentName(x, _)) }
-
-  private def letMutBindCounts(c: Command): Map[String, Int] = c match {
-    case CSkip => Map.empty
-    case CSeq(a, b) => merge(letMutBindCounts(a), letMutBindCounts(b))
-    case CLet(_, _, b) => letMutBindCounts(b)
-    case CLetMut(_, x, b) => merge(Map(x -> 1), letMutBindCounts(b))
-    case CAssign(_, _) => Map.empty
-    case CIf(_, a, b) => merge(letMutBindCounts(a), letMutBindCounts(b))
-    case CForeach(_, _, b) => letMutBindCounts(b)
-  }
-
-  private def merge(a: Map[String, Int], b: Map[String, Int]): Map[String, Int] =
-    (a.keySet ++ b.keySet).map(k =>
-      k -> (a.getOrElse(k, 0) + b.getOrElse(k, 0))).toMap
-
   // --- bitmap index (BitmapIndex.v:331-335, :709-831) ---
 
   /** Canonical binder for keying predicates modulo alpha-renaming. `@` keeps
     * it out of the surface identifier space. */
   private val canonBinder = "@row"
 
-  /** The precomputed-predicate field added to a bitmap-extended table. */
+  /** A bitmap cell's fields: the precomputed predicate and the row. */
   private val bitField = "@bit"
+  private val rowField = "@rec"
 
   /** Constant-predicate loop filters become BITMAP indexes — the
     * reference's other filter structure (`filter_to_bitmap_lookup_head`,
@@ -173,15 +153,16 @@ object IndexTransf {
     * the rows, built by evaluating the predicate ONCE, after which every
     * use selects by the precomputed bit instead of re-evaluating.
     *
-    * Spark realization: the table is re-materialized with the predicate as
-    * an extra boolean column and cached; routed filters test the column
-    * (`use_bitmap_head`, BitmapIndex.v:709) and a projection strips it, so
-    * the rewritten expression's value is unchanged. Eligible predicates
-    * depend on nothing but the row (no loop variables — those are the dict
-    * index's shape — and no store reads, which could change between
-    * iterations); eligible tables are never written in the command (the
-    * reference maintains bitmaps through inserts, cons_to_bitmap_update_head
-    * BitmapIndex.v:650-665 — here a write simply downgrades to no bitmap).
+    * Spark realization: the table is re-materialized as records of the
+    * predicate's bit and the whole row, and cached; routed filters test
+    * the bit (`use_bitmap_head`, BitmapIndex.v:709) and a projection takes
+    * the row back out, so the rewritten expression's value is unchanged.
+    * Eligible predicates depend on nothing but the row (no loop variables
+    * — those are the dict index's shape — and no store reads, which could
+    * change between iterations); eligible tables are never written in the
+    * command (the reference maintains bitmaps through inserts,
+    * cons_to_bitmap_update_head BitmapIndex.v:650-665 — here a write
+    * simply downgrades to no bitmap).
     *
     * Bitmaps are LOOP-ONLY, the one loop condition in the pipeline: unlike
     * the dict/compo/scoped transforms — which re-KEY existing data and run
@@ -193,58 +174,46 @@ object IndexTransf {
   private def introduceBitmaps(c: Command,
       env: Compiler.Env): (Command, Compiler.Env) = {
     val written = writtenCells(c)
-    // the bitmap cell re-materializes whole rows, so each of the table's
-    // columns must have a type its record can carry
-    def wholeRecord(t: String): Option[List[(String, FType)]] =
-      (env.store.get(t), env.storeTypes.get(t).map(TypeCheck.elemOf)) match {
-        case (Some(df), Some(TRecord(fs)))
-            if fs.map(_._1).toSet == df.columns.toSet => Some(fs)
-        case _ => None
-      }
     val cands = loopConstFilters(c, inLoop = false).distinct
       .filterNot { case (t, _) => written.contains(t) }
-      .flatMap { case (t, p) => wholeRecord(t).map(fs => (t, p, fs)) }
+      .filter { case (t, _) => env.store.contains(t) }
     cands.zipWithIndex.foldLeft((c, env)) {
-      case ((cmd, acc), ((t, pCanon, fs), i)) =>
+      case ((cmd, acc), ((t, pCanon), i)) =>
         val cell = s"$t@bitmap$i"
-        val fields = fs.map(_._1)
-        val body = ERecord((fields.map(f =>
-          f -> (EAccess(EVar(canonBinder), f): Expr)) :+
-          (bitField -> pCanon)).sortBy(_._1))
+        // each row kept whole under `rowField`, so the columns its type
+        // leaves out (a double, a timestamp) ride along to the strip
+        val body =
+          ERecord(List(bitField -> pCanon, rowField -> EVar(canonBinder)))
         val extended = Compiler.compile(
           EProj(LikeBag, ELoc(t), canonBinder, body), acc)
           .asInstanceOf[Compiler.TV].df.cache()
-        (routeBitmap(cmd, t, pCanon, cell, fields),
-          acc.withTable(cell, extended,
-            TBag(TRecord.sorted(fs :+ (bitField -> TBool): _*))))
+        (routeBitmap(cmd, t, pCanon, cell), acc.withTable(cell, extended,
+          TBag(TRecord.sorted(bitField -> TBool,
+            rowField -> TypeCheck.elemOf(acc.storeTypes(t))))))
     }
   }
 
   /** Rewrite every filter of `t` whose predicate is alpha-equal to `pCanon`
     * into bit-test-then-strip over the bitmap cell. */
-  private def routeBitmap(c: Command, t: String, pCanon: Expr, cell: String,
-      fields: List[String]): Command =
+  private def routeBitmap(c: Command, t: String, pCanon: Expr,
+      cell: String): Command =
     Rewrites.mapExprs(c)(e => Rewrites.foldExpr(e) {
       case f @ EFilter(tag, SrcLoc(`t`), x, p) =>
         if (Rewrites.rename(p, x, canonBinder).contains(pCanon))
           EProj(tag,
             EFilter(tag, ELoc(cell), x, EAccess(EVar(x), bitField)),
-            x, Pruning.makeRecord(x, fields))
+            x, EAccess(EVar(x), rowField))
         else f
       case other => other
     })
 
   /** Store cells the command writes at all (bitmaps are not maintained —
     * any write disqualifies, unlike the chain-maintained dict/compo case). */
-  private def writtenCells(c: Command): Set[String] = c match {
-    case CSkip => Set.empty
-    case CSeq(a, b) => writtenCells(a) ++ writtenCells(b)
-    case CLet(_, _, b) => writtenCells(b)
-    case CLetMut(_, x, b) => writtenCells(b) + x
-    case CAssign(x, _) => Set(x)
-    case CIf(_, a, b) => writtenCells(a) ++ writtenCells(b)
-    case CForeach(_, _, b) => writtenCells(b)
-  }
+  private def writtenCells(c: Command): Set[String] =
+    Rewrites.commands(c).collect {
+      case CLetMut(_, x, _) => x
+      case CAssign(x, _) => x
+    }.toSet
 
   /** (table, canonical predicate) for loop filters whose predicate uses
     * only the row: not an attr-eq point lookup (the dict index owns those)
@@ -281,16 +250,11 @@ object IndexTransf {
 
   /** Store cells the command re-binds, or assigns with anything OTHER
     * than the maintainable cons-chain insert shape. */
-  private def nonChainMutatedCells(c: Command): Set[String] = c match {
-    case CSkip => Set.empty
-    case CSeq(a, b) => nonChainMutatedCells(a) ++ nonChainMutatedCells(b)
-    case CLet(_, _, b) => nonChainMutatedCells(b)
-    case CLetMut(_, x, b) => nonChainMutatedCells(b) + x
-    case CAssign(x, e) =>
-      if (Rewrites.ConsChain.rowsOnto(e, x).isDefined) Set.empty else Set(x)
-    case CIf(_, a, b) => nonChainMutatedCells(a) ++ nonChainMutatedCells(b)
-    case CForeach(_, _, b) => nonChainMutatedCells(b)
-  }
+  private def nonChainMutatedCells(c: Command): Set[String] =
+    Rewrites.commands(c).collect {
+      case CLetMut(_, x, _) => x
+      case CAssign(x, e) if Rewrites.ConsChain.rowsOnto(e, x).isEmpty => x
+    }.toSet
 
   /** A store read in filter-source position — transparent through the
     * `EBagOf` wrappers `CollectionTransf.annotate` introduces (a table IS

@@ -23,19 +23,20 @@ object Interp {
       before.get(k).fold(acc - k)(v => acc + (k -> v))
     }
 
-  /** Run a command program, returning the final store: complete `env`'s
-    * typing (`Compiler.typed`), elaborate and typecheck the command
-    * against it — a mistyped program throws `TypeError` here, before any
-    * Spark job — and interpret the elaborated command. */
+  /** Run a source command program, returning the final store: complete
+    * `env`'s typing (`Compiler.typed`), elaborate and typecheck the
+    * command against it — a mistyped program throws `TypeError` here,
+    * before any Spark job — and interpret the elaborated command. */
   def run(c: Command, env: Env): Env = {
     val tenv = Compiler.typed(env)
-    exec(TypeCheck.elaborateCommand(c, tenv.varTypes, tenv.storeTypes,
-      IndexTransf.scopedCells(tenv))._1, tenv)
+    exec(TypeCheck.elaborateCommand(c, tenv.varTypes, tenv.storeTypes)._1,
+      tenv)
   }
 
-  /** Interpret a typechecked command in a typed env; every cell and
-    * binder it introduces is bound with its type. */
-  private[lang] def exec(c: Command, env: Env): Env = c match {
+  /** Interpret an elaborated command in a typed env, such as the pair
+    * `Optimize.transform` returns; every cell and binder it introduces is
+    * bound with its type. */
+  def exec(c: Command, env: Env): Env = c match {
     case CSkip => env
     case CSeq(c1, c2) => exec(c2, exec(c1, env))
 
@@ -118,7 +119,8 @@ object Interp {
         env.copy(scalars = env.scalars + (x -> folded(env,
           asScalar(lowerProgram(e, env)))))
       else (env.indexes.get(x), env.compoIndexes.get(x),
-          consChainRows(e, x)) match {
+          // `r1 :: … :: rn :: mut x`, the insert chain the passes match
+          Rewrites.ConsChain.rowsOnto(e, x)) match {
         // cons-chain INSERT into an INDEXED table: maintain the keyed index
         // incrementally (the reference's cons_to_insert_head + use_idx_head
         // composition, fiat2/src/fiat2/DictIndexImpl.v:571-590,:767-776) —
@@ -190,11 +192,6 @@ object Interp {
       }
   }
 
-  /** `r1 :: … :: rn :: mut t` — the shared insert-chain shape (the same
-    * matcher the static passes use, Rewrites.ConsChain). */
-  private def consChainRows(e: Expr, t: String): Option[List[Expr]] =
-    Rewrites.ConsChain.rowsOnto(e, t)
-
   /** Compile insert-chain rows into a delta DataFrame with `cols`: one
     * local relation when every row folds on the driver (the common case,
     * literal or loop-bound records), else a union of one-row plans. */
@@ -219,7 +216,4 @@ object Interp {
     try Compiler.driverRow(Compiler.oneRow(env.spark).select(c.as("__v")))
       .map(l => GraftBridge.column(l.head)).getOrElse(c)
     catch { case scala.util.control.NonFatal(_) => c }
-
-  /** Materialize an expression result as a table DataFrame. */
-  def toDF(v: Val, env: Env): DataFrame = Compiler.toDF(v, env)
 }

@@ -111,9 +111,9 @@ object IvmTransf {
 
   /** Rewrite + prime the scalar store for every (table, attr, agg) that is
     * both read and cons-written anywhere in the command; each cell's type
-    * goes into the returned env's store typing. */
-  def transform(c: Command, env0: Env): (Command, Env) = {
-    val env = Compiler.typed(env0)
+    * goes into the returned env's store typing. `env` is typed
+    * (`Compiler.typed`), as `Optimize.transform` passes it. */
+  def transform(c: Command, env: Env): (Command, Env) = {
     val reads = collectReads(c).distinct
     val written = consWrittenTables(c).toSet
     // soundness: only maintain a cell when EVERY write to t is the
@@ -160,14 +160,10 @@ object IvmTransf {
 
   /** A cell's type: the type of the read it replaces, a TInt sum or count
     * or the option of the attribute for a minimum. */
-  private def cellType(env: Env, t: String, a: String, agg: MAgg): FType = {
-    def attr = EProj(LikeBag, ELoc(t), "r", EAccess(EVar("r"), a))
-    Compiler.synthLite(agg match {
-      case MSum => EACFold(AGSum, attr)
-      case MMin => EACIFold(AGMin, attr)
-      case MCount => EACFold(AGCount, ELoc(t))
-    }, env)
-  }
+  private def cellType(env: Env, t: String, a: String, agg: MAgg): FType =
+    if (agg != MMin) TInt
+    else TOption(TypeCheck.elemOf(Compiler.synthLite(
+      EProj(LikeBag, ELoc(t), "r", EAccess(EVar("r"), a)), env)))
 
   /** Maintenance for CLetMut-SCOPED tables — the reference examples' own
     * idiom (every Ex_* binds its tables `CLetMut (ANil ty) t …`,
@@ -276,26 +272,17 @@ object IvmTransf {
     * and leave the program untransformed otherwise. CLet / CForeach
     * binders bind expression variables, not store cells, so they cannot
     * shadow an `ELoc` read and are not collected. */
-  private def unsafeTables(c: Command): Set[String] = c match {
-    case CSkip => Set.empty
-    case CSeq(a, b) => unsafeTables(a) ++ unsafeTables(b)
-    case CLet(_, _, b) => unsafeTables(b)
-    case CLetMut(_, x, b) => unsafeTables(b) + x
-    case CAssign(t, ConsChain(rows, t2))
-        if t == t2 && rows.forall(!mentionsLoc(_, t)) => Set.empty
-    case CAssign(t, _) => Set(t)
-    case CIf(_, a, b) => unsafeTables(a) ++ unsafeTables(b)
-    case CForeach(_, _, b) => unsafeTables(b)
-  }
+  private def unsafeTables(c: Command): Set[String] =
+    Rewrites.commands(c).flatMap {
+      case CLetMut(_, x, _) => Some(x)
+      case CAssign(t, ConsChain(rows, t2))
+          if t == t2 && rows.forall(!mentionsLoc(_, t)) => None
+      case CAssign(t, _) => Some(t)
+      case _ => None
+    }.toSet
 
-  private def consWrittenTables(c: Command): Seq[String] = c match {
-    case CSkip => Nil
-    case CSeq(a, b) => consWrittenTables(a) ++ consWrittenTables(b)
-    case CLet(_, _, b) => consWrittenTables(b)
-    case CLetMut(_, _, b) => consWrittenTables(b)
-    case CAssign(t, ConsChain(_, t2)) if t == t2 => Seq(t)
-    case CAssign(_, _) => Nil
-    case CIf(_, a, b) => consWrittenTables(a) ++ consWrittenTables(b)
-    case CForeach(_, _, b) => consWrittenTables(b)
-  }
+  private def consWrittenTables(c: Command): Seq[String] =
+    Rewrites.commands(c).collect {
+      case CAssign(t, ConsChain(_, t2)) if t == t2 => t
+    }
 }

@@ -1384,7 +1384,7 @@ object LangQueries {
         })
         require(routed == Set("tbl@o_custkey", "tbl@o_orderkey"),
           s"filters not routed to components: $routed")
-        Interp.run(cmd, idxEnv).store("result").orderBy("k")
+        Interp.exec(cmd, idxEnv).store("result").orderBy("k")
       }
     },
 
@@ -1460,7 +1460,7 @@ object LangQueries {
           case other => other
         })
         require(routed, s"filter not bitmap-routed:\n$cmd")
-        Interp.run(cmd, idxEnv).store("result").orderBy("k")
+        Interp.exec(cmd, idxEnv).store("result").orderBy("k")
       }
     },
 
@@ -1498,7 +1498,7 @@ object LangQueries {
               s"right join input not narrowed: $l2")
           case other => sys.error(s"unexpected optimized command: $other")
         }
-        Interp.run(cmd, primed).store("result").orderBy("okey", "cust")
+        Interp.exec(cmd, primed).store("result").orderBy("okey", "cust")
       }
     },
 

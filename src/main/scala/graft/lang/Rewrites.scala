@@ -339,6 +339,16 @@ object Rewrites {
     case CForeach(e, _, b) => locs(e) ++ locs(b)
   }
 
+  /** Every command node of `c`, `c` first, in program order. */
+  def commands(c: Command): Seq[Command] = c +: (c match {
+    case CSeq(a, b) => commands(a) ++ commands(b)
+    case CLet(_, _, b) => commands(b)
+    case CLetMut(_, _, b) => commands(b)
+    case CIf(_, a, b) => commands(a) ++ commands(b)
+    case CForeach(_, _, b) => commands(b)
+    case CSkip | CAssign(_, _) => Nil
+  })
+
   /** Rebuild a command with `f` applied to every embedded expression. */
   def mapExprs(c: Command)(f: Expr => Expr): Command = c match {
     case CSkip => CSkip

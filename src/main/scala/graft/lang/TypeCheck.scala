@@ -59,6 +59,38 @@ object TypeCheck {
     case LikeSet => TSet(elem)
   }
 
+  /** An atom's type; an unannotated empty's has a hole. */
+  private def atomType(a: Atom): FType = a match {
+    case AWord(_) => TWord
+    case AInt(_) => TInt
+    case ABool(_) => TBool
+    case AString(_) => TString
+    case ANil(t) => TList(t)
+    case ANone(t) => TOption(t)
+    case AEmptyDict(k, v) => TDict(k, v)
+    case AEmptyBag(t) => TBag(t)
+    case AEmptySet(t) => TSet(t)
+    case AUnit => TUnit
+  }
+
+  /** Is `e` typed only by its context: an unannotated empty, or a node
+    * whose every result position is one (`if` and option-match branches,
+    * a `let` or comprehension body, both sides of a cons, concat or
+    * insert, `some`, a record field)? Synthesis fails on exactly these,
+    * and checking against an expected type fills them. */
+  private def needsContext(e: Expr): Boolean = e match {
+    case EAtom(a) => hasHole(atomType(a))
+    case EIf(_, a, b) => needsContext(a) && needsContext(b)
+    case EOptMatch(_, a, _, b) => needsContext(a) && needsContext(b)
+    case EBinop(OCons | OConcat | OBagInsert | OSetInsert, a, b) =>
+      needsContext(a) && needsContext(b)
+    case ELet(_, _, b) => needsContext(b)
+    case EFlatmap(_, _, _, b) => needsContext(b)
+    case EUnop(OSome, a) => needsContext(a)
+    case ERecord(fs) => fs.exists(f => needsContext(f._2))
+    case _ => false
+  }
+
   private type Vars = Map[String, FType]
 
   /** The walk. `fill` selects elaboration (holes filled) over synthesis
@@ -67,22 +99,21 @@ object TypeCheck {
   private final class Walk(store: Vars, fill: Boolean) {
 
     /** Two operands whose types determine each other: `a` is synthesized
-      * and `b` checked against `bT(ta)`; when `a` has no type of its own
-      * (an unannotated empty), `b` is synthesized and `a` checked against
-      * `aT(tb)` instead. The first failure is the one reported. */
+      * and `b` checked against `bT(ta)`. When elaborating an `a` that only
+      * its context can type (`needsContext`), `b` is synthesized and `a`
+      * checked against `aT(tb)` instead. The direction is read off the
+      * syntax, so no operand is walked twice. */
     private def either(a: Expr, va: Vars, b: Expr, vb: Vars,
         bT: FType => FType, aT: FType => FType,
         ctx: String): (Expr, FType, Expr, FType) =
-      (try Right(infer(a, va)) catch { case e: TypeError => Left(e) }) match {
-        case Right((a2, ta)) =>
-          val tb = bT(ta)
-          (a2, ta, check(b, tb, vb, ctx), tb)
-        case Left(first) =>
-          try {
-            val (b2, tb) = infer(b, vb)
-            val ta = aT(tb)
-            (check(a, ta, va, ctx), ta, b2, tb)
-          } catch { case _: TypeError => throw first }
+      if (fill && needsContext(a)) {
+        val (b2, tb) = infer(b, vb)
+        val ta = aT(tb)
+        (check(a, ta, va, ctx), ta, b2, tb)
+      } else {
+        val (a2, ta) = infer(a, va)
+        val tb = bT(ta)
+        (a2, ta, check(b, tb, vb, ctx), tb)
       }
     private def sameBoth(a: Expr, b: Expr, vars: Vars,
         ctx: String): (Expr, Expr, FType) = {
@@ -101,18 +132,7 @@ object TypeCheck {
       case EVar(x) => (e, vars.getOrElse(x, err(s"unbound variable $x")))
       case ELoc(x) => (e, store.getOrElse(x, err(s"unbound table $x")))
 
-      case EAtom(a) => (e, noHole(a match {
-        case AWord(_) => TWord
-        case AInt(_) => TInt
-        case ABool(_) => TBool
-        case AString(_) => TString
-        case ANil(t) => TList(t)
-        case ANone(t) => TOption(t)
-        case AEmptyDict(k, v) => TDict(k, v)
-        case AEmptyBag(t) => TBag(t)
-        case AEmptySet(t) => TSet(t)
-        case AUnit => TUnit
-      }))
+      case EAtom(a) => (e, noHole(atomType(a)))
 
       case EUnop(op, e1) => over(e1, vars)(EUnop(op, _))(t => op match {
         case OWNeg => word(t)
@@ -144,18 +164,14 @@ object TypeCheck {
             case other => err(s"cons onto non-list $other")
           }, "cons")
           (EBinop(op, h, tl), lt)
-        case OBagInsert => // (bag, elem) — Interpret.v:186
+        case OBagInsert | OSetInsert => // (collection, elem), Interpret.v:186
+          val kind: FType => FType = if (op == OBagInsert) TBag(_) else TSet(_)
           val (b, bt, x, _) = either(e1, vars, e2, vars, {
-            case TBag(u) => u
-            case other => err(s"bag_insert into $other")
-          }, TBag(_), "bag_insert")
+            case TBag(u) if op == OBagInsert => u
+            case TSet(u) if op == OSetInsert => u
+            case other => err(s"$op into $other")
+          }, kind, "insert")
           (EBinop(op, b, x), bt)
-        case OSetInsert =>
-          val (s, st, x, _) = either(e1, vars, e2, vars, {
-            case TSet(u) => u
-            case other => err(s"set_insert into $other")
-          }, TSet(_), "set_insert")
-          (EBinop(op, s, x), st)
         case OLookup | ODelete =>
           val name = if (op == OLookup) "lookup" else "delete"
           infer(e1, vars) match {
@@ -312,6 +328,9 @@ object TypeCheck {
           EBinop(OCons, check(h, u, vars, ctx), check(tl, t, vars, ctx))
         case (EBinop(OConcat, a, b), TList(_) | TBag(_)) =>
           EBinop(OConcat, check(a, t, vars, ctx), check(b, t, vars, ctx))
+        case (EBinop(op @ (OBagInsert | OSetInsert), b0, x0),
+            TBag(_) | TSet(_)) =>
+          EBinop(op, check(b0, t, vars, ctx), check(x0, elemOf(t), vars, ctx))
         case (EUnop(OSome, e1), TOption(u)) =>
           EUnop(OSome, check(e1, u, vars, ctx))
         case (ERecord(fields), TRecord(fts)) =>
@@ -358,14 +377,10 @@ object TypeCheck {
   /** Elaborate and check a command (fiat2 `typecheck`, TypeSystem.v:1393):
     * conditions are booleans, assignments keep a table's type (an
     * assignment's holes are filled from that type), foreach binds the
-    * element type. A CLetMut binder named in `scoped` also binds the
-    * cells listed for it, at its type (a scoped index's components,
-    * `IndexTransf.scopedCells`). Returns the elaborated command and the
-    * final store typing. */
+    * element type. Returns the elaborated command and the final store
+    * typing. */
   def elaborateCommand(c: Command, vars: Map[String, FType],
-      store: Map[String, FType],
-      scoped: Map[String, Seq[String]] = Map.empty)
-      : (Command, Map[String, FType]) = {
+      store: Map[String, FType]): (Command, Map[String, FType]) = {
     def expr(e: Expr, vars: Vars, store: Vars) = elaborate(e, vars, store)
     def go(c: Command, vars: Vars, store: Vars): (Command, Vars) = c match {
       case CSkip => (CSkip, store)
@@ -379,10 +394,9 @@ object TypeCheck {
         (CLet(e2, x, b), s)
       case CLetMut(e, x, body) =>
         val (e2, t) = expr(e, vars, store)
-        val cells = x +: scoped.getOrElse(x, Nil)
-        val (b, inner) = go(body, vars, store ++ cells.map(_ -> t))
-        (CLetMut(e2, x, b), cells.foldLeft(inner) { (acc, n) =>
-          store.get(n).fold(acc - n)(old => acc + (n -> old)) })
+        val (b, inner) = go(body, vars, store + (x -> t))
+        (CLetMut(e2, x, b), store.get(x).fold(inner - x)(old =>
+          inner + (x -> old)))
       case CAssign(x, e) => store.get(x) match {
         case Some(old) =>
           val e2 = try analyze(e, old, vars, store) catch {
@@ -409,13 +423,7 @@ object TypeCheck {
         (CIf(e2, a, b), s1)
       case CForeach(e, x, body) =>
         val (e2, t) = expr(e, vars, store)
-        val u = t match {
-          case TList(u) => u
-          case TBag(u) => u
-          case TSet(u) => u
-          case other => err(s"foreach over $other")
-        }
-        val (b, s) = go(body, vars + (x -> u), store)
+        val (b, s) = go(body, vars + (x -> elemOf(t)), store)
         (CForeach(e2, x, b), s)
     }
     go(c, vars, store)

@@ -24,7 +24,7 @@ class IndexTransfSpec extends AnyFunSuite {
   test("loop point-filter swaps the store table for a keyed cached index") {
     val orders = Tables.load(spark, TestSpark.sfDir, "orders")
       .select($"o_orderkey", $"o_custkey")
-    val env = Env(Map.empty, Map("orders" -> orders), spark)
+    val env = Compiler.typed(Env(Map.empty, Map("orders" -> orders), spark))
     val indexed = IndexTransf.transform(loopOver("orders", "o_custkey"), env)._2
     val keyed = indexed.store("orders")
     assert(keyed ne orders, "store must be re-represented")
@@ -40,7 +40,7 @@ class IndexTransfSpec extends AnyFunSuite {
 
   test("a non-loop point filter is indexed; a correlated filter is not") {
     val orders = Tables.load(spark, TestSpark.sfDir, "orders")
-    val env = Env(Map.empty, Map("orders" -> orders), spark)
+    val env = Compiler.typed(Env(Map.empty, Map("orders" -> orders), spark))
     // filter outside any loop: indexed all the same, as the reference's
     // unconditional transf_to_idx (and Optimize) does
     val once = CAssign("out", EUnop(OLength,
@@ -70,7 +70,7 @@ class IndexTransfSpec extends AnyFunSuite {
         CAssign("b", EUnop(OLength,
           EFilter(LikeBag, ELoc("orders"), "o",
             EBinop(OEq, EAccess(EVar("o"), "o_orderkey"), EVar("kv")))))))
-    val env = Env(Map.empty, Map("orders" -> orders), spark)
+    val env = Compiler.typed(Env(Map.empty, Map("orders" -> orders), spark))
     val (cmd, indexed) = IndexTransf.transform(prog, env)
     // both components live in the store under non-colliding names
     val byCust = indexed.store(IndexTransf.componentName("orders", "o_custkey"))
@@ -114,7 +114,7 @@ class IndexTransfSpec extends AnyFunSuite {
               EBinop(OEq, EAccess(EVar("o"), "o_orderkey"), EVar("kv"))))))),
       // the mutation that would invalidate routed snapshots
       CAssign("orders", EBinop(OConcat, ELoc("orders"), ELoc("orders"))))
-    val env = Env(Map.empty, Map("orders" -> orders), spark)
+    val env = Compiler.typed(Env(Map.empty, Map("orders" -> orders), spark))
     val (cmd, indexed) = IndexTransf.transform(prog, env)
     assert(cmd === prog, "command must be left unrouted")
     assert(!indexed.store.contains(
@@ -243,7 +243,7 @@ class IndexTransfSpec extends AnyFunSuite {
                 EBinop(OEq, EAccess(EVar("o"), "o_custkey"), EVar("kv")))))),
             ELoc("out")))),
         CAssign("result", ELoc("out"))))
-    val env = Env(Map.empty, Map("orders" -> orders), spark)
+    val env = Compiler.typed(Env(Map.empty, Map("orders" -> orders), spark))
     val plain = Interp.run(prog, env).store("result")
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
     val fast = Optimize.run(prog, env).store("result")
@@ -271,13 +271,13 @@ class IndexTransfSpec extends AnyFunSuite {
       .select($"o_orderkey", $"o_custkey")
     val pred = EBinop(OLess, EAccess(EVar("o"), "o_custkey"), EAtom(AInt(40)))
     val prog = constPredLoop(pred)
-    val env = Env(Map.empty, Map("orders" -> orders), spark)
+    val env = Compiler.typed(Env(Map.empty, Map("orders" -> orders), spark))
     val (cmd, idxEnv) = IndexTransf.transform(prog, env)
-    // the bitmap cell exists: the table extended with the precomputed bit
+    // the bitmap cell exists: each row with its precomputed bit
     assert(idxEnv.store.contains("orders@bitmap0"))
     val cell = idxEnv.store("orders@bitmap0")
     assert(cell.columns.contains("@bit"))
-    // the routed filter tests the bit and strips it back to the row fields
+    // the routed filter tests the bit and takes the row back out
     var routed = false
     Rewrites.mapExprs(cmd)(e => Rewrites.foldExpr(e) {
       case pr @ EProj(_, EFilter(_, ELoc("orders@bitmap0"), x,
@@ -295,6 +295,32 @@ class IndexTransfSpec extends AnyFunSuite {
     cell.unpersist()
   }
 
+  test("a bitmap over a full-width table keeps the columns its type leaves out") {
+    // raw orders: o_totalprice (double) and o_orderdate have no fiat2 type
+    val orders = Tables.load(spark, TestSpark.sfDir, "orders")
+    val pred = EBinop(OLess, EAccess(EVar("o"), "o_custkey"), EAtom(AInt(40)))
+    val prog = CForeach(EBinop(ORange, EAtom(AInt(0)), EAtom(AInt(2))), "kv",
+      CAssign("result", EFilter(LikeBag, ELoc("orders"), "o", pred)))
+    val env = Compiler.typed(Env(Map.empty, Map("orders" -> orders), spark))
+    assert(env.storeTypes("orders") match {
+      case TList(TRecord(fs)) => fs.size < orders.columns.length
+      case _ => false
+    }, "orders should have columns with no fiat2 type")
+    val (cmd, idxEnv) = IndexTransf.transform(prog, env)
+    assert(idxEnv.store.contains("orders@bitmap0"), s"no bitmap cell in:\n$cmd")
+    def rows(df: org.apache.spark.sql.DataFrame) = {
+      val cs = df.columns.sorted
+      (cs.toSeq, df.select(cs.map(col): _*).collect()
+        .map(_.toSeq.mkString("|")).sorted.toSeq)
+    }
+    val plain = rows(Interp.run(prog, env).store("result"))
+    // run elaborates the routed command: it typechecks in the returned env
+    val fast = rows(Interp.run(cmd, idxEnv).store("result"))
+    assert(fast._1.toSet === orders.columns.toSet)
+    assert(fast._2.nonEmpty && plain === fast)
+    idxEnv.store("orders@bitmap0").unpersist()
+  }
+
   test("scoped CLetMut table gets a bind-time index annotation") {
     val orders = Tables.load(spark, TestSpark.sfDir, "orders")
       .select($"o_orderkey", $"o_custkey")
@@ -310,7 +336,7 @@ class IndexTransfSpec extends AnyFunSuite {
                 EBinop(OEq, EAccess(EVar("o"), "o_custkey"), EVar("kv")))))),
             ELoc("out")))),
           CAssign("result", ELoc("out")))))
-    val env = Env(Map.empty, Map("orders" -> orders), spark)
+    val env = Compiler.typed(Env(Map.empty, Map("orders" -> orders), spark))
     val (cmd, e2) = IndexTransf.transform(prog, env)
     assert(e2.indexHints.get("t") === Some(Seq("o_custkey")))
     assert(cmd === prog, "single-attribute case needs no routing")
@@ -345,7 +371,7 @@ class IndexTransfSpec extends AnyFunSuite {
                 "nb" -> cnt("o_orderkey", newKey))),
               ELoc("out"))))),
           CAssign("result", ELoc("out")))))
-    val env = Env(Map.empty, Map("orders" -> orders), spark)
+    val env = Compiler.typed(Env(Map.empty, Map("orders" -> orders), spark))
     val (cmd, e2) = IndexTransf.transform(prog, env)
     assert(e2.indexHints.get("t").map(_.toSet) ===
       Some(Set("o_custkey", "o_orderkey")))
@@ -361,7 +387,9 @@ class IndexTransfSpec extends AnyFunSuite {
       IndexTransf.componentName("t", "o_orderkey")))
     val plain = Interp.run(prog, env).store("result")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
-    val fast = Interp.run(cmd, e2).store("result")
+    // the routed command runs as Optimize.run runs it: the component
+    // cells are bound by their CLetMut, where Interp binds them
+    val fast = Interp.exec(cmd, e2).store("result")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
     assert(plain === fast)
     // the inserted row is visible through the routed component (nb counts
@@ -372,7 +400,7 @@ class IndexTransfSpec extends AnyFunSuite {
   test("bitmap not introduced for written tables or loop-varying predicates") {
     val orders = Tables.load(spark, TestSpark.sfDir, "orders")
       .select($"o_orderkey", $"o_custkey")
-    val env = Env(Map.empty, Map("orders" -> orders), spark)
+    val env = Compiler.typed(Env(Map.empty, Map("orders" -> orders), spark))
     // predicate mentions the loop variable → dict-index territory, no bitmap
     val varying = constPredLoop(
       EBinop(OLess, EAccess(EVar("o"), "o_custkey"), EVar("kv")))

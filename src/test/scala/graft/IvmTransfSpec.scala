@@ -30,7 +30,7 @@ class IvmTransfSpec extends AnyFunSuite {
 
   test("sum read becomes a cell read; cons write bumps the cell") {
     val t = Seq(10L).toDF("v")
-    val env = Env(Map.empty, Map("t" -> t), spark)
+    val env = Compiler.typed(Env(Map.empty, Map("t" -> t), spark))
     val (cmd, primed) = IvmTransf.transform(prog, env)
     val cell = IvmTransf.cellName("t", "v")
     assert(primed.scalars.contains(cell), "cell must be primed")
@@ -67,7 +67,7 @@ class IvmTransfSpec extends AnyFunSuite {
       CSeq(loop2, CAssign("result", ELoc("out"))))
     val t = Seq(5L).toDF("v")
     val (cmd, primed) = IvmTransf.transform(prog2,
-      Env(Map.empty, Map("t" -> t), spark))
+      Compiler.typed(Env(Map.empty, Map("t" -> t), spark)))
     val cell = IvmTransf.minCellName("t", "v")
     assert(primed.scalars.contains(cell))
     assert(!cmd.toString.contains("EACIFold"), "min read must be a cell read")
@@ -92,7 +92,7 @@ class IvmTransfSpec extends AnyFunSuite {
       CSeq(loop2, CAssign("result", ELoc("out"))))
     val t = Seq(10L, 20L).toDF("v")
     val (cmd, primed) = IvmTransf.transform(prog2,
-      Env(Map.empty, Map("t" -> t), spark))
+      Compiler.typed(Env(Map.empty, Map("t" -> t), spark)))
     val cell = IvmTransf.countCellName("t")
     assert(primed.scalars.contains(cell))
     assert(spark.range(1).select(primed.scalars(cell)).head().getLong(0) === 2L)
@@ -113,7 +113,7 @@ class IvmTransfSpec extends AnyFunSuite {
       EAtom(ANil(TRecord.sorted("k" -> TInt, "s" -> TInt))), "out",
       CSeq(withConcat, CAssign("result", ELoc("out"))))
     val t = Seq(10L).toDF("v")
-    val env = Env(Map.empty, Map("t" -> t), spark)
+    val env = Compiler.typed(Env(Map.empty, Map("t" -> t), spark))
     val (cmd, primed) = IvmTransf.transform(prog2, env)
     assert(cmd === prog2, "program must be left untransformed")
     assert(primed.scalars.isEmpty, "no cell may be primed")
@@ -133,7 +133,7 @@ class IvmTransfSpec extends AnyFunSuite {
       CSeq(shadowed, CAssign("result", ELoc("out"))))
     val t = Seq(10L).toDF("v")
     val (cmd, primed) = IvmTransf.transform(prog2,
-      Env(Map.empty, Map("t" -> t), spark))
+      Compiler.typed(Env(Map.empty, Map("t" -> t), spark)))
     assert(cmd === prog2)
     assert(primed.scalars.isEmpty)
   }
@@ -145,7 +145,7 @@ class IvmTransfSpec extends AnyFunSuite {
         ERecord(List("k" -> EVar("kv"), "s" -> sumRead)),
         ELoc("out"))))
     val (cmd, primed) = IvmTransf.transform(readOnly,
-      Env(Map.empty, Map("t" -> t), spark))
+      Compiler.typed(Env(Map.empty, Map("t" -> t), spark)))
     assert(cmd === readOnly)
     assert(primed.scalars.isEmpty)
   }

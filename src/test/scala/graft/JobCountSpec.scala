@@ -195,7 +195,7 @@ class JobCountSpec extends AnyFunSuite {
   // Jobs per phase of one command program. The maintained IVM cells of a
   // table are primed by one aggregation (2 jobs under AQE), and bumped,
   // compared and iterated on the driver; an insert into the indexed table
-  // unions a local delta. What remains in Interp.run are the point counts,
+  // unions a local delta. What remains in Interp.exec are the point counts,
   // which read table data (the first fills the keyed cache). Materializing
   // `result` afterwards is not counted.
   private val phasePins = Seq(
@@ -212,13 +212,13 @@ class JobCountSpec extends AnyFunSuite {
       val cmd = Rewrites.normalizeCommand(
         Parser.parseCommand(orderProgram(w, r)))
       val ((opt, primed), optSites) = jobsIn(Optimize.transform(cmd, env))
-      val (end, interpSites) = jobsIn(Interp.run(opt, primed))
+      val (end, interpSites) = jobsIn(Interp.exec(opt, primed))
       try {
         assert(end.store("result").count() == r.toLong)
         def show(sites: Seq[String]) = sites.map("\n    " + _).mkString
         assert((optSites.size, interpSites.size) == ((optJobs, interpJobs)),
           s"$mix: Optimize.transform started ${optSites.size} jobs " +
-            s"(pinned $optJobs):${show(optSites)}\n  Interp.run started " +
+            s"(pinned $optJobs):${show(optSites)}\n  Interp.exec started " +
             s"${interpSites.size} (pinned $interpJobs):${show(interpSites)}")
       } finally {
         end.indexes.values.foreach(_.unpersist())

@@ -127,7 +127,7 @@ class LangLawsSpec extends AnyFunSuite {
       // the hoisted EIf folds its row-free condition eagerly: the false
       // branch is a typed-empty CV, so compare through toDF
       def rowsAny(e: Expr): Seq[String] =
-        Interp.toDF(compile(e, Env(Map.empty, store, spark)),
+        Compiler.toDF(compile(e, Env(Map.empty, store, spark)),
           Env(Map.empty, store, spark))
           .collect().map(_.toString).toSeq.sorted
       assert(rowsAny(hoisted) === rowsAny(fm))

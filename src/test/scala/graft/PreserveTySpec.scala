@@ -49,10 +49,19 @@ class PreserveTySpec extends AnyFunSuite {
     }
   }
 
-  /** A command's type: its final store typing in `env`. */
-  private def typing(c: Command, env: Env): Map[String, FType] =
-    TypeCheck.elaborateCommand(c, env.varTypes, env.storeTypes,
-      IndexTransf.scopedCells(env))._2
+  /** A command's type: its final store typing in `env`. A scoped
+    * binder's composed-index components, which `IndexTransf` routes the
+    * body's filters to, are bound by `Interp` under the binder's CLetMut
+    * as keyed copies of it: they are typed as the binder they copy. */
+  private def typing(c: Command, env: Env): Map[String, FType] = {
+    val copyOf = env.indexHints.toSeq.flatMap { case (x, attrs) =>
+      attrs.map(IndexTransf.componentName(x, _) -> x) }.toMap
+    val unrouted = Rewrites.mapExprs(c)(e => Rewrites.foldExpr(e) {
+      case ELoc(n) if copyOf.contains(n) => ELoc(copyOf(n))
+      case other => other
+    })
+    TypeCheck.elaborateCommand(unrouted, env.varTypes, env.storeTypes)._2
+  }
 
   /** `Optimize.transform`'s passes, in its order, each returning the
     * command and the env it runs in. */

@@ -259,6 +259,19 @@ class QueryServerSpec extends AnyFunSuite {
     }
   }
 
+  test("a deeply nested mistyped /run is a prompt 400") {
+    // 40 left-nested comparisons, each mistyped: the typecheck rejects the
+    // innermost once instead of retrying every operand from its sibling
+    val program = (1 to 40).foldLeft("1")((e, _) => s"($e == true)")
+    withServer { port =>
+      val t0 = System.nanoTime()
+      val (code, body) = post(s"http://localhost:$port/run", program)
+      val seconds = (System.nanoTime() - t0) / 1e9
+      assert(code === 400 && body.contains("eq"), body)
+      assert(seconds < 30, f"the 400 took $seconds%.1f s")
+    }
+  }
+
   test("the serve benchmark's program shapes answer 200 with their rows") {
     // the three `/run` kinds and the `/runc` program of the benchmark's
     // request mix, at one bound and region, against the same answers

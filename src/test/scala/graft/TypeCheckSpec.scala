@@ -110,6 +110,31 @@ class TypeCheckSpec extends AnyFunSuite {
     }.msg.nonEmpty)
   }
 
+  test("an operand typed by its sibling is read off the syntax, once") {
+    // [] == 1 :: []: the left nil takes the right side's type
+    val eqNil = EBinop(OEq, EAtom(ANil()),
+      EBinop(OCons, EAtom(AInt(1)), EAtom(ANil())))
+    assert(TypeCheck.elaborate(eqNil, Map.empty, Map.empty) ===
+      (EBinop(OEq, EAtom(ANil(TInt)),
+        EBinop(OCons, EAtom(AInt(1)), EAtom(ANil(TInt)))), TBool))
+    // both operands of an insert filled from the expected type
+    assert(TypeCheck.analyze(EBinop(OBagInsert, EAtom(AEmptyBag()),
+      EAtom(ANil())), TBag(TList(TInt)), Map.empty, Map.empty) ===
+      EBinop(OBagInsert, EAtom(AEmptyBag(TList(TInt))), EAtom(ANil(TInt))))
+    // a mistyped operand is not walked again from the other side: a
+    // left-nested chain 60 deep, each level mistyped, fails at once
+    // (retrying each failed operand would double the work per level)
+    val chain = (1 to 60).foldLeft(EAtom(AInt(1)): Expr)((e, _) =>
+      EBinop(OEq, e, EAtom(ABool(true))))
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val failed = Future(intercept[TypeError] {
+      TypeCheck.elaborate(chain, Map.empty, Map.empty)
+    })
+    assert(Await.result(failed, scala.concurrent.duration.Duration(30, "s"))
+      .msg.contains("eq"))
+  }
+
   test("command typing: assignment must preserve the table's type") {
     val prog = CLetMut(EAtom(ANil(TInt)), "out",
       CAssign("out", EAtom(ANil(TString))))
